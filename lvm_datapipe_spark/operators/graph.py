@@ -1,4 +1,4 @@
-"""Connected components over near-duplicate pair lists.
+"""Graph operators: connected components, k-core, PageRank, triangles.
 
 Every dedup family in this engine (exact, MinHash/LSH, SimHash, n-gram
 Jaccard, embedding cosine) emits PAIRS (id_a, id_b).  Turning pairs into
@@ -7,43 +7,21 @@ into clusters and pick one representative per cluster (the reference
 pipeline stops at per-clip scores; cluster assignment is the extension a
 100 TB training-data dedup actually ships — "keep one doc per cluster").
 
-Algorithm: iterative min-label propagation.  Every node starts labeled with
-its own id; each round every node takes the min of its own label and its
-neighbors' labels; at the fixpoint every node in a component carries the
-component's minimum id.  The fixpoint is ORDER-INDEPENDENT, so the result
-is exact and deterministic — oracle-checkable against a recursive-CTE
-transitive closure.
+Connected components has ONE engine, :func:`connected_components`: the
+alternating large-star/small-star contraction of Kiveris et al. 2014.
+Contract: every node that appears in the pair list is labeled with the
+minimum node id reachable from it — order-independent and deterministic,
+so it is oracle-checkable against a recursive-CTE transitive closure.
+Scale shape: O(log² n) rounds on any graph shape (chains AND hubs), each
+round a few keyed shuffles over the shrinking parent-edge set with
+``localCheckpoint`` lineage truncation, no cross product; once the
+parent set fits a fixed collect bound the fixpoint finishes as one
+driver union-find.  The engine history (min-label propagation, pointer
+jumping and graph pre-contraction, each measured and retired) is in
+SCALE_BENCH.md §16, §17 and §19.
 
-Scale shape (1000-executor reality check):
-
-- each round is one keyed shuffle (join on the edge source + groupBy on the
-  destination) — no cross product, no driver-side graph;
-- rounds needed = graph diameter.  EXACT-dup and high-threshold near-dup
-  clusters are near-cliques (diameter ≤ ~2-3; 3-5 rounds close them), but
-  the r10 census profile measured the cosine-0.4 embedding LSH graph at
-  12 rounds at sf0.1 — similarity is not transitive, so moderate-threshold
-  near-dup pairs CHAIN and the diameter grows with the corpus.  For those
-  graphs use :func:`connected_components_twophase` (O(log²) rounds; the
-  declared dedup-cluster queries switched in r10, SCALE_BENCH §19);
-  ``max_rounds`` bounds the worst case here;
-- lineage is truncated every round with ``localCheckpoint`` — without it
-  the plan doubles per iteration and the job dies on optimizer time long
-  before data size matters;
-- convergence is detected with a single scalar aggregate over a ``changed``
-  flag computed in the same projection as the new label — one cheap action,
-  no old-vs-new join, and it works for any orderable id type (numeric or
-  string).  The check runs every ``check_every``-th round, not every round:
-  labels only ever decrease, so "no change in the LAST round of a block"
-  is exactly the fixpoint test, and skipping intermediate checks trades at
-  most ``check_every - 1`` extra (cheap, converged) propagation rounds for
-  proportionally fewer driver-side job launches — on a deep cluster chain
-  the action-per-round pattern is the latency bottleneck, not the shuffle;
-- the edge list is persisted once and reused every round.
-
-For graphs with huge-degree hubs (not the near-dup case) the alternating
-large-star/small-star contraction converges in O(log²) rounds with better
-skew behavior; this min-propagation keeps the plan simpler and matches the
-small-diameter structure of dedup graphs.
+k-core has ONE engine, :func:`kcore`: the decremental peel (SCALE_BENCH
+§18, §20 and §20b hold the retired recompute engine's history).
 """
 
 from __future__ import annotations
@@ -69,9 +47,9 @@ def fresh_local_checkpoint(df: DataFrame) -> DataFrame:
     ``SizeInBytesOnlyStatsPlanVisitor`` (thread-dump-verified), and a
     long enough peel dies with ``ArithmeticException: BigInteger would
     overflow supported range`` — a pure DRIVER-side failure at kilobyte
-    data sizes.  Single-join-per-round loops (min-label propagation, the
-    large-star/small-star contraction, pagerank) only grow the estimate
-    ~linearly (~1 digit/round, measured) and don't need this.
+    data sizes.  The other iterative loops here (the
+    :func:`connected_components` contraction, pagerank) only grow the
+    estimate ~linearly (~1 digit/round, measured) and don't need this.
 
     The fix: rebuild the frame from the checkpointed RDD WITHOUT
     ``originStats`` — ``internalCreateDataFrame`` (the same JVM entry
@@ -131,182 +109,31 @@ def cap_baskets(
     return df.join(big, [basket_col], "left_anti")
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    id_out: str = "id",
-    cluster_out: str = "cluster_id",
-    max_rounds: int = 20,
-    check_every: int = 2,
-    stats: dict | None = None,
-    shortcut: bool = False,
-    truncate_every: int = 1,
-) -> DataFrame:
-    """Cluster assignment for an undirected pair list: every node that
-    appears in ``pairs`` is mapped to the minimum node id reachable from it.
-
-    ``shortcut=True`` adds POINTER JUMPING after each propagation pass:
-    ``l(v) <- min(l(v), l(l(v)))`` — labels chase their own label's label,
-    so the propagation horizon doubles per round and convergence needs
-    O(log diameter) rounds instead of O(diameter).  Each round pays one
-    extra label-keyed join, which LOSES on the near-clique dedup graphs
-    the default serves (diameter 2-3: the plain walk is already minimal)
-    and WINS decisively on chain-shaped graphs — spatial DBSCAN
-    percolation chains, road/trajectory graphs — where the geometric
-    diameter grows with the map (r8, sf0.1 DBSCAN core graph: 24
-    propagation rounds / 22.6 s -> 12 jumped rounds / 13.6 s, identical
-    labels).
-
-    Returns a MATERIALIZED DataFrame (the loop must run actions to detect
-    convergence) with columns ``(id_out, cluster_out)``, one row per
-    distinct node.  Nodes with no edges never appear in ``pairs`` and are
-    their own singleton clusters by definition — left-join this result and
-    ``coalesce(cluster_id, id)`` to label a full corpus.
-
-    ``check_every`` throttles the convergence action: the ``changed`` flag
-    of round r alone decides the fixpoint (labels are monotone
-    non-increasing), so checking only every k-th round is exact and cuts
-    driver job launches on large-diameter graphs at the cost of ≤ k-1
-    no-op propagation rounds after convergence.  ``stats`` (when a dict is
-    passed) receives ``rounds``, ``checks``, and ``truncations`` counters
-    for tests.
-
-    ``truncate_every`` batches the lineage truncation: each eager
-    ``localCheckpoint`` is one driver-synchronized job, and on the
-    near-clique dedup graphs this loop serves (3-5 total rounds) the
-    per-round job launch — not the shuffle — dominates wall time at
-    moderate SF.  A skipped truncation lets the plan double (labels is
-    referenced twice per round), so keep it small (1, 2, or 4 — plan size
-    is 2^T between truncations); convergence-check rounds always
-    truncate first (the check is an action, and downstream reuse of an
-    unmaterialized frame would recompute the whole lazy chain).  Exact
-    for every value — only the job cadence changes.
-    """
-    check_every = max(1, check_every)
-    truncate_every = max(1, truncate_every)
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    edges = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct().persist()
-
-    labels = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-
-    rounds = checks = truncations = 0
-    for rnd in range(max_rounds):
-        is_check = (rnd + 1) % check_every == 0 or rnd == max_rounds - 1
-        do_truncate = is_check or (rnd + 1) % truncate_every == 0
-        # neighbor-min pass: every edge (u,v) proposes u's label to v
-        prop = (
-            edges.join(labels.withColumnRenamed("id", "u"), "u")
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_label = F.least(F.col("label"), F.coalesce("nbr_label", "label"))
-        labels = labels.join(prop, "id", "left").select(
-            "id",
-            new_label.alias("label"),
-            (new_label < F.col("label")).cast("int").alias("changed"),
-        )
-        if not shortcut and do_truncate:
-            labels = labels.localCheckpoint()
-            truncations += 1
-        if shortcut:
-            # the jump pass references labels twice more — without a
-            # materialized frame the lazy plan triples per round, so the
-            # shortcut path always truncates the propagation result
-            # (truncate_every batches only the post-jump checkpoint here).
-            # fresh_local_checkpoint, not plain: the jump join below is a
-            # boolean equi-join of two references of this frame, the shape
-            # whose carried Catalyst estimate doubles its digit count per
-            # round (the r10 kcore driver bug — see fresh_local_checkpoint)
-            labels = fresh_local_checkpoint(labels)
-            truncations += 1
-            # pointer jumping: chase the label's own label one hop
-            lmap = labels.select(
-                F.col("id").alias("_lid"), F.col("label").alias("_ll")
-            )
-            jumped = F.least(
-                F.col("label"), F.coalesce(F.col("_ll"), F.col("label"))
-            )
-            labels = (
-                labels.join(lmap, F.col("label") == F.col("_lid"), "left")
-                .select(
-                    "id",
-                    jumped.alias("label"),
-                    F.greatest(
-                        F.col("changed"),
-                        (jumped < F.col("label")).cast("int"),
-                    ).alias("changed"),
-                )
-            )
-            if do_truncate:
-                labels = fresh_local_checkpoint(labels)
-                truncations += 1
-        rounds += 1
-        if is_check:
-            checks += 1
-            if (labels.agg(F.sum("changed")).collect()[0][0] or 0) == 0:
-                break
-        labels = labels.drop("changed")
-    labels = labels.drop("changed")
-
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["checks"] = checks
-        stats["truncations"] = truncations
-    edges.unpersist()
-    return labels.select(
-        F.col("id").alias(id_out), F.col("label").alias(cluster_out)
-    )
-
-
 def dedup_keep_representatives(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
     src: str = "id_a",
     dst: str = "id_b",
-    strategy: str = "minlabel",
-    **cc_kwargs,
 ) -> DataFrame:
     """The end-to-end dedup decision: keep exactly one row per near-dup
     cluster (the minimum id — deterministic) plus every row that has no
-    near-dup at all.  One left join against the (small relative to the
-    corpus) cluster table; rows whose id is not a cluster member are kept
-    by the null branch.
-
-    ``strategy='minlabel'`` (default) suits exact-dup and high-threshold
-    pair graphs, whose clusters are near-cliques (diameter 2-3, 2-3 cheap
-    propagation rounds).  Pass ``'twophase'`` for caller-supplied pair
-    lists whose component shape is unknown (chains / hubs) AND for
-    moderate-threshold similarity graphs — the r10 census profile
-    measured the cosine-0.4 LSH graph at 12 min-label rounds (similarity
-    chains; SCALE_BENCH §19 r10b) — identical labels, O(log² n) rounds
-    (SCALE_BENCH §16).  r11 queue: the declared ``dedup_representatives``
-    caller switches to ``'twophase'`` on that measurement (window-budget
-    deferred, BENCH_NOTES r10b)."""
-    if strategy not in ("minlabel", "twophase"):
-        raise ValueError(
-            "strategy must be 'minlabel' or 'twophase', got "
-            f"{strategy!r}"
-        )
-    cc_fn = (
-        connected_components_twophase
-        if strategy == "twophase"
-        else connected_components
-    )
-    cc = cc_fn(pairs, src=src, dst=dst, **cc_kwargs)
+    near-dup at all.  Clusters come from :func:`connected_components`;
+    then one left join against the (small relative to the corpus)
+    cluster table, where rows whose id is not a cluster member are kept
+    by the null branch."""
+    cc = connected_components(pairs, src=src, dst=dst)
     return (
         df.join(cc.withColumnRenamed("id", id_col), id_col, "left")
         .filter(F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col(id_col)))
         .drop("cluster_id")
     )
+
+
+#: :func:`kcore` broadcasts each round's doomed frontier below this many
+#: nodes (a per-round slice of the node set, almost always tiny); above
+#: it the frontier joins are shuffled.
+KCORE_BROADCAST_DOOMED_MAX = 2_000_000
 
 
 def kcore(
@@ -315,12 +142,7 @@ def kcore(
     dst: str = "v",
     k: int = 3,
     max_rounds: int = 30,
-    check_every: int = 2,
     stats: dict | None = None,
-    broadcast_alive: bool | None = None,
-    broadcast_max_nodes: int = 1_000_000,
-    engine: str = "decremental",
-    broadcast_doomed_max: int = 2_000_000,
 ) -> DataFrame:
     """CONVERGED k-core peel (Seidman 1983): repeatedly delete nodes with
     fewer than ``k`` surviving neighbors until the alive set stabilizes,
@@ -328,204 +150,46 @@ def kcore(
     within the FINAL core — at the fixpoint every survivor's degree is
     ≥ k by construction).
 
-    Two engines, identical results (equivalence pinned over random graphs
-    and non-converged path peels in tests/test_graph.py):
+    Decremental peel: the state is one ``(node, alive-degree)`` table,
+    maintained exactly.  Each round removes the DOOMED frontier (alive
+    degree < k) and subtracts, per surviving neighbor, the number of
+    edges it lost to that frontier.  Only edges incident to the frontier
+    are touched, so the decrement work summed over ALL rounds is O(E).
+    Doomed sets are disjoint across rounds, so no edge is subtracted
+    twice, and the maintained degree always equals the node's degree
+    within the current alive set.  The fixpoint is observed the round
+    the doomed frontier empties.
 
-    - ``engine='decremental'`` (default, r10): the classic peeling
-      recurrence — maintain a ``(node, alive-degree)`` state table; each
-      round the DOOMED frontier (alive degree < k) is removed and only the
-      edges INCIDENT TO IT are re-counted (one broadcast-keyed filter pass
-      + one small aggregate), so total decrement work across ALL rounds is
-      O(E), versus the recompute engine's O(E) PER ROUND.  The doomed
-      frontier is broadcast when it fits (``broadcast_doomed_max``; it is
-      a per-round slice of the node set, almost always tiny).  Measured
-      2.17 s → 1.09 s on the declared sf0.1 part graph, and the win grows
-      with peel depth (SCALE_BENCH §20).
-    - ``engine='recompute'``: recompute every alive node's degree from the
-      full edge set each round (two alive-keyed semi-joins + degree
-      aggregate).  Kept for the §18 broadcast-gate A/B surface
-      (``broadcast_alive`` / ``broadcast_max_nodes`` apply to this engine
-      only) and as the independently-derived cross-check the equivalence
-      tests lean on.
-
-    Loop discipline is :func:`connected_components`'s — lineage truncated
-    every round, and (recompute engine) the convergence action THROTTLED
-    to every ``check_every``-th round: the alive set only ever shrinks, so
-    "count unchanged since the last check" is exactly "no node dropped in
-    that whole block", one cheap ``count()`` instead of a set comparison
-    (plus an empty-set short-circuit: an empty core is definitionally the
-    fixpoint).  Flag nuance pinned by the r10 agreement property: the
-    decremental engine observes the fixpoint the exact round its doomed
-    frontier empties, while recompute's throttled check can read
-    ``converged=False`` for a NONEMPTY fixpoint reached inside its final
-    ``check_every`` block under a tight ``max_rounds`` — recompute True
-    always implies decremental True, never the reverse.
-    The per-round truncation uses :func:`fresh_local_checkpoint`, NOT the
-    plain ``localCheckpoint``: both engines join two references of the
-    previous round's state per round, which DOUBLES the carried Catalyst
-    size estimate's digit count every round until the driver stalls in
-    BigInteger multiplication and overflows near round ~25 (the r10 latent
-    bug — see :func:`fresh_local_checkpoint` and SCALE_BENCH §20).
+    Scale shape per round: one doomed-frontier count, one
+    frontier-keyed filter pass over the symmetric edge list (broadcast
+    below ``KCORE_BROADCAST_DOOMED_MAX``), one small decrement
+    aggregate and one anti/left join on the node-sized state — no
+    cartesian, no driver-side graph.  The per-round truncation uses
+    :func:`fresh_local_checkpoint`, NOT the plain ``localCheckpoint``:
+    each round joins two references of the previous round's state, which
+    would otherwise DOUBLE the carried Catalyst size estimate's digit
+    count every round until the driver overflows near round ~25.  The
+    measured history (the retired recompute engine, its alive-set
+    broadcast gate, the carried-statistics bug) is SCALE_BENCH §18, §20
+    and §20b.
 
     ``max_rounds`` bounds pathological peel chains (a path graph peels
     one layer per round).  If the bound trips BEFORE the fixpoint the
     result is NOT a true k-core (some survivors may still be peelable);
     the exit is never silent: ``stats['converged']`` is set False and a
-    ``UserWarning`` is emitted, and the returned ``core_degree`` is
-    RECOMPUTED against the final alive set so it never counts
-    since-dropped neighbors (on a converged exit the last loop degree is
-    already exact — no drop happened in the closing block — so no extra
-    pass is paid).
-
-    ``broadcast_alive`` controls the per-round semi-join strategy: the
-    alive set is node-dimension-sized and only shrinks, so when the
-    INITIAL node count fits comfortably in an executor broadcast
-    (``broadcast_max_nodes``) each round costs one map-side filter pass
-    over ``sym`` plus the single degree shuffle instead of three
-    exchanges (measured 13.7 s -> 9.1 s on the declared part graph).
-    ``None`` (default) auto-gates on the initial count — a billion-node
-    graph falls back to plain shuffled semi-joins with the loop structure
-    unchanged; pass True/False to force.  DRIVER SIZING: a broadcast
-    build collects the alive set to the driver with per-row object
-    overhead well above the 8 raw bytes of a long — the 1M-node default
-    keeps the build in the low hundreds of MB; raise it only with
-    ``spark.driver.memory`` headroom (~1 GB per extra million rows is a
-    safe planning number).  Each round builds TWO broadcasts (one per
-    endpoint) — Spark's exchange-reuse does not kick in even when both
-    joins reference one projection object, because self-join
-    deduplication re-instances the second reference (verified on the
-    executed plan: 2 BroadcastExchange, 0 ReusedExchange) — which is why
-    the gate is sized against the DOUBLE build cost.
-
-    Scale shape per round: two alive-keyed semi-joins + one node-keyed
-    degree aggregate over a monotonically shrinking set — no cartesian,
-    no driver-side graph.  ``stats`` (a dict, optional) receives
-    ``rounds``, ``checks``, and ``converged``."""
-    if engine not in ("decremental", "recompute"):
-        raise ValueError(
-            f"engine must be 'decremental' or 'recompute', got {engine!r}"
-        )
-    check_every = max(1, check_every)
+    ``UserWarning`` is emitted.  The returned degrees are still exact
+    within the final alive set, and only nodes with at least one alive
+    neighbor are returned (``core_degree >= 1``; on a converged exit
+    every degree is ≥ k anyway).  An empty state table is the fixpoint
+    by definition, so a core that empties in the final round reads
+    converged.  ``stats`` (a dict, optional) receives ``rounds``,
+    ``checks`` and ``converged``."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = (
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
         .persist()
     )
-    if engine == "decremental":
-        return _kcore_decremental(sym, k, max_rounds, stats, broadcast_doomed_max)
-    alive = fresh_local_checkpoint(
-        sym.select(F.col("u").alias("p")).distinct()
-    )
-    prev = alive.count()
-    if broadcast_alive is None:
-        broadcast_alive = prev <= broadcast_max_nodes
-    rounds = checks = 0
-    deg = None
-    converged = prev == 0
-    for rnd in range(max_rounds):
-        if converged:
-            break
-        au = alive.select(F.col("p").alias("_au"))
-        av = alive.select(F.col("p").alias("_av"))
-        if broadcast_alive:
-            au, av = F.broadcast(au), F.broadcast(av)
-        deg = (
-            sym.join(au, F.col("_au") == F.col("u"))
-            .join(av, F.col("_av") == F.col("v"))
-            .groupBy(F.col("u").alias("p"))
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        )
-        alive = fresh_local_checkpoint(
-            deg.filter(F.col("deg") >= k).select("p")
-        )
-        rounds += 1
-        if (rnd + 1) % check_every == 0 or rnd == max_rounds - 1:
-            checks += 1
-            cur = alive.count()
-            # an EMPTY alive set is definitionally the fixpoint — without
-            # this short-circuit a graph whose core empties in the final
-            # check block reads converged=False (and pays wasted empty
-            # rounds); found by the r10 engine-agreement property test
-            if cur == prev or cur == 0:
-                converged = True
-                break
-            prev = cur
-    if not converged and deg is not None:
-        # max_rounds exhausted mid-peel: the last loop degree was computed
-        # against the PREVIOUS alive set (it can count neighbors dropped in
-        # the closing round) — recompute against the final alive set so the
-        # returned degrees are at least internally consistent, and warn.
-        import warnings
-
-        warnings.warn(
-            f"kcore(k={k}) hit max_rounds={max_rounds} before the peel "
-            "fixpoint — the result is NOT a converged k-core (raise "
-            "max_rounds); stats['converged'] is False",
-            UserWarning,
-            stacklevel=2,
-        )
-        au = alive.select(F.col("p").alias("_au"))
-        av = alive.select(F.col("p").alias("_av"))
-        if broadcast_alive:
-            au, av = F.broadcast(au), F.broadcast(av)
-        deg = (
-            sym.join(au, F.col("_au") == F.col("u"))
-            .join(av, F.col("_av") == F.col("v"))
-            .groupBy(F.col("u").alias("p"))
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["checks"] = checks
-        stats["converged"] = converged
-    if deg is None:  # empty edge list
-        sym.unpersist()
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        # derive the node type from the input edges so the empty frame
-        # unions cleanly with non-empty results for any id type
-        return sym.sparkSession.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("node", edges.schema[src].dataType, True),
-                    StructField("core_degree", LongType(), True),
-                ]
-            ),
-        )
-    out = (
-        deg.join(
-            alive.withColumnRenamed("p", "_p"), F.col("_p") == F.col("p")
-        )
-        .select(F.col("p").alias("node"), F.col("deg").alias("core_degree"))
-        .localCheckpoint()
-    )
-    sym.unpersist()
-    return out
-
-
-def _kcore_decremental(
-    sym: DataFrame,
-    k: int,
-    max_rounds: int,
-    stats: dict | None,
-    broadcast_doomed_max: int,
-) -> DataFrame:
-    """Decremental peel engine (see :func:`kcore` for the contract).
-
-    State is one ``(node, alive-degree)`` table, maintained exactly: each
-    round removes the doomed frontier (degree < k) and SUBTRACTS, per
-    surviving neighbor, the number of edges it lost to that frontier —
-    only edges incident to the frontier are touched, so the decrement
-    work summed over ALL rounds is O(E).  The maintained degree always
-    equals the node's degree within the current alive set (doomed sets
-    are disjoint across rounds, so no edge is subtracted twice), which
-    also makes the non-converged exit exact with NO final recompute pass:
-    on ``max_rounds`` exhaustion the table already holds degrees within
-    the final alive set — the same value the recompute engine pays an
-    extra full-graph pass to restore.
-    """
     deg = fresh_local_checkpoint(
         sym.groupBy(F.col("u").alias("p"))
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -541,7 +205,7 @@ def _kcore_decremental(
             break
         d_dec = doomed.select(F.col("p").alias("_d"))
         d_anti = doomed.select(F.col("p").alias("_dp"))
-        if n_doomed <= broadcast_doomed_max:
+        if n_doomed <= KCORE_BROADCAST_DOOMED_MAX:
             d_dec, d_anti = F.broadcast(d_dec), F.broadcast(d_anti)
         dec = (
             sym.join(d_dec, F.col("_d") == F.col("v"))
@@ -561,12 +225,7 @@ def _kcore_decremental(
         rounds += 1
     if not converged and deg.isEmpty():
         # an EMPTY state table is definitionally the fixpoint (nothing left
-        # to peel): mirror the recompute engine's empty-core short-circuit
-        # so a core that empties in the FINAL round under a tight
-        # max_rounds reads converged — this keeps the documented one-way
-        # flag guarantee (recompute True ⇒ decremental True) exact; found
-        # by the r10 engine-agreement property test's (self-loop, k=2,
-        # cap=2) counterexample.  Only paid on the exhaustion path.
+        # to peel); only paid on the exhaustion path
         converged = True
     if not converged:
         import warnings
@@ -576,18 +235,17 @@ def _kcore_decremental(
             "fixpoint — the result is NOT a converged k-core (raise "
             "max_rounds); stats['converged'] is False",
             UserWarning,
-            stacklevel=3,
+            stacklevel=2,
         )
     if stats is not None:
         stats["rounds"] = rounds
         stats["checks"] = checks
         stats["converged"] = converged
     out = (
-        # deg >= 1 mirrors the recompute engine's keyed-aggregate contract
-        # on a NON-converged exit: an alive node whose last neighbor died
-        # in the closing round produces no row there (no surviving edge to
-        # aggregate), so it must not produce a zero-degree row here either.
-        # On a converged exit every degree is >= k, so this is a no-op.
+        # on a NON-converged exit an alive node whose last neighbor died in
+        # the closing round has degree 0: drop it (the core_degree >= 1
+        # contract).  On a converged exit every degree is >= k, so this is
+        # a no-op.
         deg.filter(F.col("deg") >= 1)
         .select(F.col("p").alias("node"), F.col("deg").alias("core_degree"))
         .localCheckpoint()
@@ -607,7 +265,7 @@ def pagerank(
 ) -> DataFrame:
     """Weighted PageRank in FIXED-POINT integer arithmetic — the second
     iterative graph operator next to :func:`connected_components` (power
-    iteration instead of label propagation).
+    iteration instead of contraction).
 
     Two deliberate design points:
 
@@ -759,7 +417,7 @@ def add_self_loops(
     return edges.unionByName(loop)
 
 
-def connected_components_twophase(
+def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
@@ -769,18 +427,22 @@ def connected_components_twophase(
     stats: dict | None = None,
     assume_symmetric: bool = False,
     driver_finish_max_edges: int | None = 200_000,
-    precontract: bool = False,
 ) -> DataFrame:
-    """Alternating LARGE-STAR / SMALL-STAR connected components (Kiveris
-    et al. 2014, "Connected Components in MapReduce and Beyond") — the
-    O(log² n)-round contraction that handles BOTH failure modes of plain
-    min-label propagation in one algorithm: long chains (diameter-many
-    rounds; :func:`connected_components` ``shortcut=True`` fixes this
-    one) and HIGH-DEGREE HUBS (a hot hub key funnels its whole
-    neighborhood through one reducer every round; here large-star
-    rewires all larger neighbors of a node straight to its current
-    minimum, so hub neighborhoods contract exponentially instead of
-    being re-shuffled verbatim).
+    """Cluster assignment for an undirected pair list: every node that
+    appears in ``pairs`` is mapped to the minimum node id reachable from
+    it.  Returns ``(id_out, cluster_out)``, one row per distinct node.
+    Nodes with no edges never appear in ``pairs`` and are their own
+    singleton clusters by definition — left-join this result and
+    ``coalesce(cluster_id, id)`` to label a full corpus.  A node whose
+    only pairs are self-loops is returned as its own singleton cluster.
+
+    Engine: alternating LARGE-STAR / SMALL-STAR contraction (Kiveris et
+    al. 2014, "Connected Components in MapReduce and Beyond"), O(log² n)
+    rounds on any graph shape.  It handles long chains (which cost
+    diameter-many rounds under min-label propagation) and HIGH-DEGREE
+    HUBS (large-star rewires all larger neighbors of a node straight to
+    its current minimum, so hub neighborhoods contract exponentially
+    instead of being re-shuffled through one hot reducer every round).
 
     * large-star(u): every neighbor v > u re-points to
       m = min(N(u) ∪ {u});
@@ -788,18 +450,14 @@ def connected_components_twophase(
       re-points to m = min(N(u) ∪ {u}).
 
     At the fixpoint the edge set is a forest of stars whose centers are
-    the component minima — the same (node, min-reachable-id) contract as
-    :func:`connected_components`, verified equivalent in
-    tests/test_graph.py over chains, cliques, stars, and random graphs.
+    the component minima.
 
-    Scale notes: each half-round is one groupBy(u) + one keyed join (the
+    Scale shape: each half-round is one groupBy(u) + one keyed join (the
     emitted edge list), dedup'd, with ``localCheckpoint`` lineage
     truncation; convergence is detected by a scalar (count,
     xxhash64-xor) signature of the canonical parent-edge set — no
-    pairwise old-vs-new comparison.  Prefer the plain propagation for
-    near-clique dedup graphs (it converges in 2-3 cheap rounds);
-    prefer this for social/web-shaped graphs where hubs and chains
-    coexist.
+    pairwise old-vs-new comparison.  SCALE_BENCH §16, §17 and §19 hold
+    the measured history against the retired min-label engine.
 
     ``assume_symmetric=True`` asserts the caller's pair list already
     contains BOTH orientations of every edge (e.g. a grid/band self-join
@@ -807,40 +465,21 @@ def connected_components_twophase(
     checkpoint are skipped entirely (duplicates would only cost, never
     corrupt — every downstream step is a min-aggregate or distinct).
 
-    ``precontract=True`` runs ONE closed-neighborhood-min contraction
-    before the loop: every node u maps to r(u) = min(N(u) ∪ {u}) (the
-    exact large-star aggregate), and the loop runs on the contracted rep
-    graph {(r(u), r(v)) : (u,v) ∈ E, r(u) ≠ r(v)}.  Labels are provably
-    identical: r(u) lies in u's component (it is u or a neighbor), the
-    contracted graph preserves connectivity (r(u)—u—v—r(v) is a path),
-    and a component's global minimum m is always its own representative
-    (m ≤ every neighbor ⇒ r(m) = m), so the contracted component's
-    minimum IS the original component's minimum; expansion is one
-    (node → rep) join with ``coalesce`` for reps whose whole component
-    contracted away (such a rep is the component min by the same
-    argument).  Worth it on DENSE graphs — a clique collapses to its
-    minimum in this single pass, and the loop's per-round shuffles then
-    move the rep graph, not the raw edge set; on sparse chain-like
-    graphs it is one extra pass for little contraction (measure — the
-    declared callers each carry an A/B).
-
-    ``driver_finish_max_edges`` is the SIZE-GATED driver finish (the
-    kcore broadcast-gate pattern): contraction shrinks the parent-edge
-    set geometrically, so the late rounds run 4 driver-synchronized
-    keyed shuffles over a few thousand rows — pure per-round barrier
-    cost at any cluster size.  When a round's signature count drops to
-    the gate (default 200k edges ≈ 3 MB of longs collected, bounded the
-    same way the kcore alive-set broadcast is), the remaining fixpoint
-    is computed as one union-find over the collected parent edges —
-    bit-identical labels (both sides produce (node, min-reachable-id);
-    the parent set at every round spans the same components as the
+    ``driver_finish_max_edges`` is the SIZE-GATED driver finish:
+    contraction shrinks the parent-edge set geometrically, so the late
+    rounds run driver-synchronized keyed shuffles over a few thousand
+    rows — pure per-round barrier cost at any cluster size.  When a
+    round's signature count drops to the gate (default 200k edges ≈ 3 MB
+    of longs collected), the remaining fixpoint is computed as one
+    union-find over the collected parent edges — bit-identical labels
+    (the parent set at every round spans the same components as the
     input, the contraction invariant the algorithm's correctness rests
-    on — pinned by tests across gate settings).  The gate is also
-    checked at ROUND 0: an input edge list already within the bound is
-    union-found directly (one count job instead of up to two full-graph
-    shuffle rounds; at scale the gate does not fire and the loop runs
-    unchanged).  ``None`` disables the gate (pure distributed loop,
-    e.g. for the engine-equivalence tests)."""
+    on).  The gate is also checked at ROUND 0: an input edge list already
+    within the bound is union-found directly (one count job instead of
+    distributed rounds; at scale the gate does not fire and the loop runs
+    unchanged).  ``None`` disables the gate (pure distributed loop).
+    ``stats`` (a dict, optional) receives ``rounds`` and
+    ``driver_finish``."""
     # one materialization of the raw pair list: BOTH branches below (the
     # contraction working set and the self-loop singleton recovery) read
     # the checkpointed form, so the upstream pair pipeline (often an LSH /
@@ -851,9 +490,8 @@ def connected_components_twophase(
     ).localCheckpoint()
     # self-loop pairs carry no connectivity but DO declare the node: a node
     # whose only pairs are self-loops must surface as its own singleton
-    # cluster (same contract as connected_components, which
-    # incremental_components' self-star rows rely on) — remember them and
-    # union the missing ones back after the contraction.
+    # cluster (incremental_components' self-star rows rely on this) —
+    # remember them and union the missing ones back after the contraction.
     selfs = p0.filter(F.col("u") == F.col("v")).select("u").distinct()
     e0 = p0.filter(F.col("u") != F.col("v"))
     rounds = 0
@@ -884,30 +522,6 @@ def connected_components_twophase(
         edges = e0.union(
             e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).distinct().localCheckpoint()
-
-    reps = None
-    if precontract and uf_edges is None:
-        # r(u) = min(N(u) ∪ {u}) over the symmetric working set — the
-        # large-star aggregate applied once to BOTH endpoints.  `edges`
-        # carries both orientations, so mapping each endpoint through
-        # reps yields both orientations of every contracted edge and the
-        # loop's invariants (symmetric input, parent orientation) hold
-        # unchanged on the rep graph.
-        reps = edges.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("r")
-        ).localCheckpoint()
-        edges = (
-            edges.join(reps, "u")
-            .select(F.col("r").alias("cu"), "v")
-            .join(
-                reps.select(F.col("u").alias("v"), F.col("r").alias("cv")),
-                "v",
-            )
-            .filter(F.col("cu") != F.col("cv"))
-            .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
 
     def _sig(parent_edges: DataFrame):
         r = parent_edges.agg(
@@ -1024,24 +638,6 @@ def connected_components_twophase(
             .agg(F.min("label").alias(cluster_out))
             .select(F.col("id").alias(id_out), cluster_out)
         )
-    if reps is not None:
-        # expand rep labels back to every original node; a rep absent
-        # from `labeled` had its whole component contract onto it in the
-        # pre-pass, which makes it the component minimum — coalesce to
-        # itself
-        labeled = (
-            reps.join(
-                labeled.withColumnRenamed(id_out, "_rid"),
-                F.col("_rid") == F.col("r"),
-                "left",
-            )
-            .select(
-                F.col("u").alias(id_out),
-                F.coalesce(F.col(cluster_out), F.col("r")).alias(
-                    cluster_out
-                ),
-            )
-        )
     singles = selfs.join(
         labeled, selfs["u"] == labeled[id_out], "left_anti"
     ).select(F.col("u").alias(id_out), F.col("u").alias(cluster_out))
@@ -1055,8 +651,6 @@ def incremental_components(
     dst: str = "id_b",
     id_out: str = "id",
     cluster_out: str = "cluster_id",
-    strategy: str = "twophase",
-    **cc_kwargs,
 ) -> DataFrame:
     """Incremental re-clustering: fold NEW near-dup pairs into an existing
     clustering WITHOUT re-reading the old edge list.
@@ -1065,38 +659,23 @@ def incremental_components(
     of its edges — replace them with STAR edges (member → its cluster
     label), which preserve exactly the old components (every old
     component stays connected through its label node), union the new
-    pairs, and run the ordinary min-propagation.  The star list is
-    |nodes|-sized where the discarded edge list was |edges|-sized, and
-    convergence is fast: unaffected components are 1 hop from their
-    label already, so only components actually MERGED by new pairs
-    propagate further.  This is how a daily 100 TB dedup absorbs a new
-    partition: yesterday's labels + today's candidate pairs, never
-    yesterday's pairs.
+    pairs, and run :func:`connected_components`.  The star list is
+    |nodes|-sized where the discarded edge list was |edges|-sized.  This
+    is how a daily 100 TB dedup absorbs a new partition: yesterday's
+    labels + today's candidate pairs, never yesterday's pairs.
 
     ``prev_labels`` must be a (id, cluster) frame as produced by
-    :func:`connected_components` (labels are member ids — true for
-    min-propagation output).  Exact: the result equals a full recompute
-    over (old edges ∪ new pairs).
+    :func:`connected_components` (labels are member ids).  Exact: the
+    result equals a full recompute over (old edges ∪ new pairs).
 
-    ``strategy`` picks the propagation engine — both produce the identical
-    (node, min-reachable-id) labeling (agreement pinned in
-    tests/test_graph.py), they differ only in round count:
-
-    * ``'twophase'`` (default) — :func:`connected_components_twophase`,
-      O(log² n) rounds regardless of shape.  The default here because the
-      merge TOPOLOGY is caller-data-dependent: one new pair per adjacent
-      component chains k old components into a diameter-k path of label
-      nodes, and min-label propagation then pays diameter-many rounds
-      (SCALE_BENCH §16: 520 rounds / 80.6 s vs 10 rounds / 4.0 s on the
-      chain worst case).  Star edges keep unaffected components 1 hop
-      deep either way.
-    * ``'minlabel'`` — :func:`connected_components` (pass ``shortcut=``/
-      ``check_every=`` through ``cc_kwargs``).  Marginally cheaper per
-      round; pick it when new pairs provably merge few components
-      (near-clique dedup deltas).
+    Scale shape: the merge TOPOLOGY is caller-data-dependent — one new
+    pair per adjacent component chains k old components into a
+    diameter-k path of label nodes — and the contraction engine closes
+    it in O(log² n) rounds whatever the shape (SCALE_BENCH §17 holds the
+    measured merge-chain worst case).
     """
     # self-star rows (a cluster min's own row, and any SINGLETON
-    # component) pass through unfiltered: both engines keep self-loop
+    # component) pass through unfiltered: the engine keeps self-loop
     # nodes as singleton clusters, and dropping them would silently
     # delete 1-node components from the output — breaking the
     # full-recompute equality
@@ -1107,16 +686,8 @@ def incremental_components(
     merged = new_pairs.select(
         F.col(src), F.col(dst)
     ).unionByName(stars)
-    if strategy == "twophase":
-        return connected_components_twophase(
-            merged, src=src, dst=dst, id_out=id_out,
-            cluster_out=cluster_out, **cc_kwargs,
-        )
-    if strategy != "minlabel":
-        raise ValueError(f"unknown strategy {strategy!r}")
     return connected_components(
-        merged, src=src, dst=dst, id_out=id_out, cluster_out=cluster_out,
-        **cc_kwargs,
+        merged, src=src, dst=dst, id_out=id_out, cluster_out=cluster_out
     )
 
 
@@ -1124,7 +695,6 @@ def triangle_counts(
     edges: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    use_driver_kernel: bool = True,
 ) -> DataFrame:
     """Per-node triangle counts with DEGREE ORIENTATION (Chiba-Nishizeki;
     Suri & Vassilvitskii's MapReduce adaptation): each undirected edge is
@@ -1139,28 +709,26 @@ def triangle_counts(
     either orientation, no self-loops).  Returns ``(node, triangles)``
     for every node in at least one triangle.
 
-    r11: below the :func:`triangle_counts_driver_dense` gates the counts
-    come from the driver bitset kernel (identical integers, one bounded
+    Below the :func:`triangle_counts_driver_dense` gates the counts come
+    from the driver bitset kernel (identical integers, one bounded
     collect instead of the wedge join — see its docstring); the wedge
-    engine below is the scale shape above the gates.
-    ``use_driver_kernel=False`` forces the distributed engine (used by the
-    engine-equivalence tests and SCALE_BENCH's A/B)."""
+    engine below is the scale shape above the gates.  A 0 gate
+    (``SPARK_GRAFT_DENSE_TRI_MAX_NODES=0``) forces the wedge engine."""
     e = edges.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("bb")
     ).persist()
-    if use_driver_kernel:
-        dense = triangle_counts_driver_dense(e, "a", "bb")
-        if dense is not None:
-            e.unpersist()
-            spark = edges.sparkSession
-            node_t = edges.schema[a_col].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", node_t),
-                    T.StructField("triangles", T.LongType()),
-                ]
-            )
-            return spark.createDataFrame(dense, schema)
+    dense = triangle_counts_driver_dense(e, "a", "bb")
+    if dense is not None:
+        e.unpersist()
+        spark = edges.sparkSession
+        node_t = edges.schema[a_col].dataType
+        schema = T.StructType(
+            [
+                T.StructField("node", node_t),
+                T.StructField("triangles", T.LongType()),
+            ]
+        )
+        return spark.createDataFrame(dense, schema)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("bb").alias("node")))
@@ -1225,6 +793,33 @@ def triangle_counts(
 #: query, so the fallback is the scale plan, not an error path.
 DENSE_TRIANGLE_MAX_NODES = 24_576
 DENSE_TRIANGLE_MAX_EDGES = 8_000_000
+
+
+def _dense_gates(
+    max_nodes: int | None, max_edges: int | None
+) -> tuple[int, int] | None:
+    """Resolve the dense driver kernels' (node, edge) gates: an explicit
+    argument wins, else ``SPARK_GRAFT_DENSE_TRI_MAX_NODES`` /
+    ``SPARK_GRAFT_DENSE_TRI_MAX_EDGES``, else the module constants.
+    Returns ``None`` when either gate is ≤ 0 (kernel disabled — the
+    caller runs its distributed engine)."""
+    import os
+
+    if max_nodes is None:
+        max_nodes = int(
+            os.environ.get(
+                "SPARK_GRAFT_DENSE_TRI_MAX_NODES", DENSE_TRIANGLE_MAX_NODES
+            )
+        )
+    if max_edges is None:
+        max_edges = int(
+            os.environ.get(
+                "SPARK_GRAFT_DENSE_TRI_MAX_EDGES", DENSE_TRIANGLE_MAX_EDGES
+            )
+        )
+    if max_nodes <= 0 or max_edges <= 0:
+        return None
+    return max_nodes, max_edges
 
 
 #: 16-bit popcount lookup table, built once per process (the 8-bit table
@@ -1295,25 +890,13 @@ def triangle_counts_driver_dense(
     exact count exists than executing the edge stream (supplier_triangles
     derives it from per-basket sizes, sum of k*(k-1)/2, one small aggregate
     instead of materializing the 1.19M-row pair join twice)."""
-    import os
-
     import numpy as np
     import pandas as pd
 
-    if max_nodes is None:
-        max_nodes = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_NODES", DENSE_TRIANGLE_MAX_NODES
-            )
-        )
-    if max_edges is None:
-        max_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_EDGES", DENSE_TRIANGLE_MAX_EDGES
-            )
-        )
-    if max_nodes <= 0 or max_edges <= 0:
+    gates = _dense_gates(max_nodes, max_edges)
+    if gates is None:
         return None
+    max_nodes, max_edges = gates
     if raw_count is None:
         raw_count = edges.count()
     if raw_count > max_edges:
@@ -1396,22 +979,10 @@ def triangle_counts_driver_dense_from_baskets(
     ``max_edges`` before anything is collected.  Returns the same
     ``[(item, n_triangles), ...]`` contract as
     :func:`triangle_counts_driver_dense`, or ``None`` above a gate."""
-    import os
-
-    if max_nodes is None:
-        max_nodes = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_NODES", DENSE_TRIANGLE_MAX_NODES
-            )
-        )
-    if max_edges is None:
-        max_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_EDGES", DENSE_TRIANGLE_MAX_EDGES
-            )
-        )
-    if max_nodes <= 0 or max_edges <= 0:
+    gates = _dense_gates(max_nodes, max_edges)
+    if gates is None:
         return None
+    max_nodes, max_edges = gates
     if not _basket_pair_gate(baskets, order_col, max_edges):
         return None
     got = _baskets_to_dense_pairs(baskets, order_col, item_col, max_nodes)
@@ -1517,24 +1088,12 @@ def khop_reachability_driver_dense_from_baskets(
     max_hops row-gathers + OR-reduces over a ≤75 MB packed matrix —
     microseconds — and the collect it needs is the same bounded basket
     table the triangle kernel already ships."""
-    import os
-
     import numpy as np
 
-    if max_nodes is None:
-        max_nodes = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_NODES", DENSE_TRIANGLE_MAX_NODES
-            )
-        )
-    if max_edges is None:
-        max_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_EDGES", DENSE_TRIANGLE_MAX_EDGES
-            )
-        )
-    if max_nodes <= 0 or max_edges <= 0:
+    gates = _dense_gates(max_nodes, max_edges)
+    if gates is None:
         return None
+    max_nodes, max_edges = gates
     if not _basket_pair_gate(baskets, order_col, max_edges):
         return None
     got = _baskets_to_dense_pairs(baskets, order_col, item_col, max_nodes)

@@ -1,4 +1,5 @@
-"""Connected-components cluster assignment (operators/graph.py)."""
+"""Graph operators (operators/graph.py): connected components, k-core,
+PageRank, triangle counts and the dense driver kernels."""
 
 from __future__ import annotations
 
@@ -11,6 +12,11 @@ from lvm_datapipe_spark.operators.graph import (
 )
 
 SF0001 = "/root/testdata/sf0.001"
+
+#: driver_finish_max_edges settings every CC check runs under: the default
+#: gate (small inputs finish as one driver union-find) and None (the pure
+#: distributed contraction loop)
+CC_GATES = (200_000, None)
 
 
 def _pairs(spark, rows):
@@ -35,77 +41,61 @@ def _uf_components(rows):
     return {x: find(x) for x in parent}
 
 
+def _cc_labels(spark, rows):
+    """{gate: {id: cluster_id}} for every driver_finish_max_edges setting
+    in CC_GATES."""
+    return {
+        gate: {
+            r.id: r.cluster_id
+            for r in connected_components(
+                _pairs(spark, rows), driver_finish_max_edges=gate
+            ).collect()
+        }
+        for gate in CC_GATES
+    }
+
+
+def _assert_cc_matches_union_find(spark, rows):
+    expect = _uf_components(rows)
+    for gate, got in _cc_labels(spark, rows).items():
+        assert got == expect, gate
+
+
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_chain_and_triangle_and_disjoint(spark):
     rows = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)]
-    got = {
-        (r.id, r.cluster_id)
-        for r in connected_components(_pairs(spark, rows)).collect()
-    }
-    assert got == set(_uf_components(rows).items())
+    _assert_cc_matches_union_find(spark, rows)
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_long_chain_needs_multiple_rounds(spark):
-    # a 12-node path has diameter 11 — exercises the iteration loop well past
+    # a 12-node path has diameter 11 — exercises the contraction loop past
     # round one and the convergence detection
     rows = [(i, i + 1) for i in range(100, 112)]
-    got = dict(
-        (r.id, r.cluster_id)
-        for r in connected_components(_pairs(spark, rows)).collect()
-    )
-    assert got == _uf_components(rows)
-    assert set(got.values()) == {100}
-
-
-@pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_convergence_checks_throttled(spark):
-    # check_every=k must run ~rounds/k convergence actions (VERDICT r4 item
-    # 7: per-round collect() was the driver-side bottleneck on deep chains),
-    # produce the identical labeling, and run at most k-1 extra rounds
-    rows = [(i, i + 1) for i in range(100, 112)]
-    s1, s3 = {}, {}
-    got1 = dict(
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            _pairs(spark, rows), check_every=1, stats=s1
-        ).collect()
-    )
-    got3 = dict(
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            _pairs(spark, rows), check_every=3, stats=s3
-        ).collect()
-    )
-    assert got1 == got3 == _uf_components(rows)
-    assert s1["checks"] == s1["rounds"]
-    assert s3["checks"] <= (s3["rounds"] + 2) // 3
-    assert s3["rounds"] <= s1["rounds"] + 2
+    expect = _uf_components(rows)
+    for gate, got in _cc_labels(spark, rows).items():
+        assert got == expect, gate
+        assert set(got.values()) == {100}
 
 
 def test_label_direction_independent(spark):
-    # min id on the "wrong" side of every pair: propagation must flow both ways
+    # min id on the "wrong" side of every pair: labels must flow both ways
     rows = [(5, 1), (9, 5), (9, 7)]
-    got = dict(
-        (r.id, r.cluster_id)
-        for r in connected_components(_pairs(spark, rows)).collect()
-    )
-    assert got == {1: 1, 5: 1, 9: 1, 7: 1}
+    for gate, got in _cc_labels(spark, rows).items():
+        assert got == {1: 1, 5: 1, 9: 1, 7: 1}, gate
 
 
 def test_empty_pairs(spark):
     df = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(df).count() == 0
+    for gate in CC_GATES:
+        out = connected_components(df, driver_finish_max_edges=gate)
+        assert out.count() == 0
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_string_ids(spark):
     rows = [("doc_b", "doc_a"), ("doc_b", "doc_c"), ("doc_x", "doc_y")]
-    got = dict(
-        (r.id, r.cluster_id)
-        for r in connected_components(_pairs(spark, rows)).collect()
-    )
-    assert got == _uf_components(rows)
+    _assert_cc_matches_union_find(spark, rows)
 
 
 @pytest.mark.parametrize("seed", [7, 19])
@@ -122,11 +112,7 @@ def test_random_graph_matches_union_find(spark, seed):
         )
         if a != b
     ]
-    got = dict(
-        (r.id, r.cluster_id)
-        for r in connected_components(_pairs(spark, rows)).collect()
-    )
-    assert got == _uf_components(rows)
+    _assert_cc_matches_union_find(spark, rows)
 
 
 def test_keep_representatives(spark):
@@ -144,10 +130,13 @@ def test_keep_representatives(spark):
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_plan_no_cartesian(spark):
     rows = [(1, 2), (2, 3)]
-    out = connected_components(_pairs(spark, rows))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for gate in CC_GATES:
+        out = connected_components(
+            _pairs(spark, rows), driver_finish_max_edges=gate
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -367,14 +356,15 @@ def _brute_triangles(edges):
     ],
 )
 @pytest.mark.parametrize("driver_kernel", [True, False])
-def test_triangle_counts_match_brute_force(spark, edges, driver_kernel):
+def test_triangle_counts_match_brute_force(
+    spark, monkeypatch, edges, driver_kernel
+):
     from lvm_datapipe_spark.operators.graph import triangle_counts
 
+    if not driver_kernel:  # a 0 gate forces the distributed wedge engine
+        monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_NODES", "0")
     df = _pairs(spark, edges)
-    got = {
-        r["node"]: r["triangles"]
-        for r in triangle_counts(df, use_driver_kernel=driver_kernel).collect()
-    }
+    got = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert got == _brute_triangles(edges)
 
 
@@ -430,7 +420,7 @@ def test_dense_driver_triangles_gate_returns_none(spark):
     assert triangle_counts_driver_dense(df, "id_a", "id_b", max_nodes=2) is None
 
 
-def test_dense_driver_triangles_match_distributed_engine(spark):
+def test_dense_driver_triangles_match_distributed_engine(spark, monkeypatch):
     # the two engines behind graph_supplier_triangles must agree on a
     # non-trivial random graph (seeded, ~200 edges incl. dense pockets)
     import random
@@ -445,10 +435,8 @@ def test_dense_driver_triangles_match_distributed_engine(spark):
     edges = sorted(edges)
     df = _pairs(spark, edges)
     dense = dict(triangle_counts_driver_dense(df, "id_a", "id_b"))
-    dist = {
-        r["node"]: r["triangles"]
-        for r in triangle_counts(df, use_driver_kernel=False).collect()
-    }
+    monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_NODES", "0")
+    dist = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert dense == dist == _brute_triangles(edges)
 
 
@@ -556,6 +544,9 @@ def test_reachability_env_gate_forces_distributed_plan(spark, monkeypatch):
     assert [f.name for f in fast.schema.fields] == [
         f.name for f in slow.schema.fields
     ]
+    assert [f.dataType for f in fast.schema.fields] == [
+        f.dataType for f in slow.schema.fields
+    ]
 
 
 def test_supplier_triangles_env_gate_forces_distributed_plan(spark, monkeypatch):
@@ -576,6 +567,45 @@ def test_supplier_triangles_env_gate_forces_distributed_plan(spark, monkeypatch)
     assert [f.dataType for f in fast.schema.fields] == [
         f.dataType for f in slow.schema.fields
     ]
+
+
+def _write_lineitem(spark, path, orders):
+    """A minimal lineitem parquet under ``path`` from (orderkey, partkey,
+    suppkey) triples — the columns the graph queries read, plus the rest
+    of the declared schema at constant values."""
+    import datetime as dt
+
+    rows = [
+        (o, p, s, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", dt.date(2024, 1, 2))
+        for o, p, s in orders
+    ]
+    spark.createDataFrame(
+        rows,
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
+        " l_linenumber bigint, l_quantity double, l_extendedprice double,"
+        " l_discount double, l_tax double, l_returnflag string,"
+        " l_linestatus string, l_shipdate date",
+    ).write.parquet(str(path / "lineitem.parquet"))
+
+
+@pytest.mark.parametrize("edge_gate", [None, "0"])
+def test_supplier_triangles_sparse_graph_emits_no_zero_rows(
+    spark, monkeypatch, tmp_path, edge_gate
+):
+    """A triangle-free supplier path (orders {1,2} and {2,3}) has no
+    triangles: both the dense driver kernel (default gate) and the
+    distributed array_intersect engine (0 edge gate) must return NO rows,
+    as the declared SQL does — not (s, 0) rows for edges whose endpoint
+    adjacencies do not intersect."""
+    from lvm_datapipe_spark.queries import QUERIES
+
+    _write_lineitem(
+        spark, tmp_path, [(1, 10, 1), (1, 11, 2), (2, 12, 2), (2, 13, 3)]
+    )
+    if edge_gate is not None:
+        monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_EDGES", edge_gate)
+    out = QUERIES["graph_supplier_triangles"](spark, str(tmp_path))
+    assert out.collect() == []
 
 
 # -- converged k-core (VERDICT r7 item 5) ------------------------------------
@@ -664,7 +694,6 @@ def test_kcore_query_surfaces_nonconvergence_as_false_column(spark, tmp_path):
     output column: cap the peel at 1 round on a corpus that needs more
     (a pendant chain cascading into a clique) and every surviving row
     reads converged=False."""
-    import datetime as dt
     from unittest import mock
 
     from lvm_datapipe_spark.operators import graph as graph_mod
@@ -674,22 +703,12 @@ def test_kcore_query_surfaces_nonconvergence_as_false_column(spark, tmp_path):
     clique = [1, 2, 3, 4]
     for i, p1 in enumerate(clique):
         for p2 in clique[i + 1:]:
-            orders += [(ok, p1), (ok, p2)]
+            orders += [(ok, p1, 1), (ok, p2, 1)]
             ok += 1
     for a, b2 in ((4, 5), (5, 6), (6, 7), (7, 8)):
-        orders += [(ok, a), (ok, b2)]
+        orders += [(ok, a, 1), (ok, b2, 1)]
         ok += 1
-    rows = [
-        (o, p, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", dt.date(2024, 1, 2))
-        for o, p in orders
-    ]
-    spark.createDataFrame(
-        rows,
-        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
-        " l_linenumber bigint, l_quantity double, l_extendedprice double,"
-        " l_discount double, l_tax double, l_returnflag string,"
-        " l_linestatus string, l_shipdate date",
-    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    _write_lineitem(spark, tmp_path, orders)
 
     real_kcore = graph_mod.kcore
 
@@ -706,66 +725,22 @@ def test_kcore_query_surfaces_nonconvergence_as_false_column(spark, tmp_path):
     assert all(r.converged is False for r in got)
 
 
-# -- pointer-jumping shortcut (r8) -------------------------------------------
-
-
-@pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_shortcut_matches_plain_on_long_chain(spark):
-    """A 60-node path: plain propagation needs ~diameter rounds, the
-    jumped walk converges in O(log) — same labels."""
-    rows = [(i, i + 1) for i in range(60)]
-    plain_stats: dict = {}
-    jump_stats: dict = {}
-    plain = {
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            _pairs(spark, rows), max_rounds=100, stats=plain_stats
-        ).collect()
-    }
-    jumped = {
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            _pairs(spark, rows), max_rounds=100, stats=jump_stats, shortcut=True
-        ).collect()
-    }
-    assert plain == jumped
-    assert all(c == 0 for _, c in jumped)
-    assert jump_stats["rounds"] < plain_stats["rounds"]
-
-
-def test_shortcut_matches_union_find_on_mixed_graph(spark):
-    rows = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21),
-            (30, 31), (31, 32), (32, 33), (33, 34), (34, 35)]
-    got = {
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            _pairs(spark, rows), shortcut=True
-        ).collect()
-    }
-    assert got == set(_uf_components(rows).items())
-
-
-# -- large-star/small-star two-phase CC (r8) ---------------------------------
-
-
-def _assert_cc_equiv(spark, rows):
-    from lvm_datapipe_spark.operators.graph import connected_components_twophase
-
-    got = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(_pairs(spark, rows)).collect()
-    }
-    assert got == set(_uf_components(rows).items())
+# -- large-star/small-star contraction: shapes and gate paths --------------
 
 
 def test_twophase_chain(spark):
-    _assert_cc_equiv(spark, [(i, i + 1) for i in range(40)])
+    rows = [(i, i + 1) for i in range(40)]
+    got = {
+        r.id: r.cluster_id
+        for r in connected_components(_pairs(spark, rows)).collect()
+    }
+    assert got == _uf_components(rows)
 
 
 def test_twophase_hub_star(spark):
-    # one hub connected to 50 leaves — the shape that funnels plain
-    # propagation through a single hot reducer key
-    _assert_cc_equiv(spark, [(100, i) for i in range(50)])
+    # one hub connected to 50 leaves — the shape that would funnel a
+    # per-node propagation through a single hot reducer key
+    _assert_cc_matches_union_find(spark, [(100, i) for i in range(50)])
 
 
 def test_twophase_clique_plus_chain_plus_singleton_edge(spark):
@@ -774,44 +749,48 @@ def test_twophase_clique_plus_chain_plus_singleton_edge(spark):
         + [(10, 11), (11, 12), (12, 13)]
         + [(20, 21)]
     )
-    _assert_cc_equiv(spark, rows)
+    _assert_cc_matches_union_find(spark, rows)
 
 
 def test_twophase_random_graphs_match_union_find(spark):
     import random
 
+    # three random 60-node graphs on disjoint id ranges, labeled in one run
     rng = random.Random(20260816)
+    rows = []
     for trial in range(3):
-        n = 60
-        rows = [
-            (rng.randrange(n), rng.randrange(n))
-            for _ in range(70)
+        n, off = 60, 1000 * trial
+        rows += [
+            (off + a, off + b)
+            for a, b in (
+                (rng.randrange(n), rng.randrange(n)) for _ in range(70)
+            )
+            if a != b
         ]
-        rows = [(a, b) for a, b in rows if a != b]
-        _assert_cc_equiv(spark, rows)
+    _assert_cc_matches_union_find(spark, rows)
 
 
 def test_twophase_converges_in_log_rounds_on_chain(spark):
-    from lvm_datapipe_spark.operators.graph import connected_components_twophase
-
     stats: dict = {}
-    out = connected_components_twophase(
-        _pairs(spark, [(i, i + 1) for i in range(100)]), stats=stats
+    out = connected_components(
+        _pairs(spark, [(i, i + 1) for i in range(100)]),
+        stats=stats,
+        driver_finish_max_edges=None,
     )
     assert {(r.id, r.cluster_id) for r in out.collect()} == {
         (i, 0) for i in range(101)
     }
-    # 100-hop chain: plain propagation needs ~100 rounds; the contraction
-    # must close it in O(log^2) — single digits in practice
+    # 100-hop chain: a per-hop propagation needs ~100 rounds; the
+    # distributed contraction must close it in O(log^2) — single digits
+    # in practice
     assert stats["rounds"] <= 12
 
 
 def test_twophase_agrees_with_declared_dedup_clusters(spark):
-    """Both CC algorithms label the declared LSH near-dup pair list
-    identically (the oracle-checked dedup_clusters output)."""
+    """The engine labels the declared LSH near-dup pair list exactly as
+    the (oracle-checked) dedup_clusters query does."""
     from lvm_datapipe_spark.catalog import load_table
     from lvm_datapipe_spark.operators import similarity as V
-    from lvm_datapipe_spark.operators.graph import connected_components_twophase
     from lvm_datapipe_spark.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
@@ -819,7 +798,7 @@ def test_twophase_agrees_with_declared_dedup_clusters(spark):
     pairs = V.lsh_near_dup_pairs(emb, threshold=0.4, n_tables=12, n_planes=None)
     tp = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(pairs).collect()
+        for r in connected_components(pairs).collect()
     }
     declared = {
         (r.id, r.cluster_id)
@@ -830,24 +809,11 @@ def test_twophase_agrees_with_declared_dedup_clusters(spark):
 
 def test_twophase_self_loop_only_node_is_singleton(spark):
     """A node whose ONLY pairs are self-loops must surface as its own
-    singleton cluster — same contract as connected_components, and the
-    row incremental_components' self-star compression depends on
-    (r8 ADVICE item 3)."""
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
-
+    singleton cluster — the row incremental_components' self-star
+    compression depends on."""
     rows = [(9, 9), (2, 3), (3, 3)]  # 9 is self-loop-only; 3 also self-loops
-    tp = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(_pairs(spark, rows)).collect()
-    }
-    plain = {
-        (r.id, r.cluster_id)
-        for r in connected_components(_pairs(spark, rows)).collect()
-    }
-    assert tp == plain == {(9, 9), (2, 2), (3, 2)}
+    for gate, got in _cc_labels(spark, rows).items():
+        assert got == {9: 9, 2: 2, 3: 2}, gate
 
 
 def test_twophase_driver_finish_matches_distributed_fixpoint(spark):
@@ -855,8 +821,6 @@ def test_twophase_driver_finish_matches_distributed_fixpoint(spark):
     the pure distributed contraction loop (gate disabled), on shapes that
     exercise multi-round contraction, and the stats flag must record
     which path ran."""
-    from lvm_datapipe_spark.operators.graph import connected_components_twophase
-
     rows = (
         [(i, i + 1) for i in range(50)]                      # chain
         + [(a, b) for a in range(100, 106) for b in range(a + 1, 106)]
@@ -867,11 +831,11 @@ def test_twophase_driver_finish_matches_distributed_fixpoint(spark):
     s_pure: dict = {}
     gated = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(pairs, stats=s_gated).collect()
+        for r in connected_components(pairs, stats=s_gated).collect()
     }
     pure = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(
+        for r in connected_components(
             pairs, stats=s_pure, driver_finish_max_edges=None
         ).collect()
     }
@@ -884,37 +848,32 @@ def test_twophase_driver_finish_matches_distributed_fixpoint(spark):
 
 def test_twophase_assume_symmetric_equivalence(spark):
     """A pair list that already carries both orientations must label
-    identically through assume_symmetric=True (which skips the
-    symmetrize union + distinct) and the default path."""
-    from lvm_datapipe_spark.operators.graph import connected_components_twophase
-
-    rows = [(1, 2), (2, 3), (3, 3), (10, 11)]
-    sym_rows = rows + [(b, a) for a, b in rows]
-    sym = _pairs(spark, sym_rows)
-    got = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(
-            sym, assume_symmetric=True
-        ).collect()
-    }
-    ref = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(sym).collect()
-    }
-    assert got == ref == set(_uf_components(rows).items())
+    through assume_symmetric=True (which skips the symmetrize union +
+    distinct of the distributed loop) exactly as union-find does, for
+    numeric and string ids."""
+    for rows in (
+        [(1, 2), (2, 3), (3, 3), (10, 11)],
+        [("b", "a"), ("b", "c"), ("x", "y"), ("z", "z")],
+    ):
+        sym = _pairs(spark, rows + [(b, a) for a, b in rows])
+        got = {
+            (r.id, r.cluster_id)
+            for r in connected_components(
+                sym, assume_symmetric=True, driver_finish_max_edges=None
+            ).collect()
+        }
+        assert got == set(_uf_components(rows).items()), rows[0]
 
 
 def test_twophase_driver_finish_string_ids(spark):
     """The driver finish derives its output schema from the input edge
     type — string node ids must survive both the union-find and the
     createDataFrame round-trip."""
-    from lvm_datapipe_spark.operators.graph import connected_components_twophase
-
     rows = [("b", "a"), ("b", "c"), ("x", "y"), ("z", "z")]
     stats: dict = {}
     got = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(
+        for r in connected_components(
             _pairs(spark, rows), stats=stats
         ).collect()
     }
@@ -923,31 +882,6 @@ def test_twophase_driver_finish_string_ids(spark):
         ("a", "a"), ("b", "a"), ("c", "a"),
         ("x", "x"), ("y", "x"), ("z", "z"),
     }
-
-
-def test_incremental_components_strategies_agree(spark):
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-
-    old_edges = [(1, 2), (2, 3), (10, 11), (30, 31)]
-    new_edges = [(3, 10), (31, 50)]
-    prev = connected_components(_pairs(spark, old_edges))
-    new = _pairs(spark, new_edges)
-    a = dict(
-        (r.id, r.cluster_id)
-        for r in incremental_components(prev, new, strategy="twophase").collect()
-    )
-    b = dict(
-        (r.id, r.cluster_id)
-        for r in incremental_components(prev, new, strategy="minlabel").collect()
-    )
-    assert a == b and a[11] == 1 and a[50] == 30
-    import pytest
-
-    with pytest.raises(ValueError):
-        incremental_components(prev, new, strategy="nope")
 
 
 # -- converged k-core: non-convergence handling (r9, ADVICE item 2) ----------
@@ -989,7 +923,7 @@ def test_kcore_max_rounds_exhaustion_warns_and_recomputes_degrees(spark):
     with pytest.warns(UserWarning, match="max_rounds"):
         got = {
             (r.node, r.core_degree)
-            for r in kcore(e, k=2, max_rounds=3, check_every=2, stats=stats).collect()
+            for r in kcore(e, k=2, max_rounds=3, stats=stats).collect()
         }
     assert stats["converged"] is False
     assert got == set(_kcore_peel_rounds(rows, 2, 3).items())
@@ -1011,31 +945,6 @@ def test_kcore_converged_flag_true_on_fixpoint(spark):
     assert got == {(1, 2), (2, 2), (3, 2)}
 
 
-@pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_kcore_broadcast_gate_modes_agree(spark):
-    """Forced-broadcast, forced-shuffle, and the auto gate (driven to the
-    shuffle path via broadcast_max_nodes=0) must return identical cores."""
-    from lvm_datapipe_spark.operators.graph import kcore
-
-    rows = [
-        (1, 2), (2, 3), (1, 3),
-        (3, 4), (4, 5), (5, 6), (4, 6),
-        (6, 7), (7, 8), (8, 9),
-    ]
-    e = spark.createDataFrame(rows, ["u", "v"])
-    expect = set(_kcore_reference(rows, 2).items())
-    for kwargs in (
-        {"broadcast_alive": True},
-        {"broadcast_alive": False},
-        {"broadcast_max_nodes": 0},  # auto-gate falls back to shuffled
-    ):
-        got = {
-            (r.node, r.core_degree)
-            for r in kcore(e, k=2, **kwargs).collect()
-        }
-        assert got == expect, kwargs
-
-
 def test_kcore_empty_edge_list(spark):
     from lvm_datapipe_spark.operators.graph import kcore
 
@@ -1048,39 +957,9 @@ def test_kcore_empty_edge_list(spark):
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_truncate_every_is_exact_and_batches_jobs(spark):
-    """truncate_every batches the per-round localCheckpoint jobs without
-    changing any label (r10 candidate, measured in BENCH_NOTES r9): the
-    plan doubles between truncations but the fixpoint is identical, and
-    convergence-check rounds always truncate first."""
-    rows = [(i, i + 1) for i in range(10)] + [(100, 101), (101, 102),
-                                              (100, 102), (200, 200)]
-    st0: dict = {}
-    base = {
-        (r.id, r.cluster_id)
-        for r in connected_components(_pairs(spark, rows), stats=st0).collect()
-    }
-    for t in (2, 4):
-        st: dict = {}
-        got = {
-            (r.id, r.cluster_id)
-            for r in connected_components(
-                _pairs(spark, rows), truncate_every=t, stats=st
-            ).collect()
-        }
-        assert got == base
-        assert st["rounds"] == st0["rounds"]
-        # with check_every=2 every check round truncates, so the batch
-        # bound is min(truncate_every, check_every) rounds per truncation
-        assert st["truncations"] <= st0["truncations"] // 2 + 1
-
-
-@pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_kcore_engines_agree_on_random_graphs(spark):
-    """The decremental (default) and recompute peel engines must return
-    identical (node, core_degree) sets and converged flags — the two are
-    independently-derived implementations of the same fixpoint, so their
-    agreement on random graphs is a strong cross-check."""
+def test_kcore_matches_reference_on_random_graphs(spark):
+    """Converged (node, core_degree) sets on random graphs equal the
+    pure-python peel, and the converged flag reads True."""
     import random
 
     from lvm_datapipe_spark.operators.graph import kcore
@@ -1090,57 +969,38 @@ def test_kcore_engines_agree_on_random_graphs(spark):
         rows = list({(rng.randrange(n), rng.randrange(n)) for _ in range(m)})
         rows = [(a, b) for a, b in rows if a != b]
         e = spark.createDataFrame(rows, ["u", "v"])
-        out = {}
-        for engine in ("decremental", "recompute"):
-            st: dict = {}
-            out[engine] = (
-                {
-                    (r.node, r.core_degree)
-                    for r in kcore(e, k=k, engine=engine, stats=st).collect()
-                },
-                st["converged"],
-            )
-        assert out["decremental"] == out["recompute"], (trial, n, m, k)
-        assert out["decremental"][0] == set(_kcore_reference(rows, k).items())
+        st: dict = {}
+        got = {
+            (r.node, r.core_degree) for r in kcore(e, k=k, stats=st).collect()
+        }
+        assert got == set(_kcore_reference(rows, k).items()), (trial, n, m, k)
+        assert st["converged"] is True
 
 
 def test_kcore_engines_agree_on_exhausted_peel(spark):
-    """Non-converged exits must match too — including the contract corner
-    where a node's LAST alive neighbor dies in the closing round: the
-    recompute engine's keyed aggregate emits no row for it, and the
-    decremental engine must filter its maintained zero-degree row the
-    same way.  A star at k=2 exhausted after 1 round hits exactly that:
-    the leaves die, the center survives with alive-degree 0."""
+    """Non-converged exits match the exactly-n-rounds peel model,
+    including the contract corner where a node's LAST alive neighbor dies
+    in the closing round: its maintained degree is 0 and it must not be
+    returned (core_degree >= 1).  A star at k=2 exhausted after 1 round
+    hits exactly that: the leaves die, the center survives with
+    alive-degree 0 and is dropped."""
     from lvm_datapipe_spark.operators.graph import kcore
 
     star = [(0, i) for i in range(1, 5)]
     path = [(i, i + 1) for i in range(29)]
     for rows, k, cap in ((star, 2, 1), (path, 2, 3)):
         e = spark.createDataFrame(rows, ["u", "v"])
-        out = {}
-        for engine in ("decremental", "recompute"):
-            st: dict = {}
-            with pytest.warns(UserWarning, match="max_rounds"):
-                got = {
-                    (r.node, r.core_degree)
-                    for r in kcore(
-                        e, k=k, max_rounds=cap, engine=engine, stats=st
-                    ).collect()
-                }
-            out[engine] = (got, st["converged"])
-        assert out["decremental"] == out["recompute"], (rows[:2], k, cap)
-        assert out["decremental"][1] is False
-        assert out["decremental"][0] == set(
-            _kcore_peel_rounds(rows, k, cap).items()
-        )
-
-
-def test_kcore_rejects_unknown_engine(spark):
-    from lvm_datapipe_spark.operators.graph import kcore
-
-    e = spark.createDataFrame([(1, 2)], ["u", "v"])
-    with pytest.raises(ValueError, match="engine"):
-        kcore(e, engine="decremental ")
+        st: dict = {}
+        with pytest.warns(UserWarning, match="max_rounds"):
+            got = {
+                (r.node, r.core_degree)
+                for r in kcore(e, k=k, max_rounds=cap, stats=st).collect()
+            }
+        assert st["converged"] is False, (rows[:2], k, cap)
+        assert got == set(_kcore_peel_rounds(rows, k, cap).items())
+        assert all(d >= 1 for _, d in got)
+        if rows is star:
+            assert got == set()
 
 
 def test_fresh_local_checkpoint_bounds_catalyst_stats(spark):
@@ -1190,26 +1050,20 @@ def test_fresh_local_checkpoint_bounds_catalyst_stats(spark):
 
 def test_kcore_string_node_ids_both_engines(spark):
     """kcore is type-generic in the node id (the ADVICE r9 empty-frame fix
-    derives the type from the edges); both engines must handle non-long
-    ids end to end, including the typed empty result."""
+    derives the type from the edges): non-long ids must work end to end,
+    for a non-empty core and for the typed empty result."""
     from lvm_datapipe_spark.operators.graph import kcore
 
     rows = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
     e = spark.createDataFrame(rows, "u string, v string")
-    expect = {("a", 2), ("b", 2), ("c", 2)}
-    for engine in ("decremental", "recompute"):
-        got = {
-            (r.node, r.core_degree)
-            for r in kcore(e, k=2, engine=engine).collect()
-        }
-        assert got == expect, engine
+    got = {(r.node, r.core_degree) for r in kcore(e, k=2).collect()}
+    assert got == set(_kcore_reference(rows, 2).items()) == {
+        ("a", 2), ("b", 2), ("c", 2)
+    }
     empty = spark.createDataFrame([], "u string, v long")
-    for engine in ("decremental", "recompute"):
-        out = kcore(
-            empty.select("u", F.col("v").cast("string")), k=2, engine=engine
-        )
-        assert out.count() == 0
-        assert dict(out.dtypes)["node"] == "string", engine
+    out = kcore(empty.select("u", F.col("v").cast("string")), k=2)
+    assert out.count() == 0
+    assert dict(out.dtypes)["node"] == "string"
 
 
 def test_fresh_local_checkpoint_roundtrips_mixed_schema(spark):
@@ -1238,11 +1092,10 @@ def test_fresh_local_checkpoint_roundtrips_mixed_schema(spark):
 
 
 def test_kcore_engines_agree_with_self_loops_and_duplicates(spark):
-    """Degenerate edge lists (self-loops, duplicate and reversed pairs)
-    must not split the engines: the symmetric-distinct edge build
-    canonicalizes them identically, and a self-loop contributes exactly
-    one degree on both paths (matching the python reference, whose
-    adjacency set also holds u in adj[u])."""
+    """Degenerate edge lists (self-loops, duplicate and reversed pairs):
+    the symmetric-distinct edge build canonicalizes them, and a self-loop
+    contributes exactly one degree — matching the python reference, whose
+    adjacency set also holds u in adj[u]."""
     from lvm_datapipe_spark.operators.graph import kcore
 
     rows = [
@@ -1252,104 +1105,10 @@ def test_kcore_engines_agree_with_self_loops_and_duplicates(spark):
         (9, 9),                          # isolated self-loop node
     ]
     e = spark.createDataFrame(rows, ["u", "v"])
-    out = {}
-    for engine in ("decremental", "recompute"):
-        st: dict = {}
-        out[engine] = (
-            {
-                (r.node, r.core_degree)
-                for r in kcore(e, k=2, engine=engine, stats=st).collect()
-            },
-            st["converged"],
-        )
-    assert out["decremental"] == out["recompute"]
-    assert out["decremental"][0] == set(_kcore_reference(rows, 2).items())
-
-
-def test_twophase_precontract_matches_union_find(spark):
-    """precontract=True must label chains, cliques, hubs, self-loops and
-    random graphs identically to the union-find ground truth (and hence
-    to the plain loop, pinned separately by the Hypothesis property)."""
-    import random
-
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components_twophase,
-    )
-
-    rng = random.Random(20260817)
-    shapes = [
-        [(i, i + 1) for i in range(40)],
-        [(a, b) for a in range(8) for b in range(a + 1, 8)] + [(20, 21)],
-        [(100, i) for i in range(50)] + [(7, 7), (300, 300)],
-        [(rng.randrange(60), rng.randrange(60)) for _ in range(70)],
-    ]
-    for rows in shapes:
-        expect = set(_uf_components(rows).items())
-        got = {
-            (r.id, r.cluster_id)
-            for r in connected_components_twophase(
-                _pairs(spark, rows), precontract=True
-            ).collect()
-        }
-        assert got == expect
-
-
-def test_twophase_precontract_full_contraction_coalesce_path(spark):
-    """Disjoint cliques contract away ENTIRELY in the pre-pass (empty
-    contracted edge set): every rep must label itself via the expansion
-    coalesce, and the rep is provably the component minimum."""
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components_twophase,
-    )
-
-    rows = [(a, b) for a in range(5) for b in range(a + 1, 5)] + [
-        (a, b) for a in range(10, 14) for b in range(a + 1, 14)
-    ]
-    stats: dict = {}
-    got = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(
-            # gate BELOW the 16 raw edges so the round-0 driver finish
-            # does not bypass the pre-contraction under test
-            _pairs(spark, rows),
-            precontract=True,
-            stats=stats,
-            driver_finish_max_edges=4,
-        ).collect()
-    }
-    assert got == {(i, 0) for i in range(5)} | {
-        (i, 10) for i in range(10, 14)
-    }
-    # the loop saw an (empty) contracted graph and stopped immediately
-    assert stats["rounds"] == 1
-
-
-def test_twophase_precontract_string_ids_and_symmetric(spark):
-    """precontract composes with string node ids and with
-    assume_symmetric=True (the geo_dbscan calling convention)."""
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components_twophase,
-    )
-
-    rows = [("b", "a"), ("b", "c"), ("x", "y"), ("z", "z")]
-    expect = set(_uf_components(rows).items())
-    got = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(
-            _pairs(spark, rows), precontract=True
-        ).collect()
-    }
-    assert got == expect
-    sym_rows = rows + [(b, a) for a, b in rows]
-    got_sym = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(
-            _pairs(spark, sym_rows),
-            precontract=True,
-            assume_symmetric=True,
-        ).collect()
-    }
-    assert got_sym == expect
+    st: dict = {}
+    got = {(r.node, r.core_degree) for r in kcore(e, k=2, stats=st).collect()}
+    assert got == set(_kcore_reference(rows, 2).items())
+    assert st["converged"] is True
 
 
 def test_geo_dbscan_subcell_contraction_invariants(spark):
@@ -1394,10 +1153,6 @@ def test_twophase_round0_and_midloop_gate_paths_agree(spark):
     must label identically to the pure distributed fixpoint.  A
     30-clique (435 raw edges, 29 parent edges after one round) with
     gate=100 exercises the mid-loop path; gate=1000 exercises round 0."""
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components_twophase,
-    )
-
     rows = [(a, b) for a in range(30) for b in range(a + 1, 30)] + [
         (100, 101), (101, 102), (200, 200)
     ]
@@ -1406,21 +1161,21 @@ def test_twophase_round0_and_midloop_gate_paths_agree(spark):
     s0: dict = {}
     round0 = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(
+        for r in connected_components(
             pairs, driver_finish_max_edges=1000, stats=s0
         ).collect()
     }
     s_mid: dict = {}
     mid = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(
+        for r in connected_components(
             pairs, driver_finish_max_edges=100, stats=s_mid
         ).collect()
     }
     s_pure: dict = {}
     pure = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(
+        for r in connected_components(
             pairs, driver_finish_max_edges=None, stats=s_pure
         ).collect()
     }

@@ -582,41 +582,41 @@ def test_kcore_matches_python_fixpoint_on_random_graphs(spark, edges, k):
     st.sampled_from([2, 40]),
 )
 @settings(**SETTINGS)
-def test_kcore_engines_agree_on_random_graphs_property(spark, edges, k, cap):
-    """The decremental (r10 default) and recompute peel engines return
-    identical (node, core_degree) sets and converged flags on ARBITRARY
-    edge lists — self-loops and duplicates included — at both a
-    converging and an exhausting max_rounds.  Two independently-derived
-    implementations of the same fixpoint; their randomized agreement is
-    the engine swap's strongest safety net."""
+def test_kcore_matches_capped_peel_model_property(spark, edges, k, cap):
+    """kcore returns the pure-python peel's (node, core_degree) set AND
+    converged flag on ARBITRARY edge lists — self-loops and duplicates
+    included — at both a converging and an exhausting max_rounds.  The
+    model checks the doomed frontier at the top of each of ``cap``
+    rounds (empty ⇒ converged), treats an alive set emptied by the last
+    round as converged, and keeps only nodes with >= 1 alive neighbor."""
     import warnings
 
     from lvm_datapipe_spark.operators.graph import kcore
 
+    adj = defaultdict(set)
+    for u, v in edges:
+        adj[u].add(v)
+        adj[v].add(u)
+    alive = set(adj)
+    converged = False
+    for _ in range(cap):
+        drop = {u for u in alive if len(adj[u] & alive) < k}
+        if not drop:
+            converged = True
+            break
+        alive -= drop
+    converged = converged or not alive
+    expect = {
+        (u, len(adj[u] & alive)) for u in alive if len(adj[u] & alive) >= 1
+    }
+
     df = spark.createDataFrame(edges, "u long, v long")
-    out = {}
-    for engine in ("decremental", "recompute"):
-        st_: dict = {}
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            rows = kcore(
-                df, k=k, max_rounds=cap, engine=engine, stats=st_
-            ).collect()
-        out[engine] = (
-            {(r.node, r.core_degree) for r in rows},
-            st_["converged"],
-        )
-    assert out["decremental"][0] == out["recompute"][0]
-    # converged flags: the decremental engine observes the fixpoint the
-    # exact round the doomed frontier empties; the recompute engine's
-    # throttled count can miss a fixpoint reached inside its final
-    # check_every block under a tight cap.  The guarantee is one-way:
-    # recompute True implies decremental True (never the reverse), and
-    # at a generous cap both see the true fixpoint.
-    if out["recompute"][1]:
-        assert out["decremental"][1]
-    if cap == 40:
-        assert out["decremental"][1] == out["recompute"][1]
+    st_: dict = {}
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        rows = kcore(df, k=k, max_rounds=cap, stats=st_).collect()
+    assert {(r.node, r.core_degree) for r in rows} == expect
+    assert st_["converged"] is converged
 
 
 @given(
@@ -631,31 +631,34 @@ def test_kcore_engines_agree_on_random_graphs_property(spark, edges, k, cap):
     st.sampled_from([None, 1, 200_000]),
 )
 @settings(**SETTINGS)
-def test_twophase_precontract_agrees_on_random_graphs_property(
-    spark, edges, gate
-):
-    """precontract=True (one closed-neighborhood-min contraction before
-    the large/small-star loop, expanded back through the rep map) labels
-    ARBITRARY edge lists — self-loops and duplicates included —
-    identically to the plain loop, across driver-finish gate settings.
-    The contraction's correctness argument (the component minimum is its
-    own representative) is exercised here on every shape Hypothesis can
-    draw, including graphs that contract away entirely."""
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components_twophase,
-    )
+def test_connected_components_matches_union_find_property(spark, edges, gate):
+    """connected_components labels ARBITRARY edge lists — self-loops and
+    duplicates included — with each node's reachable minimum, across
+    driver-finish gate settings: None (pure distributed loop), 1 (on
+    most drawn graphs the gate fires mid-loop) and the default (round-0
+    driver finish)."""
+    from lvm_datapipe_spark.operators.graph import connected_components
+
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    expect = {(x, find(x)) for x in list(parent)}
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    plain = {
+    got = {
         (r.id, r.cluster_id)
-        for r in connected_components_twophase(
+        for r in connected_components(
             df, driver_finish_max_edges=gate
         ).collect()
     }
-    contracted = {
-        (r.id, r.cluster_id)
-        for r in connected_components_twophase(
-            df, driver_finish_max_edges=gate, precontract=True
-        ).collect()
-    }
-    assert contracted == plain
+    assert got == expect

@@ -12,9 +12,9 @@ a scratch directory (never /root/testdata), then measures:
    timed at growing n; the quadratic form is capped where its n²/2 pair
    stream becomes minutes-long, with the n² growth law making the
    extrapolation obvious.
-2. **Connected components at ~1M edges** — rounds, convergence checks and
-   wall time of the min-label propagation loop (operators/graph.py) on a
-   random graph three orders denser than the pytest fixtures.
+2. **Connected components at ~1M edges** — contraction rounds, whether
+   the driver finish fired, and wall time of graph.connected_components
+   on a random graph three orders denser than the pytest fixtures.
 3. **Skewed join: plain vs AQE vs salted** — a 90%-hot-key fact joined to
    a dim too large to broadcast (broadcast disabled to emulate the 100 TB
    regime): straggler wall time of the naive sort-merge join vs AQE's
@@ -275,15 +275,15 @@ def bench_connected_components(spark, quick: bool) -> dict:
     pairs = spark.read.parquet(p).repartition(32)
     stats: dict = {}
     t0 = time.perf_counter()
-    labels = connected_components(pairs, max_rounds=40, stats=stats)
+    labels = connected_components(pairs, stats=stats)
+    n_nodes_seen = labels.count()
     wall = round(time.perf_counter() - t0, 2)
     n_clusters = labels.select("cluster_id").distinct().count()
-    n_nodes_seen = labels.count()
     return {
         "n_nodes": n_nodes_seen,
         "n_edges": pairs.count(),
         "rounds": stats.get("rounds"),
-        "convergence_checks": stats.get("checks"),
+        "driver_finish": stats.get("driver_finish"),
         "wall_sec": wall,
         "n_clusters": n_clusters,
     }
@@ -795,13 +795,15 @@ def render_md(res: dict) -> str:
         f"Random graph, {cc['n_nodes']:,} touched nodes / {cc['n_edges']:,}",
         "directed edge rows after dedup/symmetrization.",
         "",
-        f"- propagation rounds to fixpoint: **{cc['rounds']}**",
-        f"- convergence-check actions: **{cc['convergence_checks']}** (throttled, exact)",
+        f"- distributed contraction rounds: **{cc['rounds']}**",
+        f"- finished by the driver union-find: **{cc['driver_finish']}**",
         f"- wall time: **{cc['wall_sec']} s**",
         f"- clusters found: **{cc['n_clusters']:,}**",
         "",
-        "State per round is |nodes|-sized (id, label); localCheckpoint stops",
-        "plan growth, so cost is rounds × (one keyed join + one aggregate).",
+        "Each round is one signature action over the shrinking parent-edge",
+        "set; localCheckpoint stops plan growth, so cost is rounds × (two",
+        "keyed aggregates + two keyed joins) over a geometrically shrinking",
+        "edge set.",
         "",
         "## 3. Skewed join: plain vs AQE vs salted",
         "",
@@ -1726,234 +1728,6 @@ def bench_basket_cap(spark, quick: bool) -> dict:
     return out
 
 
-def gen_chain_edges(path: str, n: int, hub_every: int = 0) -> None:
-    """A length-n path graph (worst-case diameter), optionally with a hub
-    node attached to every ``hub_every``-th chain node (the mixed
-    chain+hub shape real co-occurrence graphs degrade into)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    u = np.arange(n, dtype=np.int64)
-    v = u + 1
-    if hub_every:
-        hub = np.full(n // hub_every, n + 1, dtype=np.int64)
-        spokes = np.arange(0, n, hub_every, dtype=np.int64)[: len(hub)]
-        u = np.concatenate([u, hub])
-        v = np.concatenate([v, spokes])
-    pq.write_table(pa.table({"id_a": pa.array(u), "id_b": pa.array(v)}), path)
-
-
-def bench_cc_variants(spark, quick: bool) -> dict:
-    """The three connected-components strategies on the diameter
-    worst case (r8): plain min-label propagation walks the chain
-    (O(diameter) rounds), pointer jumping doubles the horizon
-    (O(log d)), and the large-star/small-star contraction rewires
-    neighborhoods (O(log² n), hub-safe).  All three are exact and
-    bit-identical; the bench is WHICH to reach for per graph shape —
-    the guidance encoded in graph.py's docstrings."""
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
-
-    sizes = [512, 20_000] if quick else [512, 20_000, 100_000]
-    out: dict = {"sizes": {}}
-    for n in sizes:
-        path = os.path.join(SCRATCH, f"chain_{n}.parquet")
-        if not os.path.exists(path):
-            gen_chain_edges(path, n)
-        e = spark.read.parquet(path)
-        row: dict = {}
-        # plain propagation only at the smallest n (diameter-many rounds
-        # of driver-synchronized jobs — the point is that it can't scale)
-        if n == sizes[0]:
-            st: dict = {}
-            t0 = time.perf_counter()
-            connected_components(
-                e, max_rounds=10_000, check_every=8, stats=st
-            ).count()
-            row["plain"] = {
-                "sec": round(time.perf_counter() - t0, 2),
-                "rounds": st["rounds"],
-            }
-        st = {}
-        t0 = time.perf_counter()
-        connected_components(
-            e, max_rounds=200, check_every=2, shortcut=True, stats=st
-        ).count()
-        row["shortcut"] = {
-            "sec": round(time.perf_counter() - t0, 2),
-            "rounds": st["rounds"],
-        }
-        st = {}
-        t0 = time.perf_counter()
-        connected_components_twophase(e, stats=st).count()
-        row["twophase"] = {
-            "sec": round(time.perf_counter() - t0, 2),
-            "rounds": st["rounds"],
-        }
-        out["sizes"][n] = row
-        print(f"  n={n}: {row}", flush=True)
-    return out
-
-
-def bench_incremental_default(spark, quick: bool) -> dict:
-    """§17 (r9, VERDICT r8 item 5): WHY incremental_components defaults to
-    the two-phase contraction.  The merge topology of an incremental batch
-    is caller-data-dependent: one new pair per ADJACENT old component
-    chains c components into a diameter-c path of label nodes, and
-    min-label propagation then pays c driver-synchronized rounds even
-    though every old component was only 1 hop deep.  Fixture: c star
-    components of 10 members each (prev labels constructed directly —
-    10·c star edges) + c-1 chaining new pairs; at c=100k that is the
-    1M-edge chain-heavy graph the verdict asked for.  minlabel runs only
-    at the smallest c (its round count IS c — the point), and both
-    engines are asserted label-identical there."""
-    import pandas as pd
-
-    from lvm_datapipe_spark.operators.graph import incremental_components
-
-    comps = [512, 10_000] if quick else [512, 10_000, 100_000]
-    size = 10
-    out: dict = {"members_per_comp": size, "sizes": {}}
-    for c in comps:
-        # component i = ids [i*size, (i+1)*size), labeled by its min
-        ids = np.arange(c * size, dtype=np.int64)
-        labels = (ids // size) * size
-        prev = spark.createDataFrame(
-            pd.DataFrame({"id": ids, "cluster_id": labels})
-        )
-        hi = np.arange(1, c, dtype=np.int64) * size - 1   # last member of i
-        new = spark.createDataFrame(
-            pd.DataFrame({"id_a": hi, "id_b": hi + 1})    # first member of i+1
-        )
-        row: dict = {"star_edges": int(c * size), "new_pairs": int(c - 1)}
-        if c == comps[0]:
-            st: dict = {}
-            t0 = time.perf_counter()
-            ml = incremental_components(
-                prev, new, strategy="minlabel", max_rounds=10_000,
-                check_every=8, stats=st,
-            )
-            ml_rows = {(r["id"], r["cluster_id"]) for r in ml.collect()}
-            row["minlabel"] = {
-                "sec": round(time.perf_counter() - t0, 2),
-                "rounds": st["rounds"],
-            }
-        st = {}
-        t0 = time.perf_counter()
-        tp = incremental_components(prev, new, strategy="twophase", stats=st)
-        if c == comps[0]:
-            tp_rows = {(r["id"], r["cluster_id"]) for r in tp.collect()}
-            assert tp_rows == ml_rows, "strategy outputs diverge"
-            assert all(lab == 0 for _, lab in tp_rows)
-        else:
-            tp.count()
-        row["twophase"] = {
-            "sec": round(time.perf_counter() - t0, 2),
-            "rounds": st["rounds"],
-        }
-        out["sizes"][c] = row
-        print(f"  c={c}: {row}", flush=True)
-    return out
-
-
-def bench_kcore_broadcast(spark, quick: bool) -> dict:
-    """§18 (r9): the k-core alive-set broadcast gate.  kcore()'s per-round
-    semi-joins can either BROADCAST the alive set (each round = one
-    map-side filter pass over the symmetric edge list + the single degree
-    shuffle) or shuffle all three sides.  The alive set is node-dimension
-    sized and only shrinks, so broadcast wins whenever the initial node
-    count fits an executor broadcast — the auto-gate default
-    (broadcast_max_nodes=4M).  Fixture: uniform random multigraphs at
-    fixed mean degree 10 (k=3 peels a real fraction per round), both
-    modes asserted bit-identical.  Since r10 the DEFAULT kcore engine is
-    the decremental peel (§20), which replaces the alive semi-joins with
-    a doomed-frontier broadcast — this bench pins engine='recompute',
-    the engine the gate belongs to."""
-    import pandas as pd
-
-    from lvm_datapipe_spark.operators.graph import kcore
-
-    sizes = [50_000, 200_000] if quick else [50_000, 200_000, 500_000]
-    out: dict = {"mean_degree": 10, "k": 3, "sizes": {}}
-    # untimed warmup at the smallest size: the first kcore run in a
-    # session pays codegen/JIT for both join shapes, which otherwise
-    # lands entirely on whichever mode runs first in the first row
-    _rng = np.random.default_rng(1)
-    _u = _rng.integers(0, 10_000, size=50_000, dtype=np.int64)
-    _v = _rng.integers(0, 10_000, size=50_000, dtype=np.int64)
-    _w = spark.createDataFrame(
-        pd.DataFrame({"u": _u, "v": _v})
-    ).filter("u <> v").localCheckpoint()
-    for _mode in (True, False):
-        kcore(_w, k=3, broadcast_alive=_mode, engine="recompute").count()
-    for n in sizes:
-        m = n * 5
-        rng = np.random.default_rng(20260816 + n)
-        u = rng.integers(0, n, size=m, dtype=np.int64)
-        v = rng.integers(0, n, size=m, dtype=np.int64)
-        keep = u != v
-        e = spark.createDataFrame(
-            pd.DataFrame({"u": u[keep], "v": v[keep]})
-        ).repartition(32).localCheckpoint()
-        row: dict = {"edges": int(keep.sum())}
-        results = {}
-        for mode in (True, False):
-            st: dict = {}
-            t0 = time.perf_counter()
-            got = kcore(e, k=3, broadcast_alive=mode, stats=st,
-                        engine="recompute")
-            cnt = got.count()
-            results[mode] = cnt
-            row["broadcast" if mode else "shuffled"] = {
-                "sec": round(time.perf_counter() - t0, 2),
-                "rounds": st["rounds"],
-                "core_nodes": int(cnt),
-                "converged": bool(st["converged"]),
-            }
-        assert results[True] == results[False]
-        out["sizes"][n] = row
-        print(f"  n={n}: {row}", flush=True)
-    return out
-
-
-def render_kcore_broadcast_md(res: dict) -> list[str]:
-    r = res["kcore_broadcast"]
-    lines = [
-        "## 18. k-core alive-set broadcast gate",
-        "",
-        f"Uniform random graph, mean degree {r['mean_degree']},"
-        f" k={r['k']}; converged",
-        "peel, identical cores both modes.  The alive set is",
-        "node-dimension-sized and monotonically shrinking, so kcore()'s",
-        "auto-gate broadcasts it below broadcast_max_nodes (4M default)",
-        "and falls back to shuffled semi-joins above — the loop structure",
-        "is unchanged either way.",
-        "",
-        "| nodes (edges) | broadcast rounds/sec | shuffled rounds/sec |",
-        "|---|---|---|",
-    ]
-    for n, row in sorted(r["sizes"].items(), key=lambda kv: int(kv[0])):
-        b, s = row["broadcast"], row["shuffled"]
-        lines.append(
-            f"| {n} ({row['edges']}) | {b['rounds']} / {b['sec']} s"
-            f" | {s['rounds']} / {s['sec']} s |"
-        )
-    lines += [
-        "",
-        "- Broadcast replaces two of the three per-round exchanges with",
-        "  map-side hash probes; the win grows with edge count because",
-        "  the edge list is what stops shuffling.",
-        "- Above the gate (billions of nodes) the shuffled plan is the",
-        "  correct one — the broadcast build itself would OOM the",
-        "  executors, which is exactly the failure ADVICE r8 item 5",
-        "  flagged on the old unconditional hint.",
-        "",
-    ]
-    return lines
-
-
 def bench_r11_kernels(spark, quick: bool) -> dict:
     """§21 (r11): n-scaled A/Bs for the four r11 kernel changes, since the
     sf0.1 bench is fixed-cost-bound (VERDICT r10 item 5 / next-round item
@@ -1970,6 +1744,8 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
     21d dsir NEGATIVE evidence: the shipped two-scan shape vs the
         REVERTED persisted per-doc bucket profile rework, at n-scale
         (the revert's justification beyond the sf0.1 bench row)."""
+    from unittest import mock
+
     import pandas as pd
 
     from lvm_datapipe_spark.operators.graph import (
@@ -1999,14 +1775,16 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
         t0 = time.perf_counter()
         dense = triangle_counts_driver_dense(e, "id_a", "id_b")
         t_dense = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        dist = {
-            r["node"]: r["triangles"]
-            for r in triangle_counts(
-                e, "id_a", "id_b", use_driver_kernel=False
-            ).collect()
-        }
-        t_dist = round(time.perf_counter() - t0, 2)
+        # a 0 node gate forces triangle_counts onto the distributed engine
+        with mock.patch.dict(
+            os.environ, {"SPARK_GRAFT_DENSE_TRI_MAX_NODES": "0"}
+        ):
+            t0 = time.perf_counter()
+            dist = {
+                r["node"]: r["triangles"]
+                for r in triangle_counts(e, "id_a", "id_b").collect()
+            }
+            t_dist = round(time.perf_counter() - t0, 2)
         assert dense is not None and dict(dense) == dist, f"mismatch at n={n}"
         tri["sizes"][n] = {"edges": int(n_edges), "dense_sec": t_dense,
                            "distributed_sec": t_dist}
@@ -2412,200 +2190,6 @@ def render_r11_kernels_md(res: dict) -> list[str]:
     return lines
 
 
-def bench_kcore_engines(spark, quick: bool) -> dict:
-    """§20b (r10): the decremental vs recompute kcore engines across graph
-    sizes.  Same fixture family as §18 (uniform random, mean degree 10,
-    k=3 — a converged peel) plus a deep-peel path fixture (k=2,
-    max_rounds=40, exhausts) where the recompute engine's O(E)-per-round
-    cost is maximally exposed.  Cores asserted identical per size."""
-    import warnings
-
-    import pandas as pd
-
-    from lvm_datapipe_spark.operators.graph import kcore
-
-    sizes = [50_000, 200_000] if quick else [50_000, 200_000, 500_000]
-    out: dict = {"mean_degree": 10, "k": 3, "sizes": {}, "path_peel": {}}
-    # untimed warmup (codegen/JIT for both engines' join shapes)
-    _rng = np.random.default_rng(2)
-    _u = _rng.integers(0, 10_000, size=50_000, dtype=np.int64)
-    _v = _rng.integers(0, 10_000, size=50_000, dtype=np.int64)
-    _w = spark.createDataFrame(
-        pd.DataFrame({"u": _u, "v": _v})
-    ).filter("u <> v").localCheckpoint()
-    for _eng in ("decremental", "recompute"):
-        kcore(_w, k=3, engine=_eng).count()
-    for n in sizes:
-        m = n * 5
-        rng = np.random.default_rng(20261016 + n)
-        u = rng.integers(0, n, size=m, dtype=np.int64)
-        v = rng.integers(0, n, size=m, dtype=np.int64)
-        keep = u != v
-        e = spark.createDataFrame(
-            pd.DataFrame({"u": u[keep], "v": v[keep]})
-        ).repartition(32).localCheckpoint()
-        row: dict = {"edges": int(keep.sum())}
-        counts = {}
-        for eng in ("decremental", "recompute"):
-            st: dict = {}
-            t0 = time.perf_counter()
-            cnt = kcore(e, k=3, engine=eng, stats=st).count()
-            counts[eng] = cnt
-            row[eng] = {
-                "sec": round(time.perf_counter() - t0, 2),
-                "rounds": st["rounds"],
-                "core_nodes": int(cnt),
-                "converged": bool(st["converged"]),
-            }
-        assert counts["decremental"] == counts["recompute"]
-        out["sizes"][n] = row
-        print(f"  n={n}: {row}", flush=True)
-    # deep-peel: a path dies one layer per round; cap at 40 rounds so the
-    # fixture measures per-round cost, not the (unbounded) full peel
-    pn = 50_000
-    pe = spark.createDataFrame(
-        pd.DataFrame({"u": np.arange(pn - 1), "v": np.arange(1, pn)})
-    ).repartition(32).localCheckpoint()
-    for eng in ("decremental", "recompute"):
-        st = {}
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            t0 = time.perf_counter()
-            cnt = kcore(pe, k=2, max_rounds=40, engine=eng, stats=st).count()
-        out["path_peel"][eng] = {
-            "sec": round(time.perf_counter() - t0, 2),
-            "rounds": st["rounds"],
-            "alive": int(cnt),
-        }
-        print(f"  path{pn} {eng}: {out['path_peel'][eng]}", flush=True)
-    return out
-
-
-def render_kcore_engines_md(res: dict) -> list[str]:
-    r = res["kcore_engines"]
-    lines = [
-        "## 20b. k-core engine size sweep (generated)",
-        "",
-        f"Uniform random graphs, mean degree {r['mean_degree']}, "
-        f"k={r['k']} (converged",
-        "peel, identical cores asserted), plus a 50k-node path at k=2",
-        "capped at 40 rounds (exhausts — the deep-peel shape).  Both",
-        "engines run the §20 fresh_local_checkpoint loop discipline.",
-        "",
-        "| nodes (edges) | decremental rounds/sec | recompute rounds/sec | ratio |",
-        "|---|---|---|---|",
-    ]
-    for n, row in sorted(r["sizes"].items(), key=lambda kv: int(kv[0])):
-        d, c = row["decremental"], row["recompute"]
-        ratio = c["sec"] / d["sec"] if d["sec"] else float("inf")
-        lines.append(
-            f"| {n} ({row['edges']}) | {d['rounds']} / {d['sec']} s"
-            f" | {c['rounds']} / {c['sec']} s | {ratio:.2f}x |"
-        )
-    p = r["path_peel"]
-    if p:
-        d, c = p["decremental"], p["recompute"]
-        ratio = c["sec"] / d["sec"] if d["sec"] else float("inf")
-        lines.append(
-            f"| path 50k, k=2, 40 rounds | {d['rounds']} / {d['sec']} s"
-            f" | {c['rounds']} / {c['sec']} s | {ratio:.2f}x |"
-        )
-    lines += [
-        "",
-        "- The decremental engine touches only edges incident to each",
-        "  round's doomed frontier (O(E) total across rounds) and detects",
-        "  the fixpoint the round the frontier empties (2 rounds here vs",
-        "  the recompute engine's 4 with its throttled count check) —",
-        "  1.2-1.8x on graphs that barely peel (the k=3 core keeps ~99.7%",
-        "  of a mean-degree-10 graph), where recompute's full-edge rescan",
-        "  is charged every round for near-zero deletions.  On the path",
-        "  fixture BOTH engines are bound by 40 driver-synchronized",
-        "  rounds at trivial data sizes, which caps the ratio; the",
-        "  declared-corpus win (2.17 -> 0.96 s, §20) sits between the",
-        "  two regimes.",
-        "",
-    ]
-    return lines
-
-
-def render_incremental_md(res: dict) -> list[str]:
-    r = res["incremental_default"]
-    lines = [
-        "## 17. incremental_components default strategy (merge-chain worst case)",
-        "",
-        f"c star components of {r['members_per_comp']} members (prev labels"
-        " as star edges) + c-1",
-        "new pairs that chain EVERY adjacent component — the incremental",
-        "topology a caller cannot rule out.  Labels are asserted identical",
-        "between engines at the smallest c.",
-        "",
-        "| c components (star edges) | minlabel rounds/sec"
-        " | two-phase rounds/sec |",
-        "|---|---|---|",
-    ]
-    for c, row in sorted(r["sizes"].items(), key=lambda kv: int(kv[0])):
-        def fmt(k):
-            if k not in row:
-                return "— (diameter-bound)"
-            return f"{row[k]['rounds']} / {row[k]['sec']} s"
-        lines.append(
-            f"| {c} ({row['star_edges']}) | {fmt('minlabel')}"
-            f" | {fmt('twophase')} |"
-        )
-    lines += [
-        "",
-        "- min-label propagation pays ~c rounds on the merged chain (each",
-        "  a driver-synchronized job) even though every old component was",
-        "  1 hop from its label — run only at the smallest c because the",
-        "  round count is the component count itself.",
-        "- the two-phase contraction closes the same merge in O(log²)",
-        "  rounds at every size, which is why it is the",
-        "  incremental_components DEFAULT (r9); pass strategy='minlabel'",
-        "  only when new pairs provably merge few components.",
-        "",
-    ]
-    return lines
-
-
-def render_ccvariants_md(res: dict) -> list[str]:
-    r = res["cc_variants"]
-    lines = [
-        "## 16. Connected-components strategies on the diameter worst case",
-        "",
-        "Pure path graph of n edges — diameter == n, the iterative-graph",
-        "worst case.  All three variants",
-        "produce bit-identical labels; rounds is the driver-synchronized",
-        "job count, the real scale limit for iterative graph work.",
-        "",
-        "| n edges | plain rounds/sec | pointer-jump rounds/sec"
-        " | two-phase rounds/sec |",
-        "|---|---|---|---|",
-    ]
-    for n, row in sorted(r["sizes"].items(), key=lambda kv: int(kv[0])):
-        def fmt(k):
-            if k not in row:
-                return "— (diameter-bound)"
-            return f"{row[k]['rounds']} / {row[k]['sec']} s"
-        lines.append(
-            f"| {n} | {fmt('plain')} | {fmt('shortcut')} | {fmt('twophase')} |"
-        )
-    lines += [
-        "",
-        "- Plain propagation is only run at the smallest n: its round",
-        "  count equals the longest hub-free chain segment, each round a",
-        "  full driver-synchronized job — the strategy does not survive",
-        "  diameter growth regardless of cluster size.",
-        "- Pointer jumping and the two-phase contraction stay at",
-        "  logarithmic round counts as the chain grows 50x; two-phase",
-        "  additionally contracts the hub's neighborhood instead of",
-        "  re-shuffling it every round (the dedup default remains plain",
-        "  propagation — near-clique graphs converge in 2-3 rounds and",
-        "  pay no extra join).",
-        "",
-    ]
-    return lines
-
-
 def render_basketcap_md(res: dict) -> list[str]:
     r = res["basket_cap"]
     lines = [
@@ -2673,10 +2257,6 @@ def main() -> None:
     only_composed = "--only-composed" in sys.argv
     only_geo = "--only-geo" in sys.argv
     only_basketcap = "--only-basketcap" in sys.argv
-    only_ccvariants = "--only-ccvariants" in sys.argv
-    only_incremental = "--only-incremental" in sys.argv
-    only_kcorebcast = "--only-kcorebcast" in sys.argv
-    only_kcoreeng = "--only-kcoreeng" in sys.argv
     only_r11 = "--only-r11" in sys.argv
     os.makedirs(SCRATCH, exist_ok=True)
     from lvm_datapipe_spark.session import get_spark
@@ -2694,8 +2274,7 @@ def main() -> None:
 
     if (only_txlog or only_skyline or only_concurrency or only_linededup
             or only_winnowing or only_lshauto or only_composed or only_geo
-            or only_basketcap or only_ccvariants or only_incremental
-            or only_kcorebcast or only_kcoreeng or only_r11):
+            or only_basketcap or only_r11):
         # incremental mode: merge the new section into the committed
         # results instead of re-running the (long) full matrix
         with open(os.path.join(REPO, "SCALE_BENCH.json")) as f:
@@ -2720,53 +2299,6 @@ def main() -> None:
             render_r11_kernels_md(res),
         )
         print("wrote SCALE_BENCH.json + SCALE_BENCH.md (r11 kernels)", flush=True)
-        shutil.rmtree("/dev/shm/spark-scale-local", ignore_errors=True)
-        return
-    if only_kcoreeng:
-        print("== kcore engines ==", flush=True)
-        res["kcore_engines"] = bench_kcore_engines(spark, quick)
-        with open(os.path.join(REPO, "SCALE_BENCH.json"), "w") as f:
-            json.dump(res, f, indent=2, sort_keys=True)
-        _update_md_section(
-            "## 20b. k-core engine size sweep",
-            render_kcore_engines_md(res),
-        )
-        print("wrote SCALE_BENCH.json + SCALE_BENCH.md (kcore engines)", flush=True)
-        shutil.rmtree("/dev/shm/spark-scale-local", ignore_errors=True)
-        return
-    if only_kcorebcast:
-        print("== kcore broadcast gate ==", flush=True)
-        res["kcore_broadcast"] = bench_kcore_broadcast(spark, quick)
-        with open(os.path.join(REPO, "SCALE_BENCH.json"), "w") as f:
-            json.dump(res, f, indent=2, sort_keys=True)
-        _update_md_section(
-            "## 18. k-core alive-set broadcast gate",
-            render_kcore_broadcast_md(res),
-        )
-        print("wrote SCALE_BENCH.json + SCALE_BENCH.md (kcore bcast)", flush=True)
-        shutil.rmtree("/dev/shm/spark-scale-local", ignore_errors=True)
-        return
-    if only_incremental:
-        print("== incremental default ==", flush=True)
-        res["incremental_default"] = bench_incremental_default(spark, quick)
-        with open(os.path.join(REPO, "SCALE_BENCH.json"), "w") as f:
-            json.dump(res, f, indent=2, sort_keys=True)
-        _update_md_section(
-            "## 17. incremental_components default strategy",
-            render_incremental_md(res),
-        )
-        print("wrote SCALE_BENCH.json + SCALE_BENCH.md (incremental)", flush=True)
-        shutil.rmtree("/dev/shm/spark-scale-local", ignore_errors=True)
-        return
-    if only_ccvariants:
-        print("== CC variants ==", flush=True)
-        res["cc_variants"] = bench_cc_variants(spark, quick)
-        with open(os.path.join(REPO, "SCALE_BENCH.json"), "w") as f:
-            json.dump(res, f, indent=2, sort_keys=True)
-        _update_md_section(
-            "## 16. Connected-components strategies", render_ccvariants_md(res)
-        )
-        print("wrote SCALE_BENCH.json + SCALE_BENCH.md (cc variants)", flush=True)
         shutil.rmtree("/dev/shm/spark-scale-local", ignore_errors=True)
         return
     if only_basketcap:
