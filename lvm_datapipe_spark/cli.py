@@ -12,6 +12,13 @@ command-line tool over Parquet snapshots:
 Each stage is idempotent and resumable: `score` re-runs only rows whose
 score column is null (plans.pipeline.run_stage), exactly the reference's
 done-marker semantics without marker files.
+
+Each stage prints one JSON status line.  The video-pipeline stages launch
+only the jobs their output needs: `scenecut`, `score` and `export-flat`
+take the row counts they print (`clips`, `scored`/`total`, `rows`) from an
+Observation on their own write (plans.pipeline.observed_stage) instead of
+re-reading the output, and `analyze` computes its stats and histogram in
+one aggregate.
 """
 
 from __future__ import annotations
@@ -31,8 +38,7 @@ from lvm_datapipe_spark.sources.video import scan_video_dir
 
 def _cmd_scenecut(spark, args) -> None:
     videos = scan_video_dir(spark, args.video_dir)
-    clips = scenecut.scene_cut(videos, threshold=args.threshold)
-    base = media.probe_videos(clips, content_col="clip_content").select(
+    clips = scenecut.scene_cut(videos, threshold=args.threshold).select(
         "video_id",
         "clip_id",
         "clip_index",
@@ -42,13 +48,13 @@ def _cmd_scenecut(spark, args) -> None:
         "end_s",
         "clip_duration",
         F.col("clip_content").alias("content"),
-        F.col("probe.height").alias("height"),
-        F.col("probe.width").alias("width"),
-        F.col("probe.n_frames").alias("n_frames"),
+        "height",
+        "width",
+        "n_frames",
     )
-    pipeline.write_snapshot(base, args.out)
-    n = spark.read.parquet(args.out).count()
-    print(json.dumps({"stage": "scenecut", "clips": n, "out": args.out}))
+    staged, obs = pipeline.observed_stage(clips, "scenecut")
+    pipeline.write_snapshot(staged, args.out)
+    print(json.dumps({"stage": "scenecut", "clips": obs.get["n_rows"], "out": args.out}))
 
 
 def _cmd_score(spark, args) -> None:
@@ -62,13 +68,15 @@ def _cmd_score(spark, args) -> None:
         return media.apply_scorer(sampled, args.scorer).drop("frames")
 
     out = pipeline.run_stage(snap, scorer, score_col)
-    pipeline.write_snapshot(out, args.out)
-    done = spark.read.parquet(args.out)
-    n_done = done.filter(F.col(score_col).isNotNull()).count()
+    staged, obs = pipeline.observed_stage(
+        out, "score", F.count(score_col).alias("scored")
+    )
+    pipeline.write_snapshot(staged, args.out)
+    counts = obs.get
     print(
         json.dumps(
             {"stage": "score", "scorer": args.scorer, "column": score_col,
-             "scored": n_done, "total": done.count(), "out": args.out}
+             "scored": counts["scored"], "total": counts["n_rows"], "out": args.out}
         )
     )
 
@@ -77,10 +85,9 @@ def _cmd_analyze(spark, args) -> None:
     from lvm_datapipe_spark.operators import analyze
 
     snap = pipeline.read_snapshot(spark, args.snapshot)
-    stats = analyze.duration_stats(snap).first().asDict()
-    hist = {
-        r.label: r.n for r in analyze.duration_histogram(snap).collect()
-    }
+    stats = analyze.duration_summary(snap).first().asDict()
+    counts = {label: stats.pop(label) for label in analyze.DURATION_LABELS}
+    hist = {label: n for label, n in counts.items() if n}
     print(json.dumps({"stage": "analyze", "stats": stats, "histogram": hist}))
 
 
@@ -241,9 +248,9 @@ def _cmd_export_flat(spark, args) -> None:
 
     # snapshots store the flat working columns; publish the MMTrail flat form
     snap = pipeline.read_snapshot(spark, args.snapshot)
-    flat = flatten_clips(nest_clips(snap))
-    flat.write.mode("overwrite").json(args.out)
-    print(json.dumps({"stage": "export-flat", "rows": spark.read.json(args.out).count(), "out": args.out}))
+    staged, obs = pipeline.observed_stage(flatten_clips(nest_clips(snap)), "export-flat")
+    staged.write.mode("overwrite").json(args.out)
+    print(json.dumps({"stage": "export-flat", "rows": obs.get["n_rows"], "out": args.out}))
 
 
 def _cmd_bpe(spark, args) -> None:

@@ -75,6 +75,19 @@ def decode(data: bytes) -> FakeVideo:
     return FakeVideo(int(h), int(w), float(fps), body.reshape(n, h, w).copy())
 
 
+def cut(data: bytes, start: int, end: int) -> bytes:
+    """Frames ``[start, end)`` (``0 <= start <= end <= n``) as their own
+    FVID payload, sliced out of the frame bytes without decoding —
+    byte-identical to ``encode`` of the decoded frame slice (the in-engine
+    clip split)."""
+    magic, h, w, fps, _ = _HEADER.unpack_from(data, 0)
+    if magic != MAGIC:
+        raise ValueError("not a FVID payload")
+    frame_sz = h * w
+    body = data[_HEADER.size + start * frame_sz : _HEADER.size + end * frame_sz]
+    return _HEADER.pack(MAGIC, h, w, fps, end - start) + bytes(body)
+
+
 def decode_frames(data: bytes, indices: list[int]) -> list[bytes]:
     """Random access to specific frames without materializing all of them —
     the cv2 CAP_PROP_POS_FRAMES-seek analog (data_schema/macvidataset.py:29-42).

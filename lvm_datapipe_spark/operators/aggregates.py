@@ -114,13 +114,19 @@ def find_breakpoint(
 def corpus_stats(df: DataFrame, col: str) -> DataFrame:
     """A5 — corpus totals (``analyze/analyze_vids.py:42``:
     ``sum(durations), mean(durations)``)."""
-    return df.agg(
+    return df.agg(*corpus_stats_columns(col))
+
+
+def corpus_stats_columns(col: str) -> list[Column]:
+    """The aggregate columns of :func:`corpus_stats` (total, mean, min, max,
+    n), for callers that fold them into a wider aggregate."""
+    return [
         decimal_sum(col).alias("total"),
         decimal_avg(col).alias("mean"),
         F.min(col).alias("min"),
         F.max(col).alias("max"),
         F.count(F.lit(1)).alias("n"),
-    )
+    ]
 
 
 def histogram(df: DataFrame, col: str, bins: list[float], bucket_col: str = "bucket") -> DataFrame:
@@ -133,18 +139,24 @@ def histogram(df: DataFrame, col: str, bins: list[float], bucket_col: str = "buc
     output order/naming is deterministic.  Buckets follow numpy semantics:
     left-closed, right-open, last bin unbounded.
     """
+    return (
+        df.withColumn(bucket_col, bucket_index(col, bins))
+        .filter(F.col(bucket_col).isNotNull())
+        .groupBy(bucket_col)
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def bucket_index(col: str, bins: list[float]) -> Column:
+    """The bucket ordinal of :func:`histogram` as a CASE ladder: null when
+    the value is null or below ``bins[0]``."""
     expr = None
     for i in range(len(bins)):
         lo = bins[i]
         hi = bins[i + 1] if i + 1 < len(bins) else None
         cond = F.col(col) >= lo if hi is None else (F.col(col) >= lo) & (F.col(col) < hi)
         expr = F.when(cond, i) if expr is None else expr.when(cond, i)
-    return (
-        df.withColumn(bucket_col, expr)
-        .filter(F.col(bucket_col).isNotNull())
-        .groupBy(bucket_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return expr
 
 
 def value_counts(df: DataFrame, col: str) -> DataFrame:

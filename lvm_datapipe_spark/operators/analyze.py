@@ -10,7 +10,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from lvm_datapipe_spark.operators.aggregates import corpus_stats, histogram, value_counts
+from lvm_datapipe_spark.operators.aggregates import (
+    bucket_index,
+    corpus_stats,
+    corpus_stats_columns,
+    histogram,
+    value_counts,
+)
 
 # analyze_vids.py:43 — np.histogram bins (last bin unbounded)
 DURATION_BINS = [0.0, 5.0, 10.0, 60.0, 300.0, 600.0, 1800.0, 3600.0]
@@ -42,6 +48,22 @@ def duration_histogram(clips: DataFrame, col: str = "clip_duration") -> DataFram
             F.when(F.col("bucket") == i, name) if label is None else label.when(F.col("bucket") == i, name)
         )
     return out.withColumn("label", label)
+
+
+def duration_summary(clips: DataFrame, col: str = "clip_duration") -> DataFrame:
+    """:func:`duration_stats` and the :func:`duration_histogram` counts in ONE
+    global aggregate (one scan, one single-row result): the stats columns
+    (total, mean, min, max, n) plus one count column per
+    ``DURATION_LABELS`` bucket, 0 where the histogram has no row.  A row
+    whose bucket is null (null or negative duration) counts in ``n`` but in
+    no bucket, exactly as in the two separate aggregates."""
+    from pyspark.sql import functions as F
+
+    bucket = bucket_index(col, DURATION_BINS)
+    return clips.agg(
+        *corpus_stats_columns(col),
+        *[F.count(F.when(bucket == i, 1)).alias(name) for i, name in enumerate(DURATION_LABELS)],
+    )
 
 
 def category_counts(videos: DataFrame, col: str = "category") -> DataFrame:

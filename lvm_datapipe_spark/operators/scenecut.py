@@ -2,17 +2,22 @@
 
 Reference shape (utils/scenecut.py:88-127): per video — decode, detect scene
 boundaries (PySceneDetect ContentDetector), split with ffmpeg, emit one
-nested-JSON record per clip.  Spark shape (SURVEY.md §3 EP1):
+nested-JSON record per clip.  Spark shape (``scene_cut``), one narrow pass:
 
-    binaryFile scan → mapInPandas(detect_scenes) → explode(scenes)
-    → withColumn(clip metadata exprs) → write parquet
+    binaryFile scan → Arrow UDF per video (detect → cut → probe each clip)
+    → posexplode(clips) → clip id exprs → write parquet
+
+Each video's bytes cross to Python once and no row is shuffled: the UDF
+returns the video's whole clip array, and ``posexplode`` numbers the clips
+in detection order.
 
 The detector here is the deterministic content-delta analog of
 ContentDetector (threshold on mean abs frame delta; reference threshold 30.0,
 scene_cut.py:191) running on FVID payloads; a real adapter would call
-PySceneDetect behind the same mapInPandas signature.  The physical ffmpeg
-split (M2) is modeled as a byte-range materialization UDF — see
-``split_clip_bytes`` — since clips of an FVID are themselves valid FVID.
+PySceneDetect behind the same UDF signature.  The physical ffmpeg split (M2)
+is modeled in-engine as a byte-range cut (``fakevideo.cut``), since clips of
+an FVID are themselves valid FVID; ``ffmpeg_split_clips`` is the real
+subprocess adapter.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ from pyspark.sql.functions import pandas_udf
 
 from lvm_datapipe_spark import fakevideo
 from lvm_datapipe_spark.functions.strings import clip_id, file_stem
+from lvm_datapipe_spark.operators import media
 
 DEFAULT_THRESHOLD = 30.0  # scene_cut.py:191 / utils/scenecut.py:96
 
@@ -141,72 +147,39 @@ def detect_scenes(
     return videos.withColumn(out_col, _detect(F.col(content_col)))
 
 
-def explode_scenes_to_clips(
-    videos_with_scenes: DataFrame,
-    path_col: str = "path",
-    scenes_col: str = "scenes",
-) -> DataFrame:
-    """Explode scenes → one clip row per scene with the reference's clip
-    metadata: video_id from the filename, clip index = per-video row_number
-    ordered by start_frame (scene_cut.py:82 loop counter), clip_id =
-    ``f'{video_id}_{idx:07d}'`` (C1), duration in seconds (C8).
-    """
-    w = Window.partitionBy("video_id").orderBy(F.col("scene.start_frame"))
-    return (
-        videos_with_scenes.filter(F.col(scenes_col).isNotNull())
-        .select(
-            file_stem(F.col(path_col)).alias("video_id"),
-            F.col(path_col).alias("video_path"),
-            F.explode(F.col(scenes_col)).alias("scene"),
-        )
-        .withColumn("clip_index", F.row_number().over(w) - 1)
-        .select(
-            "video_id",
-            "video_path",
-            clip_id(F.col("video_id"), F.col("clip_index")).alias("clip_id"),
-            F.col("clip_index"),
-            F.col("scene.start_frame").alias("start_frame"),
-            F.col("scene.end_frame").alias("end_frame"),
-            F.col("scene.start_s").alias("start_s"),
-            F.col("scene.end_s").alias("end_s"),
-            (F.col("scene.end_s") - F.col("scene.start_s")).alias("clip_duration"),
-        )
+CLIPS_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            *SCENES_TYPE.elementType.fields,
+            T.StructField("clip_content", T.BinaryType()),
+            T.StructField("height", T.IntegerType()),
+            T.StructField("width", T.IntegerType()),
+            T.StructField("n_frames", T.IntegerType()),
+        ]
     )
+)
 
 
-CLIP_BYTES_TYPE = T.BinaryType()
-
-
-def split_clip_bytes(
-    clips: DataFrame, content_col: str = "content", out_col: str = "clip_content"
-) -> DataFrame:
-    """M2 — physical clip split.  The reference shells out to ffmpeg per
-    scene (split_video_ffmpeg, utils/scenecut.py:120-121); here the split is
-    a byte-range re-encode of the FVID payload (a real adapter would invoke
-    ffmpeg in a foreachPartition with the same columns).  Null content or
-    bounds → null clip (F4)."""
-
-    @pandas_udf(CLIP_BYTES_TYPE)
-    def _split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        for pdf in batches:
-            out = []
-            for data, s, e in zip(pdf["content"], pdf["start_frame"], pdf["end_frame"]):
-                try:
-                    v = fakevideo.decode(data)
-                    clip = fakevideo.FakeVideo(
-                        v.height, v.width, v.fps, v.frames[int(s) : int(e)]
-                    )
-                    out.append(fakevideo.encode(clip))
-                except Exception:  # noqa: BLE001
-                    out.append(None)
-            yield pd.Series(out, dtype=object)
-
-    packed = F.struct(
-        F.col(content_col).alias("content"),
-        F.col("start_frame").alias("start_frame"),
-        F.col("end_frame").alias("end_frame"),
-    )
-    return clips.withColumn(out_col, _split(packed))
+def _cut_one(data: bytes, threshold: float) -> list[tuple] | None:
+    """Per-video body of :func:`scene_cut`: detect the scenes, then cut each
+    scene's clip out of the payload (M2 — the FVID byte-range analog of the
+    reference's per-scene ffmpeg split, utils/scenecut.py:120-121) and probe
+    it.  None when detection fails (F4: the video gives no clips); a real
+    container whose scenes PySceneDetect found gets null clip payloads and
+    probes, since only FVID payloads split in-engine."""
+    bounds = _detect_one(data, threshold)
+    if bounds is None:
+        return None
+    splits = fakevideo.is_fvid(data)
+    out = []
+    for s, e, start_s, end_s in bounds:
+        clip = fakevideo.cut(data, s, e) if splits else None
+        info = media._probe(clip) or {}
+        out.append(
+            (s, e, start_s, end_s, clip,
+             info.get("height"), info.get("width"), info.get("n_frames"))
+        )
+    return out
 
 
 def have_ffmpeg() -> bool:
@@ -255,7 +228,7 @@ def ffmpeg_split_clips(clips: DataFrame, out_dir: str) -> None:
     files with ffmpeg, one subprocess per clip row, fanned out with
     ``foreachPartition`` (the executors shell out in parallel; no data moves
     through the driver).  Requires the ffmpeg binary on the workers
-    (:func:`have_ffmpeg`); ``split_clip_bytes`` remains the in-engine
+    (:func:`have_ffmpeg`); :func:`scene_cut` remains the in-engine
     byte-range splitter for FVID payloads."""
     import subprocess
 
@@ -275,20 +248,43 @@ def scene_cut(
     path_col: str = "path",
     content_col: str = "content",
     threshold: float = DEFAULT_THRESHOLD,
-    materialize_clips: bool = True,
 ) -> DataFrame:
-    """EP1 end-to-end: videos(path, content) → clips table with per-clip
-    metadata (+ clip payloads when ``materialize_clips``).  The reference's
-    joblib chunking / breakpoint-resume scaffolding (scene_cut.py:226-263)
-    is replaced by Spark task parallelism + the generic resume anti-join."""
-    with_scenes = detect_scenes(videos, content_col, threshold)
-    clips = explode_scenes_to_clips(with_scenes, path_col)
-    if materialize_clips:
-        # join the raw payload (NOT with_scenes — that would run the
-        # detector a second time down the second lineage)
-        payload = videos.select(F.col(path_col).alias("video_path"), F.col(content_col))
-        clips = split_clip_bytes(clips.join(payload, "video_path"))
-    return clips
+    """EP1 end-to-end: videos(path, content) → one row per clip with the
+    reference's clip metadata and the probed clip payload:
+
+    video_id (filename stem), video_path, clip_id (``f'{video_id}_{idx:07d}'``,
+    C1), clip_index (the scene's position in detection order, which is
+    ascending start frame — the scene_cut.py:82 loop counter), start_frame,
+    end_frame, start_s, end_s, clip_duration (C8), clip_content (the clip's
+    own FVID payload), height, width, n_frames (probed from clip_content).
+
+    One pass per video: a single Arrow UDF receives each video's bytes once
+    and returns its clip array (:func:`_cut_one`), and ``posexplode`` numbers
+    the clips.  The plan is narrow — no window, no join, no second scan, no
+    shuffle — so Python receives the corpus bytes once.  The whole-video
+    ``content`` is not carried onto the clip rows.  A video that fails to
+    decode gives no clips.  The reference's joblib chunking /
+    breakpoint-resume scaffolding (scene_cut.py:226-263) is replaced by Spark
+    task parallelism + the generic resume anti-join."""
+
+    @pandas_udf(CLIPS_TYPE)
+    def _cut(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for content in batches:
+            yield pd.Series([_cut_one(data, threshold) for data in content], dtype=object)
+
+    return videos.select(
+        file_stem(F.col(path_col)).alias("video_id"),
+        F.col(path_col).alias("video_path"),
+        F.posexplode(_cut(F.col(content_col))).alias("clip_index", "clip"),
+    ).select(
+        "video_id",
+        "video_path",
+        clip_id(F.col("video_id"), F.col("clip_index")).alias("clip_id"),
+        "clip_index",
+        *[F.col(f"clip.{c}").alias(c) for c in ("start_frame", "end_frame", "start_s", "end_s")],
+        (F.col("clip.end_s") - F.col("clip.start_s")).alias("clip_duration"),
+        *[F.col(f"clip.{c}").alias(c) for c in ("clip_content", "height", "width", "n_frames")],
+    )
 
 
 def boundary_f1(

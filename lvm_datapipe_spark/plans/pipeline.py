@@ -11,7 +11,9 @@ and writes per-clip files (SURVEY.md §3).  Here a stage is::
 Resume is the generic left-anti/null-partition pattern (F2) — no marker
 files; the snapshot's own null columns say what remains.  Failures null the
 row (F4) and remain eligible for the next run.  The A8 count-consistency
-check guards each snapshot transition (check_secne.py:12-27).
+check (check_secne.py:12-27) needs each stage's row count: the CLI stages
+take it from an Observation on the stage's own write (``observed_stage``);
+``assert_counts_consistent`` re-counts as a separate job.
 """
 
 from __future__ import annotations
@@ -115,7 +117,9 @@ def observed_stage(
         n = obs.get["n_rows"]      # no extra job ran
 
     Extra ``metrics`` columns (aggregate expressions) ride along with the
-    default ``n_rows`` count."""
+    default ``n_rows`` count.  A write that sees no rows still reports
+    (``n_rows`` 0), so ``observation.get`` does not block.  The CLI's
+    scenecut, score and export-flat stages print their counts this way."""
     from pyspark.sql import Observation
 
     obs = Observation(name)

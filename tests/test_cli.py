@@ -5,6 +5,8 @@ export), including resume on re-run."""
 from __future__ import annotations
 
 import json
+import threading
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,6 +67,138 @@ def test_cli_full_pipeline(spark, work, capsys):
     flat = spark.read.json(flat_dir)
     assert "image_quality" in flat.columns  # published MMTrail name
     assert flat.filter(F.col("image_quality").isNotNull()).count() == len(after)
+
+
+def _last_json(capsys) -> dict:
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def _jobs_of(spark, group: str, argv: list[str]) -> int:
+    """Run one CLI stage under its own job group; the number of Spark jobs
+    it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        assert main(argv, spark=spark) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cli_stage_job_counts(spark, work, capsys):
+    """Each video-pipeline stage launches only the jobs its output needs:
+    scenecut is one narrow write; score and export-flat are their write
+    plus the snapshot read's footer job, with the printed counts taken from
+    an Observation on the write; analyze is one aggregate.  Every printed
+    count equals an independent read of the stage's output."""
+    from lvm_datapipe_spark.operators import analyze
+
+    tag = uuid.uuid4().hex[:8]
+    videos = str(work / "videos")
+    s0, s1, s2, s3 = (str(work / f"jobs_s{i}") for i in range(4))
+    flat = str(work / "jobs_flat")
+    stages = [
+        ("scenecut", 1, ["scenecut", "--video-dir", videos, "--out", s0]),
+        ("score_motion", 2, ["score", "--snapshot", s0, "--out", s1, "--scorer", "motion"]),
+        ("score_ocr", 2, ["score", "--snapshot", s1, "--out", s2, "--scorer", "ocr"]),
+        ("resume_motion", 2, ["score", "--snapshot", s2, "--out", s3, "--scorer", "motion"]),
+        ("analyze", 3, ["analyze", "--snapshot", s3]),
+        ("export_flat", 2, ["export-flat", "--snapshot", s3, "--out", flat]),
+    ]
+    jobs, outs = {}, {}
+    for name, _, argv in stages:
+        jobs[name] = _jobs_of(spark, f"{name}-{tag}", argv)
+        outs[name] = _last_json(capsys)
+    assert jobs == {name: n for name, n, _ in stages}
+
+    n_clips = spark.read.parquet(s0).count()
+    assert outs["scenecut"]["clips"] == n_clips > 0
+    for name, snap in [("score_motion", s1), ("score_ocr", s2), ("resume_motion", s3)]:
+        done = spark.read.parquet(snap)
+        col = outs[name]["column"]
+        assert outs[name]["total"] == done.count() == n_clips
+        assert outs[name]["scored"] == done.filter(F.col(col).isNotNull()).count()
+    snap = spark.read.parquet(s3)
+    assert outs["analyze"]["stats"] == analyze.duration_stats(snap).first().asDict()
+    assert outs["analyze"]["histogram"] == {
+        r.label: r.n for r in analyze.duration_histogram(snap).collect()
+    }
+    assert outs["export_flat"]["rows"] == spark.read.json(flat).count() == n_clips
+
+
+def test_cli_score_counts_failed_rows(spark, work, capsys):
+    """A row whose scorer fails keeps a null score: the observed ``scored``
+    count leaves it out, ``total`` keeps it."""
+    good = str(work / "fail_s0")
+    assert main(["scenecut", "--video-dir", str(work / "videos"), "--out", good],
+                spark=spark) == 0
+    capsys.readouterr()
+    snap = spark.read.parquet(good)
+    junk = snap.limit(1).withColumn("clip_id", F.lit("junk_0000000")).withColumn(
+        "content", F.lit(b"JUNK")
+    )
+    mixed = str(work / "fail_s1")
+    snap.unionByName(junk).write.mode("overwrite").parquet(mixed)
+    out_path = str(work / "fail_s2")
+    assert main(["score", "--snapshot", mixed, "--out", out_path, "--scorer", "motion"],
+                spark=spark) == 0
+    out = _last_json(capsys)
+    done = spark.read.parquet(out_path)
+    assert out["total"] == done.count() == snap.count() + 1
+    assert out["scored"] == done.filter(F.col("of_score").isNotNull()).count()
+    assert out["scored"] == out["total"] - 1
+
+
+def test_cli_analyze_matches_separate_aggregates(spark, tmp_path, capsys):
+    """analyze's one aggregate prints exactly what duration_stats and
+    duration_histogram give: the exact decimal total and mean, and rows
+    whose bucket is null (null or negative duration) in the stats but in
+    no histogram bucket."""
+    from lvm_datapipe_spark.operators import analyze
+
+    durations = [0.1] * 7 + [0.2, 4.99, 5.0, 9.99, 59.9, 61.0, 3600.5, -1.0, None]
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame(
+        [(f"c{i}", d) for i, d in enumerate(durations)], "clip_id string, clip_duration double"
+    ).write.parquet(snap)
+    assert main(["analyze", "--snapshot", snap], spark=spark) == 0
+    out = _last_json(capsys)
+    df = spark.read.parquet(snap)
+    assert out["stats"] == analyze.duration_stats(df).first().asDict()
+    assert out["histogram"] == {
+        r.label: r.n for r in analyze.duration_histogram(df).collect()
+    }
+    assert out["stats"]["n"] == len(durations)
+    assert sum(out["histogram"].values()) == len(durations) - 2
+
+
+def test_cli_scenecut_no_decodable_video(spark, tmp_path, capsys):
+    """A directory where no video decodes gives an empty snapshot and
+    ``clips: 0``; reading the Observation of a write that saw no rows must
+    not block."""
+    videos = tmp_path / "junk"
+    videos.mkdir()
+    (videos / "a.fvid").write_bytes(b"JUNKJUNKJUNKJUNKJUNKJUNK")
+    (videos / "b.fvid").write_bytes(fakevideo.encode(fakevideo.generate("b"))[:-100])
+    out_dir = str(tmp_path / "s0")
+    result = {}
+
+    def run():
+        try:
+            result["rc"] = main(["scenecut", "--video-dir", str(videos), "--out", out_dir],
+                                spark=spark)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            result["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "scenecut blocked reading its Observation"
+    assert "error" not in result, result.get("error")
+    assert result["rc"] == 0
+    out = _last_json(capsys)
+    assert out == {"stage": "scenecut", "clips": 0, "out": out_dir}
+    assert spark.read.parquet(out_dir).count() == 0
 
 
 def test_cli_curate_matches_query_semantics(spark, work, capsys):

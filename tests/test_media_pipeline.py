@@ -105,6 +105,84 @@ def test_scene_cut_null_on_corrupt(spark):
     assert out.filter(F.col("scenes").isNotNull()).count() == 0
 
 
+SCENE_CUT_SCHEMA = [
+    ("video_id", "string", True),
+    ("video_path", "string", True),
+    ("clip_id", "string", False),
+    ("clip_index", "int", False),
+    ("start_frame", "int", True),
+    ("end_frame", "int", True),
+    ("start_s", "double", True),
+    ("end_s", "double", True),
+    ("clip_duration", "double", True),
+    ("clip_content", "binary", True),
+    ("height", "int", True),
+    ("width", "int", True),
+    ("n_frames", "int", True),
+]
+
+
+def test_scene_cut_matches_reference_cut(spark, tmp_path):
+    """The one-pass cut gives exactly the rows of a driver-side reference —
+    detect_scene_bounds per decoded video, clips numbered in start-frame
+    order, each clip re-encoded from its frame slice and probed — over a
+    corpus with a truncated .fvid (no clips), a single-scene video and
+    multi-scene videos.  Its plan reads the corpus once, with no exchange,
+    window or join."""
+    d = tmp_path / "cut_corpus"
+    d.mkdir()
+    scenes = {"single": 1, "multi_a": 4, "multi_b": 6}
+    for name, n in scenes.items():
+        (d / f"{name}.fvid").write_bytes(fakevideo.encode(fakevideo.generate(name, n)))
+    truncated = fakevideo.encode(fakevideo.generate("truncated", 3))[:-100]
+    (d / "truncated.fvid").write_bytes(truncated)
+    videos = scan_video_dir(spark, str(d))
+
+    expected = []
+    for r in videos.collect():
+        try:
+            v = fakevideo.decode(bytes(r.content))
+        except ValueError:
+            continue
+        stem = r.path.rsplit("/", 1)[-1][: -len(".fvid")]
+        bounds = scenecut.detect_scene_bounds(v.frames, v.fps, scenecut.DEFAULT_THRESHOLD)
+        for i, (s, e, start_s, end_s) in enumerate(bounds):
+            clip = fakevideo.encode(fakevideo.FakeVideo(v.height, v.width, v.fps, v.frames[s:e]))
+            expected.append((stem, r.path, f"{stem}_{i:07d}", i, s, e, start_s, end_s,
+                             end_s - start_s, clip, v.height, v.width, e - s))
+    per_video = {}
+    for row in expected:
+        per_video[row[0]] = per_video.get(row[0], 0) + 1
+    # the corpus is what the docstring says (adjacent generated scenes may
+    # merge when their brightness levels sit within the threshold)
+    assert set(per_video) == set(scenes) and per_video["single"] == 1
+    assert per_video["multi_a"] > 1 and per_video["multi_b"] > 1
+
+    got = scenecut.scene_cut(videos)
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in got.schema.fields] == SCENE_CUT_SCHEMA
+    rows = sorted(
+        (tuple(bytes(x) if isinstance(x, bytearray) else x for x in r) for r in got.collect()),
+        key=lambda t: (t[0], t[3]),
+    )
+    assert rows == sorted(expected, key=lambda t: (t[0], t[3]))
+
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1 and plan.count("ArrowEvalPython") == 1
+    for op in ("Exchange", "Window", "Join"):
+        assert op not in plan, plan
+
+
+def test_fakevideo_cut_equals_encoded_frame_slice():
+    v = fakevideo.generate("cut_me", n_scenes=3)
+    data = fakevideo.encode(v)
+    for s, e in [(0, v.n_frames), (0, 1), (5, 17), (v.n_frames - 1, v.n_frames), (4, 4)]:
+        ref = fakevideo.encode(fakevideo.FakeVideo(v.height, v.width, v.fps, v.frames[s:e]))
+        assert fakevideo.cut(data, s, e) == ref
+    with pytest.raises(ValueError):
+        fakevideo.cut(b"JUNK" + data[4:], 0, 1)
+
+
 # -- frame sampling + scorers ----------------------------------------------
 
 
