@@ -391,10 +391,14 @@ def lsh_candidate_pairs(
     one row per matching (band, bucket) — for consumers whose downstream
     aggregation is idempotent under duplicate pairs (bit_or/max/min per
     pair, e.g. dedup_method_agreement's membership mask) the distinct is
-    pure cost (r11, guide §2.3)."""
-    # persist: both sides of the self-join read this — without it the whole
-    # signature lineage (shingle + k×md5 + groupBy) executes twice
-    exploded = band_buckets(sig_df, id_col, bands, rows).persist()
+    pure cost (r11, guide §2.3).
+
+    Both sides of the self-join read the band table, so it is built once,
+    in the call, as an eager ``localCheckpoint``: without it the whole
+    signature lineage (shingle + k×md5 + groupBy) executes twice, and a
+    ``persist()`` would run its cache stage once per side (ARCHITECTURE.md
+    §3).  Nothing is left cached for the caller to release."""
+    exploded = band_buckets(sig_df, id_col, bands, rows).localCheckpoint()
     a = exploded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b_ = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
     out = (
@@ -404,7 +408,7 @@ def lsh_candidate_pairs(
     )
     if dedup_pairs:
         out = out.distinct()
-    return _with_cached_deps(out, [exploded])
+    return out
 
 
 def minhash_lsh_pairs(

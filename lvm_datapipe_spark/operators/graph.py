@@ -26,7 +26,7 @@ k-core has ONE engine, :func:`kcore`: the decremental peel (SCALE_BENCH
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,6 +69,31 @@ def fresh_local_checkpoint(df: DataFrame) -> DataFrame:
     return DataFrame(fresh, spark)
 
 
+def partitioned_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` that KEEPS ``df``'s hash partitioning.
+
+    The ``LogicalRDD`` a checkpoint leaves reports the output partitioning
+    of the plan that built it, but under AQE that plan is an
+    ``AdaptiveSparkPlanExec``, which reports ``UnknownPartitioning``
+    (measured on spark-sql 4.1.2): a join keyed on the partitioning
+    column would then re-shuffle both sides of the checkpoint.  Planning
+    the checkpoint job with AQE off keeps the ``hashpartitioning`` of a
+    ``repartition(col)`` (at ``spark.sql.shuffle.partitions``), so a
+    downstream join or aggregate keyed on that column plans no exchange
+    over the checkpoint.  Only the checkpoint job runs without AQE;
+    every plan that reads the checkpoint is adaptive as usual.  The
+    switch is a session conf, so a query planned on the same session
+    from another thread at that moment would also plan without AQE."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.adaptive.enabled"
+    old = conf.get(key)
+    conf.set(key, "false")
+    try:
+        return df.localCheckpoint()
+    finally:
+        conf.set(key, old)
+
+
 def cap_baskets(
     df: DataFrame,
     basket_col: str,
@@ -92,21 +117,25 @@ def cap_baskets(
     ~17 distinct items, so capped == uncapped bit-exactly — the
     equivalence test in tests/test_basket_cap.py pins that).
 
-    Scale shape: one basket-keyed count aggregate emits the OFFENDER set
-    (baskets > cap) — tiny or empty by construction — then a left-anti
-    join against it.  Because the offender side is small, AQE plans the
-    anti join as a broadcast: the main table is NOT shuffled, and the
-    downstream pair join still shuffles on the same basket key it always
-    did.  Oracle mirror: ``HAVING count(*) > cap`` + ``NOT IN`` — see
-    ``queries._cap_baskets_sql``.
+    Scale shape: one ``count(*) OVER (PARTITION BY basket)`` window
+    annotates every row with its basket's size, then a filter keeps rows
+    at or under the cap.  On an input already hash-partitioned by the
+    basket key (``_capped_baskets``) the window plans NO exchange and the
+    output keeps that partitioning, so the downstream basket-keyed pair
+    self-join still reads its big sides without a shuffle.  (An offender
+    aggregate + left-anti join would read the input twice, and Catalyst
+    pushes that anti join below the repartition, so the basket shuffle
+    would run once per branch.)  Rows with a NULL basket key are kept,
+    whatever their count, exactly as under the anti join (a NULL key
+    never matches an offender).  Oracle mirror: ``HAVING count(*) > cap``
+    + ``NOT IN`` — see ``queries._cap_baskets_sql``.
     """
-    big = (
-        df.groupBy(basket_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_basket_size)
-        .select(basket_col)
+    n = F.count(F.lit(1)).over(Window.partitionBy(basket_col))
+    return (
+        df.withColumn("_n", n)
+        .filter(F.col(basket_col).isNull() | (F.col("_n") <= max_basket_size))
+        .drop("_n")
     )
-    return df.join(big, [basket_col], "left_anti")
 
 
 def dedup_keep_representatives(
@@ -160,6 +189,14 @@ def kcore(
     within the current alive set.  The fixpoint is observed the round
     the doomed frontier empties.
 
+    Set-up: the symmetric edge list is built in ONE pass over ``edges``
+    (each edge emits ``(u, v)`` and ``(v, u)`` through ``inline``), made
+    distinct, and checkpointed eagerly with
+    :func:`fresh_local_checkpoint`: every round reads it, and a
+    ``.persist()``ed table read twice in one plan would re-run its cache
+    stage per reference (ARCHITECTURE.md §3).  Duplicate and reversed
+    input edges are harmless; the caller need not dedup.
+
     Scale shape per round: one doomed-frontier count, one
     frontier-keyed filter pass over the symmetric edge list (broadcast
     below ``KCORE_BROADCAST_DOOMED_MAX``), one small decrement
@@ -184,11 +221,15 @@ def kcore(
     by definition, so a core that empties in the final round reads
     converged.  ``stats`` (a dict, optional) receives ``rounds``,
     ``checks`` and ``converged``."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .persist()
+    sym = fresh_local_checkpoint(
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                )
+            )
+        ).distinct()
     )
     deg = fresh_local_checkpoint(
         sym.groupBy(F.col("u").alias("p"))
@@ -250,7 +291,6 @@ def kcore(
         .select(F.col("p").alias("node"), F.col("deg").alias("core_degree"))
         .localCheckpoint()
     )
-    sym.unpersist()
     return out
 
 

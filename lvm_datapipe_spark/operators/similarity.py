@@ -298,12 +298,12 @@ def lsh_ann_candidates(
     KEY is the sign bits packed into one BIGINT (bit i = plane i) rather
     than a '0'/'1' string — a bijection for a fixed plane count, so the
     grouping is identical, but the shuffle key is 8 fixed bytes instead of
-    an n_planes-char string (measured 1.3× on the candidate join).  The
-    bucket table is persisted (both join sides read it); callers free it
-    with :func:`lvm_datapipe_spark.operators.dedup.release`.
+    an n_planes-char string (measured 1.3× on the candidate join).  Both
+    join sides read the bucket table, so it is built once, in the call,
+    as an eager ``localCheckpoint`` (not a ``persist()``, which Spark
+    4.1.2 would run once per join side — ARCHITECTURE.md §3); nothing is
+    left cached for the caller to release.
     """
-    from lvm_datapipe_spark.operators.dedup import _with_cached_deps
-
     if n_planes is None:
         # production auto-sizing: ONE metadata-sized count decides the
         # plane budget (the IVF-probe rule: scalar driver decisions are
@@ -329,7 +329,7 @@ def lsh_ann_candidates(
             F.explode(F.expr("array(" + ",".join(entries) + ")")).alias("tb"),
         )
         .select(id_col, "tb.tbl", "tb.bucket")
-        .persist()
+        .localCheckpoint()
     )
     a = buckets.select(F.col(id_col).alias("id_a"), "tbl", "bucket")
     b = buckets.select(F.col(id_col).alias("id_b"), "tbl", "bucket")
@@ -340,7 +340,7 @@ def lsh_ann_candidates(
     )
     if dedup:
         out = out.distinct()
-    return _with_cached_deps(out, [buckets])
+    return out
 
 
 def lsh_near_dup_pairs(
@@ -355,9 +355,12 @@ def lsh_near_dup_pairs(
     probabilistic (tunable via n_planes/n_tables) but DETERMINISTIC given the
     fixed seed — the candidate set is reproducible, so the whole pipeline is
     oracle-checkable; precision is exact (every emitted cos_sim is the true
-    cosine).  Verify normalizes each vector ONCE (|corpus| rows, persisted —
-    see :func:`embedding_near_dup_pairs` for why the barrier matters) so the
-    per-candidate work is a single flat dot, not three.
+    cosine).  Verify normalizes each vector ONCE (|corpus| rows, an eager
+    ``localCheckpoint`` read by both verify joins — see
+    :func:`embedding_near_dup_pairs` for why the barrier matters) so the
+    per-candidate work is a single flat dot, not three.  Both the bucket
+    table and the unit vectors are checkpoints, so the result holds no
+    cached relation.
 
     SIZING RULE (measured, SCALE_BENCH.md §1): keep per-table bucket
     occupancy roughly constant by growing ``n_planes`` ≈ log2(n/100) with
@@ -367,8 +370,6 @@ def lsh_near_dup_pairs(
     superlinear wall.  Recall lost to narrower buckets is rebuilt by the
     independent tables (``n_tables=12`` held ~0.9 pair recall at the 0.9
     threshold in the measured runs)."""
-    from lvm_datapipe_spark.operators.dedup import _CACHED_DEPS_ATTR, _with_cached_deps
-
     # dedup AFTER the exact-cosine filter: the candidate multiset (one row
     # per bucket collision) goes straight into the verify joins, and the
     # distinct runs over the tiny threshold-survivor set instead of
@@ -378,10 +379,10 @@ def lsh_near_dup_pairs(
     cand = lsh_ann_candidates(
         emb, id_col=id_col, vec_col=vec_col, dim=dim, dedup=False, **lsh_kwargs
     )
-    u = unit_vectors(emb, id_col, vec_col, dim=dim).persist()
+    u = unit_vectors(emb, id_col, vec_col, dim=dim).localCheckpoint()
     a = u.select(F.col(id_col).alias("id_a"), F.col("vn").alias("va"))
     b = u.select(F.col(id_col).alias("id_b"), F.col("vn").alias("vb"))
-    out = (
+    return (
         cand.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("cos_sim", dot(F.col("va"), F.col("vb")))
@@ -389,7 +390,6 @@ def lsh_near_dup_pairs(
         .select("id_a", "id_b", "cos_sim")
         .distinct()
     )
-    return _with_cached_deps(out, getattr(cand, _CACHED_DEPS_ATTR, []) + [u])
 
 
 def ivf_fixed_centroids(n_cells: int, dim: int, seed: int):

@@ -128,3 +128,20 @@ def test_cap_boundary_inclusive(spark):
     kept = cap_baskets(df, "l_orderkey", 8)
     ks = {r[0] for r in kept.select("l_orderkey").distinct().collect()}
     assert ks == {1}
+
+
+def test_null_basket_rows_survive_the_cap(spark):
+    """Rows with a NULL basket key are kept whatever their number, as
+    under the offender anti-join (a NULL key never matches an offender);
+    non-NULL baskets above the cap are still dropped."""
+    rows = (
+        [(1, f"a{i}") for i in range(3)]
+        + [(2, f"b{i}") for i in range(9)]
+        + [(None, f"n{i}") for i in range(12)]
+    )
+    df = spark.createDataFrame(rows, "l_orderkey long, item string")
+    kept = cap_baskets(df, "l_orderkey", 8)
+    assert kept.schema == df.schema
+    got = sorted((str(r.l_orderkey), r.item) for r in kept.collect())
+    want = sorted((str(o), i) for o, i in rows if o != 2)
+    assert got == want

@@ -1,0 +1,77 @@
+"""Build-phase Spark jobs of the queries whose plans read one intermediate
+more than once.
+
+Such an intermediate (the capped basket table, the k-core symmetric edge
+list, the LSH bucket and unit-vector tables, the MinHash band table) is an
+eager ``localCheckpoint``, not a ``persist()`` (ARCHITECTURE.md §3): it is
+built once, inside the query build, and leaves nothing in the cache
+manager.  The job counts below are exact, like the CLI stage counts in
+tests/test_cli.py: a count that moves means the build's plan moved.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+from pyspark.sql import functions as F
+
+from lvm_datapipe_spark.queries import QUERIES, _capped_baskets
+
+#: Spark jobs each query's build (``QUERIES[name](spark, sf)``) launches
+#: at the fixture's sf0.001
+BUILD_JOBS = {
+    "graph_kcore_parts": 11,
+    "dedup_clusters": 15,
+    "range_partition_boundaries": 4,
+}
+
+
+def _build(spark, name: str, sf_dir: str):
+    """Build one query under its own job group; the frame and the number
+    of Spark jobs the build launched."""
+    sc = spark.sparkContext
+    group = f"build-{name}-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        df = QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_job_counts_leave_no_cached_relation(spark, sf_dir):
+    spark.catalog.clearCache()
+    jobs = {}
+    for name in BUILD_JOBS:
+        df, jobs[name] = _build(spark, name, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    assert jobs == BUILD_JOBS
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.cachedData().size() == 0
+
+
+def test_basket_self_join_reads_the_checkpoint_without_exchange(spark, sf_dir):
+    """The basket checkpoint keeps its hash partitioning on l_orderkey, so
+    graph_degree_assortativity's basket self-join plans no exchange on
+    either side even when neither side is small enough to broadcast (as at
+    scale; broadcasts are switched off here to force that plan): the
+    only exchange left is the pair aggregate's."""
+    b = _capped_baskets(spark, sf_dir, "l_partkey")
+    pairs = (
+        b.join(
+            b.select(F.col("l_orderkey").alias("_o"), F.col("l_partkey").alias("p2")),
+            (F.col("l_orderkey") == F.col("_o")) & (F.col("l_partkey") < F.col("p2")),
+        )
+        .groupBy(F.col("l_partkey").alias("p1"), "p2")
+        .agg(F.count(F.lit(1)).alias("co"))
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" in plan, plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1 and "l_partkey" in exchanges[0], plan

@@ -534,18 +534,13 @@ def test_no_unregistered_persist_in_queries():
     offenders = []
     for chunk in re.split(r"\ndef ", src):
         name = chunk.split("(")[0].strip()
-        if name.startswith("_capped_baskets"):
-            continue  # the helper itself; callers carry the registration
         # count, don't just detect: a chunk that persists three frames
         # and unpersists one must still register (r9 ADVICE item 4 — the
         # textual '.unpersist(' exemption let partial releases pass)
         n_persist = chunk.count(".persist()")
         n_unpersist = chunk.count(".unpersist(")
-        uses_capped = "_capped_baskets(" in chunk
-        leaky = n_persist > n_unpersist or (uses_capped and n_unpersist == 0)
-        if leaky and "_with_cached_deps" not in chunk:
+        if n_persist > n_unpersist and "_with_cached_deps" not in chunk:
             offenders.append(
-                f"{name} (persist={n_persist}, unpersist={n_unpersist},"
-                f" capped_baskets={uses_capped})"
+                f"{name} (persist={n_persist}, unpersist={n_unpersist})"
             )
     assert not offenders, f"persist() without _with_cached_deps: {offenders}"
