@@ -144,7 +144,7 @@ REPOINTS = {
 
 def main() -> None:
     from lvm_datapipe_spark.queries import QUERIES
-    from lvm_datapipe_spark.session import get_spark
+    from lvm_datapipe_spark.session import get_spark, query_scope
 
     extra = {}
     ld = _local_dir()
@@ -161,10 +161,12 @@ def main() -> None:
     for warm_q in ("q1_pricing_summary", "dedup_minhash_lsh", "dedup_simhash",
                    "dedup_ngram_jaccard", "ann_cosine_topk", "ann_lsh_near_dup",
                    "text_quality", "w3_sessionize"):
-        QUERIES[warm_q](spark, warm_sf).write.format("noop").mode("overwrite").save()
-    QUERIES["q1_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
+        with query_scope(spark):
+            QUERIES[warm_q](spark, warm_sf).write.format("noop").mode("overwrite").save()
+    with query_scope(spark):
+        QUERIES["q1_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
 
     times: dict[str, float] = {}
     # GRAPH_ANN_6 runs as its OWN two-pass phase AFTER the historical
@@ -174,23 +176,17 @@ def main() -> None:
     # The frozen lists keep their r1-r7 measurement conditions; the
     # heavies pay their own warm-up in their own phase.
     phases = [BENCH_QUERIES + SCALE_12, GRAPH_ANN_6 + CENSUS_5]
-    for phase_i, phase in enumerate(phases):
-        for p in range(max(1, PASSES)):
-            if p or phase_i:
-                # operators persist() intermediates; Spark's CacheManager
-                # would serve pass-2 plans from pass-1 caches
-                # (canonicalized-plan match), turning min-of-2 into a
-                # cached-read measurement.  Within-pass behavior stays
-                # identical to the r1-r3 methodology.
-                spark.catalog.clearCache()
+    for phase in phases:
+        for _ in range(max(1, PASSES)):
             for name in phase:
                 if name not in QUERIES:
                     continue
-                t0 = time.perf_counter()
-                QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = round(time.perf_counter() - t0, 4)
+                with query_scope(spark):
+                    t0 = time.perf_counter()
+                    QUERIES[name](spark, SF_DIR).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                    dt = round(time.perf_counter() - t0, 4)
                 times[name] = min(times.get(name, dt), dt)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.operators import media, scenecut
 from lvm_datapipe_spark.plans import pipeline
-from lvm_datapipe_spark.session import get_spark
+from lvm_datapipe_spark.session import get_spark, query_scope
 from lvm_datapipe_spark.sources.video import scan_video_dir
 
 
@@ -574,34 +574,37 @@ def _cmd_query(spark, args) -> None:
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
+    """Run one command.  The command runs inside session.query_scope, so a
+    caller-supplied session ends holding what it held before."""
     args = build_parser().parse_args(argv)
     owns_session = spark is None
     if spark is None:
         spark = get_spark("lvm-datapipe-cli")
         spark.sparkContext.setLogLevel("ERROR")
     try:
-        {
-            "scenecut": _cmd_scenecut,
-            "score": _cmd_score,
-            "curate": _cmd_curate,
-            "zorder": _cmd_zorder,
-            "retention": _cmd_retention,
-            "dq": _cmd_dq,
-            "profile": _cmd_profile,
-            "manifest": _cmd_manifest,
-            "bpe": _cmd_bpe,
-            "wds-export": _cmd_wds_export,
-            "tx-commit": _cmd_tx_commit,
-            "tx-merge": _cmd_tx_merge,
-            "tx-delete": _cmd_tx_delete,
-            "tx-compact": _cmd_tx_compact,
-            "tx-diff": _cmd_tx_diff,
-            "tx-history": _cmd_tx_history,
-            "tx-vacuum": _cmd_tx_vacuum,
-            "analyze": _cmd_analyze,
-            "export-flat": _cmd_export_flat,
-            "query": _cmd_query,
-        }[args.cmd](spark, args)
+        with query_scope(spark):
+            {
+                "scenecut": _cmd_scenecut,
+                "score": _cmd_score,
+                "curate": _cmd_curate,
+                "zorder": _cmd_zorder,
+                "retention": _cmd_retention,
+                "dq": _cmd_dq,
+                "profile": _cmd_profile,
+                "manifest": _cmd_manifest,
+                "bpe": _cmd_bpe,
+                "wds-export": _cmd_wds_export,
+                "tx-commit": _cmd_tx_commit,
+                "tx-merge": _cmd_tx_merge,
+                "tx-delete": _cmd_tx_delete,
+                "tx-compact": _cmd_tx_compact,
+                "tx-diff": _cmd_tx_diff,
+                "tx-history": _cmd_tx_history,
+                "tx-vacuum": _cmd_tx_vacuum,
+                "analyze": _cmd_analyze,
+                "export-flat": _cmd_export_flat,
+                "query": _cmd_query,
+            }[args.cmd](spark, args)
     finally:
         if owns_session:
             spark.stop()

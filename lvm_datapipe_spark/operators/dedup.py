@@ -22,25 +22,6 @@ from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.operators.text import fingerprint, tokens, word_ngrams
 
-_CACHED_DEPS_ATTR = "_lvm_cached_deps"
-
-
-def _with_cached_deps(out: DataFrame, deps: list[DataFrame]) -> DataFrame:
-    """Record the .persist()ed intermediates an output depends on, so callers
-    can free executor storage once the result is materialized (long-lived
-    sessions would otherwise accumulate cached shingle/signature tables)."""
-    setattr(out, _CACHED_DEPS_ATTR, deps)
-    return out
-
-
-def release(df: DataFrame) -> None:
-    """Unpersist the cached intermediates behind a pair-generator result.
-    Call after the result has been written/collected; safe to call twice or
-    on DataFrames with no cached deps."""
-    for dep in getattr(df, _CACHED_DEPS_ATTR, []):
-        dep.unpersist()
-
-
 # -- exact -------------------------------------------------------------------
 
 
@@ -165,7 +146,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _with_cached_deps(out, [cached])
+    return out
 
 
 def shingle_intersections(
@@ -292,7 +273,7 @@ def containment_pairs(
         )
         .select("id_a", "id_b", "n_common", "cont_a", "cont_b")
     )
-    return _with_cached_deps(out, [cached])
+    return out
 
 
 # -- MinHash + LSH -----------------------------------------------------------
@@ -397,7 +378,8 @@ def lsh_candidate_pairs(
     in the call, as an eager ``localCheckpoint``: without it the whole
     signature lineage (shingle + k×md5 + groupBy) executes twice, and a
     ``persist()`` would run its cache stage once per side (ARCHITECTURE.md
-    §3).  Nothing is left cached for the caller to release."""
+    §3).  Its blocks live until the caller's sink; session.query_scope
+    frees them."""
     exploded = band_buckets(sig_df, id_col, bands, rows).localCheckpoint()
     a = exploded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b_ = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
@@ -543,7 +525,7 @@ def simhash_pairs(
     )
     if dedup_pairs:
         out = out.distinct()
-    return _with_cached_deps(out, [sh])
+    return out
 
 
 def write_band_store(
@@ -623,7 +605,7 @@ def minhash_lsh_pairs_cross(
         .select("new_id", "corpus_id")
         .distinct()
     )
-    return _with_cached_deps(out, [bb_new, bb_corpus])
+    return out
 
 
 def ppjoin_pairs(
@@ -800,4 +782,4 @@ def ppjoin_pairs(
             / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double")
         ).alias("jaccard"),
     )
-    return _with_cached_deps(out, [cand])
+    return out

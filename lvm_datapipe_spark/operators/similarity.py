@@ -186,10 +186,8 @@ def embedding_near_dup_pairs(
     The unit-vector table is PERSISTED: without the barrier, projection
     collapse inlines ``transform(v, x/nrm)`` into every ``element_at`` of
     the pairwise dot, recomputing the whole normalization per term (measured
-    ~10× slowdown).  Callers free it via
-    :func:`lvm_datapipe_spark.operators.dedup.release`."""
-    from lvm_datapipe_spark.operators.dedup import _with_cached_deps
-
+    ~10× slowdown).  It stays cached until the caller's sink;
+    :func:`lvm_datapipe_spark.session.query_scope` frees it."""
     u = unit_vectors(emb, id_col, vec_col, dim=dim).persist()
     a = u.select(F.col(id_col).alias("id_a"), F.col("vn").alias("va"))
     b = u.select(F.col(id_col).alias("id_b"), F.col("vn").alias("vb"))
@@ -200,7 +198,7 @@ def embedding_near_dup_pairs(
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-    return _with_cached_deps(out, [u])
+    return out
 
 
 def hyperplane_lsh_buckets(
@@ -301,8 +299,8 @@ def lsh_ann_candidates(
     an n_planes-char string (measured 1.3× on the candidate join).  Both
     join sides read the bucket table, so it is built once, in the call,
     as an eager ``localCheckpoint`` (not a ``persist()``, which Spark
-    4.1.2 would run once per join side — ARCHITECTURE.md §3); nothing is
-    left cached for the caller to release.
+    4.1.2 would run once per join side — ARCHITECTURE.md §3); its blocks
+    live until the caller's sink, and session.query_scope frees them.
     """
     if n_planes is None:
         # production auto-sizing: ONE metadata-sized count decides the
@@ -1104,8 +1102,6 @@ def semdedup_keep(
 
     Returns ``(vec_id, cell, centroid_sim, keep)`` for every input vector.
     """
-    from lvm_datapipe_spark.operators.dedup import _with_cached_deps
-
     a = (
         emb.select(F.col(id_col).alias("vec_id"), as_double(vec_col).alias("v"))
         .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
@@ -1148,7 +1144,7 @@ def semdedup_keep(
     out = a.join(removed, "vec_id", "left").select(
         "vec_id", "cell", "centroid_sim", F.col("_removed").isNull().alias("keep")
     )
-    return _with_cached_deps(out, [a])
+    return out
 
 
 def icl_chain_order(

@@ -14,10 +14,64 @@ carries the configs that matter at 100 TB scale:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_LOCAL_CORES = os.environ.get("SPARK_GRAFT_CPUS", "*")
+
+
+def _cached_data(spark: SparkSession) -> list:
+    """The cache manager's entries, newest first."""
+    cd = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return [cd.apply(i) for i in range(cd.size())]
+
+
+def _persistent_rdds(spark: SparkSession) -> dict:
+    """The SparkContext's persistent RDDs by id: cache buffers and the
+    blocks of eager checkpoints."""
+    return dict(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def held_storage(spark: SparkSession) -> tuple[int, frozenset[int]]:
+    """What the session holds: the number of cached relations and the ids
+    of the persistent RDDs."""
+    return len(_cached_data(spark)), frozenset(_persistent_rdds(spark))
+
+
+@contextmanager
+def query_scope(spark: SparkSession) -> Iterator[None]:
+    """Free what a block caches or checkpoints when it exits.
+
+    On entry, snapshot the cache manager's entries and the SparkContext's
+    persistent RDD ids.  On exit, also when the block raises, uncache every
+    new entry (newest first, so no dependent cache is re-planned), which
+    frees its buffers, and unpersist every new locally checkpointed RDD:
+    the blocks of eager ``localCheckpoint`` calls.  No other RDD is
+    touched, so a relation cached before the scope keeps its entry and its
+    buffers, even when the scope is where they were first materialized.
+
+    Contract: a frame built inside the scope is dead once it exits (a
+    checkpointed one fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``), so
+    every sink of such a frame (write, collect, count) must run inside it.
+    The snapshot is session-wide, so the scope assumes one query at a time
+    per session: a query running alongside would lose its caches to
+    whichever scope exits first.
+    """
+    plans_before = {cd.plan() for cd in _cached_data(spark)}
+    rdds_before = set(_persistent_rdds(spark))
+    try:
+        yield
+    finally:
+        jss = spark._jsparkSession
+        manager = jss.sharedState().cacheManager()
+        for cd in _cached_data(spark):
+            if cd.plan() not in plans_before:
+                manager.uncacheQuery(jss, cd.plan(), False, False)
+        for rid, rdd in _persistent_rdds(spark).items():
+            if rid not in rdds_before and rdd.rdd().isLocallyCheckpointed():
+                rdd.unpersist(False)
 
 
 def get_spark(

@@ -57,6 +57,7 @@ def test_band_store_join_is_colocated(spark, sf_dir):
     from lvm_datapipe_spark.catalog import load_table
     from lvm_datapipe_spark.operators import dedup as D
     from lvm_datapipe_spark.plans.bucketing import count_exchanges
+    from lvm_datapipe_spark.session import query_scope
 
     docs = load_table(spark, sf_dir, "documents")
     D.write_band_store(spark, docs, "band_store_test")
@@ -64,9 +65,9 @@ def test_band_store_join_is_colocated(spark, sf_dir):
         out = D.candidate_pairs_from_band_store(spark, "band_store_test")
         assert count_exchanges(out) == 1  # only the distinct; none for the join
         got = {(r.id_a, r.id_b) for r in out.collect()}
-        mem = D.lsh_candidate_pairs(D.minhash_signatures(docs))
-        want = {(r.id_a, r.id_b) for r in mem.collect()}
-        D.release(mem)
+        with query_scope(spark):
+            mem = D.lsh_candidate_pairs(D.minhash_signatures(docs))
+            want = {(r.id_a, r.id_b) for r in mem.collect()}
         assert got == want and len(want) > 0
     finally:
         spark.sql("DROP TABLE IF EXISTS band_store_test")

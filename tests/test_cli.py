@@ -405,3 +405,18 @@ def test_cli_query_stage(spark, tmp_path, capsys):
 
     with _pytest.raises(SystemExit):
         main(["query", "--name", "q6_forecast_revenu"], spark=spark)
+
+
+def test_cli_query_leaves_caller_session_unchanged(spark, sf_dir, capsys):
+    """main runs its command inside session.query_scope: the eager
+    checkpoints graph_kcore_parts makes are freed, and a caller-supplied
+    session ends holding no cached relation or persistent RDD it did not
+    hold before (one an earlier test left may be collected meanwhile)."""
+    from lvm_datapipe_spark.session import held_storage
+
+    n_before, rdds_before = held_storage(spark)
+    main(["query", "--name", "graph_kcore_parts", "--sf-dir", sf_dir,
+          "--limit", "3"], spark=spark)
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows_shown"] == 3
+    n_after, rdds_after = held_storage(spark)
+    assert n_after == n_before and rdds_after <= rdds_before

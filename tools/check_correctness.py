@@ -12,12 +12,18 @@ hash_match, spark_rows, oracle_rows, err}}), so each round can commit a FULL
 local sweep artifact (CORRECTNESS_LOCAL_r{N}.json) next to the driver's
 50-query window — with ~385 queries and a 50-slot window, this file is the
 only complete correctness record a round produces (r6 verdict item 2).
+
+Each query runs inside session.query_scope.  The sweep ends by printing
+the cached relations and persistent RDDs the session still holds (both 0
+when every scope freed what its run made); the JSON records them under
+``left``.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -77,9 +83,9 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
-    from lvm_datapipe_spark.session import get_spark
+    from lvm_datapipe_spark.session import get_spark, held_storage, query_scope
 
     args = sys.argv[1:]
     json_path = None
@@ -106,23 +112,13 @@ def main() -> int:
                "spark_rows": None, "oracle_rows": None, "err": None}
         records[name] = rec
         try:
-            df = fn(spark, sf_dir)
-            sdf = df.toPandas()
+            with query_scope(spark):
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             rec["err"] = f"spark {type(e).__name__}: {e}"
             failed.append(name)
             continue
-        finally:
-            # free any _with_cached_deps-registered persists: the whole
-            # point of the registration is that the 409-query sweep does
-            # NOT accumulate cached intermediates in executor storage
-            from lvm_datapipe_spark.operators.dedup import release
-
-            try:
-                release(df)
-            except NameError:
-                pass  # fn() itself raised before df existed
         rec["spark_rows"] = len(sdf)
         if name not in oracles:
             print(f"ROWS-ONLY {name}: {len(sdf)} rows")
@@ -148,13 +144,17 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"OK   {name}: {len(sdf)} rows")
+    n_cached, rdds = held_storage(spark)
+    left = {"cached_relations": n_cached, "persistent_rdds": len(rdds)}
+    print(f"left in the session: {left['cached_relations']} cached relations,"
+          f" {left['persistent_rdds']} persistent RDDs")
     if json_path:
         with open(json_path, "w") as f:
-            json.dump({"sf_dir": sf_dir, "queries": records}, f, indent=2,
-                      sort_keys=True)
+            json.dump({"sf_dir": sf_dir, "queries": records, "left": left}, f,
+                      indent=2, sort_keys=True)
         print(f"wrote {json_path} ({len(records)} queries)")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
-    return 1 if failed else 0
+    return 1 if failed or n_cached or rdds else 0
 
 
 if __name__ == "__main__":

@@ -21,7 +21,7 @@ import sys
 def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from lvm_datapipe_spark.queries import QUERIES
-    from lvm_datapipe_spark.session import get_spark
+    from lvm_datapipe_spark.session import get_spark, query_scope
 
     round_tag, suffix, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,15 +35,15 @@ def main() -> int:
     spark = get_spark("explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with query_scope(spark):
+            df = QUERIES[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange nodes)")
-    spark.catalog.clearCache()
     return 0
 
 

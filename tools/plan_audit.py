@@ -20,15 +20,16 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> list[dict]:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
-    from lvm_datapipe_spark.session import get_spark
+    from lvm_datapipe_spark.session import get_spark, query_scope
 
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     for name, fn in entry.queries().items():
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            with query_scope(spark):
+                df = fn(spark, sf_dir)
+                plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # noqa: BLE001 — surface in the report
             rows.append({"name": name, "error": str(exc)[:80]})
             continue
@@ -77,7 +78,7 @@ def render(rows: list[dict]) -> str:
         "(must be 0 everywhere).",
         "",
         "Counting caveat (r9): queries that persist() intermediates (the",
-        "registered `_with_cached_deps` tables) embed each cached subtree's",
+        "shared shingle, pair and score tables) embed each cached subtree's",
         "TEXT in the formatted explain once per reference — their keyed",
         "counts read 2-4x the exchanges that EXECUTE (the cache materializes",
         "once), and the `push` flag can go blank because the parquet scan",

@@ -10,8 +10,8 @@ For each named query, measures:
 - exec_s: the noop-sink write of the built frame (bench.py's measured
   action).
 
-Two passes, min per phase, cache cleared between queries (bench
-methodology).  Usage:
+Two passes, min per phase, each run inside session.query_scope so it
+frees what it cached (bench methodology).  Usage:
 
     python tools/profile_breakdown.py [sf_dir] q1 [q2 ...]
 """
@@ -26,7 +26,7 @@ import time
 def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from lvm_datapipe_spark.queries import QUERIES
-    from lvm_datapipe_spark.session import get_spark
+    from lvm_datapipe_spark.session import get_spark, query_scope
 
     args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
@@ -37,24 +37,25 @@ def main() -> int:
         extra["spark.local.dir"] = "/dev/shm/spark-profile-local"
     spark = get_spark("profile-breakdown", extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
-    QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    with query_scope(spark):
+        QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
 
     print(f"{'query':40s} {'build_s':>8s} {'plan_s':>8s} {'exec_s':>8s} {'total':>8s}")
     for name in names:
         best = None
         for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            t1 = time.perf_counter()
-            df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            t2 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t3 = time.perf_counter()
+            with query_scope(spark):
+                t0 = time.perf_counter()
+                df = QUERIES[name](spark, sf_dir)
+                t1 = time.perf_counter()
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                t2 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                t3 = time.perf_counter()
             row = (t1 - t0, t2 - t1, t3 - t2, t3 - t0)
             best = row if best is None else tuple(min(a, b) for a, b in zip(best, row))
         print(

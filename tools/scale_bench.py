@@ -155,8 +155,8 @@ SCALED_PLANES = {5_000: 6, 20_000: 8, 50_000: 9, 100_000: 10}
 
 
 def bench_lsh_crossover(spark, quick: bool) -> dict:
-    from lvm_datapipe_spark.operators import dedup as D
     from lvm_datapipe_spark.operators import similarity as V
+    from lvm_datapipe_spark.session import query_scope
 
     sizes_fixed = [5_000, 20_000, 50_000]
     sizes_scaled = [5_000, 20_000, 50_000] if quick else [5_000, 20_000, 50_000, 100_000]
@@ -173,26 +173,29 @@ def bench_lsh_crossover(spark, quick: bool) -> dict:
         # splits — repartition so both forms parallelize as they would
         emb = spark.read.parquet(p).repartition(32).persist()
         emb.count()
+        # each variant runs in its own query_scope: it frees the variant's
+        # checkpoints and caches, while emb (cached before) stays cached
         if n in sizes_fixed:
             # the sf0.1-tuned defaults (4 planes = 16 buckets/table):
             # occupancy grows with n, so candidates degrade toward n²/16
-            df = V.lsh_near_dup_pairs(emb, threshold=0.9)
-            out["lsh_fixed_planes"][n] = _noop(df)
-            out["pairs_fixed"][n] = df.count()
-            D.release(df)
+            with query_scope(spark):
+                df = V.lsh_near_dup_pairs(emb, threshold=0.9)
+                out["lsh_fixed_planes"][n] = _noop(df)
+                out["pairs_fixed"][n] = df.count()
         if n in sizes_scaled:
             # production sizing: planes grow with log2(n) so occupancy is
             # ~constant; recall is rebuilt by the independent tables
-            df = V.lsh_near_dup_pairs(
-                emb, threshold=0.9, n_planes=SCALED_PLANES[n], n_tables=12
-            )
-            out["lsh_scaled_planes"][n] = _noop(df)
-            out["pairs_scaled"][n] = df.count()
-            D.release(df)
+            with query_scope(spark):
+                df = V.lsh_near_dup_pairs(
+                    emb, threshold=0.9, n_planes=SCALED_PLANES[n], n_tables=12
+                )
+                out["lsh_scaled_planes"][n] = _noop(df)
+                out["pairs_scaled"][n] = df.count()
         if n in sizes_quad:
-            df = V.embedding_near_dup_pairs(emb, threshold=0.9)
-            out["quadratic"][n] = _noop(df)
-            D.release(df)
+            with query_scope(spark):
+                out["quadratic"][n] = _noop(
+                    V.embedding_near_dup_pairs(emb, threshold=0.9)
+                )
         emb.unpersist()
         print(f"  lsh-crossover n={n}: fixed={out['lsh_fixed_planes'].get(n)}s "
               f"scaled={out['lsh_scaled_planes'].get(n)}s "
@@ -206,9 +209,9 @@ def bench_lsh_auto(spark, quick: bool) -> dict:
     user copying them verbatim gets the sized plan with NO hand-tuning.
     This measures that default through n=100k next to the fixed-plane wall
     already recorded in §1."""
-    from lvm_datapipe_spark.operators import dedup as D
     from lvm_datapipe_spark.operators import similarity as V
     from lvm_datapipe_spark.operators.similarity import auto_n_planes
+    from lvm_datapipe_spark.session import query_scope
 
     sizes = [5_000, 20_000, 50_000] if quick else [5_000, 20_000, 50_000, 100_000]
     out: dict = {"auto_default": {}, "pairs_auto": {}, "auto_planes": {}}
@@ -218,11 +221,11 @@ def bench_lsh_auto(spark, quick: bool) -> dict:
             gen_embeddings(p, n, max(n // 50, 10))
         emb = spark.read.parquet(p).repartition(32).persist()
         emb.count()
-        df = V.lsh_near_dup_pairs(emb, threshold=0.9, n_planes=None, n_tables=12)
-        out["auto_default"][n] = _noop(df)
-        out["pairs_auto"][n] = df.count()
+        with query_scope(spark):
+            df = V.lsh_near_dup_pairs(emb, threshold=0.9, n_planes=None, n_tables=12)
+            out["auto_default"][n] = _noop(df)
+            out["pairs_auto"][n] = df.count()
         out["auto_planes"][n] = auto_n_planes(n)
-        D.release(df)
         emb.unpersist()
         print(
             f"  lsh-auto n={n}: planes={out['auto_planes'][n]} "
@@ -1387,13 +1390,15 @@ def bench_composed_pipeline(spark, quick: bool) -> dict:
     from pyspark.sql import functions as F
 
     from lvm_datapipe_spark.queries import QUERIES
+    from lvm_datapipe_spark.session import query_scope
     from lvm_datapipe_spark.sources import txlog
 
     def run(label: str, thunk) -> dict:
         before = set(_stage_metrics_snapshot(spark))
-        t0 = time.perf_counter()
-        rows = thunk()
-        wall = round(time.perf_counter() - t0, 2)
+        with query_scope(spark):
+            t0 = time.perf_counter()
+            rows = thunk()
+            wall = round(time.perf_counter() - t0, 2)
         new = [
             s for sid, s in _stage_metrics_snapshot(spark).items()
             if sid not in before
@@ -1427,7 +1432,6 @@ def bench_composed_pipeline(spark, quick: bool) -> dict:
         gen_docs(os.path.join(d, "documents.parquet"), n, words_per_doc=30)
         gen_dedup_embeddings(os.path.join(d, "embeddings.parquet"), n)
         point: dict = {}
-        spark.catalog.clearCache()
 
         point["pipeline_pretrain_full"] = run(
             f"pretrain n={n}",
@@ -1729,7 +1733,7 @@ def bench_basket_cap(spark, quick: bool) -> dict:
 
 
 def bench_r11_kernels(spark, quick: bool) -> dict:
-    """§21 (r11): n-scaled A/Bs for the four r11 kernel changes, since the
+    """§21 (r11): n-scaled A/Bs for the r11 kernel changes, since the
     sf0.1 bench is fixed-cost-bound (VERDICT r10 item 5 / next-round item
     6).  Each subsection asserts result equality between the engines it
     compares.
@@ -1739,11 +1743,12 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
         sizes, plus the above-gate fallback demonstration.
     21b driver percentile: Arrow-collect + numpy order statistics vs the
         exact percentile() aggregate across column sizes (bit equality).
-    21c ccnet scoring passes: the r11 two-pass bigram LM (counts-derived
-        cp/vocab, one scoring join) vs the r9 four-pass shape, inline.
-    21d dsir NEGATIVE evidence: the shipped two-scan shape vs the
-        REVERTED persisted per-doc bucket profile rework, at n-scale
-        (the revert's justification beyond the sf0.1 bench row)."""
+    21e banded-pair distinct skip: simhash_pairs' distinct output vs
+        dedup_pairs=False plus the bit_or mask fold.
+
+    The 21c/21d LM scoring A/Bs measured two reworks that were reverted;
+    their results are recorded in OPTIMIZATION_r11.md entries 2 and 3 and
+    in the committed SCALE_BENCH.md."""
     from unittest import mock
 
     import pandas as pd
@@ -1831,190 +1836,6 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
         print(f"  pct n={n}: {pct['sizes'][n]}", flush=True)
     out["driver_percentile"] = pct
 
-    # ---- 21c/21d: LM scoring pass counts (ccnet bigram, dsir) -----------
-    # synthetic documents: zipf token stream.  The (zipf_s, vocab) knobs
-    # control the bigram TYPE/TOKEN ratio, which is exactly what decides
-    # the ccnet two- vs four-pass trade: the two-pass shape persists the
-    # distinct-bigram count table, so it wins when that table is
-    # Heaps-bounded (natural corpora: types << tokens) and loses when the
-    # tail is so heavy that almost every bigram is a singleton (the
-    # persisted table then approaches the stream itself).
-    def _gen_docs(n_docs: int, words: int = 120, zipf_s: float = 1.3,
-                  vocab: int = 30_000):
-        rng = np.random.default_rng(SEED + 7)
-        toks = rng.zipf(zipf_s, size=(n_docs, words)) % vocab
-        texts = [" ".join(f"w{t}" for t in row) for row in toks]
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": np.arange(n_docs, dtype=np.int64),
-                    "lang": ["en"] * n_docs,
-                    "source": [f"src{i % 4}" for i in range(n_docs)],
-                    "text": texts,
-                }
-            )
-        ).repartition(32).persist()
-
-    from lvm_datapipe_spark.operators.text import bigram_lm_surprisal, tokens
-
-    def _ccnet_twopass(df):
-        # the REVERTED r11 two-pass rework (persisted (w1,w2) count table,
-        # cp/vocab derived from it, one scoring join) — kept here as the
-        # negative-result reference shape; returns (df, dep_to_unpersist)
-        toks = tokens(F.lower(F.col("text")))
-        d = df.select("doc_id", "lang", toks.alias("toks")).filter(
-            F.size("toks") >= 2
-        )
-        pairs = F.zip_with(
-            F.slice(F.col("toks"), F.lit(1), F.size("toks") - 1),
-            F.slice(F.col("toks"), F.lit(2), F.size("toks") - 1),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        )
-        bg = d.select("doc_id", "lang", F.explode(pairs).alias("p")).select(
-            "doc_id", "lang", "p.w1", "p.w2"
-        )
-        cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb")).persist()
-        cp = cb.groupBy("w1").agg(F.sum("cb").alias("cp"))
-        vocab = (
-            cb.select(F.col("w1").alias("tok"))
-            .union(cb.select(F.col("w2").alias("tok")))
-            .agg(F.count_distinct("tok").alias("vsz"))
-        )
-        scored = (
-            cb.join(cp, "w1")
-            .crossJoin(F.broadcast(vocab))
-            .select(
-                "w1",
-                "w2",
-                (
-                    F.length(F.bin(F.col("cp") + F.col("vsz")))
-                    - F.length(F.bin(F.col("cb") + F.lit(1)))
-                ).alias("surprisal"),
-            )
-        )
-        out = (
-            bg.join(scored, ["w1", "w2"])
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_bigrams"),
-                F.sum("surprisal").cast("bigint").alias("surprisal_sum"),
-            )
-        )
-        return out, cb
-
-    lm: dict = {"sizes": {}}
-    dsizes = [20_000, 60_000] if quick else [20_000, 60_000, 150_000]
-    def _ccnet_ab(docs):
-        # shipped four-pass shape (post-revert) vs the reverted two-pass
-        t0 = time.perf_counter()
-        shipped = bigram_lm_surprisal(docs)
-        shipped_rows = {
-            r["doc_id"]: (r["n_bigrams"], r["surprisal_sum"])
-            for r in shipped.collect()
-        }
-        t_shipped = round(time.perf_counter() - t0, 2)
-        for dep in getattr(shipped, "_lvm_cached_deps", []):
-            dep.unpersist()
-        t0 = time.perf_counter()
-        tp_df, tp_dep = _ccnet_twopass(docs)
-        tp_rows = {
-            r["doc_id"]: (r["n_bigrams"], r["surprisal_sum"])
-            for r in tp_df.collect()
-        }
-        t_tp = round(time.perf_counter() - t0, 2)
-        tp_dep.unpersist()
-        assert shipped_rows == tp_rows, "ccnet mismatch"
-        return t_tp, t_shipped
-
-    # heavy-tail regime (types ~ tokens: the persisted count table is NOT
-    # small — worst case for the two-pass shape, reported honestly)
-    for n in dsizes:
-        docs = _gen_docs(n)
-        docs.count()
-        t_new, t_old = _ccnet_ab(docs)
-        lm["sizes"][n] = {"two_pass_sec": t_new, "four_pass_sec": t_old}
-        print(f"  ccnet n={n}: {lm['sizes'][n]}", flush=True)
-
-        from lvm_datapipe_spark.operators.sampling import dsir_doc_weights, hash_bucket
-
-        def _dsir_profile(df, target_pred):
-            # the REVERTED r11 rework (persisted per-doc bucket profile;
-            # one md5 scan, one extra keyed exchange + cache) — kept here
-            # as the negative-result reference shape
-            toksc = tokens(F.lower(F.col("text")))
-            dd = df.select(
-                "doc_id", "lang", "source", target_pred.alias("is_target"),
-                toksc.alias("toks"),
-            ).filter(F.size("toks") >= 1)
-            bigrams = F.zip_with(
-                F.slice(F.col("toks"), F.lit(1), F.greatest(F.size("toks") - 1, F.lit(0))),
-                F.slice(F.col("toks"), F.lit(2), F.greatest(F.size("toks") - 1, F.lit(0))),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-            feats = dd.select(
-                "doc_id", "lang", "source", "is_target",
-                F.explode(F.concat(F.col("toks"), bigrams)).alias("feat"),
-            ).withColumn("fb", hash_bucket(F.col("feat"), 512, "dsir"))
-            docfb = (
-                feats.groupBy("doc_id", "lang", "source", "is_target", "fb")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .persist()
-            )
-            counts = docfb.groupBy("fb").agg(
-                F.sum("c").alias("cr"),
-                F.sum(
-                    F.when(F.col("is_target"), F.col("c")).otherwise(F.lit(0))
-                ).alias("ct"),
-            )
-            totals = counts.agg(F.sum("cr").alias("nr"), F.sum("ct").alias("nt"))
-            blen = lambda c: F.length(F.bin(c))  # noqa: E731
-            wt = counts.crossJoin(F.broadcast(totals)).select(
-                "fb",
-                (
-                    (blen(F.col("ct") + 1) - blen(F.col("nt") + F.lit(512)))
-                    - (blen(F.col("cr") + 1) - blen(F.col("nr") + F.lit(512)))
-                ).alias("s"),
-            )
-            out = (
-                docfb.join(F.broadcast(wt), "fb")
-                .groupBy("doc_id", "lang", "source", "is_target")
-                .agg(
-                    F.sum("c").cast("bigint").alias("n_features"),
-                    F.sum(F.col("c") * F.col("s")).cast("bigint").alias("weight"),
-                )
-            )
-            return out, docfb
-
-        t0 = time.perf_counter()
-        neww = dsir_doc_weights(docs, F.col("source") == "src0")
-        new_w = {r["doc_id"]: (r["n_features"], r["weight"]) for r in neww.collect()}
-        t_new = round(time.perf_counter() - t0, 2)
-        for dep in getattr(neww, "_lvm_cached_deps", []):
-            dep.unpersist()
-        t0 = time.perf_counter()
-        prof_df, prof_dep = _dsir_profile(docs, F.col("source") == "src0")
-        old_w = {
-            r["doc_id"]: (r["n_features"], r["weight"]) for r in prof_df.collect()
-        }
-        t_old = round(time.perf_counter() - t0, 2)
-        prof_dep.unpersist()
-        assert new_w == old_w, f"dsir mismatch at n={n}"
-        lm["sizes"][n]["dsir_two_scan_sec"] = t_new
-        lm["sizes"][n]["dsir_profile_sec"] = t_old
-        print(f"  dsir n={n}: two_scan {t_new} profile(reverted) {t_old}", flush=True)
-        docs.unpersist()
-    # Heaps-bounded regime (types << tokens: longer docs, steeper zipf,
-    # smaller vocab — the natural-corpus shape the two-pass rework targets)
-    lm["heaps_sizes"] = {}
-    for n in ([10_000, 30_000] if quick else [10_000, 30_000, 80_000]):
-        docs = _gen_docs(n, words=400, zipf_s=1.9, vocab=20_000)
-        docs.count()
-        t_new, t_old = _ccnet_ab(docs)
-        lm["heaps_sizes"][n] = {"two_pass_sec": t_new, "four_pass_sec": t_old}
-        print(f"  ccnet-heaps n={n}: {lm['heaps_sizes'][n]}", flush=True)
-        docs.unpersist()
-    out["lm_passes"] = lm
-
     # ---- 21e: banded-pair distinct skip (dedup_method_agreement) --------
     # near-dup-heavy corpus (docs drawn from a small pool of templates with
     # light perturbation → large simhash candidate volume); A: the kernel's
@@ -2072,7 +1893,7 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
 
 def render_r11_kernels_md(res: dict) -> list[str]:
     r = res["r11_kernels"]
-    tri, pct, lm = r["dense_triangles"], r["driver_percentile"], r["lm_passes"]
+    tri, pct = r["dense_triangles"], r["driver_percentile"]
     lines = [
         "## 21. r11 kernel A/Bs (generated)",
         "",
@@ -2110,58 +1931,6 @@ def render_r11_kernels_md(res: dict) -> list[str]:
             f"| {n} | {row['driver_sec']} s | {row['aggregate_sec']} s |"
             f" {ratio:.1f}x |"
         )
-    lines += [
-        "",
-        "### 21c/d. LM scoring pass counts — both r11 reworks REVERTED on",
-        "this evidence (ccnet two-pass and dsir profile are the negative",
-        "references; the shipped shapes are ccnet 4-pass / dsir 2-scan)",
-        "",
-        "Heavy-tail corpus (120-token docs, zipf 1.3 over 30k vocab — bigram",
-        "TYPES ≈ tokens, the two-pass shape's worst case):",
-        "",
-        "| docs | ccnet 2-pass (reverted) | ccnet 4-pass (shipped) |"
-        " dsir 2-scan (shipped) | dsir profile (reverted) |",
-        "|---|---|---|---|---|",
-    ]
-    for n, row in sorted(lm["sizes"].items(), key=lambda kv: int(kv[0])):
-        lines.append(
-            f"| {n} | {row['two_pass_sec']} s | {row['four_pass_sec']} s |"
-            f" {row['dsir_two_scan_sec']} s | {row['dsir_profile_sec']} s |"
-        )
-    lines += [
-        "",
-        "Heaps-bounded corpus (400-token docs, zipf 1.9 over 20k vocab —",
-        "bigram types << tokens, the regime the two-pass rework targeted):",
-        "",
-        "| docs | ccnet 2-pass (reverted) | ccnet 4-pass (shipped) |",
-        "|---|---|---|",
-    ]
-    for n, row in sorted(
-        lm.get("heaps_sizes", {}).items(), key=lambda kv: int(kv[0])
-    ):
-        lines.append(
-            f"| {n} | {row['two_pass_sec']} s | {row['four_pass_sec']} s |"
-        )
-    lines += [
-        "",
-        "- the ccnet two-pass rework (persist the (w1,w2) count table,",
-        "  derive cp/vocab from it, one scoring join) measured slightly",
-        "  ahead at sf0.1 but LOST these n-scaled A/Bs in BOTH regimes:",
-        "  the bigram count table grows with the corpus (types are not",
-        "  vocab²-bounded in practice), so its cache materialization and",
-        "  the low-parallelism cached read feeding the scoring join cost",
-        "  more than the two map-side-cheap corpus scans they replaced.",
-        "  REVERTED (OPTIMIZATION_r11.md entry 2); equality asserted on",
-        "  every (doc, value) pair at every size.",
-        "- the dsir profile rework (persist a per-doc bucket profile so",
-        "  md5 runs once) was REVERTED on the bench-relevant evidence: at",
-        "  sf0.1 it lost decisively (2.17 → 2.86 s bench row; 1.37 vs",
-        "  1.70 s focused min-of-2 — OPTIMIZATION_r11.md entry 3).  At",
-        "  synthetic 60k–150k docs the two shapes trade places within",
-        "  this host's noise band (repeated runs flipped the 150k row",
-        "  both ways), i.e. the profile shows no decisive scale advantage",
-        "  that would justify carrying its extra exchange + cache.",
-    ]
     pds = r.get("pair_distinct_skip", {}).get("sizes", {})
     if pds:
         lines += [

@@ -9,8 +9,8 @@ surface settles; anything that jumps out of the distribution gets a
 profile before it gets a pass.
 
 Each query runs once into the JVM noop sink (same measured path as
-bench.py), with the cache cleared between queries so persisted
-intermediates cannot subsidize later plans.
+bench.py) inside session.query_scope, which frees what the run cached or
+checkpointed, so persisted intermediates cannot subsidize later plans.
 
 Usage: python tools/time_all_queries.py [sf_dir] [--json PATH]
 """
@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     from lvm_datapipe_spark.queries import QUERIES
-    from lvm_datapipe_spark.session import get_spark
+    from lvm_datapipe_spark.session import get_spark, query_scope
 
     args = sys.argv[1:]
     json_path = None
@@ -44,21 +44,22 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     # one warm query so the first measured row doesn't pay JVM/codegen init
-    QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    with query_scope(spark):
+        QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
 
     times: dict[str, object] = {}
     errs = 0
     for i, (name, fn) in enumerate(QUERIES.items()):
         try:
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times[name] = round(time.perf_counter() - t0, 2)
+            with query_scope(spark):
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                times[name] = round(time.perf_counter() - t0, 2)
         except Exception as e:  # noqa: BLE001
             times[name] = f"ERR {type(e).__name__}: {e}"
             errs += 1
-        spark.catalog.clearCache()
         if i % 25 == 24:
             print(f"{i + 1}/{len(QUERIES)}", flush=True)
         if json_path:
