@@ -4,14 +4,24 @@ Mirrors the reference's YAML-config catalog (``configs/meta_config.yaml:1-4``,
 ``data_schema/macvid.py:78-93`` — data_root + META list resolved to a dataset)
 as a plain loader over a directory of parquet tables.  At 100 TB each table
 would be a partitioned parquet/iceberg location; the API is the same.
+
+Reads never infer a schema.  ``spark.read.parquet(path)`` without one runs a
+Spark job only to read a footer; every table, snapshot and CLI read goes
+through :func:`read_parquet` instead, which reads the first data file's
+footer with pyarrow on the driver and hands Spark the schema it would have
+inferred.  It infers only where the footer cannot say: a nanosecond or
+INT96 timestamp column, no top-level data file (hive-partitioned or empty),
+an unreadable footer, or a type the footer mapping does not cover.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 TPCH_TABLES = (
     "region",
@@ -31,29 +41,108 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Column names stored as parquet TIMESTAMP(NANOS), which Spark's reader
-    rejects outright (PARQUET_TYPE_ILLEGAL)."""
+def _first_parquet_file(path: str) -> str | None:
+    """The file whose footer Spark infers a schema from: ``path`` itself,
+    or a directory's first top-level data file (Spark skips ``_``/``.``
+    names); None when a directory holds none (hive-partitioned or empty)."""
+    if not os.path.isdir(path):
+        return path
+    for entry in sorted(os.listdir(path)):
+        if entry.endswith(".parquet") and not entry.startswith(("_", ".")):
+            return os.path.join(path, entry)
+    return None
+
+
+def _read_footer(path: str):
+    """The arrow schema of the first data file's footer, read on the driver
+    with pyarrow; None when there is no such file or it is unreadable."""
     import pyarrow.parquet as pq
 
-    out = []
+    first = _first_parquet_file(path)
+    if first is None:
+        return None
     try:
-        schema = pq.read_schema(_first_parquet_file(path))
-    except Exception:  # noqa: BLE001 - fall through to the plain reader
-        return out
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+        return pq.read_schema(first)
+    except (OSError, ValueError):  # not a parquet footer: Spark says why
+        return None
 
 
-def _first_parquet_file(path: str) -> str:
-    if os.path.isdir(path):
-        for entry in sorted(os.listdir(path)):
-            if entry.endswith(".parquet"):
-                return os.path.join(path, entry)
-    return path
+def _nanos_timestamp_columns(footer) -> list[str]:
+    """Column names stored as parquet TIMESTAMP(NANOS), which Spark's reader
+    rejects outright (PARQUET_TYPE_ILLEGAL).  INT96 columns report the same
+    arrow type."""
+    if footer is None:
+        return []
+    return [f.name for f in footer if str(f.type).startswith("timestamp[ns")]
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _maps_like_spark(t) -> bool:
+    """Whether ``from_arrow_type`` gives the type Spark's parquet reader
+    does for ``t``: it does not for durations (Spark: bigint), nulls
+    (Spark: int), times and nanosecond timestamps (illegal types, or bigint
+    under ``nanosAsLong``)."""
+    import pyarrow.types as pt
+
+    if pt.is_duration(t) or pt.is_null(t) or pt.is_time(t):
+        return False
+    if pt.is_timestamp(t) and t.unit == "ns":
+        return False
+    return all(_maps_like_spark(t.field(i).type) for i in range(t.num_fields))
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and map value nullable, as Spark's
+    file reader returns every schema (``StructType.asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _footer_spark_schema(footer) -> StructType | None:
+    """The schema Spark would infer from ``footer``, or None where only
+    inference gives it: no footer, a nanosecond or INT96 timestamp (the
+    ``nanosAsLong`` path), or a type the mapping does not cover.  Spark's
+    own row metadata wins when the file carries it, as in Spark's reader."""
+    if footer is None or _nanos_timestamp_columns(footer):
+        return None
+    try:
+        row_meta = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
+        if row_meta is not None:
+            schema = StructType.fromJson(json.loads(row_meta))
+        elif all(_maps_like_spark(f.type) for f in footer):
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            schema = from_arrow_schema(footer, prefer_timestamp_ntz=True)
+        else:
+            return None
+    except (ValueError, TypeError, KeyError):  # a failed mapping: infer
+        return None
+    return _as_nullable(schema)
+
+
+def _read(spark: SparkSession, path: str, footer) -> DataFrame:
+    schema = _footer_spark_schema(footer)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: the
+    schema comes from the first data file's footer, read on the driver, so
+    planning the read launches no Spark job.  Falls back to inference (one
+    footer job) for a nanosecond or INT96 timestamp column, a path with no
+    top-level data file (a hive-partitioned layout, an empty directory), an
+    unreadable footer or a type the footer mapping does not cover."""
+    return _read(spark, path, _read_footer(path))
 
 
 # Files below this size stay unsplit (dims like region/nation) — repartition
@@ -92,6 +181,10 @@ def load_table(
     """Load one parquet table. Scans stay lazy → Catalyst pushes filters and
     prunes columns down to the parquet reader.
 
+    The read launches no Spark job: its schema comes from the footer
+    (:func:`read_parquet`, and its fallbacks to inference), and that one
+    pyarrow footer read also finds the nanosecond columns.
+
     Two robustness/scale fixes applied at the source:
 
     - TIMESTAMP(NANOS) parquet columns (written by pandas/arrow, e.g. the
@@ -112,12 +205,12 @@ def load_table(
     # the DuckDB oracle sees — the driver's own session may not set this
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = table_path(sf_dir, name)
-    nanos_cols = _nanos_timestamp_columns(path)
-    if not nanos_cols:
-        df = spark.read.parquet(path)
-    else:
+    footer = _read_footer(path)
+    nanos_cols = _nanos_timestamp_columns(footer)
+    if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+    df = _read(spark, path, footer)
+    if nanos_cols:
         # INT96-encoded files (Spark's own default writer) also report as
         # timestamp[ns] in the arrow footer, but Spark reads them as native
         # TIMESTAMP — only convert columns that actually surfaced as longs.
@@ -130,7 +223,7 @@ def load_table(
         needed = _REBALANCE_CACHE.get(path)
         if needed is None:
             try:
-                size = os.path.getsize(_first_parquet_file(path))
+                size = os.path.getsize(_first_parquet_file(path) or path)
             except OSError:
                 size = 0
             needed = (

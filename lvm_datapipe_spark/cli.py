@@ -13,12 +13,14 @@ Each stage is idempotent and resumable: `score` re-runs only rows whose
 score column is null (plans.pipeline.run_stage), exactly the reference's
 done-marker semantics without marker files.
 
-Each stage prints one JSON status line.  The video-pipeline stages launch
-only the jobs their output needs: `scenecut`, `score` and `export-flat`
-take the row counts they print (`clips`, `scored`/`total`, `rows`) from an
-Observation on their own write (plans.pipeline.observed_stage) instead of
-re-reading the output, and `analyze` computes its stats and histogram in
-one aggregate.
+Each stage prints one JSON status line.  The stages launch only the jobs
+their output needs: every parquet input is read with its schema taken from
+the footer on the driver (catalog.read_parquet), so reading it launches no
+schema-inference job; `scenecut`, `score`, `export-flat`, `query --out` and
+`tx-diff` take the row counts they print (`clips`, `scored`/`total`,
+`rows`) from an Observation on their own write
+(plans.pipeline.observed_stage) instead of re-reading the output; and
+`analyze` computes its stats and histogram in one aggregate.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ import sys
 
 from pyspark.sql import functions as F
 
+from lvm_datapipe_spark.catalog import read_parquet
 from lvm_datapipe_spark.operators import media, scenecut
 from lvm_datapipe_spark.plans import pipeline
 from lvm_datapipe_spark.session import get_spark, query_scope
@@ -101,7 +104,7 @@ def _cmd_curate(spark, args) -> None:
     from lvm_datapipe_spark.operators.sampling import split_assign
     from lvm_datapipe_spark.sources.sinks import write_partitioned
 
-    docs = spark.read.parquet(args.docs)
+    docs = read_parquet(spark, args.docs)
     n_in = docs.count()
     fp = docs.withColumn("_f", X.fingerprint(args.text_col))
     w = Window.partitionBy("_f")
@@ -117,7 +120,7 @@ def _cmd_curate(spark, args) -> None:
         gated, args.id_col, {"train": 0.8, "val": 0.1, "test": 0.1}
     )
     write_partitioned(out, args.out, ["split"])
-    result = spark.read.parquet(args.out)
+    result = read_parquet(spark, args.out)
     per_split = {r.split: r.n for r in result.groupBy("split").agg(
         F.count(F.lit(1)).alias("n")).collect()}
     print(
@@ -138,7 +141,7 @@ def _cmd_zorder(spark, args) -> None:
         zorder_bucket,
     )
 
-    df = spark.read.parquet(args.table)
+    df = read_parquet(spark, args.table)
     n = df.count()
     a_sql, b_sql = args.by
     stats = df.selectExpr(
@@ -179,7 +182,7 @@ def _cmd_dq(spark, args) -> None:
     violations so pipelines can gate on it."""
     from lvm_datapipe_spark.operators import validate as V
 
-    df = spark.read.parquet(args.table)
+    df = read_parquet(spark, args.table)
     reports = []
     nn = {f"not_null_{c}": F.col(c).isNull() for c in (args.not_null or [])}
     if nn:
@@ -201,7 +204,7 @@ def _cmd_profile(spark, args) -> None:
     """One-scan numeric profile of a parquet table (operators/analyze.py)."""
     from lvm_datapipe_spark.operators.analyze import profile_columns
 
-    df = spark.read.parquet(args.table)
+    df = read_parquet(spark, args.table)
     cols = args.columns or [
         f.name for f in df.schema.fields
         if f.dataType.simpleString() in ("int", "bigint", "double", "float")
@@ -256,7 +259,7 @@ def _cmd_export_flat(spark, args) -> None:
 def _cmd_bpe(spark, args) -> None:
     from lvm_datapipe_spark.operators.bpe import learn_bpe_merges
 
-    df = spark.read.parquet(args.table)
+    df = read_parquet(spark, args.table)
     merges, words = learn_bpe_merges(
         df, text_col=args.text_col, n_merges=args.n_merges
     )
@@ -281,7 +284,7 @@ def _cmd_wds_export(spark, args) -> None:
     from lvm_datapipe_spark.sources.webdataset import MANIFEST, register_webdataset
 
     register_webdataset(spark)
-    df = spark.read.parquet(args.table)
+    df = read_parquet(spark, args.table)
     (
         df.write.format("webdataset")
         .option("path", args.out)
@@ -425,7 +428,7 @@ def _cmd_tx_commit(spark, args) -> None:
     """Publish a parquet table as the next version of a txlog table."""
     from lvm_datapipe_spark.sources import txlog
 
-    df = spark.read.parquet(args.table)
+    df = read_parquet(spark, args.table)
     v = txlog.commit(spark, df, args.out, op=args.op)
     print(
         json.dumps(
@@ -438,7 +441,7 @@ def _cmd_tx_merge(spark, args) -> None:
     """Upsert updates into a versioned table (file-granular copy-on-write)."""
     from lvm_datapipe_spark.sources import txlog
 
-    df = spark.read.parquet(args.table)
+    df = read_parquet(spark, args.table)
     v = txlog.merge(spark, df, args.out, key_cols=list(args.keys))
     m = txlog._read_manifest(args.out, v)
     print(
@@ -474,7 +477,7 @@ def _cmd_tx_delete(spark, args) -> None:
     caveat for compliance erasure."""
     from lvm_datapipe_spark.sources import txlog
 
-    keys = spark.read.parquet(args.table)
+    keys = read_parquet(spark, args.table)
     v = txlog.delete(spark, keys, args.out, key_cols=list(args.keys))
     m = txlog._read_manifest(args.out, v)
     print(
@@ -496,8 +499,9 @@ def _cmd_tx_diff(spark, args) -> None:
     from lvm_datapipe_spark.sources import txlog
 
     delta = txlog.diff_files(spark, args.table, args.v_from, args.v_to)
-    delta.write.mode("overwrite").parquet(args.out)
-    n = spark.read.parquet(args.out).count()
+    staged, obs = pipeline.observed_stage(delta, "tx-diff")
+    staged.write.mode("overwrite").parquet(args.out)
+    n = obs.get["n_rows"]
     print(
         json.dumps(
             {
@@ -561,8 +565,9 @@ def _cmd_query(spark, args) -> None:
         )
     df = QUERIES[args.name](spark, args.sf_dir)
     if args.out:
-        df.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
+        staged, obs = pipeline.observed_stage(df, "query")
+        staged.write.mode("overwrite").parquet(args.out)
+        n = obs.get["n_rows"]
         print(json.dumps({"stage": "query", "name": args.name,
                           "rows": n, "out": args.out}))
     else:

@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lvm_datapipe_spark.catalog import read_parquet
+
 
 def write_snapshot(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Canonical sink: Parquet snapshot, idempotent overwrite.  At scale,
@@ -35,7 +37,9 @@ def write_snapshot(df: DataFrame, path: str, partition_by: list[str] | None = No
 
 
 def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Read a snapshot with its schema taken from the footer on the driver
+    (catalog.read_parquet): no schema-inference job."""
+    return read_parquet(spark, path)
 
 
 def run_stage(
@@ -119,7 +123,8 @@ def observed_stage(
     Extra ``metrics`` columns (aggregate expressions) ride along with the
     default ``n_rows`` count.  A write that sees no rows still reports
     (``n_rows`` 0), so ``observation.get`` does not block.  The CLI's
-    scenecut, score and export-flat stages print their counts this way."""
+    scenecut, score, export-flat, query --out and tx-diff commands print
+    their counts this way."""
     from pyspark.sql import Observation
 
     obs = Observation(name)

@@ -51,6 +51,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lvm_datapipe_spark.catalog import read_parquet
+
 _LOGDIR = "_txlog"
 _LATEST = "_latest"
 
@@ -156,7 +158,14 @@ def _write_version_files(
         for f in os.listdir(vdir)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
-    return own, spark.read.parquet(vdir).count()
+    return own, read_parquet(spark, vdir).count()
+
+
+def _table_columns(spark: SparkSession, pm: dict) -> list[str]:
+    """The column names of manifest ``pm``'s version: the manifest's own
+    list or, for an older manifest without one, the first data file's
+    footer (catalog.read_parquet), so the lookup runs no footer job."""
+    return pm.get("columns") or read_parquet(spark, pm["files"][0]).columns
 
 
 def _publish(
@@ -346,7 +355,7 @@ def merge(
     if parent == 0:
         return commit(spark, updates, table_dir, op="overwrite", meta=meta)
     pm = _read_manifest(table_dir, parent)
-    snap_cols = spark.read.parquet(*pm["files"]).columns
+    snap_cols = _table_columns(spark, pm)
     if set(updates.columns) != set(snap_cols):
         raise ValueError(
             f"updates columns {sorted(updates.columns)} != table columns "
@@ -420,7 +429,7 @@ def delete(
     if parent == 0:
         raise FileNotFoundError(f"{table_dir} has no committed versions")
     pm = _read_manifest(table_dir, parent)
-    snap_cols = pm.get("columns") or spark.read.parquet(*pm["files"]).columns
+    snap_cols = _table_columns(spark, pm)
     missing = [k for k in key_cols if k not in snap_cols]
     if missing:
         raise ValueError(f"key columns {missing} not in table schema")

@@ -20,9 +20,9 @@ from lvm_datapipe_spark.queries import QUERIES, _capped_baskets
 #: Spark jobs each query's build (``QUERIES[name](spark, sf)``) launches
 #: at the fixture's sf0.001
 BUILD_JOBS = {
-    "graph_kcore_parts": 11,
-    "dedup_clusters": 15,
-    "range_partition_boundaries": 4,
+    "graph_kcore_parts": 10,
+    "dedup_clusters": 14,
+    "range_partition_boundaries": 3,
 }
 
 

@@ -87,10 +87,11 @@ def _jobs_of(spark, group: str, argv: list[str]) -> int:
 
 def test_cli_stage_job_counts(spark, work, capsys):
     """Each video-pipeline stage launches only the jobs its output needs:
-    scenecut is one narrow write; score and export-flat are their write
-    plus the snapshot read's footer job, with the printed counts taken from
-    an Observation on the write; analyze is one aggregate.  Every printed
-    count equals an independent read of the stage's output."""
+    the snapshot read takes its schema from the footer on the driver, so it
+    launches none; scenecut, score and export-flat are one write each, with
+    the printed counts taken from an Observation on the write; analyze is
+    one aggregate.  Every printed count equals an independent read of the
+    stage's output."""
     from lvm_datapipe_spark.operators import analyze
 
     tag = uuid.uuid4().hex[:8]
@@ -99,11 +100,11 @@ def test_cli_stage_job_counts(spark, work, capsys):
     flat = str(work / "jobs_flat")
     stages = [
         ("scenecut", 1, ["scenecut", "--video-dir", videos, "--out", s0]),
-        ("score_motion", 2, ["score", "--snapshot", s0, "--out", s1, "--scorer", "motion"]),
-        ("score_ocr", 2, ["score", "--snapshot", s1, "--out", s2, "--scorer", "ocr"]),
-        ("resume_motion", 2, ["score", "--snapshot", s2, "--out", s3, "--scorer", "motion"]),
-        ("analyze", 3, ["analyze", "--snapshot", s3]),
-        ("export_flat", 2, ["export-flat", "--snapshot", s3, "--out", flat]),
+        ("score_motion", 1, ["score", "--snapshot", s0, "--out", s1, "--scorer", "motion"]),
+        ("score_ocr", 1, ["score", "--snapshot", s1, "--out", s2, "--scorer", "ocr"]),
+        ("resume_motion", 1, ["score", "--snapshot", s2, "--out", s3, "--scorer", "motion"]),
+        ("analyze", 2, ["analyze", "--snapshot", s3]),
+        ("export_flat", 1, ["export-flat", "--snapshot", s3, "--out", flat]),
     ]
     jobs, outs = {}, {}
     for name, _, argv in stages:
@@ -420,3 +421,28 @@ def test_cli_query_leaves_caller_session_unchanged(spark, sf_dir, capsys):
     assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows_shown"] == 3
     n_after, rdds_after = held_storage(spark)
     assert n_after == n_before and rdds_after <= rdds_before
+
+
+def test_cli_output_counts_come_from_the_write(spark, sf_dir, tmp_path, capsys):
+    """``query --out`` and ``tx-diff`` print the row count observed on their
+    own write instead of re-reading the output: query is its two-job
+    aggregate write; tx-diff is the delta read's footer job (a read over an
+    explicit file list still infers) plus the write.  Each printed count
+    equals an independent read of the output."""
+    tag = uuid.uuid4().hex[:8]
+    q_out = str(tmp_path / "q1")
+    argv = ["query", "--name", "q1_pricing_summary", "--sf-dir", sf_dir, "--out", q_out]
+    assert _jobs_of(spark, f"query-{tag}", argv) == 2
+    assert _last_json(capsys)["rows"] == spark.read.parquet(q_out).count() > 0
+
+    base, more = str(tmp_path / "base"), str(tmp_path / "more")
+    t, delta = str(tmp_path / "tbl"), str(tmp_path / "delta")
+    schema = "id long, val string"
+    spark.createDataFrame([(1, "a")], schema).write.parquet(base)
+    spark.createDataFrame([(2, "b"), (3, "c")], schema).write.parquet(more)
+    assert main(["tx-commit", "--table", base, "--out", t], spark=spark) == 0
+    assert main(["tx-commit", "--table", more, "--out", t, "--op", "append"],
+                spark=spark) == 0
+    argv = ["tx-diff", "--table", t, "--from", "1", "--to", "2", "--out", delta]
+    assert _jobs_of(spark, f"tx-diff-{tag}", argv) == 2
+    assert _last_json(capsys)["rows"] == spark.read.parquet(delta).count() == 2

@@ -458,3 +458,37 @@ def test_cli_tx_delete(spark, tmp_path, capsys):
     status = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert status["stage"] == "tx-delete" and status["deleted_rows"] == 1
     assert {r["id"] for r in txlog.read(spark, t).collect()} == {1, 3}
+
+
+def _lookup_jobs(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"txlog-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="columns"):
+            fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("manifest_columns", [True, False],
+                         ids=["manifest", "pre-columns-manifest"])
+def test_merge_and_delete_column_lookup_runs_no_job(spark, tmp_path, manifest_columns):
+    """merge and delete check columns against the table's names, taken from
+    the manifest or (older manifests) the first file's footer: a mismatch
+    raises before any Spark job runs."""
+    t = str(tmp_path / "tbl")
+    txlog.commit(spark, _df(spark, [(1, "a")]), t)
+    if not manifest_columns:
+        mp = txlog._manifest_path(t, 1)
+        m = json.load(open(mp))
+        del m["columns"]
+        json.dump(m, open(mp, "w"))
+    bad = spark.createDataFrame([(1,)], "id long")
+    assert _lookup_jobs(spark, lambda: txlog.merge(spark, bad, t, ["id"])) == 0
+    good = _df(spark, [(1, "a")])
+    assert _lookup_jobs(spark, lambda: txlog.merge(spark, good, t, ["nope"])) == 0
+    assert _lookup_jobs(spark, lambda: txlog.delete(spark, good, t, ["nope"])) == 0
