@@ -13,6 +13,14 @@ Each stage is idempotent and resumable: `score` re-runs only rows whose
 score column is null (plans.pipeline.run_stage), exactly the reference's
 done-marker semantics without marker files.
 
+The clip bytes are written once.  `scenecut` writes the clip table, with
+each clip's `content`, bucketed by `clip_id`; each `score` writes every
+column but `content`, bucketed the same way, and joins the bytes back
+from the clip table only for the rows it scores (a co-located merge join,
+no Exchange).  A `_clips.json` spec in each snapshot directory records the
+bucket count and the clip table's path, so the clip table must stay where
+scenecut wrote it while later snapshots are in use.
+
 Each stage prints one JSON status line.  The stages launch only the jobs
 their output needs: every parquet input is read with its schema taken from
 the footer on the driver (catalog.read_parquet), so reading it launches no
@@ -56,25 +64,36 @@ def _cmd_scenecut(spark, args) -> None:
         "n_frames",
     )
     staged, obs = pipeline.observed_stage(clips, "scenecut")
-    pipeline.write_snapshot(staged, args.out)
+    pipeline.write_clip_snapshot(staged, args.out)
     print(json.dumps({"stage": "scenecut", "clips": obs.get["n_rows"], "out": args.out}))
 
 
-def _cmd_score(spark, args) -> None:
-    snap = pipeline.read_snapshot(spark, args.snapshot)
+def _scored(spark, args):
+    """The score stage's output and the spec of its input: the input's
+    columns but ``content``, in the input's order, plus the score column.
+    Only the rows still to score get their clip bytes, joined back from the
+    clip table (pipeline.with_clip_bytes); scored rows pass through
+    untouched."""
+    snap, spec = pipeline.read_clip_snapshot(spark, args.snapshot)
     score_col = media.SCORERS[args.scorer][0]
 
     def scorer(df):
         sampled = media.with_sampled_frames(
-            df, policy=args.policy, stride=args.stride
+            pipeline.with_clip_bytes(df, spec["clips"]),
+            policy=args.policy, stride=args.stride,
         )
-        return media.apply_scorer(sampled, args.scorer).drop("frames")
+        return media.apply_scorer(sampled, args.scorer).select(*df.columns, score_col)
 
-    out = pipeline.run_stage(snap, scorer, score_col)
+    return pipeline.run_stage(snap, scorer, score_col).drop("content"), spec
+
+
+def _cmd_score(spark, args) -> None:
+    out, spec = _scored(spark, args)
+    score_col = media.SCORERS[args.scorer][0]
     staged, obs = pipeline.observed_stage(
         out, "score", F.count(score_col).alias("scored")
     )
-    pipeline.write_snapshot(staged, args.out)
+    pipeline.write_clip_snapshot(staged, args.out, spec["buckets"], spec["clips"])
     counts = obs.get
     print(
         json.dumps(

@@ -561,10 +561,11 @@ def candidate_pairs_from_band_store(
 ) -> DataFrame:
     """LSH candidate pairs from a :func:`write_band_store` table: the
     (band, bucket) self-join is co-located by the table's bucketing, so the
-    only shuffle in the whole query is the final pair ``distinct``."""
+    only shuffle in the whole query is the final pair ``distinct``.  The
+    ``merge`` hint keeps a small store from being broadcast instead."""
     t = spark.table(table)
     a = t.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = t.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    b = t.select(F.col(id_col).alias("id_b"), "band", "bucket").hint("merge")
     return (
         a.join(b, ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))

@@ -14,16 +14,36 @@ row (F4) and remain eligible for the next run.  The A8 count-consistency
 check (check_secne.py:12-27) needs each stage's row count: the CLI stages
 take it from an Observation on the stage's own write (``observed_stage``);
 ``assert_counts_consistent`` re-counts as a separate job.
+
+The reference re-reads the clip metadata at each stage and writes it back
+enriched; SURVEY.md §1.1 maps that to a columnar upsert.  Here the clip
+bytes are written once: scenecut writes the clip table bucketed and sorted
+by ``clip_id`` (``write_clip_snapshot``), and each score snapshot holds
+every column but ``content``, bucketed the same way.  A ``_clips.json``
+spec beside the data records the bucket count and the clip table's path;
+the rows a stage still has to score get their bytes back through a
+co-located merge join (``with_clip_bytes``).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lvm_datapipe_spark.catalog import read_parquet
+from lvm_datapipe_spark.catalog import _first_parquet_file, read_parquet
+from lvm_datapipe_spark.plans.bucketing import read_bucketed, write_bucketed
+
+#: The spec beside a clip snapshot's data files: ``{"buckets": n, "clips":
+#: path}``, the bucket count of the files (null when there are none to
+#: bucket) and the absolute path of the clip table that holds the rows'
+#: ``content``.  Spark's file listing and ``catalog._first_parquet_file``
+#: skip the leading ``_``.
+CLIP_SPEC = "_clips.json"
 
 
 def write_snapshot(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -40,6 +60,56 @@ def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
     """Read a snapshot with its schema taken from the footer on the driver
     (catalog.read_parquet): no schema-inference job."""
     return read_parquet(spark, path)
+
+
+def read_clip_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """A clip snapshot and its spec.  A bucketed snapshot is read as a
+    bucketed relation (plans/bucketing.read_bucketed: no Spark job, no
+    catalog table left), so a join on ``clip_id`` with its clip table
+    needs no Exchange.  A snapshot with no spec (written by other code) is
+    read plainly and is its own clip table."""
+    path = os.path.abspath(path)
+    try:
+        with open(os.path.join(path, CLIP_SPEC)) as f:
+            spec = json.load(f)
+    except FileNotFoundError:
+        spec = {"buckets": None, "clips": path}
+    if spec["buckets"] is None:
+        return read_snapshot(spark, path), spec
+    return read_bucketed(spark, path, "clip_id", spec["buckets"]), spec
+
+
+def write_clip_snapshot(
+    df: DataFrame, path: str, buckets: int | None = None, clips: str | None = None
+) -> None:
+    """Write a clip snapshot bucketed and sorted by ``clip_id``, then its
+    spec.  ``buckets`` defaults to the session's ``defaultParallelism``
+    (one scan task per bucket); ``clips`` is the clip table's path, ``path``
+    itself by default.  A write that sees no rows leaves no bucket file, so
+    an empty snapshot is rewritten as one schema-only file (a second job,
+    on empty input only) and stays readable."""
+    spark, path = df.sparkSession, os.path.abspath(path)
+    n = buckets or spark.sparkContext.defaultParallelism
+    write_bucketed(df, f"clips_{uuid.uuid4().hex}", "clip_id", n, path=path)
+    if _first_parquet_file(path) is None:
+        write_snapshot(spark.createDataFrame([], df.schema), path)
+        n = None
+    with open(os.path.join(path, CLIP_SPEC), "w") as f:
+        json.dump({"buckets": n, "clips": os.path.abspath(clips or path)}, f)
+
+
+def with_clip_bytes(df: DataFrame, clips: str) -> DataFrame:
+    """``df`` with each row's ``content`` from the clip table at ``clips``,
+    appended last; ``df`` itself when it still carries ``content`` (it is
+    its own clip table).  The left join keeps a row with no clip (its
+    scorer then yields null).  Its ``merge`` hint matters: both sides share
+    ``clip_id`` buckets, so the sort-merge join needs no Exchange, where
+    the broadcast Spark would otherwise pick for the small side costs one
+    more job per stage."""
+    if "content" in df.columns:
+        return df
+    content = read_clip_snapshot(df.sparkSession, clips)[0].select("clip_id", "content")
+    return df.join(content.hint("merge"), "clip_id", "left").select(*df.columns, "content")
 
 
 def run_stage(

@@ -12,7 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from lvm_datapipe_spark import fakevideo
-from lvm_datapipe_spark.cli import main
+from lvm_datapipe_spark.cli import _scored, build_parser, main
+from lvm_datapipe_spark.plans.bucketing import count_exchanges
 
 
 @pytest.fixture(scope="module")
@@ -37,10 +38,13 @@ def test_cli_full_pipeline(spark, work, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["scored"] == out["total"]
 
-    assert main(
-        ["score", "--snapshot", snap1, "--out", snap2, "--scorer", "aesthetic"],
-        spark=spark,
-    ) == 0
+    # the stage joins the clip bytes back co-located: a sort-merge join
+    # with no Exchange of any kind, shuffle or broadcast
+    argv = ["score", "--snapshot", snap1, "--out", snap2, "--scorer", "aesthetic"]
+    scored = _scored(spark, build_parser().parse_args(argv))[0]
+    assert "SortMergeJoin" in scored._jdf.queryExecution().executedPlan().toString()
+    assert count_exchanges(scored) == 0
+    assert main(argv, spark=spark) == 0
     capsys.readouterr()
 
     # resume semantics: scoring an already-scored snapshot changes nothing
@@ -85,17 +89,41 @@ def _jobs_of(spark, group: str, argv: list[str]) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _output_bytes(spark, group: str) -> int:
+    """Bytes the job group's stages wrote to output files, from the status
+    store."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    total = 0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        sids = store.job(jid).stageIds()
+        for k in range(sids.size()):
+            total += int(store.lastStageAttempt(sids.apply(k)).outputBytes())
+    return total
+
+
 def test_cli_stage_job_counts(spark, work, capsys):
     """Each video-pipeline stage launches only the jobs its output needs:
     the snapshot read takes its schema from the footer on the driver, so it
     launches none; scenecut, score and export-flat are one write each, with
     the printed counts taken from an Observation on the write; analyze is
     one aggregate.  Every printed count equals an independent read of the
-    stage's output."""
+    stage's output.  The clip bytes are written once, by scenecut: a score
+    snapshot has no ``content`` and writes under 2% of scenecut's bytes.
+    The frames here are 16x the default so that the clip bytes, not the
+    parquet footer of each bucket file, dominate scenecut's output at any
+    bucket count.  No stage leaves a catalog table behind."""
     from lvm_datapipe_spark.operators import analyze
 
     tag = uuid.uuid4().hex[:8]
-    videos = str(work / "videos")
+    videos = work / "big_videos"
+    videos.mkdir(exist_ok=True)
+    for vid in (f"bigv_{i}" for i in range(5)):
+        frames = fakevideo.generate(vid, height=96, width=128)
+        (videos / f"{vid}.fvid").write_bytes(fakevideo.encode(frames))
+    videos = str(videos)
     s0, s1, s2, s3 = (str(work / f"jobs_s{i}") for i in range(4))
     flat = str(work / "jobs_flat")
     stages = [
@@ -106,19 +134,25 @@ def test_cli_stage_job_counts(spark, work, capsys):
         ("analyze", 2, ["analyze", "--snapshot", s3]),
         ("export_flat", 1, ["export-flat", "--snapshot", s3, "--out", flat]),
     ]
-    jobs, outs = {}, {}
+    tables = spark.catalog.listTables()
+    jobs, outs, written = {}, {}, {}
     for name, _, argv in stages:
         jobs[name] = _jobs_of(spark, f"{name}-{tag}", argv)
+        written[name] = _output_bytes(spark, f"{name}-{tag}")
         outs[name] = _last_json(capsys)
+        assert spark.catalog.listTables() == tables, name
     assert jobs == {name: n for name, n, _ in stages}
 
     n_clips = spark.read.parquet(s0).count()
     assert outs["scenecut"]["clips"] == n_clips > 0
+    assert "content" in spark.read.parquet(s0).columns
     for name, snap in [("score_motion", s1), ("score_ocr", s2), ("resume_motion", s3)]:
         done = spark.read.parquet(snap)
         col = outs[name]["column"]
         assert outs[name]["total"] == done.count() == n_clips
         assert outs[name]["scored"] == done.filter(F.col(col).isNotNull()).count()
+        assert "content" not in done.columns
+        assert 0 < written[name] < 0.02 * written["scenecut"], (name, written)
     snap = spark.read.parquet(s3)
     assert outs["analyze"]["stats"] == analyze.duration_stats(snap).first().asDict()
     assert outs["analyze"]["histogram"] == {
@@ -127,9 +161,11 @@ def test_cli_stage_job_counts(spark, work, capsys):
     assert outs["export_flat"]["rows"] == spark.read.json(flat).count() == n_clips
 
 
-def test_cli_score_counts_failed_rows(spark, work, capsys):
+def test_cli_score_counts_failed_rows(spark, work, capsys, monkeypatch):
     """A row whose scorer fails keeps a null score: the observed ``scored``
-    count leaves it out, ``total`` keeps it."""
+    count leaves it out, ``total`` keeps it.  A plain snapshot (no clip
+    spec) is its own clip table, and what scoring it writes (here to a
+    relative path) scores again."""
     good = str(work / "fail_s0")
     assert main(["scenecut", "--video-dir", str(work / "videos"), "--out", good],
                 spark=spark) == 0
@@ -148,6 +184,16 @@ def test_cli_score_counts_failed_rows(spark, work, capsys):
     assert out["total"] == done.count() == snap.count() + 1
     assert out["scored"] == done.filter(F.col("of_score").isNotNull()).count()
     assert out["scored"] == out["total"] - 1
+    again = str(work / "fail_s3")
+    monkeypatch.chdir(work)
+    assert main(["score", "--snapshot", "fail_s2", "--out", "fail_s3", "--scorer", "ocr"],
+                spark=spark) == 0
+    out = _last_json(capsys)
+    done = spark.read.parquet(again)
+    assert out["total"] == done.count() == snap.count() + 1
+    assert out["scored"] == done.filter(F.col("ocr_score").isNotNull()).count()
+    assert out["scored"] == out["total"] - 1
+    assert done.filter(F.col("of_score").isNull()).select("clip_id").first()[0] == "junk_0000000"
 
 
 def test_cli_analyze_matches_separate_aggregates(spark, tmp_path, capsys):
@@ -200,6 +246,13 @@ def test_cli_scenecut_no_decodable_video(spark, tmp_path, capsys):
     out = _last_json(capsys)
     assert out == {"stage": "scenecut", "clips": 0, "out": out_dir}
     assert spark.read.parquet(out_dir).count() == 0
+    # the empty snapshot stays scorable, and so does what scoring it writes
+    scored = str(tmp_path / "s1")
+    for snap, dest in [(out_dir, scored), (scored, str(tmp_path / "s2"))]:
+        assert main(["score", "--snapshot", snap, "--out", dest, "--scorer", "motion"],
+                    spark=spark) == 0
+        assert {k: v for k, v in _last_json(capsys).items() if k in ("scored", "total")} \
+            == {"scored": 0, "total": 0}
 
 
 def test_cli_curate_matches_query_semantics(spark, work, capsys):
