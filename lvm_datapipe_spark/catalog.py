@@ -156,6 +156,32 @@ _MIN_SPLIT_BYTES = 128 * 1024
 _REBALANCE_CACHE: dict[str, bool] = {}
 
 
+def table_row_count(sf_dir: str, name: str) -> int | None:
+    """The row count of a table, summed from its parquet footers
+    (``num_rows``) on the driver: no Spark job.  Every data file under the
+    table is counted (Spark's listing skips ``_``/``.`` names), so the sum
+    bounds any scan of the table from above.  None when a footer is
+    unreadable or the table is missing."""
+    import pyarrow.parquet as pq
+
+    path = table_path(sf_dir, name)
+    if not os.path.isdir(path):
+        files = [path]
+    else:
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            files += [
+                os.path.join(root, n)
+                for n in sorted(names)
+                if n.endswith(".parquet") and not n.startswith(("_", "."))
+            ]
+    try:
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except (OSError, ValueError):
+        return None
+
+
 def _scan_parallelism_limit(path: str) -> int:
     """Upper bound on scan partitions: total row groups across the table's
     files (Spark can split parquet only at row-group boundaries)."""

@@ -43,6 +43,7 @@ def exact_percentiles_driver(
     col: str,
     fractions: list[float],
     max_rows: int | None = None,
+    row_bound: int | None = None,
 ) -> list[float] | None:
     """Exact linear-interpolated percentiles of a DOUBLE column computed on
     the driver — bit-identical to Spark's ``percentile()`` aggregate (and
@@ -58,7 +59,17 @@ def exact_percentiles_driver(
     sf0.1 while the Arrow column collect + ``np.sort`` costs ~1 s.  Same
     size-gated driver-finish pattern as the dense triangle kernel; returns
     ``None`` above the row gate (or on an empty column — the caller's
-    distributed aggregate handles both)."""
+    distributed aggregate handles both).
+
+    ``row_bound`` is an upper bound on ``df``'s rows the caller already
+    knows without a Spark job (a table's parquet footer row count,
+    ``catalog.table_row_count``), as ``graph.triangle_counts_driver_dense``
+    takes ``raw_count``.  At or under the gate the kernel collects the
+    non-null column once and takes ``n`` from the array: one collect job,
+    no count.  Without a bound, or above the gate, it counts the non-null
+    rows first (two jobs) and collects only at or under the gate.  (A
+    ``limit(max_rows + 1)`` collect is no cheaper: on a multi-partition
+    input it plans a single-partition exchange of every row.)"""
     import os
 
     import numpy as np
@@ -67,15 +78,15 @@ def exact_percentiles_driver(
         max_rows = int(
             os.environ.get("SPARK_GRAFT_DRIVER_PCT_MAX_ROWS", DRIVER_PCT_MAX_ROWS)
         )
-    n = df.where(F.col(col).isNotNull()).count()
-    if n == 0 or n > max_rows:
+    values = df.where(F.col(col).isNotNull()).select(F.col(col).cast("double").alias("v"))
+    if row_bound is None or row_bound > max_rows:
+        n = values.count()
+        if n == 0 or n > max_rows:
+            return None
+    arr = np.sort(values.toPandas()["v"].to_numpy())
+    n = len(arr)
+    if n == 0:
         return None
-    arr = np.sort(
-        df.where(F.col(col).isNotNull())
-        .select(F.col(col).cast("double").alias("v"))
-        .toPandas()["v"]
-        .to_numpy()
-    )
     out = []
     for p in fractions:
         pos = p * (n - 1)

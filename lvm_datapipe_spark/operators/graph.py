@@ -69,6 +69,26 @@ def fresh_local_checkpoint(df: DataFrame) -> DataFrame:
     return DataFrame(fresh, spark)
 
 
+def observed_checkpoint(
+    df: DataFrame, *metrics, fresh: bool = False
+) -> tuple[DataFrame, dict]:
+    """Eager local checkpoint of ``df`` and the metrics observed by the job
+    that built it: ``n_rows`` plus any ``metrics`` (named aggregate
+    columns), read from an ``Observation`` on the checkpoint job
+    (plans.pipeline.observed_stage), so a size gate on the checkpoint
+    costs no job of its own.  The observation reports on empty input
+    (``n_rows`` 0).  Each call observes under its own name, so repeated
+    and nested calls in one session never read each other's metrics.
+    ``fresh=True`` checkpoints with :func:`fresh_local_checkpoint`."""
+    import uuid
+
+    from lvm_datapipe_spark.plans.pipeline import observed_stage
+
+    staged, obs = observed_stage(df, f"checkpoint-{uuid.uuid4().hex}", *metrics)
+    ck = fresh_local_checkpoint(staged) if fresh else staged.localCheckpoint()
+    return ck, obs.get
+
+
 def partitioned_local_checkpoint(df: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` that KEEPS ``df``'s hash partitioning.
 
@@ -189,19 +209,22 @@ def kcore(
     within the current alive set.  The fixpoint is observed the round
     the doomed frontier empties.
 
-    Set-up: the symmetric edge list is built in ONE pass over ``edges``
-    (each edge emits ``(u, v)`` and ``(v, u)`` through ``inline``), made
-    distinct, and checkpointed eagerly with
-    :func:`fresh_local_checkpoint`: every round reads it, and a
-    ``.persist()``ed table read twice in one plan would re-run its cache
-    stage per reference (ARCHITECTURE.md §3).  Duplicate and reversed
-    input edges are harmless; the caller need not dedup.
+    Set-up: the symmetric edge list is built in ONE pass over ``edges``:
+    a distinct over each edge's canonical orientation (E rows, not 2E),
+    then both orientations emitted after that shuffle (a self-loop once),
+    checkpointed eagerly with :func:`fresh_local_checkpoint`: every round
+    reads it, and a ``.persist()``ed table read twice in one plan would
+    re-run its cache stage per reference (ARCHITECTURE.md §3).  Duplicate
+    and reversed input edges are harmless; the caller need not dedup.
 
-    Scale shape per round: one doomed-frontier count, one
-    frontier-keyed filter pass over the symmetric edge list (broadcast
-    below ``KCORE_BROADCAST_DOOMED_MAX``), one small decrement
-    aggregate and one anti/left join on the node-sized state — no
-    cartesian, no driver-side graph.  The per-round truncation uses
+    Scale shape per round: one state checkpoint whose own job also counts
+    the doomed frontier (an observed ``count_if(deg < k)``, see
+    :func:`observed_checkpoint`: no count job), one frontier checkpoint
+    (only when that count is non-zero), one frontier-keyed filter pass
+    over the symmetric edge list (broadcast below
+    ``KCORE_BROADCAST_DOOMED_MAX``), one small decrement aggregate and one
+    anti/left join on the node-sized state — no cartesian, no
+    driver-side graph.  The per-round truncation uses
     :func:`fresh_local_checkpoint`, NOT the plain ``localCheckpoint``:
     each round joins two references of the previous round's state, which
     would otherwise DOUBLE the carried Catalyst size estimate's digit
@@ -219,31 +242,49 @@ def kcore(
     neighbor are returned (``core_degree >= 1``; on a converged exit
     every degree is ≥ k anyway).  An empty state table is the fixpoint
     by definition, so a core that empties in the final round reads
-    converged.  ``stats`` (a dict, optional) receives ``rounds``,
+    converged (its row count is observed on the same checkpoint job).
+    ``stats`` (a dict, optional) receives ``rounds``,
     ``checks`` and ``converged``."""
+    # one row per unordered edge: the distinct runs on the canonical
+    # orientation (null endpoint last), E rows instead of 2E, and both
+    # orientations are emitted after its shuffle (a self-loop once)
+    lo = F.col(src).isNull() | (F.col(dst) < F.col(src))
+    canon = edges.select(
+        F.when(lo, F.col(dst)).otherwise(F.col(src)).alias("a"),
+        F.when(lo, F.col(src)).otherwise(F.col(dst)).alias("b"),
+    ).distinct()
     sym = fresh_local_checkpoint(
-        edges.select(
+        canon.select(
             F.inline(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                F.array_distinct(
+                    F.array(
+                        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+                        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+                    )
                 )
             )
-        ).distinct()
+        )
     )
-    deg = fresh_local_checkpoint(
+
+    def _state(df: DataFrame) -> tuple[DataFrame, dict]:
+        # the state checkpoint's own job counts its doomed frontier
+        return observed_checkpoint(
+            df, F.count_if(F.col("deg") < k).alias("n_doomed"), fresh=True
+        )
+
+    deg, seen = _state(
         sym.groupBy(F.col("u").alias("p"))
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
     rounds = checks = 0
     converged = False
     for _ in range(max_rounds):
-        doomed = deg.filter(F.col("deg") < k).select("p").localCheckpoint()
         checks += 1
-        n_doomed = doomed.count()
+        n_doomed = seen["n_doomed"]
         if n_doomed == 0:
             converged = True
             break
+        doomed = deg.filter(F.col("deg") < k).select("p").localCheckpoint()
         d_dec = doomed.select(F.col("p").alias("_d"))
         d_anti = doomed.select(F.col("p").alias("_dp"))
         if n_doomed <= KCORE_BROADCAST_DOOMED_MAX:
@@ -253,7 +294,7 @@ def kcore(
             .groupBy(F.col("u").alias("p"))
             .agg(F.count(F.lit(1)).cast("long").alias("dec"))
         )
-        deg = fresh_local_checkpoint(
+        deg, seen = _state(
             deg.join(d_anti, F.col("_dp") == F.col("p"), "left_anti")
             .join(dec, "p", "left")
             .select(
@@ -264,9 +305,9 @@ def kcore(
             )
         )
         rounds += 1
-    if not converged and deg.isEmpty():
+    if not converged and seen["n_rows"] == 0:
         # an EMPTY state table is definitionally the fixpoint (nothing left
-        # to peel); only paid on the exhaustion path
+        # to peel)
         converged = True
     if not converged:
         import warnings
@@ -495,9 +536,11 @@ def connected_components(
     Scale shape: each half-round is one groupBy(u) + one keyed join (the
     emitted edge list), dedup'd, with ``localCheckpoint`` lineage
     truncation; convergence is detected by a scalar (count,
-    xxhash64-xor) signature of the canonical parent-edge set — no
-    pairwise old-vs-new comparison.  SCALE_BENCH §16, §17 and §19 hold
-    the measured history against the retired min-label engine.
+    xxhash64-xor) signature of the canonical parent-edge set, observed
+    on the job that checkpoints it (:func:`observed_checkpoint`: no
+    aggregate job per round) — no pairwise old-vs-new comparison.
+    SCALE_BENCH §16, §17 and §19 hold the measured history against the
+    retired min-label engine.
 
     ``assume_symmetric=True`` asserts the caller's pair list already
     contains BOTH orientations of every edge (e.g. a grid/band self-join
@@ -515,9 +558,10 @@ def connected_components(
     (the parent set at every round spans the same components as the
     input, the contraction invariant the algorithm's correctness rests
     on).  The gate is also checked at ROUND 0: an input edge list already
-    within the bound is union-found directly (one count job instead of
-    distributed rounds; at scale the gate does not fire and the loop runs
-    unchanged).  ``None`` disables the gate (pure distributed loop).
+    within the bound is union-found directly (its edge count is observed
+    on the pair-list checkpoint, so the gate costs no job; at scale the
+    gate does not fire and the loop runs unchanged).  ``None`` disables
+    the gate (pure distributed loop).
     ``stats`` (a dict, optional) receives ``rounds`` and
     ``driver_finish``."""
     # one materialization of the raw pair list: BOTH branches below (the
@@ -525,9 +569,10 @@ def connected_components(
     # the checkpointed form, so the upstream pair pipeline (often an LSH /
     # grid-join build) is scanned exactly once — same source-pass count as
     # before the self-loop fix
-    p0 = pairs.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint()
+    p0, seen = observed_checkpoint(
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        F.count_if(F.col("u") != F.col("v")).alias("n_edges"),
+    )
     # self-loop pairs carry no connectivity but DO declare the node: a node
     # whose only pairs are self-loops must surface as its own singleton
     # cluster (incremental_components' self-star rows rely on this) —
@@ -543,11 +588,10 @@ def connected_components(
         # loop would run is pure overhead — the same union-find that
         # finishes the late rounds labels the input directly (it needs
         # neither parent orientation nor deduplication, and the gate
-        # bounds the collect exactly as it does mid-loop).  One count
-        # over the p0 checkpoint replaces up to two full-graph shuffle
-        # rounds; at scale the count is trivial next to one round and
-        # the gate simply does not fire.
-        if e0.count() <= driver_finish_max_edges:
+        # bounds the collect exactly as it does mid-loop).  The p0
+        # checkpoint's own job counted its non-self-loop edges, so the
+        # gate costs no job; at scale it simply does not fire.
+        if seen["n_edges"] <= driver_finish_max_edges:
             finished_on_driver = True
             uf_edges = e0
     if uf_edges is not None:
@@ -562,13 +606,6 @@ def connected_components(
         edges = e0.union(
             e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).distinct().localCheckpoint()
-
-    def _sig(parent_edges: DataFrame):
-        r = parent_edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
 
     prev_sig = None
     for _ in (range(max_rounds) if uf_edges is None else ()):
@@ -594,14 +631,15 @@ def connected_components(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         ss_self = smins.select("u", F.col("m").alias("v"))
-        par = (
+        # the parent set's checkpoint job also takes its signature
+        par, seen = observed_checkpoint(
             ss_children.unionAll(ss_self)
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
         )
         rounds += 1
-        sig = _sig(par)
+        sig = (seen["n_rows"], seen["h"])
         if sig == prev_sig:
             break
         if (
@@ -625,9 +663,9 @@ def connected_components(
     if finished_on_driver:
         # gated finish: the collected edge set (the raw input at round 0,
         # or the round's parent set mid-loop) spans the same components
-        # as the input, so one union-find over its (bounded,
-        # just-counted) rows yields the final (node, component-min) map
-        # directly — no more distributed rounds.  Path-halving find,
+        # as the input, so one union-find over its (bounded, observed)
+        # rows yields the final (node, component-min) map directly — no
+        # more distributed rounds.  Path-halving find,
         # union by lesser root id (the label IS the min, so roots are
         # kept as minima); duplicate rows and either orientation are
         # harmless to union-find.

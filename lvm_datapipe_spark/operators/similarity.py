@@ -270,6 +270,22 @@ def auto_n_planes(n_rows: int, target_occupancy: int = 100, p_max: int = 16) -> 
     return p
 
 
+def _observed_corpus(
+    emb: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, int]:
+    """The projected ``(id, vector)`` corpus as an eager checkpoint, and its
+    row count observed on the job that built it (graph.observed_checkpoint:
+    no count job).  The auto-sizing paths size the plane budget from that
+    count, and every table they build then reads the checkpoint instead of
+    re-running the corpus scan (and its rebalance shuffle)."""
+    from lvm_datapipe_spark.operators.graph import observed_checkpoint
+
+    corpus, seen = observed_checkpoint(
+        emb.select(F.col(id_col), as_double(vec_col).alias(vec_col))
+    )
+    return corpus, seen["n_rows"]
+
+
 def lsh_ann_candidates(
     emb: DataFrame,
     n_planes: int | None = 4,
@@ -301,13 +317,17 @@ def lsh_ann_candidates(
     as an eager ``localCheckpoint`` (not a ``persist()``, which Spark
     4.1.2 would run once per join side — ARCHITECTURE.md §3); its blocks
     live until the caller's sink, and session.query_scope frees them.
+    ``n_planes=None`` sizes the plane budget (:func:`auto_n_planes`) from
+    the corpus row count, observed on an eager checkpoint of the projected
+    corpus that the bucket table then reads: no count job.
     """
     if n_planes is None:
-        # production auto-sizing: ONE metadata-sized count decides the
-        # plane budget (the IVF-probe rule: scalar driver decisions are
-        # fine, data never is).  Pass an explicit n_planes where the query
-        # must be statically oracle-replayable (the declared queries do).
-        n_planes = auto_n_planes(emb.count())
+        # production auto-sizing: the corpus row count decides the plane
+        # budget (the IVF-probe rule: scalar driver decisions are fine,
+        # data never is).  It is observed on the corpus checkpoint the
+        # bucket table then reads, so it costs no job of its own.
+        emb, n_rows = _observed_corpus(emb, id_col, vec_col)
+        n_planes = auto_n_planes(n_rows)
     entries = []
     # fold dots for the plane literals — see hyperplane_lsh_buckets for the
     # janino 64 KB rationale (n_tables × n_planes flat trees in one
@@ -356,9 +376,13 @@ def lsh_near_dup_pairs(
     cosine).  Verify normalizes each vector ONCE (|corpus| rows, an eager
     ``localCheckpoint`` read by both verify joins — see
     :func:`embedding_near_dup_pairs` for why the barrier matters) so the
-    per-candidate work is a single flat dot, not three.  Both the bucket
-    table and the unit vectors are checkpoints, so the result holds no
-    cached relation.
+    per-candidate work is a single flat dot, not three.  The projected
+    ``(id, vector)`` corpus is checkpointed once, with its row count
+    observed on that job; ``n_planes=None`` sizes the plane budget from
+    that count (:func:`auto_n_planes`: no count job), and both the bucket
+    table and the unit vectors read the checkpoint, so the corpus scan
+    and its rebalance shuffle run once.  All three are checkpoints, so the
+    result holds no cached relation.
 
     SIZING RULE (measured, SCALE_BENCH.md §1): keep per-table bucket
     occupancy roughly constant by growing ``n_planes`` ≈ log2(n/100) with
@@ -374,10 +398,13 @@ def lsh_near_dup_pairs(
     # shuffling the full candidate set first.  cos_sim is a pure function
     # of the pair, so the result set is identical (measured 1.75× with the
     # int bucket keys at sf0.1, where 2k vectors make 1.5M collisions).
+    corpus, n_rows = _observed_corpus(emb, id_col, vec_col)
+    if "n_planes" in lsh_kwargs and lsh_kwargs["n_planes"] is None:
+        lsh_kwargs["n_planes"] = auto_n_planes(n_rows)
     cand = lsh_ann_candidates(
-        emb, id_col=id_col, vec_col=vec_col, dim=dim, dedup=False, **lsh_kwargs
+        corpus, id_col=id_col, vec_col=vec_col, dim=dim, dedup=False, **lsh_kwargs
     )
-    u = unit_vectors(emb, id_col, vec_col, dim=dim).localCheckpoint()
+    u = unit_vectors(corpus, id_col, vec_col, dim=dim).localCheckpoint()
     a = u.select(F.col(id_col).alias("id_a"), F.col("vn").alias("va"))
     b = u.select(F.col(id_col).alias("id_b"), F.col("vn").alias("vb"))
     return (

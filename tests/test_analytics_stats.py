@@ -890,6 +890,97 @@ def test_exact_percentiles_driver_gates(spark):
     assert exact_percentiles_driver(empty, "v", [0.5]) is None
 
 
+def test_exact_percentiles_driver_gate_boundary(spark):
+    """The row gate at exactly the non-null row count n and at n - 1, on
+    the bound path (the caller passes an upper bound on the rows, here the
+    total row count N > n) and on the count path (no bound): at the gate
+    both paths give Spark's ``percentile`` values, one under it both give
+    None.  With the gate at N the bound path collects without a count and
+    takes n from the collected array."""
+    from pyspark.sql import functions as F
+
+    from lvm_datapipe_spark.operators.aggregates import exact_percentiles_driver
+
+    df = spark.range(0, 240, numPartitions=4).select(
+        F.when(F.col("id") % 17 == 0, F.lit(None))
+        .otherwise((F.col("id") * 7919 % 1000) / 7.0)
+        .alias("v")
+    )
+    total = 240
+    n = df.where(F.col("v").isNotNull()).count()
+    assert 0 < n < total
+    fracs = [x / 32.0 for x in range(1, 32)] + [0.0, 1.0]
+    fl = ", ".join(repr(f) for f in fracs)
+    want = list(df.agg(F.expr(f"percentile(v, array({fl}))")).collect()[0][0])
+    for bound in (total, None):
+        got = exact_percentiles_driver(df, "v", fracs, max_rows=n, row_bound=bound)
+        assert got == want, bound
+        under = exact_percentiles_driver(
+            df, "v", fracs, max_rows=n - 1, row_bound=bound
+        )
+        assert under is None, bound
+    assert (
+        exact_percentiles_driver(df, "v", fracs, max_rows=total, row_bound=total)
+        == want
+    )
+    # an all-null column under the bound: n is 0, so no driver answer
+    nulls = df.where(F.col("v").isNull())
+    assert exact_percentiles_driver(nulls, "v", fracs, row_bound=total) is None
+
+
+def test_exact_percentiles_driver_bound_path_runs_one_job(spark):
+    """At or under the gate the bound path is one collect job; the count
+    path is a count (its map stage and result job) and then the collect."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from lvm_datapipe_spark.operators.aggregates import exact_percentiles_driver
+
+    df = spark.range(0, 500, numPartitions=4).select(
+        (F.col("id") * 31 % 97).cast("double").alias("v")
+    )
+    sc = spark.sparkContext
+
+    def jobs(bound):
+        group = f"pct-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            got = exact_percentiles_driver(df, "v", [0.5], row_bound=bound)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bound_got, bound_jobs = jobs(500)
+    count_got, count_jobs = jobs(None)
+    assert bound_got == count_got
+    assert bound_jobs == 1 and count_jobs > bound_jobs, (bound_jobs, count_jobs)
+
+
+def test_table_row_count_reads_footers(tmp_path):
+    """catalog.table_row_count sums the footers' row counts of every data
+    file under a table (nested partition directories included, ``_`` and
+    ``.`` names skipped, as Spark lists them), and is None for a missing
+    table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lvm_datapipe_spark.catalog import table_row_count
+
+    flat = tmp_path / "flat.parquet"
+    pq.write_table(pa.table({"x": list(range(7))}), flat)
+    assert table_row_count(str(tmp_path), "flat") == 7
+    nested = tmp_path / "nested.parquet"
+    for part, rows in (("d=1", 3), ("d=2", 4)):
+        (nested / part).mkdir(parents=True)
+        pq.write_table(pa.table({"x": list(range(rows))}), nested / part / "f.parquet")
+    (nested / "_tmp").mkdir()
+    pq.write_table(pa.table({"x": [1]}), nested / "_tmp" / "f.parquet")
+    pq.write_table(pa.table({"x": [1]}), nested / ".hidden.parquet")
+    assert table_row_count(str(tmp_path), "nested") == 7
+    assert table_row_count(str(tmp_path), "missing") is None
+
+
 def test_range_partition_boundaries_env_gate_fallback(spark, monkeypatch):
     from lvm_datapipe_spark.queries import QUERIES as Q
 

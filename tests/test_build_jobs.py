@@ -5,8 +5,11 @@ Such an intermediate (the capped basket table, the k-core symmetric edge
 list, the LSH bucket and unit-vector tables, the MinHash band table) is an
 eager ``localCheckpoint``, not a ``persist()`` (ARCHITECTURE.md §3): it is
 built once, inside the query build, and leaves nothing in the cache
-manager.  The job counts below are exact, like the CLI stage counts in
-tests/test_cli.py: a count that moves means the build's plan moved.
+manager.  No size gate in these builds runs a count job of its own: each
+reads its count from an Observation on the checkpoint that builds its
+input, or from the table's parquet footers (ARCHITECTURE.md §3).  The job
+counts below are exact, like the CLI stage counts in tests/test_cli.py: a
+count that moves means the build's plan moved.
 """
 
 from __future__ import annotations
@@ -20,9 +23,9 @@ from lvm_datapipe_spark.queries import QUERIES, _capped_baskets
 #: Spark jobs each query's build (``QUERIES[name](spark, sf)``) launches
 #: at the fixture's sf0.001
 BUILD_JOBS = {
-    "graph_kcore_parts": 10,
-    "dedup_clusters": 14,
-    "range_partition_boundaries": 3,
+    "graph_kcore_parts": 7,
+    "dedup_clusters": 9,
+    "range_partition_boundaries": 1,
 }
 
 
@@ -48,6 +51,23 @@ def test_build_job_counts_leave_no_cached_relation(spark, sf_dir):
     assert jobs == BUILD_JOBS
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.cachedData().size() == 0
+
+
+def test_dedup_representatives_rebuild_same_rows_and_jobs(spark, sf_dir):
+    """dedup_representatives chains two observed gates in one build (the
+    LSH plane budget, then the connected-components round-0 gate).  Built
+    twice in one session it must give the same rows from the same number
+    of build jobs: an observation read under a clashing name, or a stale
+    one from the first build, would change either."""
+    from lvm_datapipe_spark.session import query_scope
+
+    runs = []
+    for _ in range(2):
+        with query_scope(spark):
+            df, jobs = _build(spark, "dedup_representatives", sf_dir)
+            runs.append((jobs, sorted(map(tuple, df.collect()))))
+    assert runs[0] == runs[1]
+    assert runs[0][0] > 0 and len(runs[0][1]) > 0
 
 
 def test_basket_self_join_reads_the_checkpoint_without_exchange(spark, sf_dir):

@@ -127,6 +127,44 @@ def test_keep_representatives(spark):
     assert kept == {0, 1, 2, 4}
 
 
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # a forest (5 edges over 7 nodes in 2 components) plus a
+        # duplicated self-loop on a member and a self-loop-only node: the
+        # parent set never drops under its 5 spanning edges, so one under
+        # the gate the driver finish never fires
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (3, 3), (3, 3), (20, 20)],
+        # duplicate and reversed edges count toward the round-0 gate as
+        # raw rows; one under it, the loop runs a round first
+        [(1, 2), (2, 1), (1, 2), (2, 3), (3, 3), (5, 5), (6, 7), (7, 8), (8, 6)],
+    ],
+)
+def test_cc_round0_gate_boundary(spark, rows):
+    """``driver_finish_max_edges`` at the non-self-loop edge count E (the
+    count observed on the pair-list checkpoint) finishes on the driver at
+    round 0; at E - 1 the distributed loop runs.  Labels equal union-find
+    both ways, self-loop-only nodes included."""
+    n_edges = sum(1 for a, b in rows if a != b)
+    expect = _uf_components(rows)
+    nodes = {x for r in rows for x in r}
+    forest = n_edges == len(nodes) - len(set(expect.values()))
+    for gate in (n_edges, n_edges - 1):
+        st: dict = {}
+        got = {
+            r.id: r.cluster_id
+            for r in connected_components(
+                _pairs(spark, rows), driver_finish_max_edges=gate, stats=st
+            ).collect()
+        }
+        assert got == expect, gate
+        if gate == n_edges:
+            assert st == {"rounds": 0, "driver_finish": True}
+        else:
+            assert st["rounds"] >= 1
+            assert st["driver_finish"] is not forest, st
+
+
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_plan_no_cartesian(spark):
     rows = [(1, 2), (2, 3)]
@@ -956,6 +994,48 @@ def test_kcore_empty_edge_list(spark):
     assert stats["converged"] is True and stats["rounds"] == 0
 
 
+def test_kcore_frontier_gate_cases(spark):
+    """The doomed-frontier count is observed on each state checkpoint.
+    Three cases: a frontier empty at round 0 (no peel round), a peel of
+    two or more rounds, and a max_rounds exhaustion whose last state is
+    empty, which is the fixpoint and must read converged with no
+    warning."""
+    import warnings
+
+    from lvm_datapipe_spark.operators.graph import kcore
+
+    def run(rows, k, max_rounds=30):
+        st: dict = {}
+        e = spark.createDataFrame(rows, ["u", "v"])
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always", UserWarning)
+            got = {
+                (r.node, r.core_degree)
+                for r in kcore(e, k=k, max_rounds=max_rounds, stats=st).collect()
+            }
+        assert not [w for w in caught if "max_rounds" in str(w.message)]
+        return got, st
+
+    triangle = [(1, 2), (2, 3), (1, 3)]
+    got, st = run(triangle, 2)
+    assert got == {(1, 2), (2, 2), (3, 2)}
+    assert st == {"rounds": 0, "checks": 1, "converged": True}
+
+    # a triangle with a 3-edge pendant chain: the chain peels from its
+    # free end, one node per round
+    rows = triangle + [(3, 4), (4, 5), (5, 6)]
+    got, st = run(rows, 2)
+    assert got == set(_kcore_reference(rows, 2).items())
+    assert st["rounds"] >= 2 and st["converged"] is True
+    assert st["checks"] == st["rounds"] + 1
+
+    # a 4-node path at k=2 empties in exactly 2 rounds: ends, then the rest
+    path = [(1, 2), (2, 3), (3, 4)]
+    got, st = run(path, 2, max_rounds=2)
+    assert got == set()
+    assert st == {"rounds": 2, "checks": 2, "converged": True}
+
+
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_kcore_matches_reference_on_random_graphs(spark):
     """Converged (node, core_degree) sets on random graphs equal the
@@ -1109,6 +1189,26 @@ def test_kcore_engines_agree_with_self_loops_and_duplicates(spark):
     got = {(r.node, r.core_degree) for r in kcore(e, k=2, stats=st).collect()}
     assert got == set(_kcore_reference(rows, 2).items())
     assert st["converged"] is True
+
+
+def test_kcore_reversed_edge_with_null_endpoint_is_harmless(spark):
+    """Reversed duplicates stay harmless when an endpoint is NULL: the
+    canonical orientation puts the null last, so (NULL, 1) and (1, NULL)
+    are one edge and node 1's degree counts it once."""
+    from lvm_datapipe_spark.operators.graph import kcore
+
+    tri = [(1, 2), (2, 3), (1, 3)]
+    schema = "u long, v long"
+    got = []
+    for rows in (tri + [(None, 1)], tri + [(None, 1), (1, None), (1, None)]):
+        e = spark.createDataFrame(rows, schema)
+        # a NULL node never matches its own frontier, so the peel cannot
+        # reach its fixpoint; one round is enough to compare degrees
+        with pytest.warns(UserWarning, match="max_rounds"):
+            out = kcore(e, k=2, max_rounds=1)
+            got.append({(r.node, r.core_degree) for r in out.collect()})
+    assert got[0] == got[1]
+    assert (1, 3) in got[0]
 
 
 def test_geo_dbscan_subcell_contraction_invariants(spark):
