@@ -14,8 +14,7 @@ same semantics Spark-first:
 - model kernels behind Arrow-batched pandas UDFs with executor-cached state,
 - plus the large-scale training-data extensions the reference lacks:
   deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding
-  cosine), similarity search, multimodal column plumbing, text analysis, and
-  Structured Streaming ingestion.
+  cosine), similarity search, text analysis, and Structured Streaming.
 
 See SURVEY.md for the operator-by-operator mapping to the reference.
 """

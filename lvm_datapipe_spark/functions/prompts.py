@@ -1,22 +1,26 @@
 """Caption-model TEXT-side contracts for M7 (CoCa) and M8 (LLaVA) —
-pure-python, no model dependencies (VERDICT r7 item 4).
+pure-python, no model dependencies.
 
-The caption adapters' real forwards cannot execute in this sandbox (no
-torch, no weights), but everything BEFORE the forward is deterministic
-string/token plumbing and deserves the same golden-test pinning the CLIP
-and MUSIQ image preprocessing got in r7:
+The caption adapters' real forwards need torch and the weights, but
+everything BEFORE the forward is deterministic string/token plumbing and
+deserves the same golden-test pinning the CLIP and MUSIQ image
+preprocessing got:
 
 * LLaVA: the conversation-mode inference rule and the conversation-template
-  prompt assembly the reference drives generation with
-  (``/root/reference/evaluations/llava_caption.py:77-92`` infers the conv
-  mode from the model name; ``:111-129`` appends the image-token user turn,
-  an empty assistant turn, renders ``conv.get_prompt()`` and tokenizes it
-  with ``tokenizer_image_token``).  The template constants below are the
+  prompt assembly the reference drives generation with (the reference's
+  ``evaluations/llava_caption.py:77-92`` infers the conv mode from the
+  model name; ``:111-129`` appends the image-token user turn, an empty
+  assistant turn, renders ``conv.get_prompt()`` and tokenizes it with
+  ``tokenizer_image_token``).  The template constants below are the
   public LLaVA ``conversation.py`` definitions the reference imports.
+  ``LlavaCaptionAdapter.score`` builds its prompt with
+  ``llava_caption_prompt`` and tokenizes through the model's HF processor;
+  the conv-mode rule, stop string and image-token splice are kept as the
+  reference contract, golden-tested.
 * CoCa: the open_clip tokenize framing — lowercase + whitespace collapse,
   truncate to context_len - 2, wrap in SOT/EOT, zero-pad — that feeds
   ``model.generate`` (the decode-side cleanup, ``split("<end_of_text>")``
-  etc., is C5 — ``functions/strings.py:53``).
+  etc., is C5 — ``functions/strings.py``).
 
 Every function takes the tokenizer as a plain ``encode_fn`` callable so the
 contracts are executable (and golden-testable) with a deterministic fake in

@@ -41,13 +41,6 @@ def file_stem(path: Column | str) -> Column:
     return F.regexp_replace(path_basename(_c(path)), r"\.[^.]*$", "")
 
 
-def rewrite_path(path: Column | str, find: str, replace: str) -> Column:
-    """C4/S13 — path-convention rewrite, e.g.
-    ``.replace('metadata/all', 'videos')`` (``data_schema/macvid.py:50-51,
-    66-67,95-100``; ``evaluations/coca_caption.py:66``)."""
-    return F.regexp_replace(_c(path), find, replace)
-
-
 def clean_caption(raw: Column | str) -> Column:
     """C5 — CoCa caption token cleanup:
     ``split('<end_of_text>')[0].replace('<start_of_text>', '')`` then trim
@@ -57,13 +50,6 @@ def clean_caption(raw: Column | str) -> Column:
             F.substring_index(_c(raw), "<end_of_text>", 1), "<start_of_text>", ""
         )
     )
-
-
-def prompt_template(caption: Column | str, prefix: str, suffix: str) -> Column:
-    """C6 — LLM prompt assembly: prefix + caption + suffix
-    (``evaluations/sum_caption_llama.py:34-40``,
-    ``llava_caption.py:111-129``)."""
-    return F.concat(F.lit(prefix), _c(caption), F.lit(suffix))
 
 
 def extract_answer_words(raw: Column | str) -> Column:
@@ -78,22 +64,7 @@ def extract_answer_words(raw: Column | str) -> Column:
     )
 
 
-def span_seconds(start_frame: Column | str, end_frame: Column | str, fps: Column | str) -> Column:
-    """C8 — FrameTimecode difference in seconds: ``(end - start) / fps``
-    (``evaluations/scene_cut.py:79-85``)."""
-    return (_c(end_frame) - _c(start_frame)) / _c(fps)
-
-
 def frame_indices_at_fractions(frame_count: Column | str, fractions: list[float]) -> Column:
     """C9 — key-frame indices at relative positions (default [0.2, 0.5, 0.8],
     ``evaluations/coca_caption.py:44``)."""
     return F.array(*[F.floor(_c(frame_count) * F.lit(p)).cast("int") for p in fractions])
-
-
-def stride_frame_indices(frame_count: Column | str, stride: int) -> Column:
-    """C9/S16 — every ``stride``-th frame index
-    (``evaluations/ocr_score.py:16-21``)."""
-    n = _c(frame_count)
-    return F.when(n > 0, F.sequence(F.lit(0), n - 1, F.lit(stride))).otherwise(
-        F.array().cast("array<int>")
-    )

@@ -189,12 +189,6 @@ def count_consistency(records: DataFrame, files: DataFrame, lo: int = 1, hi: int
     )
 
 
-def with_object_count(clips: DataFrame, objects_col: str = "scene.objects") -> DataFrame:
-    """A9 — derived ``num_of_objects = len(objects)``
-    (``data_schema/macvid.py:29-30``)."""
-    return clips.withColumn("num_of_objects", F.size(objects_col))
-
-
 def hll_partials(
     df: DataFrame, key_cols: list[str], value_col: str, lg_k: int = 12
 ) -> DataFrame:

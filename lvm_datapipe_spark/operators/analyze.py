@@ -99,45 +99,3 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
         f"stack({len(cols)}, {pairs}) AS (column, n_nulls, min_value, max_value, mean_value)",
         "n AS n_rows",
     ).select("column", "n_rows", "n_nulls", "min_value", "max_value", "mean_value")
-
-
-def partition_stats(df: DataFrame) -> DataFrame:
-    """Physical-layout skew probe: rows per Spark partition → one summary
-    row (n_partitions, min/max/avg rows, skew = max/avg).
-
-    The first thing to look at when a stage straggles: a skew ratio ≫ 1
-    after a keyed exchange means a hot key (reach for
-    ``operators/skew.salted_*`` or AQE skew-join), while skew ≈ 1 with
-    stragglers points at data-dependent WORK per row instead.  One narrow
-    job — a per-partition count (``spark_partition_id`` groupBy) and a
-    single-row rollup; nothing is collected beyond the summary.
-
-    Per-partition counts come from ONE ``mapInPandas`` pass that emits a
-    row for EVERY partition — including empty ones, via the TaskContext
-    partition id.  A groupBy on ``spark_partition_id()`` alone never sees
-    empty partitions (an all-rows-on-one-key layout would report skew 1.0
-    instead of n_partitions — the exact situation the probe exists to
-    flag), and deriving the denominator separately (``df.rdd``) both
-    re-executes the plan under AQE and risks describing a different
-    execution than the one counted."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def count_rows(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        n = 0
-        for pdf in batches:
-            n += len(pdf)
-        yield pd.DataFrame({"pid": [pid], "n": [n]})
-
-    per = df.mapInPandas(count_rows, schema="pid int, n long")
-    return per.agg(
-        F.count(F.lit(1)).alias("n_partitions"),
-        F.sum((F.col("n") > 0).cast("int")).alias("n_nonempty"),
-        F.min("n").alias("min_rows"),
-        F.max("n").alias("max_rows"),
-        (F.sum("n") / F.count(F.lit(1))).alias("avg_rows"),
-        (F.max("n") * F.count(F.lit(1)) / F.sum("n")).alias("skew"),
-    )

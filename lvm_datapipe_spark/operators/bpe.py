@@ -1,4 +1,4 @@
-"""Distributed BPE (byte-pair-encoding) merge learning and application.
+"""Distributed BPE (byte-pair-encoding) merge learning.
 
 The tokenizer-fitting step of an LLM data pipeline, done Spark-first.  The
 standard algorithm (Sennrich et al. 2016, "Neural Machine Translation of
@@ -36,17 +36,11 @@ operators (SURVEY.md §5).
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 END = "</w>"
-# Java regex \s (what word_symbol_table's F.split compiles to) matches ONLY
-# [ \t\n\x0B\f\r]; application must tokenize identically or encoded streams
-# diverge from the training segmentation on non-ASCII whitespace.
-_ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def _merge_pair(s, lft: str, rgt: str) -> list:
@@ -192,55 +186,3 @@ def learn_bpe_merges(
             merge(F.col("sym"), F.lit(lft), F.lit(rgt)).alias("sym"),
         ).localCheckpoint()
     return merges, words
-
-
-def apply_bpe(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Encode text with a learned merge list: per row, split to words,
-    chars + ``</w>``, then replay the merges in rank order.  The merge
-    list rides into the UDF closure (broadcast-by-serialization — it is
-    tokenizer-sized, KBs); a per-batch word cache collapses the Zipf
-    head so the inner loop runs once per word TYPE per batch."""
-    ranked = list(merges)
-
-    @F.pandas_udf("array<string>")
-    def encode(texts: pd.Series) -> pd.Series:
-        cache: dict[str, list[str]] = {}
-
-        def enc_word(w: str) -> list[str]:
-            hit = cache.get(w)
-            if hit is not None:
-                return hit
-            sym = list(w) + [END]
-            for lft, rgt in ranked:
-                i, res, n = 0, [], len(sym)
-                while i < n:
-                    if i < n - 1 and sym[i] == lft and sym[i + 1] == rgt:
-                        res.append(lft + rgt)
-                        i += 2
-                    else:
-                        res.append(sym[i])
-                        i += 1
-                sym = res
-                if len(sym) == 1:
-                    break
-            cache[w] = sym
-            return sym
-
-        out = []
-        for t in texts:
-            toks: list[str] = []
-            # split with the SAME whitespace class the learner's Java \s+
-            # uses (ASCII only) — python str.split() is Unicode-aware and
-            # would segment NBSP/ideographic spaces the training never saw
-            for w in _ASCII_WS.split(t or ""):
-                if w:
-                    toks.extend(enc_word(w))
-            out.append(toks)
-        return pd.Series(out)
-
-    return df.withColumn(out_col, encode(F.col(text_col)))

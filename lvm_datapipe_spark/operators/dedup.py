@@ -417,7 +417,6 @@ def minhash_lsh_pairs(
 # -- SimHash -----------------------------------------------------------------
 
 SIMHASH_BITS = 32
-_HEX = "0123456789abcdef"
 
 
 def simhash_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -452,17 +451,6 @@ def simhash_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
         f"(CASE WHEN v{b} > 0 THEN '1' ELSE '0' END)" for b in range(SIMHASH_BITS)
     )
     return votes.select(F.col(id_col), F.expr(f"concat({bits})").alias("simhash"))
-
-
-def hamming_distance(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:
-    terms = [
-        (F.substring(a, i + 1, 1) != F.substring(b, i + 1, 1)).cast("int")
-        for i in range(bits)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def simhash_pairs(
@@ -528,52 +516,6 @@ def simhash_pairs(
     return out
 
 
-def write_band_store(
-    spark,
-    df: DataFrame,
-    table: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-    rows: int = 4,
-    n_buckets: int = 32,
-) -> None:
-    """Materialize the MinHash band index as a table BUCKETED on
-    (band, bucket) — the repeated-dedup scale path: the expensive part
-    (shingle → k×md5 → signature → banding) runs once at write time, and
-    every later candidate self-join reads pre-shuffled buckets with NO
-    Exchange under the join (plans/bucketing.py)."""
-    from lvm_datapipe_spark.plans.bucketing import write_bucketed
-
-    sig = minhash_signatures(df, text_col, id_col, n, k)
-    write_bucketed(
-        band_buckets(sig, id_col, bands, rows),
-        table,
-        ["band", "bucket"],
-        n_buckets=n_buckets,
-    )
-
-
-def candidate_pairs_from_band_store(
-    spark, table: str, id_col: str = "doc_id"
-) -> DataFrame:
-    """LSH candidate pairs from a :func:`write_band_store` table: the
-    (band, bucket) self-join is co-located by the table's bucketing, so the
-    only shuffle in the whole query is the final pair ``distinct``.  The
-    ``merge`` hint keeps a small store from being broadcast instead."""
-    t = spark.table(table)
-    a = t.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = t.select(F.col(id_col).alias("id_b"), "band", "bucket").hint("merge")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def minhash_lsh_pairs_cross(
     new_df: DataFrame,
     corpus_df: DataFrame,
@@ -587,8 +529,7 @@ def minhash_lsh_pairs_cross(
     """INCREMENTAL dedup: near-dup candidates between a NEW batch and the
     EXISTING corpus — the nightly-ingest form of MinHash-LSH.  Unlike the
     self-join (all pairs within one table), this only pays
-    |new| × collisions: band the new batch, band the corpus (or read a
-    persisted :func:`write_band_store` table for the corpus side), and
+    |new| × collisions: band the new batch, band the corpus, and
     equi-join across.  Output: (new_id, corpus_id) distinct candidates —
     feed to exact verification, then drop/keep the new docs."""
     bb_new = band_buckets(

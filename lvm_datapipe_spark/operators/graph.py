@@ -216,6 +216,7 @@ def kcore(
     reads it, and a ``.persist()``ed table read twice in one plan would
     re-run its cache stage per reference (ARCHITECTURE.md §3).  Duplicate
     and reversed input edges are harmless; the caller need not dedup.
+    Edges with a NULL endpoint are dropped.
 
     Scale shape per round: one state checkpoint whose own job also counts
     the doomed frontier (an observed ``count_if(deg < k)``, see
@@ -246,10 +247,12 @@ def kcore(
     ``stats`` (a dict, optional) receives ``rounds``,
     ``checks`` and ``converged``."""
     # one row per unordered edge: the distinct runs on the canonical
-    # orientation (null endpoint last), E rows instead of 2E, and both
-    # orientations are emitted after its shuffle (a self-loop once)
-    lo = F.col(src).isNull() | (F.col(dst) < F.col(src))
-    canon = edges.select(
+    # orientation, E rows instead of 2E, and both orientations are emitted
+    # after its shuffle (a self-loop once).  A NULL id is no node, as in a
+    # SQL join: the frontier joins could never match it, so it would be
+    # doomed again every round
+    lo = F.col(dst) < F.col(src)
+    canon = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
         F.when(lo, F.col(dst)).otherwise(F.col(src)).alias("a"),
         F.when(lo, F.col(src)).otherwise(F.col(dst)).alias("b"),
     ).distinct()
@@ -461,41 +464,6 @@ def pagerank(
         F.col("_r").alias("rank_fp"),
         (F.col("_r").cast("double") / F.lit(float(scale))).alias("rank"),
     )
-
-
-def add_self_loops(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-) -> DataFrame:
-    """Give every SINK node (appears as dst, never as src) a unit
-    self-loop — the standard pre-step for :func:`pagerank` on graphs with
-    dangling nodes (the operator deliberately does not redistribute
-    dangling mass; a self-loop keeps it in place instead of leaking).
-    One anti-join on the source key; non-sink rows pass through with ALL
-    their columns intact (loop rows carry nulls in any extra columns),
-    and NULL destinations are ignored — they are data dirt, not sinks
-    (anti-join null semantics would otherwise fabricate a (NULL, NULL)
-    self-loop that pagerank counts as a real node)."""
-    sinks = (
-        edges.select(F.col(dst).alias(src))
-        .filter(F.col(src).isNotNull())
-        .distinct()
-        .join(edges.select(src).distinct(), src, "left_anti")
-    )
-    loop = sinks.select(
-        F.col(src),
-        F.col(src).alias(dst),
-        *[
-            F.lit(1).cast(edges.schema[c].dataType).alias(c)
-            if c == weight
-            else F.lit(None).cast(edges.schema[c].dataType).alias(c)
-            for c in edges.columns
-            if c not in (src, dst)
-        ],
-    )
-    return edges.unionByName(loop)
 
 
 def connected_components(

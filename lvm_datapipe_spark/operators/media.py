@@ -176,31 +176,6 @@ def _probe(data: bytes) -> dict | None:
 
 # -- probe (S17) -------------------------------------------------------------
 
-PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField("height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("fps", T.DoubleType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("duration_s", T.DoubleType()),
-    ]
-)
-
-
-@pandas_udf(PROBE_SCHEMA)
-def probe_udf(content: pd.Series) -> pd.DataFrame:
-    """S17 — resolution/fps/duration probe (``scene_cut.py:28-34``,
-    ``utils/utils.py:8-15``) as a header-only parse, no full decode."""
-    rows = [_probe(v) for v in content]
-    return pd.DataFrame(
-        [r if r else {k.name: None for k in PROBE_SCHEMA} for r in rows]
-    )
-
-
-def probe_videos(videos: DataFrame, content_col: str = "content") -> DataFrame:
-    return videos.withColumn("probe", probe_udf(F.col(content_col)))
-
-
 # -- frame sampling (S14-S16) ------------------------------------------------
 
 

@@ -295,9 +295,9 @@ class LlavaCaptionAdapter(ScorerAdapter):
         from PIL import Image
 
         device, processor, model = self.model()
-        # the reference's conv-template render (llava_caption.py:111-129);
-        # assembly + stop-string + image-token splice are golden-tested
-        # torch-free in functions/prompts.py
+        # the reference's conv-template render (llava_caption.py:111-129),
+        # golden-tested torch-free in functions/prompts.py; the HF processor
+        # splices the image tokens
         from lvm_datapipe_spark.functions.prompts import llava_caption_prompt
 
         prompt = llava_caption_prompt("llava_v1")

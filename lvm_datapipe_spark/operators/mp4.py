@@ -22,7 +22,8 @@ Box layout parsed (ISO/IEC 14496-12):
 
 When the `ffprobe` binary IS present (real clusters), :func:`ffprobe_probe`
 shells out exactly like the reference; :func:`probe_mp4` stays the no-dep
-fallback.  Both return the media layer's PROBE_SCHEMA dict shape.
+fallback.  Both return the media layer's probe dict shape
+(height, width, fps, n_frames, duration_s).
 """
 
 from __future__ import annotations
@@ -144,7 +145,7 @@ def _parse_stts_frames(data: bytes, s: int, e: int) -> int | None:
 
 def probe_mp4(data: bytes) -> dict | None:
     """Header-only MP4 probe → {height, width, fps, n_frames, duration_s}
-    (the PROBE_SCHEMA shape).  Returns None when no parseable video track is
+    (the media layer's probe shape).  Returns None when no parseable video track is
     found — callers null the row (F4/F5 semantics)."""
     if not is_mp4(data):
         return None
@@ -252,71 +253,3 @@ def ffprobe_probe(data: bytes, runner=None) -> dict | None:
         "n_frames": n_frames,
         "duration_s": duration,
     }
-
-
-def build_minimal_mp4(
-    width: int = 64,
-    height: int = 48,
-    n_frames: int = 30,
-    fps: float = 10.0,
-    codec: bytes = b"avc1",
-) -> bytes:
-    """Hand-assemble a structurally valid ISO-BMFF file (ftyp + moov box tree
-    + empty mdat) with the given video geometry — a REAL container any
-    ffprobe would read, used as the probe test fixture since the environment
-    ships no encoder.  Not decodable (no coded samples), which is exactly
-    the F4 null-row case for the decode path."""
-
-    def box(fourcc: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + fourcc + payload
-
-    def full(fourcc: bytes, version: int, flags: int, payload: bytes) -> bytes:
-        return box(fourcc, bytes([version]) + flags.to_bytes(3, "big") + payload)
-
-    timescale = 1000
-    duration = int(n_frames / fps * timescale)
-    delta = int(timescale / fps)
-
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-    mvhd = full(
-        b"mvhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, duration)
-        + struct.pack(">iH", 0x00010000, 0x0100) + b"\x00" * 10
-        + struct.pack(">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-        + b"\x00" * 24 + struct.pack(">I", 2),
-    )
-    tkhd = full(
-        b"tkhd", 0, 7,
-        struct.pack(">IIIII", 0, 0, 1, 0, duration) + b"\x00" * 8
-        + struct.pack(">HHHH", 0, 0, 0, 0)
-        + struct.pack(">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-        + struct.pack(">II", width << 16, height << 16),
-    )
-    mdhd = full(
-        b"mdhd", 0, 0, struct.pack(">IIII", 0, 0, timescale, duration) + struct.pack(">HH", 0x55C4, 0)
-    )
-    hdlr = full(b"hdlr", 0, 0, struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00")
-    # VisualSampleEntry: 6 reserved + data_ref_index + 16 predefined + w + h
-    sample_entry = box(
-        codec,
-        b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 16
-        + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
-        + struct.pack(">I", 0) + struct.pack(">H", 1)
-        + b"\x00" * 32 + struct.pack(">Hh", 0x18, -1),
-    )
-    stsd = full(b"stsd", 0, 0, struct.pack(">I", 1) + sample_entry)
-    stts = full(b"stts", 0, 0, struct.pack(">III", 1, n_frames, delta))
-    stsc = full(b"stsc", 0, 0, struct.pack(">I", 0))
-    stsz = full(b"stsz", 0, 0, struct.pack(">II", 0, 0))
-    stco = full(b"stco", 0, 0, struct.pack(">I", 0))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    vmhd = full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-    dref = full(b"dref", 0, 0, struct.pack(">I", 1) + full(b"url ", 0, 1, b""))
-    dinf = box(b"dinf", dref)
-    minf = box(b"minf", vmhd + dinf + stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    mdat = box(b"mdat", b"")
-    return ftyp + moov + mdat

@@ -69,31 +69,3 @@ def pack_sequences(
             ),
         )
     )
-
-
-def pack_utilization(
-    packed: DataFrame, token_col: str = "n_tokens", ctx_len: int = 2048
-) -> DataFrame:
-    """Packing efficiency per pack: tokens landing in each window over the
-    window size.  Streaming concat always fills every window except the
-    final one per shard, so this is mostly a sanity/monitoring aggregate."""
-    spans = packed.select(
-        F.explode(
-            F.sequence(F.col("pack_id"), F.col("pack_id") + F.col("n_packs") - 1)
-        ).alias("pack_id"),
-        "start_offset",
-        token_col,
-    )
-    # tokens of this doc inside this particular window
-    win_start = F.col("pack_id") * ctx_len
-    doc_start = F.col("start_offset")
-    doc_end = F.col("start_offset") + F.col(token_col)
-    in_window = F.least(doc_end, win_start + ctx_len) - F.greatest(doc_start, win_start)
-    return (
-        spans.withColumn("tokens_in_pack", in_window)
-        .groupBy("pack_id")
-        .agg(
-            F.sum("tokens_in_pack").alias("tokens"),
-            (F.sum("tokens_in_pack") / ctx_len).alias("utilization"),
-        )
-    )

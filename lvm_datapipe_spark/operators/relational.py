@@ -39,16 +39,6 @@ def resume_anti_join(clips: DataFrame, done: DataFrame, key: str = "clip_id") ->
     return clips.join(done.select(key).distinct(), on=key, how="left_anti")
 
 
-def resume_anti_join_redo_empty(
-    clips: DataFrame, done: DataFrame, key: str = "clip_id", size_col: str = "size_bytes"
-) -> DataFrame:
-    """F2 (OCR variant) — like :func:`resume_anti_join` but zero-byte done
-    markers are re-done (``evaluations/ocr_score.py:64`` re-processes empty
-    output files)."""
-    really_done = done.filter(F.col(size_col) > 0).select(key).distinct()
-    return clips.join(really_done, on=key, how="left_anti")
-
-
 def drop_failed_rows(df: DataFrame, col: str = "frames") -> DataFrame:
     """F4/F5 — decode-failure handling: UDFs return null instead of raising
     (reference: collate_fn drops ``None`` items,
@@ -57,59 +47,7 @@ def drop_failed_rows(df: DataFrame, col: str = "frames") -> DataFrame:
     return df.filter(F.col(col).isNotNull())
 
 
-def training_pair_projection(clips: DataFrame) -> DataFrame:
-    """F6/F7 — projection to (caption, clip_path) training pairs.
-
-    Reference: ``data_schema/macvid.py:183-190`` and the bytecode-only
-    ``MACCaptionDataset`` (``evaluations/sum_caption_llama.py:12,76``).
-    Column pruning means the parquet scan reads only these columns.
-    """
-    return clips.select(
-        F.col("misc")["frame_caption"].alias("caption"),
-        F.col("basic.clip_path").alias("clip_path"),
-    )
-
-
-# -- joins (J2-J4) -----------------------------------------------------------
-
-
-def enrich_with_scores(
-    clips: DataFrame, scores: DataFrame, key: str = "clip_id", broadcast_scores: bool = True
-) -> DataFrame:
-    """J2/J3 — merge a score/sidecar table back into the clips table.
-
-    The reference mutates in-memory records (``aesthetic_score.py:130-132``)
-    or leaves the merge implied (``scripts/run_extract_mvs.sh:17`` carries the
-    clip name precisely so it can be joined later).  Spark: LEFT equi-join;
-    sidecars are small → broadcast, no shuffle of the clips side.
-    """
-    if broadcast_scores:
-        scores = F.broadcast(scores)
-    return clips.join(scores, on=key, how="left")
-
-
-def clip_video_join(clips: DataFrame, videos: DataFrame, key: str = "video_id") -> DataFrame:
-    """J4 — clip→parent-video dimension join (denormalized FK
-    ``macvid.py:13,21``)."""
-    return clips.join(F.broadcast(videos), on=key, how="inner")
-
-
 # -- windows / top-k / set ops (§2.6) ---------------------------------------
-
-
-def number_clips_per_video(
-    df: DataFrame,
-    partition_col: str = "video_id",
-    order_col: str = "start_frame",
-    out_col: str = "clip_index",
-) -> DataFrame:
-    """Per-video clip numbering — the reference's ``f'{vid}_{i:07d}'`` loop
-    counter (``evaluations/scene_cut.py:82``, ``utils/scenecut.py:39``) is a
-    ``row_number`` window.  One shuffle on the partition key; at scale the
-    key count (videos) is large and uniform so no skew.
-    """
-    w = Window.partitionBy(partition_col).orderBy(order_col)
-    return df.withColumn(out_col, F.row_number().over(w))
 
 
 def best_per_group(

@@ -72,18 +72,6 @@ def split_assign(
     return df.withColumn(out_col, expr)
 
 
-def deterministic_sample(
-    df: DataFrame,
-    key_col: str,
-    fraction: float,
-    salt: str = "sample",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """Keep ~fraction of rows, chosen by content hash — stable under
-    repartitioning and re-runs, unlike ``df.sample``."""
-    return df.filter(hash_bucket(key_col, n_buckets, salt) < int(round(fraction * n_buckets)))
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,

@@ -53,14 +53,6 @@ def sql_lit_array(vals) -> str:
     return "array(" + ",".join(f"{float(x)!r}D" for x in vals) + ")"
 
 
-def lit_array(vals) -> Column:
-    """Literal double array as ONE parsed SQL expression.  Building wide
-    literal arrays element-by-element costs a py4j round-trip per element —
-    2048 Column constructions for 8 tables × 4 planes × 64 dims, ~2 s of
-    pure DRIVER time per query build (measured; execution unaffected)."""
-    return F.expr(sql_lit_array(vals))
-
-
 def sql_fold_dot(vec_sql: str, vals) -> str:
     """``dot(vec, literal_array)`` as SQL text — the same
     aggregate/zip_with fold as :func:`dot` (same association order, same
@@ -92,12 +84,6 @@ def l2_norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def cosine_flat(a: Column, b: Column, dim: int = DEFAULT_DIM) -> Column:
-    return dot_flat(a, b, dim) / (
-        F.sqrt(dot_flat(a, a, dim)) * F.sqrt(dot_flat(b, b, dim))
-    )
 
 
 def brute_force_topk(
@@ -548,65 +534,6 @@ def ivf_fixed_topk(
     )
 
 
-def ivf_write_store(
-    emb: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index as a CELL-PARTITIONED parquet store — the
-    100 TB form: probing n_probe of n_cells then reads ~n_probe/n_cells of
-    the corpus via directory-level partition pruning (PartitionFilters in
-    the scan), instead of scanning everything and filtering."""
-    from lvm_datapipe_spark.sources.sinks import write_partitioned
-
-    assigned = ivf_fixed_assign(
-        emb, n_cells, dim, seed, id_col, vec_col, out_id="neighbor_id"
-    )
-    write_partitioned(assigned, path, ["cell"])
-
-
-def ivf_topk_from_store(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k against a :func:`ivf_write_store` store.  The probed cell
-    set (≤ |queries|·n_probe distinct ints — metadata-sized) is collected
-    and pushed as a literal IN-filter so Catalyst prunes the cell
-    directories at the scan; identical results to :func:`ivf_fixed_topk`
-    on the same corpus."""
-    qs = _ivf_probe_cells(queries, n_cells, dim, seed, id_col, vec_col)
-    wp = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
-    probe = (
-        qs.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    cells = sorted(r.cell for r in probe.select("cell").distinct().collect())
-    corpus = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    cand = corpus.join(probe, "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = cand.withColumn("cos_sim", cosine(F.col("qv"), F.col("nv")))
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
 # -- IVF (inverted-file) ANN -------------------------------------------------
 
 
@@ -754,11 +681,6 @@ def quantize_embeddings(
         scale.alias("scale"),
         q.alias("q"),
     )
-
-
-def dequantize(q: Column, scale: Column) -> Column:
-    """Reconstruct approximate doubles from int codes: q_i * scale."""
-    return F.transform(q, lambda x: x.cast("double") * scale)
 
 
 # -- product quantization (PQ) -----------------------------------------------
@@ -1004,91 +926,6 @@ def ivfpq_topk(
         corpus.join(F.broadcast(probe), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc_dist", F.expr(_PQ_ADC_DIST_SQL))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
-
-
-def ivfpq_write_store(
-    emb: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    m: int = 32,
-    ksub: int = 8,
-    dim: int = 64,
-    ivf_seed: int = 42,
-    pq_seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF-PQ index as a cell-partitioned CODE store —
-    the full 100 TB layout: directory-level cell pruning (IVF) over rows
-    holding only the id + m int codes (PQ), so a probe reads
-    ~n_probe/n_cells of an already-32×-compressed table.  The raw
-    vectors stay in the source table; re-ranking the final candidates
-    against them is a keyed join by id."""
-    from lvm_datapipe_spark.sources.sinks import write_partitioned
-
-    dsub = dim // m
-    cbs = pq_codebooks(m, ksub, dsub, pq_seed)
-    corpus = ivf_fixed_assign(emb, n_cells, dim, ivf_seed, id_col, vec_col)
-    corpus = corpus.select(
-        "neighbor_id",
-        "cell",
-        *[_pq_code_col(cbs[j], j, dsub).alias(f"code_{j}") for j in range(m)],
-    )
-    write_partitioned(corpus, path, ["cell"])
-
-
-def ivfpq_topk_from_store(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    m: int = 32,
-    ksub: int = 8,
-    dim: int = 64,
-    ivf_seed: int = 42,
-    pq_seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ top-k against an :func:`ivfpq_write_store` store: the probed
-    cell set (metadata-sized) pushes as a literal IN-filter so the scan
-    prunes cell directories (PartitionFilters), and ranking is pure ADC
-    over the stored codes.  Identical results to :func:`ivfpq_topk` on
-    the same corpus."""
-    dsub = dim // m
-    cbs = pq_codebooks(m, ksub, dsub, pq_seed)
-    qs = _ivf_probe_cells(queries, n_cells, dim, ivf_seed, id_col, vec_col)
-    wp = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
-    probe = (
-        qs.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    probe = probe.select(
-        "query_id",
-        "cell",
-        *[
-            F.expr(_pq_dists_sql("qv", j, cbs[j], dsub)).alias(f"lut_{j}")
-            for j in range(m)
-        ],
-    )
-    cells = sorted(r.cell for r in probe.select("cell").distinct().collect())
-    corpus = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    dist = None
-    for j in range(m):
-        t = F.expr(f"element_at(lut_{j}, code_{j} + 1)")
-        dist = t if dist is None else dist + t
-    wr = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        corpus.join(F.broadcast(probe), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc_dist", dist)
         .withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "adc_dist")

@@ -14,37 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with a salted key: the big (left) side gets a random salt in
-    [0, salt_buckets); the small-ish (right) side is replicated once per salt
-    value.  The hot key's rows spread over ``salt_buckets`` reducers instead
-    of one straggler.  Right-side replication costs |R|·buckets — use for
-    moderate right sides or pre-filter to the hot keys only.
-
-    Only inner/left joins are supported: with how='right'/'full', unmatched
-    right rows would be emitted once per salt replica instead of once."""
-    allowed = {"inner", "cross", "left", "leftsemi", "semi", "leftanti", "anti"}
-    if how.lower().replace("_", "").replace("outer", "") not in allowed:
-        raise ValueError(
-            f"salted_join supports inner/left_* joins only, got how={how!r}: "
-            "right/full outer joins would emit unmatched right rows once per "
-            "salt replica instead of once"
-        )
-    salted_left = left.withColumn(
-        "_salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    salts = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("_salt")
-    salted_right = right.select("*", salts)
-    out = salted_left.join(salted_right, on=[key, "_salt"], how=how)
-    return out.drop("_salt")
-
-
 def salted_aggregate(
     df: DataFrame,
     key: str,

@@ -46,19 +46,6 @@ def normalize_text(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(t, "[ \t\n\r\f]+", " "))
 
 
-def normalize_text_unicode(text: Column | str) -> Column:
-    r"""Unicode sibling of :func:`normalize_text` for non-transliterated
-    corpora: keep letters and digits of ANY script (``\p{L}\p{N}`` —
-    the property classes Java regex and DuckDB's RE2 agree on), so
-    accents, CJK, Cyrillic, Arabic survive; punctuation, symbols and
-    emoji are stripped exactly as the ASCII form strips them.  Same
-    explicit whitespace class and collapse/trim chain, so it remains
-    engine-portable."""
-    t = F.lower(_c(text))
-    t = F.regexp_replace(t, "[^\\p{L}\\p{N} \t\n\r\f]", "")
-    return F.trim(F.regexp_replace(t, "[ \t\n\r\f]+", " "))
-
-
 def token_frequencies(
     df: DataFrame, text_col: str = "text", lowercase: bool = True
 ) -> DataFrame:
@@ -176,24 +163,6 @@ def repetition_features(
     )
 
 
-def filter_repetitive(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_word_rep_ratio: float = 0.9,
-    max_top_ngram_frac: float = 0.2,
-    n: int = 2,
-) -> DataFrame:
-    """Keep documents under the repetition thresholds (Gopher-style corpus
-    hygiene): one semi-join of the corpus against the offending doc set."""
-    feats = repetition_features(df, text_col, id_col, n)
-    bad = feats.filter(
-        (F.col("word_rep_ratio") > max_word_rep_ratio)
-        | (F.col("top_ngram_frac") > max_top_ngram_frac)
-    ).select(id_col)
-    return df.join(bad, id_col, "left_anti")
-
-
 # PII / link scrubbing — heuristic patterns restricted to the regex subset
 # with identical semantics in Java regex (Spark) and RE2 (DuckDB), so the
 # scrub is oracle-checkable.  Order matters and is part of the contract:
@@ -217,12 +186,6 @@ def scrub_text(text: Column | str) -> Column:
     return c
 
 
-def scrub_docs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    return df.withColumn(text_col, scrub_text(text_col))
-
-
 PUNCT_CLASS = "[^.!?,;:]"
 
 # tiny deterministic stopword sets per language (n-gram-heuristic lang-ID);
@@ -238,11 +201,6 @@ LANG_PRIORITY = ["en", "fr", "es", "de"]  # deterministic argmax tie-break
 
 def punct_count(text: Column | str) -> Column:
     return F.length(F.regexp_replace(_c(text), PUNCT_CLASS, ""))
-
-
-def stopword_hits(toks: Column, words: list[str]) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
 
 
 def _token_lang_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -79,15 +79,6 @@ def read_bucketed(spark: SparkSession, path: str, bucket_col: str, n_buckets: in
         spark.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — planned without
-    an Exchange on either side (``count_exchanges`` is 0)."""
-    right = spark.table(right_table).hint("merge")
-    return spark.table(left_table).join(right, on=key, how=how)
-
-
 _EXCHANGE_NODE = re.compile(r"^[ :+|-]*(?:Broadcast)?Exchange\b", re.MULTILINE)
 
 

@@ -12,8 +12,7 @@ Resume is the generic left-anti/null-partition pattern (F2) — no marker
 files; the snapshot's own null columns say what remains.  Failures null the
 row (F4) and remain eligible for the next run.  The A8 count-consistency
 check (check_secne.py:12-27) needs each stage's row count: the CLI stages
-take it from an Observation on the stage's own write (``observed_stage``);
-``assert_counts_consistent`` re-counts as a separate job.
+take it from an Observation on the stage's own write (``observed_stage``).
 
 The reference re-reads the clip metadata at each stage and writes it back
 enriched; SURVEY.md §1.1 maps that to a columnar upsert.  Here the clip
@@ -137,39 +136,6 @@ def run_stage(
     return scored if done is None else done.unionByName(scored)
 
 
-def assert_counts_consistent(
-    records: DataFrame, expected: int, lo: int = 0, hi: int = 0
-) -> None:
-    """A8 — stage-transition invariant (check_secne.py:12-27 allows a
-    tolerance window between file count and record count)."""
-    n = records.count()
-    delta = n - expected
-    if not (lo <= delta <= hi):
-        raise AssertionError(
-            f"count consistency violated: got {n}, expected {expected} (+[{lo},{hi}])"
-        )
-
-
-def run_pipeline(
-    snapshot: DataFrame,
-    stages: list[tuple[str, Callable[[DataFrame], DataFrame]]],
-    checkpoint_dir: str | None = None,
-    spark: SparkSession | None = None,
-) -> DataFrame:
-    """Chain stages; with ``checkpoint_dir``, materialize a Parquet snapshot
-    between stages (the reference's stage-per-script materialization — here
-    it's deliberate: it bounds lineage and makes every stage resumable)."""
-    df = snapshot
-    for i, (score_col, scorer) in enumerate(stages):
-        df = run_stage(df, scorer, score_col)
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/stage_{i}_{score_col}"
-            write_snapshot(df, path)
-            assert spark is not None, "spark session required with checkpoint_dir"
-            df = read_snapshot(spark, path)
-    return df
-
-
 def observed_stage(
     df: DataFrame, name: str, *metrics
 ):
@@ -177,8 +143,8 @@ def observed_stage(
     other aggregates) collected as a side effect of the action the caller
     was going to run anyway.
 
-    ``assert_counts_consistent`` / A8-style checks cost one extra job per
-    counted stage (each ``count()`` re-runs lineage).  Spark's
+    A8-style checks by ``count()`` cost one extra job per counted stage
+    (each ``count()`` re-runs lineage).  Spark's
     ``Observation`` API instead accumulates the metrics DURING the write/
     collect — at 100 TB that is the difference between auditing N stages
     for free and re-scanning the pipeline N times.

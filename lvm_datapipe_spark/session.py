@@ -130,32 +130,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def gpu_conf(
-    gpus_per_executor: int = 1,
-    gpus_per_task: float = 1.0,
-    discovery_script: str | None = None,
-) -> dict[str, str]:
-    """Resource configs that bind model-scorer tasks to GPUs — the Spark
-    analog of the reference's one-process-per-GPU launch (it exports one
-    CUDA device per worker rank, ``scripts/aestheticscore.sh:11-19``;
-    SURVEY.md §4 item 2).
-
-    With ``gpus_per_task=1`` every scorer task owns a whole device, so the
-    per-executor lazy model singletons (``operators/model_adapters.py``)
-    map 1:1 onto GPUs; a fractional amount (e.g. ``0.5``) co-schedules two
-    model tasks per device when memory allows.  Pass the returned dict as
-    ``extra_conf`` to :func:`get_spark`, or merge it into spark-submit
-    confs.  ``discovery_script`` is required on standalone/YARN clusters
-    (k8s injects discovery automatically); Spark exposes the assigned
-    device in ``TaskContext.get().resources()["gpu"]``, which adapters can
-    map to ``CUDA_VISIBLE_DEVICES`` at ``_load`` time.
-    """
-    conf = {
-        "spark.executor.resource.gpu.amount": str(gpus_per_executor),
-        "spark.task.resource.gpu.amount": str(gpus_per_task),
-    }
-    if discovery_script is not None:
-        conf["spark.executor.resource.gpu.discoveryScript"] = discovery_script
-    return conf

@@ -150,37 +150,3 @@ def retention_sweep(
             if not dry_run:
                 shutil.rmtree(full)
     return dropped
-
-
-def missing_partitions(
-    path: str, partition_col: str, expected: list[str]
-) -> list[str]:
-    """Backfill planner: which expected partition values are absent from a
-    hive-layout store — the complement of retention_sweep.  A scheduler
-    walks the expected window (say, the last 30 days), gets back the
-    holes, and launches jobs ONLY for those — directory listing, no
-    scan."""
-    import os
-
-    prefix = f"{partition_col}="
-    present = set()
-    if os.path.isdir(path):
-        for name in os.listdir(path):
-            if name.startswith(prefix) and os.path.isdir(os.path.join(path, name)):
-                present.add(name[len(prefix):])
-    return sorted(v for v in expected if v not in present)
-
-
-def read_parquet_tolerant(spark, path: str, schema: str | None = None):
-    """Parquet read that SKIPS corrupt files instead of failing the job —
-    the 100 TB posture for bit-rot and torn writes: one bad file out of a
-    million should cost its rows (surfaced by a manifest check,
-    sources/manifest.py), not the scan.  Scoped via the per-read
-    datasource option, so the session default stays strict — silent
-    skipping is opt-in per call site, never global.  Pass the known
-    ``schema`` (DDL string) so planning never touches a footer; without
-    it, schema inference may still trip over the corrupt file."""
-    r = spark.read.option("ignoreCorruptFiles", "true")
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(path)

@@ -11,9 +11,6 @@ opened.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from lvm_datapipe_spark.functions.strings import file_extension
 
 # utils/scenecut.py:108-112 whitelist + our test container format
 VIDEO_EXTENSIONS = ("mp4", "avi", "mkv", "mov", "wmv", "flv", "webm", "mpeg", "mpg", "fvid")
@@ -40,11 +37,3 @@ def scan_video_dir(
     )
     cols = ["path", "length"] + (["content"] if with_content else [])
     return df.select(*cols)
-
-
-def filter_video_extensions(
-    df: DataFrame, path_col: str = "path", extensions: tuple[str, ...] = VIDEO_EXTENSIONS
-) -> DataFrame:
-    """S2 as a relational predicate, for pre-listed path tables (the
-    reference's rsplit('.')-in-whitelist check)."""
-    return df.filter(file_extension(F.col(path_col)).isin(*extensions))

@@ -1,58 +1,26 @@
-"""Structured Streaming ingestion (SURVEY.md §2.9 extension layer).
+"""Structured Streaming transformations (SURVEY.md §2.9 extension layer).
 
 The reference is batch-only; its resume-marker pattern (F2/F3) is a manual
 substitute for incremental processing.  Here the same clip/event tables get
 real incremental semantics:
 
-- file-source stream over a landing directory (new files = new data, the
-  streaming analog of the reference's per-shard arrival),
-- watermark + ``dropDuplicates`` for late/duplicate records (the streaming
-  form of the dedup the reference approximates with marker files),
 - tumbling-window aggregation whose PLAN IS THE BATCH PLAN — the
   ``events_tumbling_window`` oracle query and :func:`windowed_counts` are the
   same transformation applied to a batch or streaming DataFrame,
-- a stateful sessionizer via ``applyInPandasWithState`` (the reference has no
-  stateful operator; this is the Spark-native way to express one).
+- stream-static enrichment and a watermarked stream-stream interval join,
+- parquet and exactly-once versioned-table sinks (``start_*``).
 
 All transformations take a DataFrame and work identically on batch and
-streaming inputs; the ``read_*``/``start_*`` helpers differ only in source.
+streaming inputs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lvm_datapipe_spark.operators.aggregates import decimal_sum
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def read_event_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    fmt: str = "json",
-    max_files_per_trigger: int = 10,
-) -> DataFrame:
-    """File-source stream over a landing directory.  maxFilesPerTrigger
-    bounds per-micro-batch work (backpressure); at scale the landing dir is
-    partitioned by arrival date so the file index stays small."""
-    return (
-        spark.readStream.format(fmt)
-        .schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(landing_dir)
-    )
 
 
 def ensure_event_time(events: DataFrame, col: str = "ts") -> DataFrame:
@@ -68,24 +36,6 @@ def ensure_event_time(events: DataFrame, col: str = "ts") -> DataFrame:
     if isinstance(events.schema[col].dataType, T.TimestampNTZType):
         return events.withColumn(col, F.col(col).cast("timestamp"))
     return events
-
-
-def deduplicate_events(
-    events: DataFrame, watermark: str = "1 hour", key: str = "event_id"
-) -> DataFrame:
-    """Watermarked exactly-once-per-key: duplicates within the watermark
-    horizon are dropped and state is evicted once the watermark passes.
-
-    ``dropDuplicatesWithinWatermark`` (Spark >= 3.5) is required here: plain
-    ``dropDuplicates([key])`` only evicts state when the event-time column is
-    part of the dedup subset, so keying on event_id alone would grow state
-    unboundedly — a guaranteed OOM on a long-running stream.  Batch
-    DataFrames fall back to ``dropDuplicates`` (same result set; batch has
-    no state to bound)."""
-    if not events.isStreaming:
-        return events.dropDuplicates([key])
-    events = ensure_event_time(events)
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key])
 
 
 def windowed_counts(
@@ -167,105 +117,6 @@ def interval_join_views_purchases(
     )
 
 
-SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts", T.TimestampType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-SESSION_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-
-def sessionize_stream(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "2 hours"
-) -> DataFrame:
-    """Custom stateful operator: per-user session windows with an inactivity
-    gap, via ``applyInPandasWithState`` (GroupState timeout closes sessions).
-
-    Emits one row per CLOSED session.  The batch twin is the w3_sessionize
-    oracle query (gaps-and-islands over a window function).
-    """
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap = dt.timedelta(minutes=gap_minutes)
-
-    def fn(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        closed: list[tuple] = []
-        if state.hasTimedOut:
-            if state.exists:
-                last_ts, session_start, n = state.get
-                closed.append((user_id, session_start, last_ts, n))
-                state.remove()
-        else:
-            rows = []
-            for pdf in pdf_iter:
-                rows.extend(
-                    (ts.to_pydatetime(), 1) for ts in pd.to_datetime(pdf["ts"])
-                )
-            rows.sort(key=lambda r: r[0])
-            if state.exists:
-                last_ts, session_start, n = state.get
-            else:
-                last_ts = session_start = None
-                n = 0
-            for ts, _ in rows:
-                if last_ts is not None and ts - last_ts > gap:
-                    closed.append((user_id, session_start, last_ts, n))
-                    session_start, n = ts, 0
-                if session_start is None:
-                    session_start = ts
-                last_ts = ts
-                n += 1
-            if last_ts is not None:
-                state.update((last_ts, session_start, n))
-                # timeout must be >= the current watermark — clamp so a
-                # session whose gap already elapsed times out next trigger
-                candidate = int(last_ts.timestamp() * 1000) + gap_minutes * 60 * 1000
-                state.setTimeoutTimestamp(
-                    max(candidate, state.getCurrentWatermarkMs() + 1)
-                )
-        if closed:
-            yield pd.DataFrame(
-                closed, columns=["user_id", "session_start", "session_end", "n_events"]
-            )
-
-    return (
-        ensure_event_time(events)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def start_to_memory(df: DataFrame, query_name: str, output_mode: str = "update"):
-    """Test/debug sink: complete results into an in-memory table."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .start()
-    )
-
-
 def start_to_parquet(df: DataFrame, path: str, checkpoint: str):
     """Production sink: append parquet with checkpointed exactly-once."""
     return (
@@ -273,35 +124,6 @@ def start_to_parquet(df: DataFrame, path: str, checkpoint: str):
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .start()
-    )
-
-
-def start_foreach_batch_partitioned(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_by: list[str],
-):
-    """Streaming materialization via ``foreachBatch`` + dynamic partition
-    overwrite: every micro-batch REPLACES exactly the partitions it
-    contains (sources/sinks.py::write_partitioned), so update-mode
-    aggregations land as upserts — re-emitted windows overwrite their own
-    partition instead of appending duplicates, and a replayed batch (after
-    a crash between write and checkpoint commit) converges to the same
-    state instead of doubling it.  This is the idempotent-sink discipline
-    Spark's exactly-once story requires from foreachBatch."""
-    from lvm_datapipe_spark.sources.sinks import write_partitioned
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_partitioned(batch_df, path, partition_by)
-
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
         .start()
     )
 
@@ -343,264 +165,6 @@ def start_versioned_sink(df: DataFrame, table_dir: str, checkpoint: str):
     )
 
 
-def start_versioned_upsert_sink(
-    df: DataFrame, table_dir: str, checkpoint: str, key_cols: list[str]
-):
-    """EXACTLY-ONCE streaming UPSERT into a versioned table: each
-    micro-batch MERGEs on ``key_cols`` (late re-emissions of a key
-    replace the stored row — the streaming SCD/current-state shape),
-    with the same epoch-skip replay guard as :func:`start_versioned_sink`.
-
-    The 100 TB property comes from ``txlog.merge``'s file granularity:
-    a micro-batch touching k keys rewrites only the files containing
-    those keys, never the table.  Within one batch, duplicate keys are
-    collapsed deterministically to the lexicographically-greatest full
-    row (a pure function of the batch's DATA, not its partition order —
-    replays must produce byte-identical merges) before the key-unique
-    merge contract applies."""
-    from pyspark.sql import functions as F
-
-    from lvm_datapipe_spark.sources import txlog
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if batch_id in txlog.committed_epochs(table_dir):
-            return  # replayed epoch — already durably committed
-        others = [c for c in batch_df.columns if c not in key_cols]
-        if others:
-            latest = (
-                batch_df.groupBy(*key_cols)
-                .agg(F.max(F.struct(*others)).alias("_s"))
-                .select(*key_cols, *[F.col(f"_s.{c}").alias(c) for c in others])
-            )
-        else:  # key-only rows: duplicates are identical, keep one
-            latest = batch_df.dropDuplicates(key_cols)
-        txlog.merge(
-            batch_df.sparkSession,
-            latest,
-            table_dir,
-            key_cols=key_cols,
-            meta={"epoch": batch_id},
-        )
-
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-
-
-def tws_available() -> bool:
-    """transformWithState needs a google.protobuf runtime able to load
-    pyspark's generated StateMessage code.  The container ships pyspark
-    without protobuf installed; :mod:`lvm_datapipe_spark.protobuf_compat`
-    bootstraps a public on-disk runtime (path probe + same-major version
-    relaxation) for the driver, and the session routes workers through the
-    ``protobuf_daemon`` shim.  False only when no runtime can be found at
-    all."""
-    from lvm_datapipe_spark.protobuf_compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        return False
-    try:
-        from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def make_session_processor(gap_minutes: int = 30):
-    """Build the transformWithState session processor (module-level factory
-    so the processor logic is unit-drivable with injected fakes — the
-    container's protobuf cannot run the real state server; see
-    :func:`tws_available`)."""
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap = dt.timedelta(minutes=gap_minutes)
-    gap_ms = gap_minutes * 60 * 1000
-    cols = ["user_id", "session_start", "session_end", "n_events"]
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("session", SESSION_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            ts_list: list = []
-            for pdf in rows:
-                ts_list.extend(t.to_pydatetime() for t in pd.to_datetime(pdf["ts"]))
-            ts_list.sort()
-            if self._state.exists():
-                last_ts, session_start, n = self._state.get()
-            else:
-                last_ts = session_start = None
-                n = 0
-            closed = []
-            for ts in ts_list:
-                if last_ts is not None and ts - last_ts > gap:
-                    closed.append((user_id, session_start, last_ts, n))
-                    session_start, n = ts, 0
-                if session_start is None:
-                    session_start = ts
-                last_ts = ts
-                n += 1
-            if last_ts is not None:
-                self._state.update((last_ts, session_start, n))
-                # one live timer per key: re-arm at the new inactivity
-                # deadline, clamped past the watermark so an already-elapsed
-                # gap fires on the next trigger
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                deadline = int(last_ts.timestamp() * 1000) + gap_ms
-                self._handle.registerTimer(
-                    max(deadline, timerValues.getCurrentWatermarkInMs() + 1)
-                )
-            if closed:
-                yield pd.DataFrame(closed, columns=cols)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            if self._state.exists():
-                last_ts, session_start, n = self._state.get()
-                self._state.clear()
-                yield pd.DataFrame(
-                    [(user_id, session_start, last_ts, n)], columns=cols
-                )
-
-        def close(self) -> None:
-            pass
-
-    return SessionProcessor
-
-
-def sessionize_stream_tws(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "2 hours"
-) -> DataFrame:
-    """The :func:`sessionize_stream` semantics on the transformWithState
-    API (Spark 4 stateful engine): typed ValueState + real event-time
-    TIMERS instead of GroupState timeouts.  Same output rows — one per
-    CLOSED session — so either implementation drops into the pipeline.
-
-    Why the new API matters at scale: state lives in per-key typed slots
-    on the RocksDB state store backend, timers are first-class (a key can
-    hold several), and the processor can evolve state schema between runs
-    — the operational gaps of applyInPandasWithState.
-
-    Requires the RocksDB state store provider (multiple column families:
-    one per state variable + timers); the default HDFS-backed provider
-    raises multipleColumnFamiliesNotSupported.  Set on the session here —
-    it is the provider a 100 TB stateful deployment runs anyway."""
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    SessionProcessor = make_session_processor(gap_minutes)
-    return (
-        ensure_event_time(events)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionProcessor(),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="EventTime",
-        )
-    )
-
-
-def flag_seen_before(
-    events: DataFrame,
-    bitmap: list[int],
-    key_sql: str = "user_id",
-    out_col: str = "seen_before",
-    n_hashes: int = 3,
-) -> DataFrame:
-    """Stream-side membership flag against a HISTORICAL corpus compressed
-    to a Bloom bitmap (operators/bloom.py): each micro-batch row gets a
-    boolean "this key existed before the stream started".
-
-    This is the streaming half of cross-corpus dedup at 100 TB: the
-    historical side (billions of keys) ships to every executor as a
-    fixed-size literal bitmap inside ONE parsed expression — zero state,
-    zero watermark, zero stream-side shuffle, identical plan in batch and
-    stream (so the batch twin is the oracle).  One-sided error matches
-    the dedup use: a true "never seen" can read as seen (FP rate set by
-    the bitmap size), but history can never be missed — rows flagged
-    False are SAFE to treat as new."""
-    from lvm_datapipe_spark.operators.bloom import bloom_might_contain
-
-    return events.withColumn(
-        out_col, bloom_might_contain(bitmap, key_sql, n_hashes)
-    )
-
-
-def start_running_totals(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    key: str = "user_id",
-    val: str = "value",
-):
-    """Streaming running totals merged into an EXTERNAL parquet store —
-    the pattern for unbounded-key stateful aggregation (per-user lifetime
-    value over millions of users) where the state-store would grow
-    without bound and complete-mode would rewrite everything per batch.
-
-    Each micro-batch pre-aggregates map-side (exact DECIMAL partials),
-    unions with the current store, re-aggregates, and swaps the store via
-    the rename-aside protocol (sinks.compact_dir discipline): write to a
-    temp dir, move the old store aside, move the new one in, drop the
-    old — a crash at any step leaves a readable store.  The decimal
-    accumulator makes the merge ASSOCIATIVE-EXACT: any batch arrival
-    order produces bit-identical totals, so the batch twin is the
-    oracle.  NOTE: per-key totals written before a crash and replayed
-    re-merge idempotently only because each batch REPLACES the whole
-    aggregate (union + re-aggregate), never increments in place."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        dec = F.col(val).cast("decimal(27,6)")
-        inc = batch_df.groupBy(key).agg(F.sum(dec).alias("_t"))
-        if os.path.isdir(path):
-            cur = spark.read.parquet(path).select(
-                key, F.col("total").cast("decimal(27,6)").alias("_t")
-            )
-            inc = inc.unionByName(cur).groupBy(key).agg(F.sum("_t").alias("_t"))
-        out = inc.select(key, F.col("_t").cast("decimal(27,6)").alias("total"))
-        tmp, old = path + "__next", path + "__old"
-        out.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-
-    return (
-        df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
 def windowed_distinct_users(
     events: DataFrame,
     window: str = "6 hours",
@@ -634,119 +198,6 @@ def windowed_distinct_users(
             ).alias("approx_users")
         )
         .select(F.col("w.start").alias("window_start"), "approx_users")
-    )
-
-
-RATE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("tokens", T.DoubleType()),
-        T.StructField("last_ms", T.LongType()),
-    ]
-)
-RATE_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("allowed", T.BooleanType()),
-    ]
-)
-
-
-def rate_limit_stream(
-    events: DataFrame,
-    capacity: float = 5.0,
-    refill_per_s: float = 0.01,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-key EVENT-TIME token bucket — ingest quota enforcement as a
-    custom stateful operator (``applyInPandasWithState``, the same live
-    API as :func:`sessionize_stream`).
-
-    Each key holds a bucket of ``capacity`` tokens refilling at
-    ``refill_per_s`` tokens per EVENT-TIME second; an event is marked
-    ``allowed`` iff a full token is available (and consumes it) — the
-    deterministic classic algorithm, driven by the event's own
-    timestamps rather than processing time so that replaying the same
-    data yields the SAME decisions (processing-time limiters are
-    non-reproducible by construction, useless for a data pipeline that
-    must be re-runnable).  Within a micro-batch, events sort by
-    (ts, event_id) — a total order — so decisions are independent of
-    arrival interleaving; state per key is two scalars.  Emits EVERY
-    event with its decision (callers filter or route on ``allowed``;
-    dropping silently would hide the quota's effect from audits).
-
-    The batch twin — the same fold over the whole history in one pass —
-    is what the stream must converge to, property-tested like every
-    streaming operator here.  Convergence holds when arrival respects
-    event-time order ACROSS micro-batches (within a batch any
-    interleaving is fine — the sort normalizes it); a late row under
-    the watermark is decided against the bucket state as of its
-    arrival, not retroactively (same contract as every real quota
-    system — exact retroactive decisions would need the event-buffering
-    pattern of the tws sessionizer).
-
-    State is BOUNDED: a key idle for capacity/refill_per_s event-time
-    seconds has provably refilled to capacity, which is exactly the
-    fresh-key state — so its row is evicted on an event-time timeout at
-    that horizon with zero effect on any future decision (the
-    deduplicate_events lesson: unbounded keyed state is a guaranteed
-    OOM on a long-running stream)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    full_after_ms = int(capacity / refill_per_s * 1000) + 1
-
-    def fn(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            # idle long enough that the bucket is provably full again ==
-            # fresh state; dropping the row changes no future decision
-            state.remove()
-            return
-        rows = []
-        for pdf in pdf_iter:
-            for eid, ts in zip(pdf["event_id"], pd.to_datetime(pdf["ts"])):
-                rows.append((int(eid), ts.to_pydatetime()))
-        rows.sort(key=lambda r: (r[1], r[0]))
-        if state.exists:
-            tokens, last_ms = state.get
-        else:
-            tokens, last_ms = float(capacity), None
-        out = []
-        for eid, ts in rows:
-            ms = int(ts.timestamp() * 1000)
-            if last_ms is not None and ms > last_ms:
-                tokens = min(
-                    float(capacity), tokens + (ms - last_ms) / 1000.0 * refill_per_s
-                )
-            last_ms = ms if last_ms is None else max(last_ms, ms)
-            if tokens >= 1.0:
-                tokens -= 1.0
-                out.append((user_id, eid, ts, True))
-            else:
-                out.append((user_id, eid, ts, False))
-        state.update((tokens, last_ms if last_ms is not None else 0))
-        if last_ms is not None:
-            state.setTimeoutTimestamp(
-                max(last_ms + full_after_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "event_id", "ts", "allowed"]
-            )
-
-    return (
-        ensure_event_time(events)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=RATE_OUTPUT_SCHEMA,
-            stateStructType=RATE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 

@@ -114,24 +114,6 @@ def test_merge_agg_state_disjoint_and_empty_sides(spark):
     assert same == {"x": (2, 3.5)}
 
 
-def test_partition_stats_flags_hot_partition(spark):
-    from pyspark.sql import functions as F
-
-    from lvm_datapipe_spark.operators.analyze import partition_stats
-
-    balanced = spark.range(1000).repartition(8)
-    b = partition_stats(balanced).collect()[0]
-    assert b["n_partitions"] == 8 and b["skew"] < 2.0
-
-    # all rows hash to one key → one hot partition after a keyed exchange;
-    # the 7 EMPTY partitions must still count in the denominator
-    skewed = spark.range(1000).withColumn("k", F.lit(1)).repartition(8, "k")
-    s = partition_stats(skewed).collect()[0]
-    assert s["max_rows"] == 1000
-    assert s["n_partitions"] == 8 and s["n_nonempty"] == 1
-    assert s["skew"] == 8.0
-
-
 def test_merge_agg_state_null_keys_merge(spark):
     from lvm_datapipe_spark.operators.aggregates import agg_state, merge_agg_state
 

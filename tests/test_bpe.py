@@ -4,7 +4,6 @@ from collections import Counter
 
 from lvm_datapipe_spark.operators.bpe import (
     END,
-    apply_bpe,
     learn_bpe_merges,
     word_symbol_table,
 )
@@ -66,49 +65,11 @@ def test_learn_stops_on_hapax_pairs(spark):
     assert merges == []  # every pair occurs once — nothing to learn
 
 
-def test_apply_reproduces_training_segmentation(spark):
-    df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
-    merges, words = learn_bpe_merges(df, n_merges=12)
-    seg = {r["word"]: list(r["sym"]) for r in words.collect()}
-    enc = apply_bpe(df, merges).collect()
-    for row in enc:
-        toks = list(row["bpe_tokens"])
-        # re-derive per-word segmentation from the flat stream via </w>
-        out, cur = [], []
-        for t in toks:
-            cur.append(t)
-            if t.endswith(END):
-                out.append(cur)
-                cur = []
-        words_in_row = row["text"].split()
-        assert len(out) == len(words_in_row)
-        for w, s in zip(words_in_row, out):
-            assert seg[w] == s
-
-
 def test_word_symbol_table_weights(spark):
     df = spark.createDataFrame([("ab ab ba",)], ["text"])
     rows = {r["word"]: (r["weight"], list(r["sym"]))
             for r in word_symbol_table(df).collect()}
     assert rows == {"ab": (2, ["a", "b", END]), "ba": (1, ["b", "a", END])}
-
-
-def test_apply_matches_training_on_nonascii_whitespace(spark):
-    # U+00A0 is whitespace for python str.split() but NOT for the learner's
-    # Java \s+ — both sides must treat it as part of the word
-    text = "café bar café bar café bar"
-    df = spark.createDataFrame([(text,)], ["text"])
-    merges, words = learn_bpe_merges(df, n_merges=6)
-    seg = {r["word"]: list(r["sym"]) for r in words.collect()}
-    assert list(seg) == ["café bar"]  # one word type
-    enc = apply_bpe(df, merges).collect()[0]["bpe_tokens"]
-    out, cur = [], []
-    for t in enc:
-        cur.append(t)
-        if t.endswith(END):
-            out.append(cur)
-            cur = []
-    assert out == [seg["café bar"]] * 3
 
 
 def test_local_and_distributed_paths_identical(spark):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.catalog import load_table
-from lvm_datapipe_spark.plans.bucketing import bucketed_join, count_exchanges, write_bucketed
+from lvm_datapipe_spark.plans.bucketing import count_exchanges, write_bucketed
 
 
 @pytest.fixture()
@@ -30,7 +30,7 @@ def bucketed_tables(spark, sf_dir):
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir, bucketed_tables):
     lt, rt = bucketed_tables
-    joined = bucketed_join(spark, lt, rt, "l_orderkey")
+    joined = spark.table(lt).join(spark.table(rt).hint("merge"), "l_orderkey")
     assert count_exchanges(joined) == 0  # co-located: no Exchange on either side
     # and it computes the same result as the plain shuffled join
     li = load_table(spark, sf_dir, "lineitem")
@@ -47,27 +47,3 @@ def test_unbucketed_join_shuffles(spark, sf_dir):
     # force a non-broadcast join for comparison
     joined = li.hint("merge").join(orders.hint("merge"), "l_orderkey")
     assert count_exchanges(joined) >= 2  # both sides shuffle without buckets
-
-
-def test_band_store_join_is_colocated(spark, sf_dir):
-    """MinHash band index persisted bucketed on (band, bucket): the
-    candidate self-join plans WITHOUT an Exchange under the join — the only
-    shuffle left is the final pair distinct — and the pairs are identical
-    to the in-memory LSH path."""
-    from lvm_datapipe_spark.catalog import load_table
-    from lvm_datapipe_spark.operators import dedup as D
-    from lvm_datapipe_spark.plans.bucketing import count_exchanges
-    from lvm_datapipe_spark.session import query_scope
-
-    docs = load_table(spark, sf_dir, "documents")
-    D.write_band_store(spark, docs, "band_store_test")
-    try:
-        out = D.candidate_pairs_from_band_store(spark, "band_store_test")
-        assert count_exchanges(out) == 1  # only the distinct; none for the join
-        got = {(r.id_a, r.id_b) for r in out.collect()}
-        with query_scope(spark):
-            mem = D.lsh_candidate_pairs(D.minhash_signatures(docs))
-            want = {(r.id_a, r.id_b) for r in mem.collect()}
-        assert got == want and len(want) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS band_store_test")

@@ -1,11 +1,11 @@
-"""Golden tests for the M7/M8 caption-model text side (VERDICT r7 item 4):
-LLaVA conversation-mode inference, conversation-template prompt assembly,
+"""Golden tests for the M7/M8 caption-model text side: LLaVA
+conversation-mode inference, conversation-template prompt assembly,
 image-token splicing, and CoCa tokenize framing — all torch-free, against
 literal expected strings/ids so any drift in the contracts is loud.
 
-Reference: /root/reference/evaluations/llava_caption.py:77-92 (conv mode),
-:111-135 (prompt + tokenizer_image_token + stop string);
-/root/reference/evaluations/coca_caption.py:94-97 (generate + decode)."""
+Reference: ``evaluations/llava_caption.py:77-92`` (conv mode), ``:111-135``
+(prompt + tokenizer_image_token + stop string);
+``evaluations/coca_caption.py:94-97`` (generate + decode)."""
 
 from __future__ import annotations
 

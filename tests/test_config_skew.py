@@ -1,59 +1,10 @@
-"""Tests for the YAML-config catalog (S12) and skew-mitigation operators."""
+"""Tests for the skew-mitigation operators."""
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
-from lvm_datapipe_spark.operators.skew import salted_aggregate, salted_join
-from lvm_datapipe_spark.sources.config import load_clips, load_meta_config
-
-
-def test_meta_config_load_clips(spark, tmp_path):
-    # two JSON-array shards, as the reference lays them out (README.md:65-89)
-    shard_dir = tmp_path / "metadata" / "all"
-    shard_dir.mkdir(parents=True)
-    for s in range(2):
-        records = [
-            {
-                "basic": {
-                    "video_id": f"vid_{s}_{i}",
-                    "clip_id": f"vid_{s}_{i}_0000000",
-                    "clip_duration": 2.0 + i,
-                }
-            }
-            for i in range(3)
-        ]
-        (shard_dir / f"video_dataset_{s}.json").write_text(json.dumps(records))
-    cfg_path = tmp_path / "meta_config.yaml"
-    cfg_path.write_text(
-        f"data_root: {tmp_path}\n"
-        "META:\n"
-        "  - metadata/all/video_dataset_0.json\n"
-        "  - metadata/all/video_dataset_1.json\n"
-    )
-    cfg = load_meta_config(str(cfg_path))
-    assert len(cfg.meta_paths) == 2
-    clips = load_clips(spark, cfg)
-    assert clips.count() == 6  # multi-shard concat (S3)
-    row = clips.filter(F.col("basic.video_id") == "vid_0_0").first()
-    assert row.basic.clip_duration == 2.0
-    assert row.scene is None or row.scene.ocr_score is None  # defaulted section
-
-
-def test_salted_join_matches_plain_join(spark):
-    # one hot key (90% of rows) + uniform tail
-    left = spark.createDataFrame(
-        [("hot" if i % 10 else f"k{i}", i) for i in range(1000)], ["k", "v"]
-    )
-    right = spark.createDataFrame([("hot", 1), ("k10", 2), ("k20", 3)], ["k", "w"])
-    plain = salted_join(left, right, "k", salt_buckets=8)
-    want = left.join(right, "k").count()
-    assert plain.count() == want
-    # values survive the salt round-trip
-    got = {(r.k, r.v, r.w) for r in plain.filter(F.col("k") == "k10").collect()}
-    assert got == {("k10", 10, 2)}
+from lvm_datapipe_spark.operators.skew import salted_aggregate
 
 
 def test_salted_aggregate_matches_plain(spark):
@@ -81,22 +32,3 @@ def test_salted_aggregate_matches_plain(spark):
     for k in want:
         assert got[k][0] == want[k][0] and got[k][2] == want[k][2]
         assert abs(got[k][1] - want[k][1]) < 1e-9
-
-
-def test_salted_join_rejects_right_and_full(spark):
-    import pytest
-
-    left = spark.range(4).withColumnRenamed("id", "k")
-    right = spark.range(4).withColumnRenamed("id", "k")
-    for how in ("right", "rightouter", "full", "outer", "full_outer"):
-        with pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(left, right, "k", how=how)
-
-
-def test_salted_join_left_keeps_unmatched_left_once(spark):
-    left = spark.createDataFrame([(1, "a"), (2, "b"), (9, "z")], ["k", "lv"])
-    right = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "rv"])
-    out = salted_join(left, right, "k", salt_buckets=8, how="left")
-    rows = {(r.k, r.lv, r.rv) for r in out.collect()}
-    assert rows == {(1, "a", "x"), (2, "b", "y"), (9, "z", None)}
-    assert out.count() == 3

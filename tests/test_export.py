@@ -81,21 +81,3 @@ def test_validate_enums(spark):
     )
     out = [r.enums_valid for r in export.validate_enums(df).collect()]
     assert out == [True, False, True]
-
-
-def test_load_evolving_parquet_merges_schemas(spark, tmp_path):
-    """Batches written before/after a column was added read back as one
-    superset schema with nulls for the missing column."""
-    from lvm_datapipe_spark.sources.metadata import load_evolving_parquet
-
-    p = str(tmp_path / "snap")
-    spark.createDataFrame([(1, "a")], ["clip_id", "caption"]).write.parquet(
-        p + "/batch=0"
-    )
-    spark.createDataFrame(
-        [(2, "b", 0.9)], ["clip_id", "caption", "aesthetic"]
-    ).write.parquet(p + "/batch=1")
-    out = load_evolving_parquet(spark, p)
-    assert set(out.columns) >= {"clip_id", "caption", "aesthetic"}
-    rows = {r.clip_id: r.aesthetic for r in out.collect()}
-    assert rows[1] is None and rows[2] == 0.9

@@ -5,7 +5,7 @@ completeness, clip-id format)."""
 
 from __future__ import annotations
 
-import json
+import struct
 
 import numpy as np
 import pytest
@@ -16,8 +16,6 @@ from lvm_datapipe_spark.functions.strings import clean_caption
 from lvm_datapipe_spark.operators import media, scenecut
 from lvm_datapipe_spark.operators.relational import drop_failed_rows, resume_anti_join
 from lvm_datapipe_spark.plans import pipeline
-from lvm_datapipe_spark.sources import metadata as meta_src
-from lvm_datapipe_spark.sources import sidecars
 from lvm_datapipe_spark.sources.video import scan_video_dir
 
 N_VIDEOS = 10
@@ -188,13 +186,9 @@ def test_fakevideo_cut_equals_encoded_frame_slice():
 
 @pytest.fixture(scope="module")
 def scored_input(clips):
-    withp = media.probe_videos(clips, content_col="clip_content")
-    return withp.select(
-        "clip_id",
-        F.col("clip_content").alias("content"),
-        F.col("probe.height").alias("height"),
-        F.col("probe.width").alias("width"),
-        F.col("probe.n_frames").alias("n_frames"),
+    # height/width/n_frames: scene_cut's media._probe of each clip
+    return clips.select(
+        "clip_id", F.col("clip_content").alias("content"), "height", "width", "n_frames"
     ).cache()
 
 
@@ -311,82 +305,6 @@ def test_run_stage_resume(spark, scored_input):
     assert first == second
 
 
-def test_pipeline_checkpoints(spark, scored_input, tmp_path):
-    def mk(name):
-        def scorer(df):
-            return media.apply_scorer(media.with_sampled_frames(df), name).drop("frames")
-
-        return scorer
-
-    out = pipeline.run_pipeline(
-        scored_input,
-        [("imaging_quality", mk("imaging_quality")), ("of_score", mk("motion"))],
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        spark=spark,
-    )
-    assert out.filter(F.col("imaging_quality").isNull() | F.col("of_score").isNull()).count() == 0
-    pipeline.assert_counts_consistent(out, scored_input.count())
-
-
-# -- metadata + sidecar sources ---------------------------------------------
-
-
-def test_jsonl_roundtrip(spark, clips, tmp_path):
-    path = str(tmp_path / "meta_jsonl")
-    slim = clips.select("clip_id", "video_id", "clip_duration")
-    meta_src.write_jsonl(slim, path)
-    back = meta_src.load_jsonl(spark, path, slim.schema)
-    assert back.count() == slim.count()
-    assert {r.clip_id for r in back.collect()} == {r.clip_id for r in slim.collect()}
-
-
-def test_per_clip_dir_and_done_markers(spark, clips, tmp_path):
-    d = tmp_path / "per_clip"
-    d.mkdir()
-    rows = clips.select("clip_id", "video_id", "clip_duration").collect()
-    for r in rows[:6]:
-        (d / f"{r.clip_id}.json").write_text(
-            json.dumps({"clip_id": r.clip_id, "video_id": r.video_id, "clip_duration": r.clip_duration})
-        )
-    (d / f"{rows[6].clip_id}.json").write_text("")  # empty marker -> re-do
-    schema = clips.select("clip_id", "video_id", "clip_duration").schema
-    merged = meta_src.load_per_clip_dir(spark, str(d), schema)
-    assert merged.filter(F.col("clip_id").isNotNull()).count() == 6
-    done = meta_src.snapshot_done_markers(spark, str(d))
-    # binaryFile skips zero-byte files, which IS the ocr_score.py:64
-    # semantics: an empty marker never counts as done
-    assert done.count() == 6
-    from lvm_datapipe_spark.operators.relational import resume_anti_join_redo_empty
-
-    todo = resume_anti_join_redo_empty(clips, done)
-    assert todo.count() == clips.count() - 6  # empty marker stays todo
-
-
-def test_mvs_sidecar_join(spark, clips, tmp_path):
-    p = tmp_path / "mvs_scores.txt"
-    rows = clips.select("clip_id").collect()
-    lines = [f"{0.5 + i} {0.01} {r.clip_id}.mp4" for i, r in enumerate(rows[:4])]
-    lines.append("9.9 0.01 not_a_clip.mp4")  # orphan id -> left-join null side
-    p.write_text("\n".join(lines) + "\n")
-    mvs = sidecars.read_mvs_scores(spark, str(p))
-    assert mvs.count() == 5
-    joined = sidecars.join_sidecar(clips, mvs.select("clip_id", "score"))
-    assert joined.filter(F.col("score").isNotNull()).count() == 4
-    assert joined.count() == clips.count()
-
-
-def test_sum_captions_extraction(spark, tmp_path):
-    p = tmp_path / "sum_caption.csv"
-    p.write_text(
-        'clips/c1.mp4,"some text Answer: [""car"", ""tree""] tail"\n'
-        "clips/c2.mp4,no answer marker here\n"
-    )
-    df = sidecars.read_sum_captions(spark, str(p))
-    out = {r.clip_id: r.objects for r in df.collect()}
-    assert out["c1"] == ["car", "tree"]
-    assert out["c2"] == []
-
-
 def test_resume_anti_join_integration(spark, clips):
     done = clips.select("clip_id").limit(4)
     todo = resume_anti_join(clips, done)
@@ -396,10 +314,71 @@ def test_resume_anti_join_integration(spark, clips):
 # -- real-container (ISO-BMFF) probe + cv2 adapter ---------------------------
 
 
-def _mp4_fixture(**kw):
-    from lvm_datapipe_spark.operators import mp4
+def _mp4_fixture(
+    width: int = 64,
+    height: int = 48,
+    n_frames: int = 30,
+    fps: float = 10.0,
+    codec: bytes = b"avc1",
+) -> bytes:
+    """Hand-assemble a structurally valid ISO-BMFF file (ftyp + moov box tree
+    + empty mdat) with the given video geometry — a REAL container any
+    ffprobe would read; no encoder ships here.  Not decodable (no coded
+    samples), which is exactly the F4 null-row case for the decode path."""
 
-    return mp4.build_minimal_mp4(**kw)
+    def box(fourcc: bytes, payload: bytes) -> bytes:
+        return struct.pack(">I", 8 + len(payload)) + fourcc + payload
+
+    def full(fourcc: bytes, version: int, flags: int, payload: bytes) -> bytes:
+        return box(fourcc, bytes([version]) + flags.to_bytes(3, "big") + payload)
+
+    timescale = 1000
+    duration = int(n_frames / fps * timescale)
+    delta = int(timescale / fps)
+
+    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
+    mvhd = full(
+        b"mvhd", 0, 0,
+        struct.pack(">IIII", 0, 0, timescale, duration)
+        + struct.pack(">iH", 0x00010000, 0x0100) + b"\x00" * 10
+        + struct.pack(">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
+        + b"\x00" * 24 + struct.pack(">I", 2),
+    )
+    tkhd = full(
+        b"tkhd", 0, 7,
+        struct.pack(">IIIII", 0, 0, 1, 0, duration) + b"\x00" * 8
+        + struct.pack(">HHHH", 0, 0, 0, 0)
+        + struct.pack(">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
+        + struct.pack(">II", width << 16, height << 16),
+    )
+    mdhd = full(
+        b"mdhd", 0, 0, struct.pack(">IIII", 0, 0, timescale, duration) + struct.pack(">HH", 0x55C4, 0)
+    )
+    hdlr = full(b"hdlr", 0, 0, struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00")
+    # VisualSampleEntry: 6 reserved + data_ref_index + 16 predefined + w + h
+    sample_entry = box(
+        codec,
+        b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 16
+        + struct.pack(">HH", width, height)
+        + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
+        + struct.pack(">I", 0) + struct.pack(">H", 1)
+        + b"\x00" * 32 + struct.pack(">Hh", 0x18, -1),
+    )
+    stsd = full(b"stsd", 0, 0, struct.pack(">I", 1) + sample_entry)
+    stts = full(b"stts", 0, 0, struct.pack(">III", 1, n_frames, delta))
+    stsc = full(b"stsc", 0, 0, struct.pack(">I", 0))
+    stsz = full(b"stsz", 0, 0, struct.pack(">II", 0, 0))
+    stco = full(b"stco", 0, 0, struct.pack(">I", 0))
+    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
+    vmhd = full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
+    dref = full(b"dref", 0, 0, struct.pack(">I", 1) + full(b"url ", 0, 1, b""))
+    dinf = box(b"dinf", dref)
+    minf = box(b"minf", vmhd + dinf + stbl)
+    mdia = box(b"mdia", mdhd + hdlr + minf)
+    trak = box(b"trak", tkhd + mdia)
+    moov = box(b"moov", mvhd + trak)
+    mdat = box(b"mdat", b"")
+    return ftyp + moov + mdat
 
 
 def test_mp4_probe_roundtrip():
@@ -421,17 +400,13 @@ def test_mp4_probe_rejects_garbage_and_truncation():
     assert mp4.probe_mp4(data[:40]) is None  # ...but no moov -> None
 
 
-def test_probe_udf_reads_real_mp4_container(spark):
-    from lvm_datapipe_spark.operators.media import probe_videos
-
-    rows = [("a.mp4", _mp4_fixture(width=64, height=48, n_frames=30, fps=10.0)),
-            ("b.bin", b"garbage")]
-    df = spark.createDataFrame(rows, ["path", "content"])
-    got = {r.path: r.probe.asDict() for r in probe_videos(df).collect()}
-    assert got["a.mp4"] == {
+def test_probe_reads_real_mp4_container():
+    # the format-dispatching probe scenecut runs on every clip
+    got = media._probe(_mp4_fixture(width=64, height=48, n_frames=30, fps=10.0))
+    assert got == {
         "height": 48, "width": 64, "fps": 10.0, "n_frames": 30, "duration_s": 3.0,
     }
-    assert all(v is None for v in got["b.bin"].values())
+    assert media._probe(b"garbage") is None
 
 
 def test_mp4_decode_without_cv2_yields_null_row(spark):
@@ -541,7 +516,7 @@ def test_detect_one_null_for_real_container_without_pyscenedetect():
     from lvm_datapipe_spark.operators import scenecut as SC
 
     assert SC.have_pyscenedetect() is False  # not shipped in this container
-    assert SC._detect_one(mp4.build_minimal_mp4(), 30.0) is None
+    assert SC._detect_one(_mp4_fixture(), 30.0) is None
     assert SC._detect_one(None, 30.0) is None
 
 

@@ -197,25 +197,16 @@ def test_tiny_aesthetic_model_cached_per_process():
     assert a is b  # lazy class-level singleton, loaded once per worker
 
 
-def test_tiny_aesthetic_end_to_end_on_decoded_png(spark):
-    """Full path: real PNG encode -> real PNG decode -> Spark apply_scorer
+def test_tiny_aesthetic_end_to_end_through_spark(spark):
+    """Full path: uint8 frames -> Spark apply_scorer
     -> TinyAestheticAdapter.score on the executor -> exact golden match
     against the same adapter run driver-side (fixed seeded weights, pure
     float64 math — bit-identical across the Arrow boundary)."""
-    from lvm_datapipe_spark.operators import rawcodecs
-
     rng = np.random.default_rng(7)
-    frames_np = [rng.integers(0, 256, size=(12, 16), dtype=np.uint8) for _ in range(3)]
-    decoded = [
-        rawcodecs.decode_png(rawcodecs.encode_png(f)).reshape(12, 16)
-        for f in frames_np
-    ]
-    for orig, dec in zip(frames_np, decoded):
-        assert np.array_equal(orig, dec)
-
+    frames = [rng.integers(0, 256, size=(12, 16), dtype=np.uint8) for _ in range(3)]
     df = spark.createDataFrame(
         [
-            ("clip0", [bytearray(f.tobytes()) for f in decoded], 12, 16),
+            ("clip0", [bytearray(f.tobytes()) for f in frames], 12, 16),
             ("failed", None, None, None),  # F4 null-row semantics
         ],
         "clip_id string, frames array<binary>, height int, width int",
@@ -224,7 +215,7 @@ def test_tiny_aesthetic_end_to_end_on_decoded_png(spark):
         r.clip_id: r.tiny_aesthetic_score
         for r in media.apply_scorer(df, "tiny_aesthetic").collect()
     }
-    expected = MA.TinyAestheticAdapter().score(decoded, 12, 16)
+    expected = MA.TinyAestheticAdapter().score(frames, 12, 16)
     assert rows["clip0"] == expected  # exact, not approx
     assert rows["failed"] is None
 
@@ -249,22 +240,16 @@ def test_tiny_imaging_mean_over_frames_contract():
     assert a.score([], 8, 8) == 0.0
 
 
-def test_tiny_imaging_end_to_end_on_decoded_png(spark):
-    """Full path: real PNG encode -> real PNG decode -> Spark apply_scorer
+def test_tiny_imaging_end_to_end_through_spark(spark):
+    """Full path: uint8 frames -> Spark apply_scorer
     -> TinyImagingQualityAdapter.score on the executor -> exact golden
     match against the same adapter run driver-side (fixed seeded weights,
     pure float64 math — bit-identical across the Arrow boundary)."""
-    from lvm_datapipe_spark.operators import rawcodecs
-
     rng = np.random.default_rng(13)
-    frames_np = [rng.integers(0, 256, size=(12, 16), dtype=np.uint8) for _ in range(3)]
-    decoded = [
-        rawcodecs.decode_png(rawcodecs.encode_png(f)).reshape(12, 16)
-        for f in frames_np
-    ]
+    frames = [rng.integers(0, 256, size=(12, 16), dtype=np.uint8) for _ in range(3)]
     df = spark.createDataFrame(
         [
-            ("clip0", [bytearray(f.tobytes()) for f in decoded], 12, 16),
+            ("clip0", [bytearray(f.tobytes()) for f in frames], 12, 16),
             ("failed", None, None, None),  # F4 null-row semantics
         ],
         "clip_id string, frames array<binary>, height int, width int",
@@ -273,7 +258,7 @@ def test_tiny_imaging_end_to_end_on_decoded_png(spark):
         r.clip_id: r.tiny_imaging_quality_score
         for r in media.apply_scorer(df, "tiny_imaging_quality").collect()
     }
-    expected = MA.TinyImagingQualityAdapter().score(decoded, 12, 16)
+    expected = MA.TinyImagingQualityAdapter().score(frames, 12, 16)
     assert rows["clip0"] == expected  # exact, not approx
     assert rows["failed"] is None
 
@@ -299,21 +284,15 @@ def test_tiny_caption_greedy_decode_is_deterministic_and_terminates():
     assert len(set(caps1)) > 1
 
 
-def test_tiny_caption_end_to_end_on_decoded_png(spark):
-    """Generation-family twin of the tiny_aesthetic golden test: real PNG
-    decode -> apply_scorer -> the REAL autoregressive generate loop on the
+def test_tiny_caption_end_to_end_through_spark(spark):
+    """Generation-family twin of the tiny_aesthetic golden test: uint8
+    frames -> apply_scorer -> the REAL autoregressive generate loop on the
     executor -> exact string match vs the driver-side run."""
-    from lvm_datapipe_spark.operators import rawcodecs
-
     rng = np.random.default_rng(9)
-    frames_np = [rng.integers(0, 256, size=(12, 16), dtype=np.uint8) for _ in range(3)]
-    decoded = [
-        rawcodecs.decode_png(rawcodecs.encode_png(f)).reshape(12, 16)
-        for f in frames_np
-    ]
+    frames = [rng.integers(0, 256, size=(12, 16), dtype=np.uint8) for _ in range(3)]
     df = spark.createDataFrame(
         [
-            ("clip0", [bytearray(f.tobytes()) for f in decoded], 12, 16),
+            ("clip0", [bytearray(f.tobytes()) for f in frames], 12, 16),
             ("failed", None, None, None),
         ],
         "clip_id string, frames array<binary>, height int, width int",
@@ -322,7 +301,7 @@ def test_tiny_caption_end_to_end_on_decoded_png(spark):
         r.clip_id: r.tiny_caption_raw
         for r in media.apply_scorer(df, "tiny_caption").collect()
     }
-    expected = MA.TinyCaptionAdapter().score(decoded, 12, 16)
+    expected = MA.TinyCaptionAdapter().score(frames, 12, 16)
     assert rows["clip0"] == expected  # exact strings
     assert rows["failed"] is None
 

@@ -160,85 +160,6 @@ def test_histogram_partition_of_rows(spark, xs):
         assert 0 <= r.bucket < len(bins)
 
 
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=3),  # user
-            st.integers(min_value=0, max_value=7200),  # offset seconds
-        ),
-        min_size=1,
-        max_size=15,
-        unique=True,
-    )
-)
-@settings(max_examples=3, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
-def test_streaming_sessions_match_batch_model(spark, tmp_path_factory, rows):
-    """The stateful streaming sessionizer must close exactly the sessions
-    the batch gaps-and-islands model produces, once the watermark passes
-    every gap (driven by a far-future sentinel event)."""
-    import datetime as dt
-    import json as _json
-
-    from lvm_datapipe_spark.streaming.events import read_event_stream, sessionize_stream, start_to_memory
-
-    base = dt.datetime(2024, 1, 1)
-    gap_min = 30
-    d = tmp_path_factory.mktemp("sess_prop")
-    with open(d / "b0.json", "w") as f:
-        for i, (u, t) in enumerate(rows):
-            ts = (base + dt.timedelta(seconds=t)).isoformat()
-            f.write(_json.dumps({"event_id": i, "ts": ts, "user_id": u,
-                                 "event_type": "view", "value": 1.0, "props": "{}"}) + "\n")
-    # per-user far-future sentinels: every real session closes by ARRIVAL
-    # (deterministic), not by state timeout (whose no-data batch races with
-    # processAllAvailable); the sentinel's own session stays open in state
-    with open(d / "b1.json", "w") as f:
-        for u in sorted({u for u, _ in rows}):
-            f.write(_json.dumps({"event_id": 10**6 + u,
-                                 "ts": (base + dt.timedelta(days=10)).isoformat(),
-                                 "user_id": u, "event_type": "view", "value": 0.0,
-                                 "props": "{}"}) + "\n")
-
-    # file source orders batches by modification time — force b0 before b1
-    # (same-second writes would otherwise race, letting the sentinel batch
-    # run first and mark every real event late)
-    import os as _os
-    import time as _time
-
-    now = _time.time()
-    _os.utime(d / "b0.json", (now - 120, now - 120))
-    _os.utime(d / "b1.json", (now, now))
-
-    stream = read_event_stream(spark, str(d), max_files_per_trigger=1)
-    name = f"sess_prop_{abs(hash(tuple(rows))) % 10**9}"
-    q = start_to_memory(sessionize_stream(stream, gap_minutes=gap_min, watermark="0 seconds"), name, "append")
-    q.processAllAvailable()
-    q.stop()
-    sentinel_start = base + dt.timedelta(days=10)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-        if r.session_start < sentinel_start
-    }
-    # python gaps-and-islands model
-    want = set()
-    by_user = defaultdict(list)
-    for u, t in rows:
-        by_user[u].append(base + dt.timedelta(seconds=t))
-    for u, times in by_user.items():
-        times.sort()
-        start, prev, n = times[0], times[0], 1
-        for ts in times[1:]:
-            if (ts - prev).total_seconds() > gap_min * 60:
-                want.add((u, start, prev, n))
-                start, n = ts, 0
-            prev = ts
-            n += 1
-        want.add((u, start, prev, n))
-    assert got == want
-
-
 # --- r5: SCD2 merge vs a pure-Python model ----------------------------------
 
 _keys = st.integers(min_value=0, max_value=15)

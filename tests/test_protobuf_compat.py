@@ -47,9 +47,3 @@ def test_version_relaxation_same_major_passes_cross_major_raises():
         rv.ValidateProtobufRuntimeVersion(
             rv.DOMAIN, rv.MAJOR + 1, 0, 0, "", "probe.proto"
         )
-
-
-def test_tws_available_reports_true_here():
-    from lvm_datapipe_spark.streaming import events as ev
-
-    assert ev.tws_available() is True

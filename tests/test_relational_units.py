@@ -4,7 +4,6 @@ the reference behaviors they re-implement (SURVEY.md §5 plan, item 2)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.functions import strings as S
 from lvm_datapipe_spark.operators import aggregates as A
@@ -16,14 +15,6 @@ def test_resume_anti_join(spark):
     done = spark.createDataFrame([("b",), ("zz",)], ["clip_id"])
     out = {r.clip_id for r in R.resume_anti_join(clips, done).collect()}
     assert out == {"a", "c"}
-
-
-def test_resume_anti_join_redo_empty(spark):
-    # ocr_score.py:64 — zero-byte done markers are re-processed
-    clips = spark.createDataFrame([("a",), ("b",), ("c",)], ["clip_id"])
-    done = spark.createDataFrame([("a", 10), ("b", 0)], ["clip_id", "size_bytes"])
-    out = {r.clip_id for r in R.resume_anti_join_redo_empty(clips, done).collect()}
-    assert out == {"b", "c"}
 
 
 def test_find_breakpoint(spark):
@@ -88,10 +79,8 @@ def test_frame_sampling_indices(spark):
     df = spark.createDataFrame([(100,)], ["n"])
     row = df.select(
         S.frame_indices_at_fractions("n", [0.2, 0.5, 0.8]).alias("fr"),
-        S.stride_frame_indices("n", 10).alias("st"),
     ).first()
     assert row.fr == [20, 50, 80]  # coca_caption.py:44 policy
-    assert row.st == list(range(0, 100, 10))  # ocr_score.py:16-21 policy
 
 
 def test_best_per_group_tiebreak(spark):
@@ -119,11 +108,6 @@ def test_count_consistency(spark):
 def test_drop_failed_rows(spark):
     df = spark.createDataFrame([("a", "x"), ("b", None)], ["id", "frames"])
     assert [r.id for r in R.drop_failed_rows(df).collect()] == ["a"]
-
-
-def test_span_seconds(spark):
-    df = spark.createDataFrame([(100, 250, 25.0)], ["s", "e", "fps"])
-    assert df.select(S.span_seconds("s", "e", "fps").alias("d")).first().d == 6.0
 
 
 def test_asof_join_fills_right_row_atomically(spark):

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.operators.sampling import (
-    deterministic_sample,
     hash_bucket,
     split_assign,
     stratified_sample,
@@ -51,21 +50,6 @@ def test_split_subdivision_preserves_earlier_splits(spark):
             assert three[k] == "train"
         else:
             assert three[k] in ("val", "test")
-
-
-def test_sample_subset_and_monotone(spark):
-    docs = _docs(spark)
-    s10 = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.1).collect()}
-    s30 = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.3).collect()}
-    assert s10 <= s30  # growing the fraction only adds rows
-    assert 0 < len(s10) < len(s30) < 400
-
-
-def test_salt_decorrelates(spark):
-    docs = _docs(spark)
-    a = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.5, salt="x").collect()}
-    b = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.5, salt="y").collect()}
-    assert a != b
 
 
 def test_stratified_fractions(spark):

@@ -1,52 +1,6 @@
-"""Session factory: GPU resource recipe (SURVEY §4 — the reference binds one
-model process per GPU; here tasks request device shares declaratively)."""
+"""Session and stage plumbing: a stage's row count comes from its own write."""
 
 from __future__ import annotations
-
-import subprocess
-import sys
-
-import pytest
-from pathlib import Path
-
-from lvm_datapipe_spark.session import gpu_conf
-
-REPO = Path(__file__).resolve().parent.parent
-
-
-def test_gpu_conf_shapes_resource_requests():
-    conf = gpu_conf()
-    assert conf == {
-        "spark.executor.resource.gpu.amount": "1",
-        "spark.task.resource.gpu.amount": "1.0",
-    }
-    frac = gpu_conf(gpus_per_executor=4, gpus_per_task=0.5, discovery_script="/opt/getGpus.sh")
-    assert frac["spark.executor.resource.gpu.amount"] == "4"
-    assert frac["spark.task.resource.gpu.amount"] == "0.5"  # 2 tasks share a device
-    assert frac["spark.executor.resource.gpu.discoveryScript"] == "/opt/getGpus.sh"
-
-
-@pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_gpu_conf_lands_in_a_fresh_session():
-    """extra_conf=gpu_conf() must reach the live SparkConf.  Needs a session
-    that this test owns from birth (getOrCreate reuses, ignoring configs),
-    so build one in a subprocess; executor resource confs are inert in
-    local mode but must round-trip."""
-    code = """
-import sys
-sys.path.insert(0, {repo!r})
-from lvm_datapipe_spark.session import get_spark, gpu_conf
-spark = get_spark("gpu-conf-test", master="local[1]",
-                  extra_conf=gpu_conf(gpus_per_executor=2, gpus_per_task=0.25))
-assert spark.conf.get("spark.executor.resource.gpu.amount") == "2"
-assert spark.conf.get("spark.task.resource.gpu.amount") == "0.25"
-spark.stop()
-print("GPU_CONF_OK")
-""".format(repo=str(REPO))
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
-    )
-    assert "GPU_CONF_OK" in out.stdout, out.stderr[-2000:]
 
 
 def test_observed_stage_counts_without_extra_job(spark, tmp_path):

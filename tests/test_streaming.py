@@ -8,11 +8,37 @@ import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lvm_datapipe_spark.catalog import load_table
 from lvm_datapipe_spark.streaming import events as ev
 
 N_FILES = 4
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
+def _read_events(spark, landing_dir, max_files_per_trigger=10):
+    """File-source stream of JSONL event batches in a landing directory."""
+    return (
+        spark.readStream.format("json")
+        .schema(EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .load(landing_dir)
+    )
+
+
+def _to_memory(df, query_name, output_mode="update"):
+    """Start ``df`` into an in-memory table named ``query_name``."""
+    return df.writeStream.format("memory").queryName(query_name).outputMode(output_mode).start()
 
 
 def _await(query, timeout_s=60):
@@ -33,7 +59,7 @@ def _write_event_batches(d, rows, n_files=N_FILES):
     for i in range(n_files):
         with open(d / f"batch_{i}.json", "w") as f:
             for r in rows[i * chunk : (i + 1) * chunk]:
-                rec = {k: None for k in ev.EVENTS_SCHEMA.fieldNames()}
+                rec = {k: None for k in EVENTS_SCHEMA.fieldNames()}
                 rec.update(r.asDict())
                 rec["ts"] = rec["ts"].isoformat()
                 f.write(json.dumps(rec) + "\n")
@@ -48,9 +74,9 @@ def landing_dir(spark, tmp_path_factory):
 
 
 def test_stream_windowed_counts_match_batch(spark, landing_dir):
-    stream = ev.read_event_stream(spark, landing_dir)
+    stream = _read_events(spark, landing_dir)
     assert stream.isStreaming
-    q = ev.start_to_memory(
+    q = _to_memory(
         ev.windowed_counts(stream), "win_counts", output_mode="complete"
     )
     _await(q)
@@ -66,65 +92,6 @@ def test_stream_windowed_counts_match_batch(spark, landing_dir):
         for r in batch.collect()
     }
     assert got == want
-
-
-def test_stream_dedup(spark, landing_dir, tmp_path):
-    # duplicate one landing file wholesale -> dropDuplicates must remove all
-    import shutil
-
-    d = tmp_path / "dup_landing"
-    shutil.copytree(landing_dir, d)
-    shutil.copy(d / "batch_0.json", d / "batch_0_dup.json")
-    stream = ev.read_event_stream(spark, str(d))
-    q = ev.start_to_memory(ev.deduplicate_events(stream), "dedup_ev", "append")
-    _await(q)
-    n = spark.sql("SELECT count(*) AS n FROM dedup_ev").first().n
-    expected = load_table(spark, "/root/testdata/sf0.001", "events").count()
-    assert n == expected
-
-
-def test_stream_sessionize_closes_sessions(spark, tmp_path):
-    # two users; user 1 has two sessions separated by > gap; late watermark
-    # advance (a final event far in the future) forces session closure
-    d = tmp_path / "sess_landing"
-    d.mkdir()
-    rows = [
-        (1, 100, "2024-01-01T10:00:00", "view", 1.0),
-        (2, 100, "2024-01-01T10:10:00", "view", 1.0),
-        (3, 100, "2024-01-01T11:30:00", "view", 1.0),  # new session (gap 80min)
-        (4, 200, "2024-01-01T10:05:00", "click", 1.0),
-    ]
-    with open(d / "b0.json", "w") as f:
-        for eid, uid, ts, et, v in rows:
-            f.write(
-                json.dumps(
-                    {"event_id": eid, "ts": ts, "user_id": uid, "event_type": et, "value": v, "props": "{}"}
-                )
-                + "\n"
-            )
-    # watermark-advancing tail event
-    with open(d / "b1.json", "w") as f:
-        f.write(
-            json.dumps(
-                {"event_id": 99, "ts": "2024-01-02T10:00:00", "user_id": 999,
-                 "event_type": "view", "value": 0.0, "props": "{}"}
-            )
-            + "\n"
-        )
-    stream = ev.read_event_stream(spark, str(d), max_files_per_trigger=1)
-    q = ev.start_to_memory(
-        ev.sessionize_stream(stream, gap_minutes=30, watermark="0 seconds"),
-        "sessions",
-        "append",
-    )
-    _await(q)
-    got = {
-        (r.user_id, r.n_events)
-        for r in spark.sql("SELECT * FROM sessions").collect()
-    }
-    # user 100's first session (2 events) must be closed by the second
-    # session's arrival or timeout; remaining sessions may still be open
-    assert (100, 2) in got
 
 
 def test_windowed_counts_same_plan_batch_and_stream(spark):
@@ -146,8 +113,6 @@ def test_stream_clips_landing_pipeline(spark, tmp_path):
     on clip_id -> parquet sink; re-delivered shards don't duplicate rows
     (the streaming form of the reference's resume markers)."""
     import shutil
-
-    from pyspark.sql import types as T
 
     schema = T.StructType(
         [
@@ -209,8 +174,8 @@ def test_stream_static_enrichment_matches_batch(spark, landing_dir):
     cust = load_table(spark, "/root/testdata/sf0.001", "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    stream = ev.read_event_stream(spark, landing_dir)
-    q = ev.start_to_memory(
+    stream = _read_events(spark, landing_dir)
+    q = _to_memory(
         ev.enrich_stream(stream, cust), "enriched_events", output_mode="append"
     )
     _await(q)
@@ -227,8 +192,8 @@ def test_stream_static_enrichment_matches_batch(spark, landing_dir):
 
 
 def test_stream_sliding_window_matches_batch(spark, landing_dir):
-    stream = ev.read_event_stream(spark, landing_dir)
-    q = ev.start_to_memory(
+    stream = _read_events(spark, landing_dir)
+    q = _to_memory(
         ev.windowed_counts(stream, slide="30 minutes"),
         "win_sliding",
         output_mode="complete",
@@ -255,13 +220,13 @@ def test_stream_stream_interval_join_matches_batch(spark, landing_dir):
     view-within-lookback) pair the batch twin produces must emit from the
     streaming form on the same data (inner-join results emit as matches
     arrive; the watermark only bounds buffered state)."""
-    views = ev.read_event_stream(spark, landing_dir).filter(
+    views = _read_events(spark, landing_dir).filter(
         F.col("event_type") == "view"
     )
-    purchases = ev.read_event_stream(spark, landing_dir).filter(
+    purchases = _read_events(spark, landing_dir).filter(
         F.col("event_type") == "purchase"
     )
-    q = ev.start_to_memory(
+    q = _to_memory(
         ev.interval_join_views_purchases(views, purchases),
         "ss_interval_join",
         output_mode="append",
@@ -282,36 +247,6 @@ def test_stream_stream_interval_join_matches_batch(spark, landing_dir):
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_foreach_batch_partitioned_upsert_converges_to_batch(spark, landing_dir, tmp_path):
-    """Windowed counts materialized through foreachBatch + dynamic
-    partition overwrite: late-arriving files re-emit updated windows, each
-    overwriting its own (event_type, window) partition — the final table
-    must equal the batch twin, with no duplicate window rows."""
-    out = str(tmp_path / "agg")
-    ckpt = str(tmp_path / "ckpt")
-    stream = ev.read_event_stream(spark, landing_dir, max_files_per_trigger=1)
-    counts = ev.windowed_counts(stream).withColumn(
-        "wkey", F.date_format("window_start", "yyyyMMddHH")
-    )
-    q = ev.start_foreach_batch_partitioned(
-        counts, out, ckpt, partition_by=["event_type", "wkey"]
-    )
-    _await(q)
-    got = {
-        (r.window_start, r.event_type): (r.n, round(r.total_value, 6))
-        for r in spark.read.parquet(out).collect()
-    }
-    batch = ev.windowed_counts(
-        load_table(spark, "/root/testdata/sf0.001", "events"), watermark=None
-    )
-    want = {
-        (r.window_start, r.event_type): (r.n, round(r.total_value, 6))
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-@pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_stream_stream_outer_join_emits_nulls_after_watermark(
     spark, landing_dir, tmp_path
 ):
@@ -323,10 +258,10 @@ def test_stream_stream_outer_join_emits_nulls_after_watermark(
 
     d = tmp_path / "landing_outer"
     shutil.copytree(landing_dir, d)
-    q = ev.start_to_memory(
+    q = _to_memory(
         ev.interval_join_views_purchases(
-            ev.read_event_stream(spark, str(d)).filter(F.col("event_type") == "view"),
-            ev.read_event_stream(spark, str(d)).filter(
+            _read_events(spark, str(d)).filter(F.col("event_type") == "view"),
+            _read_events(spark, str(d)).filter(
                 F.col("event_type") == "purchase"
             ),
             how="left_outer",
@@ -377,45 +312,6 @@ def test_stream_stream_outer_join_emits_nulls_after_watermark(
     assert got_unmatched == want_unmatched
 
 
-def test_sessionize_transform_with_state_matches_apply_in_pandas(spark, tmp_path):
-    """The transformWithState sessionizer must emit the same closed-session
-    rows as the applyInPandasWithState one on identical data.  Skipped where
-    the container protobuf cannot run the tws state server; the processor
-    LOGIC is covered by the fake-driven unit test below either way."""
-    if not ev.tws_available():
-        pytest.skip("google.protobuf broken in this container (tws state server)")
-    d = tmp_path / "tws_landing"
-    d.mkdir()
-    rows = [
-        (1, 100, "2024-01-01T10:00:00", "view", 1.0),
-        (2, 100, "2024-01-01T10:10:00", "view", 1.0),
-        (3, 100, "2024-01-01T11:30:00", "view", 1.0),
-        (4, 200, "2024-01-01T10:05:00", "click", 1.0),
-    ]
-    with open(d / "b0.json", "w") as f:
-        for eid, uid, ts, et, v in rows:
-            f.write(json.dumps({"event_id": eid, "ts": ts, "user_id": uid,
-                                "event_type": et, "value": v, "props": "{}"}) + "\n")
-    with open(d / "b1.json", "w") as f:
-        f.write(json.dumps({"event_id": 99, "ts": "2024-01-02T10:00:00",
-                            "user_id": 999, "event_type": "view", "value": 0.0,
-                            "props": "{}"}) + "\n")
-    results = {}
-    for name, fn in (("gs", ev.sessionize_stream), ("tws", ev.sessionize_stream_tws)):
-        stream = ev.read_event_stream(spark, str(d), max_files_per_trigger=1)
-        q = ev.start_to_memory(
-            fn(stream, gap_minutes=30, watermark="0 seconds"),
-            f"sessions_{name}",
-            "append",
-        )
-        _await(q)
-        results[name] = {
-            (r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in spark.sql(f"SELECT * FROM sessions_{name}").collect()
-        }
-    assert results["tws"] == results["gs"]
-
-
 class _FakeValueState:
     def __init__(self):
         self.v = None
@@ -456,153 +352,9 @@ class _FakeTimerValues:
         return 0
 
 
-def test_tws_session_processor_logic_with_fakes():
-    """Drive the transformWithState processor directly (real class, fake
-    state/timers — the pattern used for every unexecutable-dep adapter):
-    gap split emits the first session, timer expiry closes the second,
-    exactly one live timer per key at all times."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from lvm_datapipe_spark.streaming.events import make_session_processor
-
-    proc = make_session_processor(gap_minutes=30)()
-    handle = _FakeHandle()
-    proc.init(handle)
-
-    def ts(h, m):
-        return f"2024-01-01T{h:02d}:{m:02d}:00"
-
-    batch = pd.DataFrame({"ts": [ts(10, 0), ts(10, 10), ts(11, 30)]})
-    out = list(proc.handleInputRows((100,), iter([batch]), _FakeTimerValues()))
-    closed = pd.concat(out)
-    # first session (2 events) closed by the 80-minute gap
-    assert list(closed["n_events"]) == [2]
-    assert closed["session_end"].iloc[0] == dt.datetime(2024, 1, 1, 10, 10)
-    # open session is in state; exactly one timer, armed at last_ts + gap
-    assert handle.state.v[2] == 1  # n_events of the open session
-    assert handle.timers == [
-        int(dt.datetime(2024, 1, 1, 12, 0).timestamp() * 1000)
-    ]
-
-    # timer expiry closes the remaining session and clears state
-    expired = list(proc.handleExpiredTimer((100,), _FakeTimerValues(), None))
-    final = pd.concat(expired)
-    assert list(final["n_events"]) == [1]
-    assert final["session_start"].iloc[0] == dt.datetime(2024, 1, 1, 11, 30)
-    assert handle.state.v is None
-
-
-def test_stream_flag_seen_before_matches_batch_twin(spark, landing_dir):
-    # historical corpus = even user ids; the stream flags each event row.
-    # batch twin == stream result (stateless, same plan) and no false
-    # negatives: every historical key must flag True.
-    from lvm_datapipe_spark.operators.bloom import bloom_bitmap
-
-    hist = spark.range(0, 2000).selectExpr("id * 2 AS user_id")
-    bm = bloom_bitmap(hist, "user_id", m_bits=1 << 16)
-
-    stream = ev.read_event_stream(spark, str(landing_dir))
-    q = ev.start_to_memory(
-        ev.flag_seen_before(stream, bm), "seen_ev", "append"
-    )
-    _await(q)
-    got = {
-        (r.event_id, r.seen_before)
-        for r in spark.sql("SELECT event_id, seen_before FROM seen_ev").collect()
-    }
-
-    batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = {
-        (r.event_id, r.seen_before)
-        for r in ev.flag_seen_before(batch, bm).collect()
-    }
-    assert got == want
-    # no false negatives on the historical side
-    for r in ev.flag_seen_before(batch, bm).collect():
-        if r.user_id % 2 == 0 and r.user_id < 4000:
-            assert r.seen_before, r.user_id
-
-
-def test_running_totals_store_matches_batch_twin(spark, landing_dir, tmp_path):
-    # stream the landing files through the external-store merge; the final
-    # store must equal the batch group-by with exact decimal totals
-    from decimal import Decimal
-
-    store = str(tmp_path / "totals")
-    q = ev.start_running_totals(
-        ev.read_event_stream(spark, str(landing_dir)),
-        store,
-        str(tmp_path / "ckpt_totals"),
-    )
-    _await(q)
-    got = {
-        r.user_id: r.total for r in spark.read.parquet(store).collect()
-    }
-    batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = {
-        r.user_id: r.total
-        for r in batch.groupBy("user_id")
-        .agg(
-            F.sum(F.col("value").cast("decimal(27,6)")).alias("total")
-        )
-        .collect()
-    }
-    assert got == want  # exact decimal equality, any batch split
-    assert not (tmp_path / "totals__next").exists()
-    assert not (tmp_path / "totals__old").exists()
-
-
-def test_incremental_dedup_stream_flags_across_batches(spark, tmp_path):
-    import json as _json
-
-    from lvm_datapipe_spark.streaming.ingest import start_incremental_dedup
-
-    d = tmp_path / "doc_landing"
-    d.mkdir()
-    t_base = "the quick brown fox jumps over the lazy dog today"
-    t_other = "completely different content about spark physical plans here"
-    with open(d / "b0.json", "w") as f:
-        f.write(_json.dumps({"doc_id": 1, "text": t_base}) + "\n")
-        f.write(_json.dumps({"doc_id": 2, "text": t_base}) + "\n")  # intra-batch dup
-    with open(d / "b1.json", "w") as f:
-        f.write(_json.dumps({"doc_id": 3, "text": t_base}) + "\n")  # cross-batch dup
-        f.write(_json.dumps({"doc_id": 4, "text": t_other}) + "\n")
-    # first-seen-wins depends on arrival order: pin it via mtime (the file
-    # source orders by modification time)
-    import os as _os
-
-    _os.utime(d / "b0.json", (1_700_000_000, 1_700_000_000))
-    _os.utime(d / "b1.json", (1_700_000_100, 1_700_000_100))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(d))
-    )
-    q = start_incremental_dedup(
-        stream,
-        str(tmp_path / "bands"),
-        str(tmp_path / "flags"),
-        str(tmp_path / "ckpt_dedup"),
-    )
-    _await(q)
-    flags = {
-        r.doc_id: r.is_dup for r in spark.read.parquet(str(tmp_path / "flags")).collect()
-    }
-    assert flags == {1: False, 2: True, 3: True, 4: False}
-    # two batches actually ran (one file per trigger)
-    batches = {
-        r.batch_id
-        for r in spark.read.parquet(str(tmp_path / "flags")).select("batch_id").collect()
-    }
-    assert len(batches) == 2
-
-
 def test_stream_windowed_distinct_users_match_batch(spark, landing_dir):
-    stream = ev.read_event_stream(spark, landing_dir)
-    q = ev.start_to_memory(
+    stream = _read_events(spark, landing_dir)
+    q = _to_memory(
         ev.windowed_distinct_users(stream), "win_users", output_mode="complete"
     )
     _await(q)
@@ -655,10 +407,10 @@ def test_stream_temporal_enrich_matches_batch(spark, landing_dir):
         F.to_timestamp("valid_to").alias("valid_to"),
     )
 
-    stream = ev.read_event_stream(spark, landing_dir).select("event_id", "ts", "user_id")
+    stream = _read_events(spark, landing_dir).select("event_id", "ts", "user_id")
     out = temporal_join(stream, versions, key="user_id", fact_ts="ts", how="left")
     assert out.isStreaming
-    q = ev.start_to_memory(out, "temporal_enrich", output_mode="append")
+    q = _to_memory(out, "temporal_enrich", output_mode="append")
     _await(q)
     got = {
         (r.event_id, r.tier)
@@ -681,50 +433,6 @@ def test_stream_temporal_enrich_matches_batch(spark, landing_dir):
     assert any(t.startswith("tier-late") for t in tiers)
 
 
-def test_stream_rate_limit_matches_python_model(spark, tmp_path):
-    """Token-bucket decisions on a time-ordered stream must equal the
-    single-pass python fold over the same history."""
-    rows = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "ts", "user_id"
-    ).collect()
-    rows.sort(key=lambda r: (r.ts, r.event_id))  # time-ordered arrival
-    d = tmp_path / "rate_landing"
-    d.mkdir()
-    _write_event_batches(d, rows)
-
-    stream = ev.read_event_stream(spark, str(d))
-    q = ev.start_to_memory(
-        ev.rate_limit_stream(stream, capacity=1.0, refill_per_s=1e-6),
-        "rate_out",
-        output_mode="append",
-    )
-    _await(q)
-    got = {
-        r.event_id: r.allowed
-        for r in spark.sql("SELECT * FROM rate_out").collect()
-    }
-
-    # python model: same fold per user over the full ordered history
-    state = {}
-    want = {}
-    for r in rows:
-        tokens, last = state.get(r.user_id, (1.0, None))
-        ms = int(r.ts.timestamp() * 1000)
-        if last is not None and ms > last:
-            tokens = min(1.0, tokens + (ms - last) / 1000.0 * 1e-6)
-        last = ms if last is None else max(last, ms)
-        if tokens >= 1.0:
-            tokens -= 1.0
-            want[r.event_id] = True
-        else:
-            want[r.event_id] = False
-        state[r.user_id] = (tokens, last)
-
-    assert got == want
-    # the quota actually bites: some of each on busy users
-    assert any(got.values()) and not all(got.values())
-
-
 def test_versioned_sink_delivers_exactly_once(spark, landing_dir, tmp_path):
     """foreachBatch -> txlog: every micro-batch lands as one epoch-stamped
     append version; the final table equals the batch input and per-version
@@ -733,7 +441,7 @@ def test_versioned_sink_delivers_exactly_once(spark, landing_dir, tmp_path):
 
     tbl = str(tmp_path / "vtbl")
     ckpt = str(tmp_path / "vckpt")
-    stream = ev.read_event_stream(spark, landing_dir, max_files_per_trigger=1)
+    stream = _read_events(spark, landing_dir, max_files_per_trigger=1)
     q = ev.start_versioned_sink(stream.select("event_id", "event_type"), tbl, ckpt)
     _await(q)
     want = {
@@ -768,58 +476,13 @@ def test_versioned_sink_skips_replayed_epoch(spark, landing_dir, tmp_path):
     txlog.commit(spark, seed, tbl, op="append", meta={"epoch": 0})
     # ...then "restart" with a FRESH checkpoint: Spark re-delivers epoch 0
     ckpt = str(tmp_path / "vckpt2")
-    stream = ev.read_event_stream(spark, landing_dir, max_files_per_trigger=10000)
+    stream = _read_events(spark, landing_dir, max_files_per_trigger=10000)
     q = ev.start_versioned_sink(stream.select("event_id", "event_type"), tbl, ckpt)
     _await(q)
     # the replayed epoch-0 batch was skipped: the table still holds ONLY
     # the previously committed version
     assert txlog.latest_version(tbl) == 1
     assert {r.event_id for r in txlog.read(spark, tbl).collect()} == {999999}
-
-
-def test_versioned_upsert_sink_merges_per_epoch(spark, tmp_path):
-    """Streaming upsert: within a batch duplicate keys collapse to the
-    greatest payload struct; across batches later epochs MERGE (replace
-    matched keys, insert new ones); a full replay under a fresh
-    checkpoint is skipped via the epoch guard."""
-    import json as _json
-
-    from lvm_datapipe_spark.sources import txlog
-
-    d = tmp_path / "landing"
-    d.mkdir()
-    tbl = str(tmp_path / "utbl")
-    ckpt = str(tmp_path / "uckpt")
-
-    def _stream():
-        return spark.readStream.schema("user_id long, val string").json(str(d))
-
-    def _run(checkpoint):
-        q = ev.start_versioned_upsert_sink(_stream(), tbl, checkpoint, ["user_id"])
-        _await(q)
-
-    with open(d / "f1.json", "w") as f:
-        for row in [(1, "a"), (1, "b"), (2, "x")]:
-            f.write(_json.dumps({"user_id": row[0], "val": row[1]}) + "\n")
-    _run(ckpt)
-    got = {r["user_id"]: r["val"] for r in txlog.read(spark, tbl).collect()}
-    assert got == {1: "b", 2: "x"}  # in-batch dup of key 1 -> greatest struct
-
-    with open(d / "f2.json", "w") as f:
-        for row in [(2, "z"), (3, "n")]:
-            f.write(_json.dumps({"user_id": row[0], "val": row[1]}) + "\n")
-    _run(ckpt)  # same checkpoint: only the new file arrives as the next epoch
-    got = {r["user_id"]: r["val"] for r in txlog.read(spark, tbl).collect()}
-    assert got == {1: "b", 2: "z", 3: "n"}
-    hist = txlog.history(tbl)
-    assert [h["op"] for h in hist] == ["overwrite", "merge"]
-
-    # fresh checkpoint -> Spark re-delivers everything as epoch 0, which is
-    # already committed: the replay must be skipped, the table unchanged
-    _run(str(tmp_path / "uckpt2"))
-    assert txlog.latest_version(tbl) == 2
-    got = {r["user_id"]: r["val"] for r in txlog.read(spark, tbl).collect()}
-    assert got == {1: "b", 2: "z", 3: "n"}
 
 
 # --- failure injection: crash AFTER the table write, BEFORE the checkpoint
@@ -837,100 +500,6 @@ def _await_failure(query, timeout_s=60):
     assert not query.isActive, "query should have died on the injected crash"
     exc = query.exception()
     assert exc is not None and "injected crash" in str(exc)
-
-
-def test_partitioned_parquet_sink_survives_midbatch_kill(spark, tmp_path, monkeypatch):
-    """Dynamic-partition-overwrite parquet sink: the batch's partitions are
-    fully written, then the query dies before Spark commits the epoch; the
-    restarted query REPLAYS the batch and must converge (overwrite the same
-    partitions with the same rows), not double them."""
-    from lvm_datapipe_spark.sources import sinks as S
-
-    d = tmp_path / "landing"
-    d.mkdir()
-    out, ckpt = str(tmp_path / "pq"), str(tmp_path / "ckpt")
-    rows = [(1, "a", 1), (2, "b", 1), (3, "c", 2), (4, "d", 2)]
-    with open(d / "f1.json", "w") as f:
-        for eid, v, day in rows:
-            f.write(json.dumps({"event_id": eid, "val": v, "day": day}) + "\n")
-
-    real = S.write_partitioned
-    def crashing(batch_df, path, partition_by):
-        real(batch_df, path, partition_by)
-        raise RuntimeError("injected crash after table write")
-
-    monkeypatch.setattr(S, "write_partitioned", crashing)
-
-    def _stream():
-        return spark.readStream.schema("event_id long, val string, day int").json(str(d))
-
-    q = ev.start_foreach_batch_partitioned(_stream(), out, ckpt, ["day"])
-    _await_failure(q)
-    # the write DID land before the crash — this is the dangerous window
-    assert spark.read.parquet(out).count() == len(rows)
-
-    monkeypatch.setattr(S, "write_partitioned", real)
-    q2 = ev.start_foreach_batch_partitioned(_stream(), out, ckpt, ["day"])
-    _await(q2)
-    got = {(r.event_id, r.val, r.day) for r in spark.read.parquet(out).collect()}
-    assert got == set(rows)  # replay overwrote, never appended
-    assert spark.read.parquet(out).count() == len(rows)
-
-    # and the restarted query keeps making progress: a new file arrives as
-    # the next epoch and lands exactly once
-    with open(d / "f2.json", "w") as f:
-        f.write(json.dumps({"event_id": 5, "val": "e", "day": 3}) + "\n")
-    q3 = ev.start_foreach_batch_partitioned(_stream(), out, ckpt, ["day"])
-    _await(q3)
-    assert spark.read.parquet(out).count() == len(rows) + 1
-
-
-def test_versioned_upsert_sink_survives_midbatch_kill(spark, tmp_path, monkeypatch):
-    """txlog streaming-upsert sink: the MERGE commits durably, then the query
-    dies before the checkpoint write; the restarted query replays the epoch
-    and the epoch guard must SKIP it (no second version), after which new
-    batches keep merging normally."""
-    from lvm_datapipe_spark.sources import txlog
-
-    d = tmp_path / "landing"
-    d.mkdir()
-    tbl, ckpt = str(tmp_path / "utbl"), str(tmp_path / "uckpt")
-    with open(d / "f1.json", "w") as f:
-        for uid, v in [(1, "a"), (2, "x")]:
-            f.write(json.dumps({"user_id": uid, "val": v}) + "\n")
-
-    real_merge = txlog.merge
-    def crashing_merge(spark_, df_, table_dir_, **kw):
-        real_merge(spark_, df_, table_dir_, **kw)
-        raise RuntimeError("injected crash after table write")
-
-    monkeypatch.setattr(txlog, "merge", crashing_merge)
-
-    def _stream():
-        return spark.readStream.schema("user_id long, val string").json(str(d))
-
-    q = ev.start_versioned_upsert_sink(_stream(), tbl, ckpt, ["user_id"])
-    _await_failure(q)
-    # the merge DID commit before the crash
-    assert txlog.latest_version(tbl) == 1
-    assert {r.user_id: r.val for r in txlog.read(spark, tbl).collect()} == {1: "a", 2: "x"}
-
-    monkeypatch.setattr(txlog, "merge", real_merge)
-    q2 = ev.start_versioned_upsert_sink(_stream(), tbl, ckpt, ["user_id"])
-    _await(q2)
-    # replayed epoch 0 was skipped: still exactly one version, same rows
-    assert txlog.latest_version(tbl) == 1
-    assert {r.user_id: r.val for r in txlog.read(spark, tbl).collect()} == {1: "a", 2: "x"}
-
-    # the pipeline is not wedged: epoch 1 merges (update key 2, insert 3)
-    with open(d / "f2.json", "w") as f:
-        for uid, v in [(2, "z"), (3, "n")]:
-            f.write(json.dumps({"user_id": uid, "val": v}) + "\n")
-    q3 = ev.start_versioned_upsert_sink(_stream(), tbl, ckpt, ["user_id"])
-    _await(q3)
-    assert txlog.latest_version(tbl) == 2
-    assert {r.user_id: r.val for r in txlog.read(spark, tbl).collect()} == {
-        1: "a", 2: "z", 3: "n"}
 
 
 def test_versioned_append_sink_survives_midbatch_kill(spark, tmp_path, monkeypatch):
@@ -964,125 +533,6 @@ def test_versioned_append_sink_survives_midbatch_kill(spark, tmp_path, monkeypat
     _await(q2)
     assert txlog.latest_version(tbl) == 1  # replay skipped
     assert txlog.read(spark, tbl).count() == 5
-
-
-# -- state-size observability (VERDICT r7 item 6) ----------------------------
-
-
-def _state_progress(query):
-    """Per-micro-batch stateOperators records from the query's progress
-    JSON — the observability a production stream is operated by (rows in
-    state, bytes used, eviction counts)."""
-    out = []
-    for p in query.recentProgress:
-        ops = p.get("stateOperators") or []
-        if ops:
-            out.append(ops)
-    return out
-
-
-def test_dedup_state_bounded_under_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark must EVICT: with keys spread over
-    hours and a 10-minute watermark, per-batch state rows stay far below
-    the total key count — the no-OOM property the operator exists for."""
-    import datetime as dt
-
-    import os
-
-    d = tmp_path / "dedup_state_landing"
-    d.mkdir()
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    n = 40
-    per_file = 10
-    for f_i in range(n // per_file):
-        path = d / f"b{f_i}.json"
-        with open(path, "w") as f:
-            for i in range(f_i * per_file, (f_i + 1) * per_file):
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": i,
-                            "ts": (base + dt.timedelta(minutes=10 * i)).isoformat(),
-                            "user_id": i,
-                            "event_type": "view",
-                            "value": 1.0,
-                            "props": "{}",
-                        }
-                    )
-                    + "\n"
-                )
-        # the file source orders same-mtime files arbitrarily; pin arrival
-        # = event-time order so nothing is dropped as late
-        t = 1_700_000_000 + 60 * f_i
-        os.utime(path, (t, t))
-    stream = ev.read_event_stream(spark, str(d), max_files_per_trigger=1)
-    q = ev.start_to_memory(
-        ev.deduplicate_events(stream, watermark="10 minutes"),
-        "dedup_state_ev",
-        "append",
-    )
-    _await(q)
-    batches = _state_progress(q)
-    assert batches, "no stateOperators progress recorded"
-    totals = [ops[0]["numRowsTotal"] for ops in batches]
-    removed = sum(ops[0].get("numRowsRemoved", 0) for ops in batches)
-    late = sum(ops[0].get("numRowsDroppedByWatermark", 0) for ops in batches)
-    # in-order arrival: nothing dropped as late, every key emitted once
-    assert late == 0
-    assert spark.sql("SELECT count(*) AS c FROM dedup_state_ev").first().c == n
-    # eviction kept the resident set bounded by the watermark horizon
-    # instead of the key universe — the no-OOM property under test
-    assert max(totals) < n
-    assert totals[-1] < n // 2
-    assert removed > 0
-    assert all(ops[0]["memoryUsedBytes"] > 0 for ops in batches)
-
-
-def test_sessionize_state_bounded_after_watermark(spark, tmp_path):
-    """The applyInPandasWithState session operator must not accumulate
-    closed sessions: after the watermark passes every early session, state
-    holds only the still-open tail."""
-    d = tmp_path / "sess_state_landing"
-    d.mkdir()
-    rows = [
-        (1, 100, "2024-01-01T10:00:00", "view", 1.0),
-        (2, 100, "2024-01-01T10:10:00", "view", 1.0),
-        (3, 100, "2024-01-01T11:30:00", "view", 1.0),
-        (4, 200, "2024-01-01T10:05:00", "click", 1.0),
-    ]
-    with open(d / "b0.json", "w") as f:
-        for eid, uid, ts, et, v in rows:
-            f.write(
-                json.dumps(
-                    {"event_id": eid, "ts": ts, "user_id": uid,
-                     "event_type": et, "value": v, "props": "{}"}
-                )
-                + "\n"
-            )
-    with open(d / "b1.json", "w") as f:
-        f.write(
-            json.dumps(
-                {"event_id": 99, "ts": "2024-01-02T10:00:00", "user_id": 999,
-                 "event_type": "view", "value": 0.0, "props": "{}"}
-            )
-            + "\n"
-        )
-    stream = ev.read_event_stream(spark, str(d), max_files_per_trigger=1)
-    q = ev.start_to_memory(
-        ev.sessionize_stream(stream, gap_minutes=30, watermark="0 seconds"),
-        "sess_state",
-        "append",
-    )
-    _await(q)
-    batches = _state_progress(q)
-    assert batches, "no stateOperators progress recorded"
-    final = batches[-1][0]
-    # 3 users ever seen; closed sessions were removed from state, so the
-    # resident rows are at most the open tail (999 + possibly user 100's
-    # last session), never the full session history
-    assert 1 <= final["numRowsTotal"] <= 3
-    assert final["memoryUsedBytes"] > 0
-    assert all(ops[0]["memoryUsedBytes"] > 0 for ops in batches)
 
 
 # -- watermark-drop audit: shuffled-arrival fixture (r9, VERDICT item 6) -----

@@ -85,21 +85,6 @@ def test_repetition_features_exact(spark):
     assert r2.dup_ngram_frac == 0.0
 
 
-def test_filter_repetitive(spark):
-    from lvm_datapipe_spark.operators.text import filter_repetitive
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spam spam spam spam spam spam"),
-            # long enough that its (unique) top bigram is under the 0.2 frac
-            (2, "a varied interesting document with many different tokens in it"),
-        ],
-        ["doc_id", "text"],
-    )
-    kept = {r.doc_id for r in filter_repetitive(docs).collect()}
-    assert kept == {2}
-
-
 def test_scrub_text(spark):
     from lvm_datapipe_spark.operators.text import scrub_text
 
@@ -140,48 +125,3 @@ def test_normalize_text_idempotent_and_engine_shape(spark):
     for a, b in zip(once.collect(), twice.collect()):
         assert a.n1 == b.n2
         assert re.fullmatch(r"([a-z0-9]+( [a-z0-9]+)*)?", a.n1), repr(a.n1)
-
-
-def test_normalize_text_unicode_keeps_scripts_strips_symbols(spark):
-    from lvm_datapipe_spark.operators.text import normalize_text_unicode
-
-    rows = [
-        (1, "Héllo,   Wörld!  №42"),
-        (2, "日本語のテキスト — test."),
-        (3, "Привет, мир!!!"),
-        (4, "plain ascii 123."),
-    ]
-    df = spark.createDataFrame(rows, ["id", "text"])
-    got = {
-        r["id"]: r["t"]
-        for r in df.select(
-            "id", normalize_text_unicode("text").alias("t")
-        ).collect()
-    }
-    assert got[1] == "héllo wörld 42"
-    assert got[2] == "日本語のテキスト test"
-    assert got[3] == "привет мир"
-    assert got[4] == "plain ascii 123"
-
-
-def test_normalize_text_unicode_matches_duckdb(spark):
-    """Engine parity for the \\p{L}\\p{N} property classes (Java regex vs
-    DuckDB RE2) — the portability claim, checked directly."""
-    import duckdb
-
-    from lvm_datapipe_spark.operators.text import normalize_text_unicode
-
-    texts = ["Héllo, Wörld!", "日本語 — test.", "Привет; мир", "a\tb\nc", "¡Olé!"]
-    df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    got = [r["t"] for r in df.select(normalize_text_unicode("text").alias("t")).collect()]
-    con = duckdb.connect()
-    want = [
-        con.execute(
-            r"""SELECT trim(regexp_replace(
-                   regexp_replace(lower(?), '[^\p{L}\p{N} \t\n\r\f]', '', 'g'),
-                   '[ \t\n\r\f]+', ' ', 'g'))""",
-            [t],
-        ).fetchone()[0]
-        for t in texts
-    ]
-    assert got == want
