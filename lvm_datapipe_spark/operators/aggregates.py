@@ -189,61 +189,6 @@ def count_consistency(records: DataFrame, files: DataFrame, lo: int = 1, hi: int
     )
 
 
-def hll_partials(
-    df: DataFrame, key_cols: list[str], value_col: str, lg_k: int = 12
-) -> DataFrame:
-    """Build MERGEABLE HyperLogLog sketches per key group — the
-    pre-aggregation pattern for distinct counts at 100 TB.
-
-    A plain COUNT(DISTINCT user) over a month of data re-reads the month
-    every time the window moves.  The sketch pattern instead materializes
-    one small binary sketch per (day, ...) partition ONCE; any coarser
-    rollup (week, month, all-time) is then a cheap
-    :func:`hll_merge` over the stored sketches — no re-scan, and the
-    union is lossless for HLL (estimate(merge(a,b)) ==
-    estimate(sketch(a ∪ b))).  Spark's built-in ``hll_sketch_agg`` is a
-    Datasketches HllSketch: partial aggregation works map-side, the
-    sketch column is a few KB per group.
-
-    Approximate by nature, so this family is TEST-verified (merge
-    associativity + error bound vs exact) rather than oracle-paired —
-    the engine's deterministic twin for the same question is
-    ``count_distinct``.
-    """
-    return df.groupBy(*key_cols).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("hll"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def hll_merge(
-    partials: DataFrame,
-    key_cols: list[str],
-    sketch_col: str = "hll",
-    count_col: str | None = "n_rows",
-) -> DataFrame:
-    """Roll stored HLL partials up to coarser keys: union-merge the binary
-    sketches and estimate.  ``allowDifferentLgConfigK`` stays False — all
-    partials come from :func:`hll_partials` with one lg_k, and a silent
-    precision downgrade on mixed configs is exactly the kind of surprise
-    a pipeline should fail loudly on.  ``count_col=None`` (or a column
-    absent from ``partials``) skips the row-count rollup — sketch tables
-    that renamed or dropped the companion count still merge."""
-    grouped = (
-        partials.groupBy(*key_cols)
-        if key_cols
-        else partials.groupBy()
-    )
-    aggs = [
-        F.hll_sketch_estimate(
-            F.hll_union_agg(sketch_col, F.lit(False))
-        ).alias("approx_distinct")
-    ]
-    if count_col and count_col in partials.columns:
-        aggs.append(F.sum(count_col).alias(count_col))
-    return grouped.agg(*aggs)
-
-
 def agg_state(
     df: DataFrame, keys: list[str], value_col: str
 ) -> DataFrame:
@@ -267,8 +212,7 @@ def merge_agg_state(state: DataFrame, delta_state: DataFrame, keys: list[str]) -
     state ⊕ delta is bit-identical to a from-scratch aggregate over the
     union — a DOUBLE state would drift (float addition is
     order-sensitive), and the invariant "incremental == full recompute"
-    is the whole point of the pattern.  Count-distinct fits the same
-    shape via :func:`hll_partials` (mergeable sketches).
+    is the whole point of the pattern.
     """
     a = state.select(
         *[F.col(k).alias(f"_ka_{k}") for k in keys],
@@ -310,92 +254,17 @@ def merge_agg_state(state: DataFrame, delta_state: DataFrame, keys: list[str]) -
     )
 
 
-def heavy_hitters(
-    df: DataFrame, value_col: str, k: int = 20
-) -> DataFrame:
-    """Misra-Gries heavy hitters: every value occurring more than n/k times
-    is GUARANTEED present in the result (the classic streaming summary,
-    public algorithm) — with count estimates that undercount by at most
-    n/k.
-
-    Scale shape: one ``mapInPandas`` pass builds a k-counter summary PER
-    PARTITION (bounded memory, no shuffle of raw values — the point: a
-    groupBy-count of a high-cardinality column shuffles |distinct| rows,
-    the summary ships k·n_partitions rows), then the per-partition
-    summaries merge by key in one tiny aggregation.  Merged Misra-Gries
-    summaries keep the containment guarantee with error ≤ n/k summed
-    across partitions (bounded by the same n/k bound on the whole
-    corpus).  Exact counts for the surviving candidates can be
-    recovered with one semi-joined recount when needed — candidates are
-    ≤ k·n_partitions keys, so the recount is a broadcast semi-join, not
-    a full shuffle.
-
-    Approx family: test-verified (guarantee + error bound vs exact), like
-    the HLL sketches.  Returns (value, est_count) — est_count ≤ true
-    count, true count ≤ est_count + n/k·(summary merges).
-    """
-    import pandas as pd
-
-    def summarize(batches):
-        counters: dict = {}
-        for pdf in batches:
-            # vectorized per batch: collapse to a (distinct value, count)
-            # table first, then MG-fold each distinct value's count in
-            # bulk — identical guarantee to per-item processing (MG is
-            # order-independent: any arrival order is a valid run), but
-            # the python loop runs per batch-DISTINCT value, not per row
-            for v, c in pdf[value_col].value_counts(dropna=True).items():
-                c = int(c)
-                if v in counters:
-                    counters[v] += c
-                    continue
-                while c > 0:
-                    if len(counters) < k:
-                        counters[v] = c
-                        break
-                    # bulk decrement: d untracked copies consume
-                    # themselves and decrement every counter by d, where
-                    # d empties the smallest counter (making room) or
-                    # exhausts the copies — exactly d repetitions of the
-                    # classic per-item decrement-all step
-                    d = min(c, min(counters.values()))
-                    c -= d
-                    dead = []
-                    for key in counters:
-                        counters[key] -= d
-                        if counters[key] <= 0:
-                            dead.append(key)
-                    for key in dead:
-                        del counters[key]
-        if counters:
-            yield pd.DataFrame(
-                {"value": list(counters), "est": list(counters.values())}
-            )
-
-    summaries = df.select(value_col).mapInPandas(
-        summarize, schema=f"value {df.schema[value_col].dataType.simpleString()}, est long"
-    )
-    # merging MG summaries by summing shared keys preserves containment;
-    # a final k-truncation would re-introduce error, so keep all
-    # candidates (≤ k·n_partitions rows — tiny)
-    return (
-        summaries.groupBy("value")
-        .agg(F.sum("est").alias("est_count"))
-        .orderBy(F.col("est_count").desc(), F.col("value"))
-    )
-
-
 def quantile_sketch(
     df: DataFrame,
     value_col: str,
     group_col: str,
     n_bins: int = 64,
 ) -> DataFrame:
-    """Mergeable fixed-bin QUANTILE sketch — the third member of the
-    no-rescan sketch family next to :func:`hll_partials` (distinct counts)
-    and :func:`heavy_hitters` (top keys).  The sketch for a group is its
-    per-bin count vector over ``n_bins`` equal-width bins spanning the
-    group's [min, max]: shard sketches merge by SUMMING counts (exact
+    """Mergeable fixed-bin QUANTILE sketch — no-rescan quantile
+    estimates, as :func:`cm_sketch` gives point frequencies.  The sketch
+    for a group is its per-bin count vector over ``n_bins`` equal-width
+    bins spanning the group's [min, max]: shard sketches merge by SUMMING
+    counts (exact
     associativity — proven in tests), so incremental corpora never rescan
     history to maintain quantile estimates.
 
@@ -463,17 +332,17 @@ def cm_sketch(
 ) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan) of a value column's
     frequency distribution — the mergeable point-frequency companion to
-    the HLL (distinct), Misra-Gries (top-k) and fixed-bin quantile
-    sketches.  Returns the ``depth x width`` counter table as rows
-    ``(d, bucket, cnt)`` (absent cells are implicit zeros), built with
-    ONE scan: each value fans out to ``depth`` md5-derived buckets
-    (deterministic, engine-portable — same idiom as
-    ``sampling.hash_bucket``) and a single keyed count aggregates them.
+    the fixed-bin quantile sketch.  Returns the ``depth x width``
+    counter table as rows ``(d, bucket, cnt)`` (absent cells are
+    implicit zeros), built with ONE scan: each value fans out to
+    ``depth`` md5-derived buckets (deterministic, engine-portable — same
+    idiom as ``sampling.hash_bucket``) and a single keyed count
+    aggregates them.
 
-    Sketches MERGE by summing cell-wise (:func:`cm_merge`) — the
-    no-rescan rollup property: materialize one sketch per day partition,
-    answer any coarser window by summing sketches.  Estimates
-    (:func:`cm_estimate`) are min-over-rows and NEVER undercount;
+    Sketches MERGE by summing cell-wise — the no-rescan rollup
+    property: materialize one sketch per day partition, answer any
+    coarser window by summing sketches.  A key's estimate is the min
+    over the depth rows of its addressed cells and NEVER undercounts;
     overcount is bounded by e·N/width with prob 1-(1/e)^depth.
     Approximate by nature → TEST-verified (overestimate-only + bound +
     merge == whole-corpus sketch), like the other sketches."""
@@ -494,42 +363,3 @@ def cm_sketch(
     )
 
 
-def cm_merge(*sketches: DataFrame) -> DataFrame:
-    """Sum count-min sketches cell-wise (all must share depth/width/salt)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("d", "bucket").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-
-
-def cm_estimate(
-    sketch: DataFrame,
-    keys: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-    salt: str = "cm",
-) -> DataFrame:
-    """Point-frequency estimates for ``keys`` from a count-min sketch:
-    min over the depth rows of the addressed cells (missing cells are
-    true zeros).  The sketch is sketch-sized — broadcast — so lookup is
-    a scan of ``keys``, never of the sketched corpus."""
-    cells = []
-    for d in range(depth):
-        h = F.md5(
-            F.concat(F.lit(f"{salt}{d}:"), F.col(key_col).cast("string")).cast(
-                "binary"
-            )
-        )
-        b = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % width
-        cells.append(F.struct(F.lit(d).alias("d"), b.alias("bucket")))
-    addressed = keys.select(
-        key_col, F.explode(F.array(*cells)).alias("cell")
-    ).select(key_col, "cell.d", "cell.bucket")
-    joined = addressed.join(F.broadcast(sketch), ["d", "bucket"], "left")
-    return (
-        joined.groupBy(key_col)
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("est"))
-    )

@@ -15,7 +15,6 @@ from lvm_datapipe_spark.operators.aggregates import (
     corpus_stats,
     corpus_stats_columns,
     histogram,
-    value_counts,
 )
 
 # analyze_vids.py:43 — np.histogram bins (last bin unbounded)
@@ -64,11 +63,6 @@ def duration_summary(clips: DataFrame, col: str = "clip_duration") -> DataFrame:
         *corpus_stats_columns(col),
         *[F.count(F.when(bucket == i, 1)).alias(name) for i, name in enumerate(DURATION_LABELS)],
     )
-
-
-def category_counts(videos: DataFrame, col: str = "category") -> DataFrame:
-    """analyze_vids.py:11-26 — per-category video counts."""
-    return value_counts(videos, col)
 
 
 def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -35,7 +35,6 @@ __all__ = [
     "bloom_bitmap",
     "bloom_might_contain",
     "bloom_prefiltered_semi_join",
-    "bloom_size",
 ]
 
 _WORD = 64
@@ -119,18 +118,3 @@ def bloom_prefiltered_semi_join(
     return pre.join(dim, pre[fact_key] == dim[dim_key], "left_semi")
 
 
-def bloom_size(n_keys: int, fpp: float = 0.01) -> tuple[int, int]:
-    """Classic Bloom sizing: (m_bits, n_hashes) for a target false-positive
-    rate — m = −n·ln(p)/ln(2)², k = (m/n)·ln(2) — with m rounded UP to a
-    multiple of 64 (the bitmap word) and k clamped to [1, 8].  At 100 TB
-    this is how the pre-filter stays a fixed-cost decision: pick the FP
-    budget (wasted-shuffle fraction), derive the bitmap size, and the
-    collect stays bounded by YOUR parameter regardless of corpus growth."""
-    import math
-
-    if n_keys <= 0:
-        return 64, 1
-    m = int(math.ceil(-n_keys * math.log(fpp) / (math.log(2) ** 2)))
-    m = ((m + 63) // 64) * 64
-    k = max(1, min(8, round(m / n_keys * math.log(2))))
-    return m, k

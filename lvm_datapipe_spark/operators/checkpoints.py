@@ -127,38 +127,7 @@ class AestheticMLP:
         return x[:, 0]
 
 
-# --- CLIP input-side contract (M3's preprocessing, torch-free) ---------------
-
-#: the published OpenAI CLIP normalization constants — what
-#: ``clip.load("ViT-L/14")``'s preprocess applies after ToTensor; the
-#: reference feeds every frame through exactly that transform
-#: (aesthetic_score.py:106 ``clip.load`` + the VideoDataset preprocess hook).
-CLIP_MEAN = np.array([0.48145466, 0.4578275, 0.40821073], dtype=np.float32)
-CLIP_STD = np.array([0.26862954, 0.26130258, 0.27577711], dtype=np.float32)
-CLIP_SIZE = 224
-
-
-def _cubic_kernel(x: np.ndarray, a: float = -0.5) -> np.ndarray:
-    """Keys cubic convolution kernel (a=-0.5, the bicubic default)."""
-    x = np.abs(x)
-    return np.where(
-        x < 1.0,
-        ((a + 2.0) * x - (a + 3.0)) * x * x + 1.0,
-        np.where(x < 2.0, (((x - 5.0) * x + 8.0) * x - 4.0) * a, 0.0),
-    )
-
-
-def _resize_weights(in_size: int, out_size: int) -> np.ndarray:
-    """(out, in) row-stochastic bicubic resampling matrix.  Downscales
-    stretch the kernel by the scale factor (antialiasing, the same device
-    PIL's resample uses); boundary taps are renormalized over the in-bounds
-    support (preserves constants exactly).  in == out is the identity."""
-    scale = in_size / out_size
-    fscale = max(scale, 1.0)
-    centers = (np.arange(out_size, dtype=np.float64) + 0.5) * scale - 0.5
-    x = (np.arange(in_size, dtype=np.float64)[None, :] - centers[:, None]) / fscale
-    w = _cubic_kernel(x)
-    return (w / w.sum(axis=1, keepdims=True)).astype(np.float32)
+# --- MUSIQ input-side contract (M4's preprocessing, torch-free) ------------
 
 
 def _resize_weights_linear(in_size: int, out_size: int) -> np.ndarray:
@@ -222,28 +191,3 @@ def musiq_preprocess(frame: np.ndarray, mode: str = "shorter") -> np.ndarray:
     return np.ascontiguousarray((a / 255.0).transpose(2, 0, 1)).astype(np.float32)
 
 
-def clip_preprocess(frame: np.ndarray, size: int = CLIP_SIZE) -> np.ndarray:
-    """The M3 input contract, torch-free: grayscale (H, W) or RGB (H, W, 3)
-    uint8 frame → float32 CHW (3, size, size) tensor, exactly the stages of
-    the CLIP preprocess the reference runs — bicubic resize of the SHORTER
-    side to ``size``, center crop to (size, size), scale to [0, 1], then
-    per-channel normalize with the published CLIP_MEAN / CLIP_STD.
-    Grayscale frames are channel-stacked first (the adapters' documented
-    luminance contract)."""
-    a = np.asarray(frame)
-    if a.ndim == 2:
-        a = np.stack([a, a, a], axis=-1)
-    a = a.astype(np.float32) / 255.0
-    h, w = a.shape[:2]
-    if h <= w:
-        nh, nw = size, max(size, int(round(w * size / h)))
-    else:
-        nh, nw = max(size, int(round(h * size / w))), size
-    if nh != h:
-        a = np.einsum("oi,ijc->ojc", _resize_weights(h, nh), a)
-    if nw != w:
-        a = np.einsum("oj,ijc->ioc", _resize_weights(w, nw), a)
-    top, left = (nh - size) // 2, (nw - size) // 2
-    a = a[top : top + size, left : left + size]
-    a = (a - CLIP_MEAN) / CLIP_STD
-    return np.ascontiguousarray(a.transpose(2, 0, 1)).astype(np.float32)

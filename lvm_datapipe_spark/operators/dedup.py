@@ -17,10 +17,10 @@ counts leave the plan (shingle_rows ``hashed=True``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lvm_datapipe_spark.operators.text import fingerprint, tokens, word_ngrams
+from lvm_datapipe_spark.operators.text import fingerprint, tokens
 
 # -- exact -------------------------------------------------------------------
 
@@ -41,15 +41,6 @@ def exact_duplicate_groups(
 # -- n-gram Jaccard ----------------------------------------------------------
 
 
-def shingled(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """(id, shingles) with distinct word n-grams; docs with no shingle drop.
-    Array-valued form for column-level use; the scan-shaped pipelines below
-    use :func:`shingle_rows` instead (flat codegen, no array lambdas)."""
-    return df.select(
-        F.col(id_col), word_ngrams(tokens(text_col), n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
 def shingle_rows(
     df: DataFrame,
     text_col: str = "text",
@@ -59,10 +50,10 @@ def shingle_rows(
 ) -> DataFrame:
     """DISTINCT (id, shingle) rows in fully-relational form: posexplode the
     tokens, window-lead the next n-1 tokens, concat.  Equivalent output to
-    exploding :func:`shingled`, but every expression is flat whole-stage
-    codegen — the higher-order array route measured 2-10× slower (and its
-    cost shifts unpredictably as the optimizer inlines the lambda into
-    filters/generators).
+    exploding a higher-order array of shingles, but every expression is
+    flat whole-stage codegen — the higher-order array route measured
+    2-10× slower (and its cost shifts unpredictably as the optimizer
+    inlines the lambda into filters/generators).
 
     ``hashed=True`` replaces the shingle STRING with its ``xxhash64``
     inside the same scan (VERDICT r7 item 2, the DSIR ``bucket_fn``
@@ -279,22 +270,6 @@ def containment_pairs(
 # -- MinHash + LSH -----------------------------------------------------------
 
 
-def _seeded_md5(i: int):
-    # NB: factory, not a default-arg lambda — PySpark binds a 2-arg lambda in
-    # F.transform as (element, index), which would silently shadow the seed.
-    prefix = f"{i}:"
-    return lambda s: F.md5(F.concat(F.lit(prefix), s).cast("binary"))
-
-
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """K-permutation MinHash over md5: hash_i(s) = md5(i || ':' || s), the
-    signature element is the lexicographic min — identical in any engine that
-    has md5, with no integer-hash portability problems."""
-    return F.array(
-        *[F.array_min(F.transform(shingles, _seeded_md5(i))) for i in range(k)]
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -307,8 +282,8 @@ def minhash_signatures(
     expressions stay in whole-stage codegen, unlike higher-order array
     lambdas which are interpreted per element) → groupBy(doc) with k MIN
     aggregates (map-side partial min, so the shuffle carries one row per doc
-    per partition).  Bit-identical to :func:`minhash_signature` but ~10×
-    faster on wide corpora."""
+    per partition).  Bit-identical to a per-doc higher-order array MinHash
+    but ~10× faster on wide corpora."""
     # parsed SQL text instead of per-column py4j construction (k×~5 calls)
     # — same values, a fraction of the driver-side build time (see
     # similarity.sql_fold_dot for the measurements that motivated this).

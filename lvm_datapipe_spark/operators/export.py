@@ -14,24 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# enumerated string domains (macvid.py:34,39-41) — CHECK-style validation
-SPEED_ENUM = ["very slow", "slow", "medium", "fast", "very fast"]
-VIEW_SCALE_ENUM = [
-    "long shot",
-    "full shot",
-    "medium shot",
-    "close-up shot",
-    "extreme close-up shot",
-]
-MOVEMENT_ENUM = [
-    "static shot",
-    "pans and tilts shot",
-    "zoom in",
-    "zoom out",
-    "zoom in and zoom out",
-]
-
-
 def _nested_field(df: DataFrame, section: str, field: str, typ: str):
     """F.col(section.field) when present, typed null otherwise — the
     load_from_dict defaulting direction (scene_cut.py:120-137): partial
@@ -109,20 +91,3 @@ def nest_clips(flat: DataFrame) -> DataFrame:
     return flat.select(
         basic.alias("basic"), scene.alias("scene"), misc.alias("misc")
     )
-
-
-def validate_enums(nested: DataFrame) -> DataFrame:
-    """CHECK-style validation filter: rows with out-of-domain enum values are
-    flagged (not dropped — the reference tolerates partial records)."""
-    ok = (
-        (F.col("camera.speed").isNull() | F.col("camera.speed").isin(SPEED_ENUM))
-        & (
-            F.col("camera.view_scale").isNull()
-            | F.col("camera.view_scale").isin(VIEW_SCALE_ENUM)
-        )
-        & (
-            F.col("camera.movement").isNull()
-            | F.col("camera.movement").isin(MOVEMENT_ENUM)
-        )
-    )
-    return nested.withColumn("enums_valid", ok)

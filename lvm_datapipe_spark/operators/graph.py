@@ -543,8 +543,8 @@ def connected_components(
     )
     # self-loop pairs carry no connectivity but DO declare the node: a node
     # whose only pairs are self-loops must surface as its own singleton
-    # cluster (incremental_components' self-star rows rely on this) —
-    # remember them and union the missing ones back after the contraction.
+    # cluster — remember them and union the missing ones back after the
+    # contraction.
     selfs = p0.filter(F.col("u") == F.col("v")).select("u").distinct()
     e0 = p0.filter(F.col("u") != F.col("v"))
     rounds = 0
@@ -688,53 +688,6 @@ def connected_components(
         labeled, selfs["u"] == labeled[id_out], "left_anti"
     ).select(F.col("u").alias(id_out), F.col("u").alias(cluster_out))
     return labeled.unionByName(singles)
-
-
-def incremental_components(
-    prev_labels: DataFrame,
-    new_pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    id_out: str = "id",
-    cluster_out: str = "cluster_id",
-) -> DataFrame:
-    """Incremental re-clustering: fold NEW near-dup pairs into an existing
-    clustering WITHOUT re-reading the old edge list.
-
-    The trick: a finished clustering is a lossless connectivity summary
-    of its edges — replace them with STAR edges (member → its cluster
-    label), which preserve exactly the old components (every old
-    component stays connected through its label node), union the new
-    pairs, and run :func:`connected_components`.  The star list is
-    |nodes|-sized where the discarded edge list was |edges|-sized.  This
-    is how a daily 100 TB dedup absorbs a new partition: yesterday's
-    labels + today's candidate pairs, never yesterday's pairs.
-
-    ``prev_labels`` must be a (id, cluster) frame as produced by
-    :func:`connected_components` (labels are member ids).  Exact: the
-    result equals a full recompute over (old edges ∪ new pairs).
-
-    Scale shape: the merge TOPOLOGY is caller-data-dependent — one new
-    pair per adjacent component chains k old components into a
-    diameter-k path of label nodes — and the contraction engine closes
-    it in O(log² n) rounds whatever the shape (SCALE_BENCH §17 holds the
-    measured merge-chain worst case).
-    """
-    # self-star rows (a cluster min's own row, and any SINGLETON
-    # component) pass through unfiltered: the engine keeps self-loop
-    # nodes as singleton clusters, and dropping them would silently
-    # delete 1-node components from the output — breaking the
-    # full-recompute equality
-    stars = prev_labels.select(
-        F.col(prev_labels.columns[0]).alias(src),
-        F.col(prev_labels.columns[1]).alias(dst),
-    )
-    merged = new_pairs.select(
-        F.col(src), F.col(dst)
-    ).unionByName(stars)
-    return connected_components(
-        merged, src=src, dst=dst, id_out=id_out, cluster_out=cluster_out
-    )
 
 
 def triangle_counts(

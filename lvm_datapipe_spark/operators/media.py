@@ -15,9 +15,10 @@ becomes an Arrow-batched pandas UDF over a binary video column, with:
 - a scorer registry, the Spark analog of ``instantiate_from_config``
   (``utils/utils.py:57-72``).
 
-Failure semantics: decode errors yield null rows, filtered by
-relational.drop_failed_rows (F4) — never index-shifting retries (macvid.py:
-161-174) or exit-on-error (ocr_score.py:75-78).
+Failure semantics: decode errors yield null rows (F4), which stay in the
+snapshot and are eligible for the next run (``plans/pipeline.py``) — never
+index-shifting retries (macvid.py:161-174) or exit-on-error
+(ocr_score.py:75-78).
 """
 
 from __future__ import annotations
@@ -461,42 +462,6 @@ SCORERS: dict[str, tuple[str, object]] = {
         (_tiny_caption_stub, T.ArrayType(T.StringType())),
     ),
 }
-
-
-def motion_score_videos(
-    videos: DataFrame, content_col: str = "content", out_col: str = "of_score"
-) -> DataFrame:
-    """A2/M6 over raw video bytes: codec motion-vector side data via the
-    PyAV adapter when importable on the worker (the reference's extract_mvs
-    semantics — mean |mv| over every vector of every frame); FVID payloads
-    fall back to the pixel-delta analog over ALL frames; anything else →
-    null row.  Unlike ``apply_scorer('motion', ...)`` (which scores sampled
-    frames), this consumes the container itself, because motion vectors
-    exist only codec-side."""
-
-    @pandas_udf(T.DoubleType())
-    def _mv(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from lvm_datapipe_spark.operators.model_adapters import MotionVectorAdapter
-
-        adapter = MotionVectorAdapter() if MotionVectorAdapter.available() else None
-        for content in batches:
-            out = []
-            for data in content:
-                try:
-                    if data is None:
-                        out.append(None)
-                    elif fakevideo.is_fvid(data):
-                        v = fakevideo.decode(data)
-                        out.append(motion_magnitude(list(v.frames)))
-                    elif adapter is not None:
-                        out.append(adapter.score_bytes(data))
-                    else:
-                        out.append(None)
-                except Exception:  # noqa: BLE001 — F4 null-row semantics
-                    out.append(None)
-            yield pd.Series(out, dtype="float64")
-
-    return videos.withColumn(out_col, _mv(F.col(content_col)))
 
 
 def apply_scorer(

@@ -313,46 +313,6 @@ class LlavaCaptionAdapter(ScorerAdapter):
         return out
 
 
-class MotionVectorAdapter(ScorerAdapter):
-    """M6/A2 real adapter — codec motion-vector SIDE DATA, the quantity the
-    reference's C tool extracts (``/root/reference/models/extract_mvs.c:46-90``:
-    decode with ``flags2 +export_mvs``, then mean over every MV of
-    ``sqrt(motion_x² + motion_y²)``, raw fields with no motion_scale
-    division, printed as the video's score ``:195-202``).  PyAV exposes the
-    same libavcodec side data without a compiled helper.
-
-    Unlike the frame scorers this consumes the raw container BYTES (motion
-    vectors exist only codec-side, not in decoded pixels) — see
-    ``media.motion_score_videos`` for the column plumbing."""
-
-    requires = ("av",)
-
-    @classmethod
-    def _load(cls):  # pragma: no cover — needs PyAV
-        import av
-
-        return av
-
-    def score_bytes(self, data: bytes, av_mod=None) -> float:
-        import io
-
-        av = av_mod if av_mod is not None else self.model()
-        acc, n = 0.0, 0
-        with av.open(io.BytesIO(data)) as container:
-            stream = container.streams.video[0]
-            stream.codec_context.options = {"flags2": "+export_mvs"}
-            for frame in container.decode(stream):
-                sd = frame.side_data.get("MOTION_VECTORS")
-                if sd is None:
-                    continue
-                arr = sd.to_ndarray()
-                mx = arr["motion_x"].astype(np.float64)
-                my = arr["motion_y"].astype(np.float64)
-                acc += float(np.sqrt(mx * mx + my * my).sum())
-                n += len(arr)
-        return acc / n if n else 0.0
-
-
 class TinyAestheticAdapter(ScorerAdapter):
     """An EXECUTABLE model head: the same adapter machinery as
     ``AestheticAdapter`` (``available()``/``model()``/``score()``, lazy

@@ -39,14 +39,6 @@ def resume_anti_join(clips: DataFrame, done: DataFrame, key: str = "clip_id") ->
     return clips.join(done.select(key).distinct(), on=key, how="left_anti")
 
 
-def drop_failed_rows(df: DataFrame, col: str = "frames") -> DataFrame:
-    """F4/F5 — decode-failure handling: UDFs return null instead of raising
-    (reference: collate_fn drops ``None`` items,
-    ``evaluations/aesthetic_score.py:76-80``; index-shifting retry at
-    ``data_schema/macvid.py:161-174`` is intentionally NOT replicated)."""
-    return df.filter(F.col(col).isNotNull())
-
-
 # -- windows / top-k / set ops (§2.6) ---------------------------------------
 
 

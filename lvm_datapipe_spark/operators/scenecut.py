@@ -16,8 +16,8 @@ ContentDetector (threshold on mean abs frame delta; reference threshold 30.0,
 scene_cut.py:191) running on FVID payloads; a real adapter would call
 PySceneDetect behind the same UDF signature.  The physical ffmpeg split (M2)
 is modeled in-engine as a byte-range cut (``fakevideo.cut``), since clips of
-an FVID are themselves valid FVID; ``ffmpeg_split_clips`` is the real
-subprocess adapter.
+an FVID are themselves valid FVID: the clip bytes live in the clip table,
+not in per-clip files.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -182,67 +182,6 @@ def _cut_one(data: bytes, threshold: float) -> list[tuple] | None:
     return out
 
 
-def have_ffmpeg() -> bool:
-    import shutil
-
-    return shutil.which("ffmpeg") is not None
-
-
-def ffmpeg_split_argv(
-    video_path: str, start_s: float, end_s: float, out_path: str
-) -> list[str]:
-    """The per-scene ffmpeg invocation of split_video_ffmpeg
-    (utils/scenecut.py:120-121): accurate seek (``-ss`` after ``-i``),
-    duration-bounded, stream re-encode so the cut lands on the exact frame."""
-    return [
-        "ffmpeg", "-nostdin", "-y",
-        "-i", video_path,
-        "-ss", f"{start_s:.6f}",
-        "-t", f"{end_s - start_s:.6f}",
-        "-map", "0",
-        "-c:v", "libx264", "-preset", "fast", "-crf", "21",
-        "-c:a", "aac",
-        out_path,
-    ]
-
-
-def _ffmpeg_split_partition(rows, out_dir: str, runner) -> int:
-    """Executor-side body of the M2 ffmpeg adapter: one subprocess per clip
-    row, null-safe, counts successful splits.  ``runner`` is the subprocess
-    entry point — the real one below, a recorder in tests."""
-    n = 0
-    for row in rows:
-        if row.video_path is None or row.start_s is None or row.end_s is None:
-            continue
-        out_path = f"{out_dir}/{row.clip_id}.mp4"
-        try:
-            runner(ffmpeg_split_argv(row.video_path, row.start_s, row.end_s, out_path))
-            n += 1
-        except Exception:  # noqa: BLE001 — one bad clip must not kill the task
-            continue
-    return n
-
-
-def ffmpeg_split_clips(clips: DataFrame, out_dir: str) -> None:
-    """M2 real adapter — physically split source videos into per-clip mp4
-    files with ffmpeg, one subprocess per clip row, fanned out with
-    ``foreachPartition`` (the executors shell out in parallel; no data moves
-    through the driver).  Requires the ffmpeg binary on the workers
-    (:func:`have_ffmpeg`); :func:`scene_cut` remains the in-engine
-    byte-range splitter for FVID payloads."""
-    import subprocess
-
-    def _run(argv):  # pragma: no cover — needs the real binary
-        subprocess.run(argv, capture_output=True, check=True)
-
-    def _partition(rows):  # pragma: no cover — executor-side
-        _ffmpeg_split_partition(rows, out_dir, _run)
-
-    clips.select("clip_id", "video_path", "start_s", "end_s").foreachPartition(
-        _partition
-    )
-
-
 def scene_cut(
     videos: DataFrame,
     path_col: str = "path",
@@ -287,69 +226,3 @@ def scene_cut(
     )
 
 
-def boundary_f1(
-    pred: DataFrame,
-    gold: DataFrame,
-    tol_s: float = 0.5,
-    video_col: str = "path",
-    t_col: str = "start_s",
-) -> DataFrame:
-    """Scene-boundary detection quality: per-video precision/recall/F1 of
-    predicted boundaries against gold at a time tolerance — the eval loop
-    for tuning detector thresholds (PySceneDetect's threshold=27, the
-    FVID analog's delta) against human-labelled cuts.
-
-    Matching is GREEDY-BY-PROXIMITY made deterministic as one-to-one
-    nearest-neighbor within ±tol_s: a range join keyed on the video
-    (never a cross product across videos) pairs each prediction with
-    candidate gold cuts, then two window passes keep each (pred, gold)
-    pair only if each side is the other's best match (distance, then
-    earlier time as tie-break).  All shuffles are video-keyed; per-video
-    boundary counts are tiny, so the quadratic-within-tolerance candidate
-    set is bounded by boundary density, not corpus size.
-
-    F1 uses the 0/0→0 convention (a video with no gold and no predicted
-    boundaries scores precision=recall=f1=1).
-    """
-    p = pred.select(
-        F.col(video_col).alias("_v"), F.col(t_col).cast("double").alias("tp")
-    ).filter(F.col("tp") > 0)
-    g = gold.select(
-        F.col(video_col).alias("_v"), F.col(t_col).cast("double").alias("tg")
-    ).filter(F.col("tg") > 0)
-    cand = p.join(g, "_v").filter(F.abs(F.col("tp") - F.col("tg")) <= tol_s)
-    d = F.abs(F.col("tp") - F.col("tg"))
-    w_pred = Window.partitionBy("_v", "tp").orderBy(d.asc(), F.col("tg").asc())
-    w_gold = Window.partitionBy("_v", "tg").orderBy(d.asc(), F.col("tp").asc())
-    matched = (
-        cand.withColumn("_rp", F.row_number().over(w_pred))
-        .withColumn("_rg", F.row_number().over(w_gold))
-        .filter((F.col("_rp") == 1) & (F.col("_rg") == 1))
-        .groupBy("_v")
-        .agg(F.count(F.lit(1)).alias("n_match"))
-    )
-    np_ = p.groupBy("_v").agg(F.count(F.lit(1)).alias("n_pred"))
-    ng = g.groupBy("_v").agg(F.count(F.lit(1)).alias("n_gold"))
-    j = (
-        np_.join(ng, "_v", "full_outer")
-        .join(matched, "_v", "left_outer")
-        .select(
-            F.col("_v").alias(video_col),
-            F.coalesce("n_pred", F.lit(0)).alias("n_pred"),
-            F.coalesce("n_gold", F.lit(0)).alias("n_gold"),
-            F.coalesce("n_match", F.lit(0)).alias("n_match"),
-        )
-    )
-    prec = F.when(F.col("n_pred") == 0,
-                  F.when(F.col("n_gold") == 0, 1.0).otherwise(0.0)).otherwise(
-        F.col("n_match") / F.col("n_pred")
-    )
-    rec = F.when(F.col("n_gold") == 0,
-                 F.when(F.col("n_pred") == 0, 1.0).otherwise(0.0)).otherwise(
-        F.col("n_match") / F.col("n_gold")
-    )
-    f1 = F.when((prec + rec) == 0.0, 0.0).otherwise(2 * prec * rec / (prec + rec))
-    return j.select(
-        video_col, "n_pred", "n_gold", "n_match",
-        prec.alias("precision"), rec.alias("recall"), f1.alias("f1"),
-    )

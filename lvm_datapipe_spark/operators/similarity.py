@@ -187,37 +187,6 @@ def embedding_near_dup_pairs(
     return out
 
 
-def hyperplane_lsh_buckets(
-    emb: DataFrame,
-    n_planes: int = 12,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane (sign) LSH: bucket = the sign-bit string of the
-    vector against ``n_planes`` seeded Gaussian hyperplanes.  Cosine-similar
-    vectors collide with probability (1 - θ/π)^n_planes.
-
-    Planes are deterministic (numpy PCG64 with fixed seed) and embedded as
-    literal arrays — the dot products run as native fold expressions in
-    codegen, no Python at execution time.
-    """
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    # fold-based dot per plane: n_planes flat trees in one projection exceed
-    # janino's 64 KB method limit (codegen failure → interpreted fallback for
-    # the whole stage); the fold stays compact at any plane count, and bucket
-    # assignment runs once per corpus row, not per candidate pair.  The whole
-    # bucket string is ONE parsed expression (see sql_fold_dot).
-    bits = ", ".join(_sql_sign_bit(p) for p in planes)
-    return emb.select(F.col(id_col), as_double(vec_col).alias("_v")).select(
-        F.col(id_col), F.expr(f"concat({bits})").alias("bucket")
-    )
-
-
 def _sql_sign_bit(plane) -> str:
     return (
         f"(CASE WHEN {sql_fold_dot('_v', plane)} >= 0.0D THEN '1' ELSE '0' END)"
@@ -315,9 +284,10 @@ def lsh_ann_candidates(
         emb, n_rows = _observed_corpus(emb, id_col, vec_col)
         n_planes = auto_n_planes(n_rows)
     entries = []
-    # fold dots for the plane literals — see hyperplane_lsh_buckets for the
-    # janino 64 KB rationale (n_tables × n_planes flat trees in one
-    # expression is a guaranteed codegen failure).  All tables' buckets are
+    # fold dots for the plane literals: n_tables × n_planes flat dot trees
+    # in one expression exceed janino's 64 KB method limit (codegen
+    # failure → interpreted fallback for the whole stage); the fold stays
+    # compact at any plane count.  All tables' buckets are
     # ONE parsed expression: the Column-API form cost ~1.5 s of driver-side
     # py4j/lambda construction PER QUERY BUILD at 8×4×64 (see sql_fold_dot).
     for t, planes in enumerate(lsh_table_planes(n_planes, n_tables, dim, seed)):
@@ -713,13 +683,6 @@ def pq_codebooks(m: int, ksub: int, dsub: int, seed: int):
     return rng.standard_normal((m, ksub, dsub)) / float(np.sqrt(dim))
 
 
-def _pq_code_col(cb_j, j: int, dsub: int) -> Column:
-    """code_j = argmin-distance centroid index for subvector j (first
-    index on ties — the array_position convention), as one Column."""
-    d = _pq_dists_sql("nv", j, cb_j, dsub)
-    return (F.expr(f"array_position({d}, array_min({d}))") - 1).cast("int")
-
-
 def _pq_dists_sql(vec_sql: str, j: int, cb_j, dsub: int) -> str:
     """Per-centroid squared-L2 array for subvector j as ONE parsed
     expression: ksub compact zip_with folds over slice(vec) — the same
@@ -765,7 +728,7 @@ def _pq_dists_j_sql(vec_sql: str, cbs, j_sql: str, dsub: int) -> str:
 def _pq_codes_sql(vec_sql: str, cbs, m: int, dsub: int) -> str:
     """All m PQ codes as ONE array<int> expression (argmin with the
     array_position first-index-on-ties convention — element-identical to
-    m :func:`_pq_code_col` columns; pinned by tests).  Collapsing the m
+    m per-subspace argmin columns; pinned by tests).  Collapsing the m
     literal-heavy code columns into a single nested transform cuts the
     analyzer/codegen surface ~m-fold — measured 7.7 → 3.1 s on the
     declared IVF-PQ query at sf0.1, where per-stage planning and janino
@@ -795,36 +758,6 @@ _PQ_ADC_DIST_SQL = (
 )
 
 
-def pq_encode(
-    emb: DataFrame,
-    m: int = 32,
-    ksub: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_id: str = "neighbor_id",
-) -> DataFrame:
-    """PQ-encode the corpus: (id, code_0 … code_{m-1}) with code_j =
-    argmin squared-L2 centroid of subvector j (first index on ties, the
-    array_position convention shared with IVF).  One scan, no shuffle —
-    codes are narrow int columns, the 100 TB-friendly storage layout."""
-    dsub = dim // m
-    cbs = pq_codebooks(m, ksub, dsub, seed)
-    out = emb.select(F.col(id_col).alias(out_id), as_double(vec_col).alias("nv"))
-    # ONE select for all m codes: m chained withColumns each re-run the
-    # analyzer over a growing plan (quadratic in m on these literal-heavy
-    # trees — measured ~2 s of pure driver time at m=32); the expressions
-    # and the optimized plan are identical (r10-opt, guide §1.2)
-    return out.select(
-        out_id,
-        *[
-            _pq_code_col(cbs[j], j, dsub).alias(f"code_{j}")
-            for j in range(m)
-        ],
-    )
-
-
 def pq_adc_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -850,7 +783,7 @@ def pq_adc_topk(
     dsub = dim // m
     cbs = pq_codebooks(m, ksub, dsub, seed)
     # nested single-expression codes/LUTs (see _pq_codes_sql): element-
-    # identical to the m-column pq_encode/lut_j form, ~m-fold less
+    # identical to an m-column codes/lut_j form, ~m-fold less
     # analyzer/codegen surface
     codes = emb.select(
         F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("nv")

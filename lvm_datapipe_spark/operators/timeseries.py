@@ -1,32 +1,17 @@
-"""Trajectory / time-series similarity over per-entity event sequences.
+"""Trajectory profiles over per-entity event sequences.
 
 The events table holds (user_id, ts, value) — each user's ordered values
-form a trajectory.  Searching for similar trajectories (the distributed
-top-k trajectory-similarity problem, e.g. REPOSE, ICDE 2021 — public) is
-done here in two stages, mirroring the ANN design of
-``operators/similarity.py``:
-
-1. **Fixed-length profiles** (:func:`user_value_profiles`): resample each
-   user's sequence to L equi-count buckets (per-bucket decimal mean).
-   Scan-shaped: one window for the per-user position, one keyed
-   aggregation — the profile table is |users| × L, tiny next to the fact
-   table, and profile distance (cosine/Euclidean) is the cheap, exact,
-   oracle-able first filter.
-
-2. **DTW refinement** (:func:`dtw_topk`): Dynamic Time Warping with a
-   Sakoe-Chiba band against a broadcast query profile, LB_Keogh
-   lower-bound pruned — each candidate is screened against the batch's
-   running top-k threshold (the first k candidates of a batch are
-   always DP-scored; after that the O(L) envelope bound skips provably
-   losing candidates before the O(L·band) DP).  DTW is not
-   SQL-expressible, so this family is python-model test-verified
-   (SURVEY §5 convention), exactly like BPE and the media kernels.
+form a trajectory.  :func:`user_value_profiles` resamples each user's
+sequence to L equi-count buckets (per-bucket decimal mean), the
+fixed-length form the trajectory-similarity queries compare (top-k
+trajectory similarity, e.g. REPOSE, ICDE 2021 — public).  Scan-shaped:
+one window for the per-user position, one keyed aggregation — the
+profile table is |users| × L, tiny next to the fact table, and profile
+distance (cosine/Euclidean) is cheap, exact and oracle-able.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -68,93 +53,3 @@ def user_value_profiles(
         .groupBy(key_col, "bucket")
         .agg(decimal_avg(value_col).alias("profile_value"))
     )
-
-
-def _dtw(a: np.ndarray, b: np.ndarray, band: int) -> float:
-    """Sakoe-Chiba banded DTW, squared-distance cost (classic public DP)."""
-    la, lb = len(a), len(b)
-    inf = float("inf")
-    prev = np.full(lb + 1, inf)
-    prev[0] = 0.0
-    for i in range(1, la + 1):
-        cur = np.full(lb + 1, inf)
-        lo, hi = max(1, i - band), min(lb, i + band)
-        for j in range(lo, hi + 1):
-            c = (a[i - 1] - b[j - 1]) ** 2
-            cur[j] = c + min(prev[j], cur[j - 1], prev[j - 1])
-        prev = cur
-    return float(prev[lb])
-
-
-def _lb_keogh(q_lo: np.ndarray, q_hi: np.ndarray, c: np.ndarray) -> float:
-    """LB_Keogh envelope lower bound: provably ≤ banded DTW(q, c)."""
-    over = np.clip(c - q_hi, 0, None)
-    under = np.clip(q_lo - c, 0, None)
-    return float(np.sum(over**2 + under**2))
-
-
-def dtw_topk(
-    profiles: DataFrame,
-    query: list[float],
-    k: int = 10,
-    band: int = 4,
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Top-k entities by banded DTW distance to ``query``.
-
-    The query rides into the Arrow-batched kernel as a broadcast-by-
-    closure constant (KB-sized); per batch, candidates are screened with
-    the vectorizable LB_Keogh envelope against the best k distances seen
-    IN THAT BATCH (a valid prune: the bound only ever skips candidates
-    provably worse than k already-scored ones), and the O(L·band) DP runs
-    on survivors only.  The final exact top-k is a TakeOrdered over the
-    per-candidate distances — no global sort."""
-    L = len(query)
-    q = np.asarray(query, dtype=np.float64)
-    idx = np.arange(L)
-    lo_env = np.array(
-        [q[max(0, i - band): i + band + 1].min() for i in idx]
-    )
-    hi_env = np.array(
-        [q[max(0, i - band): i + band + 1].max() for i in idx]
-    )
-
-    # profiles arrive as (key, bucket, value) rows; assemble per key
-    assembled = (
-        profiles.groupBy(key_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("bucket", "profile_value"))
-            ).alias("_sv")
-        )
-        .select(
-            key_col,
-            F.transform(F.col("_sv"), lambda s: s["profile_value"]).alias(
-                "_vec"
-            ),
-            F.size("_sv").alias("_n"),
-        )
-        .filter(F.col("_n") == L)  # only complete profiles are comparable
-    )
-
-    key_type = dict(profiles.dtypes)[key_col]
-    out_t = f"{key_col} {key_type}, dtw double"
-
-    def score(batches):
-        for pdf in batches:
-            keys, dists = [], []
-            best: list[float] = []  # running batch-local top-k distances
-            for key, vec in zip(pdf[key_col], pdf["_vec"]):
-                c = np.asarray(vec, dtype=np.float64)
-                if len(best) >= k and _lb_keogh(lo_env, hi_env, c) > max(best):
-                    continue  # provably outside the current top-k
-                d = _dtw(q, c, band)
-                keys.append(key)
-                dists.append(d)
-                best.append(d)
-                best.sort()
-                del best[k:]
-            yield pd.DataFrame({key_col: keys, "dtw": dists})
-
-    scored = assembled.mapInPandas(score, schema=out_t)
-    return scored.orderBy(F.col("dtw"), F.col(key_col)).limit(k)

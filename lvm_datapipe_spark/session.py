@@ -111,22 +111,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
-    # transformWithState needs google.protobuf in the driver AND every
-    # spawned Python process (daemon workers + the tws driver worker, which
-    # Spark execs directly).  When the runtime only resolves via the
-    # fallback path probe (this container), expose the sitecustomize
-    # bootstrap dir through PYTHONPATH before the JVM launches — spawned
-    # interpreters then self-apply the same bootstrap at startup.  On a
-    # properly provisioned cluster this is a no-op.
-    from lvm_datapipe_spark.protobuf_compat import needs_worker_bootstrap
-
-    if needs_worker_bootstrap():
-        boot = os.path.join(os.path.dirname(__file__), "_pybootstrap")
-        existing = os.environ.get("PYTHONPATH", "")
-        if boot not in existing.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                boot + (os.pathsep + existing if existing else "")
-            )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

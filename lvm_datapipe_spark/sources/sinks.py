@@ -1,5 +1,5 @@
 """Production parquet sinks: partitioned writes with dynamic overwrite and
-small-file compaction.
+retention by partition.
 
 The reference writes per-rank JSON shards and merges them by hand
 (`utils/utils.py` merge helpers); on Spark the equivalent durability story
@@ -11,18 +11,18 @@ is partitioned parquet with two disciplines that only matter at scale:
   ``partitionOverwriteMode=dynamic`` scopes the delete to partitions present
   in the incoming DataFrame, which is what makes per-slice reprocessing
   idempotent.
-- **Small-file hygiene** — a 1000-executor streaming or per-slice batch
-  pipeline emits thousands of sub-HDFS-block files per partition; scans then
-  pay one task + one open per file.  ``compact_dir`` rewrites a directory to
-  ~``target_file_mb`` files (estimated from the current on-disk size, which
-  is already compressed parquet), preserving the partition columns.
+- **Retention** — ``retention_sweep`` drops whole expired partition
+  directories, never rewriting a live file.
+
+Small-file compaction of a versioned table is ``txlog.compact`` (the
+``tx-compact`` stage), which bin-packs small files as a new version.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -53,66 +53,6 @@ def write_partitioned(
     if mode == "overwrite" and dynamic:
         w = w.option("partitionOverwriteMode", "dynamic")
     w.partitionBy(*partition_by).parquet(path)
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
-def _count_data_files(path: str) -> int:
-    n = 0
-    for _root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if not f.startswith(("_", ".")))
-    return n
-
-
-def compact_dir(
-    spark: SparkSession,
-    path: str,
-    partition_by: list[str] | None = None,
-    target_file_mb: int = 128,
-) -> int:
-    """Rewrite a parquet directory to ~``target_file_mb`` files (returns the
-    data-file count actually written).  Reads the current on-disk size
-    (already-compressed bytes — a better size estimate than uncompressed row
-    bytes) and coalesces to ``ceil(size / target)``.  Partition columns are
-    re-derived from the data, so partitioned layouts survive compaction.
-
-    Swap discipline: the new data is written to a temp dir, the ORIGINAL is
-    renamed aside (``path__old``), the temp renamed into place, and only
-    then is the old dir deleted — a crash mid-swap can leave a stale or
-    duplicate directory to clean up, but never loses the dataset (each
-    rename is atomic on POSIX; the two-rename window is the only non-atomic
-    gap, and both dirs still exist throughout it)."""
-    import math
-    import shutil
-
-    n_files = max(
-        1, math.ceil(_dir_bytes(path) / (target_file_mb * 1024 * 1024))
-    )
-    df = spark.read.parquet(path)
-    base = path.rstrip("/")
-    tmp, old = base + "__compact_tmp", base + "__old"
-    out = df.coalesce(n_files)
-    if partition_by:
-        # repartition by the partition columns so each output dir gets
-        # coherent files instead of every task writing to every partition
-        out = df.repartition(n_files, *partition_by)
-        out.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-    else:
-        out.write.mode("overwrite").parquet(tmp)
-    written = _count_data_files(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return written
 
 
 def retention_sweep(

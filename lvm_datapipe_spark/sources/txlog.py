@@ -243,22 +243,6 @@ def history(table_dir: str) -> list[dict]:
     return out
 
 
-def committed_epochs(table_dir: str) -> set:
-    """Stream-epoch ids recorded in any manifest's ``meta.epoch`` — the
-    replay-skip set for the exactly-once streaming sink (see
-    ``streaming.events.start_versioned_sink``)."""
-    out = set()
-    ld = _log_dir(table_dir)
-    if not os.path.isdir(ld):
-        return out
-    for name in os.listdir(ld):
-        if name.endswith(".json"):
-            m = json.load(open(os.path.join(ld, name)))
-            if "epoch" in m.get("meta", {}):
-                out.add(m["meta"]["epoch"])
-    return out
-
-
 def diff_files(
     spark: SparkSession, table_dir: str, v_from: int, v_to: int
 ) -> DataFrame:

@@ -3,16 +3,12 @@ training loaders stream (public format: tar archives of per-sample files,
 grouped by a common key prefix; see the webdataset project's spec).
 
 Spark has no tar sink, so the writer is per-partition imperative IO — the
-legitimate "sink edge" use of per-partition code (the same class as the
-ffmpeg clip writer in operators/scenecut.py).  Two entry points share one
-shard-writing core:
-
-- :func:`write_webdataset` — functional ``foreachPartition`` sink;
-- ``df.write.format("webdataset")`` — the Spark 4 Python DataSourceWriter,
-  which adds task commits, ``mode("overwrite")`` semantics, and a
-  driver-side ``_manifest.json`` listing exactly the ACKNOWLEDGED shards
-  (a died-midway export is distinguishable from a complete one;
-  :func:`read_webdataset` honors the manifest when present).
+legitimate "sink edge" use of per-partition code.  The sink is
+``df.write.format("webdataset")``, a Spark 4 Python DataSourceWriter
+(:func:`register_webdataset`): task commits, ``mode("overwrite")``
+semantics, and a driver-side ``_manifest.json`` listing exactly the
+ACKNOWLEDGED shards (a died-midway export is distinguishable from a
+complete one; :func:`read_webdataset` honors the manifest when present).
 
 Scale shape:
 
@@ -129,7 +125,7 @@ def _write_rows_to_shards(
     pid: int,
     attempt: int,
 ) -> tuple[int, list]:
-    """Shared shard-writing core: returns (n_rows, final shard names).
+    """Shard-writing core of one task: returns (n_rows, final shard names).
     Each shard streams to ``<final>.tmp-<attempt>`` through the resolved
     pyarrow filesystem and is moved into place on close (atomic rename on
     local/HDFS; copy+delete on S3-likes — see FILESYSTEM CONTRACT)."""
@@ -205,44 +201,12 @@ def _write_rows_to_shards(
     return n_rows, shards
 
 
-def write_webdataset(
-    df,
-    path: str,
-    key_col: str,
-    columns: dict[str, str],
-    shard_size: int = 1000,
-) -> None:
-    """Write ``df`` as tar shards under ``path`` (functional sink — no
-    commit protocol; prefer ``df.write.format("webdataset")`` when a
-    completeness manifest matters).
-
-    ``columns`` maps column name → member extension (see module
-    docstring for the per-extension encoding rules).  ``path`` may be a
-    shared directory or an object-store URI, and ``key_col`` must be
-    globally unique — see the FILESYSTEM and KEY contracts in the module
-    docstring."""
-    fs, root = _fs_for(path)  # resolve driver-side too: fail fast on a bad scheme
-    fs.create_dir(root, recursive=True)
-    cols = dict(columns)
-
-    def write_partition(rows):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        _write_rows_to_shards(
-            rows, path, key_col, cols, shard_size,
-            ctx.partitionId(), ctx.attemptNumber(),
-        )
-
-    df.foreachPartition(write_partition)
-
-
 def read_webdataset(spark, path: str):
     """Round-trip reader: (shard, key, ext, content bytes) rows — one task
     per shard.  When ``_manifest.json`` exists (DataSource writes), ONLY
     the acknowledged shards in it are read — partial shards from a failed
-    or superseded run are skipped; without a manifest (functional-API
-    writes) the directory listing is the source of truth."""
+    or superseded run are skipped; without a manifest the directory
+    listing is the source of truth."""
     fs, root = _fs_for(path)
     from pyarrow import fs as pafs
 
@@ -287,8 +251,8 @@ def read_webdataset(spark, path: str):
 
 
 # ---------------------------------------------------------------------------
-# First-class sink: df.write.format("webdataset") via the Spark 4 Python
-# DataSource WRITER API (the read-side sibling is sources/fvid_source.py).
+# The sink: df.write.format("webdataset") via the Spark 4 Python
+# DataSource WRITER API.
 # ---------------------------------------------------------------------------
 
 try:  # pyspark >= 4 only
@@ -307,7 +271,7 @@ try:  # pyspark >= 4 only
         shards: list
 
     class WebDatasetWriter(DataSourceWriter):
-        """Per-task writer over the shared shard core, committed through
+        """Per-task writer over the shard core, committed through
         the DataSourceWriter protocol: a failed task's shards are never
         acknowledged, ``commit()`` writes the ``_manifest.json`` of
         acknowledged shards, and ``mode("overwrite")`` clears prior

@@ -8,7 +8,7 @@ real incremental semantics:
   ``events_tumbling_window`` oracle query and :func:`windowed_counts` are the
   same transformation applied to a batch or streaming DataFrame,
 - stream-static enrichment and a watermarked stream-stream interval join,
-- parquet and exactly-once versioned-table sinks (``start_*``).
+- a parquet sink (:func:`start_to_parquet`).
 
 All transformations take a DataFrame and work identically on batch and
 streaming inputs.
@@ -125,79 +125,6 @@ def start_to_parquet(df: DataFrame, path: str, checkpoint: str):
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .start()
-    )
-
-
-def start_versioned_sink(df: DataFrame, table_dir: str, checkpoint: str):
-    """EXACTLY-ONCE streaming delivery into a versioned table: every
-    micro-batch appends as one immutable txlog version stamped with its
-    epoch id, and a REPLAYED batch (crash between the commit and Spark's
-    checkpoint write — the gap foreachBatch's at-least-once contract
-    leaves open) is SKIPPED because its epoch is already in a committed
-    manifest.  A crash mid-commit is also safe: the replay computes the
-    same version number (the pointer never advanced) and rewrites the
-    same data dir cleanly.
-
-    Downstream consumers get the full versioned-table contract:
-    ``txlog.read`` for the current snapshot, ``txlog.diff_files`` for
-    per-version increments (process each micro-batch's delta exactly
-    once), time travel for replayable backfills."""
-    from lvm_datapipe_spark.sources import txlog
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if batch_id in txlog.committed_epochs(table_dir):
-            return  # replayed epoch — already durably committed
-        txlog.commit(
-            batch_df.sparkSession,
-            batch_df,
-            table_dir,
-            op="append",
-            meta={"epoch": batch_id},
-        )
-
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def windowed_distinct_users(
-    events: DataFrame,
-    window: str = "6 hours",
-    slide: str = "1 hour",
-    watermark: str | None = "2 hours",
-    lg_k: int = 12,
-) -> DataFrame:
-    """Approximate distinct users per sliding window, streaming-safe.
-
-    Exact COUNT(DISTINCT) is not supported in streaming aggregations
-    (unbounded per-window state); the mergeable-sketch path is: each
-    window's HLL absorbs users register-wise, state per window is one
-    KB-sized sketch, and late rows fold in commutatively.  Because HLL
-    register updates are order-independent MAXes, the ESTIMATE is a
-    deterministic function of the window's user SET — so the batch form
-    (watermark=None) produces bit-equal results and serves as the twin
-    for the stream≡batch property test, the same contract as
-    ``windowed_counts``.  The batch-side exact oracle for the same
-    question is ``events_sliding_distinct_users``; the batch sketch
-    rollup is ``aggregates.hll_partials``/``hll_merge``."""
-    src = (
-        ensure_event_time(events).withWatermark("ts", watermark)
-        if watermark
-        else events
-    )
-    return (
-        src.groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(lg_k))
-            ).alias("approx_users")
-        )
-        .select(F.col("w.start").alias("window_start"), "approx_users")
     )
 
 

@@ -63,16 +63,3 @@ def test_bitmap_word_layout(spark):
     set_bits = sum(bin(w & (2**64 - 1)).count("1") for w in bm)
     assert 1 <= set_bits <= 3
     assert len(bm) == (1 << 10) // 64
-
-
-def test_bloom_size_formula(spark):
-    m, k = B.bloom_size(10_000, 0.01)
-    assert m % 64 == 0
-    assert 9 * 10_000 <= m <= 11 * 10_000  # ~9.59 bits/key at 1% fpp
-    assert k == 7
-    # measured FP rate honors the budget (2x slack for rounding)
-    dim = spark.range(0, 10_000).selectExpr("id AS k")
-    bm = B.bloom_bitmap(dim, "k", m_bits=m, n_hashes=k)
-    probes = spark.range(1_000_000, 1_020_000).selectExpr("id AS k")
-    fp = probes.filter(B.bloom_might_contain(bm, "k", k)).count()
-    assert fp / 20_000 <= 0.02

@@ -68,16 +68,3 @@ def test_nest_tolerates_missing_columns(spark):
     assert row.basic.video_id == "v1"
     assert row.basic.clip_duration is None
     assert row.misc is None
-
-
-def test_validate_enums(spark):
-    rows = [
-        ("static shot", "long shot", "fast"),
-        ("warp drive", "long shot", "fast"),  # invalid movement
-        (None, None, None),  # nulls tolerated
-    ]
-    df = spark.createDataFrame(rows, ["movement", "view_scale", "speed"]).select(
-        F.struct("movement", "view_scale", "speed").alias("camera")
-    )
-    out = [r.enums_valid for r in export.validate_enums(df).collect()]
-    assert out == [True, False, True]

@@ -277,63 +277,6 @@ def test_contiguous_ids_empty_input(spark):
     assert out.count() == 0
 
 
-@pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_incremental_components_equals_full_recompute(spark):
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-
-    old_edges = [(1, 2), (2, 3), (10, 11), (20, 21), (30, 31)]
-    new_edges = [(3, 10), (21, 40), (50, 51)]  # merge, extend, brand-new
-    prev = connected_components(_pairs(spark, old_edges))
-    inc = dict(
-        (r.id, r.cluster_id)
-        for r in incremental_components(prev, _pairs(spark, new_edges)).collect()
-    )
-    full = dict(
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            _pairs(spark, old_edges + new_edges)
-        ).collect()
-    )
-    assert inc == full
-    assert inc[11] == 1  # the merged chain collapses to the global min
-    assert inc[40] == 20
-
-
-def test_incremental_components_no_new_edges_is_identity(spark):
-    from lvm_datapipe_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-
-    old_edges = [(5, 6), (6, 7), (9, 8)]
-    prev = connected_components(_pairs(spark, old_edges))
-    empty = spark.createDataFrame([], "id_a long, id_b long")
-    inc = dict(
-        (r.id, r.cluster_id)
-        for r in incremental_components(prev, empty).collect()
-    )
-    assert inc == dict((r.id, r.cluster_id) for r in prev.collect())
-
-
-def test_incremental_components_keeps_singletons(spark):
-    from lvm_datapipe_spark.operators.graph import incremental_components
-
-    # a full-corpus labeling includes SINGLETON rows (id, id) — they must
-    # survive the incremental pass, not vanish with the star compression
-    prev = spark.createDataFrame(
-        [(1, 1), (2, 1), (9, 9)], ["id", "cluster_id"]
-    )
-    new = spark.createDataFrame([(2, 3)], "id_a long, id_b long")
-    inc = dict(
-        (r.id, r.cluster_id)
-        for r in incremental_components(prev, new).collect()
-    )
-    assert inc == {1: 1, 2: 1, 3: 1, 9: 9}
-
-
 # --- triangle counting (degree orientation) --------------------------------
 
 
@@ -817,8 +760,7 @@ def test_twophase_agrees_with_declared_dedup_clusters(spark):
 
 def test_twophase_self_loop_only_node_is_singleton(spark):
     """A node whose ONLY pairs are self-loops must surface as its own
-    singleton cluster — the row incremental_components' self-star
-    compression depends on."""
+    singleton cluster."""
     rows = [(9, 9), (2, 3), (3, 3)]  # 9 is self-loop-only; 3 also self-loops
     for gate, got in _cc_labels(spark, rows).items():
         assert got == {9: 9, 2: 2, 3: 2}, gate

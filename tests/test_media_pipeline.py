@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from lvm_datapipe_spark import fakevideo
 from lvm_datapipe_spark.functions.strings import clean_caption
 from lvm_datapipe_spark.operators import media, scenecut
-from lvm_datapipe_spark.operators.relational import drop_failed_rows, resume_anti_join
+from lvm_datapipe_spark.operators.relational import resume_anti_join
 from lvm_datapipe_spark.plans import pipeline
 from lvm_datapipe_spark.sources.video import scan_video_dir
 
@@ -270,7 +270,6 @@ def test_decode_failure_yields_null_row(spark):
     )
     sampled = media.with_sampled_frames(df)
     assert sampled.filter(F.col("frames").isNotNull()).count() == 1
-    assert drop_failed_rows(sampled, "frames").count() == 1
 
 
 def test_kernel_math():
@@ -465,7 +464,7 @@ def test_cv2_adapter_with_injected_module(monkeypatch):
     assert resized[0] == bytes([3]) * (12 * 16)  # constant frame survives nn
 
 
-# -- M1/M2 real adapters (PySceneDetect / ffmpeg), driven via injection ------
+# -- M1 real adapter (PySceneDetect) and decoders, driven via injection ------
 
 
 def test_pyscenedetect_adapter_call_sequence_and_conversion():
@@ -520,40 +519,6 @@ def test_detect_one_null_for_real_container_without_pyscenedetect():
     assert SC._detect_one(None, 30.0) is None
 
 
-def test_ffmpeg_split_partition_with_recorder(tmp_path):
-    """M2 adapter body: one ffmpeg invocation per clip row with the
-    reference's accurate-seek argv; bad rows skipped, successes counted."""
-    from types import SimpleNamespace
-
-    from lvm_datapipe_spark.operators import scenecut as SC
-
-    rows = [
-        SimpleNamespace(clip_id="v1_0000000", video_path="/data/v1.mp4", start_s=0.0, end_s=2.5),
-        SimpleNamespace(clip_id="v1_0000001", video_path="/data/v1.mp4", start_s=2.5, end_s=4.0),
-        SimpleNamespace(clip_id="bad", video_path=None, start_s=None, end_s=None),
-    ]
-    recorded = []
-    n = SC._ffmpeg_split_partition(iter(rows), str(tmp_path), recorded.append)
-    assert n == 2 and len(recorded) == 2
-    argv = recorded[0]
-    assert argv[0] == "ffmpeg" and argv[-1] == f"{tmp_path}/v1_0000000.mp4"
-    i = argv.index("-ss")
-    assert argv[i + 1] == "0.000000"
-    assert "-i" in argv and argv[argv.index("-i") + 1] == "/data/v1.mp4"
-
-
-def test_ffmpeg_split_partition_survives_runner_failure(tmp_path):
-    from types import SimpleNamespace
-
-    from lvm_datapipe_spark.operators import scenecut as SC
-
-    def boom(argv):
-        raise RuntimeError("ffmpeg exploded")
-
-    rows = [SimpleNamespace(clip_id="c", video_path="/v.mp4", start_s=0.0, end_s=1.0)]
-    assert SC._ffmpeg_split_partition(iter(rows), str(tmp_path), boom) == 0
-
-
 def test_decord_adapter_with_injected_module(monkeypatch):
     """Decord path (the reference's decoder): batched get_batch access at
     NATIVE resolution, the shared deterministic _resize_nn post-decode, and
@@ -602,48 +567,3 @@ def test_decord_adapter_with_injected_module(monkeypatch):
     want = round(0.299 * 100 + 0.587 * 50 + 0.114 * 205)  # BT.601, rounded
     assert len(out) == 2 and all(len(f) == 24 * 32 for f in out)
     assert out[0] == bytes([want]) * (24 * 32)
-
-
-def test_boundary_f1_matches_hand_computed(spark):
-    from lvm_datapipe_spark.operators.scenecut import boundary_f1
-
-    pred = spark.createDataFrame(
-        [
-            # v1: 10.2 matches 10.0; 20.9 misses 20.0 (tol 0.5); 30.0 exact
-            ("v1", 10.2), ("v1", 20.9), ("v1", 30.0),
-            # v2: two preds near one gold — only ONE may match (one-to-one)
-            ("v2", 5.1), ("v2", 5.3),
-            # v3: pred but no gold
-            ("v3", 1.0),
-        ],
-        "path string, start_s double",
-    )
-    gold = spark.createDataFrame(
-        [
-            ("v1", 10.0), ("v1", 20.0), ("v1", 30.0),
-            ("v2", 5.0),
-            # v4: gold but no pred
-            ("v4", 2.0),
-        ],
-        "path string, start_s double",
-    )
-    rows = {r.path: r for r in boundary_f1(pred, gold, tol_s=0.5).collect()}
-    v1 = rows["v1"]
-    assert (v1.n_pred, v1.n_gold, v1.n_match) == (3, 3, 2)
-    assert abs(v1.f1 - 2 / 3) < 1e-12
-    v2 = rows["v2"]
-    assert (v2.n_pred, v2.n_gold, v2.n_match) == (2, 1, 1)  # one-to-one
-    assert rows["v3"].precision == 0.0 and rows["v3"].recall == 0.0
-    assert rows["v4"].recall == 0.0 and rows["v4"].n_pred == 0
-
-
-def test_boundary_f1_video_keyed_no_cross_product(spark):
-    from lvm_datapipe_spark.operators.scenecut import boundary_f1
-
-    pred = spark.createDataFrame([("a", 1.0)], "path string, start_s double")
-    gold = spark.createDataFrame([("a", 1.1)], "path string, start_s double")
-    plan = (
-        boundary_f1(pred, gold)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan

@@ -107,81 +107,6 @@ def test_stub_and_adapter_signatures_interchangeable(fake_easyocr):
     assert isinstance(stub_out, float) and isinstance(adapter_out, float)
 
 
-class _FakeSideData:
-    def __init__(self, vecs):
-        self._vecs = vecs
-
-    def to_ndarray(self):
-        return np.array(
-            [(mx, my) for mx, my in self._vecs],
-            dtype=[("motion_x", "i2"), ("motion_y", "i2")],
-        )
-
-
-class _FakeAv:
-    """PyAV stand-in: container with one video stream whose frames carry
-    motion-vector side data."""
-
-    def __init__(self, frames_vecs):
-        self.frames_vecs = frames_vecs
-        self.options_set = None
-
-    def open(self, fileobj):
-        av = self
-
-        class _Stream:
-            class codec_context:
-                options = None
-
-        class _Container:
-            class streams:
-                video = [_Stream()]
-
-            def decode(self, stream):
-                av.options_set = stream.codec_context.options
-                for vecs in av.frames_vecs:
-                    class _Frame:
-                        side_data = {"MOTION_VECTORS": _FakeSideData(vecs)} if vecs is not None else {}
-                    yield _Frame()
-
-            def __enter__(self):
-                return self
-
-            def __exit__(self, *a):
-                return False
-
-        return _Container()
-
-
-def test_motion_vector_adapter_matches_reference_aggregate():
-    """score = mean over ALL MVs of sqrt(mx^2+my^2) across frames, raw
-    motion_x/motion_y with no motion_scale division (extract_mvs.c:73-75,
-    final print :202)."""
-    fake = _FakeAv([[(3, 4)], [(6, 8), (0, 0)]])  # |mv| = 5, 10, 0
-    got = MA.MotionVectorAdapter().score_bytes(b"container", av_mod=fake)
-    assert got == pytest.approx((5 + 10 + 0) / 3)
-    assert fake.options_set == {"flags2": "+export_mvs"}  # export flag set
-
-
-def test_motion_vector_adapter_no_vectors_is_zero():
-    fake = _FakeAv([None, None])
-    assert MA.MotionVectorAdapter().score_bytes(b"c", av_mod=fake) == 0.0
-
-
-def test_motion_score_videos_fvid_fallback(spark):
-    from lvm_datapipe_spark import fakevideo
-    from lvm_datapipe_spark.operators.media import motion_score_videos
-
-    data = fakevideo.encode(fakevideo.generate("vid_a", n_scenes=2))
-    df = spark.createDataFrame(
-        [("a.fvid", bytearray(data)), ("b.bin", bytearray(b"junk"))],
-        ["path", "content"],
-    )
-    got = {r.path: r.of_score for r in motion_score_videos(df).collect()}
-    assert got["a.fvid"] is not None and got["a.fvid"] >= 0.0
-    assert got["b.bin"] is None  # no PyAV in this container -> null row
-
-
 # -- TinyAestheticAdapter: the one model head that EXECUTES here -------------
 
 
@@ -490,96 +415,6 @@ def test_aesthetic_registry_golden_forward_e2e_without_torch(spark):
     finally:
         del sc.environment[MA.AESTHETIC_WEIGHTS_ENV]
         del sc.environment[MA.AESTHETIC_EMBEDDER_ENV]
-
-
-# --- CLIP preprocessing contract (M3's input side, torch-free) --------------
-
-
-def test_clip_preprocess_constants_are_the_published_ones():
-    from lvm_datapipe_spark.operators import checkpoints as C
-
-    assert C.CLIP_SIZE == 224
-    np.testing.assert_array_equal(
-        C.CLIP_MEAN, np.array([0.48145466, 0.4578275, 0.40821073], np.float32)
-    )
-    np.testing.assert_array_equal(
-        C.CLIP_STD, np.array([0.26862954, 0.26130258, 0.27577711], np.float32)
-    )
-
-
-def test_clip_preprocess_identity_size_is_pure_normalize():
-    # 224x224 input: no resize, no crop — output must be EXACTLY
-    # (px/255 - mean)/std, channels-first
-    from lvm_datapipe_spark.operators import checkpoints as C
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, size=(224, 224, 3), dtype=np.uint8)
-    out = C.clip_preprocess(img)
-    assert out.shape == (3, 224, 224) and out.dtype == np.float32
-    want = (img.astype(np.float32) / 255.0 - C.CLIP_MEAN) / C.CLIP_STD
-    np.testing.assert_allclose(out, want.transpose(2, 0, 1), atol=1e-6)
-
-
-def test_clip_preprocess_shapes_and_constant_images():
-    # any input geometry lands at (3,224,224); constant image -> exactly
-    # the normalized constant (bicubic rows are normalized, crop can't
-    # change a constant)
-    from lvm_datapipe_spark.operators import checkpoints as C
-
-    for h, w in [(448, 300), (300, 448), (100, 100), (224, 448), (500, 224)]:
-        img = np.full((h, w), 128, dtype=np.uint8)
-        out = C.clip_preprocess(img)
-        assert out.shape == (3, 224, 224), (h, w)
-        want = (128.0 / 255.0 - C.CLIP_MEAN) / C.CLIP_STD
-        for c in range(3):
-            np.testing.assert_allclose(out[c], np.full((224, 224), want[c]),
-                                       atol=1e-5)
-
-
-def test_clip_preprocess_center_crop_geometry():
-    # 224x448 needs no resize (shorter side already 224), so the crop is a
-    # pure slice of columns 112:336 — paint exactly that region and assert
-    # the output sees only it
-    from lvm_datapipe_spark.operators import checkpoints as C
-
-    img = np.full((224, 448), 10, dtype=np.uint8)
-    img[:, 112:336] = 200
-    out = C.clip_preprocess(img)
-    want = (200.0 / 255.0 - C.CLIP_MEAN[0]) / C.CLIP_STD[0]
-    np.testing.assert_allclose(out[0], np.full((224, 224), want), atol=1e-6)
-
-
-def test_clip_preprocess_grayscale_equals_stacked_rgb():
-    from lvm_datapipe_spark.operators import checkpoints as C
-
-    rng = np.random.default_rng(5)
-    g = rng.integers(0, 256, size=(300, 260), dtype=np.uint8)
-    rgb = np.stack([g, g, g], axis=-1)
-    np.testing.assert_allclose(C.clip_preprocess(g), C.clip_preprocess(rgb))
-
-
-def test_clip_preprocess_bicubic_reproduces_linear_ramps():
-    # cubic convolution is exact on affine signals (away from the clamped
-    # border): an upscaled horizontal ramp must stay the same ramp
-    from lvm_datapipe_spark.operators import checkpoints as C
-
-    w = C._resize_weights(112, 224)
-    ramp = np.arange(112, dtype=np.float64)
-    up = w.astype(np.float64) @ ramp
-    centers = (np.arange(224) + 0.5) * (112 / 224) - 0.5
-    np.testing.assert_allclose(up[4:-4], centers[4:-4], atol=1e-6)
-
-
-def test_clip_preprocess_downscale_antialiases():
-    # a period-2 checkerboard downscaled 2x must land near the mean (the
-    # stretched-kernel antialias); naive point sampling would alias to one
-    # of the two values
-    from lvm_datapipe_spark.operators import checkpoints as C
-
-    w = C._resize_weights(448, 224)
-    cb = np.tile([0.0, 1.0], 224)
-    down = w.astype(np.float64) @ cb
-    assert np.abs(down[2:-2] - 0.5).max() < 0.15
 
 
 # --- MUSIQ preprocessing contract (M4's input side, torch-free) --------------

@@ -2,22 +2,27 @@
 
 Production paths are the package itself (CLI stages, registered queries,
 operators they call), ``tools/``, ``perfbench/``, ``bench.py`` and
-``__spark_entry__.py``.  A top-level function or class of the package
-(outside ``queries.py``, whose registrations are reached by name through
-``QUERIES``) is unreached when its name appears nowhere in that corpus
-except in its own body.  The scan runs to a fixpoint: an unreached
-definition's body is dropped from the corpus and the scan repeats, so a
-private helper only dead code calls is unreached too.  An allow-listed
-definition stays, so what it calls is reached.  A module's own
-``__all__`` is not a use.  Tests are not in the corpus: code only a test
-calls is unreached.
+``__spark_entry__.py``.  A top-level function or class of the package is
+unreached when no code in that corpus uses its name except its own body;
+in ``queries.py`` only the definitions ``_q`` registers are exempt, since
+``QUERIES`` reaches them by name.  Only code counts as a use: an AST
+name, an attribute, an imported name, or an identifier inside a string
+constant that is not a docstring (a ``getattr`` dispatch, a config key).
+A name in a comment or a docstring is no use, and neither is a module's
+own ``__all__``.  The scan runs to a fixpoint: an unreached definition's
+uses are dropped and the scan repeats, so a private helper only dead
+code calls is unreached too.  An allow-listed definition stays, so what
+it calls is reached.  Tests are not in the corpus: code only a test
+calls is unreached.  A package module is reached when another corpus
+file imports it.
 
-Spark-free: AST for the definitions, identifier counts for the uses.
+Spark-free: AST only.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import re
 from collections import Counter
 from pathlib import Path
@@ -29,61 +34,107 @@ IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 #: unreached definitions that stay, with the reason
 ALLOWED = {
     "count_exchanges": "plan-shape checker the bucketing and CLI pipeline tests assert co-location with",
-    "llava_conv_mode": "reference LLaVA conv-mode rule (llava_caption.py:77-92), golden-tested",
-    "llava_stop_str": "reference LLaVA stop string (llava_caption.py:131), golden-tested",
-    "tokenizer_image_token_ids": "reference llava.mm_utils image-token splice, golden-tested",
-    "coca_text_tokens": "reference open_clip tokenize framing for CoCa, golden-tested",
-    "clip_preprocess": "torch-free CLIP input contract (resize, crop, normalize), golden-tested",
-    "validate_enums": "reference macvid enum domains as a CHECK-style filter, tested",
-    "category_counts": "reference analyze_vids.py per-category counts, tested",
-    "bloom_size": "Bloom sizing rule for bloom_bitmap's m_bits/n_hashes, tested",
+    "duration_stats": "reference aggregate test_cli checks analyze's one-pass aggregate against",
+    "duration_histogram": "reference histogram test_cli checks analyze's one-pass aggregate against",
+    "read_webdataset": "reader the webdataset writer tests check the written shards with",
 }
 
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
-def _corpus() -> dict[Path, str]:
-    files = sorted(PACKAGE.rglob("*.py"))
-    files += sorted((REPO / "tools").glob("*.py"))
-    files += sorted((REPO / "perfbench").glob("*.py"))
-    files += [REPO / "bench.py", REPO / "__spark_entry__.py"]
-    texts = {}
+
+def _docstring(node: ast.AST) -> ast.Constant | None:
+    body = getattr(node, "body", None)
+    first = body[0] if isinstance(body, list) and body else None
+    if (
+        isinstance(first, ast.Expr)
+        and isinstance(first.value, ast.Constant)
+        and isinstance(first.value.value, str)
+    ):
+        return first.value
+    return None
+
+
+def _uses(node: ast.AST, docstrings: set[int]) -> tuple[Counter, set[str]]:
+    """(names the code under ``node`` uses, names its imports name)."""
+    uses, imported = Counter(), set()
+    for sub in ast.walk(node):  # breadth-first: a def comes before its body
+        kind = type(sub)
+        if kind is ast.Name:
+            uses[sub.id] += 1
+        elif kind is ast.Attribute:
+            uses[sub.attr] += 1
+        elif kind is ast.Constant:
+            if type(sub.value) is str and id(sub) not in docstrings:
+                uses.update(IDENT.findall(sub.value))
+        elif kind in _DEFS:
+            if (doc := _docstring(sub)) is not None:
+                docstrings.add(id(doc))
+        elif kind is ast.Import or kind is ast.ImportFrom:
+            names = [p for a in sub.names for p in a.name.split(".")]
+            if kind is ast.ImportFrom and sub.module:
+                names += sub.module.split(".")
+            uses.update(names)
+            imported.update(names)
+    return uses, imported
+
+
+def _is_all(node: ast.stmt) -> bool:
+    return isinstance(node, ast.Assign) and any(
+        getattr(t, "id", None) == "__all__" for t in node.targets
+    )
+
+
+def _registered(node: ast.stmt) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "_q"
+        for d in getattr(node, "decorator_list", ())
+    )
+
+
+@functools.cache
+def _corpus(root: Path = REPO) -> dict[Path, list[tuple[ast.stmt, Counter, set[str]]]]:
+    """Per production file: (top-level statement, its uses, its imports)."""
+    files = sorted((root / PACKAGE.name).rglob("*.py"))
+    files += sorted((root / "tools").glob("*.py"))
+    files += sorted((root / "perfbench").glob("*.py"))
+    files += [p for p in (root / "bench.py", root / "__spark_entry__.py") if p.exists()]
+    corpus = {}
     for path in files:
-        text = path.read_text()
-        lines = text.splitlines(keepends=True)
-        for node in ast.parse(text).body if "__all__" in text else ():
-            if isinstance(node, ast.Assign) and any(
-                getattr(t, "id", None) == "__all__" for t in node.targets
-            ):
-                lines[node.lineno - 1 : node.end_lineno] = [""] * (
-                    node.end_lineno - node.lineno + 1
-                )
-        texts[path] = "".join(lines)
-    return texts
+        tree = ast.parse(path.read_text())
+        doc = _docstring(tree)
+        docstrings = {id(doc)} if doc is not None else set()
+        corpus[path] = [
+            (node, *_uses(node, docstrings))
+            for node in tree.body
+            if not _is_all(node)
+        ]
+    return corpus
 
 
-def _unreached(texts: dict[Path, str]) -> tuple[list[str], list[str]]:
+def _unreached(root: Path = REPO, allowed=ALLOWED) -> tuple[list[str], list[str]]:
     """(unreached definitions not allowed, allowed names that are reached)."""
-    defs = []  # (where, name, identifier counts of the definition's source)
-    for path, text in texts.items():
-        if path.name == "queries.py" or PACKAGE not in path.parents:
-            continue
-        lines = text.splitlines(keepends=True)
-        for node in ast.parse(text).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-                src = "".join(lines[start - 1 : node.end_lineno])
-                where = f"{path.relative_to(REPO)}:{start}"
-                defs.append((where, node.name, Counter(IDENT.findall(src))))
+    package = root / PACKAGE.name
+    defs = []  # (where, name, uses of the definition's own code)
     uses = Counter()
-    for text in texts.values():
-        uses.update(IDENT.findall(text))
-    allowed = [d for d in defs if d[1] in ALLOWED]
-    defs = [d for d in defs if d[1] not in ALLOWED]
+    for path, nodes in _corpus(root).items():
+        for node, own, _ in nodes:
+            uses.update(own)
+            if (
+                isinstance(node, _DEFS)
+                and package in path.parents
+                and not _registered(node)
+            ):
+                start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+                defs.append((f"{path.relative_to(root)}:{start}", node.name, own))
+    allowed_defs = [d for d in defs if d[1] in allowed]
+    defs = [d for d in defs if d[1] not in allowed]
     unreached = []
     while True:
         new = [d for d in defs if uses[d[1]] == d[2][d[1]]]
         if not new:
             reached = sorted(
-                set(ALLOWED) - {n for _, n, own in allowed if uses[n] == own[n]}
+                set(allowed)
+                - {n for _, n, own in allowed_defs if uses[n] == own[n]}
             )
             return unreached, reached
         for where, name, own in new:
@@ -92,20 +143,58 @@ def _unreached(texts: dict[Path, str]) -> tuple[list[str], list[str]]:
         defs = [d for d in defs if d not in new]
 
 
+def _orphans(root: Path = REPO) -> list[str]:
+    """Package modules no other corpus file imports."""
+    corpus = _corpus(root)
+    imported = {p: set().union(*(i for _, _, i in nodes)) for p, nodes in corpus.items()}
+    return [
+        str(path.relative_to(root))
+        for path in sorted((root / PACKAGE.name).rglob("*.py"))
+        if path.stem not in {"__init__", "__main__"}
+        and not any(path.stem in ns for p, ns in imported.items() if p != path)
+    ]
+
+
 def test_every_package_definition_is_reached():
-    unreached, reached = _unreached(_corpus())
+    unreached, reached = _unreached()
     assert sorted(unreached) == []
     # an allow-list entry whose definition is reached again (or gone) goes
     assert reached == []
 
 
 def test_every_package_module_is_imported():
-    texts = _corpus()
-    idents = {path: set(IDENT.findall(text)) for path, text in texts.items()}
-    orphans = [
-        str(path.relative_to(REPO))
-        for path in sorted(PACKAGE.rglob("*.py"))
-        if path.stem not in {"__init__", "__main__"}
-        and not any(path.stem in ids for p, ids in idents.items() if p != path)
-    ]
-    assert orphans == []
+    assert _orphans() == []
+
+
+def test_only_code_counts_as_a_use(tmp_path):
+    """A name only a docstring or a comment holds is no use; a
+    non-docstring string (a ``getattr`` dispatch) is; a module only a
+    comment names is not imported."""
+    pkg = tmp_path / PACKAGE.name
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "ops.py").write_text(
+        '"""Ops; see prose_only and comment_only."""\n'
+        "def prose_only():\n"
+        "    return 1\n"
+        "def comment_only():\n"
+        "    return 2\n"
+        "def dispatched():\n"
+        "    return 3\n"
+        "def called():\n"
+        '    """Unlike prose_only, called by main."""\n'
+        "    return 4\n"
+    )
+    (pkg / "cli.py").write_text(
+        '"""CLI; prose_only is no stage."""\n'
+        "from lvm_datapipe_spark import ops  # comment_only, orphan\n"
+        "def main():\n"
+        '    """Run called, never prose_only."""\n'
+        "    ops.called()\n"
+        '    return getattr(ops, "dispatched")()\n'
+    )
+    (pkg / "__main__.py").write_text("from lvm_datapipe_spark.cli import main\nmain()\n")
+    (pkg / "orphan.py").write_text("X = 1\n")
+    unreached, _ = _unreached(tmp_path, allowed={})
+    assert sorted(u.split()[1] for u in unreached) == ["comment_only", "prose_only"]
+    assert _orphans(tmp_path) == [f"{PACKAGE.name}/orphan.py"]

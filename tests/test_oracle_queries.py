@@ -35,26 +35,6 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
     assert not problems, f"{name}: {problems}"
 
 
-def _pytest_oracle_names():
-    from lvm_datapipe_spark.queries import PYTEST_ORACLES
-
-    return sorted(PYTEST_ORACLES)
-
-
-@pytest.mark.parametrize("name", _pytest_oracle_names())
-def test_demoted_form_matches_oracle(spark, duck, sf_dir, name):
-    """Scale-weak exact forms demoted from the declared surface (VERDICT r5
-    item 4) keep their FULL DuckDB oracle here: semantics stay pinned even
-    though queries() no longer exposes the scale-killing plan."""
-    from lvm_datapipe_spark.queries import PYTEST_ORACLES
-
-    fn, sql = PYTEST_ORACLES[name]
-    sdf = fn(spark, sf_dir).toPandas()
-    ddf = duck.execute(sql).df()
-    problems = compare(name, sdf, ddf)
-    assert not problems, f"{name}: {problems}"
-
-
 def test_no_array_or_map_columns_in_declared_queries(spark, sf_dir):
     """The driver's correctness canonicalizer hashes results in pandas, which
     cannot hash list/dict cells — every *declared* query must project arrays

@@ -158,8 +158,8 @@ def _unbounded_global_windows(opt_plan: str, max_limit: int = 1000) -> bool:
 def test_no_global_window_in_any_declared_query(spark):
     # VERDICT r5 item 4, codified: no declared query may contain a Window
     # over an EMPTY partition spec — that is an Exchange-SinglePartition
-    # funnel of every corpus row through one reducer (the NTILE form
-    # demoted to PYTEST_ORACLES this round) — UNLESS the window's input
+    # funnel of every corpus row through one reducer (a global NTILE, for
+    # one) — UNLESS the window's input
     # is a ≤1000-row GlobalLimit candidate list (rank assignment in the
     # retrieval queries; see _unbounded_global_windows).  Heuristic: a
     # windowspecdefinition whose FIRST argument carries a sort direction

@@ -105,11 +105,6 @@ def test_count_consistency(spark):
     assert (row.record_count, row.file_count, row.delta, row.ok) == (10, 12, 2, True)
 
 
-def test_drop_failed_rows(spark):
-    df = spark.createDataFrame([("a", "x"), ("b", None)], ["id", "frames"])
-    assert [r.id for r in R.drop_failed_rows(df).collect()] == ["a"]
-
-
 def test_asof_join_fills_right_row_atomically(spark):
     """A right row with a NULL in one value column must NOT have that column
     backfilled from an older right row (torn row) — the as-of match picks one

@@ -1,5 +1,5 @@
 """Partitioned sink semantics: dynamic overwrite must be per-slice
-idempotent; compaction must shrink file counts without changing data."""
+idempotent; retention drops only expired partitions."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from lvm_datapipe_spark.sources.sinks import compact_dir, write_partitioned
+from lvm_datapipe_spark.sources.sinks import write_partitioned
 
 
 def _files(path: str) -> list[str]:
@@ -56,40 +56,6 @@ def test_sort_by_orders_within_files(spark, tmp_path):
     f = _files(p)[0]
     vs = pq.read_table(f, columns=["v"]).column("v").to_pylist()
     assert vs == sorted(vs)
-
-
-def test_compact_dir_shrinks_file_count_preserves_data(spark, tmp_path):
-    p = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(i, f"p{i % 2}", float(i)) for i in range(200)], ["id", "part", "v"]
-    ).repartition(16)
-    write_partitioned(df, p, ["part"])
-    assert len(_files(p)) > 8  # fragmented: many tasks x 2 partitions
-    before = {(r.id, r.part, r.v) for r in spark.read.parquet(p).collect()}
-    compact_dir(spark, p, partition_by=["part"], target_file_mb=128)
-    assert len(_files(p)) <= 4
-    after = {(r.id, r.part, r.v) for r in spark.read.parquet(p).collect()}
-    assert after == before
-    # partition layout survived (directory-partitioned, prunable)
-    assert glob.glob(f"{p}/part=p0/*.parquet")
-
-
-def test_compact_dir_returns_actual_count_and_cleans_swap_dirs(spark, tmp_path):
-    import os
-
-    p = str(tmp_path / "tbl2")
-    df = spark.createDataFrame(
-        [(i, f"p{i % 3}", float(i)) for i in range(90)], ["id", "part", "v"]
-    ).repartition(8)
-    write_partitioned(df, p, ["part"])
-    n = compact_dir(spark, p, partition_by=["part"], target_file_mb=128)
-    # returned count == data files actually on disk (the partitioned branch
-    # writes one file per non-empty (task, partition) pair, which need not
-    # equal the coalesce estimate)
-    assert n == len(_files(p))
-    # the rename-aside swap leaves no temp/old directories behind
-    assert not os.path.exists(p + "__old")
-    assert not os.path.exists(p + "__compact_tmp")
 
 
 def test_retention_sweep_drops_only_expired_partitions(spark, tmp_path):

@@ -1,28 +1,9 @@
-"""Trajectory similarity (operators/timeseries.py): profile resampling vs
-SQL-replayable spec; DTW vs a pure-python model; LB_Keogh admissibility."""
+"""Trajectory profiles (operators/timeseries.py): equi-count resampling
+vs a hand-computed spec."""
 
 from __future__ import annotations
 
-import numpy as np
-
-from lvm_datapipe_spark.operators.timeseries import (
-    _dtw,
-    _lb_keogh,
-    dtw_topk,
-    user_value_profiles,
-)
-
-
-def _py_dtw(a, b, band):
-    la, lb = len(a), len(b)
-    inf = float("inf")
-    D = [[inf] * (lb + 1) for _ in range(la + 1)]
-    D[0][0] = 0.0
-    for i in range(1, la + 1):
-        for j in range(max(1, i - band), min(lb, i + band) + 1):
-            c = (a[i - 1] - b[j - 1]) ** 2
-            D[i][j] = c + min(D[i - 1][j], D[i][j - 1], D[i - 1][j - 1])
-    return D[la][lb]
+from lvm_datapipe_spark.operators.timeseries import user_value_profiles
 
 
 def test_profiles_equicount_buckets(spark):
@@ -36,67 +17,3 @@ def test_profiles_equicount_buckets(spark):
     assert out[(1, 0)] == 0.5 and out[(1, 3)] == 6.5
     # user 2: 4 events → 1 per bucket, all 1.0
     assert all(out[(2, b)] == 1.0 for b in range(4))
-
-
-def test_dtw_matches_python_model():
-    rng = np.random.RandomState(3)
-    for _ in range(10):
-        a, b = rng.rand(12), rng.rand(12)
-        assert abs(_dtw(a, b, 3) - _py_dtw(list(a), list(b), 3)) < 1e-12
-
-
-def test_lb_keogh_is_admissible():
-    rng = np.random.RandomState(5)
-    band = 3
-    for _ in range(25):
-        q, c = rng.rand(10), rng.rand(10)
-        lo = np.array([q[max(0, i - band): i + band + 1].min() for i in range(10)])
-        hi = np.array([q[max(0, i - band): i + band + 1].max() for i in range(10)])
-        assert _lb_keogh(lo, hi, c) <= _dtw(q, c, band) + 1e-12
-
-
-def test_dtw_topk_finds_planted_neighbor(spark):
-    import math
-
-    L = 16
-    base = [math.sin(i / 2.0) for i in range(L)]
-    rows = []
-    # user 0: exact copy of the query; user 1: slightly shifted; others noise
-    for u in range(12):
-        for t in range(L):
-            if u == 0:
-                v = base[t]
-            elif u == 1:
-                v = base[max(0, t - 1)]
-            else:
-                v = math.cos(u * 7 + t * 1.3) * 2.0
-            rows.append((u, t, v))
-    df = spark.createDataFrame(rows, "user_id long, ts long, value double")
-    profiles = user_value_profiles(df, ts_col="ts", length=L)
-    top = dtw_topk(profiles, base, k=3, band=3).collect()
-    assert top[0]["user_id"] == 0 and abs(top[0]["dtw"]) < 1e-9
-    assert top[1]["user_id"] == 1  # the shifted twin is rank 2 (DTW absorbs the shift)
-
-
-def test_dtw_topk_prune_changes_nothing(spark):
-    # top-k with pruning must equal the exhaustive DTW ranking
-    import random
-
-    rng = random.Random(9)
-    L = 8
-    rows = [
-        (u, t, rng.uniform(-1, 1)) for u in range(30) for t in range(L)
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts long, value double")
-    profiles = user_value_profiles(df, ts_col="ts", length=L)
-    query = [rng.uniform(-1, 1) for _ in range(L)]
-    got = [(r["user_id"], round(r["dtw"], 9)) for r in dtw_topk(profiles, query, k=5, band=2).collect()]
-    # exhaustive reference over the same profiles
-    prof = {}
-    for r in profiles.collect():
-        prof.setdefault(r["user_id"], {})[r["bucket"]] = r["profile_value"]
-    exact = sorted(
-        (round(_py_dtw(query, [v[b] for b in range(L)], 2), 9), u)
-        for u, v in prof.items()
-    )[:5]
-    assert got == [(u, d) for d, u in exact]

@@ -8,7 +8,22 @@ import tarfile
 
 import pytest
 
-from lvm_datapipe_spark.sources.webdataset import read_webdataset, write_webdataset
+from lvm_datapipe_spark.sources.webdataset import read_webdataset, register_webdataset
+
+
+def _ds_write(df, out, columns="txt:txt", shard_size="5", mode="append"):
+    """Write through the ``df.write.format("webdataset")`` sink;
+    ``columns`` is the sink's ``col:ext,col2:ext2`` option."""
+    register_webdataset(df.sparkSession)
+    (
+        df.write.format("webdataset")
+        .option("path", out)
+        .option("key_col", "key")
+        .option("columns", columns)
+        .option("shard_size", shard_size)
+        .mode(mode)
+        .save()
+    )
 
 
 def test_write_read_roundtrip(spark, tmp_path):
@@ -18,10 +33,7 @@ def test_write_read_roundtrip(spark, tmp_path):
         for i in range(25)
     ]
     df = spark.createDataFrame(rows, "key string, txt string, payload binary").repartition(3)
-    write_webdataset(
-        df, out, key_col="key",
-        columns={"txt": "txt", "payload": "bin"}, shard_size=5,
-    )
+    _ds_write(df, out, columns="txt:txt,payload:bin")
     back = read_webdataset(spark, out).collect()
     by_key = {}
     for r in back:
@@ -37,7 +49,7 @@ def test_shard_size_and_naming(spark, tmp_path):
     df = spark.createDataFrame(
         [(f"k{i}", "x") for i in range(20)], "key string, txt string"
     ).coalesce(1)
-    write_webdataset(df, out, "key", {"txt": "txt"}, shard_size=6)
+    _ds_write(df, out, shard_size="6")
     shards = sorted(f for f in os.listdir(out) if f.endswith(".tar"))
     # 20 rows / 6 per shard in one partition → 4 shards from partition 0
     assert shards == [f"shard-00000-{i:05d}.tar" for i in range(4)]
@@ -54,7 +66,7 @@ def test_json_members_and_null_skip(spark, tmp_path):
         [("a", '{"lang":"en"}', None), ("b", None, "hello")],
         "key string, meta string, txt string",
     ).coalesce(1)
-    write_webdataset(df, out, "key", {"meta": "json", "txt": "txt"})
+    _ds_write(df, out, columns="meta:json,txt:txt")
     back = read_webdataset(spark, out).collect()
     members = {(r["key"], r["ext"]): bytes(r["content"]) for r in back}
     assert set(members) == {("a", "json"), ("b", "txt")}  # nulls skipped
@@ -70,7 +82,7 @@ def test_archives_reproducible(spark, tmp_path):
         [(f"k{i}", f"t{i}") for i in range(8)], "key string, txt string"
     ).coalesce(1)
     for out in (a, b):
-        write_webdataset(df, out, "key", {"txt": "txt"}, shard_size=8)
+        _ds_write(df, out, shard_size="8")
     fa, fb = (open(os.path.join(d, "shard-00000-00000.tar"), "rb").read() for d in (a, b))
     assert fa == fb  # mtime pinned → byte-identical re-export
 
@@ -78,21 +90,10 @@ def test_archives_reproducible(spark, tmp_path):
 def test_datasource_writer_roundtrip_and_manifest(spark, tmp_path):
     import json as _json
 
-    from lvm_datapipe_spark.sources.webdataset import register_webdataset
-
-    register_webdataset(spark)
     out = str(tmp_path / "wds_ds")
     rows = [(f"k{i:03d}", f"body {i}") for i in range(17)]
     df = spark.createDataFrame(rows, "key string, txt string").repartition(2)
-    (
-        df.write.format("webdataset")
-        .option("path", out)
-        .option("key_col", "key")
-        .option("columns", "txt:txt")
-        .option("shard_size", "5")
-        .mode("append")
-        .save()
-    )
+    _ds_write(df, out)
     manifest = _json.load(open(os.path.join(out, "_manifest.json")))
     assert manifest["n_rows"] == 17
     listed = sorted(f for f in os.listdir(out) if f.endswith(".tar"))
@@ -103,8 +104,6 @@ def test_datasource_writer_roundtrip_and_manifest(spark, tmp_path):
 
 def test_datasource_writer_requires_options(spark, tmp_path):
     import pytest
-
-    from lvm_datapipe_spark.sources.webdataset import register_webdataset
 
     register_webdataset(spark)
     df = spark.createDataFrame([("a", "b")], "key string, txt string")
@@ -117,25 +116,10 @@ def test_datasource_writer_requires_options(spark, tmp_path):
         )
 
 
-def _ds_write(df, out, shard_size="5", mode="append"):
-    (
-        df.write.format("webdataset")
-        .option("path", out)
-        .option("key_col", "key")
-        .option("columns", "txt:txt")
-        .option("shard_size", shard_size)
-        .mode(mode)
-        .save()
-    )
-
-
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_datasource_overwrite_clears_stale_shards(spark, tmp_path):
     import json as _json
 
-    from lvm_datapipe_spark.sources.webdataset import register_webdataset
-
-    register_webdataset(spark)
     out = str(tmp_path / "wds_ow")
     big = spark.createDataFrame(
         [(f"k{i:03d}", "old") for i in range(17)], "key string, txt string"
@@ -160,9 +144,6 @@ def test_reader_honors_manifest_over_listing(spark, tmp_path):
     import json as _json
     import tarfile as _tarfile
 
-    from lvm_datapipe_spark.sources.webdataset import register_webdataset
-
-    register_webdataset(spark)
     out = str(tmp_path / "wds_man")
     df = spark.createDataFrame(
         [("a", "x"), ("b", "y")], "key string, txt string"
@@ -189,9 +170,6 @@ def test_reader_honors_manifest_over_listing(spark, tmp_path):
 def test_datasource_append_refuses_existing_export(spark, tmp_path):
     import pytest
 
-    from lvm_datapipe_spark.sources.webdataset import register_webdataset
-
-    register_webdataset(spark)
     out = str(tmp_path / "wds_refuse")
     df = spark.createDataFrame([("a", "x")], "key string, txt string").coalesce(1)
     _ds_write(df, out)
@@ -210,7 +188,7 @@ def test_duplicate_key_fails_loudly(spark, tmp_path):
         [("k1", "a"), ("k2", "b"), ("k1", "c")], "key string, txt string"
     ).coalesce(1)
     with pytest.raises(Exception, match="duplicate.*k1"):
-        write_webdataset(df, out, "key", {"txt": "txt"})
+        _ds_write(df, out)
 
 
 def test_file_uri_scheme_round_trips(spark, tmp_path):
@@ -221,7 +199,7 @@ def test_file_uri_scheme_round_trips(spark, tmp_path):
     df = spark.createDataFrame(
         [("k1", "a"), ("k2", "b"), ("k3", "c")], "key string, txt string"
     ).coalesce(1)
-    write_webdataset(df, out_uri, "key", {"txt": "txt"})
+    _ds_write(df, out_uri)
     got = {
         r["key"]: bytes(r["content"]).decode()
         for r in read_webdataset(spark, out_uri).collect()
@@ -242,7 +220,7 @@ def test_unknown_uri_scheme_rejected(spark, tmp_path):
 
     df = spark.createDataFrame([("k1", "a")], "key string, txt string")
     with pytest.raises(Exception, match="[Uu]nrecognized|[Uu]nknown|scheme"):
-        write_webdataset(df, "bogus://bucket/wds", "key", {"txt": "txt"})
+        _ds_write(df, "bogus://bucket/wds")
     with pytest.raises(Exception, match="[Uu]nrecognized|[Uu]nknown|scheme"):
         read_webdataset(spark, "bogus://bucket/wds")
 

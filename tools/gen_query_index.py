@@ -1,6 +1,6 @@
-"""Generate QUERY_INDEX.md: one row per declared query (plus the pytest-only
-semantics oracles) with oracle status, the docstring's first sentence, and a
-clickable source location.  Regenerate after adding queries:
+"""Generate QUERY_INDEX.md: one row per declared query with oracle status,
+the docstring's first sentence, and a clickable source location.
+Regenerate after adding queries:
 
     python tools/gen_query_index.py
 """
@@ -28,7 +28,7 @@ def first_sentence(doc: str | None) -> str:
 
 
 def main() -> None:
-    from lvm_datapipe_spark.queries import ORACLE_SQL, PYTEST_ORACLES, QUERIES
+    from lvm_datapipe_spark.queries import ORACLE_SQL, QUERIES
 
     lines = [
         "# QUERY_INDEX — every declared query, generated",
@@ -52,19 +52,6 @@ def main() -> None:
         summary = first_sentence(inspect.getdoc(fn)) or "(wired operator — see module docstring)"
         summary = summary.replace("|", "\\|")
         lines.append(f"| `{name}` | {kind} | {summary} | `{file}:{line}` |")
-    lines += [
-        "",
-        "## Pytest-only semantics oracles (demoted scale-weak exact forms)",
-        "",
-        "| query | summary | source |",
-        "|---|---|---|",
-    ]
-    for name, (fn, _sql) in sorted(PYTEST_ORACLES.items()):
-        src = inspect.unwrap(fn)
-        file = os.path.relpath(inspect.getsourcefile(src), REPO)
-        line = inspect.getsourcelines(src)[1]
-        summary = first_sentence(inspect.getdoc(fn)).replace("|", "\\|")
-        lines.append(f"| `{name}` | {summary} | `{file}:{line}` |")
     lines.append("")
     out = os.path.join(REPO, "QUERY_INDEX.md")
     with open(out, "w") as f:
