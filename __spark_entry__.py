@@ -35,7 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
 #      row is OLDEST, so every query periodically re-enters the window and
 #      a silent regression cannot hide outside it indefinitely.
 # Everything rotated out stays verified locally every round via
-# ``tools/check_correctness.py`` (410/410 oracle-paired queries green in
+# ``tools/census.py --correctness`` (410/410 oracle-paired queries green in
 # the latest full local sweep; 412 declared).  The rotation itself is
 # mechanically auditable: ``tools/window_history.py`` reconstructs
 # query -> official-round history from the committed CORRECTNESS_r*.json
@@ -137,7 +137,7 @@ _CHECK_FIRST = [
     #  skyline_dominance_counts, events_debounce_collapse,
     #  cohort_ltv_curve — everything outside the window is green in the
     #  committed full sf0.01 sweep, CORRECTNESS_LOCAL_r10
-    #  (tools/check_correctness.py, 410/410 oracle-paired))
+    #  (tools/census.py --correctness, 410/410 oracle-paired))
 ]
 
 

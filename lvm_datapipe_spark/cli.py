@@ -161,9 +161,9 @@ def _cmd_zorder(spark, args) -> None:
     )
 
     df = read_parquet(spark, args.table)
-    n = df.count()
     a_sql, b_sql = args.by
     stats = df.selectExpr(
+        "count(*) AS n",
         f"min({a_sql}) AS alo", f"max({a_sql}) AS ahi",
         f"min({b_sql}) AS blo", f"max({b_sql}) AS bhi",
     ).first()
@@ -176,7 +176,7 @@ def _cmd_zorder(spark, args) -> None:
         bits=args.bits,
         n_files=args.files,
     )
-    print(json.dumps({"stage": "zorder", "curve": args.curve, "rows": n,
+    print(json.dumps({"stage": "zorder", "curve": args.curve, "rows": stats.n,
                       "by": args.by, "out": args.out}))
 
 

@@ -414,20 +414,10 @@ def _caption_kernel(frames, h, w):
     return caption_text(frames)
 
 
-def _tiny_aesthetic_stub(frames, h, w):
-    # unreachable in practice: TinyAestheticAdapter requires only numpy, so
-    # resolve_kernel always picks the REAL adapter; a None here (→ null
-    # rows) makes any accidental stub fallback visible in tests.
-    return None
-
-
-def _tiny_imaging_stub(frames, h, w):
-    # unreachable for the same reason as _tiny_aesthetic_stub
-    return None
-
-
-def _tiny_caption_stub(frames, h, w):
-    # unreachable for the same reason as _tiny_aesthetic_stub
+def _tiny_stub(frames, h, w):
+    # the tiny adapters need only numpy, so resolve_kernel always picks the
+    # real adapter; a None here (null rows) makes any accidental stub
+    # fallback visible in tests.
     return None
 
 
@@ -449,17 +439,17 @@ SCORERS: dict[str, tuple[str, object]] = {
     # mean-over-frames scalar (M4).
     "tiny_aesthetic": (
         "tiny_aesthetic_score",
-        (_tiny_aesthetic_stub, T.ArrayType(T.DoubleType())),
+        (_tiny_stub, T.ArrayType(T.DoubleType())),
     ),
     "tiny_imaging_quality": (
         "tiny_imaging_quality_score",
-        (_tiny_imaging_stub, T.DoubleType()),
+        (_tiny_stub, T.DoubleType()),
     ),
     # ... and the generation-family shape (M7/M8): per-frame caption strings
     # from a real greedy autoregressive decode loop
     "tiny_caption": (
         "tiny_caption_raw",
-        (_tiny_caption_stub, T.ArrayType(T.StringType())),
+        (_tiny_stub, T.ArrayType(T.StringType())),
     ),
 }
 

@@ -284,9 +284,10 @@ def test_cli_curate_matches_query_semantics(spark, work, capsys):
     assert first == second
 
 
-def test_cli_zorder_and_retention(spark, tmp_path):
+def test_cli_zorder_and_retention(spark, tmp_path, capsys):
+    """zorder takes the row count in the aggregate that reads the curve's
+    bounds, with no count job of its own: five Spark jobs in all."""
     import glob
-    import json as _json
 
     from lvm_datapipe_spark import cli
     from lvm_datapipe_spark.sources.sinks import write_partitioned
@@ -299,11 +300,10 @@ def test_cli_zorder_and_retention(spark, tmp_path):
     df.write.mode("overwrite").parquet(src)
 
     out = str(tmp_path / "evz")
-    assert cli.main(
-        ["zorder", "--table", src, "--out", out, "--by", "a", "b",
-         "--bits", "5", "--files", "8"],
-        spark=spark,
-    ) == 0
+    argv = ["zorder", "--table", src, "--out", out, "--by", "a", "b",
+            "--bits", "5", "--files", "8"]
+    assert _jobs_of(spark, f"zorder-{uuid.uuid4().hex[:8]}", argv) == 5
+    assert _last_json(capsys)["rows"] == 1024
     assert spark.read.parquet(out).count() == 1024
     assert len(glob.glob(out + "/part-*.parquet")) >= 4
 
@@ -401,13 +401,10 @@ def test_cli_zorder_hilbert_curve(spark, tmp_path, capsys):
         .write.parquet(src)
     )
     out = str(tmp_path / "hil")
-    rc = main(
-        ["zorder", "--table", src, "--out", out, "--by", "a", "b",
-         "--bits", "6", "--files", "4", "--curve", "hilbert"],
-        spark=spark,
-    )
-    assert rc == 0
-    status = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    argv = ["zorder", "--table", src, "--out", out, "--by", "a", "b",
+            "--bits", "6", "--files", "4", "--curve", "hilbert"]
+    assert _jobs_of(spark, f"zorder-hilbert-{uuid.uuid4().hex[:8]}", argv) == 5
+    status = _last_json(capsys)
     assert status["curve"] == "hilbert" and status["rows"] == 512
     assert spark.read.parquet(out).count() == 512
 

@@ -112,7 +112,7 @@ def test_stub_and_adapter_signatures_interchangeable(fake_easyocr):
 
 def test_tiny_aesthetic_adapter_available_and_resolves_real():
     assert MA.TinyAestheticAdapter.available() is True
-    kernel = MA.resolve_kernel("tiny_aesthetic", media._tiny_aesthetic_stub)
+    kernel = MA.resolve_kernel("tiny_aesthetic", media._tiny_stub)
     assert isinstance(kernel, MA.TinyAestheticAdapter)
 
 
@@ -150,7 +150,7 @@ def test_tiny_aesthetic_end_to_end_through_spark(spark):
 
 def test_tiny_imaging_adapter_available_and_resolves_real():
     assert MA.TinyImagingQualityAdapter.available() is True
-    kernel = MA.resolve_kernel("tiny_imaging_quality", media._tiny_imaging_stub)
+    kernel = MA.resolve_kernel("tiny_imaging_quality", media._tiny_stub)
     assert isinstance(kernel, MA.TinyImagingQualityAdapter)
 
 
@@ -190,7 +190,7 @@ def test_tiny_imaging_end_to_end_through_spark(spark):
 
 def test_tiny_caption_adapter_available_and_resolves_real():
     assert MA.TinyCaptionAdapter.available() is True
-    kernel = MA.resolve_kernel("tiny_caption", media._tiny_caption_stub)
+    kernel = MA.resolve_kernel("tiny_caption", media._tiny_stub)
     assert isinstance(kernel, MA.TinyCaptionAdapter)
 
 

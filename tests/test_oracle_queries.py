@@ -14,7 +14,7 @@ pytestmark = pytest.mark.slow
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
-from check_correctness import compare  # noqa: E402
+from census import compare  # noqa: E402
 
 
 def _all_query_names():

@@ -2,7 +2,7 @@
 and skip-gram pair shaping (operators/text.py).
 
 The DuckDB parity of the declared queries (bm25_topk, hybrid_rank_fusion,
-skipgram_pairs) is covered by tools/check_correctness.py; these tests pin
+skipgram_pairs) is covered by tools/census.py --correctness; these tests pin
 the operator semantics on hand-computed corpora.
 """
 

@@ -43,7 +43,7 @@ def load(path: str) -> dict:
         if "queries" in d.get("parsed", {}):
             return d["parsed"]
         if "times" in d:
-            # census shape (tools/time_all_queries.py); ERR strings become
+            # census shape (tools/census.py --times); ERR strings become
             # absent so a query that started erroring shows as GONE
             q = {k: v for k, v in d["times"].items()
                  if isinstance(v, (int, float))}

@@ -11,9 +11,8 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def first_sentence(doc: str | None) -> str:
@@ -27,7 +26,8 @@ def first_sentence(doc: str | None) -> str:
     return text if len(text) <= 220 else text[:217] + "..."
 
 
-def main() -> None:
+def render() -> str:
+    """QUERY_INDEX.md's text for the registered queries."""
     from lvm_datapipe_spark.queries import ORACLE_SQL, QUERIES
 
     lines = [
@@ -53,10 +53,14 @@ def main() -> None:
         summary = summary.replace("|", "\\|")
         lines.append(f"| `{name}` | {kind} | {summary} | `{file}:{line}` |")
     lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
     out = os.path.join(REPO, "QUERY_INDEX.md")
     with open(out, "w") as f:
-        f.write("\n".join(lines))
-    print(f"wrote {out}: {len(QUERIES)} queries")
+        f.write(render())
+    print(f"wrote {out}")
 
 
 if __name__ == "__main__":

@@ -39,8 +39,8 @@ def main() -> int:
             # never be rewritten (review r6: a sync clobbered r5-era totals)
             (r"\(\d+/\d+ oracle-paired queries green in\n# the latest full local sweep; \d+ declared\)",
              f"({no}/{no} oracle-paired queries green in\n# the latest full local sweep; {nq} declared)"),
-            (r"\(tools/check_correctness\.py, \d+/\d+ oracle-paired\)",
-             f"(tools/check_correctness.py, {no}/{no} oracle-paired)"),
+            (r"\(tools/census\.py --correctness, \d+/\d+ oracle-paired\)",
+             f"(tools/census.py --correctness, {no}/{no} oracle-paired)"),
         ],
         "COVERAGE.md": [
             (r"surface to \*\*\d+ declared\n/ \d+ oracle-paired\*\*",
