@@ -262,10 +262,8 @@ def load_table(
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names if os.path.exists(table_path(sf_dir, n))}
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return {n: load_table(spark, sf_dir, n) for n in TPCH_TABLES if os.path.exists(table_path(sf_dir, n))}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -13,10 +13,8 @@ image-token user turn and an empty assistant turn and renders
 
 from __future__ import annotations
 
-#: llava.constants — the special tokens the prompt assembly interleaves
+#: llava.constants — the image placeholder token
 DEFAULT_IMAGE_TOKEN = "<image>"
-DEFAULT_IM_START_TOKEN = "<im_start>"
-DEFAULT_IM_END_TOKEN = "<im_end>"
 
 #: llava.conversation — the v0/v1 templates share one system message
 LLAVA_SYSTEM = (
@@ -28,31 +26,12 @@ LLAVA_SYSTEM = (
 #: the reference's caption instruction (llava_caption.py:111)
 LLAVA_CAPTION_INSTRUCTION = "please describe this image"
 
-
-def llava_image_turn(
-    instruction: str = LLAVA_CAPTION_INSTRUCTION,
-    mm_use_im_start_end: bool = False,
-) -> str:
-    """The first-user-turn text with the image placeholder prepended
-    (llava_caption.py:118-122): ``<image>\\n`` + instruction, or the
-    ``<im_start><image><im_end>`` triple when the checkpoint was trained
-    with explicit image delimiters."""
-    if mm_use_im_start_end:
-        return (
-            DEFAULT_IM_START_TOKEN
-            + DEFAULT_IMAGE_TOKEN
-            + DEFAULT_IM_END_TOKEN
-            + "\n"
-            + instruction
-        )
-    return DEFAULT_IMAGE_TOKEN + "\n" + instruction
+#: the first user turn: the image placeholder, then the instruction
+#: (llava_caption.py:118-122)
+LLAVA_IMAGE_TURN = DEFAULT_IMAGE_TOKEN + "\n" + LLAVA_CAPTION_INSTRUCTION
 
 
-def llava_caption_prompt(
-    conv_mode: str = "llava_v1",
-    instruction: str = LLAVA_CAPTION_INSTRUCTION,
-    mm_use_im_start_end: bool = False,
-) -> str:
+def llava_caption_prompt(conv_mode: str = "llava_v1") -> str:
     """Render the single-round caption prompt exactly as
     ``conv.get_prompt()`` does after llava_caption.py:111-129 appends the
     image-bearing user turn and an empty assistant turn.
@@ -63,11 +42,10 @@ def llava_caption_prompt(
     * ``llava_v0`` — SeparatorStyle.SINGLE, sep ``"###"``, roles
       Human/Assistant: ``{system}###Human: {turn}###Assistant:``.
     """
-    turn = llava_image_turn(instruction, mm_use_im_start_end)
     if conv_mode == "llava_v1":
-        return f"{LLAVA_SYSTEM} USER: {turn} ASSISTANT:"
+        return f"{LLAVA_SYSTEM} USER: {LLAVA_IMAGE_TURN} ASSISTANT:"
     if conv_mode == "llava_v0":
-        return f"{LLAVA_SYSTEM}###Human: {turn}###Assistant:"
+        return f"{LLAVA_SYSTEM}###Human: {LLAVA_IMAGE_TURN}###Assistant:"
     raise ValueError(f"unsupported conv_mode: {conv_mode}")
 
 

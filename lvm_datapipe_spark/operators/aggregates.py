@@ -34,7 +34,7 @@ def decimal_avg(col: Column | str) -> Column:
 #: Row ceiling for :func:`exact_percentiles_driver`: 8M doubles is a 64 MB
 #: Arrow collect and a ~0.5 s numpy sort on the driver — comfortably
 #: driver-sized; above it the distributed ``percentile`` aggregate carries
-#: the query.  Env-overridable (``SPARK_GRAFT_DRIVER_PCT_MAX_ROWS``).
+#: the query.  Read at call time.
 DRIVER_PCT_MAX_ROWS = 8_000_000
 
 
@@ -42,7 +42,6 @@ def exact_percentiles_driver(
     df: DataFrame,
     col: str,
     fractions: list[float],
-    max_rows: int | None = None,
     row_bound: int | None = None,
 ) -> list[float] | None:
     """Exact linear-interpolated percentiles of a DOUBLE column computed on
@@ -58,26 +57,21 @@ def exact_percentiles_driver(
     every distinct value — measured ~4.5 s on 600k rows/583k distinct at
     sf0.1 while the Arrow column collect + ``np.sort`` costs ~1 s.  Same
     size-gated driver-finish pattern as the dense triangle kernel; returns
-    ``None`` above the row gate (or on an empty column — the caller's
-    distributed aggregate handles both).
+    ``None`` above the row gate ``DRIVER_PCT_MAX_ROWS`` (or on an empty
+    column — the caller's distributed aggregate handles both).
 
     ``row_bound`` is an upper bound on ``df``'s rows the caller already
     knows without a Spark job (a table's parquet footer row count,
-    ``catalog.table_row_count``), as ``graph.triangle_counts_driver_dense``
-    takes ``raw_count``.  At or under the gate the kernel collects the
-    non-null column once and takes ``n`` from the array: one collect job,
-    no count.  Without a bound, or above the gate, it counts the non-null
-    rows first (two jobs) and collects only at or under the gate.  (A
-    ``limit(max_rows + 1)`` collect is no cheaper: on a multi-partition
-    input it plans a single-partition exchange of every row.)"""
-    import os
-
+    ``catalog.table_row_count``).  At or under the gate the kernel
+    collects the non-null column once and takes ``n`` from the array: one
+    collect job, no count.  Without a bound, or above the gate, it counts
+    the non-null rows first (two jobs) and collects only at or under the
+    gate.  (A ``limit(max_rows + 1)`` collect is no cheaper: on a
+    multi-partition input it plans a single-partition exchange of every
+    row.)"""
     import numpy as np
 
-    if max_rows is None:
-        max_rows = int(
-            os.environ.get("SPARK_GRAFT_DRIVER_PCT_MAX_ROWS", DRIVER_PCT_MAX_ROWS)
-        )
+    max_rows = DRIVER_PCT_MAX_ROWS
     values = df.where(F.col(col).isNotNull()).select(F.col(col).cast("double").alias("v"))
     if row_bound is None or row_bound > max_rows:
         n = values.count()
@@ -140,7 +134,7 @@ def corpus_stats_columns(col: str) -> list[Column]:
     ]
 
 
-def histogram(df: DataFrame, col: str, bins: list[float], bucket_col: str = "bucket") -> DataFrame:
+def histogram(df: DataFrame, col: str, bins: list[float]) -> DataFrame:
     """A6 — histogram with custom bucket edges.
 
     Reference: ``np.histogram(durations, bins=[0,5,10,60,300,600,1800,3600,
@@ -151,9 +145,9 @@ def histogram(df: DataFrame, col: str, bins: list[float], bucket_col: str = "buc
     left-closed, right-open, last bin unbounded.
     """
     return (
-        df.withColumn(bucket_col, bucket_index(col, bins))
-        .filter(F.col(bucket_col).isNotNull())
-        .groupBy(bucket_col)
+        df.withColumn("bucket", bucket_index(col, bins))
+        .filter(F.col("bucket").isNotNull())
+        .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -176,7 +170,7 @@ def value_counts(df: DataFrame, col: str) -> DataFrame:
     return df.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
 
 
-def count_consistency(records: DataFrame, files: DataFrame, lo: int = 1, hi: int = 3) -> DataFrame:
+def count_consistency(records: DataFrame, files: DataFrame) -> DataFrame:
     """A8 — post-stage sanity check: file count minus metadata record count
     must be within [lo, hi] (``evaluations/check/check_secne.py:12-27``).
     Returns a single row (record_count, file_count, delta, ok)."""
@@ -185,7 +179,7 @@ def count_consistency(records: DataFrame, files: DataFrame, lo: int = 1, hi: int
     return (
         r.crossJoin(f)
         .withColumn("delta", F.col("file_count") - F.col("record_count"))
-        .withColumn("ok", (F.col("delta") >= lo) & (F.col("delta") <= hi))
+        .withColumn("ok", (F.col("delta") >= 1) & (F.col("delta") <= 3))
     )
 
 

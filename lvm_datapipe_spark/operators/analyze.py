@@ -31,16 +31,16 @@ DURATION_LABELS = [
 ]
 
 
-def duration_stats(clips: DataFrame, col: str = "clip_duration") -> DataFrame:
+def duration_stats(clips: DataFrame) -> DataFrame:
     """analyze_vids.py:42 — sum + mean (plus min/max/count for free)."""
-    return corpus_stats(clips, col)
+    return corpus_stats(clips, "clip_duration")
 
 
-def duration_histogram(clips: DataFrame, col: str = "clip_duration") -> DataFrame:
+def duration_histogram(clips: DataFrame) -> DataFrame:
     """analyze_vids.py:43-51 — the pie-chart bucket counts, labeled."""
     from pyspark.sql import functions as F
 
-    out = histogram(clips, col, DURATION_BINS)
+    out = histogram(clips, "clip_duration", DURATION_BINS)
     label = None
     for i, name in enumerate(DURATION_LABELS):
         label = (
@@ -49,7 +49,7 @@ def duration_histogram(clips: DataFrame, col: str = "clip_duration") -> DataFram
     return out.withColumn("label", label)
 
 
-def duration_summary(clips: DataFrame, col: str = "clip_duration") -> DataFrame:
+def duration_summary(clips: DataFrame) -> DataFrame:
     """:func:`duration_stats` and the :func:`duration_histogram` counts in ONE
     global aggregate (one scan, one single-row result): the stats columns
     (total, mean, min, max, n) plus one count column per
@@ -58,9 +58,9 @@ def duration_summary(clips: DataFrame, col: str = "clip_duration") -> DataFrame:
     no bucket, exactly as in the two separate aggregates."""
     from pyspark.sql import functions as F
 
-    bucket = bucket_index(col, DURATION_BINS)
+    bucket = bucket_index("clip_duration", DURATION_BINS)
     return clips.agg(
-        *corpus_stats_columns(col),
+        *corpus_stats_columns("clip_duration"),
         *[F.count(F.when(bucket == i, 1)).alias(name) for i, name in enumerate(DURATION_LABELS)],
     )
 

@@ -125,7 +125,6 @@ def binned_range_join(
     start_col: str,
     end_col: str,
     bin_width,
-    how: str = "inner",
 ) -> DataFrame:
     """Point-in-interval join WITHOUT an equi key, as a hash join.
 
@@ -144,19 +143,15 @@ def binned_range_join(
     span so typical intervals land in 1-2 bins; the join is one shuffle
     keyed on a well-distributed integer.  Long-tail intervals fatten one
     side linearly (rows, not pairs); hot bins are ordinary join skew (AQE
-    handles them), never a cross product.  ``how="left"`` keeps unmatched
-    points with null interval columns (dropDuplicates on the point's
-    pre-join identity is NOT applied — callers joining overlapping
-    intervals get one row per (point, interval) match, exactly like the
-    naive join).
+    handles them), never a cross product.  A point meeting overlapping
+    intervals gets one row per (point, interval) match, exactly like the
+    naive join.
 
     Timestamps work through the numeric path: pass epoch-second columns
     (``F.unix_timestamp``) and a width in seconds.
     """
     from pyspark.sql import types as T
 
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
     p, iv = points.alias("p"), intervals.alias("iv")
 
     int_types = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -187,16 +182,7 @@ def binned_range_join(
         (F.col(f"p.{point_col}") >= F.col(f"_iv_{start_col}"))
         & (F.col(f"p.{point_col}") <= F.col(f"_iv_{end_col}"))
     )
-    # ONE join either way: with the residual inside the join condition, a
-    # left-outer emits the null-extended row exactly when NO exploded
-    # interval row satisfies bin-equality AND the residual — bin-hit/
-    # residual-miss rows do not survive, so no anti-join second pass is
-    # needed over the (expensive, exploded) interval side.
-    joined = p.join(
-        iv_exp,
-        (pbin == F.col("_bin")) & residual,
-        "inner" if how == "inner" else "left_outer",
-    )
+    joined = p.join(iv_exp, (pbin == F.col("_bin")) & residual, "inner")
     return joined.select(
         "p.*", *[F.col(f"_iv_{c}").alias(c) for c in intervals.columns]
     )

@@ -102,8 +102,6 @@ def bloom_prefiltered_semi_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    m_bits: int = 1 << 16,
-    n_hashes: int = 3,
 ) -> DataFrame:
     """Exact left-semi join with a Bloom pre-filter on the fact side.
 
@@ -113,6 +111,8 @@ def bloom_prefiltered_semi_join(
     changes is the shuffle volume: only fact rows whose key might be in the
     dim survive to the exchange.
     """
+    m_bits = 1 << 16
+    n_hashes = 3
     bitmap = bloom_bitmap(dim, dim_key, m_bits=m_bits, n_hashes=n_hashes)
     pre = fact.filter(bloom_might_contain(bitmap, fact_key, n_hashes))
     return pre.join(dim, pre[fact_key] == dim[dim_key], "left_semi")

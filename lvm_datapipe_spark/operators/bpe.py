@@ -140,7 +140,6 @@ def learn_bpe_merges(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 50,
-    local_threshold: int = LOCAL_FIT_THRESHOLD,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn ``n_merges`` BPE merges; returns (ordered merge list, final
     word table with merged symbol arrays).  Stops early when no pair
@@ -149,7 +148,7 @@ def learn_bpe_merges(
     Job-count bound (VERDICT r5 item 5 — a 32k-merge vocab must not mean
     tens of thousands of driver-coordinated jobs): after the ONE
     corpus-sized scan, the distinct-word table is vocabulary-sized.  When
-    it holds ≤ ``local_threshold`` word types the whole fit runs in ONE
+    it holds ≤ ``LOCAL_FIT_THRESHOLD`` word types the whole fit runs in ONE
     further Spark job (a guarded ``limit(threshold+1).collect()``) followed
     by the exact sequential loop on the driver — bit-identical to the
     distributed rounds because both share ``_merge_pair`` and the same
@@ -157,6 +156,7 @@ def learn_bpe_merges(
     path runs, at ≤ 2 jobs per merge round (top-1 TakeOrdered collect +
     eager localCheckpoint): total jobs ≤ 2 + 2·n_merges, documented, and
     each round's shuffle is word-TYPE-sized, never corpus-sized."""
+    local_threshold = LOCAL_FIT_THRESHOLD
     words = word_symbol_table(df, text_col).localCheckpoint()
     probe = words.limit(local_threshold + 1).collect()
     if len(probe) <= local_threshold:

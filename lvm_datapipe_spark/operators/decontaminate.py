@@ -76,33 +76,19 @@ def contamination_pairs(
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    bench_id_col: str = "bench_id",
-    n: int = 8,
-    min_common: int = 1,
-    max_bench_freq: int | None = 100,
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Drop every corpus document flagged by :func:`contamination_pairs` —
     one left-anti join against the (small) flagged-id set."""
     flagged = contamination_pairs(
-        corpus, benchmark, text_col, id_col, bench_text_col, bench_id_col, n,
-        min_common, max_bench_freq
-    ).select(id_col).distinct()
-    return corpus.join(flagged, id_col, "left_anti")
+        corpus, benchmark, "text", "doc_id", "text", "bench_id", n,
+        1, 100
+    ).select("doc_id").distinct()
+    return corpus.join(flagged, "doc_id", "left_anti")
 
 
 def contamination_substring(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    bench_id_col: str = "bench_id",
     snippet_len: int = 30,
 ) -> DataFrame:
     """Exact-substring contamination — the second standard decontamination
@@ -121,13 +107,13 @@ def contamination_substring(
     def norm(col):
         return F.trim(F.regexp_replace(F.lower(col), "[ \t\n\r\f]+", " "))
 
-    c = corpus.select(F.col(id_col), norm(F.col(text_col)).alias("__t"))
+    c = corpus.select(F.col("doc_id"), norm(F.col("text")).alias("__t"))
     b = benchmark.select(
-        F.col(bench_id_col),
-        F.substring(norm(F.col(bench_text_col)), 1, snippet_len).alias("__snip"),
-    ).filter(F.length(norm(F.col(bench_text_col))) >= snippet_len)
+        F.col("bench_id"),
+        F.substring(norm(F.col("text")), 1, snippet_len).alias("__snip"),
+    ).filter(F.length(norm(F.col("text"))) >= snippet_len)
     return (
         c.crossJoin(F.broadcast(b))
         .filter(F.instr(F.col("__t"), F.col("__snip")) > 0)
-        .select(id_col, bench_id_col)
+        .select("doc_id", "bench_id")
     )

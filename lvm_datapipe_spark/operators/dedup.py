@@ -25,16 +25,14 @@ from lvm_datapipe_spark.operators.text import fingerprint, tokens
 # -- exact -------------------------------------------------------------------
 
 
-def exact_duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """Exact dedup via content fingerprint: one row per distinct content with
     the canonical (min) id and the copy count.  One shuffle keyed on the
     md5 fingerprint — uniform, unskewed, broadcast-free."""
     return (
-        df.select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
+        df.select(F.col("doc_id"), fingerprint("text").alias("fingerprint"))
         .groupBy("fingerprint")
-        .agg(F.min(id_col).alias("canonical_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("canonical_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -82,9 +80,6 @@ def shingle_rows(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.6,
     max_shingle_freq: int | None = 1000,
     shingle_rows_df: DataFrame | None = None,
@@ -113,20 +108,20 @@ def ngram_jaccard_pairs(
     # (id, hash) set), and the string table's doc-keyed partitioning
     # makes the re-dedup exchange-free.
     if shingle_rows_df is None:
-        cached = shingle_rows(df, text_col, id_col, n, hashed=True).persist()
+        cached = shingle_rows(df, "text", "doc_id", 3, hashed=True).persist()
     else:
         cached = (
             shingle_rows_df.select(
-                F.col(id_col), F.xxhash64("shingle").alias("shingle")
+                F.col("doc_id"), F.xxhash64("shingle").alias("shingle")
             )
-            .dropDuplicates([id_col, "shingle"])
+            .dropDuplicates(["doc_id", "shingle"])
             .persist()
         )
     ex = cached
-    sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    inter = shingle_intersections(ex, id_col, max_shingle_freq)
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
+    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    inter = shingle_intersections(ex, "doc_id", max_shingle_freq)
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     out = (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -229,9 +224,6 @@ def shingle_intersections(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
 ) -> DataFrame:
@@ -249,11 +241,11 @@ def containment_pairs(
     (id, shingle) rows, the capped posting-list intersection kernel,
     then two keyed joins against the size table.  Same stop-shingle cap
     semantics (sizes always uncapped)."""
-    cached = shingle_rows(df, text_col, id_col, n, hashed=True).persist()
-    sizes = cached.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    inter = shingle_intersections(cached, id_col, max_shingle_freq)
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
+    cached = shingle_rows(df, "text", "doc_id", 3, hashed=True).persist()
+    sizes = cached.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    inter = shingle_intersections(cached, "doc_id", max_shingle_freq)
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     out = (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -270,12 +262,16 @@ def containment_pairs(
 # -- MinHash + LSH -----------------------------------------------------------
 
 
+#: MinHash signature length (hash functions per document)
+MINHASH_K = 16
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    k: int = 16,
+    k: int = MINHASH_K,
     shingle_rows_df: DataFrame | None = None,
 ) -> DataFrame:
     """Scan-shaped MinHash: shingle rows → k md5 columns per row (flat
@@ -370,12 +366,6 @@ def lsh_candidate_pairs(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-    rows: int = 4,
     shingle_rows_df: DataFrame | None = None,
     dedup_pairs: bool = True,
 ) -> DataFrame:
@@ -384,8 +374,8 @@ def minhash_lsh_pairs(
     (id, shingle) table to :func:`minhash_signatures`; ``dedup_pairs``
     forwards to :func:`lsh_candidate_pairs`."""
     return lsh_candidate_pairs(
-        minhash_signatures(df, text_col, id_col, n, k, shingle_rows_df),
-        id_col, bands, rows, dedup_pairs,
+        minhash_signatures(df, "text", "doc_id", 3, MINHASH_K, shingle_rows_df),
+        "doc_id", 4, 4, dedup_pairs,
     )
 
 
@@ -430,8 +420,6 @@ def simhash_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
 
 def simhash_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
     dedup_pairs: bool = True,
@@ -456,7 +444,7 @@ def simhash_pairs(
     # pair-level hamming is ONE bit_count(xor) instead of 32 substring
     # comparisons over millions of candidates
     sh = (
-        simhash_docs(df, text_col, id_col)
+        simhash_docs(df, "text", "doc_id")
         .withColumn("sh_bits", F.conv("simhash", 2, 10).cast("long"))
         .persist()
     )
@@ -469,10 +457,10 @@ def simhash_pairs(
         for b in range(bands)
     ]
     ex = sh.select(
-        F.col(id_col), F.col("sh_bits"), F.explode(F.array(*band_entries)).alias("bb")
-    ).select(id_col, "sh_bits", "bb.band", "bb.piece")
-    a = ex.select(F.col(id_col).alias("id_a"), F.col("sh_bits").alias("bits_a"), "band", "piece")
-    b_ = ex.select(F.col(id_col).alias("id_b"), F.col("sh_bits").alias("bits_b"), "band", "piece")
+        F.col("doc_id"), F.col("sh_bits"), F.explode(F.array(*band_entries)).alias("bb")
+    ).select("doc_id", "sh_bits", "bb.band", "bb.piece")
+    a = ex.select(F.col("doc_id").alias("id_a"), F.col("sh_bits").alias("bits_a"), "band", "piece")
+    b_ = ex.select(F.col("doc_id").alias("id_b"), F.col("sh_bits").alias("bits_b"), "band", "piece")
     # hamming BEFORE distinct: the filter is flat codegen per joined row and
     # kills >99% of candidates, so the dedup shuffle carries a few thousand
     # rows instead of millions
@@ -491,32 +479,27 @@ def simhash_pairs(
     return out
 
 
-def minhash_lsh_pairs_cross(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-    rows: int = 4,
-) -> DataFrame:
+def minhash_lsh_pairs_cross(new_df: DataFrame, corpus_df: DataFrame) -> DataFrame:
     """INCREMENTAL dedup: near-dup candidates between a NEW batch and the
     EXISTING corpus — the nightly-ingest form of MinHash-LSH.  Unlike the
     self-join (all pairs within one table), this only pays
     |new| × collisions: band the new batch, band the corpus, and
     equi-join across.  Output: (new_id, corpus_id) distinct candidates —
     feed to exact verification, then drop/keep the new docs."""
+    n = 3
+    k = MINHASH_K
+    bands = 4
+    rows = 4
     bb_new = band_buckets(
-        minhash_signatures(new_df, text_col, id_col, n, k), id_col, bands, rows
+        minhash_signatures(new_df, "text", "doc_id", n, k), "doc_id", bands, rows
     ).persist()
     bb_corpus = band_buckets(
-        minhash_signatures(corpus_df, text_col, id_col, n, k), id_col, bands, rows
+        minhash_signatures(corpus_df, "text", "doc_id", n, k), "doc_id", bands, rows
     ).persist()
     out = (
-        bb_new.select(F.col(id_col).alias("new_id"), "band", "bucket")
+        bb_new.select(F.col("doc_id").alias("new_id"), "band", "bucket")
         .join(
-            bb_corpus.select(F.col(id_col).alias("corpus_id"), "band", "bucket"),
+            bb_corpus.select(F.col("doc_id").alias("corpus_id"), "band", "bucket"),
             ["band", "bucket"],
         )
         .select("new_id", "corpus_id")
@@ -525,13 +508,15 @@ def minhash_lsh_pairs_cross(
     return out
 
 
-def ppjoin_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    t_num: int = 9,
-    t_den: int = 10,
-) -> DataFrame:
+#: ppjoin_pairs' Jaccard threshold as the rational (t_num, t_den); read at
+#: call time
+PPJOIN_THRESHOLD = (9, 10)
+#: widest vocabulary ppjoin_pairs verifies with one 64-bit token mask per
+#: doc; wider ones take the array_intersect path.  Read at call time
+PPJOIN_MASK_MAX_VOCAB = 64
+
+
+def ppjoin_pairs(df: DataFrame) -> DataFrame:
     """EXACT token-set Jaccard join via PREFIX FILTERING (the AllPairs/
     PPJoin family) — the third candidate-generation strategy next to
     posting-list (ngram_jaccard_pairs) and MinHash banding, and the only
@@ -541,7 +526,8 @@ def ppjoin_pairs(
     shares an indexed token.  Rare-token prefixes make candidate buckets
     tiny exactly where posting lists are huge.
 
-    Determinism discipline: the threshold is the RATIONAL t_num/t_den and
+    Determinism discipline: the threshold is the RATIONAL t_num/t_den
+    (``PPJOIN_THRESHOLD``) and
     every bound uses integer arithmetic — prefix length
     n − ⌈t·n⌉ + 1 = n − (t_num·n + t_den − 1) div t_den + 1, length filter
     t_den·n_b ≥ t_num·n_a (symmetric), positional bound
@@ -571,14 +557,15 @@ def ppjoin_pairs(
     way, so candidate generation and verify representation never change
     the result set.
     """
+    t_num, t_den = PPJOIN_THRESHOLD
     toks = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(text_col))).alias("tok")
+        F.col("doc_id"), F.explode(F.array_distinct(tokens("text"))).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_tf"))
-    w = Window.partitionBy(id_col).orderBy("_tf", "tok")
+    w = Window.partitionBy("doc_id").orderBy("_tf", "tok")
     ranked = (
         toks.join(freq, "tok")
-        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
         .withColumn("_r", F.row_number().over(w))
     )
     # prefix length: n - ceil(t*n) + 1, all-integer (DIV, no float path)
@@ -587,13 +574,13 @@ def ppjoin_pairs(
         <= F.col("_n")
         - F.expr(f"({t_num} * _n + {t_den - 1}) DIV {t_den}")
         + 1
-    ).select(id_col, "tok", "_n", F.col("_r").alias("_p"))
+    ).select("doc_id", "tok", "_n", F.col("_r").alias("_p"))
     a = prefix.select(
-        F.col(id_col).alias("id_a"), F.col("tok"),
+        F.col("doc_id").alias("id_a"), F.col("tok"),
         F.col("_n").alias("n_a"), F.col("_p").alias("p_a"),
     )
     b = prefix.select(
-        F.col(id_col).alias("id_b"), F.col("tok"),
+        F.col("doc_id").alias("id_b"), F.col("tok"),
         F.col("_n").alias("n_b"), F.col("_p").alias("p_b"),
     )
     # positional filter (the "PP" in PPJoin; exactness-preserving): a pair
@@ -639,7 +626,7 @@ def ppjoin_pairs(
     # the frequency aggregate the prefix order already needs), else the
     # generic string-array + array_intersect.
     n_vocab = freq.count()
-    if n_vocab <= 64:
+    if n_vocab <= PPJOIN_MASK_MAX_VOCAB:
         # token → bit as a LITERAL map: the vocabulary is metadata-sized
         # here by the gate itself (≤64 rows), so collecting it is the
         # same class of driver decision as the count above — and avoids
@@ -656,13 +643,13 @@ def ppjoin_pairs(
         )
         masks = (
             toks.withColumn("_b", bit_map[F.col("tok")])
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.expr("bit_or(_b)").alias("_m"))
         )
         inter = (
-            cand.join(masks.select(F.col(id_col).alias("id_a"),
+            cand.join(masks.select(F.col("doc_id").alias("id_a"),
                                    F.col("_m").alias("_ma")), "id_a")
-            .join(masks.select(F.col(id_col).alias("id_b"),
+            .join(masks.select(F.col("doc_id").alias("id_b"),
                                F.col("_m").alias("_mb")), "id_b")
             .select(
                 "id_a", "id_b",
@@ -674,12 +661,12 @@ def ppjoin_pairs(
         )
     else:
         tsets = df.select(
-            F.col(id_col), F.array_distinct(tokens(text_col)).alias("_tset")
+            F.col("doc_id"), F.array_distinct(tokens("text")).alias("_tset")
         )
         inter = (
-            cand.join(tsets.select(F.col(id_col).alias("id_a"),
+            cand.join(tsets.select(F.col("doc_id").alias("id_a"),
                                    F.col("_tset").alias("_ta")), "id_a")
-            .join(tsets.select(F.col(id_col).alias("id_b"),
+            .join(tsets.select(F.col("doc_id").alias("id_b"),
                                F.col("_tset").alias("_tb")), "id_b")
             .select(
                 "id_a", "id_b",

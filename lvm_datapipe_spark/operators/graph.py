@@ -162,8 +162,6 @@ def dedup_keep_representatives(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """The end-to-end dedup decision: keep exactly one row per near-dup
     cluster (the minimum id — deterministic) plus every row that has no
@@ -171,7 +169,7 @@ def dedup_keep_representatives(
     then one left join against the (small relative to the corpus)
     cluster table, where rows whose id is not a cluster member are kept
     by the null branch."""
-    cc = connected_components(pairs, src=src, dst=dst)
+    cc = connected_components(pairs, src="id_a", dst="id_b")
     return (
         df.join(cc.withColumnRenamed("id", id_col), id_col, "left")
         .filter(F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col(id_col)))
@@ -183,6 +181,9 @@ def dedup_keep_representatives(
 #: nodes (a per-round slice of the node set, almost always tiny); above
 #: it the frontier joins are shuffled.
 KCORE_BROADCAST_DOOMED_MAX = 2_000_000
+#: peel rounds before kcore gives up on the fixpoint (a path graph peels
+#: one layer per round)
+KCORE_MAX_ROUNDS = 30
 
 
 def kcore(
@@ -190,7 +191,6 @@ def kcore(
     src: str = "u",
     dst: str = "v",
     k: int = 3,
-    max_rounds: int = 30,
     stats: dict | None = None,
 ) -> DataFrame:
     """CONVERGED k-core peel (Seidman 1983): repeatedly delete nodes with
@@ -234,8 +234,7 @@ def kcore(
     broadcast gate, the carried-statistics bug) is SCALE_BENCH §18, §20
     and §20b.
 
-    ``max_rounds`` bounds pathological peel chains (a path graph peels
-    one layer per round).  If the bound trips BEFORE the fixpoint the
+    ``KCORE_MAX_ROUNDS`` bounds pathological peel chains.  If the bound trips BEFORE the fixpoint the
     result is NOT a true k-core (some survivors may still be peelable);
     the exit is never silent: ``stats['converged']`` is set False and a
     ``UserWarning`` is emitted.  The returned degrees are still exact
@@ -281,6 +280,7 @@ def kcore(
     )
     rounds = checks = 0
     converged = False
+    max_rounds = KCORE_MAX_ROUNDS
     for _ in range(max_rounds):
         checks += 1
         n_doomed = seen["n_doomed"]
@@ -318,7 +318,7 @@ def kcore(
         warnings.warn(
             f"kcore(k={k}) hit max_rounds={max_rounds} before the peel "
             "fixpoint — the result is NOT a converged k-core (raise "
-            "max_rounds); stats['converged'] is False",
+            "KCORE_MAX_ROUNDS); stats['converged'] is False",
             UserWarning,
             stacklevel=2,
         )
@@ -344,8 +344,6 @@ def pagerank(
     dst: str = "dst",
     weight: str | None = None,
     n_iter: int = 5,
-    damping: str = "0.85",
-    scale: int = 10**12,
 ) -> DataFrame:
     """Weighted PageRank in FIXED-POINT integer arithmetic — the second
     iterative graph operator next to :func:`connected_components` (power
@@ -385,9 +383,10 @@ def pagerank(
 
     Returns (node, rank_fp BIGINT, rank DOUBLE = rank_fp/scale).
     """
+    scale = 10**12
     from fractions import Fraction
 
-    fr = Fraction(damping)
+    fr = Fraction("0.85")
     num, den = fr.numerator, fr.denominator
     w_col = (
         F.col(weight).cast("long") if weight else F.lit(1).cast("long")
@@ -466,20 +465,22 @@ def pagerank(
     )
 
 
+#: connected_components finishes on the driver once the edge set is this
+#: small (200k edges ≈ 3 MB of longs collected); a negative value never
+#: finishes there (pure distributed loop)
+CC_DRIVER_FINISH_MAX_EDGES = 200_000
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    id_out: str = "id",
-    cluster_out: str = "cluster_id",
-    max_rounds: int = 40,
     stats: dict | None = None,
     assume_symmetric: bool = False,
-    driver_finish_max_edges: int | None = 200_000,
 ) -> DataFrame:
     """Cluster assignment for an undirected pair list: every node that
     appears in ``pairs`` is mapped to the minimum node id reachable from
-    it.  Returns ``(id_out, cluster_out)``, one row per distinct node.
+    it.  Returns ``(id, cluster_id)``, one row per distinct node.
     Nodes with no edges never appear in ``pairs`` and are their own
     singleton clusters by definition — left-join this result and
     ``coalesce(cluster_id, id)`` to label a full corpus.  A node whose
@@ -516,20 +517,18 @@ def connected_components(
     checkpoint are skipped entirely (duplicates would only cost, never
     corrupt — every downstream step is a min-aggregate or distinct).
 
-    ``driver_finish_max_edges`` is the SIZE-GATED driver finish:
+    ``CC_DRIVER_FINISH_MAX_EDGES`` is the SIZE-GATED driver finish:
     contraction shrinks the parent-edge set geometrically, so the late
     rounds run driver-synchronized keyed shuffles over a few thousand
     rows — pure per-round barrier cost at any cluster size.  When a
-    round's signature count drops to the gate (default 200k edges ≈ 3 MB
-    of longs collected), the remaining fixpoint is computed as one
-    union-find over the collected parent edges — bit-identical labels
+    round's signature count drops to the gate, the remaining fixpoint is
+    computed as one union-find over the collected parent edges — bit-identical labels
     (the parent set at every round spans the same components as the
     input, the contraction invariant the algorithm's correctness rests
     on).  The gate is also checked at ROUND 0: an input edge list already
     within the bound is union-found directly (its edge count is observed
     on the pair-list checkpoint, so the gate costs no job; at scale the
-    gate does not fire and the loop runs unchanged).  ``None`` disables
-    the gate (pure distributed loop).
+    gate does not fire and the loop runs unchanged).
     ``stats`` (a dict, optional) receives ``rounds`` and
     ``driver_finish``."""
     # one materialization of the raw pair list: BOTH branches below (the
@@ -548,20 +547,16 @@ def connected_components(
     selfs = p0.filter(F.col("u") == F.col("v")).select("u").distinct()
     e0 = p0.filter(F.col("u") != F.col("v"))
     rounds = 0
-    finished_on_driver = False
-    uf_edges = None
-    if driver_finish_max_edges is not None:
-        # ROUND-0 gate (r10 opt): when the RAW edge list is already
-        # within the driver-finish bound, every distributed round the
-        # loop would run is pure overhead — the same union-find that
-        # finishes the late rounds labels the input directly (it needs
-        # neither parent orientation nor deduplication, and the gate
-        # bounds the collect exactly as it does mid-loop).  The p0
-        # checkpoint's own job counted its non-self-loop edges, so the
-        # gate costs no job; at scale it simply does not fire.
-        if seen["n_edges"] <= driver_finish_max_edges:
-            finished_on_driver = True
-            uf_edges = e0
+    max_edges = CC_DRIVER_FINISH_MAX_EDGES
+    # ROUND-0 gate (r10 opt): when the RAW edge list is already within the
+    # driver-finish bound, every distributed round the loop would run is
+    # pure overhead — the same union-find that finishes the late rounds
+    # labels the input directly (it needs neither parent orientation nor
+    # deduplication, and the gate bounds the collect exactly as it does
+    # mid-loop).  The p0 checkpoint's own job counted its non-self-loop
+    # edges, so the gate costs no job; at scale it simply does not fire.
+    finished_on_driver = seen["n_edges"] <= max_edges
+    uf_edges = e0 if finished_on_driver else None
     if uf_edges is not None:
         edges = e0  # loop skipped; nothing else reads this
     elif assume_symmetric:
@@ -576,7 +571,7 @@ def connected_components(
         ).distinct().localCheckpoint()
 
     prev_sig = None
-    for _ in (range(max_rounds) if uf_edges is None else ()):
+    for _ in (range(40) if uf_edges is None else ()):
         # -- large-star: v > u re-points to min(N(u) + {u})
         mins = edges.groupBy("u").agg(
             F.least(F.min("v"), F.first("u")).alias("m")
@@ -610,10 +605,7 @@ def connected_components(
         sig = (seen["n_rows"], seen["h"])
         if sig == prev_sig:
             break
-        if (
-            driver_finish_max_edges is not None
-            and sig[0] <= driver_finish_max_edges
-        ):
+        if sig[0] <= max_edges:
             finished_on_driver = True
             uf_edges = par
             break
@@ -662,8 +654,8 @@ def connected_components(
             lab_rows,
             T.StructType(
                 [
-                    T.StructField(id_out, utype, False),
-                    T.StructField(cluster_out, utype, False),
+                    T.StructField("id", utype, False),
+                    T.StructField("cluster_id", utype, False),
                 ]
             ),
         )
@@ -681,12 +673,11 @@ def connected_components(
         labeled = (
             children.unionAll(roots)
             .groupBy("id")
-            .agg(F.min("label").alias(cluster_out))
-            .select(F.col("id").alias(id_out), cluster_out)
+            .agg(F.min("label").alias("cluster_id"))
         )
     singles = selfs.join(
-        labeled, selfs["u"] == labeled[id_out], "left_anti"
-    ).select(F.col("u").alias(id_out), F.col("u").alias(cluster_out))
+        labeled, selfs["u"] == labeled["id"], "left_anti"
+    ).select(F.col("u").alias("id"), F.col("u").alias("cluster_id"))
     return labeled.unionByName(singles)
 
 
@@ -711,8 +702,7 @@ def triangle_counts(
     Below the :func:`triangle_counts_driver_dense` gates the counts come
     from the driver bitset kernel (identical integers, one bounded
     collect instead of the wedge join — see its docstring); the wedge
-    engine below is the scale shape above the gates.  A 0 gate
-    (``SPARK_GRAFT_DENSE_TRI_MAX_NODES=0``) forces the wedge engine."""
+    engine below is the scale shape above the gates."""
     e = edges.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("bb")
     ).persist()
@@ -789,36 +779,10 @@ def triangle_counts(
 #: (2 int64 cols, ≤128 MB).  Both are driver-memory constants, not
 #: data-size tunables — above either gate the distributed engines
 #: (array_intersect adjacency / degree-oriented wedge join) carry the
-#: query, so the fallback is the scale plan, not an error path.
+#: query, so the fallback is the scale plan, not an error path.  The
+#: kernels read them at call time; a negative gate never fires.
 DENSE_TRIANGLE_MAX_NODES = 24_576
 DENSE_TRIANGLE_MAX_EDGES = 8_000_000
-
-
-def _dense_gates(
-    max_nodes: int | None, max_edges: int | None
-) -> tuple[int, int] | None:
-    """Resolve the dense driver kernels' (node, edge) gates: an explicit
-    argument wins, else ``SPARK_GRAFT_DENSE_TRI_MAX_NODES`` /
-    ``SPARK_GRAFT_DENSE_TRI_MAX_EDGES``, else the module constants.
-    Returns ``None`` when either gate is ≤ 0 (kernel disabled — the
-    caller runs its distributed engine)."""
-    import os
-
-    if max_nodes is None:
-        max_nodes = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_NODES", DENSE_TRIANGLE_MAX_NODES
-            )
-        )
-    if max_edges is None:
-        max_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_DENSE_TRI_MAX_EDGES", DENSE_TRIANGLE_MAX_EDGES
-            )
-        )
-    if max_nodes <= 0 or max_edges <= 0:
-        return None
-    return max_nodes, max_edges
 
 
 #: 16-bit popcount lookup table, built once per process (the 8-bit table
@@ -841,9 +805,6 @@ def triangle_counts_driver_dense(
     edges: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_nodes: int | None = None,
-    max_edges: int | None = None,
-    raw_count: int | None = None,
 ) -> list[tuple[int, int]] | None:
     """Per-node triangle counts for a METADATA-SIZED graph, computed on the
     driver with a packed-bitset adjacency and one vectorized AND+popcount
@@ -878,27 +839,11 @@ def triangle_counts_driver_dense(
     packed matrix in milliseconds and the edge list ships once (~7 MB at
     sf0.1).  The crossover the gates encode: the bit matrix is O(n^2/8)
     memory and the sweep O(m*n/64) work — driver-trivial ONLY below the
-    fixed bounds.
-
-    Gates default to the module constants and are env-overridable
-    (``SPARK_GRAFT_DENSE_TRI_MAX_NODES`` / ``_MAX_EDGES``) so a deploy with
-    a bigger/smaller driver can move the crossover without a code change —
-    and so tests can force the distributed fallback with a 0 gate.
-
-    ``raw_count`` lets a caller supply the edge-gate count when a CHEAPER
-    exact count exists than executing the edge stream (supplier_triangles
-    derives it from per-basket sizes, sum of k*(k-1)/2, one small aggregate
-    instead of materializing the 1.19M-row pair join twice)."""
+    fixed bounds (``DENSE_TRIANGLE_MAX_NODES`` / ``_MAX_EDGES``)."""
     import numpy as np
     import pandas as pd
 
-    gates = _dense_gates(max_nodes, max_edges)
-    if gates is None:
-        return None
-    max_nodes, max_edges = gates
-    if raw_count is None:
-        raw_count = edges.count()
-    if raw_count > max_edges:
+    if edges.count() > DENSE_TRIANGLE_MAX_EDGES:
         return None
     pdf = edges.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("b")
@@ -913,7 +858,7 @@ def triangle_counts_driver_dense(
     inv, nodes = pd.factorize(np.concatenate([a, b]))
     nodes = np.asarray(nodes)
     n = len(nodes)
-    if n > max_nodes:
+    if n > DENSE_TRIANGLE_MAX_NODES:
         return None
     ia = inv[: len(a)].astype(np.int64)
     ib = inv[len(a):].astype(np.int64)
@@ -964,8 +909,6 @@ def triangle_counts_driver_dense_from_baskets(
     baskets: DataFrame,
     order_col: str,
     item_col: str,
-    max_nodes: int | None = None,
-    max_edges: int | None = None,
 ) -> list[tuple[int, int]] | None:
     """Dense driver triangle counts straight from a BASKET table (each row
     one (order, item); items distinct within an order): the co-occurrence
@@ -975,16 +918,12 @@ def triangle_counts_driver_dense_from_baskets(
     and no pair-join job runs at all.  The edge gate is exact and cheap:
     one small aggregate computes sum k·(k−1)/2 (the pair join's output
     cardinality) plus the basket row count, and BOTH must clear
-    ``max_edges`` before anything is collected.  Returns the same
-    ``[(item, n_triangles), ...]`` contract as
+    ``DENSE_TRIANGLE_MAX_EDGES`` before anything is collected.  Returns the
+    same ``[(item, n_triangles), ...]`` contract as
     :func:`triangle_counts_driver_dense`, or ``None`` above a gate."""
-    gates = _dense_gates(max_nodes, max_edges)
-    if gates is None:
+    if not _basket_pair_gate(baskets, order_col):
         return None
-    max_nodes, max_edges = gates
-    if not _basket_pair_gate(baskets, order_col, max_edges):
-        return None
-    got = _baskets_to_dense_pairs(baskets, order_col, item_col, max_nodes)
+    got = _baskets_to_dense_pairs(baskets, order_col, item_col)
     if got is None:
         return None
     ia, ib, nodes = got
@@ -996,12 +935,12 @@ def triangle_counts_driver_dense_from_baskets(
     return list(zip(nodes[keep].tolist(), cnt[keep].tolist()))
 
 
-def _baskets_to_dense_pairs(baskets, order_col, item_col, max_nodes):
+def _baskets_to_dense_pairs(baskets, order_col, item_col):
     """Collect a basket table and generate its within-basket co-occurrence
     pairs on the driver: returns ``(ia, ib, nodes)`` with remapped endpoint
     codes (``0 <= ia, ib < len(nodes)``; each unordered pair once per
     basket containing it), or ``None`` when the node count exceeds
-    ``max_nodes``.  The EDGE gate must be enforced by the caller BEFORE
+    ``DENSE_TRIANGLE_MAX_NODES``.  The EDGE gate must be enforced by the caller BEFORE
     calling (this function collects).  Shared by the dense triangle and
     k-hop reachability driver kernels."""
     import numpy as np
@@ -1020,7 +959,7 @@ def _baskets_to_dense_pairs(baskets, order_col, item_col, max_nodes):
     inv, nodes = pd.factorize(pdf["i"].to_numpy())
     nodes = np.asarray(nodes)
     n = len(nodes)
-    if n > max_nodes:
+    if n > DENSE_TRIANGLE_MAX_NODES:
         return None
     # group items by basket (stable sort on the factorized order id keeps
     # this O(rows log rows) with a tiny constant), then emit every within-
@@ -1039,12 +978,10 @@ def _baskets_to_dense_pairs(baskets, order_col, item_col, max_nodes):
     return items[a_idx], items[b_idx], nodes
 
 
-def _basket_pair_gate(
-    baskets: DataFrame, order_col: str, max_edges: int
-) -> bool:
+def _basket_pair_gate(baskets: DataFrame, order_col: str) -> bool:
     """True iff the basket table's within-basket pair cardinality
     (sum k·(k−1)/2, exactly the co-occurrence join's output size) AND its
-    row count both clear ``max_edges`` — the bounded-collect precondition
+    row count both clear ``DENSE_TRIANGLE_MAX_EDGES`` — the bounded-collect precondition
     of the dense driver kernels, computed with ONE small aggregate."""
     gate = (
         baskets.groupBy(order_col)
@@ -1057,7 +994,7 @@ def _basket_pair_gate(
     )
     n_pairs = int(gate["pairs"] or 0)
     n_rows = int(gate["rows"] or 0)
-    return n_pairs <= max_edges and n_rows <= max_edges
+    return n_pairs <= DENSE_TRIANGLE_MAX_EDGES and n_rows <= DENSE_TRIANGLE_MAX_EDGES
 
 
 def khop_reachability_driver_dense_from_baskets(
@@ -1066,8 +1003,6 @@ def khop_reachability_driver_dense_from_baskets(
     item_col: str,
     n_seeds: int = 5,
     max_hops: int = 3,
-    max_nodes: int | None = None,
-    max_edges: int | None = None,
 ) -> list[tuple[int, int, int]] | None:
     """Bounded-depth BFS on a METADATA-SIZED co-occurrence graph, computed
     on the driver with the packed-bitset adjacency — the k-hop sibling of
@@ -1089,13 +1024,9 @@ def khop_reachability_driver_dense_from_baskets(
     table the triangle kernel already ships."""
     import numpy as np
 
-    gates = _dense_gates(max_nodes, max_edges)
-    if gates is None:
+    if not _basket_pair_gate(baskets, order_col):
         return None
-    max_nodes, max_edges = gates
-    if not _basket_pair_gate(baskets, order_col, max_edges):
-        return None
-    got = _baskets_to_dense_pairs(baskets, order_col, item_col, max_nodes)
+    got = _baskets_to_dense_pairs(baskets, order_col, item_col)
     if got is None:
         return None
     ia, ib, nodes = got

@@ -93,7 +93,6 @@ def _decode_frames_decord(
     data: bytes,
     indices: list[int],
     target_hw: tuple[int, int] | None = None,
-    decord_mod=None,
 ) -> list[bytes] | None:
     """Decord path — the reference's decoder family
     (``data_schema/macvid.py:165-188``): batched random access via
@@ -112,9 +111,7 @@ def _decode_frames_decord(
     must agree byte-for-byte with each other."""
     import io
 
-    decord = decord_mod
-    if decord is None:  # pragma: no cover — exercised via injected module
-        import decord  # noqa: F401 — optional dependency
+    import decord  # optional dependency
 
     vr = decord.VideoReader(io.BytesIO(data))
     batch = vr.get_batch(list(indices)).asnumpy()  # (n, H, W, 3) RGB
@@ -230,23 +227,21 @@ def sample_frames_udf(
 
 def with_sampled_frames(
     videos: DataFrame,
-    content_col: str = "content",
     policy: str = "fractions",
     stride: int = 10,
-    out_col: str = "frames",
     target_hw: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Adds ``out_col`` with sampled frame payloads.  With ``target_hw`` the
+    """Adds ``frames`` with sampled frame payloads.  With ``target_hw`` the
     frames are ``(h, w)``-shaped at decode and the ``height``/``width``
     columns (when present) are overwritten to match — but ONLY on rows whose
     decode succeeded: failed rows keep their original metadata so the
     columns never claim a shape for a payload that does not exist."""
     out = videos.withColumn(
-        out_col, sample_frames_udf(policy, stride, target_hw)(F.col(content_col))
+        "frames", sample_frames_udf(policy, stride, target_hw)(F.col("content"))
     )
     if target_hw is not None:
         th, tw = target_hw
-        decoded = F.col(out_col).isNotNull()
+        decoded = F.col("frames").isNotNull()
         if "height" in out.columns:
             out = out.withColumn(
                 "height",
@@ -454,21 +449,10 @@ SCORERS: dict[str, tuple[str, object]] = {
 }
 
 
-def apply_scorer(
-    df: DataFrame,
-    scorer: str,
-    frames_col: str = "frames",
-    height_col: str = "height",
-    width_col: str = "width",
-) -> DataFrame:
+def apply_scorer(df: DataFrame, scorer: str) -> DataFrame:
     """Run a registered scorer over a frames column; appends the scorer's
     output column (null where decode failed).  The UDF consumes a struct of
     (frames, height, width) so one Arrow transfer carries everything."""
     out_col, (kernel, ret_type) = SCORERS[scorer]
     udf = _scorer_udf(scorer, kernel, ret_type)
-    packed = F.struct(
-        F.col(frames_col).alias("frames"),
-        F.col(height_col).alias("height"),
-        F.col(width_col).alias("width"),
-    )
-    return df.withColumn(out_col, udf(packed))
+    return df.withColumn(out_col, udf(F.struct("frames", "height", "width")))

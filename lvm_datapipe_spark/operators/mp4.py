@@ -202,32 +202,24 @@ def have_ffprobe() -> bool:
     return shutil.which("ffprobe") is not None
 
 
-def ffprobe_probe(data: bytes, runner=None) -> dict | None:
+def ffprobe_probe(data: bytes) -> dict | None:
     """Real-cluster probe: shell out to ffprobe exactly like the reference
     (`scene_cut.py:28-34` parses `-show_streams -print_format json`).
 
-    ``runner`` is injectable for tests (called with the argv list, must
-    return the JSON stdout string); default uses subprocess on the real
-    binary and returns None when it is absent.
+    Returns None when the binary is absent.
     """
-    if runner is None:
-        if not have_ffprobe():
-            return None
-
-        def runner(argv):  # pragma: no cover — needs the real binary
-            return subprocess.run(
-                argv, capture_output=True, text=True, check=True
-            ).stdout
-
+    if not have_ffprobe():
+        return None
     with tempfile.NamedTemporaryFile(suffix=".mp4") as tmp:
         tmp.write(data)
         tmp.flush()
-        out = runner(
+        out = subprocess.run(
             [
                 "ffprobe", "-v", "error", "-select_streams", "v:0",
                 "-show_streams", "-print_format", "json", tmp.name,
-            ]
-        )
+            ],
+            capture_output=True, text=True, check=True,
+        ).stdout
     try:
         streams = json.loads(out).get("streams") or []
     except (ValueError, AttributeError):

@@ -38,14 +38,7 @@ from pyspark.sql import functions as F
 from lvm_datapipe_spark.operators.text import tokens
 
 
-def bm25_scores(
-    docs: DataFrame,
-    terms: Sequence[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, terms: Sequence[str]) -> DataFrame:
     """Per-document BM25 score for a fixed bag of query ``terms``.
 
     Returns ``(id_col, score)`` for every document matching at least one
@@ -60,6 +53,8 @@ def bm25_scores(
     terms more strongly than log-BM25 — that spec choice is the price of
     cross-engine bit determinism (documented, mirrored in the oracle).
     """
+    k1 = 1.2
+    b = 0.75
     if not terms:
         raise ValueError("bm25_scores needs at least one query term")
     if len(set(terms)) != len(terms):
@@ -69,16 +64,16 @@ def bm25_scores(
         # silently match nothing
         raise ValueError(f"query terms must be lowercase: {terms}")
     tok = docs.select(
-        id_col, F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
     )
-    dl = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
+    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     n = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("total_toks"),
     )
     tf = (
         tok.filter(F.col("token").isin(list(terms)))
-        .groupBy(id_col, "token")
+        .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     dft = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -91,13 +86,13 @@ def bm25_scores(
         tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
     )
     scored = (
-        tf.join(dl, id_col)
+        tf.join(dl, "doc_id")
         .join(F.broadcast(dft), "token")
         .crossJoin(F.broadcast(n))
-        .select(id_col, "token", s.alias("s"))
+        .select("doc_id", "token", s.alias("s"))
     )
     combined: Column = F.lit(0.0)
-    per_term = scored.groupBy(id_col).agg(
+    per_term = scored.groupBy("doc_id").agg(
         *[
             F.max(F.when(F.col("token") == t, F.col("s"))).alias(f"s_{i}")
             for i, t in enumerate(terms)
@@ -105,7 +100,7 @@ def bm25_scores(
     )
     for i in range(len(terms)):
         combined = combined + F.coalesce(F.col(f"s_{i}"), F.lit(0.0))
-    return per_term.select(id_col, combined.alias("score"))
+    return per_term.select("doc_id", combined.alias("score"))
 
 
 def ranked_topk(
@@ -113,7 +108,6 @@ def ranked_topk(
     score_col: str,
     id_col: str,
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Global top-``k`` by ``(score desc, id asc)`` with a 1-based rank.
 
@@ -124,18 +118,11 @@ def ranked_topk(
     top = scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
     w = Window.orderBy(F.desc(score_col), F.asc(id_col))
     return top.select(id_col, score_col).withColumn(
-        rank_col, F.row_number().over(w)
+        "rank", F.row_number().over(w)
     )
 
 
-def rrf_fuse(
-    left: DataFrame,
-    right: DataFrame,
-    id_col: str,
-    k0: int = 60,
-    rank_col: str = "rank",
-    out_col: str = "rrf",
-) -> DataFrame:
+def rrf_fuse(left: DataFrame, right: DataFrame, id_col: str) -> DataFrame:
     """Reciprocal-rank fusion of two ranked candidate lists.
 
     ``rrf = 1/(k0 + rank_left) + 1/(k0 + rank_right)`` with a missing
@@ -143,14 +130,15 @@ def rrf_fuse(
     inputs are ≤ candidate-list-sized by contract (see
     :func:`ranked_topk`), so the join is broadcast-trivial at any corpus
     scale."""
-    a = left.select(F.col(id_col).alias("_ida"), F.col(rank_col).alias("_ra"))
-    bdf = right.select(F.col(id_col).alias("_idb"), F.col(rank_col).alias("_rb"))
+    k0 = 60
+    a = left.select(F.col(id_col).alias("_ida"), F.col("rank").alias("_ra"))
+    bdf = right.select(F.col(id_col).alias("_idb"), F.col("rank").alias("_rb"))
     j = a.join(bdf, a["_ida"] == bdf["_idb"], "full_outer")
     contrib_a = F.lit(1.0) / (F.lit(k0) + F.col("_ra")).cast("double")
     contrib_b = F.lit(1.0) / (F.lit(k0) + F.col("_rb")).cast("double")
     return j.select(
         F.coalesce(F.col("_ida"), F.col("_idb")).alias(id_col),
         (F.coalesce(contrib_a, F.lit(0.0)) + F.coalesce(contrib_b, F.lit(0.0))).alias(
-            out_col
+            "rrf"
         ),
     )

@@ -43,7 +43,7 @@ def resume_anti_join(clips: DataFrame, done: DataFrame, key: str = "clip_id") ->
 
 
 def best_per_group(
-    df: DataFrame, partition_col: str, score_col: str, tiebreak_col: str, descending: bool = True
+    df: DataFrame, partition_col: str, score_col: str, tiebreak_col: str
 ) -> DataFrame:
     """Top-1-per-group — the README's ``best_ocr_only.json`` materialization
     (select best clip per video by score, ``data_schema/macvid.py:114``; no
@@ -51,8 +51,9 @@ def best_per_group(
     deterministic tiebreak, then ``== 1``.  Spark plans this as a single
     shuffle + partial top-k (WindowGroupLimit pushes rank<=1 below the sort).
     """
-    score = F.col(score_col).desc() if descending else F.col(score_col).asc()
-    w = Window.partitionBy(partition_col).orderBy(score, F.col(tiebreak_col).asc())
+    w = Window.partitionBy(partition_col).orderBy(
+        F.col(score_col).desc(), F.col(tiebreak_col).asc()
+    )
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
@@ -79,12 +80,7 @@ def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    cmp_col: str = "fingerprint",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Incremental-curation diff of two corpus snapshots by content
     fingerprint: which rows were added, removed, modified, or unchanged.
     The primitive behind incremental re-processing — only 'added'/'modified'
@@ -94,8 +90,8 @@ def snapshot_diff(
     at 100 TB, snapshot tables bucketed on the id make even that
     Exchange-free); the status is a null/equality CASE on the fingerprints.
     """
-    o = old.select(F.col(id_col), F.col(cmp_col).alias("_old_fp"))
-    n = new.select(F.col(id_col), F.col(cmp_col).alias("_new_fp"))
+    o = old.select(F.col("doc_id"), F.col("fingerprint").alias("_old_fp"))
+    n = new.select(F.col("doc_id"), F.col("fingerprint").alias("_new_fp"))
     status = (
         F.when(F.col("_old_fp").isNull(), F.lit("added"))
         .when(F.col("_new_fp").isNull(), F.lit("removed"))
@@ -103,17 +99,12 @@ def snapshot_diff(
         .otherwise(F.lit("unchanged"))
     )
     return (
-        o.join(n, id_col, "full_outer")
-        .select(F.col(id_col), status.alias("status"))
+        o.join(n, "doc_id", "full_outer")
+        .select(F.col("doc_id"), status.alias("status"))
     )
 
 
-def contiguous_ids(
-    df: DataFrame,
-    order_cols: list[str],
-    id_col: str = "row_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def contiguous_ids(df: DataFrame, order_cols: list[str]) -> DataFrame:
     """Assign CONTIGUOUS global ids 0..n-1 in ``order_cols`` order without a
     SinglePartition window.
 
@@ -133,7 +124,7 @@ def contiguous_ids(
        count job and the caller's output action both read the same frozen
        partitions (blocks are dropped when the DataFrame is GC'd);
     2. count rows per partition — a metadata-sized action
-       (``num_partitions`` longs, same class as the IVF probe-cell
+       (one long per partition, same class as the IVF probe-cell
        collect);
     3. broadcast-join each partition's cumulative offset and add the
        within-partition position (an Arrow-batched per-partition counter —
@@ -147,9 +138,7 @@ def contiguous_ids(
     from pyspark.sql import types as T
 
     spark = df.sparkSession
-    n_part = num_partitions or max(
-        df.sparkSession.sparkContext.defaultParallelism, 2
-    )
+    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 2)
     with_pid = (
         df.repartitionByRange(n_part, *order_cols)
         .sortWithinPartitions(*order_cols)
@@ -185,14 +174,12 @@ def contiguous_ids(
     )
     return (
         local.join(F.broadcast(off_df), "_pid")
-        .withColumn(id_col, (F.col("_off") + F.col("_local")).cast("long"))
+        .withColumn("row_id", (F.col("_off") + F.col("_local")).cast("long"))
         .drop("_pid", "_off", "_local")
     )
 
 
-def pareto_skyline_2d(
-    df: DataFrame, x_col: str, y_col: str, n_buckets: int = 256
-) -> DataFrame:
+def pareto_skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Distributed 2-D SKYLINE (Pareto frontier, maximizing both columns):
     rows for which no other row is >= in both dimensions with a strict
     improvement in at least one.  Bucketed algorithm -- no pair product,
@@ -211,6 +198,7 @@ def pareto_skyline_2d(
     are all returned.  Nulls in either column are excluded (dominance is
     undefined for them).  The only float math is the bucket formula
     ((x-lo)/(hi-lo)*B, same association on any engine mirroring it)."""
+    n_buckets = 256
     cols = df.columns
     d = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
     rng = d.agg(F.min(x_col).alias("_lo"), F.max(x_col).alias("_hi"))

@@ -42,14 +42,7 @@ def hash_bucket(key: Column | str, n_buckets: int = N_BUCKETS, salt: str = "") -
     )
 
 
-def split_assign(
-    df: DataFrame,
-    key_col: str,
-    weights: dict[str, float],
-    salt: str = "split",
-    out_col: str = "split",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
+def split_assign(df: DataFrame, key_col: str, weights: dict[str, float]) -> DataFrame:
     """Assign every row to a named split with the given weights (must sum to
     ≤ 1; any remainder is an implicit last split of the final name).  Splits
     are disjoint, exhaustive, and a pure function of the key — the holdout
@@ -58,18 +51,18 @@ def split_assign(
     ``weights`` order matters (dict order = bucket-range order), mirroring
     how the SQL oracle writes its CASE arms.
     """
-    bucket = hash_bucket(key_col, n_buckets, salt)
+    bucket = hash_bucket(key_col, N_BUCKETS, "split")
     names = list(weights)
     cum = 0.0
     thresholds: list[tuple[str, int]] = []
     for name in names[:-1]:
         cum += weights[name]
-        thresholds.append((name, int(round(cum * n_buckets))))
+        thresholds.append((name, int(round(cum * N_BUCKETS))))
     # CASE chain in ascending-threshold order: first matching upper bound wins
     expr: Column = F.lit(names[-1])
     for name, upper in reversed(thresholds):
         expr = F.when(bucket < upper, F.lit(name)).otherwise(expr)
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_sample(
@@ -78,18 +71,16 @@ def stratified_sample(
     key_col: str,
     fractions: dict[str, float],
     default_fraction: float = 0.0,
-    salt: str = "strata",
-    n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. language rebalancing: keep
     10% of English, 100% of low-resource languages).  The keep decision
     hashes the row key, so each stratum's sample is itself stable; strata
     not listed get ``default_fraction``."""
-    bucket = hash_bucket(key_col, n_buckets, salt)
-    thresh: Column = F.lit(int(round(default_fraction * n_buckets)))
+    bucket = hash_bucket(key_col, N_BUCKETS, "strata")
+    thresh: Column = F.lit(int(round(default_fraction * N_BUCKETS)))
     for value, frac in fractions.items():
         thresh = F.when(
-            F.col(strata_col) == value, F.lit(int(round(frac * n_buckets)))
+            F.col(strata_col) == value, F.lit(int(round(frac * N_BUCKETS)))
         ).otherwise(thresh)
     return df.filter(bucket < thresh)
 
@@ -112,7 +103,6 @@ def sample_k_per_group(
     group_col: str,
     key_col: str,
     k: int,
-    salt: str = "topk",
 ) -> DataFrame:
     """Exactly k rows per group (fewer if the group is smaller), chosen by
     ranking on a content hash of the key — the deterministic replacement
@@ -123,7 +113,7 @@ def sample_k_per_group(
     Plan: one window shuffle keyed on the group; Spark plans the rank
     filter as WindowGroupLimit (per-partition top-k below the shuffle), so
     no group's full contents sort globally."""
-    w = Window.partitionBy(group_col).orderBy(*md5_order(key_col, salt))
+    w = Window.partitionBy(group_col).orderBy(*md5_order(key_col, "topk"))
     return (
         df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
@@ -131,13 +121,7 @@ def sample_k_per_group(
     )
 
 
-def weighted_sample(
-    df: DataFrame,
-    key_col: str,
-    weight_col: str,
-    salt: str = "wsample",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
+def weighted_sample(df: DataFrame, key_col: str, weight_col: str) -> DataFrame:
     """Deterministic importance sampling: keep a row iff its hash bucket
     falls below ``weight`` (a per-row keep probability in [0, 1]).  The
     keep decision is a pure function of (key, weight) — reproducible across
@@ -145,20 +129,11 @@ def weighted_sample(
     depends on partitioning.  This is the curation primitive for
     quality-weighted corpus resampling (upweight high-quality docs by
     giving them a larger keep probability)."""
-    b = hash_bucket(key_col, n_buckets, salt)
-    return df.filter(b < (F.col(weight_col) * n_buckets))
+    b = hash_bucket(key_col, N_BUCKETS, "wsample")
+    return df.filter(b < (F.col(weight_col) * N_BUCKETS))
 
 
-def dsir_doc_weights(
-    df: DataFrame,
-    target_pred: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    carry_cols: tuple[str, ...] = ("lang", "source"),
-    n_feature_buckets: int = 512,
-    salt: str = "dsir",
-    bucket_fn=None,
-) -> DataFrame:
+def dsir_doc_weights(df: DataFrame, target_pred: Column) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, arXiv:2302.03169): score
     every document by how much more likely its hashed n-gram features are
     under a TARGET corpus (``target_pred`` rows — the quality reference,
@@ -187,22 +162,21 @@ def dsir_doc_weights(
     are vocab-sized and must meet the stream on a keyed shuffle: hashing
     into fixed B is exactly what makes DSIR cheap at scale.
 
-    ``bucket_fn`` swaps the feature hash: the default md5 bucket is the
-    ORACLE-portable choice (DuckDB computes the identical bucket), but md5
-    is measured at ~2.5x wall time on the scoring pipeline
-    (tools/scale_bench.py section 4: 256 s vs 98 s at 1M docs); production
-    runs that do not need a SQL replay should pass
-    ``lambda c: F.abs(F.xxhash64(c)) % B`` — xxhash64 is JVM-side
-    effectively free, same plan shape, and the fastest scorer measured.
+    The md5 bucket is the ORACLE-portable choice (DuckDB computes the
+    identical bucket); it is measured at ~2.5x the wall time of an
+    xxhash64 bucket on the scoring pipeline (tools/scale_bench.py
+    section 4: 256 s vs 98 s at 1M docs).
 
-    Returns ``(id_col, *carry_cols, is_target, n_features, weight)`` for
+    Returns ``(doc_id, lang, source, is_target, n_features, weight)`` for
     every document with at least one token.
     """
+    n_feature_buckets = 512
+    carry_cols = ("lang", "source")
     from lvm_datapipe_spark.operators.text import tokens
 
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     d = df.select(
-        id_col, *carry_cols, target_pred.alias("is_target"), toks.alias("toks")
+        "doc_id", *carry_cols, target_pred.alias("is_target"), toks.alias("toks")
     ).filter(F.size("toks") >= 1)
     bigrams = F.zip_with(
         F.slice(F.col("toks"), F.lit(1), F.greatest(F.size("toks") - 1, F.lit(0))),
@@ -210,15 +184,13 @@ def dsir_doc_weights(
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
     feats = d.select(
-        id_col,
+        "doc_id",
         *carry_cols,
         "is_target",
         F.explode(F.concat(F.col("toks"), bigrams)).alias("feat"),
     ).withColumn(
         "fb",
-        bucket_fn(F.col("feat"))
-        if bucket_fn is not None
-        else hash_bucket(F.col("feat"), n_feature_buckets, salt),
+        hash_bucket(F.col("feat"), n_feature_buckets, "dsir"),
     )
     # ONE aggregate pass produces raw and target bucket counts together
     # (conditional sum), and the totals fall out of the B-row table itself —
@@ -247,7 +219,7 @@ def dsir_doc_weights(
     )
     return (
         feats.join(F.broadcast(wt), "fb")
-        .groupBy(id_col, *carry_cols, "is_target")
+        .groupBy("doc_id", *carry_cols, "is_target")
         .agg(
             F.count(F.lit(1)).alias("n_features"),
             F.sum("s").cast("bigint").alias("weight"),

@@ -37,10 +37,7 @@ def scd2_merge(
     current: DataFrame,
     updates: DataFrame,
     key: str = "doc_id",
-    fp: str = "fingerprint",
     batch_date: str = "2024-06-01",
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
 ) -> DataFrame:
     """Merge an update snapshot into an SCD2 table.
 
@@ -49,6 +46,9 @@ def scd2_merge(
     same four columns.  Validity bounds are ISO date STRINGS — engine- and
     timezone-portable, lexically ordered.
     """
+    fp = "fingerprint"
+    from_col = "valid_from"
+    to_col = "valid_to"
     open_rows = current.filter(F.col(to_col).isNull())
     hist = current.filter(F.col(to_col).isNotNull()).select(
         key, fp, from_col, to_col
@@ -108,8 +108,6 @@ def temporal_join(
     versions: DataFrame,
     key: str,
     fact_ts: str,
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
     how: str = "inner",
 ) -> DataFrame:
     """Join facts to the dimension VERSION valid at each fact's timestamp —
@@ -127,6 +125,8 @@ def temporal_join(
     ``how="left"`` keeps facts whose timestamp precedes the first version
     (null dimension columns) — the common backfill case.
     """
+    from_col = "valid_from"
+    to_col = "valid_to"
     if how not in ("inner", "left"):
         raise ValueError(f"how must be inner|left, got {how!r}")
     f, v = facts.alias("f"), versions.alias("v")

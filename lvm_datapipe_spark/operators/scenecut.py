@@ -127,12 +127,7 @@ def _detect_one(data: bytes, threshold: float) -> list[tuple] | None:
         return None
 
 
-def detect_scenes(
-    videos: DataFrame,
-    content_col: str = "content",
-    threshold: float = DEFAULT_THRESHOLD,
-    out_col: str = "scenes",
-) -> DataFrame:
+def detect_scenes(videos: DataFrame) -> DataFrame:
     """M1 — one row per video gains a ``scenes`` array (the flatMap/UDTF
     shape noted in SURVEY.md §2.9: array-returning pandas UDF + explode).
     Backend resolves per worker inside the UDF (:func:`_detect_one`)."""
@@ -141,10 +136,10 @@ def detect_scenes(
     def _detect(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for content in batches:
             yield pd.Series(
-                [_detect_one(data, threshold) for data in content], dtype=object
+                [_detect_one(data, DEFAULT_THRESHOLD) for data in content], dtype=object
             )
 
-    return videos.withColumn(out_col, _detect(F.col(content_col)))
+    return videos.withColumn("scenes", _detect(F.col("content")))
 
 
 CLIPS_TYPE = T.ArrayType(
@@ -182,12 +177,7 @@ def _cut_one(data: bytes, threshold: float) -> list[tuple] | None:
     return out
 
 
-def scene_cut(
-    videos: DataFrame,
-    path_col: str = "path",
-    content_col: str = "content",
-    threshold: float = DEFAULT_THRESHOLD,
-) -> DataFrame:
+def scene_cut(videos: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
     """EP1 end-to-end: videos(path, content) → one row per clip with the
     reference's clip metadata and the probed clip payload:
 
@@ -212,9 +202,9 @@ def scene_cut(
             yield pd.Series([_cut_one(data, threshold) for data in content], dtype=object)
 
     return videos.select(
-        file_stem(F.col(path_col)).alias("video_id"),
-        F.col(path_col).alias("video_path"),
-        F.posexplode(_cut(F.col(content_col))).alias("clip_index", "clip"),
+        file_stem(F.col("path")).alias("video_id"),
+        F.col("path").alias("video_path"),
+        F.posexplode(_cut(F.col("content"))).alias("clip_index", "clip"),
     ).select(
         "video_id",
         "video_path",

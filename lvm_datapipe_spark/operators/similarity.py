@@ -22,6 +22,16 @@ from pyspark.sql import functions as F
 
 #: embedding dimensionality of the driver's tables; flat expressions need it
 DEFAULT_DIM = 64
+#: the fixed IVF quantizer the IVF-family kernels and their DuckDB oracles
+#: share: cell count, cells probed per query, centroid seed
+IVF_CELLS = 16
+IVF_PROBES = 4
+IVF_SEED = 42
+#: the PQ codebook the PQ kernels and their DuckDB oracles share:
+#: subspaces, centroids per subspace, codebook seed
+PQ_SUBSPACES = 32
+PQ_KSUB = 8
+PQ_SEED = 7
 
 
 def as_double(vec: Column | str) -> Column:
@@ -86,14 +96,7 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def brute_force_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k: broadcast the query set against the corpus.
 
     Plan: one scan of ``emb``, per-row loop over broadcast queries (no
@@ -106,11 +109,11 @@ def brute_force_topk(
     # instead of 1).  Same fold, same association order ⇒ identical doubles.
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
+            F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
         ).withColumn("qn", l2_norm(F.col("qv")))
     )
     c = emb.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("nv")
+        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv")
     ).withColumn("nn", l2_norm(F.col("nv")))
     scored = (
         c.crossJoin(q)
@@ -132,7 +135,6 @@ def unit_vectors(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    out_col: str = "vn",
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """Project each vector to unit length ONCE (norm materialized as a row
@@ -151,15 +153,13 @@ def unit_vectors(
     )
     return withnorm.select(
         F.col(id_col),
-        F.expr("transform(v, x -> x / nrm)").alias(out_col),
+        F.expr("transform(v, x -> x / nrm)").alias("vn"),
     )
 
 
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold.  Exact (quadratic) form — since
@@ -174,9 +174,9 @@ def embedding_near_dup_pairs(
     the pairwise dot, recomputing the whole normalization per term (measured
     ~10× slowdown).  It stays cached until the caller's sink;
     :func:`lvm_datapipe_spark.session.query_scope` frees it."""
-    u = unit_vectors(emb, id_col, vec_col, dim=dim).persist()
-    a = u.select(F.col(id_col).alias("id_a"), F.col("vn").alias("va"))
-    b = u.select(F.col(id_col).alias("id_b"), F.col("vn").alias("vb"))
+    u = unit_vectors(emb, "vec_id", "embedding", dim=dim).persist()
+    a = u.select(F.col("vec_id").alias("id_a"), F.col("vn").alias("va"))
+    b = u.select(F.col("vec_id").alias("id_b"), F.col("vn").alias("vb"))
     out = (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -205,10 +205,16 @@ def lsh_table_planes(n_planes: int, n_tables: int, dim: int, seed: int) -> list:
     ]
 
 
-def auto_n_planes(n_rows: int, target_occupancy: int = 100, p_max: int = 16) -> int:
+#: auto_n_planes' sizing rule, shared with its DuckDB oracle: the bucket
+#: occupancy it aims at and the most planes per table
+LSH_TARGET_OCCUPANCY = 100
+LSH_MAX_PLANES = 16
+
+
+def auto_n_planes(n_rows: int) -> int:
     """The measured sizing rule (SCALE_BENCH.md §1): smallest ``p ≥ 4`` with
-    ``2^p * target_occupancy ≥ n`` (i.e. ceil(log2(n/target)), floored at the
-    fixture-tuned 4 and capped at ``p_max``).  Keeps per-table bucket
+    ``2^p * LSH_TARGET_OCCUPANCY ≥ n`` (i.e. ceil(log2(n/target)), floored
+    at the fixture-tuned 4 and capped at ``LSH_MAX_PLANES``).  Keeps per-table bucket
     occupancy ~constant so the candidate join stays near-linear instead of
     degrading toward n²/2^planes.
 
@@ -217,10 +223,10 @@ def auto_n_planes(n_rows: int, target_occupancy: int = 100, p_max: int = 16) -> 
     scan, which is bit-portable where float log2 near exact powers of two is
     not.  numpy's per-table plane draws are PREFIX-STABLE in ``p``
     (standard_normal fills C-order), so a ``p``-bit bucket is exactly the
-    first ``p`` bits of the ``p_max``-bit bucket — the oracle embeds
-    ``p_max`` planes as literals and takes a substring prefix."""
+    first ``p`` bits of the ``LSH_MAX_PLANES``-bit bucket — the oracle
+    embeds that many planes as literals and takes a substring prefix."""
     p = 4
-    while p < p_max and (1 << p) * target_occupancy < n_rows:
+    while p < LSH_MAX_PLANES and (1 << p) * LSH_TARGET_OCCUPANCY < n_rows:
         p += 1
     return p
 
@@ -245,7 +251,7 @@ def lsh_ann_candidates(
     emb: DataFrame,
     n_planes: int | None = 4,
     n_tables: int = 8,
-    dim: int = 64,
+    dim: int = DEFAULT_DIM,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -320,9 +326,6 @@ def lsh_ann_candidates(
 def lsh_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DEFAULT_DIM,
     **lsh_kwargs,
 ) -> DataFrame:
     """Scale-path near-dup: LSH candidates → exact cosine verify.  Recall is
@@ -354,15 +357,15 @@ def lsh_near_dup_pairs(
     # shuffling the full candidate set first.  cos_sim is a pure function
     # of the pair, so the result set is identical (measured 1.75× with the
     # int bucket keys at sf0.1, where 2k vectors make 1.5M collisions).
-    corpus, n_rows = _observed_corpus(emb, id_col, vec_col)
+    corpus, n_rows = _observed_corpus(emb, "vec_id", "embedding")
     if "n_planes" in lsh_kwargs and lsh_kwargs["n_planes"] is None:
         lsh_kwargs["n_planes"] = auto_n_planes(n_rows)
     cand = lsh_ann_candidates(
-        corpus, id_col=id_col, vec_col=vec_col, dim=dim, dedup=False, **lsh_kwargs
+        corpus, id_col="vec_id", vec_col="embedding", dim=DEFAULT_DIM, dedup=False, **lsh_kwargs
     )
-    u = unit_vectors(corpus, id_col, vec_col, dim=dim).localCheckpoint()
-    a = u.select(F.col(id_col).alias("id_a"), F.col("vn").alias("va"))
-    b = u.select(F.col(id_col).alias("id_b"), F.col("vn").alias("vb"))
+    u = unit_vectors(corpus, "vec_id", "embedding", dim=DEFAULT_DIM).localCheckpoint()
+    a = u.select(F.col("vec_id").alias("id_a"), F.col("vn").alias("va"))
+    b = u.select(F.col("vec_id").alias("id_b"), F.col("vn").alias("vb"))
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -402,8 +405,8 @@ def _ivf_cell_sims_sql(n_cells: int, dim: int, seed: int, vec: str, norm: str) -
 
 def ivf_fixed_assign(
     emb: DataFrame,
-    n_cells: int = 16,
-    dim: int = 64,
+    n_cells: int = IVF_CELLS,
+    dim: int = DEFAULT_DIM,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -460,12 +463,8 @@ def ivf_fixed_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
+    n_cells: int = IVF_CELLS,
     n_probe: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k over the FIXED quantizer: assign each corpus vector to the
     argmax-cosine centroid cell (first index on ties), probe the ``n_probe``
@@ -475,11 +474,13 @@ def ivf_fixed_topk(
     Scale shape: assignment is one scan (16 literal-dot folds in codegen);
     the probe join is keyed on the cell (at 100 TB, PARTITION the stored
     corpus by cell so probing is partition pruning, not a shuffle)."""
+    dim = DEFAULT_DIM
+    seed = IVF_SEED
     corpus = ivf_fixed_assign(
-        emb, n_cells, dim, seed, id_col, vec_col, out_id="neighbor_id",
+        emb, n_cells, dim, seed, "vec_id", "embedding", out_id="neighbor_id",
         keep_norm=True,
     )
-    qs = _ivf_probe_cells(queries, n_cells, dim, seed, id_col, vec_col)
+    qs = _ivf_probe_cells(queries, n_cells, dim, seed, "vec_id", "embedding")
     wp = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe = (
         qs.withColumn("_r", F.row_number().over(wp))
@@ -509,7 +510,7 @@ def ivf_fixed_topk(
 
 def ivf_index(
     emb: DataFrame,
-    n_cells: int = 16,
+    n_cells: int = IVF_CELLS,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -561,21 +562,17 @@ def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
+    n_cells: int = IVF_CELLS,
     n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """IVF approximate top-k: probe only the ``n_probe`` cells whose
     centroids are most cosine-similar to the query, then exact-rank inside
     them.  Work per query drops from |corpus| to ~|corpus|·n_probe/n_cells;
     recall is tunable via n_probe (n_probe = n_cells → exact).
     """
-    assigned, centroids = ivf_index(emb, n_cells, seed, id_col, vec_col)
+    assigned, centroids = ivf_index(emb, n_cells, IVF_SEED, "vec_id", "embedding")
 
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv"))
     if not centroids:  # empty corpus: no cells, no neighbors
         return q.select(
             "query_id",
@@ -603,25 +600,20 @@ def ivf_topk(
     # per-candidate HOF work (guide §1.2)
     assigned = assigned.withColumn("_vn", l2_norm(F.col("v")))
     probe = probe.withColumn("_qn", l2_norm(F.col("qv")))
-    cand = assigned.join(probe, "cell").filter(F.col(id_col) != F.col("query_id"))
+    cand = assigned.join(probe, "cell").filter(F.col("vec_id") != F.col("query_id"))
     scored = cand.withColumn(
         "cos_sim",
         dot(F.col("qv"), F.col("v")) / (F.col("_qn") * F.col("_vn")),
     )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+    wr = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
     )
 
 
-def quantize_embeddings(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_levels: int = 127,
-) -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization — the storage format a
     100 TB vector corpus actually persists (4× smaller than float32, 8× vs
     float64; recall loss negligible for near-dup/ANN workloads).
@@ -635,7 +627,8 @@ def quantize_embeddings(
     codes with scale 0 (guarded, no division).  One narrow projection — no
     shuffle, runs at scan speed.
     """
-    v = as_double(vec_col)
+    n_levels = 127
+    v = as_double("embedding")
     scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / float(n_levels)
     lv = float(n_levels)
     q = F.when(scale == 0, F.transform(v, lambda x: F.lit(0))).otherwise(
@@ -647,7 +640,7 @@ def quantize_embeddings(
         )
     )
     return emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         scale.alias("scale"),
         q.alias("q"),
     )
@@ -758,17 +751,7 @@ _PQ_ADC_DIST_SQL = (
 )
 
 
-def pq_adc_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 32,
-    ksub: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_adc_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: queries keep full precision, the
     corpus is ranked through its PQ codes — approx ||q − x||² = Σ_j
     lut_j[code_j] with lut_j the query's per-centroid distance table for
@@ -780,18 +763,19 @@ def pq_adc_topk(
     BROADCASTS, so the per-pair distance is m flat element_at lookups in
     whole-stage codegen; one query-keyed window takes the top-k.  Exclude
     self-matches; ties break to the lower neighbor id."""
-    dsub = dim // m
-    cbs = pq_codebooks(m, ksub, dsub, seed)
+    m = PQ_SUBSPACES
+    dsub = DEFAULT_DIM // m
+    cbs = pq_codebooks(m, PQ_KSUB, dsub, PQ_SEED)
     # nested single-expression codes/LUTs (see _pq_codes_sql): element-
     # identical to an m-column codes/lut_j form, ~m-fold less
     # analyzer/codegen surface
     codes = emb.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("nv")
+        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv")
     ).select(
         "neighbor_id", F.expr(_pq_codes_sql("nv", cbs, m, dsub)).alias("codes")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
     ).select(
         "query_id", F.expr(_pq_luts_sql("qv", cbs, m, dsub)).alias("luts")
     )
@@ -808,32 +792,22 @@ def pq_adc_topk(
     )
 
 
-def ivfpq_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    m: int = 32,
-    ksub: int = 8,
-    dim: int = 64,
-    ivf_seed: int = 42,
-    pq_seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """IVF-PQ — the FAISS-standard production ANN layout, composed from
     the two fixed quantizers already in this module: the IVF coarse cells
     prune WHICH corpus slices each query touches (partition pruning at
     the store level, a keyed equi-join here), and PQ codes compress WHAT
     is read per candidate (m bytes instead of the full vector).  Corpus
     side: one scan computes cell + codes (no shuffle); query side probes
-    its n_probe best cells and broadcasts per-subvector LUTs; candidates
+    its ``IVF_PROBES`` best cells and broadcasts per-subvector LUTs; candidates
     rank by ADC distance inside probed cells only.  Both quantizers are
     seeded literals, so the full pipeline stays SQL-replayable."""
-    dsub = dim // m
-    cbs = pq_codebooks(m, ksub, dsub, pq_seed)
-    corpus = ivf_fixed_assign(emb, n_cells, dim, ivf_seed, id_col, vec_col)
+    m = PQ_SUBSPACES
+    dsub = DEFAULT_DIM // m
+    cbs = pq_codebooks(m, PQ_KSUB, dsub, PQ_SEED)
+    corpus = ivf_fixed_assign(
+        emb, IVF_CELLS, DEFAULT_DIM, IVF_SEED, "vec_id", "embedding"
+    )
     # nested single-expression codes/LUTs (see _pq_codes_sql): element-
     # identical to the m-column form, ~m-fold less analyzer/codegen
     # surface — measured 7.7 → 3.1 s on the declared query at sf0.1
@@ -842,11 +816,13 @@ def ivfpq_topk(
         "cell",
         F.expr(_pq_codes_sql("nv", cbs, m, dsub)).alias("codes"),
     )
-    qs = _ivf_probe_cells(queries, n_cells, dim, ivf_seed, id_col, vec_col)
+    qs = _ivf_probe_cells(
+        queries, IVF_CELLS, DEFAULT_DIM, IVF_SEED, "vec_id", "embedding"
+    )
     wp = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe = (
         qs.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= n_probe)
+        .filter(F.col("_r") <= IVF_PROBES)
         .select("query_id", "qv", "cell")
     )
     probe = probe.select(
@@ -868,11 +844,8 @@ def ivfpq_topk(
 def semdedup_keep(
     emb: DataFrame,
     eps: float = 0.4,
-    n_cells: int = 16,
+    n_cells: int = IVF_CELLS,
     dim: int = DEFAULT_DIM,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic deduplication
     by clustering embeddings, then dropping within-cluster items whose cosine
@@ -900,9 +873,9 @@ def semdedup_keep(
     Returns ``(vec_id, cell, centroid_sim, keep)`` for every input vector.
     """
     a = (
-        emb.select(F.col(id_col).alias("vec_id"), as_double(vec_col).alias("v"))
+        emb.select("vec_id", as_double("embedding").alias("v"))
         .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, seed, "v", "nrm")))
+        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
         )
@@ -946,11 +919,8 @@ def semdedup_keep(
 
 def icl_chain_order(
     emb: DataFrame,
-    n_cells: int = 16,
+    n_cells: int = IVF_CELLS,
     dim: int = DEFAULT_DIM,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """In-Context Pretraining document ordering (Shi et al. 2023,
     arXiv:2310.10638): place semantically related documents next to each
@@ -977,12 +947,12 @@ def icl_chain_order(
     import pandas as pd
 
     a = (
-        emb.select(F.col(id_col).alias("vec_id"), as_double(vec_col).alias("v"))
+        emb.select("vec_id", as_double("embedding").alias("v"))
         # a NULL vector cannot join a similarity chain — drop it, matching
         # the ivf_index null-payload rule
         .filter(F.col("v").isNotNull())
         .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, seed, "v", "nrm")))
+        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
         )
@@ -1042,11 +1012,8 @@ def icl_chain_order(
 def kcenter_coreset(
     emb: DataFrame,
     k: int = 8,
-    n_cells: int = 16,
+    n_cells: int = IVF_CELLS,
     dim: int = DEFAULT_DIM,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Greedy k-center CORESET selection (Sener & Savarese 2018,
     arXiv:1708.00489 — the active-learning/data-pruning selection rule):
@@ -1069,10 +1036,10 @@ def kcenter_coreset(
     import pandas as pd
 
     a = (
-        emb.select(F.col(id_col).alias("vec_id"), as_double(vec_col).alias("v"))
+        emb.select("vec_id", as_double("embedding").alias("v"))
         .filter(F.col("v").isNotNull())
         .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, seed, "v", "nrm")))
+        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
         )
@@ -1128,15 +1095,7 @@ MMR_LAMBDA = 0.7
 MMR_ONE_MINUS_LAMBDA = 1.0 - MMR_LAMBDA
 
 
-def mmr_select(
-    emb: DataFrame,
-    k: int = 8,
-    n_cells: int = 16,
-    dim: int = DEFAULT_DIM,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def mmr_select(emb: DataFrame) -> DataFrame:
     """MAXIMAL MARGINAL RELEVANCE selection (Carbonell & Goldstein 1998,
     SIGIR) — the relevance-vs-redundancy greedy rule used to pick diverse
     in-context examples / retrieval results: repeatedly add the candidate
@@ -1157,10 +1116,10 @@ def mmr_select(
     import pandas as pd
 
     a = (
-        emb.select(F.col(id_col).alias("vec_id"), as_double(vec_col).alias("v"))
+        emb.select("vec_id", as_double("embedding").alias("v"))
         .filter(F.col("v").isNotNull())
-        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, seed, "v", "nrm")))
+        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), DEFAULT_DIM)))
+        .withColumn("sims", F.expr(_ivf_cell_sims_sql(IVF_CELLS, DEFAULT_DIM, IVF_SEED, "v", "nrm")))
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
         )
@@ -1188,7 +1147,7 @@ def mmr_select(
         maxsim = {
             i: sim(by_id[seed_id], by_id[i]) for i in ids if i != seed_id
         }
-        while maxsim and len(chosen) < k:
+        while maxsim and len(chosen) < 8:
             best_id, best_s = None, None
             for cand in sorted(maxsim):
                 s = MMR_LAMBDA * rel[cand] - MMR_ONE_MINUS_LAMBDA * maxsim[cand]

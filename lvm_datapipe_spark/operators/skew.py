@@ -14,12 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_aggregate(
-    df: DataFrame,
-    key: str,
-    aggs: list,
-    salt_buckets: int = 16,
-) -> DataFrame:
+def salted_aggregate(df: DataFrame, key: str, aggs: list) -> DataFrame:
     """Two-phase aggregation for hot group keys: aggregate on (key, salt)
     first (spreads the hot key across reducers), then merge per key.  Only
     works for algebraic aggregates expressed as (partial, merge) pairs; pass
@@ -30,7 +25,7 @@ def salted_aggregate(
     this is for the residual case where even post-combine one key dominates
     (billions of rows per key across thousands of map tasks).
     """
-    salted = df.withColumn("_salt", (F.rand(seed=42) * salt_buckets).cast("int"))
+    salted = df.withColumn("_salt", (F.rand(seed=42) * 16).cast("int"))
     partial = salted.groupBy(key, "_salt").agg(
         *[expr.alias(f"_p_{name}") for expr, _merge, name in aggs]
     )

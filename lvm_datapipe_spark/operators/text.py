@@ -46,9 +46,7 @@ def normalize_text(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(t, "[ \t\n\r\f]+", " "))
 
 
-def token_frequencies(
-    df: DataFrame, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
+def token_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus token frequency table ``(token, n)`` — the exact heavy-hitters
     base (vocabulary building, stopword discovery, Zipf diagnostics).
 
@@ -58,7 +56,7 @@ def token_frequencies(
     map-side partial aggregation absorbs — each map task emits one partial
     row per distinct token, so the reduce side sees at most
     #partitions rows for "the"."""
-    toks = tokens(F.lower(_c(text_col)) if lowercase else _c(text_col))
+    toks = tokens(F.lower(_c(text_col)))
     return (
         df.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -66,11 +64,11 @@ def token_frequencies(
     )
 
 
-def vocab_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def vocab_stats(df: DataFrame) -> DataFrame:
     """One-row corpus vocabulary summary: total tokens, distinct tokens
     (vocabulary size), and type-token ratio.  Composed from the frequency
     table so the shuffle is shared with heavy-hitter queries."""
-    freq = token_frequencies(df, text_col)
+    freq = token_frequencies(df, "text")
     return freq.agg(
         F.sum("n").cast("long").alias("total_tokens"),
         F.count(F.lit(1)).cast("long").alias("vocab_size"),
@@ -115,9 +113,7 @@ def word_ngrams_all(toks: Column, n: int = 2) -> Column:
     return F.when(count >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
-def repetition_features(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 2
-) -> DataFrame:
+def repetition_features(df: DataFrame) -> DataFrame:
     """Repetition-based quality signals per document — the filters a
     web-scale corpus clean applies before training (boilerplate, SEO spam,
     and template pages are dominated by repeated words/n-grams):
@@ -135,25 +131,25 @@ def repetition_features(
     any corpus size (no global hot key: a doc's grams land together).
     Docs shorter than 2 tokens are dropped (no n-grams to measure).
     """
-    base = df.select(F.col(id_col), tokens(text_col).alias("toks")).filter(
+    base = df.select(F.col("doc_id"), tokens("text").alias("toks")).filter(
         F.size("toks") >= 2
     )
     sizes = base.select(
-        id_col,
+        "doc_id",
         F.size("toks").alias("words_total"),
         F.size(F.array_distinct("toks")).alias("words_distinct"),
     )
     grams = base.select(
-        F.col(id_col), F.explode(word_ngrams_all(F.col("toks"), n)).alias("gram")
+        F.col("doc_id"), F.explode(word_ngrams_all(F.col("toks"), 2)).alias("gram")
     )
-    gc = grams.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
-    agg = gc.groupBy(id_col).agg(
+    gc = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
+    agg = gc.groupBy("doc_id").agg(
         F.max("c").alias("top_c"),
         F.sum("c").alias("total_g"),
         F.sum(F.when(F.col("c") >= 2, F.col("c")).otherwise(F.lit(0))).alias("dup_g"),
     )
-    return sizes.join(agg, id_col).select(
-        id_col,
+    return sizes.join(agg, "doc_id").select(
+        "doc_id",
         "words_total",
         (F.lit(1.0) - F.col("words_distinct") / F.col("words_total")).alias(
             "word_rep_ratio"
@@ -218,19 +214,19 @@ def _token_lang_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return toks.groupBy(id_col).agg(*aggs)
 
 
-def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-document quality features + a composite score in [0, 1]:
     ``min(1, n_tokens/100) * (1 - punct_ratio) * (1 - stopword_ratio/2)``.
     Mirrors the reference's filter-hook idea (F8, ``macvid.py:90`` "add
     whatever condition for filtering") with concrete, deterministic metrics.
     """
-    counts = _token_lang_counts(df, text_col, id_col)
+    counts = _token_lang_counts(df, "text", "doc_id")
     base = df.select(
-        F.col(id_col),
-        F.length(F.col(text_col)).alias("n_chars_actual"),
-        punct_count(text_col).alias("n_punct"),
+        F.col("doc_id"),
+        F.length(F.col("text")).alias("n_chars_actual"),
+        punct_count("text").alias("n_punct"),
     )
-    j = base.join(counts, id_col)
+    j = base.join(counts, "doc_id")
     n_tok = F.col("n_tokens").cast("int")
     n_char = F.col("n_chars_actual")
     n_punct = F.col("n_punct")
@@ -243,7 +239,7 @@ def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         * (F.lit(1.0) - stop_ratio / F.lit(2.0))
     )
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_char.alias("n_chars_actual"),
         n_tok.alias("n_tokens"),
         n_punct.alias("n_punct"),
@@ -253,33 +249,28 @@ def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Stopword-vote language ID: count hits per language's marker set, pick
     the argmax with a fixed priority-order tie-break (LANG_PRIORITY); 'und'
     when no set scores > 0."""
-    counts = _token_lang_counts(df, text_col, id_col)
+    counts = _token_lang_counts(df, "text", "doc_id")
     hit_cols = {lang: F.col(f"hits_{lang}").cast("int") for lang in LANG_STOPWORDS}
     best = F.greatest(*hit_cols.values())
     pred = F.lit("und")
     for lang in reversed(LANG_PRIORITY):
         pred = F.when((best > 0) & (hit_cols[lang] == best), F.lit(lang)).otherwise(pred)
     return counts.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[hit_cols[lang].alias(f"hits_{lang}") for lang in LANG_PRIORITY],
         pred.alias("predicted_lang"),
     )
 
 
-def fingerprint_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
+def fingerprint_docs(df: DataFrame) -> DataFrame:
+    return df.select(F.col("doc_id"), fingerprint("text").alias("fingerprint"))
 
 
-def bigram_lm_surprisal(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    carry_cols: tuple[str, ...] = ("lang",),
-) -> DataFrame:
+def bigram_lm_surprisal(df: DataFrame) -> DataFrame:
     """Per-document corpus-LM surprisal — the scoring core of a CCNet-style
     perplexity filter (Wenzek et al. 2019, arXiv:1911.00359): train an add-one
     bigram LM on the corpus itself, score each document by its mean per-token
@@ -317,15 +308,16 @@ def bigram_lm_surprisal(
     ``(id_col, *carry_cols, n_bigrams, surprisal_sum)`` — all integers, so
     every downstream comparison is exact on any engine.
     """
-    toks = tokens(F.lower(_c(text_col)))
-    d = df.select(id_col, *carry_cols, toks.alias("toks")).filter(F.size("toks") >= 2)
+    carry_cols = ("lang",)
+    toks = tokens(F.lower(_c("text")))
+    d = df.select("doc_id", *carry_cols, toks.alias("toks")).filter(F.size("toks") >= 2)
     pairs = F.zip_with(
         F.slice(F.col("toks"), F.lit(1), F.size("toks") - 1),
         F.slice(F.col("toks"), F.lit(2), F.size("toks") - 1),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    bg = d.select(id_col, *carry_cols, F.explode(pairs).alias("p")).select(
-        id_col, *carry_cols, "p.w1", "p.w2"
+    bg = d.select("doc_id", *carry_cols, F.explode(pairs).alias("p")).select(
+        "doc_id", *carry_cols, "p.w1", "p.w2"
     )
     # (deliberately NOT persisted: measured neutral at sf0.1 — the count
     # aggregates are map-side cheap and the cost lives in the two keyed
@@ -345,7 +337,7 @@ def bigram_lm_surprisal(
         .crossJoin(F.broadcast(vocab))
         .withColumn("surprisal", surprisal)
     )
-    return s.groupBy(id_col, *carry_cols).agg(
+    return s.groupBy("doc_id", *carry_cols).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("surprisal").cast("bigint").alias("surprisal_sum"),
     )
@@ -359,9 +351,7 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 GOPHER_BULLETS = ["- ", "* ", "• "]
 
 
-def gopher_quality_flags(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """Gopher's document-quality rule battery (Rae et al. 2021,
     arXiv:2112.11446, Appendix A1.1 — the filter set RefinedWeb/Dolma/
     FineWeb inherit), one boolean per rule plus the conjunction:
@@ -382,7 +372,7 @@ def gopher_quality_flags(
     costs a map pass, nothing else.  Rules are flags, not a silent filter:
     downstream picks ``keep`` or re-weights individual rules.
     """
-    t = _c(text_col)
+    t = _c("text")
     toks = tokens(F.lower(t))
     lines = F.split(t, "\n")
     n_words = F.size(toks)
@@ -417,20 +407,14 @@ def gopher_quality_flags(
     }
     keep = reduce(lambda a, b: a & b, flags.values())
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.alias("n_words"),
         *[c.alias(n) for n, c in flags.items()],
         keep.alias("keep"),
     )
 
 
-def skipgram_pairs(
-    docs: DataFrame,
-    window: int = 2,
-    min_count: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def skipgram_pairs(docs: DataFrame, window: int = 2, min_count: int = 5) -> DataFrame:
     """Skip-gram (center, context) co-occurrence counts — the word2vec
     training-pair shaping stage, and the raw counts behind token PMI.
 
@@ -449,7 +433,7 @@ def skipgram_pairs(
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     offsets = [d for d in range(-window, window + 1) if d != 0]
-    t = docs.select(id_col, tokens(F.lower(_c(text_col))).alias("toks"))
+    t = docs.select("doc_id", tokens(F.lower(_c("text"))).alias("toks"))
     # two generators are not allowed in one Project; chain two selects
     ex = t.select(
         "toks", F.explode(F.sequence(F.lit(1), F.size("toks"))).alias("i")
@@ -468,13 +452,7 @@ def skipgram_pairs(
     )
 
 
-def hashed_features(
-    docs: DataFrame,
-    dim: int = 64,
-    salt: str = "feat",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hashed_features(docs: DataFrame, dim: int = 64, salt: str = "feat") -> DataFrame:
     """Feature hashing (the hashing trick, Weinberger et al. 2009): each
     token maps to a bucket in [0, dim) with a ±1 sign, per-doc bucket
     weights are the signed counts, L2-normalized — the fastText-style
@@ -489,12 +467,12 @@ def hashed_features(
     Scale shape: one md5 per token (scan), one (doc, bucket) signed-count
     shuffle (key fan-in bounded by dim per doc), one doc-keyed norm
     aggregate joined back; no vocabulary build, no broadcast state."""
-    w = hashed_counts(docs, dim, salt, id_col, text_col)
-    norm = w.groupBy(id_col).agg(
+    w = hashed_counts(docs, dim, salt, "doc_id", "text")
+    norm = w.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).cast("long").alias("norm2")
     )
-    return w.join(norm, id_col).select(
-        id_col,
+    return w.join(norm, "doc_id").select(
+        "doc_id",
         "bucket",
         (F.col("w").cast("double") / F.sqrt(F.col("norm2").cast("double"))).alias(
             "weight"

@@ -18,13 +18,7 @@ from pyspark.sql import functions as F
 from lvm_datapipe_spark.operators.aggregates import decimal_avg
 
 
-def user_value_profiles(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    length: int = 16,
-) -> DataFrame:
+def user_value_profiles(events: DataFrame, length: int = 16) -> DataFrame:
     """(key, bucket, profile value) — each entity's trajectory resampled to
     ``length`` equi-count buckets in event-time order.
 
@@ -35,12 +29,12 @@ def user_value_profiles(
     aggregation (decimal per-bucket means).  Emitted LONG — per-entity
     row layout, no arrays — so the result joins/aggregates without any
     whole-vector shuffle (the embedding-centroid convention)."""
-    w = Window.partitionBy(key_col).orderBy(ts_col, value_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "value")
     pos = (F.row_number().over(w) - 1).cast("long")
-    n = F.count(F.lit(1)).over(Window.partitionBy(key_col))
+    n = F.count(F.lit(1)).over(Window.partitionBy("user_id"))
     positioned = events.select(
-        F.col(key_col),
-        F.col(value_col),
+        F.col("user_id"),
+        F.col("value"),
         (pos * length).alias("_pl"),
         n.alias("_n"),
     )
@@ -50,6 +44,6 @@ def user_value_profiles(
     # honest at any count
     return (
         positioned.withColumn("bucket", F.expr("_pl DIV _n"))
-        .groupBy(key_col, "bucket")
-        .agg(decimal_avg(value_col).alias("profile_value"))
+        .groupBy("user_id", "bucket")
+        .agg(decimal_avg("value").alias("profile_value"))
     )

@@ -32,7 +32,6 @@ def write_bucketed(
     table: str,
     bucket_col: str | list[str],
     n_buckets: int = 32,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
     """Persist as a bucketed (and bucket-sorted) table.  n_buckets should
@@ -46,9 +45,7 @@ def write_bucketed(
     :func:`read_bucketed`).  A write that sees no rows leaves no data
     file."""
     cols = [bucket_col] if isinstance(bucket_col, str) else list(bucket_col)
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *cols)
-    if sort:
-        writer = writer.sortBy(*cols)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, *cols).sortBy(*cols)
     if path is None:
         writer.saveAsTable(table)
         return

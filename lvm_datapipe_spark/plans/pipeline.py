@@ -45,14 +45,9 @@ from lvm_datapipe_spark.plans.bucketing import read_bucketed, write_bucketed
 CLIP_SPEC = "_clips.json"
 
 
-def write_snapshot(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Canonical sink: Parquet snapshot, idempotent overwrite.  At scale,
-    partition by shard/date so incremental jobs overwrite only their own
-    partitions (dynamic partition overwrite)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_snapshot(df: DataFrame, path: str) -> None:
+    """Canonical sink: Parquet snapshot, idempotent overwrite."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
@@ -115,7 +110,6 @@ def run_stage(
     snapshot: DataFrame,
     scorer: Callable[[DataFrame], DataFrame],
     score_col: str,
-    key: str = "clip_id",
 ) -> DataFrame:
     """One enrichment stage with resume semantics.
 

@@ -76,29 +76,24 @@ def query_scope(spark: SparkSession) -> Iterator[None]:
 
 def get_spark(
     app_name: str = "lvm-datapipe-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine defaults.
+    """Build (or reuse) a local SparkSession with the engine defaults.
 
-    On a cluster, pass ``master=None`` and let spark-submit decide; locally
-    defaults to ``local[$SPARK_GRAFT_CPUS]``.
+    The master is ``local[$SPARK_GRAFT_CPUS]`` (every core when unset) and
+    ``spark.sql.shuffle.partitions`` is that core count, at least 8.  An
+    ``extra_conf`` entry overrides the default of the same key.
     """
-    if master is None:
-        master = f"local[{DEFAULT_LOCAL_CORES}]"
-    if shuffle_partitions is None:
-        try:
-            n = int(DEFAULT_LOCAL_CORES)
-        except ValueError:
-            n = os.cpu_count() or 8
-        shuffle_partitions = max(8, n)
+    try:
+        n = int(DEFAULT_LOCAL_CORES)
+    except ValueError:
+        n = os.cpu_count() or 8
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{DEFAULT_LOCAL_CORES}]")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(8, n)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

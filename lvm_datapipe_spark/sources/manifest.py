@@ -70,21 +70,21 @@ def build_manifest(root: str) -> dict:
     }
 
 
-def write_manifest(root: str, out: str | None = None) -> dict:
+def write_manifest(root: str) -> dict:
     """Build and persist the manifest as ``_MANIFEST.json`` under the
     dataset root (underscore prefix → invisible to Spark readers)."""
     m = build_manifest(root)
-    with open(out or os.path.join(root, "_MANIFEST.json"), "w") as f:
+    with open(os.path.join(root, "_MANIFEST.json"), "w") as f:
         json.dump(m, f, indent=1, sort_keys=True)
     return m
 
 
-def verify_manifest(root: str, manifest: dict | None = None) -> list[str]:
-    """Re-walk the dataset and report every discrepancy against the
-    manifest (missing/extra/changed files).  Empty list = verified."""
-    if manifest is None:
-        with open(os.path.join(root, "_MANIFEST.json")) as f:
-            manifest = json.load(f)
+def verify_manifest(root: str) -> list[str]:
+    """Re-walk the dataset and report every discrepancy against its
+    ``_MANIFEST.json`` (missing/extra/changed files).  Empty list =
+    verified."""
+    with open(os.path.join(root, "_MANIFEST.json")) as f:
+        manifest = json.load(f)
     current = {e["path"]: e for e in build_manifest(root)["files"]}
     recorded = {e["path"]: e for e in manifest["files"]}
     problems = []

@@ -25,34 +25,15 @@ import os
 from pyspark.sql import DataFrame
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    mode: str = "overwrite",
-    dynamic: bool = True,
-    sort_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Partitioned parquet write.  ``dynamic=True`` scopes an overwrite to
-    the partitions present in ``df`` (idempotent per-slice reprocessing).
-    ``sort_by`` sorts within files so parquet column statistics become
-    selective — range filters on the sort key then skip whole row groups at
-    scan time (data-skipping without a table format).  ``max_records_per_file``
-    caps file size from the writer side."""
-    writer = df
-    if sort_by:
-        # the file writer requires rows clustered by the partition columns
-        # and injects its own (order-destroying) sort if they are not; lead
-        # with them so OUR sort satisfies the requirement and the sort_by
-        # keys survive into the files
-        writer = writer.sortWithinPartitions(*partition_by, *sort_by)
-    w = writer.write.mode(mode)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    if mode == "overwrite" and dynamic:
-        w = w.option("partitionOverwriteMode", "dynamic")
-    w.partitionBy(*partition_by).parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> None:
+    """Partitioned parquet write whose overwrite is scoped to the
+    partitions present in ``df`` (idempotent per-slice reprocessing)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def retention_sweep(

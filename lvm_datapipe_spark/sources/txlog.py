@@ -94,7 +94,6 @@ def commit(
     df: DataFrame,
     table_dir: str,
     op: str = "overwrite",
-    meta: dict | None = None,
 ) -> int:
     """Publish ``df`` as the table's next version; returns the version.
 
@@ -129,7 +128,7 @@ def commit(
         pm = _read_manifest(table_dir, parent)
         files = pm["files"] + own
         n_rows += pm["n_rows"]
-    _publish(table_dir, version, parent, op, files, n_rows, meta,
+    _publish(table_dir, version, parent, op, files, n_rows, {},
              columns=df.columns)
     return version
 
@@ -309,7 +308,6 @@ def merge(
     updates: DataFrame,
     table_dir: str,
     key_cols: list[str],
-    meta: dict | None = None,
 ) -> int:
     """Delta-style MERGE (upsert) at FILE granularity: rows of ``updates``
     replace every current row sharing their key; keys not present insert.
@@ -337,7 +335,7 @@ def merge(
     """
     parent = latest_version(table_dir)
     if parent == 0:
-        return commit(spark, updates, table_dir, op="overwrite", meta=meta)
+        return commit(spark, updates, table_dir, op="overwrite")
     pm = _read_manifest(table_dir, parent)
     snap_cols = _table_columns(spark, pm)
     if set(updates.columns) != set(snap_cols):
@@ -382,7 +380,6 @@ def merge(
         "merge_keys": list(key_cols),
         "rewritten_files": len(affected),
         "kept_files": len(kept),
-        **(meta or {}),
     }
     _publish(table_dir, version, parent, "merge", kept + own, n_rows,
              merge_meta, columns=snap_cols)
@@ -394,7 +391,6 @@ def delete(
     keys: DataFrame,
     table_dir: str,
     key_cols: list[str],
-    meta: dict | None = None,
 ) -> int:
     """File-granular DELETE: remove every row whose key appears in
     ``keys`` (MERGE minus the insert arm — same affected-file semi-join
@@ -428,7 +424,7 @@ def delete(
         _publish(
             table_dir, version, parent, "delete", kept, pm["n_rows"],
             {"delete_keys": list(key_cols), "deleted_rows": 0,
-             "rewritten_files": 0, "kept_files": len(kept), **(meta or {})},
+             "rewritten_files": 0, "kept_files": len(kept)},
             columns=snap_cols,
         )
         return version
@@ -443,8 +439,7 @@ def delete(
     _publish(
         table_dir, version, parent, "delete", kept + own, n_rows,
         {"delete_keys": list(key_cols), "deleted_rows": touched_rows - own_rows,
-         "rewritten_files": len(affected), "kept_files": len(kept),
-         **(meta or {})},
+         "rewritten_files": len(affected), "kept_files": len(kept)},
         columns=snap_cols,
     )
     return version
@@ -455,7 +450,6 @@ def compact(
     table_dir: str,
     small_file_mb: int = 32,
     target_file_mb: int = 128,
-    meta: dict | None = None,
 ) -> int:
     """OPTIMIZE: bin-pack the latest version's small files into
     ~``target_file_mb`` files as a NEW version — rows are untouched, so
@@ -497,7 +491,6 @@ def compact(
     compact_meta = {
         "compacted_files": len(small),
         "written_files": len(own),
-        **(meta or {}),
     }
     _publish(
         table_dir, version, parent, "compact", kept + own, pm["n_rows"],

@@ -16,24 +16,17 @@ from pyspark.sql import DataFrame, SparkSession
 VIDEO_EXTENSIONS = ("mp4", "avi", "mkv", "mov", "wmv", "flv", "webm", "mpeg", "mpg", "fvid")
 
 
-def scan_video_dir(
-    spark: SparkSession,
-    directory: str,
-    extensions: tuple[str, ...] = VIDEO_EXTENSIONS,
-    with_content: bool = True,
-) -> DataFrame:
-    """S1+S2 — list a video directory as (path, length, content?).
+def scan_video_dir(spark: SparkSession, directory: str) -> DataFrame:
+    """S1+S2 — list a video directory as (path, length, content).
 
-    ``binaryFile`` keeps whole payloads in executor memory — at scale prefer
-    ``with_content=False`` (listing only) and let decode UDFs open paths
-    from shared storage (SURVEY.md §7 "hard parts").
+    ``binaryFile`` keeps whole payloads in executor memory (SURVEY.md §7
+    "hard parts").
     """
-    pattern = "*.{" + ",".join(extensions) + "}"
+    pattern = "*.{" + ",".join(VIDEO_EXTENSIONS) + "}"
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", pattern)
         .option("recursiveFileLookup", "true")
         .load(directory)
     )
-    cols = ["path", "length"] + (["content"] if with_content else [])
-    return df.select(*cols)
+    return df.select("path", "length", "content")

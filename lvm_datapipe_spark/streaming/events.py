@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from lvm_datapipe_spark.operators.aggregates import decimal_sum
 
 
-def ensure_event_time(events: DataFrame, col: str = "ts") -> DataFrame:
+def ensure_event_time(events: DataFrame) -> DataFrame:
     """Normalize the event-time column to TIMESTAMP (with local-tz semantics).
 
     Spark >= 4 infers parquet timestamps written without UTC adjustment as
@@ -33,8 +33,8 @@ def ensure_event_time(events: DataFrame, col: str = "ts") -> DataFrame:
     clock in the session timezone; pipelines pin
     ``spark.sql.session.timeZone=UTC`` (session.py) so the instant is exact
     and the round-trip back to NTZ is the identity."""
-    if isinstance(events.schema[col].dataType, T.TimestampNTZType):
-        return events.withColumn(col, F.col(col).cast("timestamp"))
+    if isinstance(events.schema["ts"].dataType, T.TimestampNTZType):
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
     return events
 
 
@@ -42,15 +42,13 @@ def windowed_counts(
     events: DataFrame,
     window: str = "1 hour",
     watermark: str | None = "2 hours",
-    slide: str | None = None,
 ) -> DataFrame:
-    """Tumbling (default) or sliding (``slide`` < window) per-type counts +
-    value sums.  Identical plan in batch mode (watermark=None) and streaming
-    mode — the batch forms are the oracle-checked ``events_tumbling_window``
-    / ``events_sliding_window`` queries."""
+    """Tumbling-window per-type counts + value sums.  Identical plan in
+    batch mode (watermark=None) and streaming mode — the batch form is the
+    oracle-checked ``events_tumbling_window`` query."""
     src = ensure_event_time(events).withWatermark("ts", watermark) if watermark else events
     return (
-        src.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        src.groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), decimal_sum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
@@ -58,13 +56,7 @@ def windowed_counts(
     )
 
 
-def enrich_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str = "user_id",
-    dim_key: str = "c_custkey",
-    how: str = "left",
-) -> DataFrame:
+def enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment: join each micro-batch of the event stream
     against a static dimension table (customer attributes, video metadata).
 
@@ -73,15 +65,13 @@ def enrich_stream(
     map-side hash probe per event (the same plan the batch form gets, which
     is what makes the batch≡stream property testable).  Works identically on
     a batch DataFrame, so the batch form serves as the oracle."""
-    d = F.broadcast(dim.withColumnRenamed(dim_key, on))
-    return events.join(d, on, how)
+    d = F.broadcast(dim.withColumnRenamed("c_custkey", "user_id"))
+    return events.join(d, "user_id", "left")
 
 
 def interval_join_views_purchases(
     views: DataFrame,
     purchases: DataFrame,
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream INNER join with an event-time interval: each purchase
@@ -100,8 +90,9 @@ def interval_join_views_purchases(
     emits only once the watermark passes the point where no future view
     can match it — so outer results trail the watermark by design; the
     batch twin (``stream_interval_join_outer``) is the oracle form."""
-    v = ensure_event_time(views).withWatermark("ts", watermark).alias("v")
-    p = ensure_event_time(purchases).withWatermark("ts", watermark).alias("p")
+    horizon = "1 hour"
+    v = ensure_event_time(views).withWatermark("ts", "2 hours").alias("v")
+    p = ensure_event_time(purchases).withWatermark("ts", "2 hours").alias("p")
     cond = (
         (F.col("v.user_id") == F.col("p.user_id"))
         & (F.col("v.ts") <= F.col("p.ts"))

@@ -16,9 +16,26 @@ SF001 = "/root/testdata/sf0.01"
 def spark():
     from lvm_datapipe_spark.session import get_spark
 
-    s = get_spark("lvm-datapipe-tests", shuffle_partitions=8)
+    s = get_spark(
+        "lvm-datapipe-tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _query_scope(request):
+    """Run every test that uses ``spark`` inside ``session.query_scope``, so
+    the caches and checkpoints it makes are freed when it ends, not when
+    the JVM collects them.  Fixtures of a wider scope are set up before it
+    and keep theirs."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    from lvm_datapipe_spark.session import query_scope
+
+    with query_scope(request.getfixturevalue("spark")):
+        yield
 
 
 @pytest.fixture(scope="session")

@@ -879,18 +879,20 @@ def test_exact_percentiles_driver_matches_spark_aggregate(spark):
     assert got == list(want)
 
 
-def test_exact_percentiles_driver_gates(spark):
+def test_exact_percentiles_driver_gates(spark, monkeypatch):
     from pyspark.sql import functions as F
 
+    from lvm_datapipe_spark.operators import aggregates
     from lvm_datapipe_spark.operators.aggregates import exact_percentiles_driver
 
     df = spark.createDataFrame([(1.0,), (2.0,)], "v double")
-    assert exact_percentiles_driver(df, "v", [0.5], max_rows=1) is None
+    monkeypatch.setattr(aggregates, "DRIVER_PCT_MAX_ROWS", 1)
+    assert exact_percentiles_driver(df, "v", [0.5]) is None
     empty = df.where(F.col("v") > 5.0)
     assert exact_percentiles_driver(empty, "v", [0.5]) is None
 
 
-def test_exact_percentiles_driver_gate_boundary(spark):
+def test_exact_percentiles_driver_gate_boundary(spark, monkeypatch):
     """The row gate at exactly the non-null row count n and at n - 1, on
     the bound path (the caller passes an upper bound on the rows, here the
     total row count N > n) and on the count path (no bound): at the gate
@@ -899,6 +901,7 @@ def test_exact_percentiles_driver_gate_boundary(spark):
     takes n from the collected array."""
     from pyspark.sql import functions as F
 
+    from lvm_datapipe_spark.operators import aggregates
     from lvm_datapipe_spark.operators.aggregates import exact_percentiles_driver
 
     df = spark.range(0, 240, numPartitions=4).select(
@@ -913,16 +916,14 @@ def test_exact_percentiles_driver_gate_boundary(spark):
     fl = ", ".join(repr(f) for f in fracs)
     want = list(df.agg(F.expr(f"percentile(v, array({fl}))")).collect()[0][0])
     for bound in (total, None):
-        got = exact_percentiles_driver(df, "v", fracs, max_rows=n, row_bound=bound)
+        monkeypatch.setattr(aggregates, "DRIVER_PCT_MAX_ROWS", n)
+        got = exact_percentiles_driver(df, "v", fracs, row_bound=bound)
         assert got == want, bound
-        under = exact_percentiles_driver(
-            df, "v", fracs, max_rows=n - 1, row_bound=bound
-        )
+        monkeypatch.setattr(aggregates, "DRIVER_PCT_MAX_ROWS", n - 1)
+        under = exact_percentiles_driver(df, "v", fracs, row_bound=bound)
         assert under is None, bound
-    assert (
-        exact_percentiles_driver(df, "v", fracs, max_rows=total, row_bound=total)
-        == want
-    )
+    monkeypatch.setattr(aggregates, "DRIVER_PCT_MAX_ROWS", total)
+    assert exact_percentiles_driver(df, "v", fracs, row_bound=total) == want
     # an all-null column under the bound: n is 0, so no driver answer
     nulls = df.where(F.col("v").isNull())
     assert exact_percentiles_driver(nulls, "v", fracs, row_bound=total) is None
@@ -984,8 +985,10 @@ def test_table_row_count_reads_footers(tmp_path):
 def test_range_partition_boundaries_env_gate_fallback(spark, monkeypatch):
     from lvm_datapipe_spark.queries import QUERIES as Q
 
+    from lvm_datapipe_spark.operators import aggregates
+
     fast = Q["range_partition_boundaries"](spark, SF).collect()
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_PCT_MAX_ROWS", "0")
+    monkeypatch.setattr(aggregates, "DRIVER_PCT_MAX_ROWS", 0)
     slow = Q["range_partition_boundaries"](spark, SF)
     plan = slow._jdf.queryExecution().executedPlan().toString()
     assert "percentile" in plan

@@ -2,6 +2,7 @@
 
 from collections import Counter
 
+from lvm_datapipe_spark.operators import bpe
 from lvm_datapipe_spark.operators.bpe import (
     END,
     learn_bpe_merges,
@@ -72,13 +73,14 @@ def test_word_symbol_table_weights(spark):
     assert rows == {"ab": (2, ["a", "b", END]), "ba": (1, ["b", "a", END])}
 
 
-def test_local_and_distributed_paths_identical(spark):
+def test_local_and_distributed_paths_identical(spark, monkeypatch):
     # the threshold only moves WHERE the loop runs, never what it learns:
     # force the distributed per-round path (threshold 0) and compare with
     # the driver-local fast path (default threshold) merge-for-merge
     df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
     m_local, w_local = learn_bpe_merges(df, n_merges=12)
-    m_dist, w_dist = learn_bpe_merges(df, n_merges=12, local_threshold=0)
+    monkeypatch.setattr(bpe, "LOCAL_FIT_THRESHOLD", 0)
+    m_dist, w_dist = learn_bpe_merges(df, n_merges=12)
     assert m_local == m_dist
     tbl_local = {r["word"]: (r["weight"], list(r["sym"])) for r in w_local.collect()}
     tbl_dist = {r["word"]: (r["weight"], list(r["sym"])) for r in w_dist.collect()}

@@ -19,8 +19,6 @@ NAMES = ["q1_pricing_summary", "a1_breakpoint"]
 def test_sweep_writes_every_artifact(spark, sf_dir, tmp_path):
     from lvm_datapipe_spark.session import held_storage
 
-    # plan-only tests leave lazy cache entries in the shared session
-    spark.catalog.clearCache()
     _, rdds_before = held_storage(spark)
     paths = {k: str(tmp_path / k) for k in ("correctness", "audit", "times", "explain")}
     rc = census.sweep(spark, sf_dir, NAMES, passes=2, **paths)

@@ -19,7 +19,6 @@ def test_salted_aggregate_matches_plain(spark):
             (F.sum("x"), lambda c: F.sum(c), "total"),
             (F.max("x"), lambda c: F.max(c), "mx"),
         ],
-        salt_buckets=8,
     )
     want = {
         r.k: (r.n, r.total, r.mx)

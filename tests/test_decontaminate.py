@@ -130,10 +130,15 @@ def test_decontaminate_passthrough_cap(spark):
         [(1, f"doc with {boiler} inside"), (2, "unrelated clean text entirely here")],
         ["doc_id", "text"],
     )
-    assert {
-        r.doc_id for r in decontaminate(corpus, bench, n=5, max_bench_freq=3).collect()
-    } == {1, 2}
-    assert {
-        r.doc_id
-        for r in decontaminate(corpus, bench, n=5, max_bench_freq=None).collect()
-    } == {2}
+    # the boilerplate shingles sit in all 4 benchmark rows: over a cap of 3
+    # they flag nothing, uncapped they flag doc 1
+    def flagged(cap):
+        return {
+            r.doc_id
+            for r in contamination_pairs(
+                corpus, bench, n=5, max_bench_freq=cap
+            ).collect()
+        }
+
+    assert flagged(3) == set()
+    assert flagged(None) == {1}

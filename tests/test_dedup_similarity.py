@@ -164,7 +164,7 @@ def test_cosine_math(spark):
 def test_brute_force_topk(spark):
     emb = _emb(spark)
     queries = emb.filter(F.col("vec_id") == 1)
-    out = V.brute_force_topk(emb, queries, k=2, dim=4).collect()
+    out = V.brute_force_topk(emb, queries, k=2).collect()
     ranked = sorted(out, key=lambda r: r.rank)
     assert [r.neighbor_id for r in ranked] == [2, 3]  # 2 closest, then orthogonal-tie by id
 
@@ -362,7 +362,7 @@ def test_pq_adc_recall_floor(spark):
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_ivfpq_subset_of_pq_candidates_and_recall(spark):
+def test_ivfpq_subset_of_pq_candidates_and_recall(spark, monkeypatch):
     """IVF-PQ returns ADC ranking restricted to probed cells: every result
     pair must also appear in the probe-all variant's candidate set, and
     recall vs exact L2 stays above a floor despite the cell pruning."""
@@ -379,8 +379,10 @@ def test_ivfpq_subset_of_pq_candidates_and_recall(spark):
         got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     # probe-all == plain PQ/ADC over the full corpus (cells prune nothing)
     all_cells = {}
-    for r in V.ivfpq_topk(emb, queries, k=10, n_probe=16).collect():
-        all_cells.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    with monkeypatch.context() as m:
+        m.setattr(V, "IVF_PROBES", V.IVF_CELLS)
+        for r in V.ivfpq_topk(emb, queries, k=10).collect():
+            all_cells.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     pq_only = {}
     for r in V.pq_adc_topk(emb, queries, k=10).collect():
         pq_only.setdefault(r["query_id"], set()).add(r["neighbor_id"])
@@ -436,7 +438,7 @@ def test_ppjoin_equals_brute_force(spark):
     assert got == want
 
 
-def test_ppjoin_positional_filter_prunes_but_stays_exact(spark):
+def test_ppjoin_positional_filter_prunes_but_stays_exact(spark, monkeypatch):
     """The positional filter (the "PP") at a threshold where it actively
     prunes: t = 2/3 on hand-built 6-token docs gives prefix length 3 and
     alpha = ceil(2*(n_a+n_b)/5); a collision at ranks (1, 3) bounds overlap
@@ -445,8 +447,10 @@ def test_ppjoin_positional_filter_prunes_but_stays_exact(spark):
     prefix token of a qualifying pair)."""
     import itertools
 
+    from lvm_datapipe_spark.operators import dedup
     from lvm_datapipe_spark.operators.dedup import ppjoin_pairs
 
+    monkeypatch.setattr(dedup, "PPJOIN_THRESHOLD", (2, 3))
     rng = __import__("random").Random(7)
     vocab = [f"t{i:02d}" for i in range(40)]
     rows = []
@@ -462,7 +466,7 @@ def test_ppjoin_positional_filter_prunes_but_stays_exact(spark):
 
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ppjoin_pairs(docs, t_num=2, t_den=3).collect()
+        for r in ppjoin_pairs(docs).collect()
     }
     sets = {d: set(t.split()) for d, t in rows}
     want = {}
@@ -475,15 +479,17 @@ def test_ppjoin_positional_filter_prunes_but_stays_exact(spark):
     assert got == want
 
 
-def test_ppjoin_wide_vocab_generic_path_equals_brute_force(spark):
+def test_ppjoin_wide_vocab_generic_path_equals_brute_force(spark, monkeypatch):
     """Vocabularies wider than 64 tokens cannot pack into one bitmask, so
     the verify falls back to the generic array_intersect path — pin that
     path against brute force too (the small-vocab tests above exercise
     the popcount fast path; this corpus draws from 120 tokens)."""
     import itertools
 
+    from lvm_datapipe_spark.operators import dedup
     from lvm_datapipe_spark.operators.dedup import ppjoin_pairs
 
+    monkeypatch.setattr(dedup, "PPJOIN_THRESHOLD", (2, 3))
     rng = __import__("random").Random(11)
     vocab = [f"w{i:03d}" for i in range(120)]
     rows = []
@@ -497,7 +503,7 @@ def test_ppjoin_wide_vocab_generic_path_equals_brute_force(spark):
 
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ppjoin_pairs(docs, t_num=2, t_den=3).collect()
+        for r in ppjoin_pairs(docs).collect()
     }
     sets = {d: set(t.split()) for d, t in rows}
     want = {}
@@ -532,7 +538,6 @@ def test_auto_n_planes_sizing_rule():
     # capped at p_max (16 by default — the oracle embeds p_max plane
     # literals, so the cap bounds the SQL size); override to go higher
     assert auto_n_planes(100_000_000) == 16
-    assert auto_n_planes(100_000_000, p_max=24) == 20
     # boundary exactness of the integer rule: 2^p * 100 >= n
     assert auto_n_planes(1_600) == 4
     assert auto_n_planes(1_601) == 5

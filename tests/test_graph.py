@@ -3,9 +3,12 @@ PageRank, triangle counts and the dense driver kernels."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
 
+from lvm_datapipe_spark.operators import graph
 from lvm_datapipe_spark.operators.graph import (
     connected_components,
     dedup_keep_representatives,
@@ -13,10 +16,22 @@ from lvm_datapipe_spark.operators.graph import (
 
 SF0001 = "/root/testdata/sf0.001"
 
-#: driver_finish_max_edges settings every CC check runs under: the default
-#: gate (small inputs finish as one driver union-find) and None (the pure
-#: distributed contraction loop)
-CC_GATES = (200_000, None)
+#: CC_DRIVER_FINISH_MAX_EDGES settings every CC check runs under: the
+#: default gate (small inputs finish as one driver union-find) and -1 (the
+#: pure distributed contraction loop)
+CC_GATES = (200_000, -1)
+
+
+def _cc(pairs, gate, **kwargs):
+    """connected_components with its driver-finish gate at ``gate``."""
+    with mock.patch.object(graph, "CC_DRIVER_FINISH_MAX_EDGES", gate):
+        return connected_components(pairs, **kwargs)
+
+
+def _kcore(edges, max_rounds, **kwargs):
+    """kcore with its round cap at ``max_rounds``."""
+    with mock.patch.object(graph, "KCORE_MAX_ROUNDS", max_rounds):
+        return graph.kcore(edges, **kwargs)
 
 
 def _pairs(spark, rows):
@@ -42,14 +57,12 @@ def _uf_components(rows):
 
 
 def _cc_labels(spark, rows):
-    """{gate: {id: cluster_id}} for every driver_finish_max_edges setting
-    in CC_GATES."""
+    """{gate: {id: cluster_id}} for every driver-finish gate in
+    CC_GATES."""
     return {
         gate: {
             r.id: r.cluster_id
-            for r in connected_components(
-                _pairs(spark, rows), driver_finish_max_edges=gate
-            ).collect()
+            for r in _cc(_pairs(spark, rows), gate).collect()
         }
         for gate in CC_GATES
     }
@@ -88,7 +101,7 @@ def test_label_direction_independent(spark):
 def test_empty_pairs(spark):
     df = spark.createDataFrame([], "id_a long, id_b long")
     for gate in CC_GATES:
-        out = connected_components(df, driver_finish_max_edges=gate)
+        out = _cc(df, gate)
         assert out.count() == 0
 
 
@@ -141,7 +154,7 @@ def test_keep_representatives(spark):
     ],
 )
 def test_cc_round0_gate_boundary(spark, rows):
-    """``driver_finish_max_edges`` at the non-self-loop edge count E (the
+    """``CC_DRIVER_FINISH_MAX_EDGES`` at the non-self-loop edge count E (the
     count observed on the pair-list checkpoint) finishes on the driver at
     round 0; at E - 1 the distributed loop runs.  Labels equal union-find
     both ways, self-loop-only nodes included."""
@@ -153,9 +166,7 @@ def test_cc_round0_gate_boundary(spark, rows):
         st: dict = {}
         got = {
             r.id: r.cluster_id
-            for r in connected_components(
-                _pairs(spark, rows), driver_finish_max_edges=gate, stats=st
-            ).collect()
+            for r in _cc(_pairs(spark, rows), gate, stats=st).collect()
         }
         assert got == expect, gate
         if gate == n_edges:
@@ -169,9 +180,7 @@ def test_cc_round0_gate_boundary(spark, rows):
 def test_plan_no_cartesian(spark):
     rows = [(1, 2), (2, 3)]
     for gate in CC_GATES:
-        out = connected_components(
-            _pairs(spark, rows), driver_finish_max_edges=gate
-        )
+        out = _cc(_pairs(spark, rows), gate)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -312,8 +321,8 @@ def test_triangle_counts_match_brute_force(
 ):
     from lvm_datapipe_spark.operators.graph import triangle_counts
 
-    if not driver_kernel:  # a 0 gate forces the distributed wedge engine
-        monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_NODES", "0")
+    if not driver_kernel:  # a negative gate forces the distributed wedge engine
+        monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", -1)
     df = _pairs(spark, edges)
     got = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert got == _brute_triangles(edges)
@@ -363,12 +372,15 @@ def test_dense_driver_triangles_dedupe_duplicate_rows(spark):
     }
 
 
-def test_dense_driver_triangles_gate_returns_none(spark):
+def test_dense_driver_triangles_gate_returns_none(spark, monkeypatch):
     from lvm_datapipe_spark.operators.graph import triangle_counts_driver_dense
 
     df = _pairs(spark, [(1, 2), (2, 3), (1, 3)])
-    assert triangle_counts_driver_dense(df, "id_a", "id_b", max_edges=2) is None
-    assert triangle_counts_driver_dense(df, "id_a", "id_b", max_nodes=2) is None
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 2)
+        assert triangle_counts_driver_dense(df, "id_a", "id_b") is None
+    monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", 2)
+    assert triangle_counts_driver_dense(df, "id_a", "id_b") is None
 
 
 def test_dense_driver_triangles_match_distributed_engine(spark, monkeypatch):
@@ -386,7 +398,7 @@ def test_dense_driver_triangles_match_distributed_engine(spark, monkeypatch):
     edges = sorted(edges)
     df = _pairs(spark, edges)
     dense = dict(triangle_counts_driver_dense(df, "id_a", "id_b"))
-    monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_NODES", "0")
+    monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", -1)
     dist = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert dense == dist == _brute_triangles(edges)
 
@@ -417,7 +429,7 @@ def test_dense_driver_triangles_from_baskets_match_edge_kernel(spark):
     assert dict(via_baskets) == dict(via_edges) == _brute_triangles(edges)
 
 
-def test_dense_driver_triangles_from_baskets_gates(spark):
+def test_dense_driver_triangles_from_baskets_gates(spark, monkeypatch):
     from lvm_datapipe_spark.operators.graph import (
         triangle_counts_driver_dense_from_baskets,
     )
@@ -426,14 +438,12 @@ def test_dense_driver_triangles_from_baskets_gates(spark):
         [(1, 10), (1, 11), (1, 12), (2, 10), (2, 11)], "o long, i long"
     )
     # pairs = 3 + 1 = 4; rows = 5
-    assert (
-        triangle_counts_driver_dense_from_baskets(baskets, "o", "i", max_edges=3)
-        is None
-    )
-    assert (
-        triangle_counts_driver_dense_from_baskets(baskets, "o", "i", max_nodes=2)
-        is None
-    )
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 3)
+        assert triangle_counts_driver_dense_from_baskets(baskets, "o", "i") is None
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", 2)
+        assert triangle_counts_driver_dense_from_baskets(baskets, "o", "i") is None
     out = triangle_counts_driver_dense_from_baskets(baskets, "o", "i")
     assert dict(out) == {10: 1, 11: 1, 12: 1}
 
@@ -489,7 +499,7 @@ def test_reachability_env_gate_forces_distributed_plan(spark, monkeypatch):
 
     fast = QUERIES["graph_reachability_3hop"](spark, SF0001)
     fast_rows = {tuple(r) for r in fast.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_EDGES", "0")
+    monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", -1)
     slow = QUERIES["graph_reachability_3hop"](spark, SF0001)
     assert fast_rows == {tuple(r) for r in slow.collect()}
     assert [f.name for f in fast.schema.fields] == [
@@ -501,13 +511,13 @@ def test_reachability_env_gate_forces_distributed_plan(spark, monkeypatch):
 
 
 def test_supplier_triangles_env_gate_forces_distributed_plan(spark, monkeypatch):
-    # with a 0 gate the declared query must run the array_intersect scale
+    # with a negative gate the declared query must run the array_intersect scale
     # engine and still match the oracle-shaped fast-path output
     from lvm_datapipe_spark.queries import QUERIES
 
     fast = QUERIES["graph_supplier_triangles"](spark, SF0001)
     fast_rows = {(r[0], r[1]) for r in fast.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_EDGES", "0")
+    monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", -1)
     slow = QUERIES["graph_supplier_triangles"](spark, SF0001)
     plan = slow._jdf.queryExecution().executedPlan().toString()
     assert "array_intersect" in plan
@@ -539,7 +549,7 @@ def _write_lineitem(spark, path, orders):
     ).write.parquet(str(path / "lineitem.parquet"))
 
 
-@pytest.mark.parametrize("edge_gate", [None, "0"])
+@pytest.mark.parametrize("edge_gate", [None, 0])
 def test_supplier_triangles_sparse_graph_emits_no_zero_rows(
     spark, monkeypatch, tmp_path, edge_gate
 ):
@@ -554,7 +564,7 @@ def test_supplier_triangles_sparse_graph_emits_no_zero_rows(
         spark, tmp_path, [(1, 10, 1), (1, 11, 2), (2, 12, 2), (2, 13, 3)]
     )
     if edge_gate is not None:
-        monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_EDGES", edge_gate)
+        monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", edge_gate)
     out = QUERIES["graph_supplier_triangles"](spark, str(tmp_path))
     assert out.collect() == []
 
@@ -593,7 +603,7 @@ def test_kcore_matches_reference_fixpoint(spark):
     stats: dict = {}
     got = {
         (r.node, r.core_degree)
-        for r in kcore(e, k=2, max_rounds=30, stats=stats).collect()
+        for r in kcore(e, k=2, stats=stats).collect()
     }
     assert got == set(_kcore_reference(rows, 2).items())
     assert stats["rounds"] <= 30 and stats["checks"] >= 1
@@ -645,9 +655,6 @@ def test_kcore_query_surfaces_nonconvergence_as_false_column(spark, tmp_path):
     output column: cap the peel at 1 round on a corpus that needs more
     (a pendant chain cascading into a clique) and every surviving row
     reads converged=False."""
-    from unittest import mock
-
-    from lvm_datapipe_spark.operators import graph as graph_mod
     from lvm_datapipe_spark.queries import QUERIES
 
     orders, ok = [], 100
@@ -661,15 +668,7 @@ def test_kcore_query_surfaces_nonconvergence_as_false_column(spark, tmp_path):
         ok += 1
     _write_lineitem(spark, tmp_path, orders)
 
-    real_kcore = graph_mod.kcore
-
-    def capped(*args, **kwargs):
-        kwargs["max_rounds"] = 1
-        return real_kcore(*args, **kwargs)
-
-    import pytest
-
-    with mock.patch.object(graph_mod, "kcore", capped):
+    with mock.patch.object(graph, "KCORE_MAX_ROUNDS", 1):
         with pytest.warns(UserWarning, match="max_rounds"):
             got = QUERIES["graph_kcore_parts"](spark, str(tmp_path)).collect()
     assert len(got) > 0
@@ -723,11 +722,7 @@ def test_twophase_random_graphs_match_union_find(spark):
 
 def test_twophase_converges_in_log_rounds_on_chain(spark):
     stats: dict = {}
-    out = connected_components(
-        _pairs(spark, [(i, i + 1) for i in range(100)]),
-        stats=stats,
-        driver_finish_max_edges=None,
-    )
+    out = _cc(_pairs(spark, [(i, i + 1) for i in range(100)]), -1, stats=stats)
     assert {(r.id, r.cluster_id) for r in out.collect()} == {
         (i, 0) for i in range(101)
     }
@@ -785,9 +780,7 @@ def test_twophase_driver_finish_matches_distributed_fixpoint(spark):
     }
     pure = {
         (r.id, r.cluster_id)
-        for r in connected_components(
-            pairs, stats=s_pure, driver_finish_max_edges=None
-        ).collect()
+        for r in _cc(pairs, -1, stats=s_pure).collect()
     }
     assert gated == pure == set(_uf_components(rows).items())
     assert s_gated["driver_finish"] is True
@@ -808,9 +801,7 @@ def test_twophase_assume_symmetric_equivalence(spark):
         sym = _pairs(spark, rows + [(b, a) for a, b in rows])
         got = {
             (r.id, r.cluster_id)
-            for r in connected_components(
-                sym, assume_symmetric=True, driver_finish_max_edges=None
-            ).collect()
+            for r in _cc(sym, -1, assume_symmetric=True).collect()
         }
         assert got == set(_uf_components(rows).items()), rows[0]
 
@@ -873,7 +864,7 @@ def test_kcore_max_rounds_exhaustion_warns_and_recomputes_degrees(spark):
     with pytest.warns(UserWarning, match="max_rounds"):
         got = {
             (r.node, r.core_degree)
-            for r in kcore(e, k=2, max_rounds=3, stats=stats).collect()
+            for r in _kcore(e, 3, k=2, stats=stats).collect()
         }
     assert stats["converged"] is False
     assert got == set(_kcore_peel_rounds(rows, 2, 3).items())
@@ -923,7 +914,7 @@ def test_kcore_frontier_gate_cases(spark):
             warnings.simplefilter("always", UserWarning)
             got = {
                 (r.node, r.core_degree)
-                for r in kcore(e, k=k, max_rounds=max_rounds, stats=st).collect()
+                for r in _kcore(e, max_rounds, k=k, stats=st).collect()
             }
         assert not [w for w in caught if "max_rounds" in str(w.message)]
         return got, st
@@ -986,7 +977,7 @@ def test_kcore_engines_agree_on_exhausted_peel(spark):
         with pytest.warns(UserWarning, match="max_rounds"):
             got = {
                 (r.node, r.core_degree)
-                for r in kcore(e, k=k, max_rounds=cap, stats=st).collect()
+                for r in _kcore(e, cap, k=k, stats=st).collect()
             }
         assert st["converged"] is False, (rows[:2], k, cap)
         assert got == set(_kcore_peel_rounds(rows, k, cap).items())
@@ -1175,23 +1166,17 @@ def test_twophase_round0_and_midloop_gate_paths_agree(spark):
     s0: dict = {}
     round0 = {
         (r.id, r.cluster_id)
-        for r in connected_components(
-            pairs, driver_finish_max_edges=1000, stats=s0
-        ).collect()
+        for r in _cc(pairs, 1000, stats=s0).collect()
     }
     s_mid: dict = {}
     mid = {
         (r.id, r.cluster_id)
-        for r in connected_components(
-            pairs, driver_finish_max_edges=100, stats=s_mid
-        ).collect()
+        for r in _cc(pairs, 100, stats=s_mid).collect()
     }
     s_pure: dict = {}
     pure = {
         (r.id, r.cluster_id)
-        for r in connected_components(
-            pairs, driver_finish_max_edges=None, stats=s_pure
-        ).collect()
+        for r in _cc(pairs, -1, stats=s_pure).collect()
     }
     assert round0 == mid == pure == expect
     assert s0["driver_finish"] and s0["rounds"] == 0

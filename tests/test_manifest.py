@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from lvm_datapipe_spark.sources.manifest import (
-    build_manifest,
     verify_manifest,
     write_manifest,
 )
@@ -34,10 +33,10 @@ def test_manifest_counts_and_verifies(spark, tmp_path):
 def test_manifest_detects_missing_and_extra(spark, tmp_path):
     out = str(tmp_path / "ds2")
     spark.range(0, 10).write.mode("overwrite").parquet(out)
-    m = build_manifest(out)
+    m = write_manifest(out)
     victim = tmp_path / "ds2" / m["files"][0]["path"]
     victim.unlink()
     (tmp_path / "ds2" / "rogue.parquet").write_bytes(b"PAR1junk")
-    problems = set(verify_manifest(out, m))
+    problems = set(verify_manifest(out))
     assert f"missing: {m['files'][0]['path']}" in problems
     assert "extra: rogue.parquet" in problems

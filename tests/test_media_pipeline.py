@@ -31,12 +31,16 @@ def corpus_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def videos(spark, corpus_dir):
-    return scan_video_dir(spark, corpus_dir).cache()
+    df = scan_video_dir(spark, corpus_dir).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def clips(spark, videos):
-    return scenecut.scene_cut(videos).cache()
+    df = scenecut.scene_cut(videos).cache()
+    yield df
+    df.unpersist()
 
 
 # -- codec ------------------------------------------------------------------

@@ -466,7 +466,9 @@ def test_mad_outliers_broadcasts_stats(spark):
 def test_triangles_all_keyed_equi_joins(spark, monkeypatch):
     # force the distributed scale engine (r11: below the dense-driver gate
     # the query returns a local result whose plan would vacuously pass)
-    monkeypatch.setenv("SPARK_GRAFT_DENSE_TRI_MAX_EDGES", "0")
+    from lvm_datapipe_spark.operators import graph
+
+    monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", -1)
     plan = _plan(spark, "graph_supplier_triangles")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

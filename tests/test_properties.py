@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 from collections import defaultdict
+from unittest import mock
 
 import pytest
 
@@ -17,6 +18,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.operators import dedup as D
+from lvm_datapipe_spark.operators import graph
 from lvm_datapipe_spark.operators.aggregates import decimal_sum
 
 SETTINGS = dict(
@@ -24,6 +26,14 @@ SETTINGS = dict(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
+
+def _patched(module, name, value, fn, *args, **kwargs):
+    """``fn(*args, **kwargs)`` with ``module.name`` set to ``value`` for
+    the call (hypothesis re-runs a test body, so no function-scoped
+    monkeypatch)."""
+    with mock.patch.object(module, name, value):
+        return fn(*args, **kwargs)
+
 
 WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
 texts = st.lists(st.sampled_from(WORDS), min_size=0, max_size=12).map(" ".join)
@@ -208,7 +218,7 @@ def test_bloom_prefilter_never_changes_the_join(spark, keys):
     dim = spark.createDataFrame(
         [(k,) for k in keys] or [(None,)], "dk long"
     ).filter("dk IS NOT NULL")
-    got = B.bloom_prefiltered_semi_join(fact, dim, "fk", "dk", m_bits=1 << 10)
+    got = B.bloom_prefiltered_semi_join(fact, dim, "fk", "dk")
     want = fact.join(dim, fact.fk == dim.dk, "left_semi")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
@@ -484,7 +494,7 @@ def test_kcore_matches_python_fixpoint_on_random_graphs(spark, edges, k):
     stats: dict = {}
     got = {
         (r.node, r.core_degree)
-        for r in kcore(df, k=k, max_rounds=40, stats=stats).collect()
+        for r in _patched(graph, "KCORE_MAX_ROUNDS", 40, kcore, df, k=k, stats=stats).collect()
     }
     assert stats["converged"] is True
     assert got == expect
@@ -535,7 +545,7 @@ def test_kcore_matches_capped_peel_model_property(spark, edges, k, cap):
     st_: dict = {}
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        rows = kcore(df, k=k, max_rounds=cap, stats=st_).collect()
+        rows = _patched(graph, "KCORE_MAX_ROUNDS", cap, kcore, df, k=k, stats=st_).collect()
     assert {(r.node, r.core_degree) for r in rows} == expect
     assert st_["converged"] is converged
 
@@ -549,13 +559,13 @@ def test_kcore_matches_capped_peel_model_property(spark, edges, k, cap):
         min_size=0,
         max_size=30,
     ),
-    st.sampled_from([None, 1, 200_000]),
+    st.sampled_from([-1, 1, 200_000]),
 )
 @settings(**SETTINGS)
 def test_connected_components_matches_union_find_property(spark, edges, gate):
     """connected_components labels ARBITRARY edge lists — self-loops and
     duplicates included — with each node's reachable minimum, across
-    driver-finish gate settings: None (pure distributed loop), 1 (on
+    driver-finish gate settings: -1 (pure distributed loop), 1 (on
     most drawn graphs the gate fires mid-loop) and the default (round-0
     driver finish)."""
     from lvm_datapipe_spark.operators.graph import connected_components
@@ -578,8 +588,8 @@ def test_connected_components_matches_union_find_property(spark, edges, gate):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
         (r.id, r.cluster_id)
-        for r in connected_components(
-            df, driver_finish_max_edges=gate
+        for r in _patched(
+            graph, "CC_DRIVER_FINISH_MAX_EDGES", gate, connected_components, df
         ).collect()
     }
     assert got == expect

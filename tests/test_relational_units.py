@@ -210,22 +210,6 @@ def test_binned_range_join_matches_naive(spark):
         assert got == naive, f"width={width}"
 
 
-def test_binned_range_join_left_keeps_unmatched(spark):
-    from lvm_datapipe_spark.operators.asof import binned_range_join
-
-    pts, ivs = _brj_fixtures(spark)
-    out = binned_range_join(pts, ivs, "t", "t0", "t1", 10, how="left").collect()
-    by_pid = {}
-    for r in out:
-        by_pid.setdefault(r["pid"], []).append(r["iv_id"])
-    assert sorted(by_pid[5]) == [None]        # t=-3 matches nothing
-    assert sorted(by_pid[4]) == [None]        # t=99 matches nothing
-    assert sorted(by_pid[2]) == [11]
-    assert sorted(by_pid[3]) == [11, 12]
-    # matched points do NOT also emit a null row
-    assert None not in by_pid[3]
-
-
 def test_binned_range_join_is_hash_join(spark):
     from lvm_datapipe_spark.operators.asof import binned_range_join
 
@@ -236,16 +220,6 @@ def test_binned_range_join_is_hash_join(spark):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_binned_range_join_rejects_bad_how(spark):
-    import pytest
-
-    from lvm_datapipe_spark.operators.asof import binned_range_join
-
-    pts, ivs = _brj_fixtures(spark)
-    with pytest.raises(ValueError, match="inner|left"):
-        binned_range_join(pts, ivs, "t", "t0", "t1", 10, how="outer")
 
 
 # ---------------------------------------------------------------------------

@@ -27,13 +27,13 @@ class TestSemDeDup:
         )
 
         dim = 8
-        cents = ivf_fixed_centroids(4, dim, seed=7)
+        cents = ivf_fixed_centroids(4, dim, seed=42)
         # two near-identical vectors (cos ~ 1) plus one unrelated
         base = [1.0, 0.5, -0.25, 2.0, 0.0, 0.0, 1.0, -1.0]
         near = [x * 1.001 + (0.001 if i == 0 else 0.0) for i, x in enumerate(base)]
         other = [-5.0, 4.0, 3.0, -2.0, 1.0, 6.0, -7.0, 0.5]
         out = semdedup_keep(
-            _emb_df(spark, [base, near, other]), eps=0.95, n_cells=4, dim=dim, seed=7
+            _emb_df(spark, [base, near, other]), eps=0.95, n_cells=4, dim=dim
         ).collect()
         rows = {r.vec_id: r for r in out}
         assert rows[2].keep  # unrelated vector untouched
@@ -63,7 +63,7 @@ class TestSemDeDup:
 
         dim = 8
         vecs = [[float(i + 1)] * dim for i in range(5)]  # all cos == 1 pairs
-        out = semdedup_keep(_emb_df(spark, vecs), eps=1.01, n_cells=4, dim=dim, seed=7)
+        out = semdedup_keep(_emb_df(spark, vecs), eps=1.01, n_cells=4, dim=dim)
         assert out.filter(~F.col("keep")).count() == 0
 
     def test_colinear_group_keeps_exactly_one(self, spark):
@@ -73,7 +73,7 @@ class TestSemDeDup:
         v = [2.0, -1.0, 0.5, 3.0, -2.0, 1.0, 0.25, -0.5]
         vecs = [[x * s for x in v] for s in (1.0, 2.0, 3.0)]  # cos == 1 chain
         rows = semdedup_keep(
-            _emb_df(spark, vecs), eps=0.99, n_cells=4, dim=dim, seed=7
+            _emb_df(spark, vecs), eps=0.99, n_cells=4, dim=dim
         ).collect()
         kept = [r for r in rows if r.keep]
         # colinear vectors share a cell; exactly one survives — the minimum
@@ -157,7 +157,7 @@ class TestDSIR:
         out = {
             r.doc_id: r
             for r in dsir_doc_weights(
-                docs, F.col("source") == "tgt", n_feature_buckets=512
+                docs, F.col("source") == "tgt"
             ).collect()
         }
         # features: doc1 -> alpha, beta, "alpha beta" (target); doc2 -> gamma

@@ -3,19 +3,9 @@ idempotent; retention drops only expired partitions."""
 
 from __future__ import annotations
 
-import glob
-
 from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.sources.sinks import write_partitioned
-
-
-def _files(path: str) -> list[str]:
-    return [
-        f
-        for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
-        if "/_" not in f
-    ]
 
 
 def test_dynamic_overwrite_replaces_only_incoming_partitions(spark, tmp_path):
@@ -32,30 +22,6 @@ def test_dynamic_overwrite_replaces_only_incoming_partitions(spark, tmp_path):
     }
     # a and c survive, b replaced — NOT truncated to just b
     assert got == {(1, "a", 10.0), (2, "b", 99.0), (3, "c", 30.0)}
-
-
-def test_static_overwrite_truncates_by_contrast(spark, tmp_path):
-    p = str(tmp_path / "tbl")
-    full = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0)], ["id", "part", "v"]
-    )
-    write_partitioned(full, p, ["part"])
-    fixed_b = spark.createDataFrame([(2, "b", 99.0)], ["id", "part", "v"])
-    write_partitioned(fixed_b, p, ["part"], dynamic=False)
-    assert {r.part for r in spark.read.parquet(p).collect()} == {"b"}
-
-
-def test_sort_by_orders_within_files(spark, tmp_path):
-    p = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(i, "a", float(100 - i)) for i in range(100)], ["id", "part", "v"]
-    ).repartition(1)
-    write_partitioned(df, p, ["part"], sort_by=["v"])
-    import pyarrow.parquet as pq
-
-    f = _files(p)[0]
-    vs = pq.read_table(f, columns=["v"]).column("v").to_pylist()
-    assert vs == sorted(vs)
 
 
 def test_retention_sweep_drops_only_expired_partitions(spark, tmp_path):

@@ -191,30 +191,6 @@ def test_stream_static_enrichment_matches_batch(spark, landing_dir):
     assert len(got) > 0
 
 
-def test_stream_sliding_window_matches_batch(spark, landing_dir):
-    stream = _read_events(spark, landing_dir)
-    q = _to_memory(
-        ev.windowed_counts(stream, slide="30 minutes"),
-        "win_sliding",
-        output_mode="complete",
-    )
-    _await(q)
-    got = {
-        (r.window_start, r.event_type): (r.n, round(r.total_value, 6))
-        for r in spark.sql("SELECT * FROM win_sliding").collect()
-    }
-    batch = ev.windowed_counts(
-        load_table(spark, "/root/testdata/sf0.001", "events"),
-        watermark=None,
-        slide="30 minutes",
-    )
-    want = {
-        (r.window_start, r.event_type): (r.n, round(r.total_value, 6))
-        for r in batch.collect()
-    }
-    assert got == want
-
-
 def test_stream_stream_interval_join_matches_batch(spark, landing_dir):
     """Stream-stream inner join with event-time bounds: every (purchase,
     view-within-lookback) pair the batch twin produces must emit from the
@@ -447,10 +423,11 @@ def test_watermark_audit_matches_reference_on_permuted_feed(spark):
 
 
 def test_stream_state_partitions_pins_and_restores_conf(spark, monkeypatch):
+    from lvm_datapipe_spark import queries
     from lvm_datapipe_spark.queries import _stream_state_partitions
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
+    monkeypatch.setattr(queries, "STREAM_STATE_PARTITIONS", 3)
     with _stream_state_partitions(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
@@ -464,12 +441,13 @@ def test_stream_state_partitions_pins_and_restores_conf(spark, monkeypatch):
 def test_stream_sink_rows_independent_of_state_partitions(spark, monkeypatch):
     # the state-store count is a layout knob: the sink contents must be
     # identical under any setting (exact hash aggregation per key)
+    from lvm_datapipe_spark import queries
     from lvm_datapipe_spark.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
+    monkeypatch.setattr(queries, "STREAM_STATE_PARTITIONS", 2)
     a = QUERIES["stream_sink_tumbling_window"](spark, sf)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "13")
+    monkeypatch.setattr(queries, "STREAM_STATE_PARTITIONS", 13)
     b = QUERIES["stream_sink_tumbling_window"](spark, sf)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0

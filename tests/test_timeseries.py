@@ -11,7 +11,7 @@ def test_profiles_equicount_buckets(spark):
     df = spark.createDataFrame(rows, "user_id long, ts long, value double")
     out = {
         (r["user_id"], r["bucket"]): r["profile_value"]
-        for r in user_value_profiles(df, ts_col="ts", length=4).collect()
+        for r in user_value_profiles(df, length=4).collect()
     }
     # user 1: 8 events → buckets of 2: means (0.5, 2.5, 4.5, 6.5)
     assert out[(1, 0)] == 0.5 and out[(1, 3)] == 6.5

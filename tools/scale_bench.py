@@ -411,6 +411,7 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
 
     import pandas as pd
 
+    from lvm_datapipe_spark.operators import graph
     from lvm_datapipe_spark.operators.graph import (
         triangle_counts,
         triangle_counts_driver_dense,
@@ -438,10 +439,9 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
         t0 = time.perf_counter()
         dense = triangle_counts_driver_dense(e, "id_a", "id_b")
         t_dense = round(time.perf_counter() - t0, 2)
-        # a 0 node gate forces triangle_counts onto the distributed engine
-        with mock.patch.dict(
-            os.environ, {"SPARK_GRAFT_DENSE_TRI_MAX_NODES": "0"}
-        ):
+        # a negative node gate forces triangle_counts onto the distributed
+        # engine
+        with mock.patch.object(graph, "DENSE_TRIANGLE_MAX_NODES", -1):
             t0 = time.perf_counter()
             dist = {
                 r["node"]: r["triangles"]
@@ -461,9 +461,10 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
     big = spark.createDataFrame(
         pd.DataFrame({"id_a": u[u < v], "id_b": v[u < v]})
     ).dropDuplicates().persist()
-    tri["above_gate_returns_none"] = (
-        triangle_counts_driver_dense(big, "id_a", "id_b", max_nodes=4096) is None
-    )
+    with mock.patch.object(graph, "DENSE_TRIANGLE_MAX_NODES", 4096):
+        tri["above_gate_returns_none"] = (
+            triangle_counts_driver_dense(big, "id_a", "id_b") is None
+        )
     big.unpersist()
     out["dense_triangles"] = tri
 
