@@ -113,11 +113,10 @@ def generate(
     n_scenes: int | None = None,
     height: int = 24,
     width: int = 32,
-    fps: float = 25.0,
 ) -> FakeVideo:
-    """Deterministic synthetic video: seeded by video_id, 1-6 scenes of 12-75
-    frames each, per-scene base brightness far enough apart that the content
-    detector finds exactly the scene boundaries."""
+    """Deterministic synthetic 25 fps video: seeded by video_id, 1-6 scenes
+    of 12-75 frames each, per-scene base brightness far enough apart that
+    the content detector finds exactly the scene boundaries."""
     seed = abs(hash_str(video_id)) % (2**31)
     rng = np.random.default_rng(seed)
     if n_scenes is None:
@@ -130,7 +129,7 @@ def generate(
         noise = rng.integers(-3, 4, size=(length, height, width))
         seg = np.clip(base + noise, 0, 255).astype(np.uint8)
         segments.append(seg)
-    return FakeVideo(height, width, fps, np.concatenate(segments, axis=0))
+    return FakeVideo(height, width, 25.0, np.concatenate(segments, axis=0))
 
 
 def hash_str(s: str) -> int:

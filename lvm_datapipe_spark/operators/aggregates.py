@@ -93,26 +93,21 @@ def exact_percentiles_driver(
     return out
 
 
-def find_breakpoint(
-    clips: DataFrame,
-    video_col: str = "video_id",
-    video_duration_col: str = "video_duration",
-    clip_duration_col: str = "clip_duration",
-    tolerance_s: float = 0.5,
-) -> DataFrame:
-    """A1 — per-video completeness check: a video is "done" when the sum of
-    its clip durations is within ``tolerance_s`` of the video duration.
+def find_breakpoint(clips: DataFrame) -> DataFrame:
+    """A1 — per-video completeness check: a video (``o_orderkey``) is
+    "done" when the sum of its ``clip_duration`` values is within 0.5 s of
+    its ``video_duration``.
 
     Reference: ``evaluations/scene_cut.py:175-187`` (``find_breakpoint`` —
     a hand-written dict accumulation loop).  Spark: one groupBy + HAVING.
     """
     return (
-        clips.groupBy(video_col)
+        clips.groupBy("o_orderkey")
         .agg(
-            F.first(video_duration_col).alias("video_duration"),
-            decimal_sum(clip_duration_col).alias("clips_duration"),
+            F.first("video_duration").alias("video_duration"),
+            decimal_sum("clip_duration").alias("clips_duration"),
         )
-        .filter(F.col("video_duration") - F.col("clips_duration") < tolerance_s)
+        .filter(F.col("video_duration") - F.col("clips_duration") < 0.5)
     )
 
 
@@ -248,15 +243,10 @@ def merge_agg_state(state: DataFrame, delta_state: DataFrame, keys: list[str]) -
     )
 
 
-def quantile_sketch(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    n_bins: int = 64,
-) -> DataFrame:
+def quantile_sketch(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     """Mergeable fixed-bin QUANTILE sketch — no-rescan quantile
     estimates, as :func:`cm_sketch` gives point frequencies.  The sketch
-    for a group is its per-bin count vector over ``n_bins`` equal-width
+    for a group is its per-bin count vector over 64 equal-width
     bins spanning the group's [min, max]: shard sketches merge by SUMMING
     counts (exact
     associativity — proven in tests), so incremental corpora never rescan
@@ -266,6 +256,7 @@ def quantile_sketch(
     n)`` — everything downstream (:func:`sketch_median`) derives from this
     table.  Deterministic: bin edges come from one min/max aggregate
     (exact doubles both engines), bin index is exact-IEEE arithmetic."""
+    n_bins = 64
     rng = df.groupBy(group_col).agg(
         F.min(F.col(value_col).cast("double")).alias("mn"),
         F.max(F.col(value_col).cast("double")).alias("mx"),
@@ -298,7 +289,7 @@ def sketch_median(sketch: DataFrame, group_col: str) -> DataFrame:
     whose cumulative count reaches the lower-median rank ceil(n/2), estimated
     at the bin midpoint — error is bounded by half a bin width (asserted
     against the exact percentile in tests).  The rank is INTEGER arithmetic
-    ((n+1) DIV 2) and the cumulative window runs over <= n_bins rows per
+    ((n+1) DIV 2) and the cumulative window runs over <= 64 rows per
     group — sketch-sized, never corpus-sized."""
     wc = (
         Window.partitionBy(group_col)
@@ -317,19 +308,18 @@ def sketch_median(sketch: DataFrame, group_col: str) -> DataFrame:
     )
 
 
-def cm_sketch(
-    df: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 256,
-    salt: str = "cm",
-) -> DataFrame:
+#: count-min sketch shape: ``CM_DEPTH`` rows of ``CM_WIDTH`` counters,
+#: row ``d`` hashing ``f"{CM_SALT}{d}:{value}"``
+CM_DEPTH, CM_WIDTH, CM_SALT = 4, 1024, "cmj"
+
+
+def cm_sketch(df: DataFrame, value_col: str) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan) of a value column's
     frequency distribution — the mergeable point-frequency companion to
-    the fixed-bin quantile sketch.  Returns the ``depth x width``
+    the fixed-bin quantile sketch.  Returns the ``CM_DEPTH x CM_WIDTH``
     counter table as rows ``(d, bucket, cnt)`` (absent cells are
     implicit zeros), built with ONE scan: each value fans out to
-    ``depth`` md5-derived buckets (deterministic, engine-portable — same
+    ``CM_DEPTH`` md5-derived buckets (deterministic, engine-portable — same
     idiom as ``sampling.hash_bucket``) and a single keyed count
     aggregates them.
 
@@ -337,17 +327,17 @@ def cm_sketch(
     property: materialize one sketch per day partition, answer any
     coarser window by summing sketches.  A key's estimate is the min
     over the depth rows of its addressed cells and NEVER undercounts;
-    overcount is bounded by e·N/width with prob 1-(1/e)^depth.
+    overcount is bounded by e·N/CM_WIDTH with prob 1-(1/e)^CM_DEPTH.
     Approximate by nature → TEST-verified (overestimate-only + bound +
     merge == whole-corpus sketch), like the other sketches."""
     rows = []
-    for d in range(depth):
+    for d in range(CM_DEPTH):
         h = F.md5(
-            F.concat(F.lit(f"{salt}{d}:"), F.col(value_col).cast("string")).cast(
+            F.concat(F.lit(f"{CM_SALT}{d}:"), F.col(value_col).cast("string")).cast(
                 "binary"
             )
         )
-        b = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % width
+        b = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % CM_WIDTH
         rows.append(F.struct(F.lit(d).alias("d"), b.alias("bucket")))
     return (
         df.select(F.explode(F.array(*rows)).alias("cell"))

@@ -41,13 +41,13 @@ def exact_duplicate_groups(df: DataFrame) -> DataFrame:
 
 def shingle_rows(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     hashed: bool = False,
 ) -> DataFrame:
-    """DISTINCT (id, shingle) rows in fully-relational form: posexplode the
-    tokens, window-lead the next n-1 tokens, concat.  Equivalent output to
+    """DISTINCT (id, shingle) word-n-gram rows of the ``text`` column in
+    fully-relational form: posexplode the tokens, window-lead the next n-1
+    tokens, concat.  Equivalent output to
     exploding a higher-order array of shingles, but every expression is
     flat whole-stage codegen — the higher-order array route measured
     2-10× slower (and its cost shifts unpredictably as the optimizer
@@ -63,7 +63,7 @@ def shingle_rows(
     territory at any realistic corpus shard); keep the string form
     (default) where shingle text must surface or an oracle replays the
     exact strings."""
-    toks = df.select(F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok"))
+    toks = df.select(F.col(id_col), F.posexplode(tokens("text")).alias("pos", "tok"))
     w = Window.partitionBy(id_col).orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", j).over(w).alias(f"t{j}") for j in range(1, n)]
     with_next = toks.select(F.col(id_col), *parts)
@@ -78,48 +78,52 @@ def shingle_rows(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.6,
-    max_shingle_freq: int | None = 1000,
-    shingle_rows_df: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs by word-n-gram Jaccard similarity ≥ threshold.
+#: stop-shingle cap of the Jaccard and containment kernels: a shingle in
+#: more docs is dropped from the intersection (see ngram_jaccard_pairs)
+MAX_SHINGLE_FREQ = 1000
+#: pair thresholds: Jaccard for ngram_jaccard_pairs, max directional
+#: containment for containment_pairs
+JACCARD_THRESHOLD, CONTAINMENT_THRESHOLD = 0.6, 0.8
+
+
+def hashed_shingle_rows(strows: DataFrame) -> DataFrame:
+    """The hashed form of a distinct (doc_id, shingle) STRING table:
+    xxhash64 then re-dedup — semantically identical to
+    ``shingle_rows(hashed=True)`` even under hash collisions (hashing first
+    vs after the string distinct cannot change the (id, hash) set), and the
+    string table's doc-keyed partitioning makes the re-dedup
+    exchange-free."""
+    hashed = strows.select(F.col("doc_id"), F.xxhash64("shingle").alias("shingle"))
+    return hashed.dropDuplicates(["doc_id", "shingle"])
+
+
+def ngram_jaccard_pairs(df: DataFrame, shingle_rows_df: DataFrame | None = None) -> DataFrame:
+    """Near-dup pairs by word-3-gram Jaccard similarity ≥
+    ``JACCARD_THRESHOLD``.
 
     Plan shape: explode shingles → self-equi-join on shingle → count
     intersections per pair → Jaccard from |A|,|B|,|A∩B|.  The join is keyed
-    on the shingle (no cross join); ``max_shingle_freq`` drops stop-shingles
-    that appear in more than N docs — at corpus scale a handful of
+    on the shingle (no cross join); ``MAX_SHINGLE_FREQ`` drops stop-shingles
+    that appear in more than that many docs — at corpus scale a handful of
     ultra-common shingles would otherwise create quadratic hot keys (a
-    shingle shared by 10k docs alone contributes 10k²/2 joined rows).  The
-    cap is ON by default (1000): a shingle in >1000 docs is boilerplate that
-    contributes ~nothing to a ≥0.6 Jaccard decision but dominates the join;
-    pass None to disable (exact Jaccard on every shingle).  Doc sizes |A|,|B|
-    are always uncapped, so for corpora where no shingle exceeds the cap the
+    shingle shared by 10k docs alone contributes 10k²/2 joined rows).  A
+    shingle in >1000 docs is boilerplate that contributes ~nothing to a
+    ≥0.6 Jaccard decision but dominates the join.  Doc sizes |A|,|B| are
+    always uncapped, so for corpora where no shingle exceeds the cap the
     output is bit-identical to the exact form.
     """
     # persist: the shingle rows feed the sizes branch and BOTH sides of the
     # self-join below — without it the shingle computation runs 3×.
     # ``shingle_rows_df`` (prebuilt distinct STRING rows shared with other
     # kernels) derives the hashed form instead of rebuilding it from the
-    # corpus: xxhash64 then dropDuplicates on the hash — semantically
-    # identical to shingle_rows(hashed=True) even under hash collisions
-    # (hashing first vs after the string distinct cannot change the
-    # (id, hash) set), and the string table's doc-keyed partitioning
-    # makes the re-dedup exchange-free.
+    # corpus (hashed_shingle_rows).
     if shingle_rows_df is None:
-        cached = shingle_rows(df, "text", "doc_id", 3, hashed=True).persist()
+        cached = shingle_rows(df, "doc_id", 3, hashed=True).persist()
     else:
-        cached = (
-            shingle_rows_df.select(
-                F.col("doc_id"), F.xxhash64("shingle").alias("shingle")
-            )
-            .dropDuplicates(["doc_id", "shingle"])
-            .persist()
-        )
+        cached = hashed_shingle_rows(shingle_rows_df).persist()
     ex = cached
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    inter = shingle_intersections(ex, "doc_id", max_shingle_freq)
+    inter = shingle_intersections(ex, "doc_id", MAX_SHINGLE_FREQ)
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     out = (
@@ -129,7 +133,7 @@ def ngram_jaccard_pairs(
             "jaccard",
             F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
     return out
@@ -222,14 +226,11 @@ def shingle_intersections(
     return inter
 
 
-def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    max_shingle_freq: int | None = 1000,
-) -> DataFrame:
+def containment_pairs(df: DataFrame) -> DataFrame:
     """ASYMMETRIC near-dup pairs by n-gram containment C(A in B) =
-    |A∩B| / |A| ≥ threshold — the quote/inclusion detector.  Jaccard
-    misses a short doc wholly quoted inside a long one (the union
+    |A∩B| / |A| ≥ ``CONTAINMENT_THRESHOLD`` — the quote/inclusion
+    detector.  Jaccard misses a short doc wholly quoted inside a long one
+    (the union
     denominator dilutes it); containment normalizes by the SMALLER
     side's own size, so full inclusion scores 1.0 regardless of the
     container's length.  Emits one row per unordered pair whose max
@@ -241,9 +242,9 @@ def containment_pairs(
     (id, shingle) rows, the capped posting-list intersection kernel,
     then two keyed joins against the size table.  Same stop-shingle cap
     semantics (sizes always uncapped)."""
-    cached = shingle_rows(df, "text", "doc_id", 3, hashed=True).persist()
+    cached = shingle_rows(df, "doc_id", 3, hashed=True).persist()
     sizes = cached.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    inter = shingle_intersections(cached, "doc_id", max_shingle_freq)
+    inter = shingle_intersections(cached, "doc_id", MAX_SHINGLE_FREQ)
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     out = (
@@ -252,7 +253,8 @@ def containment_pairs(
         .withColumn("cont_a", F.col("n_common") / F.col("n_a"))
         .withColumn("cont_b", F.col("n_common") / F.col("n_b"))
         .filter(
-            (F.col("cont_a") >= threshold) | (F.col("cont_b") >= threshold)
+            (F.col("cont_a") >= CONTAINMENT_THRESHOLD)
+            | (F.col("cont_b") >= CONTAINMENT_THRESHOLD)
         )
         .select("id_a", "id_b", "n_common", "cont_a", "cont_b")
     )
@@ -266,19 +268,12 @@ def containment_pairs(
 MINHASH_K = 16
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = MINHASH_K,
-    shingle_rows_df: DataFrame | None = None,
-) -> DataFrame:
-    """Scan-shaped MinHash: shingle rows → k md5 columns per row (flat
-    expressions stay in whole-stage codegen, unlike higher-order array
-    lambdas which are interpreted per element) → groupBy(doc) with k MIN
-    aggregates (map-side partial min, so the shuffle carries one row per doc
-    per partition).  Bit-identical to a per-doc higher-order array MinHash
+def minhash_signatures(df: DataFrame, shingle_rows_df: DataFrame | None = None) -> DataFrame:
+    """Scan-shaped MinHash: 3-gram shingle rows → ``MINHASH_K`` md5 columns
+    per row (flat expressions stay in whole-stage codegen, unlike
+    higher-order array lambdas which are interpreted per element) →
+    groupBy(doc) with k MIN aggregates (map-side partial min, so the
+    shuffle carries one row per doc per partition).  Bit-identical to a per-doc higher-order array MinHash
     but ~10× faster on wide corpora."""
     # parsed SQL text instead of per-column py4j construction (k×~5 calls)
     # — same values, a fraction of the driver-side build time (see
@@ -287,32 +282,29 @@ def minhash_signatures(
     # kernels over one corpus (dedup_method_agreement) build the distinct
     # (id, shingle) rows ONCE and share them — the posexplode + doc-keyed
     # window pass is the kernels' common dominant stage.
-    ex = (
-        shingle_rows(df, text_col, id_col, n)
-        if shingle_rows_df is None
-        else shingle_rows_df
-    )
+    k = MINHASH_K
+    ex = shingle_rows(df) if shingle_rows_df is None else shingle_rows_df
     hashed = ex.selectExpr(
-        id_col,
+        "doc_id",
         *[
             f"md5(CAST(concat('{i}:', shingle) AS BINARY)) AS h{i}"
             for i in range(k)
         ],
     )
-    agg = hashed.groupBy(id_col).agg(
+    agg = hashed.groupBy("doc_id").agg(
         *[F.expr(f"min(h{i}) AS m{i}") for i in range(k)]
     )
     sig = "array(" + ",".join(f"m{i}" for i in range(k)) + ")"
-    return agg.select(F.col(id_col), F.expr(sig).alias("sig"))
+    return agg.select(F.col("doc_id"), F.expr(sig).alias("sig"))
 
 
-def band_buckets(
-    sig_df: DataFrame, id_col: str = "doc_id", bands: int = 4, rows: int = 4
-) -> DataFrame:
-    """Band a MinHash signature table into (id, band, bucket) rows: bucket =
-    md5 of the band's signature slice.  The joinable form of the LSH index —
-    feed to a self-join directly, or persist bucketed on (band, bucket)
-    via plans.bucketing so REPEATED dedup runs skip the band shuffle."""
+def band_buckets(sig_df: DataFrame) -> DataFrame:
+    """Band a MinHash signature table into (doc_id, band, bucket) rows: 4
+    bands of 4 signature slots, bucket = md5 of the band's slice.  The
+    joinable form of the LSH index — feed to a self-join directly, or
+    persist bucketed on (band, bucket) via plans.bucketing so REPEATED
+    dedup runs skip the band shuffle."""
+    bands, rows = 4, 4
     band_entries = []
     for b in range(bands):
         band_key = F.md5(
@@ -320,24 +312,19 @@ def band_buckets(
         )
         band_entries.append(F.struct(F.lit(b).alias("band"), band_key.alias("bucket")))
     return sig_df.select(
-        F.col(id_col), F.explode(F.array(*band_entries)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
+        F.col("doc_id"), F.explode(F.array(*band_entries)).alias("bb")
+    ).select("doc_id", "bb.band", "bb.bucket")
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows: int = 4,
-    dedup_pairs: bool = True,
-) -> DataFrame:
-    """Band the signature (bands × rows), bucket by md5 of each band slice,
-    and emit distinct candidate pairs sharing any (band, bucket).
+def lsh_candidate_pairs(sig_df: DataFrame, dedup_pairs: bool = True) -> DataFrame:
+    """Band the signature (:func:`band_buckets`: 4 bands × 4 rows), bucket
+    by md5 of each band slice, and emit distinct candidate pairs sharing any
+    (band, bucket).
 
     This is the scale path: the shuffle key is (band, bucket); docs only meet
     if a whole band agrees, so the pair blow-up is bounded by bucket sizes,
     not n².  Probability a pair with Jaccard j becomes a candidate:
-    1 - (1 - j^rows)^bands.
+    1 - (1 - j^4)^4.
 
     ``dedup_pairs=False`` skips the final ``distinct`` exchange and emits
     one row per matching (band, bucket) — for consumers whose downstream
@@ -351,9 +338,9 @@ def lsh_candidate_pairs(
     ``persist()`` would run its cache stage once per side (ARCHITECTURE.md
     §3).  Its blocks live until the caller's sink; session.query_scope
     frees them."""
-    exploded = band_buckets(sig_df, id_col, bands, rows).localCheckpoint()
-    a = exploded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b_ = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    exploded = band_buckets(sig_df).localCheckpoint()
+    a = exploded.select(F.col("doc_id").alias("id_a"), "band", "bucket")
+    b_ = exploded.select(F.col("doc_id").alias("id_b"), "band", "bucket")
     out = (
         a.join(b_, ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -374,9 +361,20 @@ def minhash_lsh_pairs(
     (id, shingle) table to :func:`minhash_signatures`; ``dedup_pairs``
     forwards to :func:`lsh_candidate_pairs`."""
     return lsh_candidate_pairs(
-        minhash_signatures(df, "text", "doc_id", 3, MINHASH_K, shingle_rows_df),
-        "doc_id", 4, 4, dedup_pairs,
+        minhash_signatures(df, shingle_rows_df), dedup_pairs
     )
+
+
+def minhash_candidates(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(string shingle rows, MinHash signatures, LSH candidate pairs) of a
+    (doc_id, text) table, each persisted, for the estimator audits that
+    read all three: the signatures are built from the shared shingle table
+    (one posexplode + doc-keyed window pass over the corpus), and the pairs
+    feed the estimate plus the exact side's semi-join restrictions."""
+    strows = shingle_rows(df).persist()
+    sigs = minhash_signatures(df, shingle_rows_df=strows).persist()
+    pairs = lsh_candidate_pairs(sigs).persist()
+    return strows, sigs, pairs
 
 
 # -- SimHash -----------------------------------------------------------------
@@ -384,9 +382,10 @@ def minhash_lsh_pairs(
 SIMHASH_BITS = 32
 
 
-def simhash_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """SimHash as a 32-char '0'/'1' string per doc: bit b is 1 iff the sum
-    over tokens of (2·bit_b(token) − 1) is positive, where bit_b is taken
+def simhash_docs(df: DataFrame) -> DataFrame:
+    """SimHash of a (doc_id, text) table as a 32-char '0'/'1' string per
+    doc: bit b is 1 iff the sum over tokens of (2·bit_b(token) − 1) is
+    positive, where bit_b is taken
     from the token's md5 hex digits — pure string + integer bit ops,
     identical in Spark and DuckDB (no platform integer hashing).
 
@@ -397,16 +396,16 @@ def simhash_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     """
     # parsed SQL text instead of ~250 py4j Column constructions — same
     # values (integer/string ops), ~1 s less driver time per query build
-    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens("text")).alias("tok"))
     hashed = toks.withColumn("h", F.md5(F.col("tok").cast("binary")))
     digits = hashed.selectExpr(
-        id_col,
+        "doc_id",
         *[
             f"CAST(conv(substring(h, {d + 1}, 1), 16, 10) AS INT) AS d{d}"
             for d in range(SIMHASH_BITS // 4)
         ],
     )
-    votes = digits.groupBy(id_col).agg(
+    votes = digits.groupBy("doc_id").agg(
         *[
             F.expr(f"sum((shiftright(d{b // 4}, {b % 4}) & 1) * 2 - 1) AS v{b}")
             for b in range(SIMHASH_BITS)
@@ -415,22 +414,16 @@ def simhash_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     bits = ", ".join(
         f"(CASE WHEN v{b} > 0 THEN '1' ELSE '0' END)" for b in range(SIMHASH_BITS)
     )
-    return votes.select(F.col(id_col), F.expr(f"concat({bits})").alias("simhash"))
+    return votes.select(F.col("doc_id"), F.expr(f"concat({bits})").alias("simhash"))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    dedup_pairs: bool = True,
-) -> DataFrame:
-    """Near-dup pairs with SimHash Hamming distance ≤ max_hamming.
+def simhash_pairs(df: DataFrame, dedup_pairs: bool = True) -> DataFrame:
+    """Near-dup pairs with SimHash Hamming distance ≤ 3.
 
-    Scale path: split the fingerprint into ``bands`` contiguous slices; by
-    pigeonhole, any pair within ``max_hamming < bands`` differing bits shares
-    at least one identical band — so candidates come from equi-joins on
-    (band_idx, band_slice), never a cross join.  The result is EXACT for
-    ``max_hamming <= bands - 1``.
+    Scale path: split the fingerprint into 4 contiguous band slices; by
+    pigeonhole, any pair within 3 < 4 differing bits shares at least one
+    identical band — so candidates come from equi-joins on (band_idx,
+    band_slice), never a cross join, and the result is EXACT.
 
     ``dedup_pairs=False`` skips the final ``distinct`` exchange (duplicate
     rows appear when a pair agrees on >1 band) — see
@@ -438,13 +431,13 @@ def simhash_pairs(
     dedup_method_agreement (~83k simhash pairs at sf0.1 vs ~256 each for
     the other two methods), so its dedup shuffle is the one worth skipping.
     """
-    assert max_hamming <= bands - 1, "banding is only exact for max_hamming <= bands-1"
+    max_hamming, bands = 3, 4
     # persist: the fingerprint table is tiny (id + 32-char string) and feeds
     # both sides of the band self-join; carry the bit-packed long so the
     # pair-level hamming is ONE bit_count(xor) instead of 32 substring
     # comparisons over millions of candidates
     sh = (
-        simhash_docs(df, "text", "doc_id")
+        simhash_docs(df)
         .withColumn("sh_bits", F.conv("simhash", 2, 10).cast("long"))
         .persist()
     )
@@ -486,16 +479,8 @@ def minhash_lsh_pairs_cross(new_df: DataFrame, corpus_df: DataFrame) -> DataFram
     |new| × collisions: band the new batch, band the corpus, and
     equi-join across.  Output: (new_id, corpus_id) distinct candidates —
     feed to exact verification, then drop/keep the new docs."""
-    n = 3
-    k = MINHASH_K
-    bands = 4
-    rows = 4
-    bb_new = band_buckets(
-        minhash_signatures(new_df, "text", "doc_id", n, k), "doc_id", bands, rows
-    ).persist()
-    bb_corpus = band_buckets(
-        minhash_signatures(corpus_df, "text", "doc_id", n, k), "doc_id", bands, rows
-    ).persist()
+    bb_new = band_buckets(minhash_signatures(new_df)).persist()
+    bb_corpus = band_buckets(minhash_signatures(corpus_df)).persist()
     out = (
         bb_new.select(F.col("doc_id").alias("new_id"), "band", "bucket")
         .join(

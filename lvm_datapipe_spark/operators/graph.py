@@ -121,7 +121,7 @@ def cap_baskets(
 ) -> DataFrame:
     """Drop baskets larger than ``max_basket_size`` items before a
     pairwise (item, item) self-join — the co-occurrence twin of
-    ``dedup.ngram_jaccard_pairs``'s ``max_shingle_freq`` stop-shingle
+    ``dedup.ngram_jaccard_pairs``'s ``MAX_SHINGLE_FREQ`` stop-shingle
     guard.
 
     Every basket-pair build (triangles, k-core, lift/cosine/PMI edge
@@ -186,15 +186,14 @@ KCORE_BROADCAST_DOOMED_MAX = 2_000_000
 KCORE_MAX_ROUNDS = 30
 
 
-def kcore(
-    edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    k: int = 3,
-    stats: dict | None = None,
-) -> DataFrame:
-    """CONVERGED k-core peel (Seidman 1983): repeatedly delete nodes with
-    fewer than ``k`` surviving neighbors until the alive set stabilizes,
+#: kcore's core order: a survivor keeps at least this many alive neighbors
+KCORE_K = 3
+
+
+def kcore(edges: DataFrame, stats: dict | None = None) -> DataFrame:
+    """CONVERGED k-core peel (Seidman 1983) of a ``(p1, p2)`` edge list:
+    repeatedly delete nodes with fewer than ``k = KCORE_K`` surviving
+    neighbors until the alive set stabilizes,
     returning ``(node, core_degree)`` for the survivors (degree counted
     within the FINAL core — at the fixpoint every survivor's degree is
     ≥ k by construction).
@@ -250,10 +249,12 @@ def kcore(
     # after its shuffle (a self-loop once).  A NULL id is no node, as in a
     # SQL join: the frontier joins could never match it, so it would be
     # doomed again every round
-    lo = F.col(dst) < F.col(src)
-    canon = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
-        F.when(lo, F.col(dst)).otherwise(F.col(src)).alias("a"),
-        F.when(lo, F.col(src)).otherwise(F.col(dst)).alias("b"),
+    k = KCORE_K
+    src, dst = F.col("p1"), F.col("p2")
+    lo = dst < src
+    canon = edges.filter(src.isNotNull() & dst.isNotNull()).select(
+        F.when(lo, dst).otherwise(src).alias("a"),
+        F.when(lo, src).otherwise(dst).alias("b"),
     ).distinct()
     sym = fresh_local_checkpoint(
         canon.select(
@@ -338,21 +339,20 @@ def kcore(
     return out
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-    n_iter: int = 5,
-) -> DataFrame:
-    """Weighted PageRank in FIXED-POINT integer arithmetic — the second
-    iterative graph operator next to :func:`connected_components` (power
-    iteration instead of contraction).
+#: pagerank's fixed iteration count (the SQL replay unrolls as many steps)
+PAGERANK_ITERS = 5
+
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Weighted PageRank of a ``(src, dst, w)`` edge list (integer weights)
+    in FIXED-POINT integer arithmetic — the second iterative graph operator
+    next to :func:`connected_components` (power iteration instead of
+    contraction).
 
     Two deliberate design points:
 
     * **Fixed iteration count, no convergence action.**  The whole run is
-      ONE job of ``n_iter`` chained keyed shuffles — no per-round driver
+      ONE job of ``PAGERANK_ITERS`` chained keyed shuffles — no per-round driver
       round-trip — and the computation is exactly replayable as an
       unrolled SQL query (a convergence loop is not; recursive CTEs
       cannot aggregate in the recursive term).
@@ -388,11 +388,10 @@ def pagerank(
 
     fr = Fraction("0.85")
     num, den = fr.numerator, fr.denominator
-    w_col = (
-        F.col(weight).cast("long") if weight else F.lit(1).cast("long")
-    )
     e = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst"), w_col.alias("_w")
+        F.col("src").alias("_src"),
+        F.col("dst").alias("_dst"),
+        F.col("w").cast("long").alias("_w"),
     )
     out_w = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
     ew = e.join(out_w, "_src").persist()
@@ -429,7 +428,7 @@ def pagerank(
     ranks = nodes.select(
         "_node", F.lit(scale // n_nodes).cast("long").alias("_r")
     )
-    for i in range(n_iter):
+    for _ in range(PAGERANK_ITERS):
         contrib = (
             ew.join(ranks, ew._src == ranks._node)
             .select(
@@ -448,13 +447,10 @@ def pagerank(
                 + F.expr(f"({num} * coalesce(_s, 0L)) DIV {den}")
             ).alias("_r"),
         )
-        # chain iterations LAZILY — the docstring's "one job of n_iter
-        # chained keyed shuffles" contract; a localCheckpoint per round
-        # was n_iter driver-synchronized jobs on |V|-sized state.  Only
-        # truncate mid-run on long runs (plan depth 2 shuffles/iter),
-        # then once at the end so the persisted inputs can be released.
-        if (i + 1) % 8 == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint()
+    # iterations chain LAZILY — the docstring's "one job of chained keyed
+    # shuffles" contract; a localCheckpoint per round would be one
+    # driver-synchronized job per round on |V|-sized state.  Truncate once
+    # at the end so the persisted inputs can be released.
     ranks = ranks.localCheckpoint()
     ew.unpersist(blocking=False)
     nodes.unpersist(blocking=False)
@@ -998,11 +994,7 @@ def _basket_pair_gate(baskets: DataFrame, order_col: str) -> bool:
 
 
 def khop_reachability_driver_dense_from_baskets(
-    baskets: DataFrame,
-    order_col: str,
-    item_col: str,
-    n_seeds: int = 5,
-    max_hops: int = 3,
+    baskets: DataFrame, order_col: str, item_col: str
 ) -> list[tuple[int, int, int]] | None:
     """Bounded-depth BFS on a METADATA-SIZED co-occurrence graph, computed
     on the driver with the packed-bitset adjacency — the k-hop sibling of
@@ -1010,16 +1002,16 @@ def khop_reachability_driver_dense_from_baskets(
     basket collect, same fallback contract).
 
     Semantics pinned to graph_reachability_3hop's declared SQL: seeds are
-    the ``n_seeds`` highest-degree nodes (degree = distinct neighbors;
-    ties by ascending node id); hop h's frontier is the neighbor set of
-    hop h−1's; a node's ``min_hops`` is the smallest h at which it
-    appears; the seed itself is excluded.  Returns
+    the 5 highest-degree nodes (degree = distinct neighbors; ties by
+    ascending node id); hop h ≤ 3's frontier is the neighbor set of hop
+    h−1's; a node's ``min_hops`` is the smallest h at which it appears;
+    the seed itself is excluded.  Returns
     ``[(seed, min_hops, n_reachable), ...]`` or ``None`` above a gate.
 
     Why the driver wins here: each distributed hop is a frontier⋈edges
     join + a distinct exchange over ~frontier×degree rows (≈4.5M on the
     91%-dense 1k-node supplier graph), three times; the bitset form is
-    max_hops row-gathers + OR-reduces over a ≤75 MB packed matrix —
+    three row-gathers + OR-reduces over a ≤75 MB packed matrix —
     microseconds — and the collect it needs is the same bounded basket
     table the triangle kernel already ships."""
     import numpy as np
@@ -1041,16 +1033,16 @@ def khop_reachability_driver_dense_from_baskets(
     deg = byte.sum(axis=1, dtype=np.int64)
     packed = np.packbits(byte, axis=1)
     del byte
-    # top-n_seeds by (degree DESC, original id ASC); isolated nodes can
-    # seed too (they then reach nothing, matching the SQL's empty h1)
+    # top-5 by (degree DESC, original id ASC); isolated nodes can seed too
+    # (they then reach nothing, matching the SQL's empty h1)
     order = np.lexsort((nodes, -deg))
-    seed_codes = order[:n_seeds]
+    seed_codes = order[:5]
     out: list[tuple[int, int, int]] = []
     for sc in seed_codes:
         seen = np.zeros(n, dtype=bool)
         frontier = np.unpackbits(packed[sc], count=n).astype(bool)
         counts = []
-        for _hop in range(max_hops):
+        for _hop in range(3):
             newly = frontier.copy()
             newly[sc] = False  # node <> seed
             counts.append((newly & ~seen).sum())

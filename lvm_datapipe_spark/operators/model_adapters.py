@@ -298,14 +298,13 @@ class LlavaCaptionAdapter(ScorerAdapter):
         # the reference's conv-template render (llava_caption.py:111-129),
         # golden-tested torch-free in functions/prompts.py; the HF processor
         # splices the image tokens
-        from lvm_datapipe_spark.functions.prompts import llava_caption_prompt
+        from lvm_datapipe_spark.functions.prompts import LLAVA_CAPTION_PROMPT
 
-        prompt = llava_caption_prompt("llava_v1")
         out = []
         with torch.no_grad():
             for f in frames:
                 inputs = processor(
-                    text=prompt, images=Image.fromarray(_gray_to_rgb(f)),
+                    text=LLAVA_CAPTION_PROMPT, images=Image.fromarray(_gray_to_rgb(f)),
                     return_tensors="pt",
                 ).to(device)
                 ids = model.generate(**inputs, max_new_tokens=64)

@@ -3,7 +3,7 @@
 Language-model training consumes fixed-length token windows (e.g. 4096
 tokens), not documents.  The standard streaming pack — concatenate
 documents in a deterministic order into one token stream, then cut the
-stream every ``ctx_len`` tokens — is a pure prefix-sum computation, which
+stream every ``CTX_LEN`` tokens — is a pure prefix-sum computation, which
 makes it exact, order-independent-reproducible, and window-function-shaped
 (no sequential driver loop, unlike first-fit bin packing, which is
 inherently serial and gains ~nothing in padding efficiency at web scale).
@@ -18,12 +18,9 @@ Per document this emits:
 - ``pack_offset``: position within its first window.
 
 Scale shape: one window cumsum per shard.  A single global ordering would
-serialize on one partition at 100 TB, so packing is per-``shard_col``
-(e.g. source, date bucket, or a hash bucket from
-``operators.sampling.hash_bucket``): each shard's stream is independent,
-the window partitions by shard, and shards pack in parallel.  Pass
-``shard_col=None`` only for corpus sizes where one sort partition is fine
-(tests, small curation runs).
+serialize on one partition at 100 TB, so packing is per language shard
+(``lang``): each shard's stream is independent, the window partitions by
+shard, and shards pack in parallel.
 """
 
 from __future__ import annotations
@@ -32,21 +29,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pack_sequences(
-    df: DataFrame,
-    token_col: str,
-    order_col: str = "doc_id",
-    shard_col: str | None = None,
-    ctx_len: int = 2048,
-) -> DataFrame:
-    """Streaming concat-and-chunk packing: documents ordered by
-    ``order_col`` (within ``shard_col`` if given) are laid head-to-tail in
-    a token stream cut every ``ctx_len`` tokens.  Deterministic given the
-    ordering columns — exactly replayable as a SQL window query."""
-    if shard_col is None:
-        w = Window.orderBy(order_col)
-    else:
-        w = Window.partitionBy(shard_col).orderBy(order_col)
+#: packed context length: the token stream is cut every CTX_LEN tokens
+CTX_LEN = 512
+
+
+def pack_sequences(df: DataFrame, token_col: str) -> DataFrame:
+    """Streaming concat-and-chunk packing: documents ordered by ``doc_id``
+    within each ``lang`` are laid head-to-tail in a token stream cut every
+    ``CTX_LEN`` tokens.  Deterministic given the ordering columns — exactly
+    replayable as a SQL window query."""
+    ctx_len = CTX_LEN
+    w = Window.partitionBy("lang").orderBy("doc_id")
     cum = F.sum(F.col(token_col)).over(w)
     out = df.withColumn("start_offset", cum - F.col(token_col))
     return (

@@ -12,33 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# -- filters (F1-F8) ---------------------------------------------------------
-
-
-def filter_min_duration(clips: DataFrame, min_s: float = 1.0, col: str = "clip_duration") -> DataFrame:
-    """F1 — duration predicate before expensive model stages.
-
-    Reference: ``evaluations/coca_caption.py:72``, ``llava_caption.py:75``
-    (``if video_duration > 1``).  Declarative filter → Catalyst pushes it to
-    the parquet scan, so at 100 TB the row groups that fail the predicate are
-    never read.
-    """
-    return clips.filter(F.col(col) > min_s)
-
-
-def resume_anti_join(clips: DataFrame, done: DataFrame, key: str = "clip_id") -> DataFrame:
-    """F2/J1 — resume: drop rows whose output already exists.
-
-    Reference: per-row ``os.path.exists`` against the sink dir
-    (``evaluations/aesthetic_score.py:98``, ``imaging_quality.py:111``,
-    ``ocr_score.py:64``).  Spark: LEFT ANTI equi-join against a scan of the
-    sink — the done-list is usually small relative to the corpus, so Catalyst
-    broadcasts it and the anti-join is a map-side hash probe (no shuffle of
-    the big side).
-    """
-    return clips.join(done.select(key).distinct(), on=key, how="left_anti")
-
-
 # -- windows / top-k / set ops (§2.6) ---------------------------------------
 
 

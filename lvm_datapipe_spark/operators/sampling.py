@@ -66,18 +66,14 @@ def split_assign(df: DataFrame, key_col: str, weights: dict[str, float]) -> Data
 
 
 def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    key_col: str,
-    fractions: dict[str, float],
-    default_fraction: float = 0.0,
+    df: DataFrame, strata_col: str, key_col: str, fractions: dict[str, float]
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. language rebalancing: keep
     10% of English, 100% of low-resource languages).  The keep decision
     hashes the row key, so each stratum's sample is itself stable; strata
-    not listed get ``default_fraction``."""
+    not listed are kept whole."""
     bucket = hash_bucket(key_col, N_BUCKETS, "strata")
-    thresh: Column = F.lit(int(round(default_fraction * N_BUCKETS)))
+    thresh: Column = F.lit(N_BUCKETS)
     for value, frac in fractions.items():
         thresh = F.when(
             F.col(strata_col) == value, F.lit(int(round(frac * N_BUCKETS)))

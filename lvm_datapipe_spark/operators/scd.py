@@ -33,19 +33,17 @@ from pyspark.sql import functions as F
 __all__ = ["scd2_merge"]
 
 
-def scd2_merge(
-    current: DataFrame,
-    updates: DataFrame,
-    key: str = "doc_id",
-    batch_date: str = "2024-06-01",
-) -> DataFrame:
-    """Merge an update snapshot into an SCD2 table.
+def scd2_merge(current: DataFrame, updates: DataFrame) -> DataFrame:
+    """Merge the 2024-06-01 update snapshot into an SCD2 table.
 
-    ``current`` columns: key, fp, from_col, to_col (to_col NULL = open row).
-    ``updates`` columns: key, fp.  Returns the merged SCD2 table with the
-    same four columns.  Validity bounds are ISO date STRINGS — engine- and
-    timezone-portable, lexically ordered.
+    ``current`` columns: doc_id, fingerprint, valid_from, valid_to
+    (valid_to NULL = open row).  ``updates`` columns: doc_id, fingerprint.
+    Returns the merged SCD2 table with the same four columns.  Validity
+    bounds are ISO date STRINGS — engine- and timezone-portable, lexically
+    ordered.
     """
+    key = "doc_id"
+    batch_date = "2024-06-01"
     fp = "fingerprint"
     from_col = "valid_from"
     to_col = "valid_to"
@@ -103,13 +101,7 @@ def scd2_merge(
     return hist.unionByName(merged)
 
 
-def temporal_join(
-    facts: DataFrame,
-    versions: DataFrame,
-    key: str,
-    fact_ts: str,
-    how: str = "inner",
-) -> DataFrame:
+def temporal_join(facts: DataFrame, versions: DataFrame, key: str, fact_ts: str) -> DataFrame:
     """Join facts to the dimension VERSION valid at each fact's timestamp —
     the read side of SCD2 (the write side is :func:`scd2_merge`).
 
@@ -122,13 +114,11 @@ def temporal_join(
     versions per key) guarantees at most one match per fact, so the join
     cannot fan out.
 
-    ``how="left"`` keeps facts whose timestamp precedes the first version
-    (null dimension columns) — the common backfill case.
+    A LEFT join: facts whose timestamp precedes the first version keep
+    null dimension columns — the common backfill case.
     """
     from_col = "valid_from"
     to_col = "valid_to"
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
     f, v = facts.alias("f"), versions.alias("v")
     cond = (
         (F.col(f"f.{key}") == F.col(f"v.{key}"))
@@ -138,7 +128,7 @@ def temporal_join(
             | (F.col(f"f.{fact_ts}") < F.col(f"v.{to_col}"))
         )
     )
-    joined = f.join(v, cond, "inner" if how == "inner" else "left_outer")
+    joined = f.join(v, cond, "left_outer")
     return joined.select(
         "f.*",
         *[

@@ -32,6 +32,11 @@ IVF_SEED = 42
 PQ_SUBSPACES = 32
 PQ_KSUB = 8
 PQ_SEED = 7
+#: neighbors every top-k kernel returns per query
+TOPK = 10
+#: semdedup_keep's duplicate cosine: same-cell pairs at or above it are
+#: duplicates
+SEMDEDUP_EPS = 0.4
 
 
 def as_double(vec: Column | str) -> Column:
@@ -96,8 +101,8 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set against the corpus.
+def brute_force_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-``TOPK``: broadcast the query set against the corpus.
 
     Plan: one scan of ``emb``, per-row loop over broadcast queries (no
     shuffle), then a per-query top-k window.  Ties broken by neighbor id so
@@ -126,22 +131,17 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFra
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank")
     )
 
 
-def unit_vectors(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
-    """Project each vector to unit length ONCE (norm materialized as a row
-    column before the per-element divide), so downstream pairwise cosine is
-    a single dot instead of three."""
+def unit_vectors(emb: DataFrame) -> DataFrame:
+    """Project each ``embedding`` to unit length ONCE (norm materialized as
+    a row column before the per-element divide), so downstream pairwise
+    cosine is a single dot instead of three."""
     withnorm = emb.select(
-        F.col(id_col), as_double(vec_col).alias("v")
+        F.col("vec_id"), as_double("embedding").alias("v")
     ).withColumn(
         # fold == flat sum bit-exactly (leading 0.0+ is exact); one parsed
         # expression instead of 64 element_at Column constructions
@@ -152,16 +152,12 @@ def unit_vectors(
         ),
     )
     return withnorm.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.expr("transform(v, x -> x / nrm)").alias("vn"),
     )
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """All pairs with cosine ≥ threshold.  Exact (quadratic) form — since
     r5 this is a PYTEST-ONLY recall oracle (tests/test_dedup_similarity):
     no declared query uses it, because the corpus×corpus crossJoin cannot
@@ -174,7 +170,7 @@ def embedding_near_dup_pairs(
     the pairwise dot, recomputing the whole normalization per term (measured
     ~10× slowdown).  It stays cached until the caller's sink;
     :func:`lvm_datapipe_spark.session.query_scope` frees it."""
-    u = unit_vectors(emb, "vec_id", "embedding", dim=dim).persist()
+    u = unit_vectors(emb).persist()
     a = u.select(F.col("vec_id").alias("id_a"), F.col("vn").alias("va"))
     b = u.select(F.col("vec_id").alias("id_b"), F.col("vn").alias("vb"))
     out = (
@@ -251,20 +247,16 @@ def lsh_ann_candidates(
     emb: DataFrame,
     n_planes: int | None = 4,
     n_tables: int = 8,
-    dim: int = DEFAULT_DIM,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dedup: bool = True,
 ) -> DataFrame:
-    """Multi-table hyperplane LSH: candidates over ``n_tables`` independent
-    plane sets to trade compute for recall.  Output: distinct (id_a < id_b)
-    candidate pairs — feed to exact cosine for verification.  With
-    ``dedup=False`` the pairs keep one row per bucket collision (a pair
-    colliding in k tables appears k times): a verifier that filters to a
-    small survivor set can dedup AFTER its filter far cheaper than
-    shuffling the full candidate set here (the cos_sim it attaches is a
-    pure function of the pair, so post-filter distinct is set-identical).
+    """Multi-table hyperplane LSH over the ``(vec_id, embedding)`` corpus:
+    candidates over ``n_tables`` independent plane sets to trade compute
+    for recall.  Output: (id_a < id_b) candidate pairs, one row per bucket
+    collision (a pair colliding in k tables appears k times) — feed to
+    exact cosine for verification: a verifier that filters to a small
+    survivor set dedups AFTER its filter far cheaper than shuffling the
+    full candidate set here (the cos_sim it attaches is a pure function of
+    the pair, so post-filter distinct is set-identical).
 
     Plan shape: ONE corpus scan computes every table's bucket key
     (n_tables × n_planes literal-plane dot folds, all codegen), explodes to
@@ -287,7 +279,7 @@ def lsh_ann_candidates(
         # budget (the IVF-probe rule: scalar driver decisions are fine,
         # data never is).  It is observed on the corpus checkpoint the
         # bucket table then reads, so it costs no job of its own.
-        emb, n_rows = _observed_corpus(emb, id_col, vec_col)
+        emb, n_rows = _observed_corpus(emb, "vec_id", "embedding")
         n_planes = auto_n_planes(n_rows)
     entries = []
     # fold dots for the plane literals: n_tables × n_planes flat dot trees
@@ -296,31 +288,28 @@ def lsh_ann_candidates(
     # compact at any plane count.  All tables' buckets are
     # ONE parsed expression: the Column-API form cost ~1.5 s of driver-side
     # py4j/lambda construction PER QUERY BUILD at 8×4×64 (see sql_fold_dot).
-    for t, planes in enumerate(lsh_table_planes(n_planes, n_tables, dim, seed)):
+    for t, planes in enumerate(lsh_table_planes(n_planes, n_tables, DEFAULT_DIM, seed)):
         bits = " + ".join(
             f"(CASE WHEN {sql_fold_dot('_v', p)} >= 0.0D THEN {1 << i}L ELSE 0L END)"
             for i, p in enumerate(planes)
         )
         entries.append(f"struct({t} AS tbl, ({bits}) AS bucket)")
     buckets = (
-        emb.select(F.col(id_col), as_double(vec_col).alias("_v"))
+        emb.select(F.col("vec_id"), as_double("embedding").alias("_v"))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.explode(F.expr("array(" + ",".join(entries) + ")")).alias("tb"),
         )
-        .select(id_col, "tb.tbl", "tb.bucket")
+        .select("vec_id", "tb.tbl", "tb.bucket")
         .localCheckpoint()
     )
-    a = buckets.select(F.col(id_col).alias("id_a"), "tbl", "bucket")
-    b = buckets.select(F.col(id_col).alias("id_b"), "tbl", "bucket")
-    out = (
+    a = buckets.select(F.col("vec_id").alias("id_a"), "tbl", "bucket")
+    b = buckets.select(F.col("vec_id").alias("id_b"), "tbl", "bucket")
+    return (
         a.join(b, ["tbl", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    if dedup:
-        out = out.distinct()
-    return out
 
 
 def lsh_near_dup_pairs(
@@ -360,10 +349,8 @@ def lsh_near_dup_pairs(
     corpus, n_rows = _observed_corpus(emb, "vec_id", "embedding")
     if "n_planes" in lsh_kwargs and lsh_kwargs["n_planes"] is None:
         lsh_kwargs["n_planes"] = auto_n_planes(n_rows)
-    cand = lsh_ann_candidates(
-        corpus, id_col="vec_id", vec_col="embedding", dim=DEFAULT_DIM, dedup=False, **lsh_kwargs
-    )
-    u = unit_vectors(corpus, "vec_id", "embedding", dim=DEFAULT_DIM).localCheckpoint()
+    cand = lsh_ann_candidates(corpus, **lsh_kwargs)
+    u = unit_vectors(corpus).localCheckpoint()
     a = u.select(F.col("vec_id").alias("id_a"), F.col("vn").alias("va"))
     b = u.select(F.col("vec_id").alias("id_b"), F.col("vn").alias("vb"))
     return (
@@ -403,28 +390,21 @@ def _ivf_cell_sims_sql(n_cells: int, dim: int, seed: int, vec: str, norm: str) -
     return f"array({cells})"
 
 
-def ivf_fixed_assign(
-    emb: DataFrame,
-    n_cells: int = IVF_CELLS,
-    dim: int = DEFAULT_DIM,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_id: str = "neighbor_id",
-    keep_norm: bool = False,
-) -> DataFrame:
-    """Corpus side of IVF: (id, vector, cell) with cell = argmax-cosine
-    centroid (first index on ties) — one scan, no shuffle.
+def ivf_fixed_assign(emb: DataFrame, keep_norm: bool = False) -> DataFrame:
+    """Corpus side of IVF: (neighbor_id, nv, cell) — the ``vec_id``, the
+    ``embedding`` and its cell = argmax-cosine centroid of the fixed
+    ``IVF_CELLS`` quantizer (first index on ties) — one scan, no shuffle.
 
     ``keep_norm=True`` retains the already-computed ``vnorm`` column so a
     downstream exact-cosine verify can divide by it instead of re-folding
     sqrt(dot(nv, nv)) per candidate pair (dot_flat is bit-identical to the
     fold — same association order)."""
     out = (
-        emb.select(F.col(id_col).alias(out_id), as_double(vec_col).alias("nv"))
-        .withColumn("vnorm", F.sqrt(dot_flat(F.col("nv"), F.col("nv"), dim)))
+        emb.select(F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv"))
+        .withColumn("vnorm", F.sqrt(dot_flat(F.col("nv"), F.col("nv"), DEFAULT_DIM)))
         .withColumn(
-            "sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, seed, "nv", "vnorm"))
+            "sims",
+            F.expr(_ivf_cell_sims_sql(IVF_CELLS, DEFAULT_DIM, IVF_SEED, "nv", "vnorm")),
         )
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
@@ -459,32 +439,22 @@ def _ivf_probe_cells(
     )
 
 
-def ivf_fixed_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = IVF_CELLS,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF top-k over the FIXED quantizer: assign each corpus vector to the
-    argmax-cosine centroid cell (first index on ties), probe the ``n_probe``
-    best cells per query, exact-rank inside them.  Every step is a
-    deterministic expression over literals — fully oracle-checkable.
+def ivf_fixed_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF top-``TOPK`` over the FIXED quantizer: assign each corpus vector
+    to the argmax-cosine centroid cell of ``IVF_CELLS`` (first index on
+    ties), probe the ``IVF_PROBES`` best cells per query, exact-rank inside
+    them.  Every step is a deterministic expression over literals — fully
+    oracle-checkable.
 
     Scale shape: assignment is one scan (16 literal-dot folds in codegen);
     the probe join is keyed on the cell (at 100 TB, PARTITION the stored
     corpus by cell so probing is partition pruning, not a shuffle)."""
-    dim = DEFAULT_DIM
-    seed = IVF_SEED
-    corpus = ivf_fixed_assign(
-        emb, n_cells, dim, seed, "vec_id", "embedding", out_id="neighbor_id",
-        keep_norm=True,
-    )
-    qs = _ivf_probe_cells(queries, n_cells, dim, seed, "vec_id", "embedding")
+    corpus = ivf_fixed_assign(emb, keep_norm=True)
+    qs = _ivf_probe_cells(queries, IVF_CELLS, DEFAULT_DIM, IVF_SEED, "vec_id", "embedding")
     wp = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe = (
         qs.withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= n_probe)
+        .filter(F.col("_r") <= IVF_PROBES)
         .select("query_id", "qv", "qn", "cell")
     )
     cand = corpus.join(probe, "cell").filter(
@@ -500,7 +470,7 @@ def ivf_fixed_topk(
     wr = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank")
     )
 
@@ -508,16 +478,11 @@ def ivf_fixed_topk(
 # -- IVF (inverted-file) ANN -------------------------------------------------
 
 
-def ivf_index(
-    emb: DataFrame,
-    n_cells: int = IVF_CELLS,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list[list[float]]]:
-    """Coarse quantizer: k-means (MLlib, fixed seed) over the corpus; every
-    vector is assigned to its nearest centroid's cell.  Returns the
-    cell-assigned corpus and the centroid list.
+def ivf_index(emb: DataFrame) -> tuple[DataFrame, list[list[float]]]:
+    """Coarse quantizer: k-means (MLlib, ``IVF_CELLS`` cells, seed
+    ``IVF_SEED``) over the ``(vec_id, embedding)`` corpus; every vector is
+    assigned to its nearest centroid's cell.  Returns the cell-assigned
+    ``(vec_id, v, cell)`` corpus and the centroid list.
 
     At 100 TB: train on a sample, assign in one scan, and PARTITION the
     stored table by cell — each query then reads only n_probe cells
@@ -526,8 +491,9 @@ def ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
 
+    id_col = "vec_id"
     vecs = (
-        emb.select(F.col(id_col), as_double(vec_col).alias("v"))
+        emb.select(F.col(id_col), as_double("embedding").alias("v"))
         # a NULL vector cannot be assigned to a cell (and crashes the
         # KMeans fit) — un-indexable rows are dropped, matching the
         # brute-force/LSH paths where a null cosine filters out
@@ -549,7 +515,7 @@ def ivf_index(
             [[float(x) for x in row["v"]]],
         )
     km = KMeans(
-        k=min(n_cells, n), seed=seed, featuresCol="features",
+        k=min(IVF_CELLS, n), seed=IVF_SEED, featuresCol="features",
         predictionCol="cell",
     )
     model = km.fit(vecs)
@@ -558,19 +524,13 @@ def ivf_index(
     return assigned, centroids
 
 
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = IVF_CELLS,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF approximate top-k: probe only the ``n_probe`` cells whose
-    centroids are most cosine-similar to the query, then exact-rank inside
-    them.  Work per query drops from |corpus| to ~|corpus|·n_probe/n_cells;
-    recall is tunable via n_probe (n_probe = n_cells → exact).
+def ivf_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF approximate top-``TOPK``: probe only the ``IVF_PROBES`` of the
+    ``IVF_CELLS`` cells whose centroids are most cosine-similar to the
+    query, then exact-rank inside them.  Work per query drops from |corpus|
+    to ~|corpus|·IVF_PROBES/IVF_CELLS (probing every cell → exact).
     """
-    assigned, centroids = ivf_index(emb, n_cells, IVF_SEED, "vec_id", "embedding")
+    assigned, centroids = ivf_index(emb)
 
     q = queries.select(F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv"))
     if not centroids:  # empty corpus: no cells, no neighbors
@@ -590,7 +550,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe = (
         qc.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= n_probe)
+        .filter(F.col("_r") <= IVF_PROBES)
         .select("query_id", "qv", "cell")
     )
     # candidates = corpus rows in probed cells only (at scale: partition
@@ -608,7 +568,7 @@ def ivf_topk(
     wr = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
     )
 
@@ -751,8 +711,8 @@ _PQ_ADC_DIST_SQL = (
 )
 
 
-def pq_adc_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k: queries keep full precision, the
+def pq_adc_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Asymmetric-distance (ADC) top-``TOPK``: queries keep full precision, the
     corpus is ranked through its PQ codes — approx ||q − x||² = Σ_j
     lut_j[code_j] with lut_j the query's per-centroid distance table for
     subvector j.
@@ -787,12 +747,12 @@ def pq_adc_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc_dist", F.expr(_PQ_ADC_DIST_SQL))
         .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank", "adc_dist")
     )
 
 
-def ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+def ivfpq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-PQ — the FAISS-standard production ANN layout, composed from
     the two fixed quantizers already in this module: the IVF coarse cells
     prune WHICH corpus slices each query touches (partition pruning at
@@ -805,9 +765,7 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     m = PQ_SUBSPACES
     dsub = DEFAULT_DIM // m
     cbs = pq_codebooks(m, PQ_KSUB, dsub, PQ_SEED)
-    corpus = ivf_fixed_assign(
-        emb, IVF_CELLS, DEFAULT_DIM, IVF_SEED, "vec_id", "embedding"
-    )
+    corpus = ivf_fixed_assign(emb)
     # nested single-expression codes/LUTs (see _pq_codes_sql): element-
     # identical to the m-column form, ~m-fold less analyzer/codegen
     # surface — measured 7.7 → 3.1 s on the declared query at sf0.1
@@ -836,20 +794,19 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc_dist", F.expr(_PQ_ADC_DIST_SQL))
         .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank", "adc_dist")
     )
 
 
 def semdedup_keep(
     emb: DataFrame,
-    eps: float = 0.4,
     n_cells: int = IVF_CELLS,
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic deduplication
     by clustering embeddings, then dropping within-cluster items whose cosine
-    to another cluster member exceeds ``eps``, keeping — per the paper's
+    to another cluster member reaches ``SEMDEDUP_EPS``, keeping — per the paper's
     best-performing variant — the member with the LOWEST similarity to its
     centroid.
 
@@ -859,7 +816,7 @@ def semdedup_keep(
     oracle-checkable; the trained quantizer drops in via :func:`ivf_index`
     without changing the plan shape.  The paper's per-cluster duplicate-group
     reduction is expressed as a deterministic DOMINANCE rule: a vector is
-    removed iff some same-cell neighbor with cosine >= eps has strictly lower
+    removed iff some same-cell neighbor with cosine >= SEMDEDUP_EPS has strictly lower
     centroid-similarity (ties broken by lower id).  Chains (a~b~c with a!~c)
     may keep more than one representative — the connected-components-exact
     variant is ``lsh_near_dup_pairs`` + ``graph.connected_components``.
@@ -902,7 +859,7 @@ def semdedup_keep(
     removed = (
         lhs.join(rhs, "cell")
         .filter(F.col("id_a") != F.col("id_b"))
-        .filter(dot(F.col("va"), F.col("vb")) >= F.lit(eps))
+        .filter(dot(F.col("va"), F.col("vb")) >= F.lit(SEMDEDUP_EPS))
         .filter(
             (F.col("cs_a") < F.col("cs_b"))
             | ((F.col("cs_a") == F.col("cs_b")) & (F.col("id_a") < F.col("id_b")))

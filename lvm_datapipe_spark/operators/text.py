@@ -46,7 +46,7 @@ def normalize_text(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(t, "[ \t\n\r\f]+", " "))
 
 
-def token_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_frequencies(df: DataFrame) -> DataFrame:
     """Corpus token frequency table ``(token, n)`` — the exact heavy-hitters
     base (vocabulary building, stopword discovery, Zipf diagnostics).
 
@@ -56,7 +56,7 @@ def token_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     map-side partial aggregation absorbs — each map task emits one partial
     row per distinct token, so the reduce side sees at most
     #partitions rows for "the"."""
-    toks = tokens(F.lower(_c(text_col)))
+    toks = tokens(F.lower(_c("text")))
     return (
         df.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -68,7 +68,7 @@ def vocab_stats(df: DataFrame) -> DataFrame:
     """One-row corpus vocabulary summary: total tokens, distinct tokens
     (vocabulary size), and type-token ratio.  Composed from the frequency
     table so the shuffle is shared with heavy-hitter queries."""
-    freq = token_frequencies(df, "text")
+    freq = token_frequencies(df)
     return freq.agg(
         F.sum("n").cast("long").alias("total_tokens"),
         F.count(F.lit(1)).cast("long").alias("vocab_size"),
@@ -83,14 +83,15 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.lower(normalize_whitespace(text)).cast("binary"))
 
 
-def word_ngrams(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a token array.  Guarded so arrays
-    shorter than ``n`` yield [] (Spark's ``sequence(1, 0)`` would count DOWN,
+def word_ngrams(toks: Column) -> Column:
+    """Distinct word 3-gram shingles from a token array.  Guarded so arrays
+    shorter than 3 yield [] (Spark's ``sequence(1, 0)`` would count DOWN,
     not produce an empty array).
 
     Built from ``element_at`` lookups, NOT ``slice`` — slice materializes a
     new sub-array per shingle and measured ~4× slower through the
     interpreted higher-order transform."""
+    n = 3
     count = F.size(toks) - (n - 1)
     grams = F.transform(
         F.sequence(F.lit(1), count),
@@ -101,10 +102,11 @@ def word_ngrams(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_ngrams_all(toks: Column, n: int = 2) -> Column:
-    """All word n-grams WITH duplicates (unlike :func:`word_ngrams`, which
+def word_ngrams_all(toks: Column) -> Column:
+    """All word 2-grams WITH duplicates (unlike :func:`word_ngrams`, which
     is distinct-shingle-oriented) — the counting form repetition metrics
     need.  Same element_at construction and short-array guard."""
+    n = 2
     count = F.size(toks) - (n - 1)
     grams = F.transform(
         F.sequence(F.lit(1), count),
@@ -140,7 +142,7 @@ def repetition_features(df: DataFrame) -> DataFrame:
         F.size(F.array_distinct("toks")).alias("words_distinct"),
     )
     grams = base.select(
-        F.col("doc_id"), F.explode(word_ngrams_all(F.col("toks"), 2)).alias("gram")
+        F.col("doc_id"), F.explode(word_ngrams_all(F.col("toks"))).alias("gram")
     )
     gc = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
     agg = gc.groupBy("doc_id").agg(
@@ -414,24 +416,27 @@ def gopher_quality_flags(df: DataFrame) -> DataFrame:
     )
 
 
-def skipgram_pairs(docs: DataFrame, window: int = 2, min_count: int = 5) -> DataFrame:
+#: skipgram_pairs' context window: pairs within ±SKIPGRAM_WINDOW positions
+SKIPGRAM_WINDOW = 2
+
+
+def skipgram_pairs(docs: DataFrame, min_count: int = 5) -> DataFrame:
     """Skip-gram (center, context) co-occurrence counts — the word2vec
     training-pair shaping stage, and the raw counts behind token PMI.
 
     Returns ``(center, context, cnt)`` for every ordered pair within
-    ``±window`` positions that occurs at least ``min_count`` times.
+    ``±SKIPGRAM_WINDOW`` positions that occurs at least ``min_count`` times.
 
     Scale shape: NO positional self-join (which would be dl² pairs per
     document filtered after the fact).  Each token position fans out to
-    exactly ``2*window`` candidate offsets via a literal offset array;
+    exactly ``2*SKIPGRAM_WINDOW`` candidate offsets via a literal offset array;
     out-of-range offsets are dropped by an explicit bounds filter BEFORE
     the array lookups (and the 0-based ``F.get`` returns NULL rather than
     raising if an engine ever reorders the projection).  The only shuffle
     is the (center, context) count with map-side partials, and the
     ``min_count`` floor is applied IN the aggregate (HAVING) so sub-floor
     pairs never leave the exchange."""
-    if window < 1:
-        raise ValueError(f"window must be >= 1, got {window}")
+    window = SKIPGRAM_WINDOW
     offsets = [d for d in range(-window, window + 1) if d != 0]
     t = docs.select("doc_id", tokens(F.lower(_c("text"))).alias("toks"))
     # two generators are not allowed in one Project; chain two selects
@@ -452,22 +457,26 @@ def skipgram_pairs(docs: DataFrame, window: int = 2, min_count: int = 5) -> Data
     )
 
 
-def hashed_features(docs: DataFrame, dim: int = 64, salt: str = "feat") -> DataFrame:
+#: feature-hashing width and salt: tokens hash to buckets [0, HASH_DIM)
+HASH_DIM, HASH_SALT = 64, "feat"
+
+
+def hashed_features(docs: DataFrame) -> DataFrame:
     """Feature hashing (the hashing trick, Weinberger et al. 2009): each
-    token maps to a bucket in [0, dim) with a ±1 sign, per-doc bucket
+    token maps to a bucket in [0, HASH_DIM) with a ±1 sign, per-doc bucket
     weights are the signed counts, L2-normalized — the fastText-style
     bag-of-words featurizer that needs NO vocabulary table, so it is a
     pure scan at any corpus size.
 
-    Returns the sparse form ``(id_col, bucket, weight)`` with zero-weight
+    Returns the sparse form ``(doc_id, bucket, weight)`` with zero-weight
     buckets dropped.  Everything is exact integer arithmetic (signed
     counts, then a sum of squared BIGINTs for the norm) until one final
     sqrt + divide — bit-identical across engines by construction.
 
     Scale shape: one md5 per token (scan), one (doc, bucket) signed-count
-    shuffle (key fan-in bounded by dim per doc), one doc-keyed norm
+    shuffle (key fan-in bounded by HASH_DIM per doc), one doc-keyed norm
     aggregate joined back; no vocabulary build, no broadcast state."""
-    w = hashed_counts(docs, dim, salt, "doc_id", "text")
+    w = hashed_counts(docs)
     norm = w.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).cast("long").alias("norm2")
     )
@@ -480,37 +489,29 @@ def hashed_features(docs: DataFrame, dim: int = 64, salt: str = "feat") -> DataF
     )
 
 
-def hashed_counts(
-    docs: DataFrame,
-    dim: int = 64,
-    salt: str = "feat",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hashed_counts(docs: DataFrame) -> DataFrame:
     """The exact-integer core of :func:`hashed_features`: per-doc SIGNED
-    bucket counts ``(id_col, bucket, w)`` with zero buckets dropped.
+    bucket counts ``(doc_id, bucket, w)`` of the ``text`` tokens, with zero
+    buckets dropped.
     Kept integer so downstream dot products stay exact BIGINT arithmetic
     (see queries.sparse_cosine_topk) — normalization is one float
     expression applied at the very end, never inside an aggregate."""
-    if dim < 1:
-        # % 0 is NULL in Spark SQL — the buckets would silently vanish
-        raise ValueError(f"dim must be >= 1, got {dim}")
     from lvm_datapipe_spark.operators.sampling import hash_bucket
 
     tok = docs.select(
-        id_col, F.explode(tokens(F.lower(_c(text_col)))).alias("token")
+        "doc_id", F.explode(tokens(F.lower(_c("text")))).alias("token")
     )
-    h = F.md5(F.concat(F.lit(salt), F.col("token").cast("string")).cast("binary"))
+    h = F.md5(F.concat(F.lit(HASH_SALT), F.col("token").cast("string")).cast("binary"))
     sign = F.lit(1) - F.lit(2) * (
         F.conv(F.substring(h, 9, 1), 16, 10).cast("bigint") % 2
     )
     return (
         tok.select(
-            id_col,
-            hash_bucket("token", dim, salt).alias("bucket"),
+            "doc_id",
+            hash_bucket("token", HASH_DIM, HASH_SALT).alias("bucket"),
             sign.alias("sign"),
         )
-        .groupBy(id_col, "bucket")
+        .groupBy("doc_id", "bucket")
         .agg(F.sum("sign").cast("long").alias("w"))
         .filter(F.col("w") != 0)
     )

@@ -18,9 +18,9 @@ from pyspark.sql import functions as F
 from lvm_datapipe_spark.operators.aggregates import decimal_avg
 
 
-def user_value_profiles(events: DataFrame, length: int = 16) -> DataFrame:
+def user_value_profiles(events: DataFrame) -> DataFrame:
     """(key, bucket, profile value) — each entity's trajectory resampled to
-    ``length`` equi-count buckets in event-time order.
+    L = 8 equi-count buckets in event-time order.
 
     Bucket b of a user with n events covers positions [b·n/L, (b+1)·n/L)
     (integer arithmetic — engine-portable), so every bucket is non-empty
@@ -29,6 +29,7 @@ def user_value_profiles(events: DataFrame, length: int = 16) -> DataFrame:
     aggregation (decimal per-bucket means).  Emitted LONG — per-entity
     row layout, no arrays — so the result joins/aggregates without any
     whole-vector shuffle (the embedding-centroid convention)."""
+    length = 8
     w = Window.partitionBy("user_id").orderBy("ts", "value")
     pos = (F.row_number().over(w) - 1).cast("long")
     n = F.count(F.lit(1)).over(Window.partitionBy("user_id"))

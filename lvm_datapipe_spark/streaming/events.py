@@ -38,17 +38,13 @@ def ensure_event_time(events: DataFrame) -> DataFrame:
     return events
 
 
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str | None = "2 hours",
-) -> DataFrame:
-    """Tumbling-window per-type counts + value sums.  Identical plan in
-    batch mode (watermark=None) and streaming mode — the batch form is the
-    oracle-checked ``events_tumbling_window`` query."""
-    src = ensure_event_time(events).withWatermark("ts", watermark) if watermark else events
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour per-type counts + value sums, watermarked 2 hours
+    behind event time.  On a batch input the watermark is a no-op, and the
+    aggregate is the oracle-checked ``events_tumbling_window`` query."""
+    src = ensure_event_time(events).withWatermark("ts", "2 hours")
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), decimal_sum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
@@ -119,20 +115,15 @@ def start_to_parquet(df: DataFrame, path: str, checkpoint: str):
     )
 
 
-def watermark_drop_audit(
-    events: DataFrame,
-    key_col: str = "event_type",
-    tsec_col: str = "tsec",
-    order_cols: tuple[str, ...] = ("arr", "event_id"),
-    delays: tuple[int, ...] = (0, 60, 600, 3600),
-) -> DataFrame:
+def watermark_drop_audit(events: DataFrame) -> DataFrame:
     """Batch watermark-tuning audit (the core of the declared
     ``events_watermark_drop_audit`` query): replay each stream partition
-    (``key_col``) in ARRIVAL order (``order_cols`` — a data-driven total
-    order, e.g. an ingest sequence number), track the running event-time
-    high-water mark, and for each candidate ``delay`` report how many
-    events arrive later than ``high_water - delay`` — i.e. would be
-    dropped by a stateful streaming operator watermarked at that delay.
+    (``event_type``) in ARRIVAL order (``arr, event_id`` — a data-driven
+    total order, e.g. an ingest sequence number), track the running
+    event-time (``tsec``, epoch seconds) high-water mark, and for each
+    candidate delay of 0, 60, 600 and 3600 s report how many events arrive
+    later than ``high_water - delay`` — i.e. would be dropped by a stateful
+    streaming operator watermarked at that delay.
 
     Arrival order comes from DATA, not from any synthetic expression, so
     the audit semantics are testable with shuffled-arrival fixtures
@@ -146,9 +137,11 @@ def watermark_drop_audit(
     All integer arithmetic (epoch seconds, ppm via integer division)."""
     from pyspark.sql import Window
 
+    key_col, tsec_col = "event_type", "tsec"
+    delays = (0, 60, 600, 3600)
     w = (
         Window.partitionBy(key_col)
-        .orderBy(*order_cols)
+        .orderBy("arr", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     a = events.select(

@@ -92,38 +92,40 @@ def _cm_cells(sketch):
     return {(r["d"], r["bucket"]): r["cnt"] for r in sketch.collect()}
 
 
-def _cm_estimate(cells, key, depth=4, width=256, salt="cm"):
+def _cm_estimate(cells, key):
     """Point estimate: min over the depth rows of the key's md5 buckets,
     the same bucket rule ``cm_sketch`` applies in Spark."""
     import hashlib
 
+    from lvm_datapipe_spark.operators.aggregates import CM_DEPTH, CM_SALT, CM_WIDTH
+
     return min(
         cells.get(
-            (d, int(hashlib.md5(f"{salt}{d}:{key}".encode()).hexdigest()[:8], 16) % width),
+            (d, int(hashlib.md5(f"{CM_SALT}{d}:{key}".encode()).hexdigest()[:8], 16) % CM_WIDTH),
             0,
         )
-        for d in range(depth)
+        for d in range(CM_DEPTH)
     )
 
 
 def test_cm_sketch_never_undercounts_and_bounds(spark):
     from collections import Counter
 
-    from lvm_datapipe_spark.operators.aggregates import cm_sketch
+    from lvm_datapipe_spark.operators.aggregates import CM_WIDTH, cm_sketch
 
     vals = [f"k{i % 37}" for i in range(2000)] + ["hot"] * 500
     true = Counter(vals)
     df = spark.createDataFrame([(v,) for v in vals], ["v"])
-    cells = _cm_cells(cm_sketch(df, "v", depth=4, width=256))
+    cells = _cm_cells(cm_sketch(df, "v"))
     n = len(vals)
     for k, t in true.items():
         est = _cm_estimate(cells, k)
         assert est >= t, f"undercount for {k}"
         # e*N/width error bound (holds deterministically here: the
         # documented failure prob at depth 4 is (1/e)^4 ~ 1.8%)
-        assert est - t <= 2.718281828 * n / 256 + 1
+        assert est - t <= 2.718281828 * n / CM_WIDTH + 1
     # an absent key estimates near zero (collisions only)
-    assert 0 <= _cm_estimate(cells, "absent") <= 2.718281828 * n / 256 + 1
+    assert 0 <= _cm_estimate(cells, "absent") <= 2.718281828 * n / CM_WIDTH + 1
 
 
 def test_cm_merge_equals_whole_corpus_sketch(spark):

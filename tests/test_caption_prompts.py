@@ -7,9 +7,8 @@ Reference: ``evaluations/llava_caption.py:111-129`` (prompt)."""
 from __future__ import annotations
 
 from lvm_datapipe_spark.functions.prompts import (
+    LLAVA_CAPTION_PROMPT,
     LLAVA_IMAGE_TURN,
-    LLAVA_SYSTEM,
-    llava_caption_prompt,
 )
 
 
@@ -27,15 +26,7 @@ def test_v1_prompt_golden():
         "answers to the human's questions. "
         "USER: <image>\nplease describe this image ASSISTANT:"
     )
-    assert llava_caption_prompt("llava_v1") == expect
-
-
-def test_v0_prompt_golden():
-    expect = (
-        LLAVA_SYSTEM
-        + "###Human: <image>\nplease describe this image###Assistant:"
-    )
-    assert llava_caption_prompt("llava_v0") == expect
+    assert LLAVA_CAPTION_PROMPT == expect
 
 
 # -- adapter wiring ----------------------------------------------------------
@@ -50,4 +41,4 @@ def test_llava_adapter_uses_template_prompt():
     from lvm_datapipe_spark.operators import model_adapters as MA
 
     src = inspect.getsource(MA.LlavaCaptionAdapter.score)
-    assert "llava_caption_prompt" in src
+    assert "LLAVA_CAPTION_PROMPT" in src

@@ -38,8 +38,9 @@ def test_exact_dedup_normalizes_whitespace_and_case(spark):
     assert len(out) == 2
 
 
-def test_ngram_jaccard_finds_near_dup(spark):
-    pairs = D.ngram_jaccard_pairs(_docs(spark), threshold=0.5).collect()
+def test_ngram_jaccard_finds_near_dup(spark, monkeypatch):
+    monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.5)
+    pairs = D.ngram_jaccard_pairs(_docs(spark)).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (1, 2) in got and (1, 4) in got and (2, 4) in got
     assert all(0.0 <= r.jaccard <= 1.0 for r in pairs)
@@ -47,9 +48,11 @@ def test_ngram_jaccard_finds_near_dup(spark):
     assert exact[0].jaccard == 1.0
 
 
-def test_ngram_jaccard_stop_shingle_cap(spark):
+def test_ngram_jaccard_stop_shingle_cap(spark, monkeypatch):
     # with a frequency cap of 1, every shared shingle is dropped → no pairs
-    pairs = D.ngram_jaccard_pairs(_docs(spark), threshold=0.1, max_shingle_freq=1)
+    monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.1)
+    monkeypatch.setattr(D, "MAX_SHINGLE_FREQ", 1)
+    pairs = D.ngram_jaccard_pairs(_docs(spark))
     assert pairs.count() == 0
 
 
@@ -122,7 +125,7 @@ def test_simhash_exact_dup_distance_zero(spark):
     rows = {r.doc_id: r.simhash for r in D.simhash_docs(_docs(spark)).collect()}
     assert rows[1] == rows[4]
     assert len(rows[1]) == 32 and set(rows[1]) <= {"0", "1"}
-    pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_pairs(_docs(spark), max_hamming=3).collect()}
+    pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_pairs(_docs(spark)).collect()}
     assert pairs[(1, 4)] == 0
 
 
@@ -136,7 +139,7 @@ def test_simhash_banding_matches_bruteforce(spark):
         for b in sh
         if a < b and sum(x != y for x, y in zip(sh[a], sh[b])) <= 3
     }
-    banded_pairs = {(r.id_a, r.id_b) for r in D.simhash_pairs(_docs(spark), max_hamming=3).collect()}
+    banded_pairs = {(r.id_a, r.id_b) for r in D.simhash_pairs(_docs(spark)).collect()}
     assert banded_pairs == brute_pairs
 
 
@@ -161,16 +164,17 @@ def test_cosine_math(spark):
     assert abs(out[0]) < 1e-12 and abs(out[1] - 1.0) < 1e-12
 
 
-def test_brute_force_topk(spark):
+def test_brute_force_topk(spark, monkeypatch):
     emb = _emb(spark)
     queries = emb.filter(F.col("vec_id") == 1)
-    out = V.brute_force_topk(emb, queries, k=2).collect()
+    monkeypatch.setattr(V, "TOPK", 2)
+    out = V.brute_force_topk(emb, queries).collect()
     ranked = sorted(out, key=lambda r: r.rank)
     assert [r.neighbor_id for r in ranked] == [2, 3]  # 2 closest, then orthogonal-tie by id
 
 
 def test_embedding_near_dup_pairs(spark):
-    pairs = {(r.id_a, r.id_b) for r in V.embedding_near_dup_pairs(_emb(spark), threshold=0.9, dim=4).collect()}
+    pairs = {(r.id_a, r.id_b) for r in V.embedding_near_dup_pairs(_emb(spark), threshold=0.9).collect()}
     assert pairs == {(1, 2)}
 
 
@@ -203,7 +207,7 @@ def test_declared_dedup_form_recall_vs_quadratic_oracle(spark):
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_ivf_topk_recall(spark):
+def test_ivf_topk_recall(spark, monkeypatch):
     """IVF with n_probe cells must recover most of the exact top-k, and
     full-probe IVF must equal the exact ranking."""
     from lvm_datapipe_spark.catalog import load_table
@@ -211,20 +215,17 @@ def test_ivf_topk_recall(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries, k=10).collect()}
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, queries, k=10, n_cells=8, n_probe=3).collect()
-    }
+    exact = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries).collect()}
+    monkeypatch.setattr(V, "IVF_CELLS", 8)
+    monkeypatch.setattr(V, "IVF_PROBES", 3)
+    approx = {(r.query_id, r.neighbor_id) for r in ivf_topk(emb, queries).collect()}
     assert len(approx & exact) / len(exact) >= 0.6  # probing 3/8 cells
-    full = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, queries, k=10, n_cells=8, n_probe=8).collect()
-    }
+    monkeypatch.setattr(V, "IVF_PROBES", 8)
+    full = {(r.query_id, r.neighbor_id) for r in ivf_topk(emb, queries).collect()}
     assert full == exact  # probe-all == exact
 
 
-def test_ngram_jaccard_cap_default_equivalent_on_test_corpus(spark, sf_dir):
+def test_ngram_jaccard_cap_default_equivalent_on_test_corpus(spark, sf_dir, monkeypatch):
     """The default stop-shingle cap (1000) must not change results on the
     driver corpus — no shingle there reaches the cap, so capped and exact
     forms are bit-identical (the cap only bites on pathological skew)."""
@@ -232,8 +233,9 @@ def test_ngram_jaccard_cap_default_equivalent_on_test_corpus(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     with query_scope(spark):
-        capped = D.ngram_jaccard_pairs(docs, threshold=0.6)  # default cap
-        exact = D.ngram_jaccard_pairs(docs, threshold=0.6, max_shingle_freq=None)
+        capped = D.ngram_jaccard_pairs(docs)
+        monkeypatch.setattr(D, "MAX_SHINGLE_FREQ", None)  # the exact self-join
+        exact = D.ngram_jaccard_pairs(docs)
         got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in capped.collect()}
         want = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in exact.collect()}
     assert got == want and got  # non-empty: corpus has planted near-dups
@@ -289,12 +291,12 @@ def test_quantized_ann_recall(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries, k=10).collect()}
+    exact = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries).collect()}
     deq = quantize_embeddings(emb).select(
         "vec_id", _dequantize().alias("embedding")
     )
     deq_q = deq.filter(F.col("vec_id") < 5)
-    approx = {(r.query_id, r.neighbor_id) for r in brute_force_topk(deq, deq_q, k=10).collect()}
+    approx = {(r.query_id, r.neighbor_id) for r in brute_force_topk(deq, deq_q).collect()}
     assert len(approx & exact) / len(exact) >= 0.9
 
 
@@ -341,7 +343,7 @@ def test_pq_adc_recall_floor(spark):
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter("vec_id < 10")
-    approx = V.pq_adc_topk(emb, queries, k=10)
+    approx = V.pq_adc_topk(emb, queries)
     got = {}
     for r in approx.collect():
         got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
@@ -375,16 +377,16 @@ def test_ivfpq_subset_of_pq_candidates_and_recall(spark, monkeypatch):
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter("vec_id < 10")
     got = {}
-    for r in V.ivfpq_topk(emb, queries, k=10).collect():
+    for r in V.ivfpq_topk(emb, queries).collect():
         got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     # probe-all == plain PQ/ADC over the full corpus (cells prune nothing)
     all_cells = {}
     with monkeypatch.context() as m:
         m.setattr(V, "IVF_PROBES", V.IVF_CELLS)
-        for r in V.ivfpq_topk(emb, queries, k=10).collect():
+        for r in V.ivfpq_topk(emb, queries).collect():
             all_cells.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     pq_only = {}
-    for r in V.pq_adc_topk(emb, queries, k=10).collect():
+    for r in V.pq_adc_topk(emb, queries).collect():
         pq_only.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     assert all_cells == pq_only  # composition sanity: probe-all == PQ
 
@@ -594,13 +596,13 @@ def test_containment_catches_quote_jaccard_misses(spark):
         [(1, quote), (2, filler + " " + quote + " " + filler.upper())],
         "doc_id long, text string",
     )
-    got = D.containment_pairs(df, threshold=0.8).collect()
+    got = D.containment_pairs(df).collect()
     assert len(got) == 1
     r = got[0]
     assert (r["id_a"], r["id_b"]) == (1, 2)
     assert r["cont_a"] == 1.0  # every shingle of the quote is in the container
     assert r["cont_b"] < 0.1
-    assert D.ngram_jaccard_pairs(df, threshold=0.6).count() == 0
+    assert D.ngram_jaccard_pairs(df).count() == 0
 
 
 def test_containment_matches_bruteforce_sets(spark, sf_dir):
@@ -781,7 +783,7 @@ def test_mmr_diversifies_beyond_pure_relevance(spark, sf_dir):
     assert departed
 
 
-def test_prebuilt_shingle_rows_paths_match_default(spark):
+def test_prebuilt_shingle_rows_paths_match_default(spark, monkeypatch):
     """ngram_jaccard_pairs and minhash_lsh_pairs fed a prebuilt distinct
     (id, shingle) table (the dedup_method_agreement sharing path) must
     emit exactly the pairs of their self-building defaults — including
@@ -789,21 +791,19 @@ def test_prebuilt_shingle_rows_paths_match_default(spark):
     distinct rows either way."""
     docs = _docs(spark)
     shingles = D.shingle_rows(docs).persist()
+    monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.1)
     try:
-        for kw in ({}, {"max_shingle_freq": 1}):
+        for cap in (D.MAX_SHINGLE_FREQ, 1):
+            monkeypatch.setattr(D, "MAX_SHINGLE_FREQ", cap)
             a = {
                 (r.id_a, r.id_b, round(r.jaccard, 9))
-                for r in D.ngram_jaccard_pairs(
-                    docs, threshold=0.1, **kw
-                ).collect()
+                for r in D.ngram_jaccard_pairs(docs).collect()
             }
             b = {
                 (r.id_a, r.id_b, round(r.jaccard, 9))
-                for r in D.ngram_jaccard_pairs(
-                    docs, threshold=0.1, shingle_rows_df=shingles, **kw
-                ).collect()
+                for r in D.ngram_jaccard_pairs(docs, shingle_rows_df=shingles).collect()
             }
-            assert a == b and (kw or len(a) > 0)
+            assert a == b and (cap == 1 or len(a) > 0)
         mh_a = {
             (r.id_a, r.id_b)
             for r in D.minhash_lsh_pairs(docs).collect()

@@ -60,7 +60,7 @@ def test_ivf_index_empty_and_tiny_corpora(spark):
     from lvm_datapipe_spark.operators.similarity import ivf_index, ivf_topk
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assigned, centroids = ivf_index(empty, n_cells=16)
+    assigned, centroids = ivf_index(empty)
     assert centroids == [] and assigned.count() == 0
     assert ivf_topk(empty, empty).count() == 0
     # fewer rows than cells: k clamps to n instead of crashing
@@ -68,7 +68,7 @@ def test_ivf_index_empty_and_tiny_corpora(spark):
         [(i, [float(i)] * 64) for i in range(3)],
         "vec_id long, embedding array<float>",
     )
-    assigned, centroids = ivf_index(tiny, n_cells=16)
+    assigned, centroids = ivf_index(tiny)
     assert len(centroids) == 3 and assigned.count() == 3
 
 
@@ -101,7 +101,7 @@ def test_ivf_single_row_corpus_is_its_own_centroid(spark):
     one = spark.createDataFrame(
         [(7, [1.0] * 64)], "vec_id long, embedding array<float>"
     )
-    assigned, centroids = ivf_index(one, n_cells=16)
+    assigned, centroids = ivf_index(one)
     assert len(centroids) == 1 and centroids[0] == [1.0] * 64
     assert [(r["vec_id"], r["cell"]) for r in assigned.collect()] == [(7, 0)]
 
@@ -146,6 +146,6 @@ def test_ivf_drops_null_vectors(spark):
         [(1, [1.0] * 64), (2, None), (3, [2.0] * 64)],
         "vec_id long, embedding array<float>",
     )
-    assigned, centroids = ivf_index(emb, n_cells=2)
+    assigned, centroids = ivf_index(emb)
     assert {r["vec_id"] for r in assigned.collect()} == {1, 3}
     assert len(centroids) == 2

@@ -28,10 +28,11 @@ def _cc(pairs, gate, **kwargs):
         return connected_components(pairs, **kwargs)
 
 
-def _kcore(edges, max_rounds, **kwargs):
-    """kcore with its round cap at ``max_rounds``."""
-    with mock.patch.object(graph, "KCORE_MAX_ROUNDS", max_rounds):
-        return graph.kcore(edges, **kwargs)
+def _kcore(edges, k, max_rounds=graph.KCORE_MAX_ROUNDS, **kwargs):
+    """kcore of a ``(u, v)`` edge list at core order ``k`` with its round
+    cap at ``max_rounds``."""
+    with mock.patch.multiple(graph, KCORE_K=k, KCORE_MAX_ROUNDS=max_rounds):
+        return graph.kcore(edges.toDF("p1", "p2"), **kwargs)
 
 
 def _pairs(spark, rows):
@@ -217,31 +218,33 @@ def test_pagerank_matches_python_model(spark):
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
     got = {
         r["node"]: r["rank_fp"]
-        for r in pagerank(df, weight="w", n_iter=5).collect()
+        for r in pagerank(df).collect()
     }
     assert got == _pagerank_model(edges)
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_pagerank_mass_nearly_conserved(spark):
+def test_pagerank_mass_nearly_conserved(spark, monkeypatch):
     from lvm_datapipe_spark.operators.graph import pagerank
 
     # a ring has no dangling mass; total rank stays ~1 (floor losses only)
     edges = [(i, (i + 1) % 7, 1) for i in range(7)]
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
-    out = pagerank(df, n_iter=8)
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 8)
+    out = pagerank(df)
     total = sum(r["rank"] for r in out.collect())
     assert 0.999 < total <= 1.0
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_pagerank_favors_high_indegree(spark):
+def test_pagerank_favors_high_indegree(spark, monkeypatch):
     from lvm_datapipe_spark.operators.graph import pagerank
 
     # every node points at 'hub'; hub points at one spoke
     edges = [(f"s{i}", "hub", 1) for i in range(5)] + [("hub", "s0", 1)]
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
-    ranks = {r["node"]: r["rank"] for r in pagerank(df, n_iter=6).collect()}
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 6)
+    ranks = {r["node"]: r["rank"] for r in pagerank(df).collect()}
     # mass ping-pongs between hub and its one successor (near-bipartite
     # graph, no convergence damping at 6 rounds) — but BOTH dominate the
     # plain spokes, and s0 (fed by the hub) beats its siblings
@@ -256,14 +259,15 @@ def test_pagerank_overflow_guard(spark):
 
     df = spark.createDataFrame([("a", "b", 2**53)], ["src", "dst", "w"])
     with pytest.raises(ValueError, match="overflows"):
-        pagerank(df, weight="w")
+        pagerank(df)
 
 
-def test_pagerank_single_job_no_cartesian(spark):
+def test_pagerank_single_job_no_cartesian(spark, monkeypatch):
     from lvm_datapipe_spark.operators.graph import pagerank
 
     df = spark.createDataFrame([(1, 2, 1), (2, 1, 1)], ["src", "dst", "w"])
-    out = pagerank(df, weight="w", n_iter=3)
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 3)
+    out = pagerank(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 
@@ -272,7 +276,7 @@ def test_pagerank_empty_edges_returns_empty(spark):
     from lvm_datapipe_spark.operators.graph import pagerank
 
     empty = spark.createDataFrame([], "src string, dst string, w long")
-    out = pagerank(empty, weight="w")
+    out = pagerank(empty)
     assert out.columns == ["node", "rank_fp", "rank"]
     assert out.count() == 0
 
@@ -460,9 +464,7 @@ def test_khop_driver_dense_matches_brute_force(spark):
         rows += [(i, i), (i, i + 1)]
     rows += [(100, 0), (100, 5), (100, 9)]  # hub basket {0, 5, 9}
     baskets = spark.createDataFrame(rows, "o long, i long")
-    out = khop_reachability_driver_dense_from_baskets(
-        baskets, "o", "i", n_seeds=3, max_hops=3
-    )
+    out = khop_reachability_driver_dense_from_baskets(baskets, "o", "i")
     # brute force in python
     import itertools
     from collections import defaultdict
@@ -476,7 +478,7 @@ def test_khop_driver_dense_matches_brute_force(spark):
             adj[a].add(b)
             adj[b].add(a)
     deg = {n: len(s) for n, s in adj.items()}
-    seeds = sorted(deg, key=lambda n: (-deg[n], n))[:3]
+    seeds = sorted(deg, key=lambda n: (-deg[n], n))[:5]
     expect = []
     for s in seeds:
         h1 = set(adj[s])
@@ -590,8 +592,6 @@ def _kcore_reference(edge_rows, k):
 
 
 def test_kcore_matches_reference_fixpoint(spark):
-    from lvm_datapipe_spark.operators.graph import kcore
-
     # two triangles sharing a bridge node + a pendant path that must peel
     # away layer by layer (exercises multi-round convergence)
     rows = [
@@ -603,7 +603,7 @@ def test_kcore_matches_reference_fixpoint(spark):
     stats: dict = {}
     got = {
         (r.node, r.core_degree)
-        for r in kcore(e, k=2, stats=stats).collect()
+        for r in _kcore(e, 2, stats=stats).collect()
     }
     assert got == set(_kcore_reference(rows, 2).items())
     assert stats["rounds"] <= 30 and stats["checks"] >= 1
@@ -613,7 +613,7 @@ def test_kcore_empty_core(spark):
     from lvm_datapipe_spark.operators.graph import kcore
 
     e = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["u", "v"])
-    assert kcore(e, k=3).count() == 0
+    assert kcore(e.toDF("p1", "p2")).count() == 0
 
 
 def test_kcore_agrees_with_declared_query(spark):
@@ -638,7 +638,7 @@ def test_kcore_agrees_with_declared_query(spark):
     )
     lib = {
         (r.node, r.core_degree)
-        for r in kcore(e, src="p1", dst="p2", k=3).collect()
+        for r in kcore(e).collect()
     }
     declared_rows = QUERIES["graph_kcore_parts"](spark, sf).collect()
     declared = {(r.p_partkey, r.core_degree) for r in declared_rows}
@@ -854,8 +854,6 @@ def test_kcore_max_rounds_exhaustion_warns_and_recomputes_degrees(spark):
     neighbors."""
     import pytest
 
-    from lvm_datapipe_spark.operators.graph import kcore
-
     # a 30-node path with k=2 peels one layer (both ends) per round and
     # needs ~15 rounds to die entirely; cap at 3
     rows = [(i, i + 1) for i in range(29)]
@@ -864,7 +862,7 @@ def test_kcore_max_rounds_exhaustion_warns_and_recomputes_degrees(spark):
     with pytest.warns(UserWarning, match="max_rounds"):
         got = {
             (r.node, r.core_degree)
-            for r in _kcore(e, 3, k=2, stats=stats).collect()
+            for r in _kcore(e, 2, 3, stats=stats).collect()
         }
     assert stats["converged"] is False
     assert got == set(_kcore_peel_rounds(rows, 2, 3).items())
@@ -873,25 +871,21 @@ def test_kcore_max_rounds_exhaustion_warns_and_recomputes_degrees(spark):
 
 
 def test_kcore_converged_flag_true_on_fixpoint(spark):
-    from lvm_datapipe_spark.operators.graph import kcore
-
     rows = [(1, 2), (2, 3), (1, 3), (3, 4)]
     e = spark.createDataFrame(rows, ["u", "v"])
     stats: dict = {}
     got = {
         (r.node, r.core_degree)
-        for r in kcore(e, k=2, stats=stats).collect()
+        for r in _kcore(e, 2, stats=stats).collect()
     }
     assert stats["converged"] is True
     assert got == {(1, 2), (2, 2), (3, 2)}
 
 
 def test_kcore_empty_edge_list(spark):
-    from lvm_datapipe_spark.operators.graph import kcore
-
     e = spark.createDataFrame([], "u long, v long")
     stats: dict = {}
-    out = kcore(e, k=2, stats=stats)
+    out = _kcore(e, 2, stats=stats)
     assert out.count() == 0
     assert out.columns == ["node", "core_degree"]
     assert stats["converged"] is True and stats["rounds"] == 0
@@ -905,8 +899,6 @@ def test_kcore_frontier_gate_cases(spark):
     warning."""
     import warnings
 
-    from lvm_datapipe_spark.operators.graph import kcore
-
     def run(rows, k, max_rounds=30):
         st: dict = {}
         e = spark.createDataFrame(rows, ["u", "v"])
@@ -914,7 +906,7 @@ def test_kcore_frontier_gate_cases(spark):
             warnings.simplefilter("always", UserWarning)
             got = {
                 (r.node, r.core_degree)
-                for r in _kcore(e, max_rounds, k=k, stats=st).collect()
+                for r in _kcore(e, k, max_rounds, stats=st).collect()
             }
         assert not [w for w in caught if "max_rounds" in str(w.message)]
         return got, st
@@ -945,8 +937,6 @@ def test_kcore_matches_reference_on_random_graphs(spark):
     pure-python peel, and the converged flag reads True."""
     import random
 
-    from lvm_datapipe_spark.operators.graph import kcore
-
     rng = random.Random(20261016)
     for trial, (n, m, k) in enumerate([(60, 120, 2), (80, 240, 3), (50, 90, 4)]):
         rows = list({(rng.randrange(n), rng.randrange(n)) for _ in range(m)})
@@ -954,7 +944,7 @@ def test_kcore_matches_reference_on_random_graphs(spark):
         e = spark.createDataFrame(rows, ["u", "v"])
         st: dict = {}
         got = {
-            (r.node, r.core_degree) for r in kcore(e, k=k, stats=st).collect()
+            (r.node, r.core_degree) for r in _kcore(e, k, stats=st).collect()
         }
         assert got == set(_kcore_reference(rows, k).items()), (trial, n, m, k)
         assert st["converged"] is True
@@ -967,7 +957,6 @@ def test_kcore_engines_agree_on_exhausted_peel(spark):
     returned (core_degree >= 1).  A star at k=2 exhausted after 1 round
     hits exactly that: the leaves die, the center survives with
     alive-degree 0 and is dropped."""
-    from lvm_datapipe_spark.operators.graph import kcore
 
     star = [(0, i) for i in range(1, 5)]
     path = [(i, i + 1) for i in range(29)]
@@ -977,7 +966,7 @@ def test_kcore_engines_agree_on_exhausted_peel(spark):
         with pytest.warns(UserWarning, match="max_rounds"):
             got = {
                 (r.node, r.core_degree)
-                for r in _kcore(e, cap, k=k, stats=st).collect()
+                for r in _kcore(e, k, cap, stats=st).collect()
             }
         assert st["converged"] is False, (rows[:2], k, cap)
         assert got == set(_kcore_peel_rounds(rows, k, cap).items())
@@ -1039,12 +1028,12 @@ def test_kcore_string_node_ids_both_engines(spark):
 
     rows = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
     e = spark.createDataFrame(rows, "u string, v string")
-    got = {(r.node, r.core_degree) for r in kcore(e, k=2).collect()}
+    got = {(r.node, r.core_degree) for r in _kcore(e, 2).collect()}
     assert got == set(_kcore_reference(rows, 2).items()) == {
         ("a", 2), ("b", 2), ("c", 2)
     }
     empty = spark.createDataFrame([], "u string, v long")
-    out = kcore(empty.select("u", F.col("v").cast("string")), k=2)
+    out = _kcore(empty.select("u", F.col("v").cast("string")), 2)
     assert out.count() == 0
     assert dict(out.dtypes)["node"] == "string"
 
@@ -1079,7 +1068,6 @@ def test_kcore_engines_agree_with_self_loops_and_duplicates(spark):
     the symmetric-distinct edge build canonicalizes them, and a self-loop
     contributes exactly one degree — matching the python reference, whose
     adjacency set also holds u in adj[u]."""
-    from lvm_datapipe_spark.operators.graph import kcore
 
     rows = [
         (1, 2), (2, 1), (1, 2),          # duplicate + reversed
@@ -1089,7 +1077,7 @@ def test_kcore_engines_agree_with_self_loops_and_duplicates(spark):
     ]
     e = spark.createDataFrame(rows, ["u", "v"])
     st: dict = {}
-    got = {(r.node, r.core_degree) for r in kcore(e, k=2, stats=st).collect()}
+    got = {(r.node, r.core_degree) for r in _kcore(e, 2, stats=st).collect()}
     assert got == set(_kcore_reference(rows, 2).items())
     assert st["converged"] is True
 
@@ -1100,8 +1088,6 @@ def test_kcore_reversed_edge_with_null_endpoint_is_harmless(spark):
     warning and returns the triangle's 2-core."""
     import warnings
 
-    from lvm_datapipe_spark.operators.graph import kcore
-
     tri = [(1, 2), (2, 3), (1, 3)]
     schema = "u long, v long"
     for rows in (tri + [(None, 1)], tri + [(None, 1), (1, None), (1, None)]):
@@ -1109,7 +1095,7 @@ def test_kcore_reversed_edge_with_null_endpoint_is_harmless(spark):
         stats = {}
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
-            out = kcore(e, k=2, stats=stats)
+            out = _kcore(e, 2, stats=stats)
             got = {(r.node, r.core_degree) for r in out.collect()}
         assert stats["converged"]
         assert not [w for w in caught if "max_rounds" in str(w.message)]

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from lvm_datapipe_spark import fakevideo
 from lvm_datapipe_spark.functions.strings import clean_caption
 from lvm_datapipe_spark.operators import media, scenecut
-from lvm_datapipe_spark.operators.relational import resume_anti_join
 from lvm_datapipe_spark.plans import pipeline
 from lvm_datapipe_spark.sources.video import scan_video_dir
 
@@ -306,12 +305,6 @@ def test_run_stage_resume(spark, scored_input):
     snap2 = pipeline.run_stage(snap, scorer, "imaging_quality")
     second = {r.clip_id: r.imaging_quality for r in snap2.collect()}
     assert first == second
-
-
-def test_resume_anti_join_integration(spark, clips):
-    done = clips.select("clip_id").limit(4)
-    todo = resume_anti_join(clips, done)
-    assert todo.count() == clips.count() - 4
 
 
 # -- real-container (ISO-BMFF) probe + cv2 adapter ---------------------------

@@ -17,12 +17,20 @@ calls is unreached.  A package module is reached when another corpus
 file imports it.
 
 ``test_every_option_is_set`` holds the package's parameters to the same
-rule: a defaulted parameter of a top-level function or method that no
-corpus call passes, by position or by keyword, is an option nothing sets.
-Calls match a definition by name (``f(...)``, ``x.f(...)``, ``Cls(...)``
-for ``__init__``, ``partial(f, ...)``, and ``w(...)`` after
-``w = f if c else g``); a call that forwards ``*args`` or ``**kwargs``
-passes everything.
+rule: a defaulted parameter of a top-level function or method is an
+option only when the corpus uses at least two distinct values for it;
+with one value in use it is a constant.  Each matching call uses one
+value: the argument it passes by position or by keyword, or the default
+when it omits the parameter.  A literal, or a name no enclosing function
+or comprehension binds (a module constant such as ``IVF_CELLS``), is
+compared by its source text; any other argument (a parameter, a local or
+loop variable, an expression) may hold any value, and so may a
+``*args`` / ``**kwargs`` forward.  Calls match a definition by name:
+``f(...)``, ``partial(f, ...)``, ``w(...)`` after ``w = f if c else g``,
+``Cls(...)`` for ``__init__``, and ``x.f(...)`` where ``x`` is a name the
+file imports from the package; a method also matches any ``x.m(...)``,
+so a foreign object's method call (a model's ``generate``) sets no
+package function's options.
 
 Spark-free: AST only.
 """
@@ -47,12 +55,12 @@ ALLOWED = {
     "read_webdataset": "reader the webdataset writer tests check the written shards with",
 }
 
-#: defaulted parameters no corpus call passes that stay, with the reason
+#: defaulted parameters with fewer than two values in use that stay, with
+#: the reason
 ALLOWED_OPTIONS = {
     **{
         f"similarity.{fn}({p})": "fixture size: tests run the kernel on 2-8-dim vectors"
         for fn, ps in (
-            ("embedding_near_dup_pairs", ("dim",)),
             ("semdedup_keep", ("n_cells", "dim")),
             ("icl_chain_order", ("n_cells", "dim")),
             ("kcenter_coreset", ("k", "n_cells", "dim")),
@@ -61,6 +69,14 @@ ALLOWED_OPTIONS = {
     },
     "scenecut.pyscenedetect_bounds(scenedetect_mod)": "fake of the optional scenedetect dependency",
     "media.with_sampled_frames(target_hw)": "resize path the score stages keep (ROADMAP item 2)",
+    "similarity.embedding_near_dup_pairs(threshold)": (
+        "exact recall oracle: tests compare lsh_near_dup_pairs with it at the queries' 0.4"
+    ),
+    "fakevideo.generate(n_scenes)": "test fixture: the scene-cut tests pin a video's scene count",
+    **{
+        f"fakevideo.generate({p})": "test fixture size: the CLI resize test decodes 96x128 frames"
+        for p in ("height", "width")
+    },
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -180,16 +196,32 @@ def _orphans(root: Path = REPO) -> list[str]:
     ]
 
 
-def _callee(node: ast.expr) -> str | None:
+def _package_names(tops: list[ast.stmt]) -> set[str]:
+    """Names a file binds by importing from the package."""
+    return {
+        a.asname or a.name
+        for top in tops
+        for node in ast.walk(top)
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").split(".")[0] == PACKAGE.name
+        for a in node.names
+    }
+
+
+def _callee(node: ast.expr, modules: set[str]) -> str | None:
+    """The key a call of ``node`` matches definitions by: ``f`` for a
+    name or an attribute of a name imported from the package, ``.f`` for
+    any other attribute (a method call, which only methods match)."""
     if isinstance(node, ast.Name):
         return node.id
     if isinstance(node, ast.Attribute):
-        return node.attr
+        held = node.value
+        return node.attr if isinstance(held, ast.Name) and held.id in modules else "." + node.attr
     return None
 
 
-def _aliases(tops: list[ast.stmt]) -> dict[str, set[str]]:
-    """``x = f`` or ``x = f if c else g``: the names a call of ``x`` may
+def _aliases(tops: list[ast.stmt], modules: set[str]) -> dict[str, set[str]]:
+    """``x = f`` or ``x = f if c else g``: the keys a call of ``x`` may
     reach."""
     out: dict[str, set[str]] = {}
     for top in tops:
@@ -197,38 +229,78 @@ def _aliases(tops: list[ast.stmt]) -> dict[str, set[str]]:
             if isinstance(node, ast.Assign) and len(node.targets) == 1:
                 value = node.value
                 held = [value.body, value.orelse] if isinstance(value, ast.IfExp) else [value]
-                names = {n for n in map(_callee, held) if n}
+                names = {n for n in (_callee(h, modules) for h in held) if n}
                 if isinstance(node.targets[0], ast.Name) and names:
                     out.setdefault(node.targets[0].id, set()).update(names)
     return out
 
 
-def _passed(root: Path = REPO) -> tuple[Counter, dict[str, set]]:
-    """Per callee name: the most positional arguments any corpus call
-    passes, and every keyword any passes (``None``: a ``**`` forward)."""
-    tops = [top for nodes in _corpus(root).values() for top, _, _ in nodes]
-    aliases = _aliases(tops)
-    positional, keywords = Counter(), {}
-    for top in tops:
-        for call in ast.walk(top):
-            if not isinstance(call, ast.Call):
-                continue
-            name, args = _callee(call.func), list(call.args)
-            if name == "partial" and args:
-                name = _callee(args.pop(0))
-            if name is None:
-                continue
-            for n in {name} | aliases.get(name, set()):
-                if any(isinstance(a, ast.Starred) for a in args):
-                    positional[n] = 1 << 30
-                positional[n] = max(positional[n], len(args))
-                keywords.setdefault(n, set()).update(k.arg for k in call.keywords)
-    return positional, keywords
+_COMPS = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+
+
+def _scoped_calls(node: ast.AST, bound: frozenset = frozenset()):
+    """Every call under ``node``, with the names its enclosing functions
+    and comprehensions bind (parameters, locals, loop targets)."""
+    if isinstance(node, (*_FUNCS, ast.Lambda, *_COMPS)):
+        a = getattr(node, "args", None)
+        params = a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg] if a else []
+        bound = bound | {p.arg for p in params if p} | {
+            n.id for n in ast.walk(node) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        }
+    if isinstance(node, ast.Call):
+        yield node, bound
+    for child in ast.iter_child_nodes(node):
+        yield from _scoped_calls(child, bound)
+
+
+#: the value of an argument that may hold any value, and a ``*`` forward
+EVERY, FORWARD = object(), object()
+
+
+def _value(node: ast.expr, bound: frozenset) -> object:
+    """A literal, or a name no enclosing function or comprehension binds
+    (a module constant), is its source text; anything else may hold any
+    value."""
+    if isinstance(node, ast.Name):
+        return EVERY if node.id in bound else node.id
+    try:
+        ast.literal_eval(node)
+    except ValueError:
+        return EVERY
+    return ast.unparse(node)
+
+
+def _calls(root: Path = REPO) -> dict[str, list[tuple[list[object], dict[str, object]]]]:
+    """Per callee key: the positional and keyword argument values of every
+    corpus call that may reach it; a ``*`` forward is positional
+    ``FORWARD``, a ``**`` forward keyword ``None``."""
+    out: dict[str, list] = {}
+    for nodes in _corpus(root).values():
+        tops = [top for top, _, _ in nodes]
+        modules = _package_names(tops)
+        aliases = _aliases(tops, modules)
+        for top in tops:
+            for call, bound in _scoped_calls(top):
+                name, args = _callee(call.func, modules), list(call.args)
+                if name in ("partial", ".partial") and args:
+                    name = _callee(args.pop(0), modules)
+                if name is None:
+                    continue
+                values = [
+                    FORWARD if isinstance(a, ast.Starred) else _value(a, bound) for a in args
+                ]
+                given = {
+                    k.arg: EVERY if k.arg is None else _value(k.value, bound)
+                    for k in call.keywords
+                }
+                for n in {name} | aliases.get(name, set()):
+                    out.setdefault(n, []).append((values, given))
+    return out
 
 
 def _options(root: Path = REPO):
-    """(where, key, callee names, position or None, parameter) for every
-    defaulted parameter of a package function or method."""
+    """(where, key, callee keys, position or None, parameter, default) for
+    every defaulted parameter of a package function or method."""
     package = root / PACKAGE.name
     for path, nodes in _corpus(root).items():
         if package not in path.parents:
@@ -244,38 +316,48 @@ def _options(root: Path = REPO):
                             getattr(d, "id", None) == "staticmethod"
                             for d in sub.decorator_list
                         )
-                        names = [top.name] if sub.name == "__init__" else [sub.name]
+                        names = [top.name] if sub.name == "__init__" else [sub.name, "." + sub.name]
                         funcs.append((f"{top.name}.{sub.name}", sub, names, 0 if static else 1))
         for qual, fn, names, shift in funcs:
             a = fn.args
             params = a.posonlyargs + a.args
             first = len(params) - len(a.defaults)
-            opts = [(p, i - shift) for i, p in enumerate(params) if i >= first]
-            opts += [(p, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-            for p, pos in opts:
+            opts = [
+                (p, i - shift, d)
+                for i, (p, d) in enumerate(zip(params[first:], a.defaults), start=first)
+            ]
+            opts += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for p, pos, default in opts:
                 yield (
                     f"{path.relative_to(root)}:{fn.lineno}",
                     f"{path.stem}.{qual}({p.arg})",
                     names,
                     pos,
                     p.arg,
+                    default,
                 )
 
 
 def _unset_options(root: Path = REPO, allowed=ALLOWED_OPTIONS) -> tuple[list[str], list[str]]:
-    """(options no corpus call sets and not allowed, allowed keys that are
-    set or gone)."""
-    positional, keywords = _passed(root)
+    """(options with fewer than two values in use and not allowed, allowed
+    keys that have two or are gone)."""
+    calls = _calls(root)
     unset, keys = [], set()
-    for where, key, names, pos, param in _options(root):
+    for where, key, names, pos, param, default in _options(root):
         keys.add(key)
-        passed = any(
-            (pos is not None and positional[n] > pos)
-            or param in keywords.get(n, ())
-            or None in keywords.get(n, ())
-            for n in names
-        )
-        if passed:
+        values = set()
+        for args, given in (c for n in names for c in calls.get(n, ())):
+            if pos is not None and FORWARD in args[: pos + 1]:
+                values.add(EVERY)
+            elif pos is not None and pos < len(args):
+                values.add(args[pos])
+            elif param in given:
+                values.add(given[param])
+            elif None in given:
+                values.add(EVERY)
+            else:
+                values.add(_value(default, frozenset()))
+        if EVERY in values or len(values) > 1:
             keys.discard(key)
         elif key not in allowed:
             unset.append(f"{where} {key}")
@@ -335,17 +417,27 @@ def test_only_code_counts_as_a_use(tmp_path):
 
 
 def test_an_option_is_set_by_position_keyword_or_forward(tmp_path):
-    """A defaulted parameter counts as set when a corpus call passes it by
-    position (a method's ``self`` not counted) or by keyword, also through
-    an alias, or forwards ``*args`` / ``**kwargs``; a test calling it is no
-    use."""
+    """A defaulted parameter is set when corpus calls use two distinct
+    values for it: passed by position (a method's ``self`` not counted) or
+    by keyword, also through an alias, omitted (the default), or any value
+    through a ``*args`` / ``**kwargs`` forward or a non-literal argument (a
+    loop variable included).
+    Passed only its default, or one other literal that no call omits, or
+    one module constant, it is unset; a foreign object's ``fm(**kw)`` sets
+    no package function ``fm``; a test calling it is no use."""
     pkg = tmp_path / PACKAGE.name
     pkg.mkdir()
     (pkg / "__init__.py").write_text("")
     (pkg / "ops.py").write_text(
-        "def f(a, by_pos=1, by_kw=2, unset=3):\n"
+        "def f(a, by_pos=1, by_kw=2, by_alias=3, default_only=4):\n"
+        "    return a\n"
+        "def k(a, one_other=5, by_const=6):\n"
         "    return a\n"
         "def g(a, fwd=1):\n"
+        "    return a\n"
+        "def fm(a, foreign=1):\n"
+        "    return a\n"
+        "def q(a, in_loop=1):\n"
         "    return a\n"
         "class C:\n"
         "    def __init__(self, x=1, y=2):\n"
@@ -355,16 +447,29 @@ def test_an_option_is_set_by_position_keyword_or_forward(tmp_path):
     )
     (pkg / "cli.py").write_text(
         "from lvm_datapipe_spark import ops\n"
-        "def main(*args):\n"
-        "    ops.f(0, 1, by_kw=2)\n"
+        "LIMIT = 9\n"
+        "Q = [ops.q(0, in_loop=n) for n in (LIMIT, 2)]\n"
+        "def main(model, *args, **kw):\n"
+        "    ops.f(0, 7, by_kw=8, default_only=4)\n"
+        "    ops.f(0, by_pos=args)\n"
+        "    ops.k(0, one_other=0, by_const=LIMIT)\n"
+        "    ops.k(1, 0, LIMIT)\n"
         "    ops.g(*args)\n"
+        "    model.fm(**kw)\n"
         "    ops.C(5).m(6)\n"
+        "    ops.C(x=args[0]).m(p=7)\n"
         "    h = ops.f if args else ops.g\n"
-        "    h(0, unset=4)\n"
+        "    h(0, by_alias=args[1])\n"
     )
     tests = tmp_path / "tests"
     tests.mkdir()
     (tests / "test_ops.py").write_text("from lvm_datapipe_spark import ops\nops.C(1, y=3)\n")
     unset, stale = _unset_options(tmp_path, allowed={"ops.C.m(q)": "kept", "ops.g(fwd)": "gone"})
-    assert sorted(u.split()[1] for u in unset) == ["ops.C.__init__(y)"]
+    assert sorted(u.split()[1] for u in unset) == [
+        "ops.C.__init__(y)",
+        "ops.f(default_only)",
+        "ops.fm(foreign)",
+        "ops.k(by_const)",
+        "ops.k(one_other)",
+    ]
     assert stale == ["ops.g(fwd)"]

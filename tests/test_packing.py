@@ -2,18 +2,31 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
 
+from lvm_datapipe_spark.operators import packing
 from lvm_datapipe_spark.operators.packing import pack_sequences
 
 
+@pytest.fixture
+def ctx_len(monkeypatch):
+    """Set the packed context length for one test."""
+    return lambda n: monkeypatch.setattr(packing, "CTX_LEN", n)
+
+
 def _sized(spark, rows, cols=("doc_id", "n_tokens")):
-    return spark.createDataFrame(rows, list(cols))
+    """(doc_id, n_tokens) rows, all in one ``lang`` shard unless ``cols``
+    names the shard."""
+    df = spark.createDataFrame(rows, list(cols))
+    return df if "lang" in cols else df.withColumn("lang", F.lit("en"))
 
 
-def test_pack_layout_exact(spark):
+def test_pack_layout_exact(spark, ctx_len):
     # stream: 100 + 100 + 300 + 600 tokens, ctx 256
     df = _sized(spark, [(1, 100), (2, 100), (3, 300), (4, 600)])
-    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens", ctx_len=256).collect()}
+    ctx_len(256)
+    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens").collect()}
     assert (out[1].start_offset, out[1].pack_id, out[1].pack_offset, out[1].n_packs) == (0, 0, 0, 1)
     assert (out[2].start_offset, out[2].pack_id, out[2].pack_offset, out[2].n_packs) == (100, 0, 100, 1)
     # doc 3: tokens 200..499 → spans packs 0 and 1
@@ -22,23 +35,22 @@ def test_pack_layout_exact(spark):
     assert (out[4].start_offset, out[4].pack_id, out[4].n_packs) == (500, 1, 4)
 
 
-def test_pack_sharded_independent_streams(spark):
+def test_pack_sharded_independent_streams(spark, ctx_len):
     df = _sized(
         spark,
         [(1, "a", 100), (2, "a", 100), (3, "b", 100)],
-        cols=("doc_id", "shard", "n_tokens"),
+        cols=("doc_id", "lang", "n_tokens"),
     )
-    out = {
-        r.doc_id: r
-        for r in pack_sequences(df, "n_tokens", shard_col="shard", ctx_len=128).collect()
-    }
+    ctx_len(128)
+    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens").collect()}
     assert out[3].start_offset == 0  # shard b starts its own stream
     assert out[2].start_offset == 100
 
 
-def test_zero_token_doc(spark):
+def test_zero_token_doc(spark, ctx_len):
     df = _sized(spark, [(1, 0), (2, 50)])
-    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens", ctx_len=64).collect()}
+    ctx_len(64)
+    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens").collect()}
     assert out[1].n_packs == 1 and out[1].start_offset == 0
     assert out[2].start_offset == 0  # empty doc consumes no stream space
 
@@ -55,16 +67,18 @@ def _window_tokens(packed, ctx_len):
     return tokens
 
 
-def test_utilization_full_windows(spark):
+def test_utilization_full_windows(spark, ctx_len):
     df = _sized(spark, [(1, 100), (2, 100), (3, 300), (4, 524)])  # total 1024 = 4x256
-    packed = pack_sequences(df, "n_tokens", ctx_len=256)
+    ctx_len(256)
+    packed = pack_sequences(df, "n_tokens")
     # the stream exactly fills every window
     assert _window_tokens(packed, 256) == {0: 256, 1: 256, 2: 256, 3: 256}
 
 
-def test_utilization_partial_tail(spark):
+def test_utilization_partial_tail(spark, ctx_len):
     df = _sized(spark, [(1, 300)])
-    packed = pack_sequences(df, "n_tokens", ctx_len=256)
+    ctx_len(256)
+    packed = pack_sequences(df, "n_tokens")
     assert _window_tokens(packed, 256) == {0: 256, 1: 44}
 
 

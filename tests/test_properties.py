@@ -35,6 +35,13 @@ def _patched(module, name, value, fn, *args, **kwargs):
         return fn(*args, **kwargs)
 
 
+def _kcore(df, k, max_rounds, stats):
+    """kcore of a ``(u, v)`` edge list at core order ``k`` with its round
+    cap at ``max_rounds``."""
+    with mock.patch.multiple(graph, KCORE_K=k, KCORE_MAX_ROUNDS=max_rounds):
+        return graph.kcore(df.toDF("p1", "p2"), stats=stats)
+
+
 WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
 texts = st.lists(st.sampled_from(WORDS), min_size=0, max_size=12).map(" ".join)
 
@@ -62,7 +69,7 @@ def test_jaccard_matches_python_model(spark, docs):
     df = spark.createDataFrame(list(enumerate(docs)), ["doc_id", "text"])
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(df, threshold=0.0).collect()
+        for r in _patched(D, "JACCARD_THRESHOLD", 0.0, D.ngram_jaccard_pairs, df).collect()
     }
     sh = {i: _py_shingles(t) for i, t in enumerate(docs)}
     want = {}
@@ -194,7 +201,7 @@ def test_scd2_merge_matches_python_model(spark, cur, upd):
     )
     if not upd_rows:
         udf_ = udf_.filter("doc_id IS NOT NULL")
-    got = {tuple(r) for r in scd2_merge(cdf, udf_, batch_date="2024-06-01").collect()}
+    got = {tuple(r) for r in scd2_merge(cdf, udf_).collect()}
 
     want = set()
     for k, fp in cur.items():
@@ -319,7 +326,7 @@ def test_temporal_join_matches_version_model(spark, fact_ts, boundaries):
     )
     got = {
         r["fid"]: r["attr"]
-        for r in temporal_join(fdf, vdf, "k", "t", how="left").collect()
+        for r in temporal_join(fdf, vdf, "k", "t").collect()
     }
 
     def model(t):
@@ -431,11 +438,14 @@ def test_watermark_audit_matches_python_replay(spark, evs, rng):
     seqs = list(range(len(evs)))
     rng.shuffle(seqs)
     rows = [(k, t, s) for (k, t), s in zip(evs, seqs)]
-    delays = (0, 60, 600)
-    df = spark.createDataFrame(rows, "event_type string, tsec long, seq long")
+    delays = (0, 60, 600, 3600)
+    df = spark.createDataFrame(
+        [(k, t, q, q) for k, t, q in rows],
+        "event_type string, tsec long, arr long, event_id long",
+    )
     got = {
         (r.event_type, r.delay_s): (r.n_events, r.n_dropped, r.drop_ppm, r.max_late_s)
-        for r in watermark_drop_audit(df, order_cols=("seq",), delays=delays).collect()
+        for r in watermark_drop_audit(df).collect()
     }
     # python replay
     from collections import defaultdict
@@ -476,8 +486,6 @@ def test_kcore_matches_python_fixpoint_on_random_graphs(spark, edges, k):
     multi-layer cascades."""
     from collections import defaultdict
 
-    from lvm_datapipe_spark.operators.graph import kcore
-
     adj = defaultdict(set)
     for u, v in edges:
         adj[u].add(v)
@@ -494,7 +502,7 @@ def test_kcore_matches_python_fixpoint_on_random_graphs(spark, edges, k):
     stats: dict = {}
     got = {
         (r.node, r.core_degree)
-        for r in _patched(graph, "KCORE_MAX_ROUNDS", 40, kcore, df, k=k, stats=stats).collect()
+        for r in _kcore(df, k, 40, stats).collect()
     }
     assert stats["converged"] is True
     assert got == expect
@@ -522,8 +530,6 @@ def test_kcore_matches_capped_peel_model_property(spark, edges, k, cap):
     round as converged, and keeps only nodes with >= 1 alive neighbor."""
     import warnings
 
-    from lvm_datapipe_spark.operators.graph import kcore
-
     adj = defaultdict(set)
     for u, v in edges:
         adj[u].add(v)
@@ -545,7 +551,7 @@ def test_kcore_matches_capped_peel_model_property(spark, edges, k, cap):
     st_: dict = {}
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        rows = _patched(graph, "KCORE_MAX_ROUNDS", cap, kcore, df, k=k, stats=st_).collect()
+        rows = _kcore(df, k, cap, st_).collect()
     assert {(r.node, r.core_degree) for r in rows} == expect
     assert st_["converged"] is converged
 

@@ -79,11 +79,12 @@ def test_rrf_fuse_full_outer_semantics(spark):
     }
 
 
-def test_skipgram_pairs_hand_computed(spark):
+def test_skipgram_pairs_hand_computed(spark, monkeypatch):
     docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
+    monkeypatch.setattr(X, "SKIPGRAM_WINDOW", 1)
     got = {
         (r["center"], r["context"]): r["cnt"]
-        for r in X.skipgram_pairs(docs, window=1, min_count=1).collect()
+        for r in X.skipgram_pairs(docs, min_count=1).collect()
     }
     assert got == {("a", "b"): 1, ("b", "a"): 1, ("b", "c"): 1, ("c", "b"): 1}
 
@@ -92,17 +93,18 @@ def test_skipgram_window2_includes_distance2_pairs(spark):
     docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
     got = {
         (r["center"], r["context"]): r["cnt"]
-        for r in X.skipgram_pairs(docs, window=2, min_count=1).collect()
+        for r in X.skipgram_pairs(docs, min_count=1).collect()
     }
     assert got[("a", "c")] == 1 and got[("c", "a")] == 1
     assert len(got) == 6
 
 
-def test_skipgram_min_count_floor_and_empty_text(spark):
+def test_skipgram_min_count_floor_and_empty_text(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(1, "x y x y x y"), (2, ""), (3, "z")], ["doc_id", "text"]
     )
-    out = X.skipgram_pairs(docs, window=1, min_count=3)
+    monkeypatch.setattr(X, "SKIPGRAM_WINDOW", 1)
+    out = X.skipgram_pairs(docs, min_count=3)
     got = {(r["center"], r["context"]): r["cnt"] for r in out.collect()}
     # x<->y adjacencies occur 5 times each direction; z has no neighbors
     assert got == {("x", "y"): 5, ("y", "x"): 5}
@@ -119,11 +121,13 @@ def test_fusion_query_plan_has_no_corpus_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_hashed_features_unit_norm_and_determinism(spark):
+def test_hashed_features_unit_norm_and_determinism(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(1, "cat dog cat fish"), (2, "cat"), (3, "")], ["doc_id", "text"]
     )
-    rows = X.hashed_features(docs, dim=8, salt="t").collect()
+    monkeypatch.setattr(X, "HASH_DIM", 8)
+    monkeypatch.setattr(X, "HASH_SALT", "t")
+    rows = X.hashed_features(docs).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append((r["bucket"], r["weight"]))
@@ -135,11 +139,11 @@ def test_hashed_features_unit_norm_and_determinism(spark):
     # empty doc -> no rows
     assert 3 not in by_doc
     # stable under repartition (pure hash of content)
-    again = X.hashed_features(docs.repartition(7), dim=8, salt="t").collect()
+    again = X.hashed_features(docs.repartition(7)).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_hashed_features_signs_cancel(spark):
+def test_hashed_features_signs_cancel(spark, monkeypatch):
     # two tokens in the same bucket with opposite signs must cancel and
     # drop the bucket; synthesize by brute-force searching token pairs
     from lvm_datapipe_spark.operators.sampling import hash_bucket
@@ -175,17 +179,15 @@ def test_hashed_features_signs_cancel(spark):
             break
     assert pair, "no cancelling pair among 300 tokens (hash badly skewed?)"
     docs = spark.createDataFrame([(1, f"{pair[0]} {pair[1]}")], ["doc_id", "text"])
-    out = X.hashed_features(docs, dim=4, salt="t").collect()
+    monkeypatch.setattr(X, "HASH_DIM", 4)
+    monkeypatch.setattr(X, "HASH_SALT", "t")
+    out = X.hashed_features(docs).collect()
     assert all(r["bucket"] != pair[2] for r in out)
 
 
 def test_input_validation_guards(spark, tiny_docs):
     with pytest.raises(ValueError, match="lowercase"):
         RK.bm25_scores(tiny_docs, ("Cat",))
-    with pytest.raises(ValueError, match="window"):
-        X.skipgram_pairs(tiny_docs, window=0)
-    with pytest.raises(ValueError, match="dim"):
-        X.hashed_counts(tiny_docs, dim=0)
 
 
 def test_sparse_cosine_matches_dense_numpy_reference(spark):
@@ -197,9 +199,7 @@ def test_sparse_cosine_matches_dense_numpy_reference(spark):
     from lvm_datapipe_spark.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
-    counts = X.hashed_counts(
-        spark.read.parquet(f"{sf}/documents.parquet"), dim=64, salt="feat"
-    ).collect()
+    counts = X.hashed_counts(spark.read.parquet(f"{sf}/documents.parquet")).collect()
     vecs = {}
     for r in counts:
         vecs.setdefault(r["doc_id"], np.zeros(64))[r["bucket"]] = r["w"]

@@ -10,13 +10,6 @@ from lvm_datapipe_spark.operators import aggregates as A
 from lvm_datapipe_spark.operators import relational as R
 
 
-def test_resume_anti_join(spark):
-    clips = spark.createDataFrame([("a",), ("b",), ("c",)], ["clip_id"])
-    done = spark.createDataFrame([("b",), ("zz",)], ["clip_id"])
-    out = {r.clip_id for r in R.resume_anti_join(clips, done).collect()}
-    assert out == {"a", "c"}
-
-
 def test_find_breakpoint(spark):
     # video v1: clips sum to duration (done); v2: 5s gap (not done)
     rows = [
@@ -24,9 +17,9 @@ def test_find_breakpoint(spark):
         ("v1", 10.0, 6.0),
         ("v2", 20.0, 15.0),
     ]
-    df = spark.createDataFrame(rows, ["video_id", "video_duration", "clip_duration"])
+    df = spark.createDataFrame(rows, ["o_orderkey", "video_duration", "clip_duration"])
     done = A.find_breakpoint(df)
-    assert [r.video_id for r in done.collect()] == ["v1"]
+    assert [r.o_orderkey for r in done.collect()] == ["v1"]
 
 
 def test_histogram_numpy_semantics(spark):

@@ -54,7 +54,7 @@ def test_split_subdivision_preserves_earlier_splits(spark):
 
 def test_stratified_fractions(spark):
     docs = _docs(spark)
-    out = stratified_sample(docs, "lang", "doc_id", {"en": 0.2}, default_fraction=1.0)
+    out = stratified_sample(docs, "lang", "doc_id", {"en": 0.2})
     kept = out.groupBy("lang").agg(F.count("*").alias("n")).collect()
     by = {r.lang: r.n for r in kept}
     n_en = docs.filter(F.col("lang") == "en").count()

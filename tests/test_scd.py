@@ -39,7 +39,7 @@ def test_all_merge_cases(spark):
         ["doc_id", "fingerprint"],
     )
     got = sorted(
-        scd2_merge(current, updates, batch_date="2024-06-01").collect()
+        scd2_merge(current, updates).collect()
     )
     want = sorted(
         [
@@ -131,10 +131,8 @@ def test_temporal_join_left_keeps_prehistoric_facts(spark):
     from lvm_datapipe_spark.operators.scd import temporal_join
 
     facts = spark.createDataFrame([(1, 1, 5), (2, 2, 14)], ["fid", "k", "t"])
-    rows = temporal_join(facts, _versions(spark), "k", "t", how="left").collect()
+    rows = temporal_join(facts, _versions(spark), "k", "t").collect()
     assert {r["fid"]: r["attr"] for r in rows} == {1: None, 2: None}
-    inner = temporal_join(facts, _versions(spark), "k", "t").collect()
-    assert inner == []
 
 
 def test_temporal_join_no_fanout_and_hash_join(spark):
@@ -143,19 +141,9 @@ def test_temporal_join_no_fanout_and_hash_join(spark):
     facts = spark.createDataFrame(
         [(i, 1, 10 + i % 30) for i in range(50)], ["fid", "k", "t"]
     )
-    out = temporal_join(facts, _versions(spark), "k", "t", how="left")
+    out = temporal_join(facts, _versions(spark), "k", "t")
     assert out.count() == 50  # well-formed SCD2 → exactly one row per fact
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
-
-def test_temporal_join_rejects_bad_how(spark):
-    import pytest
-
-    from lvm_datapipe_spark.operators.scd import temporal_join
-
-    with pytest.raises(ValueError, match="inner|left"):
-        temporal_join(
-            spark.range(1), spark.range(1), "id", "id", how="full"
-        )

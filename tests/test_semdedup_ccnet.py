@@ -11,6 +11,8 @@ import math
 import pyspark.sql.functions as F
 import pytest
 
+from lvm_datapipe_spark.operators import similarity as V
+
 
 def _emb_df(spark, vecs):
     return spark.createDataFrame(
@@ -20,7 +22,7 @@ def _emb_df(spark, vecs):
 
 
 class TestSemDeDup:
-    def test_duplicate_pair_keeps_low_centroid_sim(self, spark):
+    def test_duplicate_pair_keeps_low_centroid_sim(self, spark, monkeypatch):
         from lvm_datapipe_spark.operators.similarity import (
             ivf_fixed_centroids,
             semdedup_keep,
@@ -32,9 +34,8 @@ class TestSemDeDup:
         base = [1.0, 0.5, -0.25, 2.0, 0.0, 0.0, 1.0, -1.0]
         near = [x * 1.001 + (0.001 if i == 0 else 0.0) for i, x in enumerate(base)]
         other = [-5.0, 4.0, 3.0, -2.0, 1.0, 6.0, -7.0, 0.5]
-        out = semdedup_keep(
-            _emb_df(spark, [base, near, other]), eps=0.95, n_cells=4, dim=dim
-        ).collect()
+        monkeypatch.setattr(V, "SEMDEDUP_EPS", 0.95)
+        out = semdedup_keep(_emb_df(spark, [base, near, other]), n_cells=4, dim=dim).collect()
         rows = {r.vec_id: r for r in out}
         assert rows[2].keep  # unrelated vector untouched
         # exactly one of the near-dup pair survives; the survivor has the
@@ -58,23 +59,23 @@ class TestSemDeDup:
         expected = max(cos(base, c) for c in cents)
         assert rows[0].centroid_sim == pytest.approx(expected, rel=1e-12)
 
-    def test_eps_above_one_keeps_everything(self, spark):
+    def test_eps_above_one_keeps_everything(self, spark, monkeypatch):
         from lvm_datapipe_spark.operators.similarity import semdedup_keep
 
         dim = 8
         vecs = [[float(i + 1)] * dim for i in range(5)]  # all cos == 1 pairs
-        out = semdedup_keep(_emb_df(spark, vecs), eps=1.01, n_cells=4, dim=dim)
+        monkeypatch.setattr(V, "SEMDEDUP_EPS", 1.01)
+        out = semdedup_keep(_emb_df(spark, vecs), n_cells=4, dim=dim)
         assert out.filter(~F.col("keep")).count() == 0
 
-    def test_colinear_group_keeps_exactly_one(self, spark):
+    def test_colinear_group_keeps_exactly_one(self, spark, monkeypatch):
         from lvm_datapipe_spark.operators.similarity import semdedup_keep
 
         dim = 8
         v = [2.0, -1.0, 0.5, 3.0, -2.0, 1.0, 0.25, -0.5]
         vecs = [[x * s for x in v] for s in (1.0, 2.0, 3.0)]  # cos == 1 chain
-        rows = semdedup_keep(
-            _emb_df(spark, vecs), eps=0.99, n_cells=4, dim=dim
-        ).collect()
+        monkeypatch.setattr(V, "SEMDEDUP_EPS", 0.99)
+        rows = semdedup_keep(_emb_df(spark, vecs), n_cells=4, dim=dim).collect()
         kept = [r for r in rows if r.keep]
         # colinear vectors share a cell; exactly one survives — the minimum
         # by (centroid_sim, vec_id).  (Scaling a vector wobbles its cosine in
@@ -298,7 +299,7 @@ class TestQuantileSketch:
         est = {
             r.event_type: r.median_est
             for r in sketch_median(
-                quantile_sketch(ev, "value", "event_type", n_bins=64), "event_type"
+                quantile_sketch(ev, "value", "event_type"), "event_type"
             ).collect()
         }
         exact = {

@@ -73,7 +73,7 @@ def landing_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def test_stream_windowed_counts_match_batch(spark, landing_dir):
+def test_stream_windowed_counts_match_batch(spark, landing_dir, sf_dir):
     stream = _read_events(spark, landing_dir)
     assert stream.isStreaming
     q = _to_memory(
@@ -84,9 +84,7 @@ def test_stream_windowed_counts_match_batch(spark, landing_dir):
         (r.window_start, r.event_type): (r.n, round(r.total_value, 6))
         for r in spark.sql("SELECT * FROM win_counts").collect()
     }
-    batch = ev.windowed_counts(
-        load_table(spark, "/root/testdata/sf0.001", "events"), watermark=None
-    )
+    batch = ev.windowed_counts(load_table(spark, sf_dir, "events"))
     want = {
         (r.window_start, r.event_type): (r.n, round(r.total_value, 6))
         for r in batch.collect()
@@ -94,15 +92,13 @@ def test_stream_windowed_counts_match_batch(spark, landing_dir):
     assert got == want
 
 
-def test_windowed_counts_same_plan_batch_and_stream(spark):
+def test_windowed_counts_same_plan_batch_and_stream(spark, sf_dir):
     """The batch twin of windowed_counts IS the oracle-checked tumbling
     window query: same column names, same values."""
     from lvm_datapipe_spark.queries import QUERIES
 
-    batch = ev.windowed_counts(
-        load_table(spark, "/root/testdata/sf0.001", "events"), watermark=None
-    )
-    oracle = QUERIES["events_tumbling_window"](spark, "/root/testdata/sf0.001")
+    batch = ev.windowed_counts(load_table(spark, sf_dir, "events"))
+    oracle = QUERIES["events_tumbling_window"](spark, sf_dir)
     a = {(r.window_start, r.event_type, r.n) for r in batch.collect()}
     b = {(r.window_start, r.event_type, r.n) for r in oracle.collect()}
     assert a == b
@@ -313,7 +309,7 @@ def test_stream_temporal_enrich_matches_batch(spark, landing_dir):
     )
 
     stream = _read_events(spark, landing_dir).select("event_id", "ts", "user_id")
-    out = temporal_join(stream, versions, key="user_id", fact_ts="ts", how="left")
+    out = temporal_join(stream, versions, key="user_id", fact_ts="ts")
     assert out.isStreaming
     q = _to_memory(out, "temporal_enrich", output_mode="append")
     _await(q)
@@ -328,7 +324,6 @@ def test_stream_temporal_enrich_matches_batch(spark, landing_dir):
         versions,
         key="user_id",
         fact_ts="ts",
-        how="left",
     )
     want = {(r.event_id, r.tier) for r in batch.collect()}
     assert got == want
@@ -366,6 +361,15 @@ def _audit_reference(rows, delays):
     return out
 
 
+def _arrivals(spark, rows):
+    """The audit's input for ``(key, tsec, seq)`` rows: arrival order is
+    ``seq`` (also the event id)."""
+    return spark.createDataFrame(
+        [(k, t, q, q) for k, t, q in rows],
+        "event_type string, tsec long, arr long, event_id long",
+    )
+
+
 def test_watermark_audit_shuffled_arrival_fixture(spark):
     """The late branch exercised by DATA: an explicitly scrambled ingest
     sequence (not the declared query's synthetic jitter) must yield the
@@ -381,12 +385,10 @@ def test_watermark_audit_shuffled_arrival_fixture(spark):
         ("a", 760, 5),   # 60 s late (dropped only at delay 0)
         ("a", 30, 6),    # 790 s late
     ]
-    df = spark.createDataFrame(rows, "event_type string, tsec long, seq long")
+    df = _arrivals(spark, rows)
     got = {
         (r.event_type, r.delay_s): (r.n_events, r.n_dropped, r.drop_ppm, r.max_late_s)
-        for r in ev.watermark_drop_audit(
-            df, order_cols=("seq",), delays=delays
-        ).collect()
+        for r in ev.watermark_drop_audit(df).collect()
     }
     assert got[("a", 0)] == (6, 3, 500_000, 790)
     assert got[("a", 60)] == (6, 2, 333_333, 790)
@@ -406,12 +408,10 @@ def test_watermark_audit_matches_reference_on_permuted_feed(spark):
         tsec = 1000 + i * 37          # event time, increasing
         seq = (i * 73) % 200          # arrival permutation (gcd(73,200)=1)
         rows.append((key, tsec, seq))
-    df = spark.createDataFrame(rows, "event_type string, tsec long, seq long")
+    df = _arrivals(spark, rows)
     got = {
         (r.event_type, r.delay_s): (r.n_events, r.n_dropped, r.drop_ppm, r.max_late_s)
-        for r in ev.watermark_drop_audit(
-            df, order_cols=("seq",), delays=delays
-        ).collect()
+        for r in ev.watermark_drop_audit(df).collect()
     }
     expect = _audit_reference(rows, delays)
     assert got == expect

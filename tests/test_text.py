@@ -21,7 +21,7 @@ def test_token_count(spark):
 
 def test_word_ngrams_short_doc_is_empty(spark):
     df = spark.createDataFrame([("a b",), ("a b c d",)], ["text"])
-    out = [r.g for r in df.select(X.word_ngrams(X.tokens("text"), 3).alias("g")).collect()]
+    out = [r.g for r in df.select(X.word_ngrams(X.tokens("text")).alias("g")).collect()]
     assert out[0] == []  # shorter than n -> no downward-counting sequence bug
     assert out[1] == ["a b c", "b c d"]
 

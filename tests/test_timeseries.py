@@ -7,13 +7,13 @@ from lvm_datapipe_spark.operators.timeseries import user_value_profiles
 
 
 def test_profiles_equicount_buckets(spark):
-    rows = [(1, t, float(t)) for t in range(8)] + [(2, t, 1.0) for t in range(4)]
+    rows = [(1, t, float(t)) for t in range(16)] + [(2, t, 1.0) for t in range(8)]
     df = spark.createDataFrame(rows, "user_id long, ts long, value double")
     out = {
         (r["user_id"], r["bucket"]): r["profile_value"]
-        for r in user_value_profiles(df, length=4).collect()
+        for r in user_value_profiles(df).collect()
     }
-    # user 1: 8 events → buckets of 2: means (0.5, 2.5, 4.5, 6.5)
-    assert out[(1, 0)] == 0.5 and out[(1, 3)] == 6.5
-    # user 2: 4 events → 1 per bucket, all 1.0
-    assert all(out[(2, b)] == 1.0 for b in range(4))
+    # 8 buckets; user 1: 16 events → buckets of 2: means (0.5, 2.5, ..., 14.5)
+    assert out[(1, 0)] == 0.5 and out[(1, 7)] == 14.5
+    # user 2: 8 events → 1 per bucket, all 1.0
+    assert all(out[(2, b)] == 1.0 for b in range(8))

@@ -522,15 +522,11 @@ def bench_r11_kernels(spark, quick: bool) -> dict:
         t0 = time.perf_counter()
         with_d = {
             (r["id_a"], r["id_b"])
-            for r in simhash_pairs(docs, max_hamming=3, bands=4).select(
-                "id_a", "id_b"
-            ).collect()
+            for r in simhash_pairs(docs).select("id_a", "id_b").collect()
         }
         t_with = round(time.perf_counter() - t0, 2)
         t0 = time.perf_counter()
-        raw = simhash_pairs(
-            docs, max_hamming=3, bands=4, dedup_pairs=False
-        ).select("id_a", "id_b")
+        raw = simhash_pairs(docs, dedup_pairs=False).select("id_a", "id_b")
         masked = (
             raw.withColumn("m", F.lit(2))
             .groupBy("id_a", "id_b")
