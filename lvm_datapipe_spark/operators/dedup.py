@@ -188,15 +188,6 @@ def shingle_intersections(
         pairs = lhs.select("id_a", F.explode("ids").alias("id_b")).filter(
             F.col("id_a") < F.col("id_b")
         )
-        if restrict_pairs is not None:
-            pairs = pairs.join(
-                F.broadcast(restrict_pairs.select("id_a", "id_b")),
-                ["id_a", "id_b"],
-                "semi",
-            )
-        inter = pairs.groupBy("id_a", "id_b").agg(
-            F.count(F.lit(1)).alias("n_common")
-        )
     else:
         # Exact-on-every-shingle form: shingle self-equi-join (unbounded hot
         # keys possible — callers accept the skew risk by passing None).
@@ -214,16 +205,13 @@ def shingle_intersections(
                 "semi",
             )
         pairs = a.join(b, "shingle").filter(F.col("id_a") < F.col("id_b"))
-        if restrict_pairs is not None:
-            pairs = pairs.join(
-                F.broadcast(restrict_pairs.select("id_a", "id_b")),
-                ["id_a", "id_b"],
-                "semi",
-            )
-        inter = pairs.groupBy("id_a", "id_b").agg(
-            F.count(F.lit(1)).alias("n_common")
+    if restrict_pairs is not None:
+        pairs = pairs.join(
+            F.broadcast(restrict_pairs.select("id_a", "id_b")),
+            ["id_a", "id_b"],
+            "semi",
         )
-    return inter
+    return pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_common"))
 
 
 def containment_pairs(df: DataFrame) -> DataFrame:

@@ -903,23 +903,16 @@ def _dense_tri_sweep(ia, ib, n):
 
 def triangle_counts_driver_dense_from_baskets(
     baskets: DataFrame,
-    order_col: str,
-    item_col: str,
 ) -> list[tuple[int, int]] | None:
     """Dense driver triangle counts straight from a BASKET table (each row
-    one (order, item); items distinct within an order): the co-occurrence
-    pair stream the distributed engines self-join for is generated ON THE
-    DRIVER from the collected baskets instead — the collect ships the
-    basket rows (sum k, HALF the bytes of the pair stream at this corpus)
-    and no pair-join job runs at all.  The edge gate is exact and cheap:
-    one small aggregate computes sum k·(k−1)/2 (the pair join's output
-    cardinality) plus the basket row count, and BOTH must clear
-    ``DENSE_TRIANGLE_MAX_EDGES`` before anything is collected.  Returns the
-    same ``[(item, n_triangles), ...]`` contract as
+    one (``l_orderkey``, ``l_suppkey``); items distinct within an order):
+    the co-occurrence pair stream the distributed engines self-join for is
+    generated ON THE DRIVER by :func:`_dense_basket_pairs` — the collect
+    ships the basket rows (sum k, HALF the bytes of the pair stream at this
+    corpus) and no pair-join job runs at all.  Returns the same
+    ``[(item, n_triangles), ...]`` contract as
     :func:`triangle_counts_driver_dense`, or ``None`` above a gate."""
-    if not _basket_pair_gate(baskets, order_col):
-        return None
-    got = _baskets_to_dense_pairs(baskets, order_col, item_col)
+    got = _dense_basket_pairs(baskets)
     if got is None:
         return None
     ia, ib, nodes = got
@@ -931,19 +924,37 @@ def triangle_counts_driver_dense_from_baskets(
     return list(zip(nodes[keep].tolist(), cnt[keep].tolist()))
 
 
-def _baskets_to_dense_pairs(baskets, order_col, item_col):
-    """Collect a basket table and generate its within-basket co-occurrence
-    pairs on the driver: returns ``(ia, ib, nodes)`` with remapped endpoint
-    codes (``0 <= ia, ib < len(nodes)``; each unordered pair once per
-    basket containing it), or ``None`` when the node count exceeds
-    ``DENSE_TRIANGLE_MAX_NODES``.  The EDGE gate must be enforced by the caller BEFORE
-    calling (this function collects).  Shared by the dense triangle and
-    k-hop reachability driver kernels."""
+def _dense_basket_pairs(baskets: DataFrame):
+    """The dense basket graph both driver kernels start from: gate, collect
+    the (``l_orderkey``, ``l_suppkey``) basket table, and generate its
+    within-basket co-occurrence pairs on the driver.  Returns
+    ``(ia, ib, nodes)`` with remapped endpoint codes
+    (``0 <= ia, ib < len(nodes)``; each unordered pair once per basket
+    containing it), or ``None`` above a gate.
+
+    The edge gate runs BEFORE the collect, as ONE small aggregate: the
+    within-basket pair cardinality sum k·(k−1)/2 (exactly the
+    co-occurrence join's output size) and the basket row count must both
+    clear ``DENSE_TRIANGLE_MAX_EDGES``.  The node gate
+    (``DENSE_TRIANGLE_MAX_NODES``) is checked on the collected rows."""
     import numpy as np
     import pandas as pd
 
+    gate = (
+        baskets.groupBy("l_orderkey")
+        .agg(F.count(F.lit(1)).alias("k"))
+        .agg(
+            F.sum(F.col("k") * (F.col("k") - 1) / 2).alias("pairs"),
+            F.sum("k").alias("rows"),
+        )
+        .collect()[0]
+    )
+    n_pairs = int(gate["pairs"] or 0)
+    n_rows = int(gate["rows"] or 0)
+    if n_pairs > DENSE_TRIANGLE_MAX_EDGES or n_rows > DENSE_TRIANGLE_MAX_EDGES:
+        return None
     pdf = baskets.select(
-        F.col(order_col).alias("o"), F.col(item_col).alias("i")
+        F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("i")
     ).toPandas()
     if len(pdf) == 0:
         return (
@@ -974,32 +985,13 @@ def _baskets_to_dense_pairs(baskets, order_col, item_col):
     return items[a_idx], items[b_idx], nodes
 
 
-def _basket_pair_gate(baskets: DataFrame, order_col: str) -> bool:
-    """True iff the basket table's within-basket pair cardinality
-    (sum k·(k−1)/2, exactly the co-occurrence join's output size) AND its
-    row count both clear ``DENSE_TRIANGLE_MAX_EDGES`` — the bounded-collect precondition
-    of the dense driver kernels, computed with ONE small aggregate."""
-    gate = (
-        baskets.groupBy(order_col)
-        .agg(F.count(F.lit(1)).alias("k"))
-        .agg(
-            F.sum(F.col("k") * (F.col("k") - 1) / 2).alias("pairs"),
-            F.sum("k").alias("rows"),
-        )
-        .collect()[0]
-    )
-    n_pairs = int(gate["pairs"] or 0)
-    n_rows = int(gate["rows"] or 0)
-    return n_pairs <= DENSE_TRIANGLE_MAX_EDGES and n_rows <= DENSE_TRIANGLE_MAX_EDGES
-
-
 def khop_reachability_driver_dense_from_baskets(
-    baskets: DataFrame, order_col: str, item_col: str
+    baskets: DataFrame,
 ) -> list[tuple[int, int, int]] | None:
     """Bounded-depth BFS on a METADATA-SIZED co-occurrence graph, computed
     on the driver with the packed-bitset adjacency — the k-hop sibling of
-    :func:`triangle_counts_driver_dense_from_baskets` (same gates, same
-    basket collect, same fallback contract).
+    :func:`triangle_counts_driver_dense_from_baskets` (the same
+    :func:`_dense_basket_pairs` gates and collect, same fallback contract).
 
     Semantics pinned to graph_reachability_3hop's declared SQL: seeds are
     the 5 highest-degree nodes (degree = distinct neighbors; ties by
@@ -1016,9 +1008,7 @@ def khop_reachability_driver_dense_from_baskets(
     table the triangle kernel already ships."""
     import numpy as np
 
-    if not _basket_pair_gate(baskets, order_col):
-        return None
-    got = _baskets_to_dense_pairs(baskets, order_col, item_col)
+    got = _dense_basket_pairs(baskets)
     if got is None:
         return None
     ia, ib, nodes = got

@@ -189,14 +189,15 @@ def _sql_sign_bit(plane) -> str:
     )
 
 
-def lsh_table_planes(n_planes: int, n_tables: int, dim: int, seed: int) -> list:
+def lsh_table_planes(n_planes: int, n_tables: int, seed: int) -> list:
     """The deterministic hyperplane sets for multi-table LSH: table t uses
-    ``n_planes`` Gaussian planes drawn from numpy PCG64 with seed ``seed+t``.
-    Exposed so the SQL oracle can replay the exact same literals."""
+    ``n_planes`` Gaussian ``DEFAULT_DIM``-dim planes drawn from numpy PCG64
+    with seed ``seed+t``.  Exposed so the SQL oracle can replay the exact
+    same literals."""
     import numpy as np
 
     return [
-        np.random.default_rng(seed + t).standard_normal((n_planes, dim))
+        np.random.default_rng(seed + t).standard_normal((n_planes, DEFAULT_DIM))
         for t in range(n_tables)
     ]
 
@@ -227,25 +228,23 @@ def auto_n_planes(n_rows: int) -> int:
     return p
 
 
-def _observed_corpus(
-    emb: DataFrame, id_col: str, vec_col: str
-) -> tuple[DataFrame, int]:
-    """The projected ``(id, vector)`` corpus as an eager checkpoint, and its
-    row count observed on the job that built it (graph.observed_checkpoint:
-    no count job).  The auto-sizing paths size the plane budget from that
+def _observed_corpus(emb: DataFrame) -> tuple[DataFrame, int]:
+    """The projected ``(vec_id, embedding)`` corpus as an eager checkpoint,
+    and its row count observed on the job that built it
+    (graph.observed_checkpoint: no count job).  The auto-sizing paths size the plane budget from that
     count, and every table they build then reads the checkpoint instead of
     re-running the corpus scan (and its rebalance shuffle)."""
     from lvm_datapipe_spark.operators.graph import observed_checkpoint
 
     corpus, seen = observed_checkpoint(
-        emb.select(F.col(id_col), as_double(vec_col).alias(vec_col))
+        emb.select(F.col("vec_id"), as_double("embedding").alias("embedding"))
     )
     return corpus, seen["n_rows"]
 
 
 def lsh_ann_candidates(
     emb: DataFrame,
-    n_planes: int | None = 4,
+    n_planes: int = 4,
     n_tables: int = 8,
     seed: int = 42,
 ) -> DataFrame:
@@ -270,17 +269,7 @@ def lsh_ann_candidates(
     as an eager ``localCheckpoint`` (not a ``persist()``, which Spark
     4.1.2 would run once per join side — ARCHITECTURE.md §3); its blocks
     live until the caller's sink, and session.query_scope frees them.
-    ``n_planes=None`` sizes the plane budget (:func:`auto_n_planes`) from
-    the corpus row count, observed on an eager checkpoint of the projected
-    corpus that the bucket table then reads: no count job.
     """
-    if n_planes is None:
-        # production auto-sizing: the corpus row count decides the plane
-        # budget (the IVF-probe rule: scalar driver decisions are fine,
-        # data never is).  It is observed on the corpus checkpoint the
-        # bucket table then reads, so it costs no job of its own.
-        emb, n_rows = _observed_corpus(emb, "vec_id", "embedding")
-        n_planes = auto_n_planes(n_rows)
     entries = []
     # fold dots for the plane literals: n_tables × n_planes flat dot trees
     # in one expression exceed janino's 64 KB method limit (codegen
@@ -288,7 +277,7 @@ def lsh_ann_candidates(
     # compact at any plane count.  All tables' buckets are
     # ONE parsed expression: the Column-API form cost ~1.5 s of driver-side
     # py4j/lambda construction PER QUERY BUILD at 8×4×64 (see sql_fold_dot).
-    for t, planes in enumerate(lsh_table_planes(n_planes, n_tables, DEFAULT_DIM, seed)):
+    for t, planes in enumerate(lsh_table_planes(n_planes, n_tables, seed)):
         bits = " + ".join(
             f"(CASE WHEN {sql_fold_dot('_v', p)} >= 0.0D THEN {1 << i}L ELSE 0L END)"
             for i, p in enumerate(planes)
@@ -327,10 +316,11 @@ def lsh_near_dup_pairs(
     per-candidate work is a single flat dot, not three.  The projected
     ``(id, vector)`` corpus is checkpointed once, with its row count
     observed on that job; ``n_planes=None`` sizes the plane budget from
-    that count (:func:`auto_n_planes`: no count job), and both the bucket
-    table and the unit vectors read the checkpoint, so the corpus scan
-    and its rebalance shuffle run once.  All three are checkpoints, so the
-    result holds no cached relation.
+    that count (:func:`auto_n_planes`: no count job — the only place the
+    budget is sized), and both the bucket table and the unit vectors read
+    the checkpoint, so the corpus scan and its rebalance shuffle run
+    once.  All three are checkpoints, so the result holds no cached
+    relation.
 
     SIZING RULE (measured, SCALE_BENCH.md §1): keep per-table bucket
     occupancy roughly constant by growing ``n_planes`` ≈ log2(n/100) with
@@ -346,7 +336,7 @@ def lsh_near_dup_pairs(
     # shuffling the full candidate set first.  cos_sim is a pure function
     # of the pair, so the result set is identical (measured 1.75× with the
     # int bucket keys at sf0.1, where 2k vectors make 1.5M collisions).
-    corpus, n_rows = _observed_corpus(emb, "vec_id", "embedding")
+    corpus, n_rows = _observed_corpus(emb)
     if "n_planes" in lsh_kwargs and lsh_kwargs["n_planes"] is None:
         lsh_kwargs["n_planes"] = auto_n_planes(n_rows)
     cand = lsh_ann_candidates(corpus, **lsh_kwargs)
@@ -414,27 +404,22 @@ def ivf_fixed_assign(emb: DataFrame, keep_norm: bool = False) -> DataFrame:
     return out if keep_norm else out.drop("vnorm")
 
 
-def _ivf_probe_cells(
-    queries: DataFrame,
-    n_cells: int,
-    dim: int,
-    seed: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Query side of IVF: (query_id, qv, qn, cell, cell_sim) — one row per
-    (query, cell), ranked downstream to the n_probe best.  ``qn`` is the
-    query norm, carried so the exact verify divides by it instead of
-    re-folding it per candidate (dot_flat == the fold bit for bit)."""
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv"))
+def _ivf_probe_cells(queries: DataFrame) -> DataFrame:
+    """Query side of IVF over the ``(vec_id, embedding)`` queries:
+    (query_id, qv, qn, cell, cell_sim) — one row per (query, cell) of the
+    fixed ``IVF_CELLS`` quantizer, ranked downstream to the n_probe best.
+    ``qn`` is the query norm, carried so the exact verify divides by it
+    instead of re-folding it per candidate (dot_flat == the fold bit for
+    bit)."""
+    q = queries.select(F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv"))
     return q.withColumn(
-        "vnorm", F.sqrt(dot_flat(F.col("qv"), F.col("qv"), dim))
+        "vnorm", F.sqrt(dot_flat(F.col("qv"), F.col("qv"), DEFAULT_DIM))
     ).select(
         "query_id",
         "qv",
         F.col("vnorm").alias("qn"),
         F.posexplode(
-            F.expr(_ivf_cell_sims_sql(n_cells, dim, seed, "qv", "vnorm"))
+            F.expr(_ivf_cell_sims_sql(IVF_CELLS, DEFAULT_DIM, IVF_SEED, "qv", "vnorm"))
         ).alias("cell", "cell_sim"),
     )
 
@@ -450,7 +435,7 @@ def ivf_fixed_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     the probe join is keyed on the cell (at 100 TB, PARTITION the stored
     corpus by cell so probing is partition pruning, not a shuffle)."""
     corpus = ivf_fixed_assign(emb, keep_norm=True)
-    qs = _ivf_probe_cells(queries, IVF_CELLS, DEFAULT_DIM, IVF_SEED, "vec_id", "embedding")
+    qs = _ivf_probe_cells(queries)
     wp = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe = (
         qs.withColumn("_r", F.row_number().over(wp))
@@ -636,14 +621,14 @@ def pq_codebooks(m: int, ksub: int, dsub: int, seed: int):
     return rng.standard_normal((m, ksub, dsub)) / float(np.sqrt(dim))
 
 
-def _pq_dists_sql(vec_sql: str, j: int, cb_j, dsub: int) -> str:
-    """Per-centroid squared-L2 array for subvector j as ONE parsed
-    expression: ksub compact zip_with folds over slice(vec) — the same
+def _pq_dists_sql(j: int, cb_j, dsub: int) -> str:
+    """Per-centroid squared-L2 array for subvector j of ``nv`` as ONE parsed
+    expression: ksub compact zip_with folds over slice(nv) — the same
     janino-safe shape as _ivf_cell_sims_sql (flat 8-term trees × 128
     centroids would blow the 64 KB method limit)."""
     start = j * dsub + 1
     cells = ",".join(
-        f"aggregate(zip_with(slice({vec_sql}, {start}, {dsub}), "
+        f"aggregate(zip_with(slice(nv, {start}, {dsub}), "
         + "array(" + ",".join(f"{float(c)!r}D" for c in cent) + "), "
         "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v)"
         for cent in cb_j
@@ -665,40 +650,40 @@ def _pq_cb_sql(cbs) -> str:
     )
 
 
-def _pq_dists_j_sql(vec_sql: str, cbs, j_sql: str, dsub: int) -> str:
-    """Per-centroid squared-L2 array for the RUNTIME subvector index
-    ``j_sql`` — the same slice/zip_with/aggregate fold (same association
-    order, same 0.0 seed) as :func:`_pq_dists_sql`, but with the
-    subvector index as an expression so one nested ``transform`` covers
-    all m subspaces."""
+def _pq_dists_j_sql(vec_sql: str, cbs, dsub: int) -> str:
+    """Per-centroid squared-L2 array for the RUNTIME subvector index ``j``
+    (a lambda variable) — the same slice/zip_with/aggregate fold (same
+    association order, same 0.0 seed) as :func:`_pq_dists_sql`, but with
+    the subvector index as an expression so one nested ``transform``
+    covers all m subspaces."""
     return (
-        f"transform(element_at({_pq_cb_sql(cbs)}, {j_sql} + 1), cent -> "
-        f"aggregate(zip_with(slice({vec_sql}, {j_sql} * {dsub} + 1, {dsub}),"
+        f"transform(element_at({_pq_cb_sql(cbs)}, j + 1), cent -> "
+        f"aggregate(zip_with(slice({vec_sql}, j * {dsub} + 1, {dsub}),"
         " cent, (x, y) -> (x - y) * (x - y)), 0.0D, (acc, v2) -> acc + v2))"
     )
 
 
-def _pq_codes_sql(vec_sql: str, cbs, m: int, dsub: int) -> str:
-    """All m PQ codes as ONE array<int> expression (argmin with the
+def _pq_codes_sql(cbs, m: int, dsub: int) -> str:
+    """All m PQ codes of ``nv`` as ONE array<int> expression (argmin with the
     array_position first-index-on-ties convention — element-identical to
     m per-subspace argmin columns; pinned by tests).  Collapsing the m
     literal-heavy code columns into a single nested transform cuts the
     analyzer/codegen surface ~m-fold — measured 7.7 → 3.1 s on the
     declared IVF-PQ query at sf0.1, where per-stage planning and janino
     compilation of 64 giant expression trees dominated (guide §7.3)."""
-    d = _pq_dists_j_sql(vec_sql, cbs, "j", dsub)
+    d = _pq_dists_j_sql("nv", cbs, dsub)
     return (
         f"transform(sequence(0, {m - 1}), j -> "
         f"cast(array_position({d}, array_min({d})) - 1 as int))"
     )
 
 
-def _pq_luts_sql(vec_sql: str, cbs, m: int, dsub: int) -> str:
-    """All m per-centroid LUTs as ONE array<array<double>> expression —
-    value-identical to the m ``lut_j`` columns (same fold)."""
+def _pq_luts_sql(cbs, m: int, dsub: int) -> str:
+    """All m per-centroid LUTs of ``qv`` as ONE array<array<double>>
+    expression — value-identical to the m ``lut_j`` columns (same fold)."""
     return (
         f"transform(sequence(0, {m - 1}), j -> "
-        f"{_pq_dists_j_sql(vec_sql, cbs, 'j', dsub)})"
+        f"{_pq_dists_j_sql('qv', cbs, dsub)})"
     )
 
 
@@ -732,12 +717,12 @@ def pq_adc_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     codes = emb.select(
         F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv")
     ).select(
-        "neighbor_id", F.expr(_pq_codes_sql("nv", cbs, m, dsub)).alias("codes")
+        "neighbor_id", F.expr(_pq_codes_sql(cbs, m, dsub)).alias("codes")
     )
     q = queries.select(
         F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
     ).select(
-        "query_id", F.expr(_pq_luts_sql("qv", cbs, m, dsub)).alias("luts")
+        "query_id", F.expr(_pq_luts_sql(cbs, m, dsub)).alias("luts")
     )
     wr = Window.partitionBy("query_id").orderBy(
         F.asc("adc_dist"), F.asc("neighbor_id")
@@ -772,11 +757,9 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     corpus = corpus.select(
         "neighbor_id",
         "cell",
-        F.expr(_pq_codes_sql("nv", cbs, m, dsub)).alias("codes"),
+        F.expr(_pq_codes_sql(cbs, m, dsub)).alias("codes"),
     )
-    qs = _ivf_probe_cells(
-        queries, IVF_CELLS, DEFAULT_DIM, IVF_SEED, "vec_id", "embedding"
-    )
+    qs = _ivf_probe_cells(queries)
     wp = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe = (
         qs.withColumn("_r", F.row_number().over(wp))
@@ -786,7 +769,7 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     probe = probe.select(
         "query_id",
         "cell",
-        F.expr(_pq_luts_sql("qv", cbs, m, dsub)).alias("luts"),
+        F.expr(_pq_luts_sql(cbs, m, dsub)).alias("luts"),
     )
     wr = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (
@@ -874,6 +857,44 @@ def semdedup_keep(
     return out
 
 
+def _cell_assigned(emb: DataFrame, n_cells: int, dim: int) -> DataFrame:
+    """Non-NULL vectors with their norm ``nrm``, their cosine ``sims`` to
+    each fixed-quantizer centroid, their ``cell`` (the argmax) and the unit
+    vector ``vn``: the one-scan prologue of the per-cell greedy
+    selections.  A NULL vector cannot join a similarity chain — it is
+    dropped, matching the ivf_index null-payload rule."""
+    return (
+        emb.select("vec_id", as_double("embedding").alias("v"))
+        .filter(F.col("v").isNotNull())
+        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
+        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
+        .withColumn(
+            "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
+        )
+        .withColumn("vn", F.expr("transform(v, x -> x / nrm)"))
+    )
+
+
+def _per_cell(a: DataFrame, walk) -> DataFrame:
+    """Run ``walk`` (one cell's rows -> its picked ``vec_id`` list, in
+    order) as ONE ``applyInPandas`` over the cell groups of ``a``; returns
+    ``(vec_id, cell, pos)`` with ``pos`` the 1-based slot in that order.
+    The UDF keeps ``walk``'s name, so plans name the walk."""
+    import functools
+
+    import pandas as pd
+
+    @functools.wraps(walk)
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = walk(pdf)
+        cell = int(pdf["cell"].iloc[0])
+        return pd.DataFrame(
+            {"vec_id": ids, "cell": [cell] * len(ids), "pos": range(1, len(ids) + 1)}
+        )
+
+    return a.groupBy("cell").applyInPandas(run, "vec_id long, cell int, pos long")
+
+
 def icl_chain_order(
     emb: DataFrame,
     n_cells: int = IVF_CELLS,
@@ -901,23 +922,9 @@ def icl_chain_order(
     oracle's fold — the ordering is reproducible across engines, batch
     sizes, and partitionings.
     """
-    import pandas as pd
+    a = _cell_assigned(emb, n_cells, dim).select("vec_id", "cell", "vn")
 
-    a = (
-        emb.select("vec_id", as_double("embedding").alias("v"))
-        # a NULL vector cannot join a similarity chain — drop it, matching
-        # the ivf_index null-payload rule
-        .filter(F.col("v").isNotNull())
-        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
-        .withColumn(
-            "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
-        )
-        .withColumn("vn", F.expr("transform(v, x -> x / nrm)"))
-        .select("vec_id", "cell", "vn")
-    )
-
-    def chain(pdf: pd.DataFrame) -> pd.DataFrame:
+    def chain(pdf):
         import numpy as np
 
         # Vectorized greedy walk, bit-identical to the scalar left-fold scan:
@@ -954,16 +961,9 @@ def icl_chain_order(
             order.append(int(ids[j]))
             alive[j] = False
             curv = mat[j]
-        cell = int(pdf["cell"].iloc[0])
-        return pd.DataFrame(
-            {
-                "vec_id": order,
-                "cell": [cell] * len(order),
-                "pos": range(1, len(order) + 1),
-            }
-        )
+        return order
 
-    return a.groupBy("cell").applyInPandas(chain, "vec_id long, cell int, pos long")
+    return _per_cell(a, chain)
 
 
 def kcenter_coreset(
@@ -990,21 +990,9 @@ def kcenter_coreset(
     O(k · cell · dim).  Distances are exact left-fold cosines so the
     traversal decisions replay bit-identically in the recursive SQL oracle.
     """
-    import pandas as pd
+    a = _cell_assigned(emb, n_cells, dim).select("vec_id", "cell", "vn")
 
-    a = (
-        emb.select("vec_id", as_double("embedding").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
-        .withColumn(
-            "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
-        )
-        .withColumn("vn", F.expr("transform(v, x -> x / nrm)"))
-        .select("vec_id", "cell", "vn")
-    )
-
-    def select_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+    def select_cell(pdf):
         ids = pdf["vec_id"].tolist()
         by_id = dict(zip(ids, (list(v) for v in pdf["vn"].tolist())))
 
@@ -1032,18 +1020,9 @@ def kcenter_coreset(
                 d = dist(bv, by_id[cand])
                 if d < mind[cand]:
                     mind[cand] = d
-        cell = int(pdf["cell"].iloc[0])
-        return pd.DataFrame(
-            {
-                "vec_id": chosen,
-                "cell": [cell] * len(chosen),
-                "pos": range(1, len(chosen) + 1),
-            }
-        )
+        return chosen
 
-    return a.groupBy("cell").applyInPandas(
-        select_cell, "vec_id long, cell int, pos long"
-    )
+    return _per_cell(a, select_cell)
 
 
 #: MMR trade-off weight and its complement — computed ONCE in Python so the
@@ -1070,22 +1049,13 @@ def mmr_select(emb: DataFrame) -> DataFrame:
     assignment, one ``applyInPandas`` per cell, O(k · cell · dim) per cell.
     Scores are exact left-fold doubles with shared literal constants, so the
     greedy decisions replay bit-identically in a recursive SQL oracle."""
-    import pandas as pd
-
     a = (
-        emb.select("vec_id", as_double("embedding").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), DEFAULT_DIM)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(IVF_CELLS, DEFAULT_DIM, IVF_SEED, "v", "nrm")))
-        .withColumn(
-            "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
-        )
+        _cell_assigned(emb, IVF_CELLS, DEFAULT_DIM)
         .withColumn("rel", F.expr("array_max(sims)"))
-        .withColumn("vn", F.expr("transform(v, x -> x / nrm)"))
         .select("vec_id", "cell", "rel", "vn")
     )
 
-    def select_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+    def select_cell(pdf):
         ids = pdf["vec_id"].tolist()
         by_id = dict(zip(ids, (list(v) for v in pdf["vn"].tolist())))
         rel = dict(zip(ids, pdf["rel"].tolist()))
@@ -1117,15 +1087,6 @@ def mmr_select(emb: DataFrame) -> DataFrame:
                 s = sim(bv, by_id[cand])
                 if s > maxsim[cand]:
                     maxsim[cand] = s
-        cell = int(pdf["cell"].iloc[0])
-        return pd.DataFrame(
-            {
-                "vec_id": chosen,
-                "cell": [cell] * len(chosen),
-                "pos": range(1, len(chosen) + 1),
-            }
-        )
+        return chosen
 
-    return a.groupBy("cell").applyInPandas(
-        select_cell, "vec_id long, cell int, pos long"
-    )
+    return _per_cell(a, select_cell)

@@ -201,19 +201,20 @@ def punct_count(text: Column | str) -> Column:
     return F.length(F.regexp_replace(_c(text), PUNCT_CLASS, ""))
 
 
-def _token_lang_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Row-shaped shared pipeline for quality/lang-ID: posexplode tokens →
-    one pass of conditional counts per doc (flat codegen — the array-lambda
-    route is interpreted per element, see ARCHITECTURE §3).  Docs with zero
-    tokens are preserved via left join with zero-filled counts."""
+def _token_lang_counts(df: DataFrame) -> DataFrame:
+    """Row-shaped shared pipeline for quality/lang-ID over ``(doc_id,
+    text)``: posexplode tokens → one pass of conditional counts per doc
+    (flat codegen — the array-lambda route is interpreted per element, see
+    ARCHITECTURE §3).  Docs with zero tokens are preserved via left join
+    with zero-filled counts."""
     toks = df.select(
-        F.col(id_col), F.explode_outer(tokens(text_col)).alias("tok")
+        F.col("doc_id"), F.explode_outer(tokens("text")).alias("tok")
     ).withColumn("ltok", F.lower("tok"))
     aggs = [F.count("tok").alias("n_tokens")] + [
         F.count(F.when(F.col("ltok").isin(ws), 1)).alias(f"hits_{lang}")
         for lang, ws in LANG_STOPWORDS.items()
     ]
-    return toks.groupBy(id_col).agg(*aggs)
+    return toks.groupBy("doc_id").agg(*aggs)
 
 
 def quality_features(df: DataFrame) -> DataFrame:
@@ -222,7 +223,7 @@ def quality_features(df: DataFrame) -> DataFrame:
     Mirrors the reference's filter-hook idea (F8, ``macvid.py:90`` "add
     whatever condition for filtering") with concrete, deterministic metrics.
     """
-    counts = _token_lang_counts(df, "text", "doc_id")
+    counts = _token_lang_counts(df)
     base = df.select(
         F.col("doc_id"),
         F.length(F.col("text")).alias("n_chars_actual"),
@@ -255,7 +256,7 @@ def language_id(df: DataFrame) -> DataFrame:
     """Stopword-vote language ID: count hits per language's marker set, pick
     the argmax with a fixed priority-order tie-break (LANG_PRIORITY); 'und'
     when no set scores > 0."""
-    counts = _token_lang_counts(df, "text", "doc_id")
+    counts = _token_lang_counts(df)
     hit_cols = {lang: F.col(f"hits_{lang}").cast("int") for lang in LANG_STOPWORDS}
     best = F.greatest(*hit_cols.values())
     pred = F.lit("und")

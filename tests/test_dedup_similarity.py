@@ -319,7 +319,7 @@ def test_pq_encode_matches_numpy_model(spark):
     cbs = V.pq_codebooks(m, ksub, dsub, seed)
     codes = emb.select(
         "vec_id", V.as_double("embedding").alias("nv")
-    ).select("vec_id", F.expr(V._pq_codes_sql("nv", cbs, m, dsub)).alias("codes"))
+    ).select("vec_id", F.expr(V._pq_codes_sql(cbs, m, dsub)).alias("codes"))
     got = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
     for r in rows:
         v = np.array(r["embedding"], dtype=np.float64)
@@ -572,16 +572,16 @@ def test_lsh_candidates_auto_planes_match_explicit(spark):
     # bit-identical to passing the derived number explicitly
     from lvm_datapipe_spark.operators.similarity import (
         auto_n_planes,
-        lsh_ann_candidates,
+        lsh_near_dup_pairs,
     )
 
     emb = _emb(spark)
     n = emb.count()
     with query_scope(spark):
-        auto = lsh_ann_candidates(emb, n_planes=None)
-        explicit = lsh_ann_candidates(emb, n_planes=auto_n_planes(n))
-        got = {(r.id_a, r.id_b) for r in auto.collect()}
-        want = {(r.id_a, r.id_b) for r in explicit.collect()}
+        auto = lsh_near_dup_pairs(emb, n_planes=None)
+        explicit = lsh_near_dup_pairs(emb, n_planes=auto_n_planes(n))
+        got = {(r.id_a, r.id_b, r.cos_sim) for r in auto.collect()}
+        want = {(r.id_a, r.id_b, r.cos_sim) for r in explicit.collect()}
     assert got == want
 
 

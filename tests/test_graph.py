@@ -426,8 +426,8 @@ def test_dense_driver_triangles_from_baskets_match_edge_kernel(spark):
         items = rng.sample(range(30), k)
         rows.extend((order, i) for i in items)
         edge_set |= {tuple(sorted(p)) for p in itertools.combinations(items, 2)}
-    baskets = spark.createDataFrame(rows, "o long, i long")
-    via_baskets = triangle_counts_driver_dense_from_baskets(baskets, "o", "i")
+    baskets = spark.createDataFrame(rows, "l_orderkey long, l_suppkey long")
+    via_baskets = triangle_counts_driver_dense_from_baskets(baskets)
     edges = sorted(edge_set)
     via_edges = triangle_counts_driver_dense(_pairs(spark, edges), "id_a", "id_b")
     assert dict(via_baskets) == dict(via_edges) == _brute_triangles(edges)
@@ -439,16 +439,16 @@ def test_dense_driver_triangles_from_baskets_gates(spark, monkeypatch):
     )
 
     baskets = spark.createDataFrame(
-        [(1, 10), (1, 11), (1, 12), (2, 10), (2, 11)], "o long, i long"
+        [(1, 10), (1, 11), (1, 12), (2, 10), (2, 11)], "l_orderkey long, l_suppkey long"
     )
     # pairs = 3 + 1 = 4; rows = 5
     with monkeypatch.context() as m:
         m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 3)
-        assert triangle_counts_driver_dense_from_baskets(baskets, "o", "i") is None
+        assert triangle_counts_driver_dense_from_baskets(baskets) is None
     with monkeypatch.context() as m:
         m.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", 2)
-        assert triangle_counts_driver_dense_from_baskets(baskets, "o", "i") is None
-    out = triangle_counts_driver_dense_from_baskets(baskets, "o", "i")
+        assert triangle_counts_driver_dense_from_baskets(baskets) is None
+    out = triangle_counts_driver_dense_from_baskets(baskets)
     assert dict(out) == {10: 1, 11: 1, 12: 1}
 
 
@@ -463,8 +463,8 @@ def test_khop_driver_dense_matches_brute_force(spark):
     for i in range(12):  # path 0-1-2-...-12 (each basket one edge)
         rows += [(i, i), (i, i + 1)]
     rows += [(100, 0), (100, 5), (100, 9)]  # hub basket {0, 5, 9}
-    baskets = spark.createDataFrame(rows, "o long, i long")
-    out = khop_reachability_driver_dense_from_baskets(baskets, "o", "i")
+    baskets = spark.createDataFrame(rows, "l_orderkey long, l_suppkey long")
+    out = khop_reachability_driver_dense_from_baskets(baskets)
     # brute force in python
     import itertools
     from collections import defaultdict
