@@ -156,15 +156,15 @@ _MIN_SPLIT_BYTES = 128 * 1024
 _REBALANCE_CACHE: dict[str, bool] = {}
 
 
-def table_row_count(sf_dir: str, name: str) -> int | None:
-    """The row count of a table, summed from its parquet footers
+def lineitem_row_count(sf_dir: str) -> int | None:
+    """The row count of the lineitem table, summed from its parquet footers
     (``num_rows``) on the driver: no Spark job.  Every data file under the
     table is counted (Spark's listing skips ``_``/``.`` names), so the sum
     bounds any scan of the table from above.  None when a footer is
     unreadable or the table is missing."""
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
+    path = table_path(sf_dir, "lineitem")
     if not os.path.isdir(path):
         files = [path]
     else:

@@ -138,7 +138,7 @@ def _cmd_curate(spark, args) -> None:
     out = split_assign(
         gated, args.id_col, {"train": 0.8, "val": 0.1, "test": 0.1}
     )
-    write_partitioned(out, args.out, ["split"])
+    write_partitioned(out, args.out)
     result = read_parquet(spark, args.out)
     per_split = {r.split: r.n for r in result.groupBy("split").agg(
         F.count(F.lit(1)).alias("n")).collect()}

@@ -64,7 +64,9 @@ def extract_answer_words(raw: Column | str) -> Column:
     )
 
 
-def frame_indices_at_fractions(frame_count: Column | str, fractions: list[float]) -> Column:
-    """C9 — key-frame indices at relative positions (default [0.2, 0.5, 0.8],
-    ``evaluations/coca_caption.py:44``)."""
-    return F.array(*[F.floor(_c(frame_count) * F.lit(p)).cast("int") for p in fractions])
+def frame_indices_at_fractions() -> Column:
+    """C9 — key-frame indices of ``frame_count`` at relative positions
+    [0.2, 0.5, 0.8] (``evaluations/coca_caption.py:44``)."""
+    return F.array(
+        *[F.floor(_c("frame_count") * F.lit(p)).cast("int") for p in (0.2, 0.5, 0.8)]
+    )

@@ -62,7 +62,7 @@ def exact_percentiles_driver(
 
     ``row_bound`` is an upper bound on ``df``'s rows the caller already
     knows without a Spark job (a table's parquet footer row count,
-    ``catalog.table_row_count``).  At or under the gate the kernel
+    ``catalog.lineitem_row_count``).  At or under the gate the kernel
     collects the non-null column once and takes ``n`` from the array: one
     collect job, no count.  Without a bound, or above the gate, it counts
     the non-null rows first (two jobs) and collects only at or under the
@@ -159,10 +159,10 @@ def bucket_index(col: str, bins: list[float]) -> Column:
     return expr
 
 
-def value_counts(df: DataFrame, col: str) -> DataFrame:
-    """A7 — category value-counts (``analyze/analyze_vids.py:11-26`` dict
-    counter)."""
-    return df.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
+def value_counts(df: DataFrame) -> DataFrame:
+    """A7 — ``event_type`` value-counts (``analyze/analyze_vids.py:11-26``
+    dict counter)."""
+    return df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
 def count_consistency(records: DataFrame, files: DataFrame) -> DataFrame:
@@ -178,19 +178,17 @@ def count_consistency(records: DataFrame, files: DataFrame) -> DataFrame:
     )
 
 
-def agg_state(
-    df: DataFrame, keys: list[str], value_col: str
-) -> DataFrame:
-    """Build incremental aggregate STATE: (keys..., n_rows, sum_value) with
-    the sum kept as DECIMAL(27,6) — not double — so that states merge
-    EXACTLY (see :func:`merge_agg_state`)."""
-    return df.groupBy(*keys).agg(
+def agg_state(df: DataFrame) -> DataFrame:
+    """Build incremental aggregate STATE: (event_type, n_rows, sum_value)
+    with the sum of ``value`` kept as DECIMAL(27,6) — not double — so that
+    states merge EXACTLY (see :func:`merge_agg_state`)."""
+    return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col(value_col).cast("decimal(27,6)")).alias("sum_value"),
+        F.sum(F.col("value").cast("decimal(27,6)")).alias("sum_value"),
     )
 
 
-def merge_agg_state(state: DataFrame, delta_state: DataFrame, keys: list[str]) -> DataFrame:
+def merge_agg_state(state: DataFrame, delta_state: DataFrame) -> DataFrame:
     """Merge a persisted aggregate state with a new batch's state — the
     incremental-view-maintenance pattern: a daily pipeline keeps
     (key, n, Σ) materialized and folds each new partition in with ONE
@@ -204,12 +202,12 @@ def merge_agg_state(state: DataFrame, delta_state: DataFrame, keys: list[str]) -
     is the whole point of the pattern.
     """
     a = state.select(
-        *[F.col(k).alias(f"_ka_{k}") for k in keys],
+        F.col("event_type").alias("_ka_event_type"),
         F.col("n_rows").alias("_n_a"),
         F.col("sum_value").alias("_s_a"),
     )
     b = delta_state.select(
-        *[F.col(k).alias(f"_kb_{k}") for k in keys],
+        F.col("event_type").alias("_kb_event_type"),
         F.col("n_rows").alias("_n_b"),
         F.col("sum_value").alias("_s_b"),
     )
@@ -217,18 +215,12 @@ def merge_agg_state(state: DataFrame, delta_state: DataFrame, keys: list[str]) -
     # merge must too — a plain equi-join would leave a null-key state row
     # and a null-key delta row unmerged, breaking the "incremental == full
     # recompute" invariant exactly where dirty data lives.
-    cond = None
-    for k in keys:
-        c = F.col(f"_ka_{k}").eqNullSafe(F.col(f"_kb_{k}"))
-        cond = c if cond is None else (cond & c)
+    cond = F.col("_ka_event_type").eqNullSafe(F.col("_kb_event_type"))
     zero = F.lit(0).cast("decimal(27,6)")
     return (
         a.join(b, cond, "full_outer")
         .select(
-            *[
-                F.coalesce(F.col(f"_ka_{k}"), F.col(f"_kb_{k}")).alias(k)
-                for k in keys
-            ],
+            F.coalesce(F.col("_ka_event_type"), F.col("_kb_event_type")).alias("event_type"),
             (
                 F.coalesce(F.col("_n_a"), F.lit(0))
                 + F.coalesce(F.col("_n_b"), F.lit(0))
@@ -243,20 +235,21 @@ def merge_agg_state(state: DataFrame, delta_state: DataFrame, keys: list[str]) -
     )
 
 
-def quantile_sketch(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
+def quantile_sketch(df: DataFrame) -> DataFrame:
     """Mergeable fixed-bin QUANTILE sketch — no-rescan quantile
     estimates, as :func:`cm_sketch` gives point frequencies.  The sketch
-    for a group is its per-bin count vector over 64 equal-width
-    bins spanning the group's [min, max]: shard sketches merge by SUMMING
-    counts (exact
-    associativity — proven in tests), so incremental corpora never rescan
-    history to maintain quantile estimates.
+    of ``value`` for an ``event_type`` group is its per-bin count vector
+    over 64 equal-width bins spanning the group's [min, max]: shard
+    sketches merge by SUMMING counts (exact associativity — proven in
+    tests), so incremental corpora never rescan history to maintain
+    quantile estimates.
 
-    Returns one row per (group, bin) with ``(group_col, bin, c, mn, width,
-    n)`` — everything downstream (:func:`sketch_median`) derives from this
-    table.  Deterministic: bin edges come from one min/max aggregate
+    Returns one row per (group, bin) with ``(event_type, bin, c, mn,
+    width, n)`` — everything downstream (:func:`sketch_median`) derives
+    from this table.  Deterministic: bin edges come from one min/max aggregate
     (exact doubles both engines), bin index is exact-IEEE arithmetic."""
     n_bins = 64
+    value_col, group_col = "value", "event_type"
     rng = df.groupBy(group_col).agg(
         F.min(F.col(value_col).cast("double")).alias("mn"),
         F.max(F.col(value_col).cast("double")).alias("mx"),
@@ -284,7 +277,7 @@ def quantile_sketch(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     )
 
 
-def sketch_median(sketch: DataFrame, group_col: str) -> DataFrame:
+def sketch_median(sketch: DataFrame) -> DataFrame:
     """Median estimate from a :func:`quantile_sketch` table: the first bin
     whose cumulative count reaches the lower-median rank ceil(n/2), estimated
     at the bin midpoint — error is bounded by half a bin width (asserted
@@ -292,17 +285,17 @@ def sketch_median(sketch: DataFrame, group_col: str) -> DataFrame:
     ((n+1) DIV 2) and the cumulative window runs over <= 64 rows per
     group — sketch-sized, never corpus-sized."""
     wc = (
-        Window.partitionBy(group_col)
+        Window.partitionBy("event_type")
         .orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = sketch.withColumn("cum", F.sum("c").over(wc))
     hit = cum.filter(F.col("cum") >= F.expr("(n + 1) DIV 2"))
-    wr = Window.partitionBy(group_col).orderBy("bin")
+    wr = Window.partitionBy("event_type").orderBy("bin")
     first = hit.withColumn("_r", F.row_number().over(wr)).filter(F.col("_r") == 1)
     est = F.col("mn") + (F.col("bin").cast("double") + F.lit(0.5)) * F.col("width")
     return first.select(
-        group_col,
+        "event_type",
         F.col("n").alias("n"),
         F.when(F.col("width") == 0.0, F.col("mn")).otherwise(est).alias("median_est"),
     )

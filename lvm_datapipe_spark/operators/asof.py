@@ -23,17 +23,14 @@ from pyspark.sql import functions as F
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
     right_values: list[str],
     tie_col: str | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """As-of join: left rows keep all columns, gaining ``right_values`` from
-    the nearest right row per ``key`` — the most recent with
-    ``right_ts <= left_ts`` (``direction="backward"``, ties break by
-    ``tie_col`` greatest-wins) or the earliest with ``right_ts >= left_ts``
+    the nearest right row per ``user_id`` — the most recent with
+    ``right.ts <= left.ts`` (``direction="backward"``, ties break by
+    ``tie_col`` greatest-wins) or the earliest with ``right.ts >= left.ts``
     (``direction="forward"``, ties break least-wins).  Both directions are
     the same single keyed union+window shuffle — linear, never
     join-then-rank."""
@@ -57,16 +54,16 @@ def asof_join(
     # right for backward (<=), before right for forward (>=)
     l_side = 1 if backward else 0
     l_tagged = left.select(
-        F.col(key).alias("_k"),
-        F.col(left_ts).alias("_t"),
+        F.col("user_id").alias("_k"),
+        F.col("ts").alias("_t"),
         F.lit(l_side).alias("_side"),
         F.lit(None).cast(right.schema[tie].dataType).alias("_tie"),
         *[F.col(c).alias(f"_l_{c}") for c in lcols],
         F.lit(None).cast(rv_type).alias("_rv"),
     )
     r_tagged = right.select(
-        F.col(key).alias("_k"),
-        F.col(right_ts).alias("_t"),
+        F.col("user_id").alias("_k"),
+        F.col("ts").alias("_t"),
         F.lit(1 - l_side).alias("_side"),
         F.col(tie).alias("_tie"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}") for c in lcols],
@@ -95,51 +92,43 @@ def asof_join(
     )
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    point_col: str,
-    start_col: str,
-    end_col: str,
-) -> DataFrame:
-    """Interval containment join: right rows whose [start, end] span contains
-    left's point, equi-keyed on ``key`` (the clip→frame-span shape,
-    macvid.py:21).  The equi-key keeps it a hash join with a range residual —
+def range_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Interval containment join: right rows whose [start_ts, end_ts] span
+    contains left's ``ts``, equi-keyed on ``user_id`` (the clip→frame-span
+    shape, macvid.py:21).  The equi-key keeps it a hash join with a range residual —
     without one, bucketize the range into bins and join on (key, bin)."""
     l, r = left.alias("l"), right.alias("r")
     cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"l.{point_col}") >= F.col(f"r.{start_col}"))
-        & (F.col(f"l.{point_col}") <= F.col(f"r.{end_col}"))
+        (F.col("l.user_id") == F.col("r.user_id"))
+        & (F.col("l.ts") >= F.col("r.start_ts"))
+        & (F.col("l.ts") <= F.col("r.end_ts"))
     )
     return l.join(r, cond).select(
-        "l.*", *[F.col(f"r.{c}").alias(c) for c in right.columns if c != key]
+        "l.*", *[F.col(f"r.{c}").alias(c) for c in right.columns if c != "user_id"]
     )
 
 
-def binned_range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_col: str,
-    start_col: str,
-    end_col: str,
-    bin_width,
-) -> DataFrame:
+#: bin width of :func:`binned_range_join`, in the points' unit (seconds:
+#: one day), read at call time
+RANGE_BIN_WIDTH = 86400
+
+
+def binned_range_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Point-in-interval join WITHOUT an equi key, as a hash join.
 
     Spark turns a pure inequality join condition into
     BroadcastNestedLoopJoin (small side) or CartesianProduct (both large)
     — both die at scale.  The classic fix (bin-and-residual) is applied
-    here: every interval explodes to one row per ``bin_width``-sized bin
-    it overlaps, every point maps to the single bin that contains it, the
-    join becomes an EQUI join on the bin id, and the exact
-    ``start <= point <= end`` residual re-filters the candidates.  Exact —
+    here: every interval ``[t0, t1]`` explodes to one row per
+    ``RANGE_BIN_WIDTH``-sized bin it overlaps, every point ``t`` maps to
+    the single bin that contains it, the join becomes an EQUI join on the
+    bin id, and the exact ``t0 <= t <= t1`` residual re-filters the
+    candidates.  Exact —
     an interval overlapping k bins appears in all k, and a point meets
     each qualifying interval exactly once (in the point's own bin).
 
     Scale shape: the explode multiplies intervals by
-    ceil(span / bin_width) — pick ``bin_width`` near the MEDIAN interval
+    ceil(span / width) — pick the width near the MEDIAN interval
     span so typical intervals land in 1-2 bins; the join is one shuffle
     keyed on a well-distributed integer.  Long-tail intervals fatten one
     side linearly (rows, not pairs); hot bins are ordinary join skew (AQE
@@ -148,13 +137,14 @@ def binned_range_join(
     naive join.
 
     Timestamps work through the numeric path: pass epoch-second columns
-    (``F.unix_timestamp``) and a width in seconds.
+    (``F.unix_timestamp``).
     """
     from pyspark.sql import types as T
 
     p, iv = points.alias("p"), intervals.alias("iv")
 
     int_types = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    bin_width = RANGE_BIN_WIDTH
 
     def _bin_of(col: F.Column, dtype) -> F.Column:
         # Integral inputs get exact integer FLOOR division (a//w via pmod
@@ -162,26 +152,20 @@ def binned_range_join(
         # float path loses integer precision above 2^53 (epoch-nanos!)
         # and a point/endpoint pair could silently land in different
         # bins, dropping true matches from an "exact" join.
-        if isinstance(dtype, int_types) and isinstance(bin_width, int):
+        if isinstance(dtype, int_types):
             w = F.lit(bin_width).cast("long")
             c = col.cast("long")
             return ((c - F.pmod(c, w)) / w).cast("long")
         return F.floor(col / F.lit(bin_width)).cast("long")
 
-    p_t = points.schema[point_col].dataType
-    s_t = intervals.schema[start_col].dataType
-    e_t = intervals.schema[end_col].dataType
-    pbin = _bin_of(F.col(f"p.{point_col}"), p_t)
-    ivstart = _bin_of(F.col(f"iv.{start_col}"), s_t)
-    ivend = _bin_of(F.col(f"iv.{end_col}"), e_t)
+    pbin = _bin_of(F.col("p.t"), points.schema["t"].dataType)
+    ivstart = _bin_of(F.col("iv.t0"), intervals.schema["t0"].dataType)
+    ivend = _bin_of(F.col("iv.t1"), intervals.schema["t1"].dataType)
     iv_exp = iv.select(
         F.explode(F.sequence(ivstart, ivend)).alias("_bin"),
         *[F.col(f"iv.{c}").alias(f"_iv_{c}") for c in intervals.columns],
     )
-    residual = (
-        (F.col(f"p.{point_col}") >= F.col(f"_iv_{start_col}"))
-        & (F.col(f"p.{point_col}") <= F.col(f"_iv_{end_col}"))
-    )
+    residual = (F.col("p.t") >= F.col("_iv_t0")) & (F.col("p.t") <= F.col("_iv_t1"))
     joined = p.join(iv_exp, (pbin == F.col("_bin")) & residual, "inner")
     return joined.select(
         "p.*", *[F.col(f"_iv_{c}").alias(c) for c in intervals.columns]

@@ -45,11 +45,9 @@ def _position_sql(key_sql: str, i: int, m_bits: int) -> str:
     return f"pmod(xxhash64({key_sql}, {i}), {m_bits})"
 
 
-def bloom_bitmap(
-    dim: DataFrame, key_col: str, m_bits: int = 1 << 16, n_hashes: int = 3
-) -> list[int]:
-    """Aggregate the dim side's qualifying keys into an m-bit Bloom bitmap,
-    returned as a list of m/64 longs.
+def bloom_bitmap(dim: DataFrame, m_bits: int = 1 << 16, n_hashes: int = 3) -> list[int]:
+    """Aggregate the dim side's qualifying ``c_custkey`` keys into an m-bit
+    Bloom bitmap, returned as a list of m/64 longs.
 
     Distributed shape: each key row emits its k bit positions (narrow),
     then ONE keyed aggregate ORs the per-word masks together — map-side
@@ -59,7 +57,7 @@ def bloom_bitmap(
     if m_bits % _WORD:
         raise ValueError("m_bits must be a multiple of 64")
     n_words = m_bits // _WORD
-    pos_arr = ",".join(_position_sql(key_col, i, m_bits) for i in range(n_hashes))
+    pos_arr = ",".join(_position_sql("c_custkey", i, m_bits) for i in range(n_hashes))
     words = (
         dim.selectExpr(f"explode(array({pos_arr})) AS p")
         .selectExpr(
@@ -76,20 +74,17 @@ def bloom_bitmap(
     return bitmap
 
 
-def bloom_might_contain(
-    bitmap: list[int], key_sql: str, n_hashes: int = 3
-) -> Column:
-    """Membership test against a literal bitmap — pure JVM expression.
-
-    ``key_sql`` is the key as SQL text (a column name or expression).  The
-    bitmap folds into one array literal inside a single F.expr parse; each
-    of the k positions checks its bit with shiftright/AND.
+def bloom_might_contain(bitmap: list[int], n_hashes: int = 3) -> Column:
+    """Membership test of ``o_custkey`` against a literal bitmap — pure JVM
+    expression.  The bitmap folds into one array literal inside a single
+    F.expr parse; each of the k positions checks its bit with
+    shiftright/AND.
     """
     m_bits = len(bitmap) * _WORD
     arr = "array(" + ",".join(f"CAST({w} AS BIGINT)" for w in bitmap) + ")"
     checks = []
     for i in range(n_hashes):
-        p = _position_sql(key_sql, i, m_bits)
+        p = _position_sql("o_custkey", i, m_bits)
         word = f"element_at({arr}, CAST(({p}) / {_WORD} AS INT) + 1)"
         checks.append(
             f"(shiftright({word}, CAST(({p}) % {_WORD} AS INT)) & 1) = 1"
@@ -97,24 +92,20 @@ def bloom_might_contain(
     return F.expr(" AND ".join(checks))
 
 
-def bloom_prefiltered_semi_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-) -> DataFrame:
-    """Exact left-semi join with a Bloom pre-filter on the fact side.
+def bloom_prefiltered_semi_join(fact: DataFrame, dim: DataFrame) -> DataFrame:
+    """Exact left-semi join of orders on customers with a Bloom pre-filter
+    on the fact side.
 
-    Result is IDENTICAL to ``fact.join(dim, fact[fact_key] == dim[dim_key],
-    "left_semi")`` — the Bloom stage only prunes rows that cannot match, so
-    false positives are removed by the exact semi join that follows.  What
-    changes is the shuffle volume: only fact rows whose key might be in the
-    dim survive to the exchange.
+    Result is IDENTICAL to ``fact.join(dim, fact.o_custkey ==
+    dim.c_custkey, "left_semi")`` — the Bloom stage only prunes rows that
+    cannot match, so false positives are removed by the exact semi join
+    that follows.  What changes is the shuffle volume: only fact rows whose
+    key might be in the dim survive to the exchange.
     """
     m_bits = 1 << 16
     n_hashes = 3
-    bitmap = bloom_bitmap(dim, dim_key, m_bits=m_bits, n_hashes=n_hashes)
-    pre = fact.filter(bloom_might_contain(bitmap, fact_key, n_hashes))
-    return pre.join(dim, pre[fact_key] == dim[dim_key], "left_semi")
+    bitmap = bloom_bitmap(dim, m_bits=m_bits, n_hashes=n_hashes)
+    pre = fact.filter(bloom_might_contain(bitmap, n_hashes))
+    return pre.join(dim, pre["o_custkey"] == dim["c_custkey"], "left_semi")
 
 

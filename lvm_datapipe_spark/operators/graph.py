@@ -158,21 +158,17 @@ def cap_baskets(
     )
 
 
-def dedup_keep_representatives(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-) -> DataFrame:
-    """The end-to-end dedup decision: keep exactly one row per near-dup
-    cluster (the minimum id — deterministic) plus every row that has no
-    near-dup at all.  Clusters come from :func:`connected_components`;
+def dedup_keep_representatives(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The end-to-end dedup decision over ``vec_id``: keep exactly one row
+    per near-dup cluster (the minimum id — deterministic) plus every row
+    that has no near-dup at all.  Clusters come from :func:`connected_components`;
     then one left join against the (small relative to the corpus)
     cluster table, where rows whose id is not a cluster member are kept
     by the null branch."""
     cc = connected_components(pairs, src="id_a", dst="id_b")
     return (
-        df.join(cc.withColumnRenamed("id", id_col), id_col, "left")
-        .filter(F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col(id_col)))
+        df.join(cc.withColumnRenamed("id", "vec_id"), "vec_id", "left")
+        .filter(F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col("vec_id")))
         .drop("cluster_id")
     )
 

@@ -33,15 +33,15 @@ from pyspark.sql import functions as F
 CTX_LEN = 512
 
 
-def pack_sequences(df: DataFrame, token_col: str) -> DataFrame:
+def pack_sequences(df: DataFrame) -> DataFrame:
     """Streaming concat-and-chunk packing: documents ordered by ``doc_id``
-    within each ``lang`` are laid head-to-tail in a token stream cut every
-    ``CTX_LEN`` tokens.  Deterministic given the ordering columns — exactly
-    replayable as a SQL window query."""
+    within each ``lang`` are laid head-to-tail, ``n_tokens`` each, in a
+    token stream cut every ``CTX_LEN`` tokens.  Deterministic given the
+    ordering columns — exactly replayable as a SQL window query."""
     ctx_len = CTX_LEN
     w = Window.partitionBy("lang").orderBy("doc_id")
-    cum = F.sum(F.col(token_col)).over(w)
-    out = df.withColumn("start_offset", cum - F.col(token_col))
+    cum = F.sum(F.col("n_tokens")).over(w)
+    out = df.withColumn("start_offset", cum - F.col("n_tokens"))
     return (
         out.withColumn(
             "pack_id", F.floor(F.col("start_offset") / ctx_len).cast("long")
@@ -52,10 +52,10 @@ def pack_sequences(df: DataFrame, token_col: str) -> DataFrame:
         .withColumn(
             "n_packs",
             F.when(
-                F.col(token_col) == 0, F.lit(1)
+                F.col("n_tokens") == 0, F.lit(1)
             ).otherwise(
                 F.floor(
-                    (F.col("start_offset") + F.col(token_col) - 1) / ctx_len
+                    (F.col("start_offset") + F.col("n_tokens") - 1) / ctx_len
                 ).cast("long")
                 - F.col("pack_id")
                 + 1

@@ -30,20 +30,24 @@ and the corpus scalars broadcast.  Fusion joins two ≤k-row lists.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lvm_datapipe_spark.operators.text import tokens
 
 
-def bm25_scores(docs: DataFrame, terms: Sequence[str]) -> DataFrame:
-    """Per-document BM25 score for a fixed bag of query ``terms``.
+#: the BM25 query: distinct lowercase terms (tokens are lowercased before
+#: matching), combined in this order; read at call time
+BM25_TERMS = ("window", "merge", "stream")
 
-    Returns ``(id_col, score)`` for every document matching at least one
-    term.  Per-term scores combine in the FIXED textual order of
-    ``terms`` (conditional-max pivot + coalesce chain), never through an
+
+def bm25_scores(docs: DataFrame) -> DataFrame:
+    """Per-document BM25 score for the fixed bag of query terms
+    ``BM25_TERMS``.
+
+    Returns ``(doc_id, score)`` for every document matching at least one
+    term.  Per-term scores combine in the FIXED textual order of the
+    terms (conditional-max pivot + coalesce chain), never through an
     order-sensitive float SUM aggregate — the oracle replays the same
     chain, so the result is bit-identical.
 
@@ -55,14 +59,7 @@ def bm25_scores(docs: DataFrame, terms: Sequence[str]) -> DataFrame:
     """
     k1 = 1.2
     b = 0.75
-    if not terms:
-        raise ValueError("bm25_scores needs at least one query term")
-    if len(set(terms)) != len(terms):
-        raise ValueError(f"duplicate query terms: {terms}")
-    if any(t != t.lower() for t in terms):
-        # tokens are lowercased before matching; an uppercase term would
-        # silently match nothing
-        raise ValueError(f"query terms must be lowercase: {terms}")
+    terms = BM25_TERMS
     tok = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
     )
@@ -122,8 +119,9 @@ def ranked_topk(
     )
 
 
-def rrf_fuse(left: DataFrame, right: DataFrame, id_col: str) -> DataFrame:
-    """Reciprocal-rank fusion of two ranked candidate lists.
+def rrf_fuse(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Reciprocal-rank fusion of two ranked ``(doc_id, rank)`` candidate
+    lists.
 
     ``rrf = 1/(k0 + rank_left) + 1/(k0 + rank_right)`` with a missing
     side contributing exactly ``0.0`` (full-outer join + coalesce).  Both
@@ -131,13 +129,13 @@ def rrf_fuse(left: DataFrame, right: DataFrame, id_col: str) -> DataFrame:
     :func:`ranked_topk`), so the join is broadcast-trivial at any corpus
     scale."""
     k0 = 60
-    a = left.select(F.col(id_col).alias("_ida"), F.col("rank").alias("_ra"))
-    bdf = right.select(F.col(id_col).alias("_idb"), F.col("rank").alias("_rb"))
+    a = left.select(F.col("doc_id").alias("_ida"), F.col("rank").alias("_ra"))
+    bdf = right.select(F.col("doc_id").alias("_idb"), F.col("rank").alias("_rb"))
     j = a.join(bdf, a["_ida"] == bdf["_idb"], "full_outer")
     contrib_a = F.lit(1.0) / (F.lit(k0) + F.col("_ra")).cast("double")
     contrib_b = F.lit(1.0) / (F.lit(k0) + F.col("_rb")).cast("double")
     return j.select(
-        F.coalesce(F.col("_ida"), F.col("_idb")).alias(id_col),
+        F.coalesce(F.col("_ida"), F.col("_idb")).alias("doc_id"),
         (F.coalesce(contrib_a, F.lit(0.0)) + F.coalesce(contrib_b, F.lit(0.0))).alias(
             "rrf"
         ),

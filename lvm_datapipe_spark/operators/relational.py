@@ -15,17 +15,16 @@ from pyspark.sql import functions as F
 # -- windows / top-k / set ops (§2.6) ---------------------------------------
 
 
-def best_per_group(
-    df: DataFrame, partition_col: str, score_col: str, tiebreak_col: str
-) -> DataFrame:
+def best_per_group(df: DataFrame) -> DataFrame:
     """Top-1-per-group — the README's ``best_ocr_only.json`` materialization
     (select best clip per video by score, ``data_schema/macvid.py:114``; no
-    code ships for it in the reference).  ``row_number`` over a window with a
-    deterministic tiebreak, then ``== 1``.  Spark plans this as a single
+    code ships for it in the reference), over orders: each customer's
+    highest-priced order.  ``row_number`` over a window with a
+    deterministic tiebreak (the order key), then ``== 1``.  Spark plans this as a single
     shuffle + partial top-k (WindowGroupLimit pushes rank<=1 below the sort).
     """
-    w = Window.partitionBy(partition_col).orderBy(
-        F.col(score_col).desc(), F.col(tiebreak_col).asc()
+    w = Window.partitionBy("o_custkey").orderBy(
+        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
@@ -77,9 +76,9 @@ def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def contiguous_ids(df: DataFrame, order_cols: list[str]) -> DataFrame:
-    """Assign CONTIGUOUS global ids 0..n-1 in ``order_cols`` order without a
-    SinglePartition window.
+def contiguous_ids(df: DataFrame) -> DataFrame:
+    """Assign CONTIGUOUS global ids 0..n-1 in ``(lang, doc_id)`` order
+    without a SinglePartition window.
 
     ``row_number() OVER (ORDER BY ...)`` funnels the corpus through one
     partition — the canonical scale-killer.  ``monotonically_increasing_id``
@@ -103,13 +102,13 @@ def contiguous_ids(df: DataFrame, order_cols: list[str]) -> DataFrame:
        within-partition position (an Arrow-batched per-partition counter —
        order-preserving ``mapInPandas``, no window, no shuffle).
 
-    Total: ONE range exchange regardless of corpus size.  ``order_cols``
-    must be a total order (unique key) for the ASSIGNMENT to be
-    deterministic across reruns; within one call, the checkpoint pins the
-    ids either way.
+    Total: ONE range exchange regardless of corpus size.  The order must
+    be total (``doc_id`` unique) for the ASSIGNMENT to be deterministic
+    across reruns; within one call, the checkpoint pins the ids either way.
     """
     from pyspark.sql import types as T
 
+    order_cols = ["lang", "doc_id"]
     spark = df.sparkSession
     n_part = max(df.sparkSession.sparkContext.defaultParallelism, 2)
     with_pid = (
@@ -152,8 +151,9 @@ def contiguous_ids(df: DataFrame, order_cols: list[str]) -> DataFrame:
     )
 
 
-def pareto_skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
-    """Distributed 2-D SKYLINE (Pareto frontier, maximizing both columns):
+def pareto_skyline_2d(df: DataFrame) -> DataFrame:
+    """Distributed 2-D SKYLINE (Pareto frontier, maximizing both
+    ``o_totalprice`` and ``o_orderdate``):
     rows for which no other row is >= in both dimensions with a strict
     improvement in at least one.  Bucketed algorithm -- no pair product,
     no global sort:
@@ -172,6 +172,7 @@ def pareto_skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     undefined for them).  The only float math is the bucket formula
     ((x-lo)/(hi-lo)*B, same association on any engine mirroring it)."""
     n_buckets = 256
+    x_col, y_col = "o_totalprice", "o_orderdate"
     cols = df.columns
     d = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
     rng = d.agg(F.min(x_col).alias("_lo"), F.max(x_col).alias("_hi"))

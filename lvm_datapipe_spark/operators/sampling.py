@@ -65,19 +65,14 @@ def split_assign(df: DataFrame, key_col: str, weights: dict[str, float]) -> Data
     return df.withColumn("split", expr)
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, key_col: str, fractions: dict[str, float]
-) -> DataFrame:
-    """Per-stratum deterministic sampling (e.g. language rebalancing: keep
-    10% of English, 100% of low-resource languages).  The keep decision
-    hashes the row key, so each stratum's sample is itself stable; strata
-    not listed are kept whole."""
-    bucket = hash_bucket(key_col, N_BUCKETS, "strata")
-    thresh: Column = F.lit(N_BUCKETS)
-    for value, frac in fractions.items():
-        thresh = F.when(
-            F.col(strata_col) == value, F.lit(int(round(frac * N_BUCKETS)))
-        ).otherwise(thresh)
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Per-``lang`` deterministic sampling (language rebalancing): keep 20%
+    of English, every other language whole.  The keep decision hashes the
+    ``doc_id``, so each stratum's sample is itself stable."""
+    bucket = hash_bucket("doc_id", N_BUCKETS, "strata")
+    thresh = F.when(
+        F.col("lang") == "en", F.lit(int(round(0.2 * N_BUCKETS)))
+    ).otherwise(F.lit(N_BUCKETS))
     return df.filter(bucket < thresh)
 
 
@@ -94,39 +89,39 @@ def md5_order(key_col: Column | str, salt: str = "") -> list[Column]:
     return [h.asc(), key.asc()]
 
 
-def sample_k_per_group(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int,
-) -> DataFrame:
-    """Exactly k rows per group (fewer if the group is smaller), chosen by
-    ranking on a content hash of the key — the deterministic replacement
-    for per-group reservoir sampling (balanced eval subsets, per-source
-    caps).  The hash order is uniform and independent of row order, so the
-    selection is stable; the key itself breaks hash ties.
+#: rows :func:`sample_k_per_group` keeps per group, read at call time
+SAMPLE_K = 20
+
+
+def sample_k_per_group(df: DataFrame) -> DataFrame:
+    """Exactly ``SAMPLE_K`` rows per ``lang`` (fewer if the group is
+    smaller), chosen by ranking on a content hash of the ``doc_id`` — the
+    deterministic replacement for per-group reservoir sampling (balanced
+    eval subsets, per-source caps).  The hash order is uniform and
+    independent of row order, so the selection is stable; the key itself
+    breaks hash ties.
 
     Plan: one window shuffle keyed on the group; Spark plans the rank
     filter as WindowGroupLimit (per-partition top-k below the shuffle), so
     no group's full contents sort globally."""
-    w = Window.partitionBy(group_col).orderBy(*md5_order(key_col, "topk"))
+    w = Window.partitionBy("lang").orderBy(*md5_order("doc_id", "topk"))
     return (
         df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
+        .filter(F.col("_rk") <= SAMPLE_K)
         .drop("_rk")
     )
 
 
-def weighted_sample(df: DataFrame, key_col: str, weight_col: str) -> DataFrame:
-    """Deterministic importance sampling: keep a row iff its hash bucket
-    falls below ``weight`` (a per-row keep probability in [0, 1]).  The
-    keep decision is a pure function of (key, weight) — reproducible across
-    engines, repartitions, and re-runs, unlike ``df.sample`` whose outcome
-    depends on partitioning.  This is the curation primitive for
-    quality-weighted corpus resampling (upweight high-quality docs by
-    giving them a larger keep probability)."""
-    b = hash_bucket(key_col, N_BUCKETS, "wsample")
-    return df.filter(b < (F.col(weight_col) * N_BUCKETS))
+def weighted_sample(df: DataFrame) -> DataFrame:
+    """Deterministic importance sampling: keep a row iff the hash bucket of
+    its ``doc_id`` falls below ``keep_p`` (a per-row keep probability in
+    [0, 1]).  The keep decision is a pure function of (doc_id, keep_p) —
+    reproducible across engines, repartitions, and re-runs, unlike
+    ``df.sample`` whose outcome depends on partitioning.  This is the
+    curation primitive for quality-weighted corpus resampling (upweight
+    high-quality docs by giving them a larger keep probability)."""
+    b = hash_bucket("doc_id", N_BUCKETS, "wsample")
+    return df.filter(b < (F.col("keep_p") * N_BUCKETS))
 
 
 def dsir_doc_weights(df: DataFrame, target_pred: Column) -> DataFrame:

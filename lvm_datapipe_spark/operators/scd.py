@@ -101,11 +101,11 @@ def scd2_merge(current: DataFrame, updates: DataFrame) -> DataFrame:
     return hist.unionByName(merged)
 
 
-def temporal_join(facts: DataFrame, versions: DataFrame, key: str, fact_ts: str) -> DataFrame:
+def temporal_join(facts: DataFrame, versions: DataFrame) -> DataFrame:
     """Join facts to the dimension VERSION valid at each fact's timestamp —
     the read side of SCD2 (the write side is :func:`scd2_merge`).
 
-    Condition: key equality + ``valid_from <= ts < valid_to`` with a NULL
+    Condition: ``doc_id`` equality + ``valid_from <= ts < valid_to`` with a NULL
     ``valid_to`` meaning "still open".  Because the key equality is part
     of the condition, Spark keeps this a plain hash/sort-merge EQUI join
     with the validity window as a cheap post-join residual — one keyed
@@ -117,23 +117,13 @@ def temporal_join(facts: DataFrame, versions: DataFrame, key: str, fact_ts: str)
     A LEFT join: facts whose timestamp precedes the first version keep
     null dimension columns — the common backfill case.
     """
-    from_col = "valid_from"
-    to_col = "valid_to"
     f, v = facts.alias("f"), versions.alias("v")
     cond = (
-        (F.col(f"f.{key}") == F.col(f"v.{key}"))
-        & (F.col(f"f.{fact_ts}") >= F.col(f"v.{from_col}"))
-        & (
-            F.col(f"v.{to_col}").isNull()
-            | (F.col(f"f.{fact_ts}") < F.col(f"v.{to_col}"))
-        )
+        (F.col("f.doc_id") == F.col("v.doc_id"))
+        & (F.col("f.ts") >= F.col("v.valid_from"))
+        & (F.col("v.valid_to").isNull() | (F.col("f.ts") < F.col("v.valid_to")))
     )
     joined = f.join(v, cond, "left_outer")
     return joined.select(
-        "f.*",
-        *[
-            F.col(f"v.{c}").alias(c)
-            for c in versions.columns
-            if c != key
-        ],
+        "f.*", *[F.col(f"v.{c}").alias(c) for c in versions.columns if c != "doc_id"]
     )

@@ -20,7 +20,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: embedding dimensionality of the driver's tables; flat expressions need it
+#: embedding dimensionality of the driver's tables; flat expressions need
+#: it.  It and ``IVF_CELLS`` are read at call time, so tests run the
+#: quantizer kernels on 2-8-dim vectors by patching them
 DEFAULT_DIM = 64
 #: the fixed IVF quantizer the IVF-family kernels and their DuckDB oracles
 #: share: cell count, cells probed per query, centroid seed
@@ -37,11 +39,13 @@ TOPK = 10
 #: semdedup_keep's duplicate cosine: same-cell pairs at or above it are
 #: duplicates
 SEMDEDUP_EPS = 0.4
+#: kcenter_coreset's representatives per cell
+KCENTER_K = 8
 
 
-def as_double(vec: Column | str) -> Column:
-    v = F.col(vec) if isinstance(vec, str) else vec
-    return v.cast("array<double>")
+def as_double() -> Column:
+    """The ``embedding`` column as ``array<double>``."""
+    return F.col("embedding").cast("array<double>")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -80,16 +84,17 @@ def sql_fold_dot(vec_sql: str, vals) -> str:
     )
 
 
-def dot_flat(a: Column, b: Column, dim: int = DEFAULT_DIM) -> Column:
+def dot_flat(a: Column, b: Column) -> Column:
     """``a[1]*b[1] + a[2]*b[2] + ...`` as a flat left-associated expression
     tree — bit-identical to :func:`dot` (same association order; the fold's
     leading ``0.0 +`` is exact).  Only for narrow Project stages with a
     SINGLE tree (e.g. the norm in :func:`unit_vectors`); see :func:`dot` for
-    why join-adjacent paths must use the fold.  ``dim`` MUST equal the array
-    length: larger raises INVALID_ARRAY_INDEX, smaller silently truncates."""
+    why join-adjacent paths must use the fold.  ``DEFAULT_DIM`` MUST equal
+    the array length: larger raises INVALID_ARRAY_INDEX, smaller silently
+    truncates."""
     return reduce(
         operator.add,
-        [F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)],
+        [F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(DEFAULT_DIM)],
     )
 
 
@@ -114,11 +119,11 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     # instead of 1).  Same fold, same association order ⇒ identical doubles.
     q = F.broadcast(
         queries.select(
-            F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
+            F.col("vec_id").alias("query_id"), as_double().alias("qv")
         ).withColumn("qn", l2_norm(F.col("qv")))
     )
     c = emb.select(
-        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv")
+        F.col("vec_id").alias("neighbor_id"), as_double().alias("nv")
     ).withColumn("nn", l2_norm(F.col("nv")))
     scored = (
         c.crossJoin(q)
@@ -141,7 +146,7 @@ def unit_vectors(emb: DataFrame) -> DataFrame:
     a row column before the per-element divide), so downstream pairwise
     cosine is a single dot instead of three."""
     withnorm = emb.select(
-        F.col("vec_id"), as_double("embedding").alias("v")
+        F.col("vec_id"), as_double().alias("v")
     ).withColumn(
         # fold == flat sum bit-exactly (leading 0.0+ is exact); one parsed
         # expression instead of 64 element_at Column constructions
@@ -237,7 +242,7 @@ def _observed_corpus(emb: DataFrame) -> tuple[DataFrame, int]:
     from lvm_datapipe_spark.operators.graph import observed_checkpoint
 
     corpus, seen = observed_checkpoint(
-        emb.select(F.col("vec_id"), as_double("embedding").alias("embedding"))
+        emb.select(F.col("vec_id"), as_double().alias("embedding"))
     )
     return corpus, seen["n_rows"]
 
@@ -284,7 +289,7 @@ def lsh_ann_candidates(
         )
         entries.append(f"struct({t} AS tbl, ({bits}) AS bucket)")
     buckets = (
-        emb.select(F.col("vec_id"), as_double("embedding").alias("_v"))
+        emb.select(F.col("vec_id"), as_double().alias("_v"))
         .select(
             F.col("vec_id"),
             F.explode(F.expr("array(" + ",".join(entries) + ")")).alias("tb"),
@@ -353,8 +358,9 @@ def lsh_near_dup_pairs(
     )
 
 
-def ivf_fixed_centroids(n_cells: int, dim: int, seed: int):
-    """Seeded Gaussian coarse-quantizer centroids (numpy PCG64) — a FIXED
+def ivf_fixed_centroids():
+    """``IVF_CELLS`` seeded Gaussian coarse-quantizer centroids of
+    ``DEFAULT_DIM`` dimensions (numpy PCG64, seed ``IVF_SEED``) — a FIXED
     quantizer whose cell assignment is a pure expression of the input
     vector, so the whole IVF pipeline is deterministic and SQL-replayable
     (unlike k-means, whose result depends on partitioning/iteration order).
@@ -362,15 +368,15 @@ def ivf_fixed_centroids(n_cells: int, dim: int, seed: int):
     variant remains :func:`ivf_index`/:func:`ivf_topk`."""
     import numpy as np
 
-    return np.random.default_rng(seed).standard_normal((n_cells, dim))
+    return np.random.default_rng(IVF_SEED).standard_normal((IVF_CELLS, DEFAULT_DIM))
 
 
-def _ivf_cell_sims_sql(n_cells: int, dim: int, seed: int, vec: str, norm: str) -> str:
+def _ivf_cell_sims_sql(vec: str, norm: str) -> str:
     """Per-cell cosine array as ONE parsed expression.  Fold-based dot per
-    centroid: n_cells flat dot trees in one projection blow janino's 64 KB
+    centroid: ``IVF_CELLS`` flat dot trees in one projection blow janino's 64 KB
     method limit, the fold stays compact; the norm is materialized as a row
     column shared across all cells (see sql_fold_dot)."""
-    cents = ivf_fixed_centroids(n_cells, dim, seed)
+    cents = ivf_fixed_centroids()
     # centroid norms as Python-side left-assoc sums — same doubles as the
     # engine folding the literal array, constant for the whole query
     cells = ",".join(
@@ -390,11 +396,11 @@ def ivf_fixed_assign(emb: DataFrame, keep_norm: bool = False) -> DataFrame:
     sqrt(dot(nv, nv)) per candidate pair (dot_flat is bit-identical to the
     fold — same association order)."""
     out = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv"))
-        .withColumn("vnorm", F.sqrt(dot_flat(F.col("nv"), F.col("nv"), DEFAULT_DIM)))
+        emb.select(F.col("vec_id").alias("neighbor_id"), as_double().alias("nv"))
+        .withColumn("vnorm", F.sqrt(dot_flat(F.col("nv"), F.col("nv"))))
         .withColumn(
             "sims",
-            F.expr(_ivf_cell_sims_sql(IVF_CELLS, DEFAULT_DIM, IVF_SEED, "nv", "vnorm")),
+            F.expr(_ivf_cell_sims_sql("nv", "vnorm")),
         )
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
@@ -411,15 +417,15 @@ def _ivf_probe_cells(queries: DataFrame) -> DataFrame:
     ``qn`` is the query norm, carried so the exact verify divides by it
     instead of re-folding it per candidate (dot_flat == the fold bit for
     bit)."""
-    q = queries.select(F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), as_double().alias("qv"))
     return q.withColumn(
-        "vnorm", F.sqrt(dot_flat(F.col("qv"), F.col("qv"), DEFAULT_DIM))
+        "vnorm", F.sqrt(dot_flat(F.col("qv"), F.col("qv")))
     ).select(
         "query_id",
         "qv",
         F.col("vnorm").alias("qn"),
         F.posexplode(
-            F.expr(_ivf_cell_sims_sql(IVF_CELLS, DEFAULT_DIM, IVF_SEED, "qv", "vnorm"))
+            F.expr(_ivf_cell_sims_sql("qv", "vnorm"))
         ).alias("cell", "cell_sim"),
     )
 
@@ -478,7 +484,7 @@ def ivf_index(emb: DataFrame) -> tuple[DataFrame, list[list[float]]]:
 
     id_col = "vec_id"
     vecs = (
-        emb.select(F.col(id_col), as_double("embedding").alias("v"))
+        emb.select(F.col(id_col), as_double().alias("v"))
         # a NULL vector cannot be assigned to a cell (and crashes the
         # KMeans fit) — un-indexable rows are dropped, matching the
         # brute-force/LSH paths where a null cosine filters out
@@ -503,7 +509,10 @@ def ivf_index(emb: DataFrame) -> tuple[DataFrame, list[list[float]]]:
         k=min(IVF_CELLS, n), seed=IVF_SEED, featuresCol="features",
         predictionCol="cell",
     )
-    model = km.fit(vecs)
+    # k-means|| seeds and iterates per partition, so the fit input gets a
+    # fixed layout: without it the cells (and the answers) follow the
+    # scan's core-count-dependent partitioning
+    model = km.fit(vecs.repartition(8, id_col).sortWithinPartitions(id_col))
     assigned = model.transform(vecs).select(id_col, "v", "cell")
     centroids = [[float(x) for x in c] for c in model.clusterCenters()]
     return assigned, centroids
@@ -517,7 +526,7 @@ def ivf_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """
     assigned, centroids = ivf_index(emb)
 
-    q = queries.select(F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), as_double().alias("qv"))
     if not centroids:  # empty corpus: no cells, no neighbors
         return q.select(
             "query_id",
@@ -573,7 +582,7 @@ def quantize_embeddings(emb: DataFrame) -> DataFrame:
     shuffle, runs at scan speed.
     """
     n_levels = 127
-    v = as_double("embedding")
+    v = as_double()
     scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / float(n_levels)
     lv = float(n_levels)
     q = F.when(scale == 0, F.transform(v, lambda x: F.lit(0))).otherwise(
@@ -670,21 +679,21 @@ def _pq_codes_sql(cbs, m: int, dsub: int) -> str:
     literal-heavy code columns into a single nested transform cuts the
     analyzer/codegen surface ~m-fold — measured 7.7 → 3.1 s on the
     declared IVF-PQ query at sf0.1, where per-stage planning and janino
-    compilation of 64 giant expression trees dominated (guide §7.3)."""
-    d = _pq_dists_j_sql("nv", cbs, dsub)
+    compilation of 64 giant expression trees dominated (guide §7.3).  Each
+    subspace's distance array is computed once, then reduced to its
+    argmin."""
     return (
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"cast(array_position({d}, array_min({d})) - 1 as int))"
+        f"transform({_pq_all_dists_sql('nv', cbs, m, dsub)}, "
+        "ds -> cast(array_position(ds, array_min(ds)) - 1 as int))"
     )
 
 
-def _pq_luts_sql(cbs, m: int, dsub: int) -> str:
-    """All m per-centroid LUTs of ``qv`` as ONE array<array<double>>
-    expression — value-identical to the m ``lut_j`` columns (same fold)."""
-    return (
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"{_pq_dists_j_sql('qv', cbs, dsub)})"
-    )
+def _pq_all_dists_sql(vec: str, cbs, m: int, dsub: int) -> str:
+    """All m per-centroid distance arrays of ``vec`` as ONE
+    array<array<double>> expression: a query's LUTs (``qv``), or the
+    arrays a corpus vector's codes take the argmin of (``nv``) —
+    value-identical to m per-subspace columns (same fold)."""
+    return f"transform(sequence(0, {m - 1}), j -> {_pq_dists_j_sql(vec, cbs, dsub)})"
 
 
 #: ADC distance over the nested columns: ((0.0 + t_0) + t_1) + ... is
@@ -715,14 +724,14 @@ def pq_adc_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     # identical to an m-column codes/lut_j form, ~m-fold less
     # analyzer/codegen surface
     codes = emb.select(
-        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv")
+        F.col("vec_id").alias("neighbor_id"), as_double().alias("nv")
     ).select(
         "neighbor_id", F.expr(_pq_codes_sql(cbs, m, dsub)).alias("codes")
     )
     q = queries.select(
-        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), as_double().alias("qv")
     ).select(
-        "query_id", F.expr(_pq_luts_sql(cbs, m, dsub)).alias("luts")
+        "query_id", F.expr(_pq_all_dists_sql("qv", cbs, m, dsub)).alias("luts")
     )
     wr = Window.partitionBy("query_id").orderBy(
         F.asc("adc_dist"), F.asc("neighbor_id")
@@ -769,7 +778,7 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     probe = probe.select(
         "query_id",
         "cell",
-        F.expr(_pq_luts_sql(cbs, m, dsub)).alias("luts"),
+        F.expr(_pq_all_dists_sql("qv", cbs, m, dsub)).alias("luts"),
     )
     wr = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (
@@ -782,11 +791,7 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
-def semdedup_keep(
-    emb: DataFrame,
-    n_cells: int = IVF_CELLS,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def semdedup_keep(emb: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic deduplication
     by clustering embeddings, then dropping within-cluster items whose cosine
     to another cluster member reaches ``SEMDEDUP_EPS``, keeping — per the paper's
@@ -804,25 +809,25 @@ def semdedup_keep(
     may keep more than one representative — the connected-components-exact
     variant is ``lsh_near_dup_pairs`` + ``graph.connected_components``.
 
-    Plan shape (scales to 100 TB): cell assignment is one scan (n_cells
+    Plan shape (scales to 100 TB): cell assignment is one scan (IVF_CELLS
     literal-dot folds in codegen, no shuffle); candidate pairs meet on a
     cell equi-self-join — pair blow-up is bounded by cell size (size cells
-    via n_cells ~ corpus/target_cell_size, as SemDeDup does with k=50000 for
+    via IVF_CELLS ~ corpus/target_cell_size, as SemDeDup does with k=50000 for
     LAION), never corpus x corpus; the removal set is a keyed anti-join.
 
     Returns ``(vec_id, cell, centroid_sim, keep)`` for every input vector.
     """
     a = (
-        emb.select("vec_id", as_double("embedding").alias("v"))
-        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
+        emb.select("vec_id", as_double().alias("v"))
+        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"))))
+        .withColumn("sims", F.expr(_ivf_cell_sims_sql("v", "nrm")))
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
         )
         .withColumn("centroid_sim", F.array_max("sims"))
         .withColumn("vn", F.expr("transform(v, x -> x / nrm)"))
         .select("vec_id", "cell", "centroid_sim", "vn")
-        # the assignment scan (n_cells literal-dot folds per row) feeds both
+        # the assignment scan (IVF_CELLS literal-dot folds per row) feeds both
         # sides of the pair join AND the final output — persist so it runs
         # once, not three times (measured 6.6 s -> ~4 s at sf0.1)
         .persist()
@@ -857,17 +862,17 @@ def semdedup_keep(
     return out
 
 
-def _cell_assigned(emb: DataFrame, n_cells: int, dim: int) -> DataFrame:
+def _cell_assigned(emb: DataFrame) -> DataFrame:
     """Non-NULL vectors with their norm ``nrm``, their cosine ``sims`` to
     each fixed-quantizer centroid, their ``cell`` (the argmax) and the unit
     vector ``vn``: the one-scan prologue of the per-cell greedy
     selections.  A NULL vector cannot join a similarity chain — it is
     dropped, matching the ivf_index null-payload rule."""
     return (
-        emb.select("vec_id", as_double("embedding").alias("v"))
+        emb.select("vec_id", as_double().alias("v"))
         .filter(F.col("v").isNotNull())
-        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"), dim)))
-        .withColumn("sims", F.expr(_ivf_cell_sims_sql(n_cells, dim, IVF_SEED, "v", "nrm")))
+        .withColumn("nrm", F.sqrt(dot_flat(F.col("v"), F.col("v"))))
+        .withColumn("sims", F.expr(_ivf_cell_sims_sql("v", "nrm")))
         .withColumn(
             "cell", (F.expr("array_position(sims, array_max(sims))") - 1).cast("int")
         )
@@ -895,11 +900,7 @@ def _per_cell(a: DataFrame, walk) -> DataFrame:
     return a.groupBy("cell").applyInPandas(run, "vec_id long, cell int, pos long")
 
 
-def icl_chain_order(
-    emb: DataFrame,
-    n_cells: int = IVF_CELLS,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def icl_chain_order(emb: DataFrame) -> DataFrame:
     """In-Context Pretraining document ordering (Shi et al. 2023,
     arXiv:2310.10638): place semantically related documents next to each
     other in the training stream by traversing each similarity cluster as a
@@ -916,13 +917,13 @@ def icl_chain_order(
     the IVF/SemDeDup family (no shuffle); the traversal is ONE
     ``applyInPandas`` over cell groups — per-cell cost is O(cell² · dim),
     which is the published algorithm's cost model, and cell size is
-    controlled by n_cells exactly as in SemDeDup (k=50000 for LAION-scale).
+    controlled by IVF_CELLS exactly as in SemDeDup (k=50000 for LAION-scale).
     The UDF computes every dot as an explicit LEFT-ASSOCIATED fold so the
     comparisons that drive the traversal are bit-identical to the SQL
     oracle's fold — the ordering is reproducible across engines, batch
     sizes, and partitionings.
     """
-    a = _cell_assigned(emb, n_cells, dim).select("vec_id", "cell", "vn")
+    a = _cell_assigned(emb).select("vec_id", "cell", "vn")
 
     def chain(pdf):
         import numpy as np
@@ -966,18 +967,13 @@ def icl_chain_order(
     return _per_cell(a, chain)
 
 
-def kcenter_coreset(
-    emb: DataFrame,
-    k: int = 8,
-    n_cells: int = IVF_CELLS,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def kcenter_coreset(emb: DataFrame) -> DataFrame:
     """Greedy k-center CORESET selection (Sener & Savarese 2018,
     arXiv:1708.00489 — the active-learning/data-pruning selection rule):
     within each quantizer cell, start from the lowest id and repeatedly add
     the point FARTHEST from the current selection (max over candidates of
     min cosine distance to any selected point; ties to the lower id), up to
-    ``k`` representatives per cell.  The selected set is the 2-approximate
+    ``KCENTER_K`` representatives per cell.  The selected set is the 2-approximate
     k-center cover — the diversity-preserving subsample that keeps one
     exemplar per region instead of one per duplicate-cluster (SemDeDup's
     complementary failure mode).
@@ -990,7 +986,8 @@ def kcenter_coreset(
     O(k · cell · dim).  Distances are exact left-fold cosines so the
     traversal decisions replay bit-identically in the recursive SQL oracle.
     """
-    a = _cell_assigned(emb, n_cells, dim).select("vec_id", "cell", "vn")
+    a = _cell_assigned(emb).select("vec_id", "cell", "vn")
+    k = KCENTER_K
 
     def select_cell(pdf):
         ids = pdf["vec_id"].tolist()
@@ -1050,7 +1047,7 @@ def mmr_select(emb: DataFrame) -> DataFrame:
     Scores are exact left-fold doubles with shared literal constants, so the
     greedy decisions replay bit-identically in a recursive SQL oracle."""
     a = (
-        _cell_assigned(emb, IVF_CELLS, DEFAULT_DIM)
+        _cell_assigned(emb)
         .withColumn("rel", F.expr("array_max(sims)"))
         .select("vec_id", "cell", "rel", "vn")
     )

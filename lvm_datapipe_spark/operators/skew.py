@@ -14,9 +14,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_aggregate(df: DataFrame, key: str, aggs: list) -> DataFrame:
-    """Two-phase aggregation for hot group keys: aggregate on (key, salt)
-    first (spreads the hot key across reducers), then merge per key.  Only
+def salted_aggregate(df: DataFrame, aggs: list) -> DataFrame:
+    """Two-phase aggregation for a hot ``event_type``: aggregate on
+    (event_type, salt) first (spreads the hot key across reducers), then
+    merge per key.  Only
     works for algebraic aggregates expressed as (partial, merge) pairs; pass
     ``aggs`` as [(partial_col_expr, merge_fn, out_name), ...] where merge_fn
     maps the partial column name to a final aggregate expression.
@@ -26,9 +27,9 @@ def salted_aggregate(df: DataFrame, key: str, aggs: list) -> DataFrame:
     (billions of rows per key across thousands of map tasks).
     """
     salted = df.withColumn("_salt", (F.rand(seed=42) * 16).cast("int"))
-    partial = salted.groupBy(key, "_salt").agg(
+    partial = salted.groupBy("event_type", "_salt").agg(
         *[expr.alias(f"_p_{name}") for expr, _merge, name in aggs]
     )
-    return partial.groupBy(key).agg(
+    return partial.groupBy("event_type").agg(
         *[merge(f"_p_{name}").alias(name) for _expr, merge, name in aggs]
     )

@@ -34,14 +34,14 @@ def normalize_whitespace(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(_c(text), r"\s+", " "))
 
 
-def normalize_text(text: Column | str) -> Column:
-    """Canonical pre-tokenization normalization: lowercase, strip everything
+def normalize_text() -> Column:
+    """Canonical pre-tokenization normalization of ``text``: lowercase, strip everything
     outside ``[a-z0-9]``+whitespace (ASCII normalization — the corpora this
     engine targets are pre-transliterated; widen the class for unicode
     pipelines), collapse whitespace runs, trim.  Explicit whitespace class
     (not ``\\s``) because Java and RE2 disagree on ``\\x0b``; this chain is
     engine-portable and oracle-checked."""
-    t = F.lower(_c(text))
+    t = F.lower(_c("text"))
     t = F.regexp_replace(t, "[^a-z0-9 \t\n\r\f]", "")
     return F.trim(F.regexp_replace(t, "[ \t\n\r\f]+", " "))
 
@@ -197,8 +197,8 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 LANG_PRIORITY = ["en", "fr", "es", "de"]  # deterministic argmax tie-break
 
 
-def punct_count(text: Column | str) -> Column:
-    return F.length(F.regexp_replace(_c(text), PUNCT_CLASS, ""))
+def punct_count() -> Column:
+    return F.length(F.regexp_replace(_c("text"), PUNCT_CLASS, ""))
 
 
 def _token_lang_counts(df: DataFrame) -> DataFrame:
@@ -227,7 +227,7 @@ def quality_features(df: DataFrame) -> DataFrame:
     base = df.select(
         F.col("doc_id"),
         F.length(F.col("text")).alias("n_chars_actual"),
-        punct_count("text").alias("n_punct"),
+        punct_count().alias("n_punct"),
     )
     j = base.join(counts, "doc_id")
     n_tok = F.col("n_tokens").cast("int")

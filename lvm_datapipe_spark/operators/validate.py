@@ -50,19 +50,18 @@ def unique_check(df: DataFrame, cols: list[str], name: str) -> DataFrame:
     ).select("check", "violations", "n_checked")
 
 
-def ref_check(
-    fact: DataFrame, fk: str, dim: DataFrame, pk: str, name: str
-) -> DataFrame:
-    """Referential-integrity check: violations = fact rows whose foreign
-    key has no match in the dim.  ONE left-outer join with a match marker
+def ref_check(fact: DataFrame, dim: DataFrame) -> DataFrame:
+    """Referential-integrity check ``orders_custkey_refs_customer``:
+    violations = orders whose ``o_custkey`` has no match among the
+    customers' ``c_custkey``.  ONE left-outer join with a match marker
     + one aggregate — fully plan-composable (no build-time action), and
     the dim key set broadcasts when it fits."""
-    keys = dim.select(F.col(pk).alias(fk)).distinct().withColumn(
+    keys = dim.select(F.col("c_custkey").alias("o_custkey")).distinct().withColumn(
         "_hit", F.lit(1)
     )
-    j = fact.select(fk).join(keys, fk, "left_outer")
+    j = fact.select("o_custkey").join(keys, "o_custkey", "left_outer")
     return j.agg(
-        F.lit(name).alias("check"),
+        F.lit("orders_custkey_refs_customer").alias("check"),
         F.sum(F.when(F.col("_hit").isNull(), 1).otherwise(0))
         .cast("long")
         .alias("violations"),

@@ -30,13 +30,12 @@ from lvm_datapipe_spark.catalog import read_parquet
 def write_bucketed(
     df: DataFrame,
     table: str,
-    bucket_col: str | list[str],
     n_buckets: int = 32,
     path: str | None = None,
 ) -> None:
-    """Persist as a bucketed (and bucket-sorted) table.  n_buckets should
-    match downstream parallelism; both join sides must agree.  Composite
-    keys (e.g. the LSH ``(band, bucket)``) bucket on all columns.
+    """Persist as a table bucketed (and bucket-sorted) by ``clip_id``.
+    n_buckets should match downstream parallelism; both join sides must
+    agree.
 
     With ``path`` (absolute: a relative table location resolves against
     the warehouse directory) the files go there and ``table`` is only the
@@ -44,8 +43,7 @@ def write_bucketed(
     so the output is the directory alone (read it with
     :func:`read_bucketed`).  A write that sees no rows leaves no data
     file."""
-    cols = [bucket_col] if isinstance(bucket_col, str) else list(bucket_col)
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *cols).sortBy(*cols)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, "clip_id").sortBy("clip_id")
     if path is None:
         writer.saveAsTable(table)
         return
@@ -55,7 +53,7 @@ def write_bucketed(
         df.sparkSession.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
-def read_bucketed(spark: SparkSession, path: str, bucket_col: str, n_buckets: int) -> DataFrame:
+def read_bucketed(spark: SparkSession, path: str, n_buckets: int) -> DataFrame:
     """The files :func:`write_bucketed` left at ``path`` (absolute, sorted),
     read as a bucketed relation: a table is registered over ``path`` with
     the footer schema (no Spark job), resolved, and its entry dropped at
@@ -67,8 +65,8 @@ def read_bucketed(spark: SparkSession, path: str, bucket_col: str, n_buckets: in
     location = path.replace("\\", "\\\\").replace("'", "\\'")
     try:
         spark.sql(
-            f"CREATE TABLE `{table}` ({ddl}) USING parquet CLUSTERED BY (`{bucket_col}`)"
-            f" SORTED BY (`{bucket_col}`) INTO {n_buckets} BUCKETS"
+            f"CREATE TABLE `{table}` ({ddl}) USING parquet CLUSTERED BY (`clip_id`)"
+            f" SORTED BY (`clip_id`) INTO {n_buckets} BUCKETS"
             f" LOCATION '{location}'"
         )
         return spark.table(f"`{table}`")

@@ -70,7 +70,7 @@ def read_clip_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, dict]
         spec = {"buckets": None, "clips": path}
     if spec["buckets"] is None:
         return read_snapshot(spark, path), spec
-    return read_bucketed(spark, path, "clip_id", spec["buckets"]), spec
+    return read_bucketed(spark, path, spec["buckets"]), spec
 
 
 def write_clip_snapshot(
@@ -84,7 +84,7 @@ def write_clip_snapshot(
     on empty input only) and stays readable."""
     spark, path = df.sparkSession, os.path.abspath(path)
     n = buckets or spark.sparkContext.defaultParallelism
-    write_bucketed(df, f"clips_{uuid.uuid4().hex}", "clip_id", n, path=path)
+    write_bucketed(df, f"clips_{uuid.uuid4().hex}", n, path=path)
     if _first_parquet_file(path) is None:
         write_snapshot(spark.createDataFrame([], df.schema), path)
         n = None

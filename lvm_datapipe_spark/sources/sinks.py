@@ -25,13 +25,13 @@ import os
 from pyspark.sql import DataFrame
 
 
-def write_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> None:
-    """Partitioned parquet write whose overwrite is scoped to the
-    partitions present in ``df`` (idempotent per-slice reprocessing)."""
+def write_partitioned(df: DataFrame, path: str) -> None:
+    """Parquet write partitioned by ``split`` whose overwrite is scoped to
+    the partitions present in ``df`` (idempotent per-slice reprocessing)."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
+        .partitionBy("split")
         .parquet(path)
     )
 
@@ -48,7 +48,7 @@ def retention_sweep(
     arithmetic: the hive layout (``col=value``) makes expiry a directory
     delete — no scan, no rewrite of surviving data, no Spark job at all.
     Values compare as STRINGS, so this is correct for ISO dates and
-    zero-padded keys (the layouts write_partitioned produces).
+    zero-padded keys.
 
     Returns the dropped partition values (sorted); ``dry_run`` reports
     without deleting.  Deleting a partition is atomic per-directory from

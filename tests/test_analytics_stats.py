@@ -959,27 +959,29 @@ def test_exact_percentiles_driver_bound_path_runs_one_job(spark):
 
 
 def test_table_row_count_reads_footers(tmp_path):
-    """catalog.table_row_count sums the footers' row counts of every data
-    file under a table (nested partition directories included, ``_`` and
+    """catalog.lineitem_row_count sums the footers' row counts of every data
+    file under the table (nested partition directories included, ``_`` and
     ``.`` names skipped, as Spark lists them), and is None for a missing
     table."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from lvm_datapipe_spark.catalog import table_row_count
+    from lvm_datapipe_spark.catalog import lineitem_row_count
 
-    flat = tmp_path / "flat.parquet"
-    pq.write_table(pa.table({"x": list(range(7))}), flat)
-    assert table_row_count(str(tmp_path), "flat") == 7
-    nested = tmp_path / "nested.parquet"
+    flat, nested_dir, missing = (tmp_path / d for d in ("flat", "nested", "missing"))
+    for d in (flat, nested_dir, missing):
+        d.mkdir()
+    pq.write_table(pa.table({"x": list(range(7))}), flat / "lineitem.parquet")
+    assert lineitem_row_count(str(flat)) == 7
+    nested = nested_dir / "lineitem.parquet"
     for part, rows in (("d=1", 3), ("d=2", 4)):
         (nested / part).mkdir(parents=True)
         pq.write_table(pa.table({"x": list(range(rows))}), nested / part / "f.parquet")
     (nested / "_tmp").mkdir()
     pq.write_table(pa.table({"x": [1]}), nested / "_tmp" / "f.parquet")
     pq.write_table(pa.table({"x": [1]}), nested / ".hidden.parquet")
-    assert table_row_count(str(tmp_path), "nested") == 7
-    assert table_row_count(str(tmp_path), "missing") is None
+    assert lineitem_row_count(str(nested_dir)) == 7
+    assert lineitem_row_count(str(missing)) is None
 
 
 def test_range_partition_boundaries_env_gate_fallback(spark, monkeypatch):

@@ -39,35 +39,29 @@ def test_merge_agg_state_equals_full_recompute(spark):
 
     rng = random.Random(7)
     rows = [(f"k{i % 5}", rng.uniform(-100, 100)) for i in range(400)]
-    df = spark.createDataFrame(rows, ["k", "v"])
-    a, b = df.filter("v < 0"), df.filter("v >= 0")
-    merged = merge_agg_state(
-        agg_state(a, ["k"], "v"), agg_state(b, ["k"], "v"), ["k"]
-    )
-    full = agg_state(df, ["k"], "v")
-    got = {(r["k"], r["n_rows"], r["sum_value"]) for r in merged.collect()}
-    want = {(r["k"], r["n_rows"], r["sum_value"]) for r in full.collect()}
+    df = spark.createDataFrame(rows, ["event_type", "value"])
+    a, b = df.filter("value < 0"), df.filter("value >= 0")
+    merged = merge_agg_state(agg_state(a), agg_state(b))
+    full = agg_state(df)
+    got = {(r["event_type"], r["n_rows"], r["sum_value"]) for r in merged.collect()}
+    want = {(r["event_type"], r["n_rows"], r["sum_value"]) for r in full.collect()}
     assert got == want  # EXACT decimal equality, not approx
 
 
 def test_merge_agg_state_disjoint_and_empty_sides(spark):
     from lvm_datapipe_spark.operators.aggregates import agg_state, merge_agg_state
 
-    a = spark.createDataFrame([("x", 1.5), ("x", 2.0)], ["k", "v"])
-    b = spark.createDataFrame([("y", 3.0)], ["k", "v"])
+    a = spark.createDataFrame([("x", 1.5), ("x", 2.0)], ["event_type", "value"])
+    b = spark.createDataFrame([("y", 3.0)], ["event_type", "value"])
     merged = {
-        r["k"]: (r["n_rows"], float(r["sum_value"]))
-        for r in merge_agg_state(
-            agg_state(a, ["k"], "v"), agg_state(b, ["k"], "v"), ["k"]
-        ).collect()
+        r["event_type"]: (r["n_rows"], float(r["sum_value"]))
+        for r in merge_agg_state(agg_state(a), agg_state(b)).collect()
     }
     assert merged == {"x": (2, 3.5), "y": (1, 3.0)}
-    empty = agg_state(a.filter("v > 99"), ["k"], "v")
+    empty = agg_state(a.filter("value > 99"))
     same = {
-        r["k"]: (r["n_rows"], float(r["sum_value"]))
-        for r in merge_agg_state(
-            agg_state(a, ["k"], "v"), empty, ["k"]
-        ).collect()
+        r["event_type"]: (r["n_rows"], float(r["sum_value"]))
+        for r in merge_agg_state(agg_state(a), empty).collect()
     }
     assert same == {"x": (2, 3.5)}
 
@@ -75,12 +69,10 @@ def test_merge_agg_state_disjoint_and_empty_sides(spark):
 def test_merge_agg_state_null_keys_merge(spark):
     from lvm_datapipe_spark.operators.aggregates import agg_state, merge_agg_state
 
-    a = spark.createDataFrame([(None, 1.0), ("x", 5.0)], "k: string, v: double")
-    b = spark.createDataFrame([(None, 2.0)], "k: string, v: double")
-    merged = merge_agg_state(
-        agg_state(a, ["k"], "v"), agg_state(b, ["k"], "v"), ["k"]
-    ).collect()
-    rows = {r["k"]: (r["n_rows"], float(r["sum_value"])) for r in merged}
+    a = spark.createDataFrame([(None, 1.0), ("x", 5.0)], "event_type: string, value: double")
+    b = spark.createDataFrame([(None, 2.0)], "event_type: string, value: double")
+    merged = merge_agg_state(agg_state(a), agg_state(b)).collect()
+    rows = {r["event_type"]: (r["n_rows"], float(r["sum_value"])) for r in merged}
     # NULL is a real group for groupBy, so the merge must combine it too
     assert rows == {None: (2, 3.0), "x": (1, 5.0)}
 

@@ -10,33 +10,35 @@ from lvm_datapipe_spark.operators import bloom as B
 
 
 def test_bitmap_has_no_false_negatives(spark):
-    dim = spark.range(0, 500).select((F.col("id") * 7 + 3).alias("k"))
-    bm = B.bloom_bitmap(dim, "k", m_bits=1 << 14)
+    dim = spark.range(0, 500).select((F.col("id") * 7 + 3).alias("c_custkey"))
+    bm = B.bloom_bitmap(dim, m_bits=1 << 14)
     hits = (
-        dim.filter(B.bloom_might_contain(bm, "k")).count()
+        dim.withColumnRenamed("c_custkey", "o_custkey")
+        .filter(B.bloom_might_contain(bm))
+        .count()
     )
     assert hits == 500  # every inserted key must test positive
 
 
 def test_false_positive_rate_is_bounded(spark):
-    dim = spark.range(0, 1000).select(F.col("id").alias("k"))
-    bm = B.bloom_bitmap(dim, "k", m_bits=1 << 16)
+    dim = spark.range(0, 1000).select(F.col("id").alias("c_custkey"))
+    bm = B.bloom_bitmap(dim, m_bits=1 << 16)
     # probe 10k keys disjoint from the inserted range
-    probes = spark.range(1_000_000, 1_010_000).select(F.col("id").alias("k"))
-    fp = probes.filter(B.bloom_might_contain(bm, "k")).count()
+    probes = spark.range(1_000_000, 1_010_000).select(F.col("id").alias("o_custkey"))
+    fp = probes.filter(B.bloom_might_contain(bm)).count()
     # theoretical fp ~ (1 - e^{-kn/m})^k ~ 0.01% here; allow 100x slack
     assert fp < 100
 
 
 def test_prefiltered_semi_join_equals_plain_semi_join(spark):
     fact = spark.range(0, 20_000).select(
-        (F.col("id") % 4096).alias("fk"), F.col("id").alias("v")
+        (F.col("id") % 4096).alias("o_custkey"), F.col("id").alias("v")
     )
     dim = spark.range(0, 4096).filter(F.col("id") % 37 == 0).select(
-        F.col("id").alias("dk")
+        F.col("id").alias("c_custkey")
     )
-    got = B.bloom_prefiltered_semi_join(fact, dim, "fk", "dk")
-    want = fact.join(dim, fact.fk == dim.dk, "left_semi")
+    got = B.bloom_prefiltered_semi_join(fact, dim)
+    want = fact.join(dim, fact.o_custkey == dim.c_custkey, "left_semi")
     assert sorted(got.collect()) == sorted(want.collect())
 
 
@@ -58,8 +60,8 @@ def test_bloom_filter_runs_below_the_join_exchange(spark):
 
 def test_bitmap_word_layout(spark):
     # a single known key sets exactly n_hashes bits (or fewer on collision)
-    dim = spark.range(0, 1).select(F.lit(12345).alias("k"))
-    bm = B.bloom_bitmap(dim, "k", m_bits=1 << 10, n_hashes=3)
+    dim = spark.range(0, 1).select(F.lit(12345).alias("c_custkey"))
+    bm = B.bloom_bitmap(dim, m_bits=1 << 10, n_hashes=3)
     set_bits = sum(bin(w & (2**64 - 1)).count("1") for w in bm)
     assert 1 <= set_bits <= 3
     assert len(bm) == (1 << 10) // 64

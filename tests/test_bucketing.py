@@ -15,13 +15,13 @@ from lvm_datapipe_spark.plans.bucketing import count_exchanges, write_bucketed
 @pytest.fixture()
 def bucketed_tables(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_quantity"
+        F.col("l_orderkey").alias("clip_id"), "l_extendedprice", "l_quantity"
     )
     orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
+        F.col("o_orderkey").alias("clip_id"), "o_totalprice"
     )
-    write_bucketed(li, "b_lineitem", "l_orderkey", n_buckets=8)
-    write_bucketed(orders, "b_orders", "l_orderkey", n_buckets=8)
+    write_bucketed(li, "b_lineitem", n_buckets=8)
+    write_bucketed(orders, "b_orders", n_buckets=8)
     yield "b_lineitem", "b_orders"
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     spark.sql("DROP TABLE IF EXISTS b_orders")
@@ -30,7 +30,7 @@ def bucketed_tables(spark, sf_dir):
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir, bucketed_tables):
     lt, rt = bucketed_tables
-    joined = spark.table(lt).join(spark.table(rt).hint("merge"), "l_orderkey")
+    joined = spark.table(lt).join(spark.table(rt).hint("merge"), "clip_id")
     assert count_exchanges(joined) == 0  # co-located: no Exchange on either side
     # and it computes the same result as the plain shuffled join
     li = load_table(spark, sf_dir, "lineitem")

@@ -47,4 +47,7 @@ def test_sweep_writes_every_artifact(spark, sf_dir, tmp_path):
     assert all(set(p) == set(census.PHASES) for p in phases.values())
 
     for name in NAMES:
-        assert "Physical Plan" in (Path(paths["explain"]) / f"{name}.txt").read_text()
+        text = (Path(paths["explain"]) / f"{name}.txt").read_text()
+        assert "Physical Plan" in text
+        # expression and plan ids are masked: two sweeps' files diff directly
+        assert "#N" in text and not census.IDS.search(text)

@@ -290,7 +290,6 @@ def test_cli_zorder_and_retention(spark, tmp_path, capsys):
     import glob
 
     from lvm_datapipe_spark import cli
-    from lvm_datapipe_spark.sources.sinks import write_partitioned
 
     src = str(tmp_path / "ev")
     df = spark.createDataFrame(
@@ -308,7 +307,7 @@ def test_cli_zorder_and_retention(spark, tmp_path, capsys):
     assert len(glob.glob(out + "/part-*.parquet")) >= 4
 
     store = str(tmp_path / "store")
-    write_partitioned(df, store, ["day"])
+    df.write.partitionBy("day").parquet(store)
     assert cli.main(
         ["retention", "--table", store, "--partition-col", "day",
          "--keep-from", "2024-02-01"],

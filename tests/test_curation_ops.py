@@ -116,11 +116,14 @@ def test_spillover_budgets_respected_and_deficit_sources_keep_all(spark):
             assert budget >= 1300
 
 
-def test_icl_chain_is_the_greedy_traversal(spark):
+def test_icl_chain_is_the_greedy_traversal(spark, monkeypatch):
     # hand-built 2-D corpus, one quantizer cell: the greedy chain from the
     # lowest id must follow exact nearest-neighbor hops
+    from lvm_datapipe_spark.operators import similarity
     from lvm_datapipe_spark.operators.similarity import icl_chain_order
 
+    monkeypatch.setattr(similarity, "IVF_CELLS", 1)
+    monkeypatch.setattr(similarity, "DEFAULT_DIM", 2)
     vecs = {
         1: [1.0, 0.0],
         2: [0.9, 0.1],
@@ -130,7 +133,7 @@ def test_icl_chain_is_the_greedy_traversal(spark):
     emb = spark.createDataFrame(
         [(k, v) for k, v in vecs.items()], "vec_id long, embedding array<double>"
     )
-    out = icl_chain_order(emb, n_cells=1, dim=2).collect()
+    out = icl_chain_order(emb).collect()
     order = [r.vec_id for r in sorted(out, key=lambda r: r.pos)]
 
     # python reference: same greedy rule
@@ -302,10 +305,14 @@ def test_readability_empty_and_known_doc(spark):
     assert out[2].band == "empty" and out[2].flesch is None
 
 
-def test_kcenter_hand_case(spark):
+def test_kcenter_hand_case(spark, monkeypatch):
     # 2-D, one cell: seed=1; farthest from {1} is 3; then 4 (max min-dist)
+    from lvm_datapipe_spark.operators import similarity
     from lvm_datapipe_spark.operators.similarity import kcenter_coreset
 
+    monkeypatch.setattr(similarity, "KCENTER_K", 3)
+    monkeypatch.setattr(similarity, "IVF_CELLS", 1)
+    monkeypatch.setattr(similarity, "DEFAULT_DIM", 2)
     vecs = {
         1: [1.0, 0.0],
         2: [0.99, 0.14],   # very close to 1
@@ -315,8 +322,7 @@ def test_kcenter_hand_case(spark):
     emb = spark.createDataFrame(
         [(kk, v) for kk, v in vecs.items()], "vec_id long, embedding array<double>"
     )
-    out = sorted(kcenter_coreset(emb, k=3, n_cells=1, dim=2).collect(),
-                 key=lambda r: r.pos)
+    out = sorted(kcenter_coreset(emb).collect(), key=lambda r: r.pos)
     assert [r.vec_id for r in out] == [1, 3, 4]
 
 

@@ -318,7 +318,7 @@ def test_pq_encode_matches_numpy_model(spark):
     dsub = dim // m
     cbs = V.pq_codebooks(m, ksub, dsub, seed)
     codes = emb.select(
-        "vec_id", V.as_double("embedding").alias("nv")
+        "vec_id", V.as_double().alias("nv")
     ).select("vec_id", F.expr(V._pq_codes_sql(cbs, m, dsub)).alias("codes"))
     got = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
     for r in rows:
@@ -702,7 +702,7 @@ def test_mmr_matches_independent_python_model(spark, sf_dir):
         f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet' "
         "WHERE embedding IS NOT NULL"
     ).df()
-    cents = np.array(ivf_fixed_centroids(16, 64, 42))
+    cents = np.array(ivf_fixed_centroids())
     cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     got = {}
     for r in QUERIES["mmr_diverse_selection"](spark, sf_dir).collect():
@@ -760,7 +760,7 @@ def test_mmr_diversifies_beyond_pure_relevance(spark, sf_dir):
         f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet' "
         "WHERE embedding IS NOT NULL"
     ).df()
-    cents = np.array(ivf_fixed_centroids(16, 64, 42))
+    cents = np.array(ivf_fixed_centroids())
     cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     rel, cell_of = {}, {}
     for r in emb.itertuples():

@@ -84,6 +84,12 @@ def _brute_skyline(rows):
     return sorted(keep)
 
 
+def _skyline(df):
+    """pareto_skyline_2d over an ``(id, x, y)`` frame: it reads the orders
+    columns ``o_totalprice`` and ``o_orderdate``."""
+    return pareto_skyline_2d(df.toDF("id", "o_totalprice", "o_orderdate")).toDF("id", "x", "y")
+
+
 def test_skyline_matches_bruteforce_on_orders(spark):
     got = sorted(
         (r.o_orderkey, r.o_totalprice, r.o_orderdate)
@@ -111,7 +117,7 @@ def test_skyline_handles_ties_and_duplicates(spark):
     ]
     df = spark.createDataFrame(rows, "id long, x double, y double")
     got = sorted(
-        (r.id, r.x, r.y) for r in pareto_skyline_2d(df, "x", "y").collect()
+        (r.id, r.x, r.y) for r in _skyline(df).collect()
     )
     assert got == _brute_skyline(rows)
     # duplicates of a frontier point must ALL be returned
@@ -125,22 +131,22 @@ def test_skyline_handles_ties_and_duplicates(spark):
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
 def test_skyline_degenerate_inputs(spark):
     empty = spark.createDataFrame([], "id long, x double, y double")
-    assert pareto_skyline_2d(empty, "x", "y").count() == 0
+    assert _skyline(empty).count() == 0
     one = spark.createDataFrame([(1, 2.0, 3.0)], "id long, x double, y double")
-    assert pareto_skyline_2d(one, "x", "y").collect()[0].id == 1
+    assert _skyline(one).collect()[0].id == 1
     # constant x (hi == lo): frontier is the max-y rows
     const = spark.createDataFrame(
         [(i, 5.0, float(i % 3)) for i in range(9)],
         "id long, x double, y double",
     )
-    got = {r.id for r in pareto_skyline_2d(const, "x", "y").collect()}
+    got = {r.id for r in _skyline(const).collect()}
     assert got == {2, 5, 8}
     # nulls are excluded, not crashed on
     nulls = spark.createDataFrame(
         [(1, None, 1.0), (2, 1.0, None), (3, 1.0, 1.0)],
         "id long, x double, y double",
     )
-    assert [r.id for r in pareto_skyline_2d(nulls, "x", "y").collect()] == [3]
+    assert [r.id for r in _skyline(nulls).collect()] == [3]
 
 
 # ---------------------------------------------------------------------------

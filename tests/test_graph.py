@@ -131,12 +131,12 @@ def test_random_graph_matches_union_find(spark, seed):
 
 def test_keep_representatives(spark):
     docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(6)], ["doc_id", "text"]
+        [(i, f"text {i}") for i in range(6)], ["vec_id", "text"]
     )
     pairs = _pairs(spark, [(0, 3), (3, 5)])  # cluster {0,3,5}; 1,2,4 singletons
     kept = {
-        r.doc_id
-        for r in dedup_keep_representatives(docs, pairs, "doc_id").collect()
+        r.vec_id
+        for r in dedup_keep_representatives(docs, pairs).collect()
     }
     assert kept == {0, 1, 2, 4}
 
@@ -284,9 +284,9 @@ def test_pagerank_empty_edges_returns_empty(spark):
 def test_contiguous_ids_empty_input(spark):
     from lvm_datapipe_spark.operators.relational import contiguous_ids
 
-    empty = spark.createDataFrame([], "k long")
-    out = contiguous_ids(empty, ["k"])
-    assert out.columns == ["k", "row_id"]
+    empty = spark.createDataFrame([], "lang string, doc_id long")
+    out = contiguous_ids(empty)
+    assert out.columns == ["lang", "doc_id", "row_id"]
     assert out.count() == 0
 
 

@@ -17,20 +17,24 @@ calls is unreached.  A package module is reached when another corpus
 file imports it.
 
 ``test_every_option_is_set`` holds the package's parameters to the same
-rule: a defaulted parameter of a top-level function or method is an
-option only when the corpus uses at least two distinct values for it;
-with one value in use it is a constant.  Each matching call uses one
-value: the argument it passes by position or by keyword, or the default
-when it omits the parameter.  A literal, or a name no enclosing function
-or comprehension binds (a module constant such as ``IVF_CELLS``), is
-compared by its source text; any other argument (a parameter, a local or
-loop variable, an expression) may hold any value, and so may a
-``*args`` / ``**kwargs`` forward.  Calls match a definition by name:
-``f(...)``, ``partial(f, ...)``, ``w(...)`` after ``w = f if c else g``,
-``Cls(...)`` for ``__init__``, and ``x.f(...)`` where ``x`` is a name the
-file imports from the package; a method also matches any ``x.m(...)``,
-so a foreign object's method call (a model's ``generate``) sets no
-package function's options.
+rule: a parameter of a top-level function or method, required or
+defaulted, stays only when the corpus uses at least two distinct values
+for it; with one value in use it is a constant.  Each matching call uses
+one value: the argument it passes by position or by keyword, or the
+default when it omits the parameter.  A literal, or a name no enclosing
+function or comprehension binds (a module constant such as
+``IVF_CELLS``), is compared by its source text; any other argument (a
+parameter, a local or loop variable, a name a nested ``def``, ``class``,
+import, ``with ... as`` or ``except ... as`` binds, an expression) may
+hold any value, and so may a ``*args`` / ``**kwargs`` forward.  Two kinds
+of required parameter are exempt: a ``_q``-registered query's, which
+``QUERIES`` calls with every ``sf_dir``, and one no corpus call passes,
+whose function a table dispatches (a CLI handler, a pickler hook).
+Calls match a definition by name: ``f(...)``, ``partial(f, ...)``,
+``w(...)`` after ``w = f if c else g``, ``Cls(...)`` for ``__init__``,
+and ``x.f(...)`` where ``x`` is a name the file imports from the package;
+a method also matches any ``x.m(...)``, so a foreign object's method call
+(a model's ``generate``) sets no package function's options.
 
 Spark-free: AST only.
 """
@@ -55,18 +59,8 @@ ALLOWED = {
     "read_webdataset": "reader the webdataset writer tests check the written shards with",
 }
 
-#: defaulted parameters with fewer than two values in use that stay, with
-#: the reason
+#: parameters with fewer than two values in use that stay, with the reason
 ALLOWED_OPTIONS = {
-    **{
-        f"similarity.{fn}({p})": "fixture size: tests run the kernel on 2-8-dim vectors"
-        for fn, ps in (
-            ("semdedup_keep", ("n_cells", "dim")),
-            ("icl_chain_order", ("n_cells", "dim")),
-            ("kcenter_coreset", ("k", "n_cells", "dim")),
-        )
-        for p in ps
-    },
     "scenecut.pyscenedetect_bounds(scenedetect_mod)": "fake of the optional scenedetect dependency",
     "media.with_sampled_frames(target_hw)": "resize path the score stages keep (ROADMAP item 2)",
     "similarity.embedding_near_dup_pairs(threshold)": (
@@ -238,15 +232,32 @@ def _aliases(tops: list[ast.stmt], modules: set[str]) -> dict[str, set[str]]:
 _COMPS = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
 
 
+def _binds(node: ast.AST) -> set[str]:
+    """The names a statement or expression under a scope binds: a stored
+    name (an assignment, a loop or ``with ... as`` target), a nested
+    ``def`` or ``class``, an import, an ``except ... as``."""
+    if isinstance(node, ast.Name):
+        return {node.id} if isinstance(node.ctx, ast.Store) else set()
+    if isinstance(node, _DEFS):
+        return {node.name}
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return {(a.asname or a.name).split(".")[0] for a in node.names}
+    if isinstance(node, ast.ExceptHandler):
+        return {node.name} if node.name else set()
+    return set()
+
+
 def _scoped_calls(node: ast.AST, bound: frozenset = frozenset()):
     """Every call under ``node``, with the names its enclosing functions
-    and comprehensions bind (parameters, locals, loop targets)."""
+    and comprehensions bind (parameters, locals, loop targets, nested
+    definitions and imports)."""
     if isinstance(node, (*_FUNCS, ast.Lambda, *_COMPS)):
         a = getattr(node, "args", None)
         params = a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg] if a else []
-        bound = bound | {p.arg for p in params if p} | {
-            n.id for n in ast.walk(node) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
-        }
+        bound = bound | {p.arg for p in params if p}
+        for sub in ast.walk(node):
+            if sub is not node:
+                bound |= _binds(sub)
     if isinstance(node, ast.Call):
         yield node, bound
     for child in ast.iter_child_nodes(node):
@@ -299,8 +310,10 @@ def _calls(root: Path = REPO) -> dict[str, list[tuple[list[object], dict[str, ob
 
 
 def _options(root: Path = REPO):
-    """(where, key, callee keys, position or None, parameter, default) for
-    every defaulted parameter of a package function or method."""
+    """(where, key, callee keys, position or None, parameter, default or
+    None) for every parameter of a package function or method but a
+    method's ``self``, ``*args`` and ``**kwargs``; a ``_q``-registered
+    query's required parameters are exempt."""
     package = root / PACKAGE.name
     for path, nodes in _corpus(root).items():
         if package not in path.parents:
@@ -308,7 +321,7 @@ def _options(root: Path = REPO):
         funcs = []
         for top, _, _ in nodes:
             if isinstance(top, _FUNCS):
-                funcs.append((top.name, top, [top.name], 0))
+                funcs.append((top.name, top, [top.name], 0, _registered(top)))
             elif isinstance(top, ast.ClassDef):
                 for sub in top.body:
                     if isinstance(sub, _FUNCS):
@@ -317,16 +330,23 @@ def _options(root: Path = REPO):
                             for d in sub.decorator_list
                         )
                         names = [top.name] if sub.name == "__init__" else [sub.name, "." + sub.name]
-                        funcs.append((f"{top.name}.{sub.name}", sub, names, 0 if static else 1))
-        for qual, fn, names, shift in funcs:
+                        funcs.append(
+                            (f"{top.name}.{sub.name}", sub, names, 0 if static else 1, False)
+                        )
+        for qual, fn, names, shift, query in funcs:
             a = fn.args
             params = a.posonlyargs + a.args
-            first = len(params) - len(a.defaults)
+            defaults = [None] * (len(params) - len(a.defaults)) + a.defaults
             opts = [
                 (p, i - shift, d)
-                for i, (p, d) in enumerate(zip(params[first:], a.defaults), start=first)
+                for i, (p, d) in enumerate(zip(params, defaults))
+                if i >= shift and (d is not None or not query)
             ]
-            opts += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            opts += [
+                (p, None, d)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None or not query
+            ]
             for p, pos, default in opts:
                 yield (
                     f"{path.relative_to(root)}:{fn.lineno}",
@@ -353,11 +373,13 @@ def _unset_options(root: Path = REPO, allowed=ALLOWED_OPTIONS) -> tuple[list[str
                 values.add(args[pos])
             elif param in given:
                 values.add(given[param])
-            elif None in given:
+            elif None in given or default is None:
                 values.add(EVERY)
             else:
                 values.add(_value(default, frozenset()))
-        if EVERY in values or len(values) > 1:
+        if EVERY in values or len(values) > 1 or (default is None and not values):
+            # a required parameter no corpus call passes is a dispatch
+            # target's (a CLI handler table, a pickler hook)
             keys.discard(key)
         elif key not in allowed:
             unset.append(f"{where} {key}")
@@ -448,10 +470,10 @@ def test_an_option_is_set_by_position_keyword_or_forward(tmp_path):
     (pkg / "cli.py").write_text(
         "from lvm_datapipe_spark import ops\n"
         "LIMIT = 9\n"
-        "Q = [ops.q(0, in_loop=n) for n in (LIMIT, 2)]\n"
+        "Q = [ops.q(n, in_loop=n) for n in (LIMIT, 2)]\n"
         "def main(model, *args, **kw):\n"
         "    ops.f(0, 7, by_kw=8, default_only=4)\n"
-        "    ops.f(0, by_pos=args)\n"
+        "    ops.f(model, by_pos=args)\n"
         "    ops.k(0, one_other=0, by_const=LIMIT)\n"
         "    ops.k(1, 0, LIMIT)\n"
         "    ops.g(*args)\n"
@@ -473,3 +495,76 @@ def test_an_option_is_set_by_position_keyword_or_forward(tmp_path):
         "ops.k(one_other)",
     ]
     assert stale == ["ops.g(fwd)"]
+
+
+def test_a_required_parameter_is_set_like_an_option(tmp_path):
+    """A required parameter that every call passes one literal or one
+    module constant is unset; a parameter, a local, a loop variable or a
+    nested ``def`` passed to it sets it, and so does a name an import or
+    a ``with``/``except ... as`` binds.  A ``_q``-registered query's
+    required parameters are exempt, and so are those of a function no
+    call reaches (a dispatch table's)."""
+    pkg = tmp_path / PACKAGE.name
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "ops.py").write_text(
+        "def one_lit(df, col):\n"
+        "    return df\n"
+        "def one_const(df, n):\n"
+        "    return df\n"
+        "def by_param(df, col):\n"
+        "    return df\n"
+        "def by_local(df, col):\n"
+        "    return df\n"
+        "def by_loop(df, col):\n"
+        "    return df\n"
+        "def by_closure(df, fn):\n"
+        "    return df\n"
+        "def by_binding(df, a, b, c):\n"
+        "    return df\n"
+        "def dispatched(spark, args):\n"
+        "    return args\n"
+        "HANDLERS = {'x': dispatched}\n"
+    )
+    (pkg / "queries.py").write_text(
+        "def _q(name):\n"
+        "    return lambda f: f\n"
+        "@_q('query')\n"
+        "def query(spark, sf_dir):\n"
+        "    return sf_dir\n"
+        "@_q('other')\n"
+        "def other(spark, sf_dir):\n"
+        "    return sf_dir\n"
+        "def helper(spark, sf_dir):\n"
+        "    return sf_dir\n"
+        "def run(spark):\n"
+        "    return query(spark, 'sf1'), helper(spark, 'sf1')\n"
+    )
+    (pkg / "cli.py").write_text(
+        "from lvm_datapipe_spark import ops\n"
+        "WIDTH = 9\n"
+        "def main(df, col):\n"
+        "    ops.one_lit(df, 'k')\n"
+        "    ops.one_lit(df, col='k')\n"
+        "    ops.one_const(df, WIDTH)\n"
+        "    ops.by_param(df, col)\n"
+        "    name = col.upper()\n"
+        "    ops.by_local(df, name)\n"
+        "    for c in ('a', 'b'):\n"
+        "        ops.by_loop(df, c)\n"
+        "    def scorer(x):\n"
+        "        return x\n"
+        "    ops.by_closure(df, scorer)\n"
+        "    import json as codec\n"
+        "    with open(col) as fh:\n"
+        "        try:\n"
+        "            pass\n"
+        "        except ValueError as err:\n"
+        "            ops.by_binding(df, codec, fh, err)\n"
+    )
+    unset, _ = _unset_options(tmp_path, allowed={})
+    assert sorted(u.split()[1] for u in unset) == [
+        "ops.one_const(n)",
+        "ops.one_lit(col)",
+        "queries.helper(sf_dir)",
+    ]

@@ -26,7 +26,7 @@ def test_pack_layout_exact(spark, ctx_len):
     # stream: 100 + 100 + 300 + 600 tokens, ctx 256
     df = _sized(spark, [(1, 100), (2, 100), (3, 300), (4, 600)])
     ctx_len(256)
-    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens").collect()}
+    out = {r.doc_id: r for r in pack_sequences(df).collect()}
     assert (out[1].start_offset, out[1].pack_id, out[1].pack_offset, out[1].n_packs) == (0, 0, 0, 1)
     assert (out[2].start_offset, out[2].pack_id, out[2].pack_offset, out[2].n_packs) == (100, 0, 100, 1)
     # doc 3: tokens 200..499 → spans packs 0 and 1
@@ -42,7 +42,7 @@ def test_pack_sharded_independent_streams(spark, ctx_len):
         cols=("doc_id", "lang", "n_tokens"),
     )
     ctx_len(128)
-    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens").collect()}
+    out = {r.doc_id: r for r in pack_sequences(df).collect()}
     assert out[3].start_offset == 0  # shard b starts its own stream
     assert out[2].start_offset == 100
 
@@ -50,7 +50,7 @@ def test_pack_sharded_independent_streams(spark, ctx_len):
 def test_zero_token_doc(spark, ctx_len):
     df = _sized(spark, [(1, 0), (2, 50)])
     ctx_len(64)
-    out = {r.doc_id: r for r in pack_sequences(df, "n_tokens").collect()}
+    out = {r.doc_id: r for r in pack_sequences(df).collect()}
     assert out[1].n_packs == 1 and out[1].start_offset == 0
     assert out[2].start_offset == 0  # empty doc consumes no stream space
 
@@ -70,7 +70,7 @@ def _window_tokens(packed, ctx_len):
 def test_utilization_full_windows(spark, ctx_len):
     df = _sized(spark, [(1, 100), (2, 100), (3, 300), (4, 524)])  # total 1024 = 4x256
     ctx_len(256)
-    packed = pack_sequences(df, "n_tokens")
+    packed = pack_sequences(df)
     # the stream exactly fills every window
     assert _window_tokens(packed, 256) == {0: 256, 1: 256, 2: 256, 3: 256}
 
@@ -78,16 +78,16 @@ def test_utilization_full_windows(spark, ctx_len):
 def test_utilization_partial_tail(spark, ctx_len):
     df = _sized(spark, [(1, 300)])
     ctx_len(256)
-    packed = pack_sequences(df, "n_tokens")
+    packed = pack_sequences(df)
     assert _window_tokens(packed, 256) == {0: 256, 1: 44}
 
 
 def test_deterministic_under_repartition(spark):
     rows = [(i, (i * 37) % 91 + 1) for i in range(200)]
     df = _sized(spark, rows)
-    a = {(r.doc_id, r.pack_id, r.pack_offset) for r in pack_sequences(df, "n_tokens").collect()}
+    a = {(r.doc_id, r.pack_id, r.pack_offset) for r in pack_sequences(df).collect()}
     b = {
         (r.doc_id, r.pack_id, r.pack_offset)
-        for r in pack_sequences(df.repartition(13), "n_tokens").collect()
+        for r in pack_sequences(df.repartition(13)).collect()
     }
     assert a == b

@@ -145,9 +145,7 @@ def test_asof_matches_python_model(spark, rows):
     )
     got = {
         r.event_id: r.view_id
-        for r in asof_join(
-            purchases, views, "user_id", "ts", "ts", ["view_id"], tie_col="view_id"
-        ).collect()
+        for r in asof_join(purchases, views, ["view_id"], tie_col="view_id").collect()
     }
     # python model: for each purchase, view with max (ts, id) where ts <= p.ts
     by_user = defaultdict(list)
@@ -221,12 +219,12 @@ def test_scd2_merge_matches_python_model(spark, cur, upd):
 def test_bloom_prefilter_never_changes_the_join(spark, keys):
     from lvm_datapipe_spark.operators import bloom as B
 
-    fact = spark.range(0, 200).selectExpr("id % 64 AS fk", "id AS v")
+    fact = spark.range(0, 200).selectExpr("id % 64 AS o_custkey", "id AS v")
     dim = spark.createDataFrame(
-        [(k,) for k in keys] or [(None,)], "dk long"
-    ).filter("dk IS NOT NULL")
-    got = B.bloom_prefiltered_semi_join(fact, dim, "fk", "dk")
-    want = fact.join(dim, fact.fk == dim.dk, "left_semi")
+        [(k,) for k in keys] or [(None,)], "c_custkey long"
+    ).filter("c_custkey IS NOT NULL")
+    got = B.bloom_prefiltered_semi_join(fact, dim)
+    want = fact.join(dim, fact.o_custkey == dim.c_custkey, "left_semi")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
@@ -279,7 +277,9 @@ points_st = st.lists(
 def test_binned_range_join_equals_naive_model(spark, pts, ivs, width):
     """Bin-and-residual must be EXACT for any bin width: same pairs as the
     quadratic python model, no dupes, no misses."""
-    from lvm_datapipe_spark.operators.asof import binned_range_join
+    from unittest import mock
+
+    from lvm_datapipe_spark.operators import asof
 
     pdf = spark.createDataFrame(
         [(i, t) for i, t in enumerate(pts)], "pid: int, t: int"
@@ -288,10 +288,10 @@ def test_binned_range_join_equals_naive_model(spark, pts, ivs, width):
         [(j, a, a + span) for j, (a, span) in enumerate(ivs)],
         "iv: int, t0: int, t1: int",
     )
-    got = sorted(
-        (r["pid"], r["iv"])
-        for r in binned_range_join(pdf, idf, "t", "t0", "t1", width).collect()
-    )
+    with mock.patch.object(asof, "RANGE_BIN_WIDTH", width):
+        got = sorted(
+            (r["pid"], r["iv"]) for r in asof.binned_range_join(pdf, idf).collect()
+        )
     want = sorted(
         (i, j)
         for i, t in enumerate(pts)
@@ -319,14 +319,14 @@ def test_temporal_join_matches_version_model(spark, fact_ts, boundaries):
         for i, b in enumerate(bounds)
     ]
     vdf = spark.createDataFrame(
-        versions, "k: int, attr: string, valid_from: int, valid_to: int"
+        versions, "doc_id: int, attr: string, valid_from: int, valid_to: int"
     )
     fdf = spark.createDataFrame(
-        [(i, 1, t) for i, t in enumerate(fact_ts)], "fid: int, k: int, t: int"
+        [(i, 1, t) for i, t in enumerate(fact_ts)], "fid: int, doc_id: int, ts: int"
     )
     got = {
         r["fid"]: r["attr"]
-        for r in temporal_join(fdf, vdf, "k", "t").collect()
+        for r in temporal_join(fdf, vdf).collect()
     }
 
     def model(t):
@@ -404,7 +404,10 @@ def test_pareto_skyline_matches_bruteforce(spark, pts):
 
     rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)]
     df = spark.createDataFrame(rows, "id long, x double, y double")
-    got = sorted(r.id for r in pareto_skyline_2d(df, "x", "y").collect())
+    got = sorted(
+        r.id
+        for r in pareto_skyline_2d(df.toDF("id", "o_totalprice", "o_orderdate")).collect()
+    )
     want = sorted(
         i
         for i, x, y in rows

@@ -7,6 +7,7 @@ import pytest
 
 from lvm_datapipe_spark.functions import strings as S
 from lvm_datapipe_spark.operators import aggregates as A
+from lvm_datapipe_spark.operators import asof
 from lvm_datapipe_spark.operators import relational as R
 
 
@@ -69,18 +70,16 @@ def test_extract_answer_words(spark):
 
 
 def test_frame_sampling_indices(spark):
-    df = spark.createDataFrame([(100,)], ["n"])
-    row = df.select(
-        S.frame_indices_at_fractions("n", [0.2, 0.5, 0.8]).alias("fr"),
-    ).first()
+    df = spark.createDataFrame([(100,)], ["frame_count"])
+    row = df.select(S.frame_indices_at_fractions().alias("fr")).first()
     assert row.fr == [20, 50, 80]  # coca_caption.py:44 policy
 
 
 def test_best_per_group_tiebreak(spark):
     rows = [("v1", "c1", 5.0), ("v1", "c2", 5.0), ("v2", "c3", 1.0)]
-    df = spark.createDataFrame(rows, ["video_id", "clip_id", "score"])
-    out = R.best_per_group(df, "video_id", "score", "clip_id")
-    got = {(r.video_id, r.clip_id) for r in out.collect()}
+    df = spark.createDataFrame(rows, ["o_custkey", "o_orderkey", "o_totalprice"])
+    out = R.best_per_group(df)
+    got = {(r.o_custkey, r.o_orderkey) for r in out.collect()}
     assert got == {("v1", "c1"), ("v2", "c3")}
 
 
@@ -104,15 +103,12 @@ def test_asof_join_fills_right_row_atomically(spark):
     right row and takes all its values, like the join-then-rank oracle."""
     from lvm_datapipe_spark.operators.asof import asof_join
 
-    left = spark.createDataFrame([("u", 100)], ["k", "t"])
+    left = spark.createDataFrame([("u", 100)], ["user_id", "ts"])
     right = spark.createDataFrame(
         [("u", 10, "old_a", "old_b"), ("u", 50, None, "new_b")],
-        ["k", "t", "va", "vb"],
+        ["user_id", "ts", "va", "vb"],
     )
-    out = asof_join(
-        left, right, key="k", left_ts="t", right_ts="t",
-        right_values=["va", "vb"], tie_col="vb",
-    ).collect()
+    out = asof_join(left, right, right_values=["va", "vb"], tie_col="vb").collect()
     assert len(out) == 1
     r = out[0]
     # newest right row (t=50) atomically: va stays NULL, vb is new_b
@@ -122,12 +118,9 @@ def test_asof_join_fills_right_row_atomically(spark):
 def test_asof_join_no_right_match_is_all_null(spark):
     from lvm_datapipe_spark.operators.asof import asof_join
 
-    left = spark.createDataFrame([("u", 5)], ["k", "t"])
-    right = spark.createDataFrame([("u", 50, "a", "b")], ["k", "t", "va", "vb"])
-    out = asof_join(
-        left, right, key="k", left_ts="t", right_ts="t",
-        right_values=["va", "vb"], tie_col="vb",
-    ).collect()
+    left = spark.createDataFrame([("u", 5)], ["user_id", "ts"])
+    right = spark.createDataFrame([("u", 50, "a", "b")], ["user_id", "ts", "va", "vb"])
+    out = asof_join(left, right, right_values=["va", "vb"], tie_col="vb").collect()
     assert len(out) == 1 and out[0].va is None and out[0].vb is None
 
 
@@ -137,18 +130,15 @@ def test_asof_join_forward_direction(spark):
     from lvm_datapipe_spark.operators.asof import asof_join
 
     left = spark.createDataFrame(
-        [("u", 50), ("u", 100), ("u", 300)], ["k", "t"]
+        [("u", 50), ("u", 100), ("u", 300)], ["user_id", "ts"]
     )
     right = spark.createDataFrame(
         [("u", 40, "past"), ("u", 100, "b_tie"), ("u", 100, "a_tie"), ("u", 200, "later")],
-        ["k", "t", "va"],
+        ["user_id", "ts", "va"],
     )
     out = {
-        r.t: r.va
-        for r in asof_join(
-            left, right, key="k", left_ts="t", right_ts="t",
-            right_values=["va"], direction="forward",
-        ).collect()
+        r.ts: r.va
+        for r in asof_join(left, right, right_values=["va"], direction="forward").collect()
     }
     assert out[50] == "a_tie"   # skips the past row, takes earliest future
     assert out[100] == "a_tie"  # equal ts matches; least tie wins
@@ -185,7 +175,7 @@ def _brj_fixtures(spark):
 
 
 @pytest.mark.slow  # >=7 s equivalence test (r11 tier split)
-def test_binned_range_join_matches_naive(spark):
+def test_binned_range_join_matches_naive(spark, monkeypatch):
     from lvm_datapipe_spark.operators.asof import binned_range_join
 
     pts, ivs = _brj_fixtures(spark)
@@ -196,19 +186,21 @@ def test_binned_range_join_matches_naive(spark):
         .collect()
     }
     for width in (1, 7, 10, 1000):  # exactness must not depend on the width
+        monkeypatch.setattr(asof, "RANGE_BIN_WIDTH", width)
         got = {
             (r["pid"], r["iv_id"])
-            for r in binned_range_join(pts, ivs, "t", "t0", "t1", width).collect()
+            for r in binned_range_join(pts, ivs).collect()
         }
         assert got == naive, f"width={width}"
 
 
-def test_binned_range_join_is_hash_join(spark):
+def test_binned_range_join_is_hash_join(spark, monkeypatch):
     from lvm_datapipe_spark.operators.asof import binned_range_join
 
+    monkeypatch.setattr(asof, "RANGE_BIN_WIDTH", 10)
     pts, ivs = _brj_fixtures(spark)
     plan = (
-        binned_range_join(pts, ivs, "t", "t0", "t1", 10)
+        binned_range_join(pts, ivs)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan
@@ -224,10 +216,10 @@ def test_contiguous_ids_match_global_row_number(spark):
     from lvm_datapipe_spark.operators.relational import contiguous_ids
 
     rows = [(k, f"g{k % 3}") for k in (7, 1, 9, 4, 2, 8, 0, 5, 3, 6)]
-    df = spark.createDataFrame(rows, ["k", "g"])
+    df = spark.createDataFrame(rows, ["doc_id", "lang"])
     got = {
-        r["k"]: r["row_id"]
-        for r in contiguous_ids(df, ["g", "k"]).collect()
+        r["doc_id"]: r["row_id"]
+        for r in contiguous_ids(df).collect()
     }
     expected_order = sorted(rows, key=lambda r: (r[1], r[0]))
     assert got == {k: i for i, (k, _) in enumerate(expected_order)}
@@ -236,11 +228,11 @@ def test_contiguous_ids_match_global_row_number(spark):
 def test_contiguous_ids_stable_under_input_layout(spark):
     from lvm_datapipe_spark.operators.relational import contiguous_ids
 
-    df = spark.createDataFrame([(i,) for i in range(97)], ["k"])
-    a = {r["k"]: r["row_id"] for r in contiguous_ids(df, ["k"]).collect()}
+    df = spark.createDataFrame([("en", i) for i in range(97)], ["lang", "doc_id"])
+    a = {r["doc_id"]: r["row_id"] for r in contiguous_ids(df).collect()}
     b = {
-        r["k"]: r["row_id"]
-        for r in contiguous_ids(df.repartition(13), ["k"]).collect()
+        r["doc_id"]: r["row_id"]
+        for r in contiguous_ids(df.repartition(13)).collect()
     }
     assert a == b == {i: i for i in range(97)}
 
@@ -248,18 +240,19 @@ def test_contiguous_ids_stable_under_input_layout(spark):
 def test_contiguous_ids_no_single_partition_exchange(spark):
     from lvm_datapipe_spark.operators.relational import contiguous_ids
 
-    df = spark.createDataFrame([(i,) for i in range(50)], ["k"])
+    df = spark.createDataFrame([("en", i) for i in range(50)], ["lang", "doc_id"])
     plan = (
-        contiguous_ids(df, ["k"])
+        contiguous_ids(df)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange SinglePartition" not in plan
     assert "Window" not in plan
 
 
-def test_binned_range_join_exact_beyond_double_precision(spark):
+def test_binned_range_join_exact_beyond_double_precision(spark, monkeypatch):
     from lvm_datapipe_spark.operators.asof import binned_range_join
 
+    monkeypatch.setattr(asof, "RANGE_BIN_WIDTH", 3)
     # epoch-nanosecond scale: 2^53 + k are NOT representable as doubles —
     # float binning would misbin and silently drop true matches
     base = 2**53
@@ -271,18 +264,19 @@ def test_binned_range_join_exact_beyond_double_precision(spark):
     )
     got = sorted(
         (r["pid"], r["iv"])
-        for r in binned_range_join(pts, ivs, "t", "t0", "t1", 3).collect()
+        for r in binned_range_join(pts, ivs).collect()
     )
     assert got == [(1, 7), (2, 7)]
 
 
-def test_binned_range_join_negative_values_floor_bins(spark):
+def test_binned_range_join_negative_values_floor_bins(spark, monkeypatch):
     from lvm_datapipe_spark.operators.asof import binned_range_join
 
+    monkeypatch.setattr(asof, "RANGE_BIN_WIDTH", 2)
     # integer floor division must round toward -inf (DIV truncates): the
     # point -1 and interval [-2, 0] share bin -1 at width 2
     pts = spark.createDataFrame([(1, -1)], "pid: long, t: long")
     ivs = spark.createDataFrame([(9, -2, 0)], "iv: long, t0: long, t1: long")
     assert [(r["pid"], r["iv"])
-            for r in binned_range_join(pts, ivs, "t", "t0", "t1", 2).collect()
+            for r in binned_range_join(pts, ivs).collect()
             ] == [(1, 9)]

@@ -54,7 +54,7 @@ def test_split_subdivision_preserves_earlier_splits(spark):
 
 def test_stratified_fractions(spark):
     docs = _docs(spark)
-    out = stratified_sample(docs, "lang", "doc_id", {"en": 0.2})
+    out = stratified_sample(docs)
     kept = out.groupBy("lang").agg(F.count("*").alias("n")).collect()
     by = {r.lang: r.n for r in kept}
     n_en = docs.filter(F.col("lang") == "en").count()
@@ -97,17 +97,19 @@ def test_leakage_safe_split_keeps_near_dups_together(spark):
         assert split_of[p.id_a] == split_of[p.id_b]
 
 
-def test_sample_k_per_group(spark):
+def test_sample_k_per_group(spark, monkeypatch):
+    from lvm_datapipe_spark.operators import sampling
     from lvm_datapipe_spark.operators.sampling import sample_k_per_group
 
+    monkeypatch.setattr(sampling, "SAMPLE_K", 5)
     docs = _docs(spark)  # lang en for doc_id%3!=0, fr otherwise
-    out = sample_k_per_group(docs, "lang", "doc_id", 5)
+    out = sample_k_per_group(docs)
     by = {}
     for r in out.collect():
         by.setdefault(r.lang, set()).add(r.doc_id)
     assert len(by["en"]) == 5 and len(by["fr"]) == 5
     # deterministic: identical selection on a repartitioned input
-    out2 = sample_k_per_group(docs.repartition(11), "lang", "doc_id", 5)
+    out2 = sample_k_per_group(docs.repartition(11))
     by2 = {}
     for r in out2.collect():
         by2.setdefault(r.lang, set()).add(r.doc_id)
@@ -124,10 +126,10 @@ def test_weighted_sample_stable_under_repartition(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "keep_p", F.least(F.col("n_chars") / 400.0, F.lit(1.0))
     )
-    a = {r.doc_id for r in weighted_sample(docs, "doc_id", "keep_p").collect()}
+    a = {r.doc_id for r in weighted_sample(docs).collect()}
     b = {
         r.doc_id
-        for r in weighted_sample(docs.repartition(7), "doc_id", "keep_p").collect()
+        for r in weighted_sample(docs.repartition(7)).collect()
     }
     assert a == b and 0 < len(a) < docs.count()
 
@@ -135,6 +137,7 @@ def test_weighted_sample_stable_under_repartition(spark, sf_dir):
 def test_weighted_sample_extremes(spark):
     from lvm_datapipe_spark.operators.sampling import weighted_sample
 
-    df = spark.createDataFrame([(i, 0.0, 1.0) for i in range(50)], ["k", "p0", "p1"])
-    assert weighted_sample(df, "k", "p0").count() == 0   # p=0 keeps nothing
-    assert weighted_sample(df, "k", "p1").count() == 50  # p=1 keeps all
+    df = spark.createDataFrame([(i, 0.0, 1.0) for i in range(50)], ["doc_id", "p0", "p1"])
+    p0, p1 = (df.withColumnRenamed(p, "keep_p") for p in ("p0", "p1"))
+    assert weighted_sample(p0).count() == 0   # p=0 keeps nothing
+    assert weighted_sample(p1).count() == 50  # p=1 keeps all

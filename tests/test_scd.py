@@ -107,7 +107,7 @@ def _versions(spark):
             (1, "a-v1", 20, None),
             (2, "b-v0", 15, None),
         ],
-        ["k", "attr", "valid_from", "valid_to"],
+        ["doc_id", "attr", "valid_from", "valid_to"],
     )
 
 
@@ -116,11 +116,11 @@ def test_temporal_join_picks_version_at_fact_time(spark):
 
     facts = spark.createDataFrame(
         [(100, 1, 12), (101, 1, 20), (102, 1, 99), (103, 2, 16)],
-        ["fid", "k", "t"],
+        ["fid", "doc_id", "ts"],
     )
     out = {
         r["fid"]: r["attr"]
-        for r in temporal_join(facts, _versions(spark), "k", "t").collect()
+        for r in temporal_join(facts, _versions(spark)).collect()
     }
     # t=12 → v0; t=20 → boundary belongs to the NEW version (from <= t < to);
     # t=99 → open row
@@ -130,8 +130,8 @@ def test_temporal_join_picks_version_at_fact_time(spark):
 def test_temporal_join_left_keeps_prehistoric_facts(spark):
     from lvm_datapipe_spark.operators.scd import temporal_join
 
-    facts = spark.createDataFrame([(1, 1, 5), (2, 2, 14)], ["fid", "k", "t"])
-    rows = temporal_join(facts, _versions(spark), "k", "t").collect()
+    facts = spark.createDataFrame([(1, 1, 5), (2, 2, 14)], ["fid", "doc_id", "ts"])
+    rows = temporal_join(facts, _versions(spark)).collect()
     assert {r["fid"]: r["attr"] for r in rows} == {1: None, 2: None}
 
 
@@ -139,9 +139,9 @@ def test_temporal_join_no_fanout_and_hash_join(spark):
     from lvm_datapipe_spark.operators.scd import temporal_join
 
     facts = spark.createDataFrame(
-        [(i, 1, 10 + i % 30) for i in range(50)], ["fid", "k", "t"]
+        [(i, 1, 10 + i % 30) for i in range(50)], ["fid", "doc_id", "ts"]
     )
-    out = temporal_join(facts, _versions(spark), "k", "t")
+    out = temporal_join(facts, _versions(spark))
     assert out.count() == 50  # well-formed SCD2 → exactly one row per fact
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan

@@ -29,13 +29,15 @@ class TestSemDeDup:
         )
 
         dim = 8
-        cents = ivf_fixed_centroids(4, dim, seed=42)
+        monkeypatch.setattr(V, "IVF_CELLS", 4)
+        monkeypatch.setattr(V, "DEFAULT_DIM", dim)
+        cents = ivf_fixed_centroids()
         # two near-identical vectors (cos ~ 1) plus one unrelated
         base = [1.0, 0.5, -0.25, 2.0, 0.0, 0.0, 1.0, -1.0]
         near = [x * 1.001 + (0.001 if i == 0 else 0.0) for i, x in enumerate(base)]
         other = [-5.0, 4.0, 3.0, -2.0, 1.0, 6.0, -7.0, 0.5]
         monkeypatch.setattr(V, "SEMDEDUP_EPS", 0.95)
-        out = semdedup_keep(_emb_df(spark, [base, near, other]), n_cells=4, dim=dim).collect()
+        out = semdedup_keep(_emb_df(spark, [base, near, other])).collect()
         rows = {r.vec_id: r for r in out}
         assert rows[2].keep  # unrelated vector untouched
         # exactly one of the near-dup pair survives; the survivor has the
@@ -65,7 +67,9 @@ class TestSemDeDup:
         dim = 8
         vecs = [[float(i + 1)] * dim for i in range(5)]  # all cos == 1 pairs
         monkeypatch.setattr(V, "SEMDEDUP_EPS", 1.01)
-        out = semdedup_keep(_emb_df(spark, vecs), n_cells=4, dim=dim)
+        monkeypatch.setattr(V, "IVF_CELLS", 4)
+        monkeypatch.setattr(V, "DEFAULT_DIM", dim)
+        out = semdedup_keep(_emb_df(spark, vecs))
         assert out.filter(~F.col("keep")).count() == 0
 
     def test_colinear_group_keeps_exactly_one(self, spark, monkeypatch):
@@ -75,7 +79,9 @@ class TestSemDeDup:
         v = [2.0, -1.0, 0.5, 3.0, -2.0, 1.0, 0.25, -0.5]
         vecs = [[x * s for x in v] for s in (1.0, 2.0, 3.0)]  # cos == 1 chain
         monkeypatch.setattr(V, "SEMDEDUP_EPS", 0.99)
-        rows = semdedup_keep(_emb_df(spark, vecs), n_cells=4, dim=dim).collect()
+        monkeypatch.setattr(V, "IVF_CELLS", 4)
+        monkeypatch.setattr(V, "DEFAULT_DIM", dim)
+        rows = semdedup_keep(_emb_df(spark, vecs)).collect()
         kept = [r for r in rows if r.keep]
         # colinear vectors share a cell; exactly one survives — the minimum
         # by (centroid_sim, vec_id).  (Scaling a vector wobbles its cosine in
@@ -298,9 +304,7 @@ class TestQuantileSketch:
         ev = load_table(spark, "/root/testdata/sf0.001", "events")
         est = {
             r.event_type: r.median_est
-            for r in sketch_median(
-                quantile_sketch(ev, "value", "event_type"), "event_type"
-            ).collect()
+            for r in sketch_median(quantile_sketch(ev)).collect()
         }
         exact = {
             r.event_type: (r.med, r.w)
@@ -333,7 +337,7 @@ class TestQuantileSketch:
         from lvm_datapipe_spark.operators.aggregates import quantile_sketch
 
         ev = load_table(spark, "/root/testdata/sf0.001", "events")
-        whole = quantile_sketch(ev, "value", "event_type").toPandas()
+        whole = quantile_sketch(ev).toPandas()
         edges = whole[["event_type", "mn", "width", "n"]].drop_duplicates()
         merged: dict = {}
         for p in (0, 1):

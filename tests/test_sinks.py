@@ -11,14 +11,14 @@ from lvm_datapipe_spark.sources.sinks import write_partitioned
 def test_dynamic_overwrite_replaces_only_incoming_partitions(spark, tmp_path):
     p = str(tmp_path / "tbl")
     full = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], ["id", "part", "v"]
+        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], ["id", "split", "v"]
     )
-    write_partitioned(full, p, ["part"])
+    write_partitioned(full, p)
     # reprocess ONLY partition 'b' with a corrected value
-    fixed_b = spark.createDataFrame([(2, "b", 99.0)], ["id", "part", "v"])
-    write_partitioned(fixed_b, p, ["part"])
+    fixed_b = spark.createDataFrame([(2, "b", 99.0)], ["id", "split", "v"])
+    write_partitioned(fixed_b, p)
     got = {
-        (r.id, r.part, r.v) for r in spark.read.parquet(p).collect()
+        (r.id, r.split, r.v) for r in spark.read.parquet(p).collect()
     }
     # a and c survive, b replaced — NOT truncated to just b
     assert got == {(1, "a", 10.0), (2, "b", 99.0), (3, "c", 30.0)}
@@ -27,14 +27,14 @@ def test_dynamic_overwrite_replaces_only_incoming_partitions(spark, tmp_path):
 def test_retention_sweep_drops_only_expired_partitions(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from lvm_datapipe_spark.sources.sinks import retention_sweep, write_partitioned
+    from lvm_datapipe_spark.sources.sinks import retention_sweep
 
     df = spark.createDataFrame(
         [(d, i) for i, d in enumerate(["2024-01-01", "2024-02-01", "2024-03-01", "2024-04-01"])],
         "day string, v long",
     )
     out = str(tmp_path / "store")
-    write_partitioned(df, out, ["day"])
+    df.write.partitionBy("day").parquet(out)
 
     # dry run: reports, deletes nothing
     assert retention_sweep(out, "day", "2024-03-01", dry_run=True) == [

@@ -300,16 +300,18 @@ def test_stream_temporal_enrich_matches_batch(spark, landing_dir):
             (uid, f"tier-late-{uid}", "2024-01-15T00:00:00", None)
             for uid in range(0, 40)
         ],
-        "user_id long, tier string, valid_from string, valid_to string",
+        "doc_id long, tier string, valid_from string, valid_to string",
     ).select(
-        "user_id",
+        "doc_id",
         "tier",
         F.to_timestamp("valid_from").alias("valid_from"),
         F.to_timestamp("valid_to").alias("valid_to"),
     )
 
-    stream = _read_events(spark, landing_dir).select("event_id", "ts", "user_id")
-    out = temporal_join(stream, versions, key="user_id", fact_ts="ts")
+    stream = _read_events(spark, landing_dir).select(
+        "event_id", "ts", F.col("user_id").alias("doc_id")
+    )
+    out = temporal_join(stream, versions)
     assert out.isStreaming
     q = _to_memory(out, "temporal_enrich", output_mode="append")
     _await(q)
@@ -319,11 +321,9 @@ def test_stream_temporal_enrich_matches_batch(spark, landing_dir):
     }
     batch = temporal_join(
         load_table(spark, "/root/testdata/sf0.001", "events").select(
-            "event_id", "ts", "user_id"
+            "event_id", "ts", F.col("user_id").alias("doc_id")
         ),
         versions,
-        key="user_id",
-        fact_ts="ts",
     )
     want = {(r.event_id, r.tier) for r in batch.collect()}
     assert got == want
@@ -451,3 +451,14 @@ def test_stream_sink_rows_independent_of_state_partitions(spark, monkeypatch):
     b = QUERIES["stream_sink_tumbling_window"](spark, sf)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_stream_sink_queries_remove_their_temp_dirs(spark, sf_dir, monkeypatch, tmp_path):
+    # the sink result is materialized before the query returns, so no
+    # landing, sink or checkpoint dir outlives a run
+    from lvm_datapipe_spark.queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path))
+    for name in ("stream_sink_tumbling_window", "stream_sink_session_window"):
+        assert QUERIES[name](spark, sf_dir).collect()
+    assert list(tmp_path.iterdir()) == []

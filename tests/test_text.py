@@ -119,9 +119,9 @@ def test_normalize_text_idempotent_and_engine_shape(spark):
         ("....",),
         ("é ü ñ",),  # non-ascii strips entirely
     ]
-    df = spark.createDataFrame(rows, ["t"])
-    once = df.select(normalize_text("t").alias("n1"))
-    twice = once.select(once.n1.alias("t")).select(normalize_text("t").alias("n2"))
+    df = spark.createDataFrame(rows, ["text"])
+    once = df.select(normalize_text().alias("n1"))
+    twice = once.select(once.n1.alias("text")).select(normalize_text().alias("n2"))
     for a, b in zip(once.collect(), twice.collect()):
         assert a.n1 == b.n2
         assert re.fullmatch(r"([a-z0-9]+( [a-z0-9]+)*)?", a.n1), repr(a.n1)

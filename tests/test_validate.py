@@ -36,12 +36,12 @@ def test_unique_check_counts_extra_rows(spark):
 
 
 def test_ref_check_counts_orphans(spark):
-    fact = spark.createDataFrame([(1,), (2,), (9,), (9,)], "fk long")
-    dim = spark.createDataFrame([(1,), (2,), (3,)], "pk long")
-    r = V.ref_check(fact, "fk", dim, "pk", "fk_refs").first()
+    fact = spark.createDataFrame([(1,), (2,), (9,), (9,)], "o_custkey long")
+    dim = spark.createDataFrame([(1,), (2,), (3,)], "c_custkey long")
+    r = V.ref_check(fact, dim).first()
     assert (r["violations"], r["n_checked"]) == (2, 4)
     plan = (
-        V.ref_check(fact, "fk", dim, "pk", "fk_refs")
+        V.ref_check(fact, dim)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -9,7 +9,10 @@ both timed, and run by the actions its artifacts need.  Flags pick them:
 - ``--plan-audit PATH``: PLAN_AUDIT.md, the operator counts of each plan;
 - ``--times PATH``: build plus noop sink per query (``times``, the shape
   ``tools/bench_compare.py`` gates) and ``phases`` (build, plan, exec);
-- ``--explain DIR``: ``DIR/<query>.txt``, the formatted physical plan.
+- ``--explain DIR``: ``DIR/<query>.txt``, the formatted physical plan with
+  its expression ids (``#12``), plan ids (``plan_id=3``) and RDD ids
+  (``MapPartitionsRDD[93]``, a checkpointed scan) masked, so the files of
+  two sweeps diff directly.
 
 ``--passes N`` keeps each phase's minimum of N runs; the rest comes from the
 first.  Exit code 1 on any Spark, DuckDB or oracle failure, or when the
@@ -25,6 +28,7 @@ import argparse
 import json
 import math
 import os
+import re
 import sys
 import time
 
@@ -36,6 +40,8 @@ sys.path.insert(0, REPO)
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 PHASES = ("build_s", "plan_s", "exec_s")
+#: the session-dependent ids of explain text that ``--explain`` masks
+IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -250,7 +256,8 @@ def sweep(spark, sf_dir: str, names: list[str] | None = None, *,
                         row = audit_row(name, plan)
                         if explain:
                             with open(os.path.join(explain, f"{name}.txt"), "w") as f:
-                                f.write(df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"))
+                                text = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+                                f.write(IDS.sub(r"\1N", text))
                         if correctness:
                             sdf = df.toPandas()
                 run = (t1 - t0, t2 - t1, t3 - t2)
