@@ -38,6 +38,10 @@ __all__ = [
 ]
 
 _WORD = 64
+#: bitmap size in bits (a multiple of 64) and hash count; the functions
+#: read them at call time
+BLOOM_M_BITS = 1 << 16
+BLOOM_N_HASHES = 3
 
 
 def _position_sql(key_sql: str, i: int, m_bits: int) -> str:
@@ -45,19 +49,21 @@ def _position_sql(key_sql: str, i: int, m_bits: int) -> str:
     return f"pmod(xxhash64({key_sql}, {i}), {m_bits})"
 
 
-def bloom_bitmap(dim: DataFrame, m_bits: int = 1 << 16, n_hashes: int = 3) -> list[int]:
-    """Aggregate the dim side's qualifying ``c_custkey`` keys into an m-bit
-    Bloom bitmap, returned as a list of m/64 longs.
+def bloom_bitmap(dim: DataFrame) -> list[int]:
+    """Aggregate the dim side's qualifying ``c_custkey`` keys into an
+    m-bit (``BLOOM_M_BITS``) Bloom bitmap with k (``BLOOM_N_HASHES``)
+    positions per key, returned as a list of m/64 longs.
 
     Distributed shape: each key row emits its k bit positions (narrow),
     then ONE keyed aggregate ORs the per-word masks together — map-side
     partial bit_or means each executor sends at most m/64 rows.  The
-    collect is bounded by m (a build parameter), never by the key count.
+    collect is bounded by m (a build constant), never by the key count.
     """
-    if m_bits % _WORD:
-        raise ValueError("m_bits must be a multiple of 64")
+    m_bits = BLOOM_M_BITS
     n_words = m_bits // _WORD
-    pos_arr = ",".join(_position_sql("c_custkey", i, m_bits) for i in range(n_hashes))
+    pos_arr = ",".join(
+        _position_sql("c_custkey", i, m_bits) for i in range(BLOOM_N_HASHES)
+    )
     words = (
         dim.selectExpr(f"explode(array({pos_arr})) AS p")
         .selectExpr(
@@ -74,16 +80,16 @@ def bloom_bitmap(dim: DataFrame, m_bits: int = 1 << 16, n_hashes: int = 3) -> li
     return bitmap
 
 
-def bloom_might_contain(bitmap: list[int], n_hashes: int = 3) -> Column:
+def bloom_might_contain(bitmap: list[int]) -> Column:
     """Membership test of ``o_custkey`` against a literal bitmap — pure JVM
     expression.  The bitmap folds into one array literal inside a single
-    F.expr parse; each of the k positions checks its bit with
-    shiftright/AND.
+    F.expr parse; each of the k (``BLOOM_N_HASHES``) positions checks its
+    bit with shiftright/AND.
     """
     m_bits = len(bitmap) * _WORD
     arr = "array(" + ",".join(f"CAST({w} AS BIGINT)" for w in bitmap) + ")"
     checks = []
-    for i in range(n_hashes):
+    for i in range(BLOOM_N_HASHES):
         p = _position_sql("o_custkey", i, m_bits)
         word = f"element_at({arr}, CAST(({p}) / {_WORD} AS INT) + 1)"
         checks.append(
@@ -102,10 +108,7 @@ def bloom_prefiltered_semi_join(fact: DataFrame, dim: DataFrame) -> DataFrame:
     that follows.  What changes is the shuffle volume: only fact rows whose
     key might be in the dim survive to the exchange.
     """
-    m_bits = 1 << 16
-    n_hashes = 3
-    bitmap = bloom_bitmap(dim, m_bits=m_bits, n_hashes=n_hashes)
-    pre = fact.filter(bloom_might_contain(bitmap, n_hashes))
+    pre = fact.filter(bloom_might_contain(bloom_bitmap(dim)))
     return pre.join(dim, pre["o_custkey"] == dim["c_custkey"], "left_semi")
 
 

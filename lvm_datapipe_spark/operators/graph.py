@@ -20,8 +20,11 @@ driver union-find.  The engine history (min-label propagation, pointer
 jumping and graph pre-contraction, each measured and retired) is in
 SCALE_BENCH.md §16, §17 and §19.
 
-k-core has ONE engine, :func:`kcore`: the decremental peel (SCALE_BENCH
-§18, §20 and §20b hold the retired recompute engine's history).
+k-core has ONE distributed engine, :func:`kcore`: the decremental peel
+(SCALE_BENCH §18, §20 and §20b hold the retired recompute engine's
+history).  Below the dense basket gates the same peel runs on the driver
+from the collected basket table (:func:`kcore_driver_dense_from_baskets`,
+SCALE_BENCH §21f) and returns the same rows.
 """
 
 from __future__ import annotations
@@ -277,8 +280,7 @@ def kcore(edges: DataFrame, stats: dict | None = None) -> DataFrame:
     )
     rounds = checks = 0
     converged = False
-    max_rounds = KCORE_MAX_ROUNDS
-    for _ in range(max_rounds):
+    for _ in range(KCORE_MAX_ROUNDS):
         checks += 1
         n_doomed = seen["n_doomed"]
         if n_doomed == 0:
@@ -305,24 +307,9 @@ def kcore(edges: DataFrame, stats: dict | None = None) -> DataFrame:
             )
         )
         rounds += 1
-    if not converged and seen["n_rows"] == 0:
-        # an EMPTY state table is definitionally the fixpoint (nothing left
-        # to peel)
-        converged = True
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"kcore(k={k}) hit max_rounds={max_rounds} before the peel "
-            "fixpoint — the result is NOT a converged k-core (raise "
-            "KCORE_MAX_ROUNDS); stats['converged'] is False",
-            UserWarning,
-            stacklevel=2,
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["checks"] = checks
-        stats["converged"] = converged
+    # an EMPTY state table is definitionally the fixpoint (nothing left to
+    # peel)
+    _kcore_exit(converged or seen["n_rows"] == 0, rounds, checks, stats)
     out = (
         # on a NON-converged exit an alive node whose last neighbor died in
         # the closing round has degree 0: drop it (the core_degree >= 1
@@ -333,6 +320,25 @@ def kcore(edges: DataFrame, stats: dict | None = None) -> DataFrame:
         .localCheckpoint()
     )
     return out
+
+
+def _kcore_exit(converged: bool, rounds: int, checks: int, stats: dict | None):
+    """The shared exit of both k-core peels: warn on a non-converged exit
+    and fill ``stats`` (``rounds``, ``checks``, ``converged``)."""
+    if not converged:
+        import warnings
+
+        warnings.warn(
+            f"kcore(k={KCORE_K}) hit max_rounds={KCORE_MAX_ROUNDS} before "
+            "the peel fixpoint — the result is NOT a converged k-core (raise "
+            "KCORE_MAX_ROUNDS); stats['converged'] is False",
+            UserWarning,
+            stacklevel=3,
+        )
+    if stats is not None:
+        stats["rounds"] = rounds
+        stats["checks"] = checks
+        stats["converged"] = converged
 
 
 #: pagerank's fixed iteration count (the SQL replay unrolls as many steps)
@@ -694,13 +700,14 @@ def triangle_counts(
     Below the :func:`triangle_counts_driver_dense` gates the counts come
     from the driver bitset kernel (identical integers, one bounded
     collect instead of the wedge join — see its docstring); the wedge
-    engine below is the scale shape above the gates."""
-    e = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("bb")
-    ).persist()
-    dense = triangle_counts_driver_dense(e, "a", "bb")
+    engine below is the scale shape above the gates.  The edge list is
+    an eager :func:`observed_checkpoint` whose own job counts the rows
+    the gate reads, so the gate runs no count job."""
+    e, seen = observed_checkpoint(
+        edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("bb"))
+    )
+    dense = triangle_counts_driver_dense(e, seen["n_rows"], "a", "bb")
     if dense is not None:
-        e.unpersist()
         spark = edges.sparkSession
         node_t = edges.schema[a_col].dataType
         schema = T.StructType(
@@ -795,6 +802,7 @@ def _popcount16_lut():
 
 def triangle_counts_driver_dense(
     edges: DataFrame,
+    n_rows: int,
     a_col: str = "id_a",
     b_col: str = "id_b",
 ) -> list[tuple[int, int]] | None:
@@ -808,7 +816,9 @@ def triangle_counts_driver_dense(
     ``edges`` is an undirected edge list with no self-loops; DUPLICATE rows
     are fine (deduplicated after the remap), which lets callers skip their
     edge-distinct exchange on the fast path — the edge gate then bounds the
-    raw COLLECT size, its actual job.  Node ids may be any orderable type
+    raw COLLECT size, its actual job.  ``n_rows`` is ``edges``' row count
+    as the caller already knows it without a job (observed on the job that
+    built ``edges``); the edge gate reads it.  Node ids may be any orderable type
     (ints here; strings work via the same remap).  Returns
     ``[(node, n_triangles), ...]`` for every node in >=1 triangle, or
     ``None`` when the graph exceeds either gate (the caller then runs its
@@ -835,7 +845,7 @@ def triangle_counts_driver_dense(
     import numpy as np
     import pandas as pd
 
-    if edges.count() > DENSE_TRIANGLE_MAX_EDGES:
+    if n_rows > DENSE_TRIANGLE_MAX_EDGES:
         return None
     pdf = edges.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("b")
@@ -859,18 +869,34 @@ def triangle_counts_driver_dense(
     return list(zip(nodes[keep].tolist(), cnt[keep].tolist()))
 
 
+def _dedupe_pairs(ia, ib, n):
+    """Each unordered pair of remapped endpoint codes (``0 <= ia, ib < n``)
+    once, self-loops dropped: ``(lo, hi)`` with ``lo < hi``, sorted."""
+    import numpy as np
+
+    key = np.unique(np.minimum(ia, ib) * n + np.maximum(ia, ib))
+    lo, hi = key // n, key % n
+    keep = lo != hi
+    return lo[keep], hi[keep]
+
+
+def _concat_ranges(starts, lens):
+    """``concatenate([arange(s, s + l) for s, l in zip(starts, lens)])``
+    without the Python loop (``lens >= 0``, int64)."""
+    import numpy as np
+
+    offs = np.cumsum(lens) - lens
+    return np.arange(lens.sum(), dtype=np.int64) - np.repeat(offs - starts, lens)
+
+
 def _dense_tri_sweep(ia, ib, n):
     """The numpy core of the dense driver kernel: per-node triangle counts
     from REMAPPED pair endpoints (``0 <= ia, ib < n``; duplicates and
-    self-loops tolerated — deduped on the pair key).  Returns an
+    self-loops tolerated — :func:`_dedupe_pairs`).  Returns an
     ``int64[n]`` count vector."""
     import numpy as np
 
-    # dedupe (and drop residual self-loops) on the remapped pair key
-    key = np.unique(np.minimum(ia, ib) * n + np.maximum(ia, ib))
-    ia, ib = key // n, key % n
-    keep = ia != ib
-    ia, ib = ia[keep], ib[keep]
+    ia, ib = _dedupe_pairs(ia, ib, n)
     # symmetric adjacency as packed bits: byte matrix (duplicate-safe
     # constant assignment) -> packbits rows, padded to an even byte width
     # so the sweep can gather uint16 words (half the lookups of the r11
@@ -899,16 +925,17 @@ def _dense_tri_sweep(ia, ib, n):
 
 def triangle_counts_driver_dense_from_baskets(
     baskets: DataFrame,
+    row_bound: int | None,
 ) -> list[tuple[int, int]] | None:
     """Dense driver triangle counts straight from a BASKET table (each row
-    one (``l_orderkey``, ``l_suppkey``); items distinct within an order):
-    the co-occurrence pair stream the distributed engines self-join for is
+    one (basket, item); items distinct within a basket): the
+    co-occurrence pair stream the distributed engines self-join for is
     generated ON THE DRIVER by :func:`_dense_basket_pairs` — the collect
     ships the basket rows (sum k, HALF the bytes of the pair stream at this
     corpus) and no pair-join job runs at all.  Returns the same
     ``[(item, n_triangles), ...]`` contract as
     :func:`triangle_counts_driver_dense`, or ``None`` above a gate."""
-    got = _dense_basket_pairs(baskets)
+    got = _dense_basket_pairs(baskets, row_bound)
     if got is None:
         return None
     ia, ib, nodes = got
@@ -920,69 +947,111 @@ def triangle_counts_driver_dense_from_baskets(
     return list(zip(nodes[keep].tolist(), cnt[keep].tolist()))
 
 
-def _dense_basket_pairs(baskets: DataFrame):
-    """The dense basket graph both driver kernels start from: gate, collect
-    the (``l_orderkey``, ``l_suppkey``) basket table, and generate its
-    within-basket co-occurrence pairs on the driver.  Returns
-    ``(ia, ib, nodes)`` with remapped endpoint codes
-    (``0 <= ia, ib < len(nodes)``; each unordered pair once per basket
-    containing it), or ``None`` above a gate.
+def _dense_basket_pairs(baskets: DataFrame, row_bound: int | None):
+    """The dense basket graph the driver kernels start from: gate, collect
+    the two-column (basket, item) table, and generate its within-basket
+    co-occurrence pairs on the driver.  Returns ``(ia, ib, nodes)`` with
+    remapped endpoint codes (``0 <= ia, ib < len(nodes)``; each unordered
+    pair once per basket containing it), or ``None`` above a gate.
 
-    The edge gate runs BEFORE the collect, as ONE small aggregate: the
-    within-basket pair cardinality sum k·(k−1)/2 (exactly the
-    co-occurrence join's output size) and the basket row count must both
-    clear ``DENSE_TRIANGLE_MAX_EDGES``.  The node gate
-    (``DENSE_TRIANGLE_MAX_NODES``) is checked on the collected rows."""
+    No gate runs a job.  ``row_bound`` is an upper bound on ``baskets``'
+    rows the caller knows without one (the lineitem parquet footers,
+    ``catalog.lineitem_row_count``); above ``DENSE_TRIANGLE_MAX_EDGES``,
+    or when unknown (``None``), the kernel declines before the collect.
+    Otherwise the collect is the one job, and the collected rows are
+    checked before any pair is built: the within-basket pair count
+    Σ k·(k−1)/2 (exactly the co-occurrence self-join's output size)
+    against ``DENSE_TRIANGLE_MAX_EDGES`` and the item count against
+    ``DENSE_TRIANGLE_MAX_NODES``.  A row with a NULL basket or item is
+    dropped, as the distributed self-join's equality and item filters
+    drop it."""
     import numpy as np
     import pandas as pd
 
-    gate = (
-        baskets.groupBy("l_orderkey")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .agg(
-            F.sum(F.col("k") * (F.col("k") - 1) / 2).alias("pairs"),
-            F.sum("k").alias("rows"),
-        )
-        .collect()[0]
-    )
-    n_pairs = int(gate["pairs"] or 0)
-    n_rows = int(gate["rows"] or 0)
-    if n_pairs > DENSE_TRIANGLE_MAX_EDGES or n_rows > DENSE_TRIANGLE_MAX_EDGES:
+    if row_bound is None or row_bound > DENSE_TRIANGLE_MAX_EDGES:
         return None
-    pdf = baskets.select(
-        F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("i")
-    ).toPandas()
-    if len(pdf) == 0:
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int64),
-        )
-    o = pdf["o"].to_numpy()
+    o_col, i_col = baskets.columns
+    pdf = (
+        baskets.where(F.col(o_col).isNotNull() & F.col(i_col).isNotNull())
+        .select(F.col(o_col).alias("o"), F.col(i_col).alias("i"))
+        .toPandas()
+    )
+    oc, _ = pd.factorize(pdf["o"].to_numpy())
+    sizes = np.bincount(oc).astype(np.int64)
+    if int((sizes * (sizes - 1) // 2).sum()) > DENSE_TRIANGLE_MAX_EDGES:
+        return None
     inv, nodes = pd.factorize(pdf["i"].to_numpy())
     nodes = np.asarray(nodes)
-    n = len(nodes)
-    if n > DENSE_TRIANGLE_MAX_NODES:
+    if len(nodes) > DENSE_TRIANGLE_MAX_NODES:
         return None
-    # group items by basket (stable sort on the factorized order id keeps
-    # this O(rows log rows) with a tiny constant), then emit every within-
-    # basket pair with the classic repeat/cumsum ranges construction: the
-    # element at local index L pairs with the L elements before it.
-    oc, _ = pd.factorize(o)
-    srt = np.argsort(oc, kind="stable")
-    items = inv[srt].astype(np.int64)
-    sizes = np.bincount(oc)
-    starts = np.concatenate([[0], np.cumsum(sizes)[:-1]])
-    loc = np.arange(len(items), dtype=np.int64) - np.repeat(starts, sizes)
-    b_idx = np.repeat(np.arange(len(items), dtype=np.int64), loc)
-    csum = np.concatenate([[0], np.cumsum(loc)])
-    within = np.arange(csum[-1], dtype=np.int64) - np.repeat(csum[:-1], loc)
-    a_idx = np.repeat(np.arange(len(items), dtype=np.int64) - loc, loc) + within
-    return items[a_idx], items[b_idx], nodes
+    # group items by basket (stable sort on the factorized basket id), then
+    # pair the element at local index L with the L elements before it
+    items = inv[np.argsort(oc, kind="stable")].astype(np.int64)
+    idx = np.arange(len(items), dtype=np.int64)
+    loc = idx - np.repeat(np.cumsum(sizes) - sizes, sizes)
+    return items[_concat_ranges(idx - loc, loc)], items[np.repeat(idx, loc)], nodes
+
+
+def kcore_driver_dense_from_baskets(
+    baskets: DataFrame,
+    row_bound: int | None,
+    stats: dict | None,
+) -> list[tuple[int, int]] | None:
+    """The :func:`kcore` peel of a METADATA-SIZED basket co-occurrence
+    graph, run on the driver: :func:`_dense_basket_pairs` collects the
+    basket table and builds the within-basket pairs (same gates, same
+    ``None`` fallback contract as the dense triangle kernel), the pairs
+    are deduped (:func:`_dedupe_pairs`), and the peel runs on a CSR
+    adjacency with a numpy degree vector.
+
+    The peel is the round-synchronous form of the O(m) core peel of
+    Batagelj & Zaversnik (arXiv cs/0310049) and gives exactly
+    :func:`kcore`'s result: each round removes the whole doomed frontier
+    (alive degree < ``KCORE_K``) and subtracts, per surviving neighbor,
+    the edges it lost to that frontier (only the frontier's CSR rows are
+    read, so the work over all rounds is O(m)); it stops after
+    ``KCORE_MAX_ROUNDS`` rounds with the same ``converged`` rule,
+    ``UserWarning`` and ``stats`` keys, an emptied state counting as
+    converged; and it returns ``[(node, core_degree), ...]`` for the alive
+    nodes with ``core_degree >= 1``.
+
+    Scale shape: one collect of the basket rows, O(m) numpy memory; above
+    a gate the caller runs :func:`kcore`, the scale plan."""
+    import numpy as np
+
+    got = _dense_basket_pairs(baskets, row_bound)
+    if got is None:
+        return None
+    ia, ib, nodes = got
+    n = len(nodes)
+    lo, hi = _dedupe_pairs(ia, ib, n)
+    src = np.concatenate([lo, hi])
+    nbr = np.concatenate([hi, lo])[np.argsort(src, kind="stable")]
+    n_nbrs = np.bincount(src, minlength=n).astype(np.int64)
+    first = np.cumsum(n_nbrs) - n_nbrs
+    deg = n_nbrs.copy()
+    # a node is in the state table when it has an edge
+    alive = n_nbrs > 0
+    rounds = checks = 0
+    converged = False
+    for _ in range(KCORE_MAX_ROUNDS):
+        checks += 1
+        doomed = np.flatnonzero(alive & (deg < KCORE_K))
+        if len(doomed) == 0:
+            converged = True
+            break
+        alive[doomed] = False
+        lost = nbr[_concat_ranges(first[doomed], n_nbrs[doomed])]
+        deg -= np.bincount(lost, minlength=n)
+        rounds += 1
+    _kcore_exit(converged or not alive.any(), rounds, checks, stats)
+    keep = alive & (deg >= 1)
+    return list(zip(nodes[keep].tolist(), deg[keep].tolist()))
 
 
 def khop_reachability_driver_dense_from_baskets(
     baskets: DataFrame,
+    row_bound: int | None,
 ) -> list[tuple[int, int, int]] | None:
     """Bounded-depth BFS on a METADATA-SIZED co-occurrence graph, computed
     on the driver with the packed-bitset adjacency — the k-hop sibling of
@@ -1004,7 +1073,7 @@ def khop_reachability_driver_dense_from_baskets(
     table the triangle kernel already ships."""
     import numpy as np
 
-    got = _dense_basket_pairs(baskets)
+    got = _dense_basket_pairs(baskets, row_bound)
     if got is None:
         return None
     ia, ib, nodes = got

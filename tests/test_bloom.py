@@ -9,9 +9,11 @@ from pyspark.sql import functions as F
 from lvm_datapipe_spark.operators import bloom as B
 
 
-def test_bitmap_has_no_false_negatives(spark):
+def test_bitmap_has_no_false_negatives(spark, monkeypatch):
+    monkeypatch.setattr(B, "BLOOM_M_BITS", 1 << 14)
     dim = spark.range(0, 500).select((F.col("id") * 7 + 3).alias("c_custkey"))
-    bm = B.bloom_bitmap(dim, m_bits=1 << 14)
+    bm = B.bloom_bitmap(dim)
+    assert len(bm) == (1 << 14) // 64
     hits = (
         dim.withColumnRenamed("c_custkey", "o_custkey")
         .filter(B.bloom_might_contain(bm))
@@ -22,7 +24,7 @@ def test_bitmap_has_no_false_negatives(spark):
 
 def test_false_positive_rate_is_bounded(spark):
     dim = spark.range(0, 1000).select(F.col("id").alias("c_custkey"))
-    bm = B.bloom_bitmap(dim, m_bits=1 << 16)
+    bm = B.bloom_bitmap(dim)
     # probe 10k keys disjoint from the inserted range
     probes = spark.range(1_000_000, 1_010_000).select(F.col("id").alias("o_custkey"))
     fp = probes.filter(B.bloom_might_contain(bm)).count()
@@ -58,10 +60,16 @@ def test_bloom_filter_runs_below_the_join_exchange(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bitmap_word_layout(spark):
-    # a single known key sets exactly n_hashes bits (or fewer on collision)
+def test_bitmap_word_layout(spark, monkeypatch):
+    # a single known key sets exactly n_hashes bits (or fewer on collision),
+    # and the membership test reads the same constants back
+    monkeypatch.setattr(B, "BLOOM_M_BITS", 1 << 10)
     dim = spark.range(0, 1).select(F.lit(12345).alias("c_custkey"))
-    bm = B.bloom_bitmap(dim, m_bits=1 << 10, n_hashes=3)
-    set_bits = sum(bin(w & (2**64 - 1)).count("1") for w in bm)
-    assert 1 <= set_bits <= 3
-    assert len(bm) == (1 << 10) // 64
+    probe = dim.withColumnRenamed("c_custkey", "o_custkey")
+    for n_hashes in (1, 3):
+        monkeypatch.setattr(B, "BLOOM_N_HASHES", n_hashes)
+        bm = B.bloom_bitmap(dim)
+        set_bits = sum(bin(w & (2**64 - 1)).count("1") for w in bm)
+        assert 1 <= set_bits <= n_hashes
+        assert len(bm) == (1 << 10) // 64
+        assert probe.filter(B.bloom_might_contain(bm)).count() == 1

@@ -1,13 +1,15 @@
 """Build-phase Spark jobs of the queries whose plans read one intermediate
 more than once.
 
-Such an intermediate (the capped basket table, the k-core symmetric edge
-list, the LSH bucket and unit-vector tables, the MinHash band table) is an
+Such an intermediate (the capped basket table, the LSH bucket and
+unit-vector tables, the MinHash band table) is an
 eager ``localCheckpoint``, not a ``persist()`` (ARCHITECTURE.md §3): it is
 built once, inside the query build, and leaves nothing in the cache
 manager.  No size gate in these builds runs a count job of its own: each
 reads its count from an Observation on the checkpoint that builds its
-input, or from the table's parquet footers (ARCHITECTURE.md §3).  The job
+input, from the table's parquet footers or from the rows it collects
+(ARCHITECTURE.md §3); at this scale graph_kcore_parts peels on the driver
+from the collected basket table.  The job
 counts below are exact, like the CLI stage counts in tests/test_cli.py: a
 count that moves means the build's plan moved.
 """
@@ -23,7 +25,9 @@ from lvm_datapipe_spark.queries import QUERIES, _capped_baskets
 #: Spark jobs each query's build (``QUERIES[name](spark, sf)``) launches
 #: at the fixture's sf0.001
 BUILD_JOBS = {
-    "graph_kcore_parts": 7,
+    "graph_kcore_parts": 2,
+    "graph_supplier_triangles": 2,
+    "graph_triangle_counts": 5,
     "dedup_clusters": 9,
     "range_partition_boundaries": 1,
 }

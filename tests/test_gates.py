@@ -50,7 +50,7 @@ GATED = {
     "graph_reachability_3hop": DENSE,
     "graph_triangle_counts": DENSE,
     "graph_clustering_coefficient": DENSE,
-    "graph_kcore_parts": {(graph, "KCORE_BROADCAST_DOOMED_MAX"): ALWAYS},
+    "graph_kcore_parts": {**DENSE, (graph, "KCORE_BROADCAST_DOOMED_MAX"): ALWAYS},
     "range_partition_boundaries": PCT,
     "sketch_bottomk_quantile_sample": PCT,
     # the token mask is one 64-bit word: 64 is the widest the fast side takes

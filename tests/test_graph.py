@@ -3,6 +3,8 @@ PageRank, triangle counts and the dense driver kernels."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
 from unittest import mock
 
 import pytest
@@ -33,6 +35,18 @@ def _kcore(edges, k, max_rounds=graph.KCORE_MAX_ROUNDS, **kwargs):
     cap at ``max_rounds``."""
     with mock.patch.multiple(graph, KCORE_K=k, KCORE_MAX_ROUNDS=max_rounds):
         return graph.kcore(edges.toDF("p1", "p2"), **kwargs)
+
+
+def _kcore_driver(spark, edge_rows, k, max_rounds=graph.KCORE_MAX_ROUNDS,
+                  stats=None, item_type="long"):
+    """The driver peel (kcore_driver_dense_from_baskets) of ``edge_rows``,
+    each edge given as a two-item basket, as a ``{(node, core_degree)}``
+    set."""
+    rows = [(i, x) for i, edge in enumerate(edge_rows) for x in edge]
+    baskets = spark.createDataFrame(rows, f"l_orderkey long, l_partkey {item_type}")
+    with mock.patch.multiple(graph, KCORE_K=k, KCORE_MAX_ROUNDS=max_rounds):
+        got = graph.kcore_driver_dense_from_baskets(baskets, len(rows), stats)
+    return set(got)
 
 
 def _pairs(spark, rows):
@@ -359,7 +373,9 @@ def test_triangle_counts_deterministic_under_repartition_and_orientation(spark):
 def test_dense_driver_triangles_match_brute_force(spark, edges):
     from lvm_datapipe_spark.operators.graph import triangle_counts_driver_dense
 
-    rows = triangle_counts_driver_dense(_pairs(spark, edges), "id_a", "id_b")
+    rows = triangle_counts_driver_dense(
+        _pairs(spark, edges), len(edges), "id_a", "id_b"
+    )
     assert rows is not None
     assert dict(rows) == _brute_triangles(edges)
 
@@ -371,7 +387,7 @@ def test_dense_driver_triangles_dedupe_duplicate_rows(spark):
 
     edges = [(1, 2), (2, 3), (1, 3)]
     dup = _pairs(spark, edges + edges + edges[:1])
-    assert dict(triangle_counts_driver_dense(dup, "id_a", "id_b")) == {
+    assert dict(triangle_counts_driver_dense(dup, 7, "id_a", "id_b")) == {
         1: 1, 2: 1, 3: 1
     }
 
@@ -382,9 +398,9 @@ def test_dense_driver_triangles_gate_returns_none(spark, monkeypatch):
     df = _pairs(spark, [(1, 2), (2, 3), (1, 3)])
     with monkeypatch.context() as m:
         m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 2)
-        assert triangle_counts_driver_dense(df, "id_a", "id_b") is None
+        assert triangle_counts_driver_dense(df, 3, "id_a", "id_b") is None
     monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", 2)
-    assert triangle_counts_driver_dense(df, "id_a", "id_b") is None
+    assert triangle_counts_driver_dense(df, 3, "id_a", "id_b") is None
 
 
 def test_dense_driver_triangles_match_distributed_engine(spark, monkeypatch):
@@ -401,7 +417,7 @@ def test_dense_driver_triangles_match_distributed_engine(spark, monkeypatch):
     edges = {tuple(sorted(rng.sample(range(40), 2))) for _ in range(220)}
     edges = sorted(edges)
     df = _pairs(spark, edges)
-    dense = dict(triangle_counts_driver_dense(df, "id_a", "id_b"))
+    dense = dict(triangle_counts_driver_dense(df, len(edges), "id_a", "id_b"))
     monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", -1)
     dist = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert dense == dist == _brute_triangles(edges)
@@ -427,9 +443,11 @@ def test_dense_driver_triangles_from_baskets_match_edge_kernel(spark):
         rows.extend((order, i) for i in items)
         edge_set |= {tuple(sorted(p)) for p in itertools.combinations(items, 2)}
     baskets = spark.createDataFrame(rows, "l_orderkey long, l_suppkey long")
-    via_baskets = triangle_counts_driver_dense_from_baskets(baskets)
+    via_baskets = triangle_counts_driver_dense_from_baskets(baskets, len(rows))
     edges = sorted(edge_set)
-    via_edges = triangle_counts_driver_dense(_pairs(spark, edges), "id_a", "id_b")
+    via_edges = triangle_counts_driver_dense(
+        _pairs(spark, edges), len(edges), "id_a", "id_b"
+    )
     assert dict(via_baskets) == dict(via_edges) == _brute_triangles(edges)
 
 
@@ -441,15 +459,28 @@ def test_dense_driver_triangles_from_baskets_gates(spark, monkeypatch):
     baskets = spark.createDataFrame(
         [(1, 10), (1, 11), (1, 12), (2, 10), (2, 11)], "l_orderkey long, l_suppkey long"
     )
-    # pairs = 3 + 1 = 4; rows = 5
+    # pairs = 3 + 1 = 4; rows = 5: the row bound declines before the collect
     with monkeypatch.context() as m:
-        m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 3)
-        assert triangle_counts_driver_dense_from_baskets(baskets) is None
+        m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 4)
+        assert triangle_counts_driver_dense_from_baskets(baskets, 5) is None
+    assert triangle_counts_driver_dense_from_baskets(baskets, None) is None
     with monkeypatch.context() as m:
         m.setattr(graph, "DENSE_TRIANGLE_MAX_NODES", 2)
-        assert triangle_counts_driver_dense_from_baskets(baskets) is None
-    out = triangle_counts_driver_dense_from_baskets(baskets)
+        assert triangle_counts_driver_dense_from_baskets(baskets, 5) is None
+    out = triangle_counts_driver_dense_from_baskets(baskets, 5)
     assert dict(out) == {10: 1, 11: 1, 12: 1}
+    # one 4-item basket: rows = 4 clear the bound, pairs = 6 are checked on
+    # the collected rows
+    k4 = spark.createDataFrame(
+        [(1, 10), (1, 11), (1, 12), (1, 13)], "l_orderkey long, l_suppkey long"
+    )
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 5)
+        assert triangle_counts_driver_dense_from_baskets(k4, 4) is None
+        m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", 6)
+        assert dict(triangle_counts_driver_dense_from_baskets(k4, 4)) == {
+            10: 3, 11: 3, 12: 3, 13: 3
+        }
 
 
 def test_khop_driver_dense_matches_brute_force(spark):
@@ -464,7 +495,7 @@ def test_khop_driver_dense_matches_brute_force(spark):
         rows += [(i, i), (i, i + 1)]
     rows += [(100, 0), (100, 5), (100, 9)]  # hub basket {0, 5, 9}
     baskets = spark.createDataFrame(rows, "l_orderkey long, l_suppkey long")
-    out = khop_reachability_driver_dense_from_baskets(baskets)
+    out = khop_reachability_driver_dense_from_baskets(baskets, len(rows))
     # brute force in python
     import itertools
     from collections import defaultdict
@@ -571,6 +602,53 @@ def test_supplier_triangles_sparse_graph_emits_no_zero_rows(
     assert out.collect() == []
 
 
+#: lineitem rows (orderkey, partkey, suppkey) with a NULL order key and a
+#: NULL item: order 1 is a part and supplier K4 with a NULL part and a
+#: NULL supplier row; the NULL-order rows would close extra triangles and
+#: edges if NULL keys formed a basket
+NULL_KEY_LINEITEM = [
+    (1, 1, 1), (1, 2, 2), (1, 3, 3), (1, 4, None), (1, None, 4),
+    (2, 4, 1), (2, 5, 5),
+    (None, 5, 2), (None, 6, 5), (None, 7, 1), (None, 1, 3),
+    (3, 5, 6),
+]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["graph_supplier_triangles", "graph_reachability_3hop", "graph_kcore_parts"],
+)
+def test_dense_basket_queries_drop_null_keys(spark, monkeypatch, tmp_path, name):
+    """A row with a NULL basket or item joins no basket: the driver kernels
+    (default gates) and the distributed engines (a negative edge gate)
+    return the same rows as the DuckDB oracle over a lineitem with a NULL
+    order key and a NULL item."""
+    import duckdb
+
+    from lvm_datapipe_spark.queries import ORACLE_SQL, QUERIES
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    import census
+
+    _write_lineitem(spark, tmp_path, NULL_KEY_LINEITEM)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/lineitem.parquet/*.parquet')"
+    )
+    oracle = con.execute(ORACLE_SQL[name]).df()
+    con.close()
+    assert len(oracle) > 0
+    sides = []
+    for edge_gate in (graph.DENSE_TRIANGLE_MAX_EDGES, -1):
+        with monkeypatch.context() as m:
+            m.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", edge_gate)
+            pdf = QUERIES[name](spark, str(tmp_path)).toPandas()
+        assert census.compare(name, pdf, oracle) == [], edge_gate
+        sides.append(pdf)
+    assert census.compare(name, sides[0], sides[1]) == []
+
+
 # -- converged k-core (VERDICT r7 item 5) ------------------------------------
 
 
@@ -607,6 +685,9 @@ def test_kcore_matches_reference_fixpoint(spark):
     }
     assert got == set(_kcore_reference(rows, 2).items())
     assert stats["rounds"] <= 30 and stats["checks"] >= 1
+    st: dict = {}
+    assert _kcore_driver(spark, rows, 2, stats=st) == got
+    assert st == stats
 
 
 def test_kcore_empty_core(spark):
@@ -668,11 +749,18 @@ def test_kcore_query_surfaces_nonconvergence_as_false_column(spark, tmp_path):
         ok += 1
     _write_lineitem(spark, tmp_path, orders)
 
-    with mock.patch.object(graph, "KCORE_MAX_ROUNDS", 1):
-        with pytest.warns(UserWarning, match="max_rounds"):
-            got = QUERIES["graph_kcore_parts"](spark, str(tmp_path)).collect()
-    assert len(got) > 0
-    assert all(r.converged is False for r in got)
+    sides = []
+    # the default gates run the driver peel; a negative edge gate, kcore()
+    for edge_gate in (graph.DENSE_TRIANGLE_MAX_EDGES, -1):
+        with mock.patch.multiple(
+            graph, KCORE_MAX_ROUNDS=1, DENSE_TRIANGLE_MAX_EDGES=edge_gate
+        ):
+            with pytest.warns(UserWarning, match="max_rounds"):
+                got = QUERIES["graph_kcore_parts"](spark, str(tmp_path)).collect()
+        assert len(got) > 0
+        assert all(r.converged is False for r in got)
+        sides.append(sorted(map(tuple, got)))
+    assert sides[0] == sides[1]
 
 
 # -- large-star/small-star contraction: shapes and gate paths --------------
@@ -868,6 +956,10 @@ def test_kcore_max_rounds_exhaustion_warns_and_recomputes_degrees(spark):
     assert got == set(_kcore_peel_rounds(rows, 2, 3).items())
     # sanity: the true core is empty, so the truncated result over-keeps
     assert len(got) > 0
+    st: dict = {}
+    with pytest.warns(UserWarning, match="max_rounds"):
+        assert _kcore_driver(spark, rows, 2, 3, st) == got
+    assert st == stats
 
 
 def test_kcore_converged_flag_true_on_fixpoint(spark):
@@ -880,6 +972,9 @@ def test_kcore_converged_flag_true_on_fixpoint(spark):
     }
     assert stats["converged"] is True
     assert got == {(1, 2), (2, 2), (3, 2)}
+    st: dict = {}
+    assert _kcore_driver(spark, rows, 2, stats=st) == got
+    assert st == stats
 
 
 def test_kcore_empty_edge_list(spark):
@@ -889,6 +984,9 @@ def test_kcore_empty_edge_list(spark):
     assert out.count() == 0
     assert out.columns == ["node", "core_degree"]
     assert stats["converged"] is True and stats["rounds"] == 0
+    st: dict = {}
+    assert _kcore_driver(spark, [], 2, stats=st) == set()
+    assert st == stats
 
 
 def test_kcore_frontier_gate_cases(spark):
@@ -902,13 +1000,16 @@ def test_kcore_frontier_gate_cases(spark):
     def run(rows, k, max_rounds=30):
         st: dict = {}
         e = spark.createDataFrame(rows, ["u", "v"])
+        driver_st: dict = {}
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always", UserWarning)
             got = {
                 (r.node, r.core_degree)
                 for r in _kcore(e, k, max_rounds, stats=st).collect()
             }
+            assert _kcore_driver(spark, rows, k, max_rounds, driver_st) == got
         assert not [w for w in caught if "max_rounds" in str(w.message)]
+        assert driver_st == st
         return got, st
 
     triangle = [(1, 2), (2, 3), (1, 3)]
@@ -948,6 +1049,9 @@ def test_kcore_matches_reference_on_random_graphs(spark):
         }
         assert got == set(_kcore_reference(rows, k).items()), (trial, n, m, k)
         assert st["converged"] is True
+        driver_st: dict = {}
+        assert _kcore_driver(spark, rows, k, stats=driver_st) == got
+        assert driver_st == st
 
 
 def test_kcore_engines_agree_on_exhausted_peel(spark):
@@ -963,11 +1067,15 @@ def test_kcore_engines_agree_on_exhausted_peel(spark):
     for rows, k, cap in ((star, 2, 1), (path, 2, 3)):
         e = spark.createDataFrame(rows, ["u", "v"])
         st: dict = {}
+        driver_st: dict = {}
         with pytest.warns(UserWarning, match="max_rounds"):
             got = {
                 (r.node, r.core_degree)
                 for r in _kcore(e, k, cap, stats=st).collect()
             }
+        with pytest.warns(UserWarning, match="max_rounds"):
+            assert _kcore_driver(spark, rows, k, cap, driver_st) == got
+        assert driver_st == st
         assert st["converged"] is False, (rows[:2], k, cap)
         assert got == set(_kcore_peel_rounds(rows, k, cap).items())
         assert all(d >= 1 for _, d in got)
@@ -1032,6 +1140,7 @@ def test_kcore_string_node_ids_both_engines(spark):
     assert got == set(_kcore_reference(rows, 2).items()) == {
         ("a", 2), ("b", 2), ("c", 2)
     }
+    assert _kcore_driver(spark, rows, 2, item_type="string") == got
     empty = spark.createDataFrame([], "u string, v long")
     out = _kcore(empty.select("u", F.col("v").cast("string")), 2)
     assert out.count() == 0
@@ -1097,7 +1206,9 @@ def test_kcore_reversed_edge_with_null_endpoint_is_harmless(spark):
             warnings.simplefilter("always")
             out = _kcore(e, 2, stats=stats)
             got = {(r.node, r.core_degree) for r in out.collect()}
-        assert stats["converged"]
+            driver_st: dict = {}
+            assert _kcore_driver(spark, rows, 2, stats=driver_st) == got
+        assert stats["converged"] and driver_st == stats
         assert not [w for w in caught if "max_rounds" in str(w.message)]
         assert got == {(1, 2), (2, 2), (3, 2)}
 
