@@ -129,20 +129,22 @@ def _footer_spark_schema(footer) -> StructType | None:
     return _as_nullable(schema)
 
 
-def _read(spark: SparkSession, path: str, footer) -> DataFrame:
+def _read(spark: SparkSession, paths, footer) -> DataFrame:
     schema = _footer_spark_schema(footer)
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    return reader.parquet(*paths)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` without its schema-inference job: the
-    schema comes from the first data file's footer, read on the driver, so
-    planning the read launches no Spark job.  Falls back to inference (one
-    footer job) for a nanosecond or INT96 timestamp column, a path with no
-    top-level data file (a hive-partitioned layout, an empty directory), an
-    unreadable footer or a type the footer mapping does not cover."""
-    return _read(spark, path, _read_footer(path))
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without its schema-inference job: the
+    schema comes from the footer of the file Spark would infer it from
+    (the first data file of the first path in path order), read on the
+    driver, so planning the read launches no Spark job.  Falls back to
+    inference (one footer job) for a nanosecond or INT96 timestamp column,
+    a path with no top-level data file (a hive-partitioned layout, an
+    empty directory), an unreadable footer or a type the footer mapping
+    does not cover."""
+    return _read(spark, paths, _read_footer(min(paths, key=os.path.abspath)))
 
 
 # Files below this size stay unsplit (dims like region/nation) — repartition
@@ -156,19 +158,19 @@ _MIN_SPLIT_BYTES = 128 * 1024
 _REBALANCE_CACHE: dict[str, bool] = {}
 
 
-def lineitem_row_count(sf_dir: str) -> int | None:
-    """The row count of the lineitem table, summed from its parquet footers
-    (``num_rows``) on the driver: no Spark job.  Every data file under the
-    table is counted (Spark's listing skips ``_``/``.`` names), so the sum
-    bounds any scan of the table from above.  None when a footer is
-    unreadable or the table is missing."""
+def parquet_row_count(*paths: str) -> int:
+    """The row count of the parquet data under ``paths`` (files, or
+    directories walked the way Spark lists them: ``_``/``.`` names
+    skipped), summed from the footers' ``num_rows`` on the driver: no
+    Spark job.  Raises ``OSError`` or ``ValueError`` on a missing path or
+    an unreadable footer."""
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, "lineitem")
-    if not os.path.isdir(path):
-        files = [path]
-    else:
-        files = []
+    files = []
+    for path in paths:
+        if not os.path.isdir(path):
+            files.append(path)
+            continue
         for root, dirs, names in os.walk(path):
             dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
             files += [
@@ -176,8 +178,14 @@ def lineitem_row_count(sf_dir: str) -> int | None:
                 for n in sorted(names)
                 if n.endswith(".parquet") and not n.startswith(("_", "."))
             ]
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def lineitem_row_count(sf_dir: str) -> int | None:
+    """:func:`parquet_row_count` of the lineitem table, an upper bound on
+    any scan of it; None when a footer is unreadable or it is missing."""
     try:
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        return parquet_row_count(table_path(sf_dir, "lineitem"))
     except (OSError, ValueError):
         return None
 
@@ -235,7 +243,7 @@ def load_table(
     nanos_cols = _nanos_timestamp_columns(footer)
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _read(spark, path, footer)
+    df = _read(spark, [path], footer)
     if nanos_cols:
         # INT96-encoded files (Spark's own default writer) also report as
         # timestamp[ns] in the arrow footer, but Spark reads them as native

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lvm_datapipe_spark.operators.graph import observed_checkpoint, partitioned_local_checkpoint
 from lvm_datapipe_spark.operators.text import fingerprint, tokens
 
 # -- exact -------------------------------------------------------------------
@@ -112,16 +113,15 @@ def ngram_jaccard_pairs(df: DataFrame, shingle_rows_df: DataFrame | None = None)
     always uncapped, so for corpora where no shingle exceeds the cap the
     output is bit-identical to the exact form.
     """
-    # persist: the shingle rows feed the sizes branch and BOTH sides of the
-    # self-join below — without it the shingle computation runs 3×.
-    # ``shingle_rows_df`` (prebuilt distinct STRING rows shared with other
-    # kernels) derives the hashed form instead of rebuilding it from the
-    # corpus (hashed_shingle_rows).
+    # checkpoint: the shingle rows feed the sizes branch and BOTH sides of
+    # the self-join below — unmaterialized, the shingle computation runs
+    # 3×.  ``shingle_rows_df`` (prebuilt distinct STRING rows shared with
+    # other kernels) derives the hashed form instead of rebuilding it from
+    # the corpus (hashed_shingle_rows).
     if shingle_rows_df is None:
-        cached = shingle_rows(df, "doc_id", 3, hashed=True).persist()
+        ex = shingle_rows(df, "doc_id", 3, hashed=True).localCheckpoint()
     else:
-        cached = hashed_shingle_rows(shingle_rows_df).persist()
-    ex = cached
+        ex = hashed_shingle_rows(shingle_rows_df).localCheckpoint()
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = shingle_intersections(ex, "doc_id", MAX_SHINGLE_FREQ)
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
@@ -230,7 +230,7 @@ def containment_pairs(df: DataFrame) -> DataFrame:
     (id, shingle) rows, the capped posting-list intersection kernel,
     then two keyed joins against the size table.  Same stop-shingle cap
     semantics (sizes always uncapped)."""
-    cached = shingle_rows(df, "doc_id", 3, hashed=True).persist()
+    cached = shingle_rows(df, "doc_id", 3, hashed=True).localCheckpoint()
     sizes = cached.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = shingle_intersections(cached, "doc_id", MAX_SHINGLE_FREQ)
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
@@ -290,7 +290,7 @@ def band_buckets(sig_df: DataFrame) -> DataFrame:
     """Band a MinHash signature table into (doc_id, band, bucket) rows: 4
     bands of 4 signature slots, bucket = md5 of the band's slice.  The
     joinable form of the LSH index — feed to a self-join directly, or
-    persist bucketed on (band, bucket) via plans.bucketing so REPEATED
+    write it bucketed on (band, bucket) via plans.bucketing so REPEATED
     dedup runs skip the band shuffle."""
     bands, rows = 4, 4
     band_entries = []
@@ -355,13 +355,14 @@ def minhash_lsh_pairs(
 
 def minhash_candidates(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(string shingle rows, MinHash signatures, LSH candidate pairs) of a
-    (doc_id, text) table, each persisted, for the estimator audits that
-    read all three: the signatures are built from the shared shingle table
-    (one posexplode + doc-keyed window pass over the corpus), and the pairs
-    feed the estimate plus the exact side's semi-join restrictions."""
-    strows = shingle_rows(df).persist()
-    sigs = minhash_signatures(df, shingle_rows_df=strows).persist()
-    pairs = lsh_candidate_pairs(sigs).persist()
+    (doc_id, text) table, each an eager checkpoint, for the estimator
+    audits that read all three: the signatures are built from the shared
+    shingle table (one posexplode + doc-keyed window pass over the
+    corpus), and the pairs feed the estimate plus the exact side's
+    semi-join restrictions."""
+    strows = shingle_rows(df).localCheckpoint()
+    sigs = minhash_signatures(df, shingle_rows_df=strows).localCheckpoint()
+    pairs = lsh_candidate_pairs(sigs).localCheckpoint()
     return strows, sigs, pairs
 
 
@@ -420,14 +421,13 @@ def simhash_pairs(df: DataFrame, dedup_pairs: bool = True) -> DataFrame:
     the other two methods), so its dedup shuffle is the one worth skipping.
     """
     max_hamming, bands = 3, 4
-    # persist: the fingerprint table is tiny (id + 32-char string) and feeds
-    # both sides of the band self-join; carry the bit-packed long so the
+    # checkpoint: the fingerprint table is tiny (id + 32-char string) and
+    # feeds both sides of the band self-join; carry the bit-packed long so the
     # pair-level hamming is ONE bit_count(xor) instead of 32 substring
-    # comparisons over millions of candidates
-    sh = (
-        simhash_docs(df)
-        .withColumn("sh_bits", F.conv("simhash", 2, 10).cast("long"))
-        .persist()
+    # comparisons over millions of candidates.  Planned without AQE, its vote
+    # aggregate is not coalesced to one task (measured: ARCHITECTURE.md §3)
+    sh = partitioned_local_checkpoint(
+        simhash_docs(df).withColumn("sh_bits", F.conv("simhash", 2, 10).cast("long"))
     )
     width = SIMHASH_BITS // bands
     band_entries = [
@@ -467,8 +467,8 @@ def minhash_lsh_pairs_cross(new_df: DataFrame, corpus_df: DataFrame) -> DataFram
     |new| × collisions: band the new batch, band the corpus, and
     equi-join across.  Output: (new_id, corpus_id) distinct candidates —
     feed to exact verification, then drop/keep the new docs."""
-    bb_new = band_buckets(minhash_signatures(new_df)).persist()
-    bb_corpus = band_buckets(minhash_signatures(corpus_df)).persist()
+    bb_new = band_buckets(minhash_signatures(new_df))
+    bb_corpus = band_buckets(minhash_signatures(corpus_df))
     out = (
         bb_new.select(F.col("doc_id").alias("new_id"), "band", "bucket")
         .join(
@@ -520,8 +520,8 @@ def ppjoin_pairs(df: DataFrame) -> DataFrame:
     carries only (id_a, id_b): sizes are re-attached at verify time from
     the per-doc set representation, so the widest shuffle of the plan
     moves two ints per row instead of four.  When the corpus vocabulary
-    fits in 64 bits (a metadata-sized count over the already-needed
-    token-frequency aggregate), each doc's token SET is packed into one
+    fits in 64 bits (a size observed on the token-frequency checkpoint
+    the prefix order already needs), each doc's token SET is packed into one
     64-bit mask and the verify becomes `bit_count(m_a & m_b)` — exact
     (one bit per distinct token, n = bit_count(mask)) and much cheaper
     than hashing string arrays per pair; above 64 tokens the generic
@@ -534,7 +534,10 @@ def ppjoin_pairs(df: DataFrame) -> DataFrame:
     toks = df.select(
         F.col("doc_id"), F.explode(F.array_distinct(tokens("text"))).alias("tok")
     )
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_tf"))
+    # read by the rank join and the mask gate's vocabulary size and collect
+    freq, seen = observed_checkpoint(
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_tf"))
+    )
     w = Window.partitionBy("doc_id").orderBy("_tf", "tok")
     ranked = (
         toks.join(freq, "tok")
@@ -586,7 +589,8 @@ def ppjoin_pairs(df: DataFrame) -> DataFrame:
         # materialize the candidate set (2 ints/row, bounded by the prefix
         # filter — the quantity PPJoin exists to bound): without it Spark
         # re-derives the whole prefix pipeline inside the verify joins and
-        # the plan measured 5x slower at sf0.1 (48s vs 10s)
+        # the plan measured 5x slower at sf0.1 (48s vs 10s); a checkpoint
+        # measured slower still (tests/test_build_jobs.py PERSIST_ALLOWED)
         .persist()
     )
     # Verify at PAIR granularity, not token granularity: joining candidates
@@ -595,15 +599,14 @@ def ppjoin_pairs(df: DataFrame) -> DataFrame:
     # prefix filter can't prune), while attaching each side's token SET is
     # one doc-keyed join per side — auto-broadcast when the doc table is
     # small.  Set representation: 64-bit mask + popcount when the whole
-    # vocabulary fits in one word (vocab size is a metadata-sized count of
-    # the frequency aggregate the prefix order already needs), else the
+    # vocabulary fits in one word (the vocabulary size is observed on the
+    # frequency checkpoint the prefix order already needs), else the
     # generic string-array + array_intersect.
-    n_vocab = freq.count()
-    if n_vocab <= PPJOIN_MASK_MAX_VOCAB:
+    if seen["n_rows"] <= PPJOIN_MASK_MAX_VOCAB:
         # token → bit as a LITERAL map: the vocabulary is metadata-sized
-        # here by the gate itself (≤64 rows), so collecting it is the
-        # same class of driver decision as the count above — and avoids
-        # a global window for bit assignment (banned plan shape).
+        # here by the gate itself (≤64 rows), so collecting it is a
+        # bounded driver read — and avoids a global window for bit
+        # assignment (banned plan shape).
         vocab_sorted = [
             r["tok"] for r in freq.select("tok").orderBy("tok").collect()
         ]

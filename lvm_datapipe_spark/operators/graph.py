@@ -377,11 +377,12 @@ def pagerank(edges: DataFrame) -> DataFrame:
     edge weights need a smaller scale (the product bound is checked, not
     silent).
 
-    Scale shape: edges with their out-degree totals are computed ONCE and
-    persisted; each iteration is an edges⋈ranks equi-join on the source
-    key plus a re-aggregate on the destination key — two keyed shuffles
-    over |E| rows, rank state |V| rows, localCheckpoint truncating
-    lineage per round.
+    Scale shape: edges with their out-degree totals, and the node set, are
+    each ONE :func:`observed_checkpoint` whose job also observes the
+    maximum weight and the node count (no collect or count job); each
+    iteration is an edges⋈ranks equi-join on the source key plus a
+    re-aggregate on the destination key — two keyed shuffles over |E|
+    rows, rank state |V| rows, run as one checkpoint job at the end.
 
     Returns (node, rank_fp BIGINT, rank DOUBLE = rank_fp/scale).
     """
@@ -396,31 +397,30 @@ def pagerank(edges: DataFrame) -> DataFrame:
         F.col("w").cast("long").alias("_w"),
     )
     out_w = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
-    ew = e.join(out_w, "_src").persist()
-    max_w = ew.agg(F.max("_w").alias("m")).collect()[0]["m"]
+    ew, seen = observed_checkpoint(
+        e.join(out_w, "_src"), F.max("_w").alias("max_w")
+    )
+    max_w = seen["max_w"]
     if max_w is not None and max_w * scale >= 2**63:
         raise ValueError(
             f"scale {scale} * max edge weight {max_w} overflows BIGINT; "
             "pass a smaller scale"
         )
-    # derive nodes from the PERSISTED ew, not the raw edge plan: ew's
+    # derive nodes from the CHECKPOINTED ew, not the raw edge plan: ew's
     # inner join with out_w loses no rows (every _src has an out_w row by
-    # construction), and reading the cache avoids re-executing the
+    # construction), and reading the checkpoint avoids re-executing the
     # caller's edge build — often a multi-table fact join — a second
     # time for the node set (r10 opt, guide §1.2)
-    nodes = (
+    nodes, seen = observed_checkpoint(
         ew.select(F.col("_src").alias("_node"))
         .union(ew.select(F.col("_dst")))
         .distinct()
-        .persist()
     )
-    n_nodes = nodes.count()  # one scalar action up front, not per round
+    n_nodes = seen["n_rows"]
     if n_nodes == 0:
         # empty edge set: return an empty rank table with the right schema
         # instead of dividing by zero (a filtered edge build legitimately
         # produces no edges)
-        ew.unpersist(blocking=False)
-        nodes.unpersist(blocking=False)
         return nodes.select(
             F.col("_node").alias("node"),
             F.lit(0).cast("long").alias("rank_fp"),
@@ -451,11 +451,9 @@ def pagerank(edges: DataFrame) -> DataFrame:
         )
     # iterations chain LAZILY — the docstring's "one job of chained keyed
     # shuffles" contract; a localCheckpoint per round would be one
-    # driver-synchronized job per round on |V|-sized state.  Truncate once
-    # at the end so the persisted inputs can be released.
+    # driver-synchronized job per round on |V|-sized state.  They run
+    # once, here, as one checkpoint of the final ranks.
     ranks = ranks.localCheckpoint()
-    ew.unpersist(blocking=False)
-    nodes.unpersist(blocking=False)
     return ranks.select(
         F.col("_node").alias("node"),
         F.col("_r").alias("rank_fp"),
@@ -735,7 +733,7 @@ def triangle_counts(
             F.when(fwd, F.col("a")).otherwise(F.col("bb")).alias("u"),
             F.when(fwd, F.col("bb")).otherwise(F.col("a")).alias("v"),
         )
-        .persist()
+        .localCheckpoint()
     )
     dv = d.join(
         deg.select(F.col("node").alias("v"), F.col("d").alias("dvg")), "v"

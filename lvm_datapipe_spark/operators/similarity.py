@@ -170,12 +170,12 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFram
     :func:`lsh_near_dup_pairs`.  Normalize-first: n² pairs each cost one
     64-element dot, not three.
 
-    The unit-vector table is PERSISTED: without the barrier, projection
-    collapse inlines ``transform(v, x/nrm)`` into every ``element_at`` of
-    the pairwise dot, recomputing the whole normalization per term (measured
-    ~10× slowdown).  It stays cached until the caller's sink;
+    The unit-vector table is an eager checkpoint: without the barrier,
+    projection collapse inlines ``transform(v, x/nrm)`` into every
+    ``element_at`` of the pairwise dot, recomputing the whole normalization
+    per term (measured ~10× slowdown).  It lives until the caller's sink;
     :func:`lvm_datapipe_spark.session.query_scope` frees it."""
-    u = unit_vectors(emb).persist()
+    u = unit_vectors(emb).localCheckpoint()
     a = u.select(F.col("vec_id").alias("id_a"), F.col("vn").alias("va"))
     b = u.select(F.col("vec_id").alias("id_b"), F.col("vn").alias("vb"))
     out = (
@@ -482,8 +482,11 @@ def ivf_index(emb: DataFrame) -> tuple[DataFrame, list[list[float]]]:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
 
+    from lvm_datapipe_spark.operators.graph import observed_checkpoint
+
     id_col = "vec_id"
-    vecs = (
+    # pins the multi-pass fit's input; its job counts the rows k needs
+    vecs, seen = observed_checkpoint(
         emb.select(F.col(id_col), as_double().alias("v"))
         # a NULL vector cannot be assigned to a cell (and crashes the
         # KMeans fit) — un-indexable rows are dropped, matching the
@@ -491,7 +494,7 @@ def ivf_index(emb: DataFrame) -> tuple[DataFrame, list[list[float]]]:
         .filter(F.col("v").isNotNull())
         .withColumn("features", array_to_vector(F.col("v")))
     )
-    n = vecs.count()
+    n = seen["n_rows"]
     if n == 0:
         # MLlib KMeans cannot fit zero rows; an empty corpus has a
         # well-defined IVF answer (no cells, no candidates) — return it
@@ -828,9 +831,9 @@ def semdedup_keep(emb: DataFrame) -> DataFrame:
         .withColumn("vn", F.expr("transform(v, x -> x / nrm)"))
         .select("vec_id", "cell", "centroid_sim", "vn")
         # the assignment scan (IVF_CELLS literal-dot folds per row) feeds both
-        # sides of the pair join AND the final output — persist so it runs
-        # once, not three times (measured 6.6 s -> ~4 s at sf0.1)
-        .persist()
+        # sides of the pair join AND the final output — checkpoint so it
+        # runs once, not three times (measured 6.6 s -> ~4 s at sf0.1)
+        .localCheckpoint()
     )
     lhs = a.select(
         F.col("vec_id").alias("id_a"),

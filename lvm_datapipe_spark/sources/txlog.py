@@ -31,7 +31,7 @@ Commit protocol (optimistic concurrency):
 A crash between (1) and (3) leaves an orphaned data dir / un-pointered
 manifest — readers never see it (they resolve through the pointer), and
 ``vacuum`` removes it.  ``op="append"`` manifests carry the parent's
-files plus their own, so reads stay a single ``spark.read.parquet`` over
+files plus their own, so reads stay a single parquet read over
 an explicit file list (no directory listing at read time — the manifest
 IS the source of truth, which also makes concurrent vacuum+read safe for
 retained versions).
@@ -51,7 +51,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lvm_datapipe_spark.catalog import read_parquet
+from lvm_datapipe_spark.catalog import parquet_row_count, read_parquet
+from lvm_datapipe_spark.session import query_scope
 
 _LOGDIR = "_txlog"
 _LATEST = "_latest"
@@ -108,8 +109,8 @@ def commit(
     never torn state).
 
     An APPEND whose columns differ from the parent's manifested schema
-    fails loudly: ``spark.read.parquet`` over an explicit file list takes
-    the first file's schema, so a drifted append would otherwise merge
+    fails loudly: a read over an explicit file list takes the first
+    file's schema, so a drifted append would otherwise merge
     cleanly today and silently DROP its new column (or null out a missing
     one) on every later read.  Overwrites may change schema freely — the
     new version references only its own files.
@@ -149,7 +150,8 @@ def _check_append_schema(df: DataFrame, table_dir: str, parent: int) -> None:
 def _write_version_files(
     spark: SparkSession, df: DataFrame, table_dir: str, version: int
 ) -> tuple[list[str], int]:
-    """Write ``df`` under ``data/v{version}/``; return (files, row count)."""
+    """Write ``df`` under ``data/v{version}/``; return (files, row count),
+    the count summed from the written footers."""
     vdir = os.path.join(table_dir, "data", f"v{version:08d}")
     df.write.mode("overwrite").parquet(vdir)
     own = sorted(
@@ -157,7 +159,7 @@ def _write_version_files(
         for f in os.listdir(vdir)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
-    return own, read_parquet(spark, vdir).count()
+    return own, parquet_row_count(*own)
 
 
 def _table_columns(spark: SparkSession, pm: dict) -> list[str]:
@@ -212,12 +214,13 @@ def read(
 ) -> DataFrame:
     """Read the table at ``version`` (default: latest).  The manifest's
     explicit file list is the source of truth — no directory listing, so
-    orphaned crash leftovers and newer in-flight commits are invisible."""
+    orphaned crash leftovers and newer in-flight commits are invisible;
+    the read launches no job (catalog.read_parquet)."""
     v = latest_version(table_dir) if version is None else version
     if v == 0:
         raise FileNotFoundError(f"{table_dir} has no committed versions")
     m = _read_manifest(table_dir, v)
-    return spark.read.parquet(*m["files"])
+    return read_parquet(spark, *m["files"])
 
 
 def history(table_dir: str) -> list[dict]:
@@ -260,7 +263,7 @@ def diff_files(
     new = [f for f in fb if f not in fa]
     if not new:
         return read(spark, table_dir, v_to).limit(0)
-    return spark.read.parquet(*new)
+    return read_parquet(spark, *new)
 
 
 def _strip_scheme(path: str) -> str:
@@ -282,7 +285,7 @@ def _affected_files(
     possibly-relative paths."""
     from pyspark.sql import functions as F
 
-    snap = spark.read.parquet(*pm["files"])
+    snap = read_parquet(spark, *pm["files"])
     uris = [
         r[0]
         for r in snap.select(
@@ -346,35 +349,30 @@ def merge(
     missing = [k for k in key_cols if k not in snap_cols]
     if missing:
         raise ValueError(f"key columns {missing} not in table schema")
-    # the update set feeds three separate jobs (uniqueness check, affected-
-    # file semi-join, rewrite): pin it so a nondeterministic upstream
-    # (sampled/shuffled input) cannot drift between them
-    updates = updates.select(*snap_cols).persist()
     from pyspark.sql import functions as F
 
-    keys = updates.select(*key_cols)
-    dup = keys.groupBy(*key_cols).count().filter(F.col("count") > 1)
-    if dup.limit(1).count() > 0:
-        updates.unpersist()
-        raise ValueError(
-            f"updates are not unique on {key_cols}; MERGE would be "
-            "order-dependent"
-        )
-    affected = _affected_files(spark, pm, keys, key_cols)
-    kept = [f for f in pm["files"] if f not in affected]
     version = parent + 1
-    if affected:
-        touched = spark.read.parquet(*sorted(affected))
-        touched_rows = touched.count()
-        survivors = touched.join(keys, key_cols, "left_anti")
-        new_df = survivors.unionByName(updates)
-    else:
-        touched_rows = 0
+    with query_scope(spark):
+        # the update set feeds three separate jobs (uniqueness check,
+        # affected-file semi-join, rewrite): an eager checkpoint pins it,
+        # so a nondeterministic upstream (sampled/shuffled input) cannot
+        # drift between them
+        updates = updates.select(*snap_cols).localCheckpoint()
+        keys = updates.select(*key_cols)
+        dup = keys.groupBy(*key_cols).count().filter(F.col("count") > 1)
+        if dup.limit(1).count() > 0:
+            raise ValueError(
+                f"updates are not unique on {key_cols}; MERGE would be "
+                "order-dependent"
+            )
+        affected = _affected_files(spark, pm, keys, key_cols)
         new_df = updates
-    try:
+        if affected:
+            touched = read_parquet(spark, *sorted(affected))
+            new_df = touched.join(keys, key_cols, "left_anti").unionByName(updates)
         own, own_rows = _write_version_files(spark, new_df, table_dir, version)
-    finally:
-        updates.unpersist()
+    kept = [f for f in pm["files"] if f not in affected]
+    touched_rows = parquet_row_count(*affected)
     n_rows = pm["n_rows"] - touched_rows + own_rows
     merge_meta = {
         "merge_keys": list(key_cols),
@@ -413,28 +411,18 @@ def delete(
     missing = [k for k in key_cols if k not in snap_cols]
     if missing:
         raise ValueError(f"key columns {missing} not in table schema")
-    from pyspark.sql import functions as F
-
-    kdf = keys.select(*key_cols).distinct().persist()
-    affected = _affected_files(spark, pm, kdf, key_cols)
-    kept = [f for f in pm["files"] if f not in affected]
     version = parent + 1
-    if not affected:  # nothing matched: publish an empty-delta version
-        kdf.unpersist()
-        _publish(
-            table_dir, version, parent, "delete", kept, pm["n_rows"],
-            {"delete_keys": list(key_cols), "deleted_rows": 0,
-             "rewritten_files": 0, "kept_files": len(kept)},
-            columns=snap_cols,
-        )
-        return version
-    touched = spark.read.parquet(*sorted(affected))
-    touched_rows = touched.count()
-    survivors = touched.join(kdf, key_cols, "left_anti")
-    try:
-        own, own_rows = _write_version_files(spark, survivors, table_dir, version)
-    finally:
-        kdf.unpersist()
+    own, own_rows = [], 0
+    with query_scope(spark):
+        # the key set feeds the affected-file semi-join and the rewrite
+        kdf = keys.select(*key_cols).distinct().localCheckpoint()
+        affected = _affected_files(spark, pm, kdf, key_cols)
+        if affected:
+            touched = read_parquet(spark, *sorted(affected))
+            survivors = touched.join(kdf, key_cols, "left_anti")
+            own, own_rows = _write_version_files(spark, survivors, table_dir, version)
+    kept = [f for f in pm["files"] if f not in affected]
+    touched_rows = parquet_row_count(*affected)
     n_rows = pm["n_rows"] - touched_rows + own_rows
     _publish(
         table_dir, version, parent, "delete", kept + own, n_rows,
@@ -479,10 +467,10 @@ def compact(
 
     small_bytes = sum(os.path.getsize(f) for f in small)
     n_out = max(1, math.ceil(small_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(*small).coalesce(n_out)
+    df = read_parquet(spark, *small).coalesce(n_out)
     version = parent + 1
     own, own_rows = _write_version_files(spark, df, table_dir, version)
-    small_rows = spark.read.parquet(*small).count()
+    small_rows = parquet_row_count(*small)
     if own_rows != small_rows:
         raise RuntimeError(
             f"compact row-count drift: rewrote {small_rows} rows but the "

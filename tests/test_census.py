@@ -44,7 +44,12 @@ def test_sweep_writes_every_artifact(spark, sf_dir, tmp_path):
     loaded = bench_compare.load(paths["times"])
     assert sorted(loaded["queries"]) == sorted(NAMES)
     phases = json.loads(Path(paths["times"]).read_text())["phases"]
-    assert all(set(p) == set(census.PHASES) for p in phases.values())
+    assert all(set(p) == {*census.PHASES, *census.JOB_PHASES} for p in phases.values())
+    # each phase's jobs are counted under its own job group: both queries
+    # build lazily (a footer-schema read launches no job), and each noop
+    # sink runs at least its one result job
+    for p in phases.values():
+        assert p["build_jobs"] == 0 and p["exec_jobs"] >= 1
 
     for name in NAMES:
         text = (Path(paths["explain"]) / f"{name}.txt").read_text()

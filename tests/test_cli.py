@@ -475,9 +475,9 @@ def test_cli_query_leaves_caller_session_unchanged(spark, sf_dir, capsys):
 def test_cli_output_counts_come_from_the_write(spark, sf_dir, tmp_path, capsys):
     """``query --out`` and ``tx-diff`` print the row count observed on their
     own write instead of re-reading the output: query is its two-job
-    aggregate write; tx-diff is the delta read's footer job (a read over an
-    explicit file list still infers) plus the write.  Each printed count
-    equals an independent read of the output."""
+    aggregate write; tx-diff is its one write job (the delta read over an
+    explicit file list takes its schema from the first file's footer).
+    Each printed count equals an independent read of the output."""
     tag = uuid.uuid4().hex[:8]
     q_out = str(tmp_path / "q1")
     argv = ["query", "--name", "q1_pricing_summary", "--sf-dir", sf_dir, "--out", q_out]
@@ -493,5 +493,5 @@ def test_cli_output_counts_come_from_the_write(spark, sf_dir, tmp_path, capsys):
     assert main(["tx-commit", "--table", more, "--out", t, "--op", "append"],
                 spark=spark) == 0
     argv = ["tx-diff", "--table", t, "--from", "1", "--to", "2", "--out", delta]
-    assert _jobs_of(spark, f"tx-diff-{tag}", argv) == 2
+    assert _jobs_of(spark, f"tx-diff-{tag}", argv) == 1
     assert _last_json(capsys)["rows"] == spark.read.parquet(delta).count() == 2

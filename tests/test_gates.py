@@ -57,9 +57,10 @@ GATED = {
     "dedup_ppjoin_pairs": {(dedup, "PPJOIN_MASK_MAX_VOCAB"): 64},
 }
 
-#: operators the fallback side's plan must hold
+#: operators the fallback side's plan must hold (the supplier triangles'
+#: per-edge intersection is a checkpoint its counts read the sizes of)
 FALLBACK_PLAN = {
-    "graph_supplier_triangles": "array_intersect",
+    "graph_supplier_triangles": "size(ws",
     "range_partition_boundaries": "percentile",
 }
 

@@ -545,7 +545,8 @@ def test_reachability_env_gate_forces_distributed_plan(spark, monkeypatch):
 
 def test_supplier_triangles_env_gate_forces_distributed_plan(spark, monkeypatch):
     # with a negative gate the declared query must run the array_intersect scale
-    # engine and still match the oracle-shaped fast-path output
+    # engine (its per-edge intersections `ws` are a checkpoint whose sizes the
+    # plan sums) and still match the oracle-shaped fast-path output
     from lvm_datapipe_spark.queries import QUERIES
 
     fast = QUERIES["graph_supplier_triangles"](spark, SF0001)
@@ -553,7 +554,7 @@ def test_supplier_triangles_env_gate_forces_distributed_plan(spark, monkeypatch)
     monkeypatch.setattr(graph, "DENSE_TRIANGLE_MAX_EDGES", -1)
     slow = QUERIES["graph_supplier_triangles"](spark, SF0001)
     plan = slow._jdf.queryExecution().executedPlan().toString()
-    assert "array_intersect" in plan
+    assert "size(ws" in plan
     assert fast_rows == {(r[0], r[1]) for r in slow.collect()}
     assert [f.name for f in fast.schema.fields] == [
         f.name for f in slow.schema.fields

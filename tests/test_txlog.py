@@ -460,18 +460,27 @@ def test_cli_tx_delete(spark, tmp_path, capsys):
     assert {r["id"] for r in txlog.read(spark, t).collect()} == {1, 3}
 
 
-def _lookup_jobs(spark, fn) -> int:
+def _jobs(spark, fn):
+    """``fn()`` under its own job group; its result and the number of Spark
+    jobs it launched."""
     import uuid
 
     sc = spark.sparkContext
     group = f"txlog-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
     try:
-        with pytest.raises(ValueError, match="columns"):
-            fn()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _lookup_jobs(spark, fn) -> int:
+    def raises():
+        with pytest.raises(ValueError, match="columns"):
+            fn()
+
+    return _jobs(spark, raises)[1]
 
 
 @pytest.mark.parametrize("manifest_columns", [True, False],
@@ -492,3 +501,21 @@ def test_merge_and_delete_column_lookup_runs_no_job(spark, tmp_path, manifest_co
     good = _df(spark, [(1, "a")])
     assert _lookup_jobs(spark, lambda: txlog.merge(spark, good, t, ["nope"])) == 0
     assert _lookup_jobs(spark, lambda: txlog.delete(spark, good, t, ["nope"])) == 0
+
+
+def test_read_and_unaffected_merge_run_no_schema_or_count_job(spark, tmp_path):
+    """A read over a manifest's file list takes its schema from the first
+    file's footer, and the row counts of a commit come from the written
+    footers: ``txlog.read`` launches no job, and a merge whose key matches
+    no row runs only its own work — the update checkpoint, the uniqueness
+    check, the affected-file semi-join and the write, 8 jobs — with no
+    schema-inference or count job among them.  The manifest's row count
+    still equals a read's."""
+    t = str(tmp_path / "tbl")
+    _commit_partitioned(spark, t, [(i, f"v{i}") for i in range(20)], 4)
+    snap, jobs = _jobs(spark, lambda: txlog.read(spark, t))
+    assert jobs == 0 and snap.columns == ["id", "val"]
+    new = spark.createDataFrame([(100, "new")], "id long, val string")
+    v, jobs = _jobs(spark, lambda: txlog.merge(spark, new, t, ["id"]))
+    assert jobs == 8
+    assert txlog.history(t)[-1]["n_rows"] == txlog.read(spark, t, v).count() == 21

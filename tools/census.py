@@ -8,14 +8,16 @@ both timed, and run by the actions its artifacts need.  Flags pick them:
   per query (``toPandas()`` against the DuckDB oracle) and ``left``;
 - ``--plan-audit PATH``: PLAN_AUDIT.md, the operator counts of each plan;
 - ``--times PATH``: build plus noop sink per query (``times``, the shape
-  ``tools/bench_compare.py`` gates) and ``phases`` (build, plan, exec);
+  ``tools/bench_compare.py`` gates) and ``phases`` (build, plan and exec
+  seconds, and the Spark jobs of the build and of the noop sink, each run
+  under its own job group);
 - ``--explain DIR``: ``DIR/<query>.txt``, the formatted physical plan with
   its expression ids (``#12``), plan ids (``plan_id=3``) and RDD ids
   (``MapPartitionsRDD[93]``, a checkpointed scan) masked, so the files of
   two sweeps diff directly.
 
-``--passes N`` keeps each phase's minimum of N runs; the rest comes from the
-first.  Exit code 1 on any Spark, DuckDB or oracle failure, or when the
+``--passes N`` keeps each phase's minimum of N runs; the rest, job counts
+included, comes from the first.  Exit code 1 on any Spark, DuckDB or oracle failure, or when the
 session holds cached relations or persistent RDDs at the end.
 
 Usage: python tools/census.py SF_DIR [--only q1,q2] [--passes N]
@@ -31,6 +33,7 @@ import os
 import re
 import sys
 import time
+import uuid
 
 import duckdb
 import pandas as pd
@@ -40,6 +43,8 @@ sys.path.insert(0, REPO)
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 PHASES = ("build_s", "plan_s", "exec_s")
+#: the Spark jobs of the build and of the noop sink, next to PHASES
+JOB_PHASES = ("build_jobs", "exec_jobs")
 #: the session-dependent ids of explain text that ``--explain`` masks
 IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
 
@@ -136,19 +141,13 @@ def render_audit(rows: list[dict]) -> str:
         "the sanctioned slow path); pyR = row-at-a-time BatchEvalPython",
         "(must be 0 everywhere).",
         "",
-        "Counting caveat (r9): queries that persist() intermediates (the",
-        "shared shingle, pair and score tables) embed each cached subtree's",
-        "TEXT in the formatted explain once per reference — their keyed",
-        "counts read 2-4x the exchanges that EXECUTE (the cache materializes",
-        "once), and the `push` flag can go blank because the parquet scan",
-        "sits inside the InMemoryRelation body (pushdown still happens when",
-        "the cache fills).  Queries that read an eager checkpoint (the",
-        "co-occurrence family's capped basket table, the LSH and k-core",
-        "inputs) show neither the checkpointed subtree nor its scan: the",
-        "checkpoint already ran during the build, so `push` is blank and the",
-        "counts cover only the plan above it.  Judge execution cost by",
-        "QUERY_TIMES / BENCH, not by these textual counts for persisting or",
-        "checkpointing queries.",
+        "Counting caveat: queries that read an eager checkpoint (the",
+        "co-occurrence family's capped basket table, the shared shingle,",
+        "pair and score tables, the LSH and k-core inputs) show neither the",
+        "checkpointed subtree nor its scan: the checkpoint already ran during",
+        "the build, so `push` can go blank and the counts cover only the",
+        "plan above it.  Judge execution cost by QUERY_TIMES / BENCH, not by",
+        "these textual counts for checkpointing queries.",
         "",
         "| query | keyed | range | 1-part | bcast | cart | SMJ | WGL | TOP | push | pyA | pyR |",
         "|---|---|---|---|---|---|---|---|---|---|---|---|",
@@ -183,6 +182,19 @@ def render_audit(rows: list[dict]) -> str:
 
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _in_group(spark, fn):
+    """``fn()`` under a job group of its own; its result and the number of
+    Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"census-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _write(path: str, content: str | dict) -> None:
@@ -239,20 +251,21 @@ def sweep(spark, sf_dir: str, names: list[str] | None = None, *,
         rec = records[name] = {
             "rows_match": False, "schema_match": False, "hash_match": False,
             "spark_rows": None, "oracle_rows": None, "err": None}
-        best = row = None
+        best = row = jobs = None
         try:
             for _ in range(passes):
                 with query_scope(spark):
                     t0 = time.perf_counter()
-                    df = QUERIES[name](spark, sf_dir)
+                    df, build_jobs = _in_group(
+                        spark, lambda: QUERIES[name](spark, sf_dir))
                     t1 = time.perf_counter()
                     qe = df._jdf.queryExecution()
                     plan = qe.executedPlan().toString()
                     t2 = time.perf_counter()
-                    if times:
-                        _noop(df)
+                    exec_jobs = _in_group(spark, lambda: _noop(df))[1] if times else 0
                     t3 = time.perf_counter()
                     if row is None:
+                        jobs = (build_jobs, exec_jobs)
                         row = audit_row(name, plan)
                         if explain:
                             with open(os.path.join(explain, f"{name}.txt"), "w") as f:
@@ -267,7 +280,8 @@ def sweep(spark, sf_dir: str, names: list[str] | None = None, *,
             totals[name] = f"ERR {type(e).__name__}: {e}"
         else:
             err = _check(name, rec, sdf, ORACLE_SQL.get(name), con) if correctness else None
-            phases[name] = dict(zip(PHASES, (round(v, 3) for v in best)))
+            phases[name] = dict(zip(PHASES, (round(v, 3) for v in best)),
+                                **dict(zip(JOB_PHASES, jobs)))
             totals[name] = round(best[0] + best[2], 2)
         audits.append(row or {"name": name, "error": rec["err"][:80]})
         if err:

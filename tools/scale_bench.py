@@ -34,6 +34,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SCRATCH = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_scale")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MD_PATH = os.path.join(REPO, "SCALE_BENCH.md")
+#: the §21 subsection no bench here regenerates (the reverted LM scoring
+#: A/Bs): a re-render of §21 carries it over from MD_PATH byte-identical
+R11_KEPT = "### 21c/d."
 DIM = 64
 SEED = 20260814
 
@@ -229,8 +233,7 @@ def _update_md_section(marker: str, lines: list) -> None:
     """Replace (or append) exactly ONE section of SCALE_BENCH.md: the text
     from ``marker`` up to the next ``## `` heading.  Earlier AND later
     sections are preserved byte-identical."""
-    md_path = os.path.join(REPO, "SCALE_BENCH.md")
-    with open(md_path) as f:
+    with open(MD_PATH) as f:
         md = f.read()
     new = "\n".join(lines).rstrip("\n") + "\n"
     if marker in md:
@@ -239,11 +242,23 @@ def _update_md_section(marker: str, lines: list) -> None:
         if nxt == -1:
             md = md[:start] + new
         else:
-            md = md[:start] + new + md[nxt + 1 :]
+            md = md[:start] + new + "\n" + md[nxt + 1 :]
     else:
         md = md.rstrip("\n") + "\n\n" + new
-    with open(md_path, "w") as f:
+    with open(MD_PATH, "w") as f:
         f.write(md)
+
+
+def _md_subsection(heading: str) -> list[str]:
+    """The lines of MD_PATH's subsection that starts with ``heading``, up
+    to the next heading, trailing blank lines dropped; none when absent."""
+    with open(MD_PATH) as f:
+        md = f.read()
+    start = md.find(heading)
+    if start == -1:
+        return []
+    ends = [i for i in (md.find("\n## ", start), md.find("\n### ", start)) if i != -1]
+    return md[start : min(ends, default=len(md))].rstrip("\n").split("\n")
 
 
 def _intkeys(d: dict) -> dict:
@@ -643,6 +658,9 @@ def render_r11_kernels_md(res: dict) -> list[str]:
             f"| {n} | {row['driver_sec']} s | {row['aggregate_sec']} s |"
             f" {ratio:.1f}x |"
         )
+    kept = _md_subsection(R11_KEPT)
+    if kept:
+        lines += [""] + kept
     pds = r.get("pair_distinct_skip", {}).get("sizes", {})
     if pds:
         lines += [
