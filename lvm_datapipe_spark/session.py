@@ -14,12 +14,16 @@ carries the configs that matter at 100 TB scale:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+import uuid
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
 DEFAULT_LOCAL_CORES = os.environ.get("SPARK_GRAFT_CPUS", "*")
+
+T = TypeVar("T")
 
 
 def _cached_data(spark: SparkSession) -> list:
@@ -72,6 +76,19 @@ def query_scope(spark: SparkSession) -> Iterator[None]:
         for rid, rdd in _persistent_rdds(spark).items():
             if rid not in rdds_before and rdd.rdd().isLocallyCheckpointed():
                 rdd.unpersist(False)
+
+
+def jobs_of(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
+    """``fn()`` under a job group of its own: its result and the number of
+    Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def get_spark(

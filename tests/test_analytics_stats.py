@@ -221,7 +221,7 @@ def test_bootstrap_single_row_groups_yield_null_not_div0(spark):
     from pyspark.sql import functions as F
 
     from lvm_datapipe_spark.operators import aggregates as A
-    from lvm_datapipe_spark.queries import _BOOT_B, _POIS_T
+    from lvm_datapipe_spark.queries.stats import _BOOT_B, _POIS_T
 
     ev = spark.createDataFrame(
         [(i, f"t{i}", 1.5) for i in range(20)],
@@ -932,28 +932,20 @@ def test_exact_percentiles_driver_gate_boundary(spark, monkeypatch):
 def test_exact_percentiles_driver_bound_path_runs_one_job(spark):
     """At or under the gate the bound path is one collect job; the count
     path is a count (its map stage and result job) and then the collect."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from lvm_datapipe_spark.operators.aggregates import exact_percentiles_driver
+    from lvm_datapipe_spark.session import jobs_of
 
     df = spark.range(0, 500, numPartitions=4).select(
         (F.col("id") * 31 % 97).cast("double").alias("v")
     )
-    sc = spark.sparkContext
-
-    def jobs(bound):
-        group = f"pct-{uuid.uuid4().hex[:8]}"
-        sc.setJobGroup(group, group)
-        try:
-            got = exact_percentiles_driver(df, "v", [0.5], row_bound=bound)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return got, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    bound_got, bound_jobs = jobs(500)
-    count_got, count_jobs = jobs(None)
+    bound_got, bound_jobs = jobs_of(
+        spark, lambda: exact_percentiles_driver(df, "v", [0.5], row_bound=500)
+    )
+    count_got, count_jobs = jobs_of(
+        spark, lambda: exact_percentiles_driver(df, "v", [0.5], row_bound=None)
+    )
     assert bound_got == count_got
     assert bound_jobs == 1 and count_jobs > bound_jobs, (bound_jobs, count_jobs)
 

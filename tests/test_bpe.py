@@ -8,6 +8,7 @@ from lvm_datapipe_spark.operators.bpe import (
     learn_bpe_merges,
     word_symbol_table,
 )
+from lvm_datapipe_spark.session import jobs_of
 
 CORPUS = [
     "low low low low low",
@@ -92,13 +93,7 @@ def test_local_fit_job_count_is_bounded(spark):
     # must cost O(1) Spark jobs (scan/checkpoint + one guarded collect),
     # NOT O(n_merges) — 12 merges here would mean >= 24 jobs on the
     # distributed path
-    sc = spark.sparkContext
     df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
-    sc.setJobGroup("bpe-local-fit", "bounded-job-count probe")
-    try:
-        merges, _ = learn_bpe_merges(df, n_merges=12)
-    finally:
-        sc.setJobGroup(None, None)
+    (merges, _), jobs = jobs_of(spark, lambda: learn_bpe_merges(df, n_merges=12))
     assert len(merges) >= 8  # the loop genuinely ran many rounds
-    jobs = sc.statusTracker().getJobIdsForGroup("bpe-local-fit")
-    assert 0 < len(jobs) <= 3, jobs
+    assert 0 < jobs <= 3, jobs

@@ -19,12 +19,13 @@ count that moves means the build's plan moved.
 from __future__ import annotations
 
 import ast
-import uuid
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from lvm_datapipe_spark.queries import QUERIES, _capped_baskets
+from lvm_datapipe_spark.queries import QUERIES
+from lvm_datapipe_spark.queries._shared import _capped_baskets
+from lvm_datapipe_spark.session import jobs_of
 
 #: Spark jobs each query's build (``QUERIES[name](spark, sf)``) launches
 #: at the fixture's sf0.001
@@ -73,24 +74,11 @@ def test_package_materializes_only_by_checkpoint():
     assert set(PERSIST_ALLOWED) <= set(found), "stale PERSIST_ALLOWED entries"
 
 
-def _build(spark, name: str, sf_dir: str):
-    """Build one query under its own job group; the frame and the number
-    of Spark jobs the build launched."""
-    sc = spark.sparkContext
-    group = f"build-{name}-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        df = QUERIES[name](spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_build_job_counts_leave_no_cached_relation(spark, sf_dir):
     spark.catalog.clearCache()
     jobs = {}
     for name in BUILD_JOBS:
-        df, jobs[name] = _build(spark, name, sf_dir)
+        df, jobs[name] = jobs_of(spark, lambda: QUERIES[name](spark, sf_dir))
         df.write.format("noop").mode("overwrite").save()
     assert jobs == BUILD_JOBS
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -108,7 +96,7 @@ def test_dedup_representatives_rebuild_same_rows_and_jobs(spark, sf_dir):
     runs = []
     for _ in range(2):
         with query_scope(spark):
-            df, jobs = _build(spark, "dedup_representatives", sf_dir)
+            df, jobs = jobs_of(spark, lambda: QUERIES["dedup_representatives"](spark, sf_dir))
             runs.append((jobs, sorted(map(tuple, df.collect()))))
     assert runs[0] == runs[1]
     assert runs[0][0] > 0 and len(runs[0][1]) > 0

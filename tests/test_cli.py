@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import threading
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +13,7 @@ from pyspark.sql import functions as F
 from lvm_datapipe_spark import fakevideo
 from lvm_datapipe_spark.cli import _scored, build_parser, main
 from lvm_datapipe_spark.plans.bucketing import count_exchanges
+from lvm_datapipe_spark.session import jobs_of
 
 
 @pytest.fixture(scope="module")
@@ -77,16 +77,10 @@ def _last_json(capsys) -> dict:
     return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
-def _jobs_of(spark, group: str, argv: list[str]) -> int:
-    """Run one CLI stage under its own job group; the number of Spark jobs
-    it launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        assert main(argv, spark=spark) == 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+def _run(spark, argv: list[str]) -> str:
+    """Run one CLI stage; the job group it ran under."""
+    assert main(argv, spark=spark) == 0
+    return spark.sparkContext.getLocalProperty("spark.jobGroup.id")
 
 
 def _output_bytes(spark, group: str) -> int:
@@ -117,7 +111,6 @@ def test_cli_stage_job_counts(spark, work, capsys):
     bucket count.  No stage leaves a catalog table behind."""
     from lvm_datapipe_spark.operators import analyze
 
-    tag = uuid.uuid4().hex[:8]
     videos = work / "big_videos"
     videos.mkdir(exist_ok=True)
     for vid in (f"bigv_{i}" for i in range(5)):
@@ -137,8 +130,8 @@ def test_cli_stage_job_counts(spark, work, capsys):
     tables = spark.catalog.listTables()
     jobs, outs, written = {}, {}, {}
     for name, _, argv in stages:
-        jobs[name] = _jobs_of(spark, f"{name}-{tag}", argv)
-        written[name] = _output_bytes(spark, f"{name}-{tag}")
+        group, jobs[name] = jobs_of(spark, lambda: _run(spark, argv))
+        written[name] = _output_bytes(spark, group)
         outs[name] = _last_json(capsys)
         assert spark.catalog.listTables() == tables, name
     assert jobs == {name: n for name, n, _ in stages}
@@ -301,7 +294,7 @@ def test_cli_zorder_and_retention(spark, tmp_path, capsys):
     out = str(tmp_path / "evz")
     argv = ["zorder", "--table", src, "--out", out, "--by", "a", "b",
             "--bits", "5", "--files", "8"]
-    assert _jobs_of(spark, f"zorder-{uuid.uuid4().hex[:8]}", argv) == 5
+    assert jobs_of(spark, lambda: _run(spark, argv))[1] == 5
     assert _last_json(capsys)["rows"] == 1024
     assert spark.read.parquet(out).count() == 1024
     assert len(glob.glob(out + "/part-*.parquet")) >= 4
@@ -402,7 +395,7 @@ def test_cli_zorder_hilbert_curve(spark, tmp_path, capsys):
     out = str(tmp_path / "hil")
     argv = ["zorder", "--table", src, "--out", out, "--by", "a", "b",
             "--bits", "6", "--files", "4", "--curve", "hilbert"]
-    assert _jobs_of(spark, f"zorder-hilbert-{uuid.uuid4().hex[:8]}", argv) == 5
+    assert jobs_of(spark, lambda: _run(spark, argv))[1] == 5
     status = _last_json(capsys)
     assert status["curve"] == "hilbert" and status["rows"] == 512
     assert spark.read.parquet(out).count() == 512
@@ -478,10 +471,9 @@ def test_cli_output_counts_come_from_the_write(spark, sf_dir, tmp_path, capsys):
     aggregate write; tx-diff is its one write job (the delta read over an
     explicit file list takes its schema from the first file's footer).
     Each printed count equals an independent read of the output."""
-    tag = uuid.uuid4().hex[:8]
     q_out = str(tmp_path / "q1")
     argv = ["query", "--name", "q1_pricing_summary", "--sf-dir", sf_dir, "--out", q_out]
-    assert _jobs_of(spark, f"query-{tag}", argv) == 2
+    assert jobs_of(spark, lambda: _run(spark, argv))[1] == 2
     assert _last_json(capsys)["rows"] == spark.read.parquet(q_out).count() > 0
 
     base, more = str(tmp_path / "base"), str(tmp_path / "more")
@@ -493,5 +485,5 @@ def test_cli_output_counts_come_from_the_write(spark, sf_dir, tmp_path, capsys):
     assert main(["tx-commit", "--table", more, "--out", t, "--op", "append"],
                 spark=spark) == 0
     argv = ["tx-diff", "--table", t, "--from", "1", "--to", "2", "--out", delta]
-    assert _jobs_of(spark, f"tx-diff-{tag}", argv) == 1
+    assert jobs_of(spark, lambda: _run(spark, argv))[1] == 1
     assert _last_json(capsys)["rows"] == spark.read.parquet(delta).count() == 2

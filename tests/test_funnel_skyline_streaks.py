@@ -16,7 +16,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from lvm_datapipe_spark.queries import QUERIES, _funnel_within_hour_frame
+from lvm_datapipe_spark.queries import QUERIES
+from lvm_datapipe_spark.queries.events import _funnel_within_hour_frame
 from lvm_datapipe_spark.operators.relational import pareto_skyline_2d
 
 SF = "/root/testdata/sf0.001"
@@ -348,7 +349,7 @@ def test_position_attribution_u_shape_weights(spark):
         "value", F.when(df.event_type == "purchase", 1.0).otherwise(0.0)
     )
     from lvm_datapipe_spark.queries import QUERIES as Q
-    import lvm_datapipe_spark.queries as qmod
+    import lvm_datapipe_spark.queries.events as qmod
 
     # run the query body against the synthetic frame via monkeypatched load
     orig = qmod.load_table

@@ -705,7 +705,8 @@ def test_kcore_agrees_with_declared_query(spark):
     pair join) to the library peel."""
     from lvm_datapipe_spark.catalog import load_table
     from lvm_datapipe_spark.operators.graph import cap_baskets, kcore
-    from lvm_datapipe_spark.queries import MAX_BASKET_SIZE, QUERIES
+    from lvm_datapipe_spark.queries import QUERIES
+    from lvm_datapipe_spark.queries._shared import MAX_BASKET_SIZE
 
     sf = "/root/testdata/sf0.001"
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
@@ -1221,7 +1222,8 @@ def test_geo_dbscan_subcell_contraction_invariants(spark):
     within eps, so same-subcell CORE points are directly connected and
     provably one cluster); (2) on real data, all core points sharing a
     subcell get the SAME cluster label from the declared query."""
-    from lvm_datapipe_spark.queries import QUERIES, _geo_col
+    from lvm_datapipe_spark.queries import QUERIES
+    from lvm_datapipe_spark.queries.geo import _geo_col
     from pyspark.sql import functions as F
 
     s, eps = 35_355, 50_000

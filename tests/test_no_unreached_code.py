@@ -4,10 +4,11 @@ Production paths are the package itself (CLI stages, registered queries,
 operators they call), ``tools/``, ``perfbench/``, ``bench.py`` and
 ``__spark_entry__.py``.  A top-level function or class of the package is
 unreached when no code in that corpus uses its name except its own body;
-in ``queries.py`` only the definitions ``_q`` registers are exempt, since
-``QUERIES`` reaches them by name.  Only code counts as a use: an AST
-name, an attribute, an imported name, or an identifier inside a string
-constant that is not a docstring (a ``getattr`` dispatch, a config key).
+in the ``queries/`` modules only the definitions ``_q`` registers are
+exempt, since ``QUERIES`` reaches them by name.  Only code counts as a
+use: an AST name, an attribute, an imported name, or an identifier inside
+a string constant that is not a docstring (a ``getattr`` dispatch, a
+config key).
 A name in a comment or a docstring is no use, and neither is a module's
 own ``__all__``.  The scan runs to a fixpoint: an unreached definition's
 uses are dropped and the scan repeats, so a private helper only dead
@@ -526,9 +527,11 @@ def test_a_required_parameter_is_set_like_an_option(tmp_path):
         "    return args\n"
         "HANDLERS = {'x': dispatched}\n"
     )
-    (pkg / "queries.py").write_text(
-        "def _q(name):\n"
-        "    return lambda f: f\n"
+    (pkg / "queries").mkdir()
+    (pkg / "queries" / "__init__.py").write_text("from lvm_datapipe_spark.queries import family\n")
+    (pkg / "queries" / "_shared.py").write_text("def _q(name):\n    return lambda f: f\n")
+    (pkg / "queries" / "family.py").write_text(
+        "from lvm_datapipe_spark.queries._shared import _q\n"
         "@_q('query')\n"
         "def query(spark, sf_dir):\n"
         "    return sf_dir\n"
@@ -564,7 +567,7 @@ def test_a_required_parameter_is_set_like_an_option(tmp_path):
     )
     unset, _ = _unset_options(tmp_path, allowed={})
     assert sorted(u.split()[1] for u in unset) == [
+        "family.helper(sf_dir)",
         "ops.one_const(n)",
         "ops.one_lit(col)",
-        "queries.helper(sf_dir)",
     ]

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -17,6 +16,7 @@ from pyspark.errors import AnalysisException
 from lvm_datapipe_spark import catalog, fakevideo
 from lvm_datapipe_spark.catalog import TPCH_TABLES, read_parquet, table_path
 from lvm_datapipe_spark.cli import main
+from lvm_datapipe_spark.session import jobs_of
 
 SF_DIRS = (SF0001, SF001)
 TABLES = [
@@ -52,17 +52,6 @@ def _rows(df):
     return sorted(map(str, df.collect()))
 
 
-def _jobs_of(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"read-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("path", TABLES, ids=lambda p: "/".join(p.split("/")[-2:]))
 def test_table_schema_matches_inference(spark, nanos_as_long, path):
     assert read_parquet(spark, path).schema == spark.read.parquet(path).schema
@@ -94,8 +83,8 @@ def test_read_launches_no_job(spark, snapshots):
         for p in paths:
             read_parquet(spark, p).schema
 
-    assert _jobs_of(spark, read_all) == 0
-    assert _jobs_of(spark, lambda: spark.read.parquet(snapshots["score"]).schema) == 1
+    assert jobs_of(spark, read_all)[1] == 0
+    assert jobs_of(spark, lambda: spark.read.parquet(snapshots["score"]).schema)[1] == 1
 
 
 def test_nanos_and_int96_timestamps_fall_back_to_inference(spark, nanos_as_long, tmp_path):

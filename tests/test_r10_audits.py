@@ -1,4 +1,4 @@
-"""Deterministic fixtures for the r10 audit queries (beyond the sf0.01
+"""Deterministic fixtures for three audit queries (beyond the sf0.01
 oracle sweep): hand-computed expectations on corpora small enough to
 reason about exactly.
 

@@ -219,7 +219,8 @@ def test_rbo_identities_and_identical_rankings_normalize_to_one(spark):
     the pure-python formula."""
     import pytest
 
-    from lvm_datapipe_spark.queries import QUERIES, _RBO_DEPTHS
+    from lvm_datapipe_spark.queries import QUERIES
+    from lvm_datapipe_spark.queries.ann import _RBO_DEPTHS
 
     rows = sorted(
         QUERIES["rbo_lex_vs_vector"](spark, "/root/testdata/sf0.001").collect(),

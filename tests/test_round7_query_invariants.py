@@ -1,7 +1,8 @@
-"""Semantic invariants for the round-7 query families, beyond the DuckDB
-hash oracle: the oracle proves Spark == SQL spec; these prove the SPEC
-itself has the properties the operator's name promises (radius bounds,
-absorbing-probability bounds, conservation laws, estimator sanity)."""
+"""Semantic invariants for the geo, graph, sketch and estimator queries,
+beyond the DuckDB hash oracle: the oracle proves Spark == SQL spec; these
+prove the SPEC itself has the properties the operator's name promises
+(radius bounds, absorbing-probability bounds, conservation laws, estimator
+sanity)."""
 
 from __future__ import annotations
 

@@ -1,4 +1,4 @@
-"""Spec checks for the r6 session-10 statistics/DQ queries (the oracle gate
+"""Spec checks for statistics and data-quality queries (the oracle gate
 proves Spark == DuckDB on the same SQL spec; these prove the spec against
 independent pure-python/numpy models from the raw parquet)."""
 

@@ -1,4 +1,4 @@
-"""Spec checks for the r6 session-11 statistics/retrieval/KPI queries.
+"""Spec checks for statistics, retrieval and KPI queries.
 
 The driver oracle gate proves Spark == DuckDB on the SAME SQL spec; these
 tests prove the spec itself — each query is compared against an independent
@@ -67,7 +67,7 @@ def test_ndcg_matches_numpy_bruteforce(spark):
     vecs = np.stack(emb.embedding.to_numpy()).astype(np.float64)
     ids = emb.vec_id.to_numpy()
     labels = emb.label.to_numpy()
-    # the ladder is re-derived here from math.log2, independent of queries.py
+    # the ladder is re-derived here from math.log2, independent of the queries
     d_lad = [math.floor(1_000_000 / math.log2(i + 1)) for i in range(1, 11)]
     p_lad = np.cumsum(d_lad)
     out = {

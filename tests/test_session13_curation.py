@@ -1,4 +1,4 @@
-"""Spec checks for the r6 session-13 curation additions.
+"""Spec checks for curation, dedup, sketch and estimator queries.
 
 The driver oracle gate proves Spark == DuckDB on the same SQL spec; these
 tests prove the SPEC — each query is compared against an independent

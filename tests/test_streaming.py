@@ -423,11 +423,11 @@ def test_watermark_audit_matches_reference_on_permuted_feed(spark):
 
 
 def test_stream_state_partitions_pins_and_restores_conf(spark, monkeypatch):
-    from lvm_datapipe_spark import queries
-    from lvm_datapipe_spark.queries import _stream_state_partitions
+    from lvm_datapipe_spark.queries import streaming
+    from lvm_datapipe_spark.queries.streaming import _stream_state_partitions
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setattr(queries, "STREAM_STATE_PARTITIONS", 3)
+    monkeypatch.setattr(streaming, "STREAM_STATE_PARTITIONS", 3)
     with _stream_state_partitions(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
@@ -441,13 +441,12 @@ def test_stream_state_partitions_pins_and_restores_conf(spark, monkeypatch):
 def test_stream_sink_rows_independent_of_state_partitions(spark, monkeypatch):
     # the state-store count is a layout knob: the sink contents must be
     # identical under any setting (exact hash aggregation per key)
-    from lvm_datapipe_spark import queries
-    from lvm_datapipe_spark.queries import QUERIES
+    from lvm_datapipe_spark.queries import QUERIES, streaming
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.setattr(queries, "STREAM_STATE_PARTITIONS", 2)
+    monkeypatch.setattr(streaming, "STREAM_STATE_PARTITIONS", 2)
     a = QUERIES["stream_sink_tumbling_window"](spark, sf)
-    monkeypatch.setattr(queries, "STREAM_STATE_PARTITIONS", 13)
+    monkeypatch.setattr(streaming, "STREAM_STATE_PARTITIONS", 13)
     b = QUERIES["stream_sink_tumbling_window"](spark, sf)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0

@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from lvm_datapipe_spark.session import jobs_of
 from lvm_datapipe_spark.sources import txlog
 
 
@@ -460,27 +461,12 @@ def test_cli_tx_delete(spark, tmp_path, capsys):
     assert {r["id"] for r in txlog.read(spark, t).collect()} == {1, 3}
 
 
-def _jobs(spark, fn):
-    """``fn()`` under its own job group; its result and the number of Spark
-    jobs it launched."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"txlog-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _lookup_jobs(spark, fn) -> int:
     def raises():
         with pytest.raises(ValueError, match="columns"):
             fn()
 
-    return _jobs(spark, raises)[1]
+    return jobs_of(spark, raises)[1]
 
 
 @pytest.mark.parametrize("manifest_columns", [True, False],
@@ -513,9 +499,9 @@ def test_read_and_unaffected_merge_run_no_schema_or_count_job(spark, tmp_path):
     still equals a read's."""
     t = str(tmp_path / "tbl")
     _commit_partitioned(spark, t, [(i, f"v{i}") for i in range(20)], 4)
-    snap, jobs = _jobs(spark, lambda: txlog.read(spark, t))
+    snap, jobs = jobs_of(spark, lambda: txlog.read(spark, t))
     assert jobs == 0 and snap.columns == ["id", "val"]
     new = spark.createDataFrame([(100, "new")], "id long, val string")
-    v, jobs = _jobs(spark, lambda: txlog.merge(spark, new, t, ["id"]))
+    v, jobs = jobs_of(spark, lambda: txlog.merge(spark, new, t, ["id"]))
     assert jobs == 8
     assert txlog.history(t)[-1]["n_rows"] == txlog.read(spark, t, v).count() == 21

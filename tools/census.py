@@ -33,7 +33,6 @@ import os
 import re
 import sys
 import time
-import uuid
 
 import duckdb
 import pandas as pd
@@ -184,19 +183,6 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _in_group(spark, fn):
-    """``fn()`` under a job group of its own; its result and the number of
-    Spark jobs it launched."""
-    sc = spark.sparkContext
-    group = f"census-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write(path: str, content: str | dict) -> None:
     with open(path, "w") as f:
         f.write(content if isinstance(content, str) else
@@ -234,7 +220,7 @@ def sweep(spark, sf_dir: str, names: list[str] | None = None, *,
     """Run ``names`` (every registered query when None) and write the
     chosen artifacts; the exit code."""
     from lvm_datapipe_spark.queries import ORACLE_SQL, QUERIES
-    from lvm_datapipe_spark.session import held_storage, query_scope
+    from lvm_datapipe_spark.session import held_storage, jobs_of, query_scope
 
     con = None
     if correctness:
@@ -256,13 +242,12 @@ def sweep(spark, sf_dir: str, names: list[str] | None = None, *,
             for _ in range(passes):
                 with query_scope(spark):
                     t0 = time.perf_counter()
-                    df, build_jobs = _in_group(
-                        spark, lambda: QUERIES[name](spark, sf_dir))
+                    df, build_jobs = jobs_of(spark, lambda: QUERIES[name](spark, sf_dir))
                     t1 = time.perf_counter()
                     qe = df._jdf.queryExecution()
                     plan = qe.executedPlan().toString()
                     t2 = time.perf_counter()
-                    exec_jobs = _in_group(spark, lambda: _noop(df))[1] if times else 0
+                    exec_jobs = jobs_of(spark, lambda: _noop(df))[1] if times else 0
                     t3 = time.perf_counter()
                     if row is None:
                         jobs = (build_jobs, exec_jobs)

@@ -226,6 +226,7 @@ def bench_connected_components(spark, quick: bool) -> dict:
         "driver_finish": stats.get("driver_finish"),
         "wall_sec": wall,
         "n_clusters": n_clusters,
+        "cores": spark.sparkContext.defaultParallelism,
     }
 
 
@@ -323,7 +324,8 @@ def render_cc_md(res: dict) -> list[str]:
         "## 2. Connected components, ~1M edges",
         "",
         f"Random graph, {cc['n_nodes']:,} touched nodes / {cc['n_edges']:,}",
-        "directed edge rows after dedup/symmetrization.",
+        "directed edge rows after dedup/symmetrization, on a local",
+        f"session with {cc['cores']} cores.",
         "",
         f"- distributed contraction rounds: **{cc['rounds']}**",
         f"- finished by the driver union-find: **{cc['driver_finish']}**",
